@@ -117,11 +117,14 @@ object Main {
       case other => throw new IllegalArgumentException(s"unknown incremental_mode: $other")
     }
     val manifest = readManifest(spark, urlList, a.getOrElse("input_format", "txt"))
+    val t0 = System.nanoTime()
     val result = Pipeline.run(spark, manifest, cfg, decoder,
       output = Some(outputFolder), resume = resume)
-    val counts = result.stats.collect()
-      .map(r => s"${r.get(0)}=${r.get(2)}").mkString(", ")
-    println(s"[graft] done: $counts")
+    // counts from the run's own observation: reading them re-runs nothing
+    val s = graft.operators.Metrics.summary(result.observation, (System.nanoTime() - t0) / 1e9)
+    val counts = Seq("count", "successes", "failed_to_download", "failed_to_extract")
+      .map(k => s"$k=${s(k).toLong}").mkString(", ")
+    println(f"[graft] done: $counts, ${s("docs_per_sec")}%.1f rows/s")
     if (!preExisting) spark.stop()
   }
 }

@@ -24,10 +24,18 @@ object Pipeline {
                               page_no: Int, text: String, total_words: Int,
                               page_key: String)
 
-  /** payload = success pages; stats = status histogram; observation
-    * carries the run counters (docs/sec etc. via [[Metrics.summary]]). */
-  final case class Result(payload: DataFrame, stats: DataFrame,
-                          observation: org.apache.spark.sql.Observation) {
+  /** payload = success pages; observation = the run's counters and its
+    * status histogram, taken below the success filter (docs/sec etc. via
+    * [[Metrics.summary]], the histogram via [[Metrics.statusCounts]]).
+    * With an output directory, [[run]] returns after the sink, so the
+    * observation is complete; without one, it fills on the first action
+    * over `payload`. */
+  final case class Result(payload: DataFrame, observation: org.apache.spark.sql.Observation) {
+    /** The status histogram (status, error_message, count) the
+      * observation recorded, as a small local frame — no pass over the
+      * data. Blocks until an action over `payload` has run. */
+    def stats: DataFrame = payload.sparkSession.createDataFrame(Metrics.statusCounts(observation))
+
     /** Typed view of the always-present payload columns — `Dataset[T]`
       * where type safety helps, `DataFrame` where schema is dynamic. */
     def typedPayload(encodeFormat: String = "text"): org.apache.spark.sql.Dataset[PageRecord] = {
@@ -80,9 +88,7 @@ object Pipeline {
         userAgentToken = cfg.userAgentToken,
         disallowed = cfg.disallowedHeaderDirectives)).apply(resumed)
     val tagged = extract(fetched, cfg, decoder)
-    val (payload0, stats) = DocPipeline.channels(tagged)
-    // counters ride the payload write; failure counts live in `stats`
-    val (payload, obs) = Metrics.observed(payload0,
+    val (payload, obs) = observedPayload(tagged,
       s"graft_pipeline_${System.identityHashCode(manifest)}")
 
     output.foreach { out =>
@@ -97,6 +103,9 @@ object Pipeline {
       val payloadT = Sinks.dropTombstoned(payload, s"$out/payload", "page_key")
       val sharded = payloadT.withColumn("__shard",
         DocPipeline.shardOfKey(col("key"), cfg))
+      // each sink evaluates the lineage ONCE (one write, or one job that
+      // writes shard files and their sidecar together); that evaluation
+      // also fills the observation the stats sidecar is written from
       cfg.outputFormat match {
         // file sizing mirrors the reference's number_sample_per_shard
         // (reader.py:139-146 shard files; here it caps rows per part file)
@@ -114,9 +123,37 @@ object Pipeline {
           sidecarMode = mode, keyCol = "page_key")
         case "dummy"      => Sinks.dummy(payload)
       }
-      Sinks.stats(stats, s"$out/stats")
+      writeStats(spark, obs, s"$out/stats")
     }
-    Result(payload, stats, obs)
+    Result(payload, obs)
+  }
+
+  /** The success rows of `tagged`, with ONE observation beneath the
+    * filter: counters and status histogram see every row — failures
+    * included — in the same evaluation that feeds the sink. (Persisting
+    * `tagged` for a separate stats pass instead would stage all page
+    * text on local disk.) */
+  private def observedPayload(tagged: DataFrame, name: String)
+      : (DataFrame, org.apache.spark.sql.Observation) = {
+    val (observed, obs) = Metrics.observed(tagged, name)
+    (observed.filter(col("status") === "success"), obs)
+  }
+
+  /** Upper bound on the wait for an observation after its sink returned:
+    * the metrics normally arrive with the action itself. */
+  private val ObservationWait = scala.concurrent.duration.Duration(5, "min")
+
+  /** The stats sidecar (ref `logger.py:196`, per-shard stats JSON) from
+    * the observation the sink's action filled — written on the driver,
+    * no pass over the data. */
+  private def writeStats(spark: SparkSession, obs: org.apache.spark.sql.Observation,
+                         out: String): Unit = {
+    try scala.concurrent.Await.ready(obs.future, ObservationWait)
+    catch {
+      case e: java.util.concurrent.TimeoutException => throw new IllegalStateException(
+        s"sink action did not report observation ${obs.name}; stats for $out unknown", e)
+    }
+    Sinks.writeStats(spark, Metrics.statusCounts(obs), out)
   }
 
   /** hash verify / compute → decode → per-page explode+filter+tag — the
@@ -169,9 +206,9 @@ object Pipeline {
     val tagged = extract(fetched, cfg, decoder)
     tagged.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val (payload, stats) = DocPipeline.channels(batch)
+        val (payload, obs) = observedPayload(batch, s"graft_stream_batch_$id")
         Sinks.parquet(payload, s"$output/payload", org.apache.spark.sql.SaveMode.Append)
-        Sinks.stats(stats, s"$output/stats/batch_$id")
+        writeStats(spark, obs, s"$output/stats/batch_$id")
       }
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

@@ -102,12 +102,18 @@ object Extraction {
   /** Image filter predicate: keep an img tag only if both dimensions are
     * >= minSize and aspect ratio (long/short side) <= maxRatio
     * (ref `extractor.py:121-126,157-162`; the reference reads width/height
-    * crossed — we implement the documented drop-small-or-stretched intent). */
+    * crossed — we implement the documented drop-small-or-stretched intent).
+    * A missing or zero dimension has no ratio: the ratio test passes and
+    * only the size gate applies, so a dimensionless `<img/>` never divides
+    * by zero (the division sits in a CASE branch, evaluated only when the
+    * short side is positive). */
   def imgKeep(img: Column, minSize: Int, maxRatio: Double): Column = {
     val w = imgDim(img, "width")
     val h = imgDim(img, "height")
-    val ratio = greatest(w, h).cast("double") / least(w, h).cast("double")
-    w >= minSize && h >= minSize && ratio <= maxRatio
+    val short = least(w, h)
+    val ratioOk = when(short > 0, greatest(w, h).cast("double") / short.cast("double") <= maxRatio)
+      .otherwise(lit(true))
+    w >= minSize && h >= minSize && ratioOk
   }
 
   /** Filter an img-tag array down to the tags passing [[imgKeep]] —

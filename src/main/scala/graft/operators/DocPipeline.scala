@@ -235,40 +235,36 @@ object DocPipeline {
     val prior = if (hasPrior) col("status") else lit("success")
     val priorErr =
       if (hasPrior) col("error_message") else lit(null).cast(StringType)
-    val status =
-      when(prior =!= "success", prior)
-        .when(col("decode_error").isNotNull, lit("failed_to_extract"))
-        .when(!Extraction.nonEmptyPage(col("text")), lit("failed_to_extract"))
-        .when(col("total_words") < cfg.minWordsPerPage, lit("failed_to_extract"))
+    // ONE decision yields both columns, so neither can read the other's
+    // rewritten value (a failed page used to lose its reason that way)
+    def tag(status: String, reason: Column) =
+      struct(lit(status).as("status"), reason.cast(StringType).as("error_message"))
+    val decision =
+      when(prior =!= "success", struct(prior.as("status"), priorErr.as("error_message")))
+        .when(col("decode_error").isNotNull, tag("failed_to_extract", col("decode_error")))
+        .when(!Extraction.nonEmptyPage(col("text")), tag("failed_to_extract", lit("empty page")))
+        .when(col("total_words") < cfg.minWordsPerPage,
+          tag("failed_to_extract", lit("too few words")))
         .when(lit(cfg.maxImagesPerPage.isDefined) &&
           size(Extraction.imgTags(col("page_xhtml"))) > cfg.maxImagesPerPage.getOrElse(Int.MaxValue),
-          lit("failed_to_extract"))
-        .otherwise(lit("success"))
-    val errMsg =
-      when(prior =!= "success", priorErr)
-        .when(col("decode_error").isNotNull, col("decode_error"))
-        .when(!Extraction.nonEmptyPage(col("text")), lit("empty page"))
-        .when(col("total_words") < cfg.minWordsPerPage, lit("too few words"))
-        .when(lit(cfg.maxImagesPerPage.isDefined) &&
-          size(Extraction.imgTags(col("page_xhtml"))) > cfg.maxImagesPerPage.getOrElse(Int.MaxValue),
-          lit("too many images"))
-        .otherwise(lit(null).cast(StringType))
+          tag("failed_to_extract", lit("too many images")))
+        .otherwise(tag("success", lit(null)))
 
     withOpt
-      .withColumn("status", status)
-      .withColumn("error_message", errMsg)
+      .withColumn("__tag", decision)
+      .withColumn("status", col("__tag.status"))
+      .withColumn("error_message", col("__tag.error_message"))
       .withColumn("page_key",
         when(col("page_no").isNotNull, Extraction.pageKey(col("key"), col("page_no"))))
-      .drop("page_xhtml")
+      .drop("page_xhtml", "__tag")
   }
 
   /** Split the tagged output into (payload, stats) — the reference's
     * two-channel contract (payload rows written, failures only counted;
-    * `downloader.py:188-192,344-348`). */
-  def channels(tagged: DataFrame): (DataFrame, DataFrame) = {
-    val payload = tagged.filter(col("status") === "success")
-    val stats = tagged.groupBy(col("status"), col("error_message"))
-      .agg(count(lit(1)).as("count"))
-    (payload, stats)
-  }
+    * `downloader.py:188-192,344-348`). `stats` is the capped
+    * [[Metrics.statusHistogram]]; [[graft.Pipeline.run]] takes the same
+    * histogram from its observation instead, without a second pass. */
+  def channels(tagged: DataFrame): (DataFrame, DataFrame) =
+    (tagged.filter(col("status") === "success"),
+      Metrics.statusHistogram(tagged, Metrics.HistogramCap))
 }

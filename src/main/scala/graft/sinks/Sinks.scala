@@ -5,14 +5,18 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.operators.Metrics
 
 /** Output sinks — the reference's six `*SampleWriter` classes
   * (`/root/reference/doc2dataset/writer.py`) re-expressed Spark-first.
   * Buffering/rotation/row-groups are Spark's job (`writer.py:13-52`'s
   * 100-row buffer is obsolete); only the genuinely custom layouts
-  * (per-sample files, webdataset tar) keep `foreachPartition` writers.
+  * (per-sample files, shard files) keep hand-written partition writers.
   *
   * All custom writers go through the Hadoop [[FileSystem]] API, so the
   * output path can be any registered scheme (file:, hdfs:, s3a:, ...) —
@@ -46,10 +50,12 @@ object Sinks {
   /** parquet sink (ref `writer.py:55-85`): payload column named by
     * `encode_format`; sizing via maxRecordsPerFile, not hand buffering. */
   def parquet(df: DataFrame, out: String, mode: SaveMode = SaveMode.Overwrite,
-              maxRecordsPerFile: Int = 0): Unit = {
+              maxRecordsPerFile: Int = 0): Unit =
+    sized(df, mode, maxRecordsPerFile).parquet(out)
+
+  private def sized(df: DataFrame, mode: SaveMode, maxRecordsPerFile: Int) = {
     val w = df.write.mode(mode)
-    (if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile.toLong) else w)
-      .parquet(out)
+    if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile.toLong) else w
   }
 
   /** Small-file compaction [EXT] — the maintenance pass every
@@ -102,21 +108,15 @@ object Sinks {
   /** jsonl.gz sink (ref `writer.py:129-163`); sizing via
     * maxRecordsPerFile like the parquet twin. */
   def jsonlGz(df: DataFrame, out: String, mode: SaveMode = SaveMode.Overwrite,
-              maxRecordsPerFile: Int = 0): Unit = {
-    val w = df.write.mode(mode).option("compression", "gzip")
-    (if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile.toLong) else w)
-      .json(out)
-  }
+              maxRecordsPerFile: Int = 0): Unit =
+    sized(df, mode, maxRecordsPerFile).option("compression", "gzip").json(out)
 
   /** orc sink [EXT]: same contract as the parquet twin. ORC ships with
     * Spark and is the other columnar interchange format a user migrating
     * a warehouse pipeline expects to exist. */
   def orc(df: DataFrame, out: String, mode: SaveMode = SaveMode.Overwrite,
-          maxRecordsPerFile: Int = 0): Unit = {
-    val w = df.write.mode(mode)
-    (if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile.toLong) else w)
-      .orc(out)
-  }
+          maxRecordsPerFile: Int = 0): Unit =
+    sized(df, mode, maxRecordsPerFile).orc(out)
 
   /** Hive-style partitioned parquet [EXT]: one directory per value of
     * `partitionCols` so downstream readers with a partition-column
@@ -149,7 +149,7 @@ object Sinks {
     // base dir exists even for an empty DataFrame (downstream listers
     // expect the sink root; executor-side mkdirs only fires per row)
     locally { val (fs, base) = fsFor(out, conf.value); fs.mkdirs(base) }
-    df.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
+    df.foreachPartition { rows: Iterator[Row] =>
       val (fs, base) = fsFor(out, conf.value)
       val madeDirs = scala.collection.mutable.Set.empty[String]
       rows.foreach { row =>
@@ -189,78 +189,38 @@ object Sinks {
     *
     * With `shardCol` set, output is ONE TAR PER SHARD named
     * `<shard>.tar` — the reference's shard-numbered layout
-    * (`writer.py:40-52`), written atomically (`.tmp` + rename) so an
-    * existing tar always means a COMPLETE shard; that's what makes
-    * shard-level resume ([[resumeShards]]) sound. Without it, one tar
-    * per partition named by partition id (generic frames). */
+    * (`writer.py:40-52`); without it, one tar per partition named by
+    * partition id (generic frames). Layout, atomicity and the sidecar
+    * are [[shardFiles]]'s. */
   def webdataset(df: DataFrame, out: String, keyCol: String = "key",
                  payloadCol: String = "text", ext: String = "txt",
                  shardCol: Option[String] = None,
                  sidecarMode: SaveMode = SaveMode.Overwrite): Unit = {
     import org.apache.commons.compress.archivers.tar.TarArchiveOutputStream
-    val arranged = shardCol match {
-      case Some(c) => df.repartition(col(c)).sortWithinPartitions(col(c), col(keyCol))
-      case None    => df
-    }
-    val fields = arranged.schema.fieldNames.toSeq
+    val fields = df.schema.fieldNames.toSeq
     val kIdx = fields.indexOf(keyCol)
     val pIdx = fields.indexOf(payloadCol)
-    val sIdx = shardCol.map(fields.indexOf).getOrElse(-1)
     require(kIdx >= 0 && pIdx >= 0, s"webdataset sink needs $keyCol and $payloadCol")
-    require(shardCol.isEmpty || sIdx >= 0, s"webdataset sink: missing shard column $shardCol")
-    val conf = hadoopConf(df)
-    // base dir on the driver: an empty DataFrame still yields the sink root
-    locally { val (fs, base) = fsFor(out, conf.value); fs.mkdirs(base) }
-    arranged.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      if (rows.hasNext) {
-        val (fs, base) = fsFor(out, conf.value)
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        var curShard: String = null
-        var tar: TarArchiveOutputStream = null
-        var tmpPath: Path = null
-        def closeCurrent(): Unit = if (tar != null) {
-          tar.close()
-          fs.rename(tmpPath, new Path(base, s"$curShard.tar"))
-          tar = null
-        }
-        def open(name: String, tmp: Boolean): TarArchiveOutputStream = {
-          tmpPath = new Path(base, if (tmp) s"$name.tar.tmp" else s"$name.tar")
-          val t = new TarArchiveOutputStream(
-            new BufferedOutputStream(fs.create(tmpPath, true)))
-          t.setLongFileMode(TarArchiveOutputStream.LONGFILE_POSIX)
-          t
-        }
-        if (sIdx < 0) { curShard = f"$pid%05d"; tar = open(curShard, tmp = false) }
-        try {
-          rows.foreach { row =>
-            if (sIdx >= 0) {
-              val shard = row.getString(sIdx)
-              if (shard != curShard) { closeCurrent(); curShard = shard; tar = open(shard, tmp = true) }
-            }
-            val key = row.getString(kIdx)
-            val payload = row.get(pIdx) match {
-              case b: Array[Byte] => b
-              case s: String      => s.getBytes(StandardCharsets.UTF_8)
-              case other          => String.valueOf(other).getBytes(StandardCharsets.UTF_8)
-            }
-            writeEntry(tar, s"$key.$ext", payload)
-            val meta = fields.zipWithIndex.filterNot(i => i._2 == pIdx || i._2 == sIdx)
-              .map { case (f, i) => s""""$f": ${jsonVal(row.get(i))}""" }
-              .mkString("{", ", ", "}")
-            writeEntry(tar, s"$key.json", meta.getBytes(StandardCharsets.UTF_8))
+    val metaIdx = fields.indices.filterNot(i => i == pIdx || shardCol.contains(fields(i)))
+    shardFiles(df, out, "tar", keyCol, payloadCol, shardCol, sidecarMode) { os =>
+      val tar = new TarArchiveOutputStream(os)
+      tar.setLongFileMode(TarArchiveOutputStream.LONGFILE_POSIX)
+      new ShardFile {
+        def write(row: Row): Unit = {
+          val key = row.getString(kIdx)
+          val payload = row.get(pIdx) match {
+            case b: Array[Byte] => b
+            case s: String      => s.getBytes(StandardCharsets.UTF_8)
+            case other          => String.valueOf(other).getBytes(StandardCharsets.UTF_8)
           }
-        } finally {
-          if (sIdx >= 0) closeCurrent() else if (tar != null) tar.close()
+          writeEntry(tar, s"$key.$ext", payload)
+          val meta = metaIdx.map(i => s""""${fields(i)}": ${jsonVal(row.get(i))}""")
+            .mkString("{", ", ", "}")
+          writeEntry(tar, s"$key.json", meta.getBytes(StandardCharsets.UTF_8))
         }
+        def close(): Unit = tar.close()
       }
     }
-    // parquet sidecar of the metadata (ref writes one per shard); Append
-    // under resume so prior shards' metadata survives — anti-joined so a
-    // REDONE shard (interrupted tar) doesn't duplicate its rows.
-    val sidecar = df.drop((payloadCol +: shardCol.toSeq): _*)
-    val sidecarRows = if (sidecarMode == SaveMode.Append)
-      resumeAntiJoin(sidecar, s"$out/_metadata.parquet", keyCol) else sidecar
-    sidecarRows.write.mode(sidecarMode).parquet(s"$out/_metadata.parquet")
   }
 
   private def writeEntry(tar: org.apache.commons.compress.archivers.tar.TarArchiveOutputStream,
@@ -272,12 +232,101 @@ object Sinks {
     tar.closeArchiveEntry()
   }
 
-  /** stats sink (ref `logger.py:162-191`): one aggregated stats DataFrame
-    * (status histogram + counts) written as JSON — replaces the per-shard
-    * JSON + polling logger process. */
-  def stats(tagged: DataFrame, out: String): Unit =
-    tagged.groupBy("status", "error_message").agg(count(lit(1)).as("count"))
-      .coalesce(1).write.mode(SaveMode.Overwrite).json(out)
+  /** One open shard file of a [[shardFiles]] format: appends rows, then
+    * closes (flushing any trailer) the stream it was opened on. */
+  private[sinks] trait ShardFile {
+    def write(row: Row): Unit
+    def close(): Unit
+  }
+
+  /** The shard-file sinks' (webdataset, tfrecord) shared writer: rows
+    * go into `<shard>.<ext>` files, one per value of `shardCol`
+    * (repartitioned by it, ordered by shard then `keyCol`), or one
+    * `<partition>.<ext>` per partition without it; `open` formats the
+    * rows of one file. Every file is written as `.tmp` and renamed into
+    * place once complete — a rename that fails fails the task — so an
+    * existing file always means a complete shard, which is what makes
+    * shard-level resume ([[resumeShards]]) sound.
+    *
+    * The same task that writes a file yields its rows minus the payload
+    * and shard columns, and the parquet sidecar `_metadata.parquet`
+    * (ref `writer.py:210-218`) is written from them: files and sidecar
+    * are one job over one evaluation of `df`. Under Append (resume) the
+    * sidecar is anti-joined on `keyCol`, so a REDONE shard (interrupted
+    * file) doesn't duplicate its rows. */
+  private[sinks] def shardFiles(df: DataFrame, out: String, ext: String, keyCol: String,
+                                payloadCol: String, shardCol: Option[String],
+                                sidecarMode: SaveMode)(open: OutputStream => ShardFile): Unit = {
+    val keyed = df.columns.contains(keyCol)
+    val arranged = shardCol match {
+      case Some(c) => df.repartition(col(c))
+        .sortWithinPartitions((col(c) +: (if (keyed) Seq(col(keyCol)) else Nil)): _*)
+      case None    => df
+    }
+    val fields = arranged.schema.fieldNames.toSeq
+    val sIdx = shardCol.map(fields.indexOf).getOrElse(-1)
+    require(shardCol.isEmpty || sIdx >= 0, s"$ext sink: missing shard column $shardCol")
+    val metaIdx = fields.indices.filterNot(i => i == sIdx || fields(i) == payloadCol)
+    val metaSchema = StructType(metaIdx.map(arranged.schema.fields))
+    val conf = hadoopConf(df)
+    // base dir on the driver: an empty DataFrame still yields the sink root
+    locally { val (fs, base) = fsFor(out, conf.value); fs.mkdirs(base) }
+    val meta = arranged.mapPartitions { rows: Iterator[Row] =>
+      val (fs, base) = fsFor(out, conf.value)
+      val pid = f"${TaskContext.getPartitionId()}%05d"
+      var shard: String = null
+      var tmp: Path = null
+      var file: ShardFile = null
+      def finish(): Unit = if (file != null) {
+        file.close(); file = null
+        val dst = new Path(base, s"$shard.$ext")
+        fs.delete(dst, false) // a rerun's stale copy; rename won't replace it on every FS
+        if (!fs.rename(tmp, dst)) throw new java.io.IOException(s"cannot rename $tmp to $dst")
+      }
+      // a failed task closes its stream and leaves only the .tmp behind
+      TaskContext.get().addTaskCompletionListener[Unit] { _ => if (file != null) file.close() }
+      rows.map { row =>
+        val s = if (sIdx < 0) pid else row.getString(sIdx)
+        if (s != shard) {
+          finish()
+          shard = s
+          tmp = new Path(base, s"$s.$ext.tmp")
+          file = open(new BufferedOutputStream(fs.create(tmp, true)))
+        }
+        file.write(row)
+        Row.fromSeq(metaIdx.map(row.get))
+      } ++ { finish(); Iterator.empty } // by-name: runs once the rows are exhausted
+    }(Encoders.row(metaSchema))
+    val sidecar = s"$out/_metadata.parquet"
+    val sidecarRows = if (sidecarMode == SaveMode.Append && keyed)
+      resumeAntiJoin(meta, sidecar, keyCol) else meta
+    sidecarRows.write.mode(sidecarMode).parquet(sidecar)
+  }
+
+  /** stats sink (ref `logger.py:162-191`): the status histogram of
+    * `tagged` ([[Metrics.statusHistogram]]) written by [[writeStats]] —
+    * replaces the per-shard JSON + polling logger process.
+    * [[graft.Pipeline.run]] does not call this: it writes the histogram
+    * its observation already holds. */
+  def stats(tagged: DataFrame, out: String): Unit = {
+    val spark = tagged.sparkSession
+    import spark.implicits._
+    writeStats(spark, Metrics.statusHistogram(tagged, Metrics.HistogramCap)
+      .as[Metrics.StatusCount].collect().toSeq, out)
+  }
+
+  /** Writes histogram buckets from the driver as one JSON-lines file,
+    * `{"status":…,"error_message":…,"count":…}` per line, replacing
+    * `out` — no Spark job, so a sidecar costs no pass over the data. */
+  def writeStats(spark: SparkSession, counts: Seq[Metrics.StatusCount], out: String): Unit = {
+    val (fs, dir) = fsFor(out, spark.sessionState.newHadoopConf())
+    fs.delete(dir, true)
+    fs.mkdirs(dir)
+    val lines = counts.map(c => s"""{"status":${jsonVal(c.status)},""" +
+      s""""error_message":${jsonVal(c.error_message)},"count":${c.count}}\n""").mkString
+    writeFully(fs, new Path(dir, "part-00000.json"), lines.getBytes(StandardCharsets.UTF_8))
+    writeFully(fs, new Path(dir, "_SUCCESS"), Array.emptyByteArray)
+  }
 
   /** Incremental resume (ref `main.py:140-151` done-shards scan): drop
     * rows whose key already exists in previous output — the idiomatic
@@ -287,13 +336,13 @@ object Sinks {
   def resumeAntiJoin(df: DataFrame, existingOut: String, keyCol: String = "key",
                      format: String = "parquet"): DataFrame = {
     val spark = df.sparkSession
-    val pending = minusTombstones(df, existingOut, keyCol)
+    val pending = dropTombstoned(df, existingOut, keyCol)
     // Fail-open ONLY when there is genuinely no prior output (first run:
     // path absent, or an empty directory with no readable files →
     // AnalysisException at schema inference). Any other failure — a
     // transient FS fault, a corrupt done-scan — must FAIL the run: a
     // swallowed error here silently re-processes every key and the sink
-    // double-writes (the same fail-closed rule minusTombstones applies).
+    // double-writes (the same fail-closed rule dropTombstoned applies).
     val outPath = new Path(existingOut)
     if (!outPath.getFileSystem(spark.sessionState.newHadoopConf()).exists(outPath))
       return pending
@@ -316,17 +365,12 @@ object Sinks {
     pending.join(done, Seq(keyCol), "left_anti")
   }
 
-  /** Exclude keys tombstoned by `WebDataset.deleteKeys` under `out`:
-    * a right-to-be-forgotten delete must stay deleted — without this,
-    * the next incremental run's anti-join (which consults only sink
-    * CONTENTS) would happily re-fetch the forgotten keys. Tombstone
-    * logs are tiny (deletion lists) → broadcast anti-join. */
-  /** Pipeline-visible form of the tombstone filter: drop rows whose
-    * `keyCol` was deleted-on-request under `out` (no-op without a log). */
-  private[graft] def dropTombstoned(df: DataFrame, out: String, keyCol: String): DataFrame =
-    minusTombstones(df, out, keyCol)
-
-  private def minusTombstones(df: DataFrame, out: String, keyCol: String): DataFrame = {
+  /** Exclude keys tombstoned by `WebDataset.deleteKeys` under `out`
+    * (no-op without a log): a right-to-be-forgotten delete must stay
+    * deleted — without this, the next incremental run's anti-join (which
+    * consults only sink CONTENTS) would happily re-fetch the forgotten
+    * keys. Tombstone logs are tiny (deletion lists) → broadcast anti-join. */
+  private[graft] def dropTombstoned(df: DataFrame, out: String, keyCol: String): DataFrame = {
     val spark = df.sparkSession
     // `out` may be the sink root (tombstones inside) or a file/sidecar
     // path under it (tombstones alongside) — honor either location
@@ -373,7 +417,7 @@ object Sinks {
                    keyCol: String = "key"): DataFrame = {
     val spark = df.sparkSession
     val df0 = if (df.columns.contains(keyCol))
-      minusTombstones(df, existingOut, keyCol) else df
+      dropTombstoned(df, existingOut, keyCol) else df
     val doneNames = try {
       val (fs, base) = fsFor(existingOut, new Configuration(
         spark.sparkContext.hadoopConfiguration))

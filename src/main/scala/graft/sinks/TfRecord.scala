@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.io.{BufferedOutputStream, DataOutputStream, File, FileOutputStream}
+import java.io.{DataOutputStream, FileOutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.util.zip.CRC32C
@@ -111,78 +111,27 @@ object TfRecord {
   }
 
   /** Write .tfrecord files + parquet metadata sidecar (ref writes parquet
-    * alongside, `writer.py:210-218`). Hadoop
-    * [[org.apache.hadoop.fs.FileSystem]] output — any scheme, not just
-    * executor-local disk.
-    *
-    * With `shardCol` set: one `<shard>.tfrecord` per shard, written
-    * atomically (`.tmp` + rename) — existence implies complete, enabling
-    * [[Sinks.resumeShards]]. Without: one file per partition (pid-named). */
+    * alongside, `writer.py:210-218`): one record per row, every column
+    * but the shard column. With `shardCol` set: one `<shard>.tfrecord`
+    * per shard, enabling [[Sinks.resumeShards]]; without: one file per
+    * partition (pid-named). Layout, atomicity and the sidecar are
+    * [[Sinks.shardFiles]]'s. */
   def write(df: DataFrame, out: String, payloadCol: String = "text",
             shardCol: Option[String] = None,
             sidecarMode: org.apache.spark.sql.SaveMode =
               org.apache.spark.sql.SaveMode.Overwrite,
             keyCol: String = "key"): Unit = {
-    import org.apache.spark.sql.functions.col
-    val arranged = shardCol match {
-      case Some(c) => df.repartition(col(c)).sortWithinPartitions(col(c))
-      case None    => df
-    }
-    val schema = arranged.schema
-    val sIdx = shardCol.map(c => schema.fieldNames.indexOf(c)).getOrElse(-1)
-    require(shardCol.isEmpty || sIdx >= 0, s"tfrecord sink: missing shard column $shardCol")
-    val conf = new Sinks.SerializableHadoopConf(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    // base dir on the driver: an empty DataFrame still yields the sink root
-    locally { val p = new org.apache.hadoop.fs.Path(out)
-      p.getFileSystem(conf.value).mkdirs(p) }
-    // the shard column names the file; it is not part of the record
-    val recSchema = if (sIdx < 0) schema
-      else StructType(schema.fields.zipWithIndex.filterNot(_._2 == sIdx).map(_._1))
-    arranged.foreachPartition { rows: Iterator[Row] =>
-      if (rows.hasNext) {
-        val base = new org.apache.hadoop.fs.Path(out)
-        val fs = base.getFileSystem(conf.value)
-        var curShard: String = null
-        var o: DataOutputStream = null
-        var tmp: org.apache.hadoop.fs.Path = null
-        def closeCurrent(): Unit = if (o != null) {
-          o.close()
-          fs.rename(tmp, new org.apache.hadoop.fs.Path(base, s"$curShard.tfrecord"))
-          o = null
-        }
-        def open(name: String, atomic: Boolean): DataOutputStream = {
-          tmp = new org.apache.hadoop.fs.Path(base,
-            if (atomic) s"$name.tfrecord.tmp" else s"$name.tfrecord")
-          new DataOutputStream(new BufferedOutputStream(fs.create(tmp, true)))
-        }
-        if (sIdx < 0) {
-          curShard = f"${org.apache.spark.TaskContext.getPartitionId()}%05d"
-          o = open(curShard, atomic = false)
-        }
-        try {
-          rows.foreach { r =>
-            val rec = if (sIdx < 0) r else {
-              val shard = r.getString(sIdx)
-              if (shard != curShard) { closeCurrent(); curShard = shard; o = open(shard, atomic = true) }
-              Row.fromSeq(r.toSeq.zipWithIndex.filterNot(_._2 == sIdx).map(_._1))
-            }
-            writeRecord(o, rowToExample(rec, recSchema))
-          }
-        } finally {
-          if (sIdx >= 0) closeCurrent() else if (o != null) o.close()
-        }
+    val sIdx = shardCol.map(c => df.schema.fieldNames.indexOf(c)).getOrElse(-1)
+    val keep = df.schema.fields.indices.filterNot(_ == sIdx)
+    val recSchema = StructType(keep.map(df.schema.fields))
+    Sinks.shardFiles(df, out, "tfrecord", keyCol, payloadCol, shardCol, sidecarMode) { os =>
+      val o = new DataOutputStream(os)
+      new Sinks.ShardFile {
+        def write(row: Row): Unit =
+          writeRecord(o, rowToExample(Row.fromSeq(keep.map(row.get)), recSchema))
+        def close(): Unit = o.close()
       }
     }
-    // sidecar mirrors the webdataset contract: Append under resume,
-    // anti-joined on keyCol so a redone shard doesn't duplicate rows
-    val sidecar = df.drop(shardCol.toSeq: _*).drop(payloadCol)
-    val sidecarRows =
-      if (sidecarMode == org.apache.spark.sql.SaveMode.Append &&
-          sidecar.columns.contains(keyCol))
-        Sinks.resumeAntiJoin(sidecar, s"$out/_metadata.parquet", keyCol)
-      else sidecar
-    sidecarRows.write.mode(sidecarMode).parquet(s"$out/_metadata.parquet")
   }
 
   // ------------------------------------------------------- proto decode

@@ -202,6 +202,15 @@ class MetricsSpec extends AnyFunSuite {
     val top2 = Metrics.statusHistogram(tagged, k = 2).collect()
     assert(top2.length == 2)
     assert(top2(0).getString(0) == "success" && top2(0).getLong(2) == 5L)
+    // past the cap the buffer halves to its most frequent pairs; a
+    // frequent pair seen before the overflow keeps its exact count
+    val many = tagged.filter(col("status") === "success").union(
+        spark.range(Metrics.HistogramCap + 200L).select(lit("failed_to_extract"),
+          concat(lit("reason "), col("id").cast("string"))))
+      .coalesce(1)
+    val capped = Metrics.statusHistogram(many, k = Metrics.HistogramCap).collect()
+    assert(capped.length <= Metrics.HistogramCap)
+    assert(capped(0).getString(0) == "success" && capped(0).getLong(2) == 5L)
   }
 }
 

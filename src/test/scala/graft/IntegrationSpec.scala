@@ -8,7 +8,17 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{DocPipeline, Metrics, Similarity}
 import graft.sinks.Sinks
-import graft.sources.{FakePdfDecoder, HttpFetch}
+import graft.sources.{FakePdfDecoder, HttpFetch, PageDecoder}
+
+/** [[FakePdfDecoder]] that counts its calls into an accumulator. */
+final case class CountingDecoder(calls: org.apache.spark.util.LongAccumulator)
+    extends PageDecoder {
+  private val inner = FakePdfDecoder(4)
+  def decode(payload: Array[Byte]): Either[String, Seq[String]] = {
+    calls.add(1L)
+    inner.decode(payload)
+  }
+}
 
 /** The reference's whole pipeline, end to end, against a live local
   * server: manifest → fetch → hash verify → decode → explode → filter →
@@ -124,6 +134,52 @@ class PipelineRunSpec extends AnyFunSuite {
     val typed = r.typedPayload().collect()
     assert(typed.length == 4 && typed.forall(_.status == "success"))
     assert(typed.forall(p => p.page_key == p.key + p.page_no))
+  }
+
+  test("every sink: stats sidecar counts each (status, reason) exactly, one decode per document") {
+    val body = "w1 w2 w3 w4 w5 w6 w7 w8"
+    val md5 = (t: String) => java.security.MessageDigest.getInstance("MD5")
+      .digest(t.getBytes(StandardCharsets.UTF_8)).map("%02x".format(_)).mkString
+    // two good documents (2 pages each), one hash mismatch, one decode
+    // error, one page with no visible text, one page below min words
+    val manifest = Seq(
+      ("u0", body, md5(body)),
+      ("u1", body, null),
+      ("u2", body, "00000000000000000000000000000000"),
+      ("u3", "", null),
+      ("u4", "<b></b>", null),
+      ("u5", "lonely", null),
+    ).toDF("url", "body", "checksum")
+    val fakeFetch = (df: org.apache.spark.sql.DataFrame) => df
+      .join(manifest.select(col("url"), col("body")), Seq("url"))
+      .withColumn("payload", encode(col("body"), "UTF-8")).drop("body")
+      .withColumn("status", lit("success"))
+      .withColumn("error_message", lit(null).cast("string"))
+    val expected = Map(
+      ("success", null) -> 4L,
+      ("failed_to_download", "hash mismatch") -> 1L,
+      ("failed_to_extract", "cannot open document: empty payload") -> 1L,
+      ("failed_to_extract", "empty page") -> 1L,
+      ("failed_to_extract", "too few words") -> 1L)
+    for (format <- Seq("parquet", "jsonl", "files", "webdataset", "tfrecord", "dummy")) {
+      val cfg = PipelineConfig(minWordsPerPage = 2, numSamplesPerShard = 10,
+        verifyHashCol = Some("checksum"), computeHash = Some("md5"), outputFormat = format)
+      val calls = spark.sparkContext.longAccumulator(s"decode_calls_$format")
+      val out = new java.io.File(s"target/tmp/pipeline_sidecar_$format")
+      org.apache.commons.io.FileUtils.deleteQuietly(out)
+      val r = Pipeline.run(spark, manifest, cfg, CountingDecoder(calls),
+        Some(out.getAbsolutePath), fetcher = Some(fakeFetch))
+      val stats = spark.read.json(s"${out.getAbsolutePath}/stats").collect()
+        .map(x => (x.getAs[String]("status"), x.getAs[String]("error_message")) -> x.getAs[Long]("count"))
+      assert(stats.toMap == expected && stats.length == expected.size, s"$format: ${stats.toSeq}")
+      assert(r.stats.count() == expected.size, format)
+      val s = Metrics.summary(r.observation, 1.0)
+      assert(s("failed_to_download") == 1.0 && s("failed_to_extract") == 3.0 &&
+        s("successes") == 4.0, s"$format: $s")
+      // five documents reach the decoder (the hash mismatch never does),
+      // each exactly once however many outputs the sink writes
+      assert(calls.value == 5L, s"$format: ${calls.value} decoder calls for 5 documents")
+    }
   }
 
   test("parquet output respects numSamplesPerShard as rows-per-file") {

@@ -31,6 +31,23 @@ class PipelineSpec extends AnyFunSuite {
     assert(d.decode("x".getBytes("UTF-8")) == d.decode("x".getBytes("UTF-8")))
   }
 
+  test("dimensionless <img> tags: explodePages keeps them, never divides by zero") {
+    val bare = "<img/>"
+    val flat = "<img width=\"0\" height=\"10\"/>"
+    val docs = Seq(("0000000", Seq(s"<div><p>bare raster</p>$bare</div>",
+        s"<div><p>flat image</p>$flat</div>")))
+      .toDF("key", "pages").withColumn("decode_error", lit(null).cast("string"))
+    def pages(cfg: PipelineConfig) = DocPipeline.explodePages(docs, cfg)
+      .orderBy("page_no").select("imgs", "status").collect()
+      .map(r => (r.getSeq[String](0), r.getString(1))).toSeq
+    val cfg = PipelineConfig(saveFigures = true, numSamplesPerShard = 100)
+    // no size gate: an unknown ratio passes, both images stay
+    assert(pages(cfg) == Seq((Seq(bare), "success"), (Seq(flat), "success")))
+    // a size gate drops both, still without evaluating a ratio
+    assert(pages(cfg.copy(minImageSize = 1, maxAspectRatio = 3.0)) ==
+      Seq((Seq.empty, "success"), (Seq.empty, "success")))
+  }
+
   test("pipeline end-to-end: explode, filters, status channels, keys") {
     val cfg = PipelineConfig(minWordsPerPage = 3, maxPages = Some(2),
       saveFigures = true, numSamplesPerShard = 100)

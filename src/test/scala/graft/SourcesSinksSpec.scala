@@ -162,6 +162,22 @@ class SinksSpec extends AnyFunSuite {
     assert(back.rdd.getNumPartitions === 2)
   }
 
+  test("webdataset: a shard that cannot be moved into place fails the write") {
+    val out = tmpDir("wds_blocked")
+    // a non-empty directory squats on s1's tar name
+    val squatter = new File(s"$out/s1.tar")
+    squatter.mkdirs()
+    java.nio.file.Files.write(new File(squatter, "x").toPath, Array[Byte](1))
+    val df = Seq(("s0_0000", "alpha", "s0"), ("s1_0000", "beta", "s1"))
+      .toDF("key", "text", "shard")
+    val e = intercept[Exception](Sinks.webdataset(df, out, shardCol = Some("shard")))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("s1.tar")), e.toString)
+    assert(squatter.isDirectory, "the blocked shard must not be half-replaced")
+    assert(!new File(s"$out/_metadata.parquet/_SUCCESS").exists,
+      "no sidecar commit for a failed shard write")
+  }
+
   test("deleteKeys rewrites ONLY affected shards; data and sidecar rows vanish") {
     val out = tmpDir("wds_del")
     val df = Seq(
