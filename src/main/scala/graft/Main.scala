@@ -122,9 +122,9 @@ object Main {
       output = Some(outputFolder), resume = resume)
     // counts from the run's own observation: reading them re-runs nothing
     val s = graft.operators.Metrics.summary(result.observation, (System.nanoTime() - t0) / 1e9)
-    val counts = Seq("count", "successes", "failed_to_download", "failed_to_extract")
+    val counts = Seq("docs", "count", "successes", "failed_to_download", "failed_to_extract")
       .map(k => s"$k=${s(k).toLong}").mkString(", ")
-    println(f"[graft] done: $counts, ${s("docs_per_sec")}%.1f rows/s")
+    println(f"[graft] done: $counts, ${s("docs_per_sec")}%.1f docs/s")
     if (!preExisting) spark.stop()
   }
 }

@@ -239,8 +239,4 @@ object Dom {
   /** img src attributes via the real parser. */
   def domImgSrcs(c: Column): Column =
     udf((s: String) => parse(s)._2.map(_.src)).apply(c)
-
-  /** word count over the parsed visible text. */
-  def domWordCount(c: Column): Column =
-    udf((s: String) => parse(s)._1.split(" ").count(_.nonEmpty).toLong).apply(c)
 }

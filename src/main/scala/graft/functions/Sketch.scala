@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.{udaf, udf}
+import org.apache.spark.sql.functions.udaf
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -117,12 +117,6 @@ object Sketch {
       s"CMS probe needs a Depth*Width=${Depth * Width} counter array, got ${counters.length}")
     column(CmsProbe(expression(term), counters))
   }
-
-  /** Column twin of [[estimate]] for probing a sketch carried as a
-    * column (kept for API parity; the hot path is [[probe]]). */
-  def estimateCol(sketch: Column, term: Column): Column =
-    udf((sk: Seq[Long], s: String) => estimate(sk.toIndexedSeq, s))
-      .apply(sketch, term)
 
   /** Misra–Gries heavy-hitter summary (Misra & Gries 1982) as a typed
     * mergeable `Aggregator` — the DETERMINISTIC counterpart to [[CmsAgg]]:

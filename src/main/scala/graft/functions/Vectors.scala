@@ -32,9 +32,6 @@ object Vectors {
   def dot(a: Column, b: Column): Column =
     column(DotProduct(expression(a.cast(floatArray)), expression(b.cast(floatArray))))
 
-  /** L2 norm of a float array. */
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Euclidean (L2) distance of two float arrays — the other standard ANN
     * metric (IVF/LSH over L2 instead of cosine); null on length mismatch.
     * Fused single pass, codegen like its siblings. */

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.util.sketch.BloomFilter
 
 /** Bloom-filter blocklist membership — the runtime-filter pattern for
   * subtracting a blocklist from a 100 TB stream without shuffling it.
@@ -29,12 +28,6 @@ import org.apache.spark.util.sketch.BloomFilter
   * produce. Extension surface [EXT] (SURVEY §2.4 runtime filters).
   */
 object Blocklist {
-
-  /** Build the blocklist sketch (one distributed aggregation; the sketch,
-    * not the rows, returns to the driver). */
-  def bloomOf(blocklist: DataFrame, blockKey: Column,
-              expectedItems: Long, fpp: Double): BloomFilter =
-    blocklist.select(blockKey.as("__k")).stat.bloomFilter("__k", expectedItems, fpp)
 
   /** Keep only rows of `df` whose `key` is NOT (probably) in the
     * blocklist. Result is a subset of the exact anti-join: all true

@@ -511,7 +511,10 @@ object Dedup {
     * ~2×|nodes| regardless of rounds. Returns (key, component) where
     * component = min key of the cluster.
     *
-    * Two tiers, picked by measured edge count:
+    * Two tiers, picked by the directed edge count `2 × pair rows`, taken
+    * from the one checkpoint of `pairs` (duplicate, reversed and self
+    * pairs included, so it never undercounts the distinct directed
+    * edges):
     *  - `<= localEdgeThreshold` edges (post-LSH pair graphs are a tiny
     *    fraction of the corpus, so this is the common case even at 100 TB):
     *    collect to the driver and run union-find with path halving —
@@ -581,17 +584,25 @@ object Dedup {
   def connectedComponentsWithRounds(pairs: DataFrame, maxIter: Int = 50,
                                     localEdgeThreshold: Long = 1L << 20): (DataFrame, Int) = {
     val spark = pairs.sparkSession
-    val edges = pairs.select(col("key_a").as("src"), col("key_b").as("dst"))
-      .union(pairs.select(col("key_b").as("src"), col("key_a").as("dst")))
-      .distinct().localCheckpoint(true)
-    val localOk = edges.schema("src").dataType match {
+    // the pair lineage (band join, verify joins) runs exactly once: one
+    // checkpoint of the projected pairs, whose row count rides that same
+    // action; both tiers read only the checkpoint
+    val pairObs = org.apache.spark.sql.Observation("cc_pairs")
+    val checkpointed = pairs.select(col("key_a").as("src"), col("key_b").as("dst"))
+      .observe(pairObs, count(lit(1)).as("rows"))
+      .localCheckpoint(true)
+    val edgeCount = 2L * pairObs.get("rows").asInstanceOf[Long]
+    val localOk = checkpointed.schema("src").dataType match {
       case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
            org.apache.spark.sql.types.StringType => true
       case _ => false
     }
-    val edgeCount = edges.count() // cheap: edges is checkpointed
+    // union-find needs neither the reversed copy nor distinct
     if (localOk && edgeCount <= localEdgeThreshold)
-      return (localComponents(edges), 0)
+      return (localComponents(checkpointed), 0)
+    val edges = checkpointed
+      .union(checkpointed.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct().localCheckpoint(true)
     // iterative rounds pay per-task scheduling on EVERY shuffle: width the
     // loop's shuffles to the live edge count (cap = session default, so a
     // wide cluster config is respected at scale; tiny pair graphs drop to

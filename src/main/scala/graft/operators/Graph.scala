@@ -214,11 +214,16 @@ object Graph {
     * check). Input `(a, b)` undirected, either or both directions. */
   def kCore(und: DataFrame, k: Int, maxIter: Int = 50): (DataFrame, Int) = {
     require(k >= 1, "k must be >= 1")
-    var edges = und.select(col("a").as("src"), col("b").as("dst"))
-      .union(und.select(col("b").as("src"), col("a").as("dst")))
-      .filter(col("src") =!= col("dst")).distinct()
+    // `und`'s lineage runs once: checkpoint it, symmetrize from the
+    // checkpoint, and count the edges on that second checkpoint's action
+    val once = und.select(col("a").as("src"), col("b").as("dst"))
+      .filter(col("src") =!= col("dst")).localCheckpoint(true)
+    val obs0 = org.apache.spark.sql.Observation("kcore_edges")
+    var edges = once.union(once.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
+      .observe(obs0, count(lit(1)).as("edges"))
       .localCheckpoint(true)
-    var n = edges.count()
+    var n = obs0.get("edges").asInstanceOf[Long]
     var iter = 0
     var converged = n == 0L
     val series = scala.collection.mutable.ArrayBuffer.empty[Long]

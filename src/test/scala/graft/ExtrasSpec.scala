@@ -212,6 +212,28 @@ class MetricsSpec extends AnyFunSuite {
     assert(capped.length <= Metrics.HistogramCap)
     assert(capped(0).getString(0) == "success" && capped(0).getLong(2) == 5L)
   }
+
+  test("run stats stay exact when task buffers are serialized and merged") {
+    // 4 documents: d1 two good pages, d2 page 0 empty and page 1 good,
+    // d3 failed download (no page), d4 a null status on page 0
+    val rows = Seq(
+      ("success", null: String, Some(0)), ("success", null, Some(1)),
+      ("failed_to_extract", "empty page", Some(0)), ("success", null, Some(1)),
+      ("failed_to_download", "timeout: é", None), (null, null, Some(0)))
+    val tagged = rows.toDF("status", "error_message", "page_no").repartition(4)
+    val (df, obs) = Metrics.observed(tagged)
+    df.write.format("noop").mode("overwrite").save()
+    val s = Metrics.summary(obs, wallSec = 1.0)
+    assert(s("count") == 6.0 && s("docs") == 4.0 && s("successes") == 3.0, s)
+    assert(s("failed_to_download") == 1.0 && s("failed_to_extract") == 1.0, s)
+    val want = rows.groupBy(r => (r._1, r._2)).map { case (k, v) => k -> v.size.toLong }
+    val observed = Metrics.statusCounts(obs).map(c => (c.status, c.error_message) -> c.count).toMap
+    assert(observed == want)
+    // the same aggregate through a partial and a final aggregation
+    val aggregated = Metrics.statusHistogram(tagged).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(aggregated == want)
+  }
 }
 
 class HashVerifySpec extends AnyFunSuite {

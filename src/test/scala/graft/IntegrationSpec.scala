@@ -176,6 +176,8 @@ class PipelineRunSpec extends AnyFunSuite {
       val s = Metrics.summary(r.observation, 1.0)
       assert(s("failed_to_download") == 1.0 && s("failed_to_extract") == 3.0 &&
         s("successes") == 4.0, s"$format: $s")
+      // six documents, eight rows (two documents give two pages each)
+      assert(s("docs") == 6.0 && s("count") == 8.0 && s("docs_per_sec") == 6.0, s"$format: $s")
       // five documents reach the decoder (the hash mismatch never does),
       // each exactly once however many outputs the sink writes
       assert(calls.value == 5L, s"$format: ${calls.value} decoder calls for 5 documents")

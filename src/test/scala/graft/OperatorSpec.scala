@@ -364,6 +364,29 @@ class DedupSpec extends AnyFunSuite {
     assert(ccLocal.exceptAll(cc).count() === 0L && cc.exceptAll(ccLocal).count() === 0L)
   }
 
+  test("connected components: the pair lineage is evaluated once on both tiers") {
+    // duplicate, reversed and self pairs; components {1,2,3}, {10,11,12}, {20}
+    val raw = Seq((1L, 2L), (2L, 1L), (1L, 2L), (2L, 3L), (3L, 3L),
+      (10L, 11L), (11L, 12L), (12L, 10L), (20L, 20L))
+    val want = Set((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L), (12L, 10L), (20L, 20L))
+    def run(threshold: Long): (Set[(Long, Long)], Int) = {
+      val evals = spark.sparkContext.longAccumulator(s"cc_pair_rows_$threshold")
+      val bump = udf { (k: Long) => evals.add(1L); k }
+      val pairs = spark.sparkContext.parallelize(raw, 2).toDF("a", "b")
+        .select(bump(col("a")).as("key_a"), col("b").as("key_b"))
+      val (cc, rounds) = Dedup.connectedComponentsWithRounds(pairs, localEdgeThreshold = threshold)
+      val got = cc.as[(Long, Long)].collect().toSet
+      assert(evals.value === raw.size.toLong,
+        s"threshold $threshold: ${evals.value} pair-row evaluations for ${raw.size} rows")
+      (got, rounds)
+    }
+    val (local, r0) = run(1L << 20)
+    val (dist, rd) = run(0L)
+    assert(r0 === 0 && local === want)
+    assert(rd === 3 && Dedup.lastConvergenceSeries === Seq(1L, 0L), s"$rd rounds")
+    assert(dist === local)
+  }
+
   test("minhashCandidates == independent signature-band reference on random texts") {
     // the banding pipeline is deterministic given the hash family, so
     // the candidate set is EXACTLY checkable (unlike recall, which is
