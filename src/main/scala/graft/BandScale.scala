@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Direct measurement of the pHash band join's candidate-volume law
@@ -20,14 +19,7 @@ object BandScale {
     val ns: Seq[Long] =
       if (args.nonEmpty) args(0).split(",").map(_.trim.toLong).toSeq
       else Seq(500000L, 1000000L, 2000000L, 4000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     def h64(c: org.apache.spark.sql.Column) = {
       val m = md5(c.cast("string"))
       shiftleft(conv(substring(m, 1, 8), 16, 10).cast("long"), 32)

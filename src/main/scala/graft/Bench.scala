@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every SparkEntry query on SPARK_GRAFT_SF_DIR.
   * Emits best-so-far per-query JSON lines after every round (and rewrites
   * BENCH_full.json incrementally, so a killed run keeps its finished
@@ -17,40 +15,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static Guava cache of compiled generated classes, default 100
-      // entries — 361 queries × ~5 codegen stages evict every entry
-      // between a query's interleaved visits, so heavy codegen queries
-      // re-Janino + re-JIT on EVERY round and time interpreted-cold
-      // (q235: 5.6 s in-suite vs 1.3 s solo). Sized to hold the suite.
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      // r19: let AQE re-optimize (coalesce/skew-split) the shuffle
-      // partitioning of plans that build or read persisted frames —
-      // default false only for partitioning-compat, and every cached
-      // frame in this repo feeds order-free aggregations (decimal sums,
-      // min/max-struct, sorted collect_set), so results are unchanged
-      // (full oracle sweep re-proven under the conf). Measured on the
-      // cache-heavy batch (q157/q177/q180/q203/q206/q228/q253/q312/
-      // q314/q337): 22.0–22.5 s WITH vs 24.9–43.7 s control, with the
-      // wins concentrated exactly on cacheScoped consumers
-      // (OPTIMIZATION_r19.md §configs). Scale-independent: AQE
-      // coalescing on cached intermediates is equally right at 100 TB.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    // measurement-session conf overrides (semicolon-separated k=v) —
-    // the r19 A/B hook for isolating the effect of one conf on one
-    // query (OPTIMIZATION_r19.md §configs). The driver never sets it,
-    // so its runs always time the committed defaults above.
-    val spark = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-      .split(";").filter(_.contains("=")).map(_.split("=", 2))
-      .foldLeft(builder) { case (b, Array(k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
     // warmup: pay parquet-footer + codegen + JIT init outside the timings
     try spark.read.parquet(s"$sfDir/lineitem.parquet")
       .limit(1000).write.format("noop").mode("overwrite").save()
@@ -66,8 +32,6 @@ object Bench {
     // query — r03 recorded 13 s for two queries that steady-state at ~1 s.
     // Interleaving puts minutes between a query's samples, so one stall
     // can only poison one of its three timings; the min is steady-state.
-    // local-iteration hook: SPARK_GRAFT_ONLY=q52,q84 runs just matching
-    // queries (substring match). Driver never sets it -> full run.
     // CPU calibration: a fixed deterministic spin (SplitMix-style LCG),
     // single-threaded and all-threads, timed on THIS run — the box's
     // throughput varies by epoch (r9: builder-run 115.6 s vs driver-run
@@ -96,7 +60,8 @@ object Bench {
     // driver-box outlier (q17 r12, q180/q183/q361 r13 — all untouched
     // code) is attributable to GC/contention instead of costing a
     // round of plan re-audits. Peak heap uses the pool peak-usage
-    // counters (reset per query); retries count non-Success task ends.
+    // counters (reset per query); retries, shuffle and spill volume
+    // come from TaskCounters.
     import java.lang.management.{ManagementFactory, MemoryType}
     val gcBeans = ManagementFactory.getGarbageCollectorMXBeans
     def gcMs(): Long = {
@@ -112,22 +77,18 @@ object Bench {
       poolBeans.forEach(p => if (p.getType == MemoryType.HEAP) s += p.getPeakUsage.getUsed)
       s >> 20
     }
-    val taskFailures = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.reason != org.apache.spark.Success) taskFailures.incrementAndGet()
-    })
+    val counters = TaskCounters.attach(spark)
 
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.contains)) }
+    // SPARK_GRAFT_ONLY=q52,q84 runs just the matching queries
+    val names = SparkEntry.selected.sortBy(_._1)
     val best = scala.collection.mutable.Map.empty[String, Double]
-    // per query: gc ms + peak heap MB of the BEST round (steady-state
-    // footprint), worst-round sec + gc ms (the outlier-explainer), and
-    // total task retries across all rounds
+    // per query: gc ms, peak heap MB and task counters of the BEST round
+    // (steady-state footprint), worst-round sec + gc ms (the
+    // outlier-explainer), and total task retries across all rounds
     final case class Tele(var bestGcMs: Long = 0, var bestPeakMb: Long = 0,
                           var worstSec: Double = 0.0, var worstGcMs: Long = 0,
-                          var retries: Long = 0)
+                          var retries: Long = 0,
+                          var counts: Map[String, Long] = TaskCounters.Names.map(_ -> 0L).toMap)
     val tele = scala.collection.mutable.Map.empty[String, Tele]
     val roundTotals = scala.collection.mutable.ArrayBuffer.empty[Double]
     def fmt(d: Double): String = f"$d%.3f"
@@ -138,7 +99,8 @@ object Bench {
     // which previously left ZERO per-query data. Rewrite BENCH_full.json
     // after every round — an interrupted run still carries the complete
     // rounds finished so far — and keep the final write identical in
-    // shape so compare_bench.py needs no change.
+    // shape so compare_bench.py needs no change. A SPARK_GRAFT_ONLY run
+    // covers a subset, so it leaves the full-suite file alone.
     def writeFull(soloSec: scala.collection.Map[String, Double]): String = {
       val byId = names.map { case (n, _) => n -> best(n) }
         .sortBy { case (n, _) => (qid(n), n) }
@@ -147,14 +109,15 @@ object Bench {
       val ts = byId.map { case (k, _) =>
         val t = tele.getOrElse(k, Tele())
         val solo = soloSec.get(k).map(fmt).getOrElse("-1")
-        "\"" + k + s"""":[${t.bestGcMs},${t.bestPeakMb},${t.retries},${fmt(t.worstSec)},${t.worstGcMs},$solo]"""
+        val io = TaskCounters.Names.init.map(t.counts).mkString(",")
+        "\"" + k + s"""":[${t.bestGcMs},${t.bestPeakMb},${t.retries},${fmt(t.worstSec)},${t.worstGcMs},$solo,$io]"""
       }.mkString("{", ",", "}")
       val total = byId.map(_._2).sum
       val rounds = roundTotals.map(fmt).mkString("[", ",", "]")
       val line =
         s"""{"sf":"$sfDir","unit":"sec","cal_1t":${fmt(cal1)},"cal_nt":${fmt(calN)},""" +
           s""""rounds":$rounds,"telemetry":$ts,"queries":$qs,"metric":"total","value":${fmt(total)}}"""
-      try java.nio.file.Files.write(
+      if (SparkEntry.only.isEmpty) try java.nio.file.Files.write(
         java.nio.file.Paths.get("/root/repo/BENCH_full.json"),
         (line + "\n").getBytes("UTF-8"))
       catch { case _: Throwable => () }
@@ -164,7 +127,7 @@ object Bench {
       val r0 = System.nanoTime()
       for ((name, fn) <- names) {
         resetPeaks()
-        val g0 = gcMs(); val f0 = taskFailures.get()
+        val g0 = gcMs(); val c0 = counters.totals()
         val t0 = System.nanoTime()
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable =>
@@ -172,10 +135,11 @@ object Bench {
         }
         val sec = (System.nanoTime() - t0) / 1e9
         val dGc = gcMs() - g0
+        val dc = counters.since(c0)
         val t = tele.getOrElseUpdate(name, Tele())
-        t.retries += taskFailures.get() - f0
+        t.retries += dc("retries")
         if (sec < best.getOrElse(name, Double.MaxValue)) {
-          t.bestGcMs = dGc; t.bestPeakMb = peakHeapMb()
+          t.bestGcMs = dGc; t.bestPeakMb = peakHeapMb(); t.counts = dc
         }
         if (sec > t.worstSec) { t.worstSec = sec; t.worstGcMs = dGc }
         best(name) = math.min(best.getOrElse(name, Double.MaxValue), sec)
@@ -221,10 +185,10 @@ object Bench {
     // stages, the second times the steady state a solo session sees.
     // The artifact then carries plan-cost truth (solo_sec) beside
     // in-suite truth (sec) without a manual session.
-    val soloK = sys.env.getOrElse("SPARK_GRAFT_SOLO_K", "10").toInt
+    val soloK = 10
     val soloSec = scala.collection.mutable.Map.empty[String, Double]
     for ((name, fn) <- names.sortBy { case (n, _) => -best.getOrElse(n, 0.0) }
-           .take(math.max(0, soloK))) {
+           .take(soloK)) {
       var m = Double.MaxValue
       for (_ <- 1 to 2) {
         val t0 = System.nanoTime()
@@ -259,9 +223,10 @@ object Bench {
     for ((n, v) <- byId) {
       val t = tele.getOrElse(n, Tele())
       val solo = soloSec.get(n).map(s => s""","solo_sec":${fmt(s)}""").getOrElse("")
+      val io = TaskCounters.json(t.counts - "retries")
       println(s"""{"query":"$n","sec":${fmt(v)},"gc_ms":${t.bestGcMs},""" +
         s""""peak_mb":${t.bestPeakMb},"retries":${t.retries},""" +
-        s""""worst_sec":${fmt(t.worstSec)},"worst_gc_ms":${t.worstGcMs}$solo}""")
+        s""""worst_sec":${fmt(t.worstSec)},"worst_gc_ms":${t.worstGcMs},$io$solo}""")
     }
     val line = writeFull(soloSec)
     println(line)

@@ -15,7 +15,7 @@ import graft.functions.{CosineSimilarity, DotProduct, EuclideanDistance, Shingle
   * plans the same codegen'd expression as the Scala DSL.
   *
   * Use either:
-  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
+  *   a session builder's `.withExtensions(new GraftExtensions)`
   *   // or config: spark.sql.extensions=graft.GraftExtensions
   * or post-hoc on an existing session: `GraftExtensions.register(spark)`.
   */

@@ -1,43 +1,23 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dump `.explain("formatted")` for named queries into per-query files —
   * the optimization-round evidence trail (`plans/r19/<q>_<tag>.txt`).
-  * Usage: `sbt "runMain graft.PlanDump <tag> <outDir> <q1,q2,...>"`
-  * (query names match by substring, the SPARK_GRAFT_ONLY convention).
-  * Runs at the bench's sf/core shape so plan choices (broadcast vs SMJ,
+  * Usage: `SPARK_GRAFT_ONLY=q1,q2 sbt "runMain graft.PlanDump <tag> <outDir>"`
+  * (query names match by substring; unset dumps every query).
+  * Runs on Bench's session and sf so plan choices (broadcast vs SMJ,
   * AQE thresholds) match what the bench times; sfDir from
   * SPARK_GRAFT_SF_DIR (default sf0.1), cores from SPARK_GRAFT_CPUS. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val tag = args.headOption.getOrElse("before")
     val outDir = args.lift(1).getOrElse("plans/r19")
-    val wanted = args.lift(2).map(_.split(",").filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // mirror Bench's committed session confs (r19)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    // same A/B override hook as Bench, so dumped plans match what an
-    // overridden measurement session actually ran
-    val spark = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-      .split(";").filter(_.contains("=")).map(_.split("=", 2))
-      .foldLeft(builder) { case (b, Array(k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => wanted.isEmpty || wanted.exists(n.contains))
-    for (name <- names) {
-      val plan = SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.explainString(FormattedMode)
+    for ((name, build) <- SparkEntry.selected.sortBy(_._1)) {
+      val plan = build(spark, sfDir).queryExecution.explainString(FormattedMode)
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outDir, s"${name}_$tag.txt"),
         plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))

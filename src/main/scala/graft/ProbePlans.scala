@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Regenerate PLANS.md: formatted physical plans for the headline
@@ -42,13 +41,8 @@ object ProbePlans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // four cores: the session PlanSpec gates these shapes on
+    val spark = GraftSession.local(4)
     val sb = new StringBuilder
     sb ++= "# PLANS — formatted physical plans of headline queries (sf0.01, AQE on)\n\n"
     sb ++= "Generated by `graft.ProbePlans`; shapes gated in `PlanSpec.scala`.\n"

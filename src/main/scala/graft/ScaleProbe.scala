@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measured scale-blow-up probe (VERDICT r10 item 4): replicate the
@@ -156,16 +156,8 @@ object ScaleProbe {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val factor = if (args.length > 1) args(1).toInt else 10
     val outJson = if (args.length > 2) args(2) else "/root/repo/SCALE_BLOWUP.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
     val blownDir = s"/root/repo/target/scale_blowup_x$factor"
     println(s"[scale] building x$factor fixture at $blownDir")
     buildBlownFixture(spark, sfDir, blownDir, factor)
@@ -175,8 +167,7 @@ object ScaleProbe {
         spark, d, graft.streaming.StreamingOps.defaultStagingDir(spark, d))
       catch { case e: Throwable => System.err.println(s"[scale] staging $d: ${e.getMessage}") }
     val queries = SparkEntry.queries
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").filter(_.nonEmpty).toSet)
-    val probes = Probes.filter(n => only.forall(_.exists(n.contains)))
+    val probes = Probes.filter(SparkEntry.isSelected)
     def runOne(name: String, dir: String): (Double, Long) = {
       val rt = Runtime.getRuntime
       val t0 = System.nanoTime()

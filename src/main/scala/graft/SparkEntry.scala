@@ -436,6 +436,18 @@ object SparkEntry {
     DocPipeline.channels(tagged)._1
   }
 
+  /** `SPARK_GRAFT_ONLY`'s comma-separated query-name substrings; unset
+    * means every query. */
+  def only: Option[Set[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").filter(_.nonEmpty).toSet)
+
+  /** Whether `name` passes the [[only]] filter. */
+  def isSelected(name: String): Boolean = only.forall(_.exists(name.contains))
+
+  /** The [[queries]] a harness run covers, in [[queries]]' order. */
+  def selected: Seq[(String, (SparkSession, String) => DataFrame)] =
+    queries.toSeq.filter { case (n, _) => isSelected(n) }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ----------------------------------------------------- scans / filters
     "q01_pruned_scan" -> ((s, dir) => {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import java.nio.file.{Files, Paths}
@@ -17,31 +16,14 @@ import java.nio.file.{Files, Paths}
   */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // args: <sfDir> <outDir> [querySubstrings] — the optional third arg
-    // (comma-separated substrings) restricts the dump to matching query
-    // names (local iteration only; the driver always passes two)
+    // args: <sfDir> <outDir>; SPARK_GRAFT_ONLY narrows the dump to the
+    // matching query names
     val sfDir = args(0); val outDir = args(1)
-    val only = if (args.length > 2)
-      Some(args(2).split(",").filter(_.nonEmpty).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static compiled-class cache, default 100 entries — thrashes on
-      // a 361-query run (see Bench.scala / SCALE.md round-11)
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      // r19: same AQE-on-cached-plans conf as Bench (see its comment) —
-      // Verify must dump under the exact session the bench times
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the session Bench times
+    val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
     val manifest = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.exists(name.contains)) }
-      .foreach { case (name, fn) =>
+    SparkEntry.selected.foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")

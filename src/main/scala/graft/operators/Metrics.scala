@@ -54,18 +54,6 @@ object Metrics {
   /** The status histogram of a frame's rows ([[runStats]]'s `histogram`). */
   def histogram(df: DataFrame): Column = runStats(df).getField("histogram")
 
-  /** [[runStats]]'s counters as separate sums, for [[observeStream]]:
-    * positional readers of streaming progress rows index them, so
-    * `docs` comes last. */
-  private def counters(df: DataFrame): Seq[Column] = Seq(
-    count(lit(1)).as("count"),
-    sum(when(col("status") === "success", 1L).otherwise(0L)).as("successes"),
-    sum(when(col("status") === "failed_to_download", 1L).otherwise(0L)).as("failed_to_download"),
-    sum(when(col("status") === "failed_to_extract", 1L).otherwise(0L)).as("failed_to_extract"),
-    (if (df.columns.contains("page_no"))
-      sum(when(col("page_no").isNull || col("page_no") === 0, 1L).otherwise(0L))
-    else count(lit(1))).as("docs"))
-
   /** Attach the reference's per-run counters and the capped status
     * histogram ([[runStats]], one aggregate) to a status-tagged frame.
     * After any action on the returned frame, `summary(obs, wallSec)`
@@ -77,16 +65,14 @@ object Metrics {
     (df.observe(obs, runStats(df).as("stats")), obs)
   }
 
-  /** Streaming twin of [[observed]]: the SAME counters attached to a
-    * streaming frame. `Observation` is batch-only — on a stream the
+  /** Streaming twin of [[observed]]: the SAME `stats` struct attached
+    * to a streaming frame. `Observation` is batch-only — on a stream the
     * metrics arrive per micro-batch in
     * `StreamingQueryProgress.observedMetrics(name)`, so a monitor sums
-    * them across progress events (each row is observed in exactly one
-    * micro-batch; the totals are exact, not sampled). */
-  def observeStream(df: DataFrame, name: String = "graft_stats"): DataFrame = {
-    val cs = counters(df)
-    df.observe(name, cs.head, cs.tail: _*)
-  }
+    * the counters across progress events (each row is observed in
+    * exactly one micro-batch; the totals are exact, not sampled). */
+  def observeStream(df: DataFrame, name: String = "graft_stats"): DataFrame =
+    df.observe(name, runStats(df).as("stats"))
 
   private def stats(obs: Observation): Row = obs.get("stats").asInstanceOf[Row]
 

@@ -380,7 +380,8 @@ class StreamingSpec extends AnyFunSuite {
     q.awaitTermination()
     val totals = q.recentProgress.flatMap(p =>
         Option(p.observedMetrics.get("graft_stats")))
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      .map(_.getAs[org.apache.spark.sql.Row]("stats"))
+      .map(r => (r.getAs[Long]("count"), r.getAs[Long]("successes"))).toSeq
     val expected = ev.count()
     val expectedSucc = ev.filter(col("value") >= 0.5).count()
     assert(totals.map(_._1).sum === expected,

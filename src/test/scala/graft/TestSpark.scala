@@ -2,18 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One SparkSession for the whole test JVM (forked once by sbt). */
+/** One SparkSession for the whole test JVM (forked once by sbt): the
+  * harness session at four cores. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
   val sf0001 = "/root/testdata/sf0.001"
 }
