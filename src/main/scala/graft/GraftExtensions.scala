@@ -34,7 +34,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 /** Optimizer rule (Catalyst `Rule[LogicalPlan]` — SURVEY §7 custom-
   * operator surface (c)): rewrites `round(x, n)` on DOUBLE columns to
   * the engine-portable floor form floor(x·10ⁿ + 0.5)/10ⁿ, the same
-  * discipline every graft query applies by hand (`SparkEntry.pround`).
+  * discipline every graft query applies by hand (`catalog.Parity.pround`).
   * Spark's `Round` is BigDecimal-HALF_UP over the double's shortest
   * decimal representation; other engines (DuckDB, Postgres, most libm
   * users) round the binary double directly, and the two disagree

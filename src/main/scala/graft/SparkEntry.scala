@@ -1,420 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.functions.{Extraction, TextAnalysis, Vectors}
-import graft.operators.{AsOf, Blocklist, Cluster, CumSum, Dedup, DocPipeline, Graph, Layout, Multimodal, Optim, Profile, RangeJoin, Similarity}
+import graft.catalog._
+import graft.operators.DocPipeline
 import graft.sources.FakePdfDecoder
-import graft.streaming.StreamingOps
 
 /** Driver contract (see SURVEY.md §7): one named query per implemented
-  * operator, each with DuckDB oracle SQL where ANSI-expressible.
-  *
-  * Oracle-parity conventions (why every aggregate looks the way it does):
-  *  - double sums go through `DECIMAL(18,4)` then cast back to double —
-  *    decimal addition is exact and order-independent, so Spark's
-  *    partial/final aggregation order cannot diverge from DuckDB's;
-  *  - per-row double arithmetic is IEEE-deterministic and identical in
-  *    both engines, so row-level doubles are emitted raw;
-  *  - `events.ts` is TIMESTAMP(NANOS) parquet: Spark reads it as a ns
-  *    Long truncated to µs ([[Tables.events]]); every oracle query uses
-  *    `CAST(ts AS TIMESTAMP)` which truncates identically;
-  *  - counts/ranks are cast to BIGINT on the Spark side to match DuckDB's
-  *    BIGINT count/row_number; DuckDB integer SUMs are cast down from
-  *    HUGEINT;
-  *  - all rankings carry a unique tiebreak column so top-k sets are
-  *    deterministic in both engines.
+  * operator, each with DuckDB oracle SQL where ANSI-expressible. The
+  * queries live in `graft.catalog`, one [[catalog.QuerySpec]] per query
+  * in a file per family; the engine-parity conventions every oracle
+  * pair follows are on [[catalog.Parity]].
   */
 object SparkEntry {
-
-  // exact, order-independent sum of a double column (see scaladoc above)
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 4))).cast("double")
-
-  /** Engine-portable round to `scale` decimal digits:
-    * floor(x·10^scale + 0.5) / 10^scale — pure IEEE double arithmetic,
-    * bit-identical in Spark and DuckDB. Replaces `functions.round` in
-    * every oracle-compared column: Spark's round is BigDecimal-HALF_UP
-    * on the double's shortest decimal representation while DuckDB's is
-    * libm double rounding, and the two disagree whenever a value lands
-    * on a half boundary (the r9 q210/q212/q213 hash-mismatch lesson —
-    * a 12-digit decimal sum hits a 9-digit half boundary with ~1e-3
-    * odds per row, so any fixture regeneration can reopen the class).
-    * Ties break toward +∞ in BOTH engines; `portableSqlRounds` rewrites
-    * the oracle side to the same form, so the pair stays in lockstep by
-    * construction. */
-  private[graft] def pround(c: Column, scale: Int): Column = {
-    val s = math.pow(10, scale)
-    val y = c * s + 0.5
-    // Spark's floor(double) returns LONG and silently clamps past 2^63
-    // (DuckDB's FLOOR stays double — the q275 Durbin–Watson find):
-    // above 2^52 a double is already integral, so floor is the
-    // identity there and the long path is exact below it — this makes
-    // the floor form overflow-free and bit-identical to DuckDB's
-    // FLOOR(x·10ⁿ + 0.5)/10ⁿ at EVERY magnitude.
-    when(abs(y) >= 4.503599627370496e15, y).otherwise(floor(y).cast("double")) / s
-  }
-
-  /** Driver-side mirror of [[pround]] — the identical IEEE floor form
-    * including the 2^52 passthrough branch, for bounded-by-construction
-    * frames whose closing arithmetic runs on the driver (q342/q346/
-    * q319/q360 tier). A value produced here is bit-identical to the
-    * Column form on the same input. */
-  private[graft] def proundD(x: Double, scale: Int): Double = {
-    val s = math.pow(10, scale)
-    val y = x * s + 0.5
-    (if (math.abs(y) >= 4.503599627370496e15) y else math.floor(y)) / s
-  }
-
-  /** Rewrite every SQL `round(expr, n)` (and `round(expr)`) to the
-    * floor form `FLOOR((expr) * 1en + 0.5) / 1en` — the DuckDB twin of
-    * `pround`, applied to every oracle string at map construction so no
-    * oracle-compared column ever goes through an engine-specific
-    * rounding path. Nested rounds rewrite recursively. */
-  private[graft] def portableSqlRounds(sql: String): String = {
-    val out = new StringBuilder
-    val lower = sql.toLowerCase
-    var i = 0
-    while (i < sql.length) {
-      val j = lower.indexOf("round(", i)
-      if (j < 0) { out.append(sql.substring(i)); i = sql.length }
-      else if (j > 0 && (sql(j - 1).isLetterOrDigit || sql(j - 1) == '_')) {
-        out.append(sql.substring(i, j + 6)); i = j + 6 // part of an identifier
-      } else {
-        out.append(sql.substring(i, j))
-        var k = j + 6; var depth = 1; var comma = -1
-        while (depth > 0) {
-          val c = sql(k)
-          if (c == '(') depth += 1
-          else if (c == ')') depth -= 1
-          else if (c == ',' && depth == 1) comma = k
-          k += 1
-        }
-        val (expr, scale) =
-          if (comma < 0) (sql.substring(j + 6, k - 1), 0)
-          else (sql.substring(j + 6, comma), sql.substring(comma + 1, k - 1).trim.toInt)
-        out.append(s"FLOOR((${portableSqlRounds(expr)}) * 1e$scale + 0.5) / 1e$scale")
-        i = k
-      }
-    }
-    out.toString
-  }
-
-  /** Shared Spark-side plumbing for the per-doc fixture-PDF decode
-    * queries (r17 hoist — VERDICT r16 Next #3; the byte-level builders
-    * live in [[PdfFixtures]]): fan the id-pruned documents out
-    * round-robin (multi-ms-per-row kernels; see Tables.documentsFanned),
-    * build one PDF per doc, surface its image payloads through the
-    * production decode path, and project the planted feature columns.
-    * `features` defaults to the standard micro-luminance pin. */
-  private def pdfImageFeatures(s: SparkSession, dir: String,
-      gen: org.apache.spark.sql.expressions.UserDefinedFunction,
-      features: Seq[Column] = Seq(
-        floor(col("lum") * 1e6 + 0.5).cast("long").as("lum_u6")),
-      decoder: graft.sources.PageDecoder = graft.sources.MiniPdfDecoder())
-      : DataFrame = {
-    val ext = udf((p: Array[Byte]) =>
-      decoder.decodeWithImages(p)
-        .toOption.map(_.flatMap(_._2)).getOrElse(Seq.empty[Array[Byte]]))
-    val media = Tables.documentsFanned(s, dir)
-      .select(col("doc_id"), explode(ext(gen(col("doc_id")))).as("media"))
-    graft.operators.Multimodal.extractImageFeatures(media)
-      .select(Seq(col("doc_id"), col("width").cast("long").as("w"),
-        col("height").cast("long").as("h")) ++ features: _*)
-  }
-
-  /** Three chained Lehmer/MINSTD steps as a portable uniform hash: the
-    * modulus is taken BEFORE each multiply, so the product stays < 2^47 —
-    * no BIGINT overflow at any id (Spark ANSI and DuckDB both raise on
-    * overflow, and a wrapped product would silently diverge). One step is
-    * near-monotone for small ids (id·48271 ≪ p); three steps equi-
-    * distribute. Pure integer arithmetic → bit-identical in any engine. */
-  private val LP = 2147483647L
-  private def lehmer3(id: Column): Column =
-    id % LP * 48271L % LP * 48271L % LP * 48271L % LP
-  private val D = "DECIMAL(18,4)"
-
-  /** Unrolled MMR greedy steps 2..k for the q242 oracle — the q177
-    * materialized-unrolled-rounds discipline applied to diversified
-    * rerank. Expects CTEs `pool(vec_id, rel)`, `pc(u, w, c)` (pairwise
-    * pool cosines), and `k1` (the rank-1 pick). Each step scores the
-    * unpicked pool 0.7·rel − (1.0−0.7)·max-cosine-to-picked and takes
-    * the (score desc, vec_id) head — the exact IEEE expression and
-    * tie-break of Similarity.mmrSelect. */
-  private def mmrStepCtes(k: Int): String = (2 to k).map { t =>
-    s"""p$t AS MATERIALIZED (SELECT vec_id, mmr, $t AS rank FROM (
-       |  SELECT c.vec_id, 0.7 * c.rel - (1.0 - 0.7) *
-       |    (SELECT MAX(pc.c) FROM pc JOIN k${t - 1} s
-       |     ON pc.u = c.vec_id AND pc.w = s.vec_id) AS mmr
-       |  FROM pool c
-       |  WHERE c.vec_id NOT IN (SELECT vec_id FROM k${t - 1}))
-       |ORDER BY mmr DESC, vec_id LIMIT 1),
-       |k$t AS MATERIALIZED (SELECT vec_id, mmr, rank FROM k${t - 1}
-       |        UNION ALL SELECT vec_id, mmr, rank FROM p$t)""".stripMargin
-  }.mkString(",\n")
-
-  /** One DuckDB Lloyd step (assign under cent{i-1} → per-dim decimal
-    * means m{i} → round-9 → REAL centroids cent{i}, empty clusters
-    * carrying the previous centroid) — the oracle twin of
-    * [[graft.operators.Cluster.lloyd]]'s iteration, unrolled per step
-    * by q177/q178. Expects CTEs `e` (vec_id, embedding, emb DOUBLE[])
-    * and `cent{i-1}` (cid, cvec DOUBLE[]). */
-  private def kmeansIterCte(i: Int): String = {
-    val p = i - 1
-    s"""a$i AS (SELECT vec_id, cid FROM (
-       |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY list_distance(e.emb, c.cvec), c.cid) AS rk
-       |    FROM e, cent$p c) WHERE rk = 1),
-       |m$i AS (SELECT CAST(a.cid AS BIGINT) AS cid, CAST(g.i - 1 AS BIGINT) AS dim,
-       |        floor(CAST(SUM(CAST(CAST(e2.embedding[g.i] AS DOUBLE) AS DECIMAL(27,12))) AS DOUBLE) / COUNT(*) * 1e9 + 0.5) / 1e9 AS cv,
-       |        COUNT(*) AS n_members
-       |      FROM a$i a JOIN embeddings e2 ON a.vec_id = e2.vec_id,
-       |      LATERAL (SELECT unnest(generate_series(1, len(e2.embedding))) AS i) g
-       |      GROUP BY 1, 2),
-       |cent$i AS (SELECT p.cid, COALESCE(n.cvec, p.cvec) AS cvec
-       |      FROM cent$p p LEFT JOIN (SELECT cid, CAST(list(CAST(cv AS REAL) ORDER BY dim) AS DOUBLE[]) AS cvec
-       |                               FROM m$i GROUP BY cid) n USING (cid))""".stripMargin
-  }
-
-  /** DuckDB CTEs loading embeddings with a DOUBLE[] copy and the 8
-    * lowest-id seed centroids — the q177/q178 preamble. Seeds are the
-    * 8 LOWEST vec_ids with cid = their rank (0-based), the structural
-    * twin of Cluster.lloyd's `orderBy(key).limit(k)` + array-index
-    * cids — parity holds for ANY key distribution, not only when
-    * vec_ids happen to be contiguous 0..7. */
-  private val kmeansBaseCte =
-    """WITH e AS (SELECT vec_id, embedding, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-      |cent0 AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cid, emb AS cvec
-      |          FROM (SELECT vec_id, emb FROM e ORDER BY vec_id LIMIT 8) s)""".stripMargin
-
-  /** DuckDB CTE normalizing events.ts to µs — prepended to every
-    * events-based oracle query. */
-  private val evCte =
-    "WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props FROM events)"
-
-  /** Per-session SORTED DISTINCT page sets of the 30-min-gap
-    * sessionization — one row per (user_id, sid) with
-    * `pgs = array_sort(collect_set(page))` — the blocking frame shared
-    * by the whole co-visitation family (q148/q162/q183/q203–q206/q208/
-    * q228). Per-user windows only, never global; nulls drop from the
-    * set exactly as they dropped from the former self-join's
-    * `page_a < page_b` predicate.
-    *
-    * r19 optimization (guide §2.4, remove shuffles outright): the old
-    * shape was a distinct (user_id, sid, page) frame self-joined on
-    * (user_id, sid) — 4 exchanges before the pair frame exists
-    * (window, distinct, join re-shuffle, pair agg). Here the set-build
-    * groupBy keys on (user_id, sid), a SUPERSET of the window's
-    * user_id hash partitioning, so it adds NO exchange after the
-    * window pass, and pairs explode in-row ([[sessionPagePairs]]) —
-    * 2 exchanges total to the pair aggregation. Session page sets are
-    * gap-bounded (the same Σ|session|² argument the join form relied
-    * on), so the in-row set is bounded at any corpus size. */
-  private[graft] def sessionPageSets(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    Tables.events(s, dir)
-      .select(col("user_id"), col("ts"), col("event_id"),
-        get_json_object(col("props"), "$.k").cast("long").as("page"))
-      .withColumn("gap", (unix_timestamp(col("ts")) -
-        unix_timestamp(lag(col("ts"), 1).over(w))) >= 1800)
-      .withColumn("brk", when(col("gap").isNull || !col("gap"), 0L).otherwise(1L))
-      .withColumn("sid", sum(col("brk")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("user_id"), col("sid"))
-      .agg(array_sort(collect_set(col("page"))).as("pgs"))
-  }
-
-  /** All unordered within-session page pairs (page_a < page_b), one row
-    * per (session, pair) — the EXACT row multiset of the former
-    * sessionPages self-join on (user_id, sid) filtered to
-    * page_a < page_b, produced map-side from [[sessionPageSets]] by the
-    * q157 bounded in-row pair transform: `pgs` is sorted ascending, so
-    * (pgs[i], pgs[j]) with i < j enumerates each unordered pair once
-    * with page_a < page_b by construction. */
-  private[graft] def sessionPagePairs(sets: DataFrame): DataFrame =
-    sets.select(explode(flatten(transform(col("pgs"), (a, i) =>
-        transform(slice(col("pgs"), i + lit(2), size(col("pgs"))), b =>
-          struct(a.as("a"), b.as("b")))))).as("p"))
-      .select(col("p.a").as("page_a"), col("p.b").as("page_b"))
-
-  /** DuckDB twin of [[sessionPageSets]]'s row source — ends with CTE `d` (distinct
-    * (user_id, sid, page)); shared by the q148 and q162 oracles. */
-  private lazy val sessionPagesCte: String =
-    s"""$evCte,
-       |pg AS (SELECT user_id, ts, event_id,
-       |         CAST(json_extract_string(props, '$$.k') AS BIGINT) AS page,
-       |         CAST(epoch_us(ts) // 1000000 AS BIGINT) AS sec FROM ev),
-       |l AS (SELECT user_id, ts, event_id, page,
-       |        CASE WHEN sec - lag(sec) OVER (PARTITION BY user_id ORDER BY ts, event_id) >= 1800
-       |             THEN 1 ELSE 0 END AS brk
-       |      FROM pg),
-       |sx AS (SELECT user_id, page,
-       |         SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-       |                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-       |       FROM l),
-       |d AS (SELECT DISTINCT user_id, sid, page FROM sx)""".stripMargin
-
-  /** Gap-session oracle (DuckDB has no session_window: break-flag +
-    * running-sum formulation) — shared by batch q19 and streaming q78,
-    * which must produce identical sessions. */
-  private lazy val sessionOracle: String =
-    s"""$evCte,
-       |brk AS (
-       |  SELECT user_id, ts, value, event_id,
-       |    CASE WHEN lag(ts) OVER w IS NULL
-       |           OR ts - lag(ts) OVER w >= INTERVAL '5 minutes'
-       |         THEN 1 ELSE 0 END AS is_break
-       |  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-       |sess AS (
-       |  SELECT user_id, ts, value,
-       |    SUM(is_break) OVER (PARTITION BY user_id ORDER BY ts, event_id
-       |                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-       |  FROM brk)
-       |SELECT MIN(ts) AS session_start,
-       |       MAX(ts) + INTERVAL '5 minutes' AS session_end,
-       |       user_id, COUNT(*) AS n_events,
-       |       CAST(SUM(CAST(value AS $D)) AS DOUBLE) AS total_value
-       |FROM sess GROUP BY user_id, sid""".stripMargin
-
-  /** Query terms shared by the BM25-based IR-eval family (q263 nDCG,
-    * q264 MAP): relevance is derived from the head term's postings. */
-  private val bm25Terms = Seq("spark", "join", "scan")
-
-  /** Per-doc BM25 scores over [[bm25Terms]] plus the shared tokenized
-    * frame — the ONE corpus-sized pass of the IR-eval family; everything
-    * downstream (rankings, relevance lists) is a ≤10-row frame. k1=1.2,
-    * b=0.75, per-term scores pround(12) into a DECIMAL(27,14) sum,
-    * floor-9 — see q263's scaladoc for the parity argument. Returns
-    * (bm25: doc_id→bm25, words: cacheScoped (doc_id, w)). */
-  private def bm25Scores(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val words = Dedup.cacheScoped(Tables.documents(s, dir)
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      .filter(length(col("w")) > 0))
-    val dl = words.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-    val st = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_dl"))
-    val tf = words.filter(col("w").isin(bm25Terms: _*))
-      .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
-    val dfq = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    val avgdl = col("total_dl").cast("double") / col("n_docs")
-    val bm25 = tf.join(dl, Seq("doc_id")).join(broadcast(dfq), Seq("w"))
-      .crossJoin(broadcast(st))
-      .withColumn("s", pround(
-        log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-          * col("tf") * 2.2
-          / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / avgdl)), 12))
-      .groupBy(col("doc_id"))
-      .agg(pround(sum(col("s").cast(DecimalType(27, 14))).cast("double"), 9)
-        .as("bm25"))
-    (bm25, words)
-  }
-
-  /** DuckDB twin of [[bm25Scores]] — the shared CTE prefix of the q263
-    * and q264 oracles (`w2` = tokenized frame, `bm` = per-doc BM25). */
-  private lazy val bm25Cte: String =
-    """WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-      |w2 AS (SELECT doc_id, w FROM w WHERE length(w) > 0),
-      |dl AS (SELECT doc_id, COUNT(*) AS dl FROM w2 GROUP BY doc_id),
-      |st AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS total_dl FROM dl),
-      |tf AS (SELECT doc_id, w, COUNT(*) AS tf FROM w2
-      |       WHERE w IN ('spark','join','scan') GROUP BY doc_id, w),
-      |dfq AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY w),
-      |sc AS (SELECT tf.doc_id,
-      |         round(ln((n_docs - df + 0.5) / (df + 0.5) + 1.0) * tf * 2.2
-      |           / (tf + 1.2 * (0.25 + 0.75 * dl / (CAST(total_dl AS DOUBLE) / n_docs))), 12) AS s
-      |       FROM tf JOIN dl USING (doc_id) JOIN dfq USING (w), st),
-      |bm AS (SELECT doc_id, round(CAST(SUM(CAST(s AS DECIMAL(27,14))) AS DOUBLE), 9) AS bm25
-      |       FROM sc GROUP BY doc_id)""".stripMargin
-
-  /** Lag-1..maxLag autocorrelation frame of the per-type daily count
-    * series — q238's pipeline factored so PACF (q279) rides the SAME
-    * arithmetic (see q238's scaladoc for the parity argument). Returns
-    * (event_type, lag, n_pairs, acf[floor-9]). */
-  private def acfFrame(s: SparkSession, dir: String, maxLag: Int): DataFrame = {
-    val daily = Dedup.cacheScoped(Tables.events(s, dir)
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("x")))
-    val mu = daily.groupBy(col("event_type"))
-      .agg(sum(col("x")).as("sx"), count(lit(1)).as("n"))
-      .select(col("event_type"), (col("sx").cast("double") / col("n")).as("mu"))
-    val c = daily.join(broadcast(mu), Seq("event_type"))
-    val den = c.select(col("event_type"),
-        (floor((col("x") - col("mu")) * (col("x") - col("mu")) * 1e12 + 0.5) / 1e12)
-          .cast(DecimalType(27, 14)).as("d2"))
-      .groupBy(col("event_type")).agg(sum(col("d2")).cast("double").as("den"))
-    val num = c.withColumn("lag", explode(sequence(lit(1), lit(maxLag))))
-      .select(col("event_type"), col("lag"),
-        date_add(col("day"), col("lag")).as("day"), col("x").as("x0"), col("mu"))
-      .join(daily.select(col("event_type"), col("day"), col("x").as("x1")),
-        Seq("event_type", "day"))
-      .select(col("event_type"), col("lag"),
-        (floor((col("x0") - col("mu")) * (col("x1") - col("mu")) * 1e12 + 0.5) / 1e12)
-          .cast(DecimalType(27, 14)).as("p2"))
-      .groupBy(col("event_type"), col("lag"))
-      .agg(count(lit(1)).as("n_pairs"), sum(col("p2")).cast("double").as("num"))
-    num.join(broadcast(den), Seq("event_type"))
-      .filter(col("den") > 0)
-      .select(col("event_type"), col("lag").cast("long").as("lag"), col("n_pairs"),
-        (floor(col("num") / col("den") * 1e9 + 0.5) / 1e9).as("acf"))
-  }
-
-  /** DuckDB twin of [[acfFrame]] — CTE chain ending in
-    * `acfv(event_type, lag, n_pairs, acf)`, shared by the q238 and
-    * q279 oracles. */
-  private def acfCte(maxLag: Int): String =
-    s"""$evCte,
-       |daily AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
-       |            COUNT(*) AS x
-       |          FROM ev GROUP BY 1, 2),
-       |mu AS (SELECT event_type, CAST(SUM(x) AS DOUBLE) / COUNT(*) AS mu
-       |       FROM daily GROUP BY 1),
-       |c AS (SELECT d.event_type, d.day, d.x, m.mu
-       |      FROM daily d JOIN mu m USING (event_type)),
-       |den AS (SELECT event_type,
-       |          CAST(SUM(CAST(FLOOR((x - mu) * (x - mu) * 1e12 + 0.5) / 1e12
-       |            AS DECIMAL(27,14))) AS DOUBLE) AS den
-       |        FROM c GROUP BY 1),
-       |lagged AS (SELECT c.event_type, g.lag, c.day + CAST(g.lag AS INTEGER) AS day,
-       |             c.x AS x0, c.mu
-       |           FROM c, (SELECT unnest(generate_series(1, $maxLag)) AS lag) g),
-       |num AS (SELECT l.event_type, l.lag, COUNT(*) AS n_pairs,
-       |          CAST(SUM(CAST(FLOOR((l.x0 - l.mu) * (d.x - l.mu) * 1e12 + 0.5) / 1e12
-       |            AS DECIMAL(27,14))) AS DOUBLE) AS num
-       |        FROM lagged l JOIN daily d
-       |          ON d.event_type = l.event_type AND d.day = l.day
-       |        GROUP BY 1, 2),
-       |acfv AS (SELECT n.event_type, n.lag, n.n_pairs,
-       |           FLOOR(n.num / de.den * 1e9 + 0.5) / 1e9 AS acf
-       |         FROM num n JOIN den de USING (event_type)
-       |         WHERE de.den > 0)""".stripMargin
-
-  /** Shapley skeleton for the 4 touch channels (q280): one row per
-    * (channel, coalition-without-channel) = (channel, m0, m1 = m0∪bit,
-    * weight |S|!·(n−1−|S|)!/n!). Generated once in Scala and embedded
-    * as the SAME literal VALUES rows in the oracle SQL, so neither
-    * engine computes a factorial. */
-  private[graft] lazy val shapleySkeleton: Seq[(String, Int, Int, Double)] = {
-    val channels = Seq("click" -> 1, "error" -> 2, "signup" -> 4, "view" -> 8)
-    def fact(k: Int): Int = (1 to k).product
-    for {
-      (name, bit) <- channels
-      m0 <- 0 until 16 if (m0 & bit) == 0
-    } yield {
-      val k = Integer.bitCount(m0)
-      (name, m0, m0 | bit, fact(k).toDouble * fact(4 - 1 - k) / fact(4))
-    }
-  }
-
-  /** Cheap-quality-score document frame (q221's oracle CTE, shared with
-    * q265/q268): `source, lang, score` with the score formula inlined. */
-  private lazy val qualityDocCte: String =
-    """WITH d AS (SELECT doc_id, source, lang,
-      |    least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-      |    * (CASE WHEN length(text) = 0 THEN 0.0
-      |            ELSE CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / length(text) END)
-      |    * (1.0 - least((CASE WHEN length(text) = 0 THEN 0.0
-      |            ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE) / length(text) END) * 5.0, 1.0))
-      |    AS score FROM documents)""".stripMargin
 
   /** Flagship query on sf=0.001: the reference's end-to-end pipeline
     * (decode → explode pages → extract → filter → key) over the documents
@@ -448,17464 +47,27 @@ object SparkEntry {
   def selected: Seq[(String, (SparkSession, String) => DataFrame)] =
     queries.toSeq.filter { case (n, _) => isSelected(n) }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ----------------------------------------------------- scans / filters
-    "q01_pruned_scan" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") < lit("1996-01-01").cast("timestamp"))
-        .select(col("l_orderkey"), col("l_partkey"), col("l_extendedprice"))
-    }),
-
-    // ------------------------------------------------------- aggregations
-    "q02_agg_pricing" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          dsum(col("l_quantity")).as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_base_price"),
-          dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("sum_disc_price"),
-          count(lit(1)).as("count_order"),
-          (dsum(col("l_quantity")) / count(lit(1))).as("avg_qty"))
-    }),
-
-    "q03_join_broadcast" -> ((s, dir) => {
-      // dims broadcast explicitly — region/nation are tiny at any SF
-      val c = Tables.customer(s, dir)
-      val n = broadcast(Tables.nation(s, dir))
-      val r = broadcast(Tables.region(s, dir))
-      c.join(n, c("c_nationkey") === n("n_nationkey"))
-        .join(r, n("n_regionkey") === r("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(count(lit(1)).as("n_cust"), dsum(col("c_acctbal")).as("total_acctbal"))
-    }),
-
-    "q04_join_agg" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val l = Tables.lineitem(s, dir)
-      o.join(l, o("o_orderkey") === l("l_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(
-          dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"),
-          countDistinct(col("o_orderkey")).as("n_orders"))
-    }),
-
-    "q05_semi_join" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val big = Tables.lineitem(s, dir).filter(col("l_quantity") >= 49)
-      o.join(big, o("o_orderkey") === big("l_orderkey"), "left_semi")
-        .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
-    }),
-
-    "q06_anti_join" -> ((s, dir) => {
-      val c = Tables.customer(s, dir)
-      val o = Tables.orders(s, dir)
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name"))
-    }),
-
-    "q50_right_outer" -> ((s, dir) => {
-      // every nation, with supplier counts (nulls -> 0 for dims without
-      // suppliers): aggregated fact RIGHT OUTER dim
-      val sup = Tables.supplier(s, dir)
-        .groupBy(col("s_nationkey")).agg(count(lit(1)).as("cnt"))
-      val n = Tables.nation(s, dir)
-      sup.join(n, sup("s_nationkey") === n("n_nationkey"), "right_outer")
-        .select(col("n_nationkey"), col("n_name"),
-          coalesce(col("cnt"), lit(0L)).as("n_suppliers"))
-    }),
-
-    "q51_full_outer" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val f = o.filter(col("o_orderstatus") === "F")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_f"))
-        .select(col("o_custkey").as("ck_f"), col("n_f"))
-      val p = o.filter(col("o_orderstatus") === "P")
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_p"))
-        .select(col("o_custkey").as("ck_p"), col("n_p"))
-      f.join(p, col("ck_f") === col("ck_p"), "full_outer")
-        .select(coalesce(col("ck_f"), col("ck_p")).as("custkey"),
-          coalesce(col("n_f"), lit(0L)).as("n_f"),
-          coalesce(col("n_p"), lit(0L)).as("n_p"))
-    }),
-
-    // ------------------------------------------------------------ windows
-    "q07_window_topn" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_orderpriority"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      Tables.orders(s, dir)
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= 3)
-        .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"), col("rn"))
-    }),
-
-    "q08_window_running" -> ((s, dir) => {
-      // (l_orderkey, l_linenumber) is NOT unique in the synthetic data
-      // (118k dup pairs at sf0.1, one with differing quantities on the
-      // same suppkey+shipdate) — lag over a non-total order is
-      // nondeterministic ACROSS ENGINES (DuckDB flips run-to-run).
-      // quantity+extendedprice complete the order; rows tying on all
-      // six keys are interchangeable for every output column.
-      val w = Window.partitionBy(col("l_suppkey"))
-        .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity"), col("l_extendedprice"))
-      Tables.lineitem(s, dir).select(
-        col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-        sum(col("l_quantity").cast(DecimalType(18, 4)))
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-          .cast("double").as("running_qty"),
-        lag(col("l_quantity"), 1).over(w).as("prev_qty"))
-    }),
-
-    // ------------------------------------------------------------ set ops
-    "q09_except" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      o.filter(col("o_orderstatus") === "F").select(col("o_custkey"))
-        .except(o.filter(col("o_orderstatus") === "O").select(col("o_custkey")))
-    }),
-
-    "q10_intersect" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      o.filter(col("o_orderstatus") === "F").select(col("o_custkey"))
-        .intersect(o.filter(col("o_orderstatus") === "P").select(col("o_custkey")))
-    }),
-
-    // -------------------------------------------------- rollup/cube/top-k
-    "q11_rollup" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
-    }),
-
-    "q12_cube" -> ((s, dir) => {
-      Tables.orders(s, dir)
-        .cube(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    "q13_topk" -> ((s, dir) => {
-      Tables.orders(s, dir)
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-        .limit(10)
-        .select(col("o_orderkey"), col("o_totalprice"))
-    }),
-
-    "q14_theta_join" -> ((s, dir) => {
-      val n1 = Tables.nation(s, dir).select(
-        col("n_regionkey"), col("n_nationkey").as("k1"), col("n_name").as("nation_a"))
-      val n2 = Tables.nation(s, dir).select(
-        col("n_regionkey"), col("n_nationkey").as("k2"), col("n_name").as("nation_b"))
-      n1.join(n2, Seq("n_regionkey")).filter(col("k1") < col("k2"))
-        .select(col("n_regionkey"), col("nation_a"), col("nation_b"))
-    }),
-
-    // --------------------------------------------------------- as-of join
-    "q15_asof_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      // right side unique per (user_id, ts): deterministic tie policy
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("purchase_id"), max_by(col("value"), col("event_id")).as("purchase_value"))
-      AsOf.join(clicks, purchases, "user_id", "ts", Seq("purchase_id", "purchase_value"))
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("right_purchase_id").as("prev_purchase_id"),
-          col("right_purchase_value").as("prev_purchase_value"))
-    }),
-
-    // --------------------------------------------------- date/time + json
-    "q16_date_agg" -> ((s, dir) => {
-      Tables.events(s, dir)
-        .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
-        .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value"))
-    }),
-
-    "q17_json_extract" -> ((s, dir) => {
-      Tables.events(s, dir)
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
-        .groupBy(col("event_type"))
-        .agg(sum(col("k")).as("sum_k"), max(col("k")).as("max_k"), count(lit(1)).as("n"))
-    }),
-
-    "q18_window_10min" -> ((s, dir) => {
-      Tables.events(s, dir)
-        .groupBy(window(col("ts"), "10 minutes").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"), dsum(col("value")).as("total_value"))
-        .select(col("w.start").as("window_start"), col("event_type"), col("n"), col("total_value"))
-    }),
-
-    "q19_session_window" -> ((s, dir) => {
-      StreamingOps.sessionAgg(Tables.events(s, dir), "5 minutes")
-    }),
-
-    // --------------------------------------- reference extraction surface
-    "q20_strip_tags" -> ((s, dir) => {
-      Tables.documents(s, dir).select(col("doc_id"),
-        Extraction.stripTags(
-          concat(lit("<div><p>"), col("text"), lit("</p></div>"))).as("stripped"))
-    }),
-
-    "q21_word_count" -> ((s, dir) => {
-      Tables.documents(s, dir).select(col("doc_id"),
-        Extraction.wordCount(col("text")).cast("long").as("total_words"))
-    }),
-
-    "q22_remove_digits" -> ((s, dir) => {
-      Tables.documents(s, dir).select(col("doc_id"),
-        Extraction.removeDigits(concat(col("text"), lit(" pages 34-89 v34.67"))).as("no_digits"))
-    }),
-
-    "q23_hashes" -> ((s, dir) => {
-      Tables.documents(s, dir).select(col("doc_id"),
-        Extraction.contentHash(col("text"), "md5").as("md5_hash"),
-        Extraction.contentHash(col("text"), "sha256").as("sha256_hash"))
-    }),
-
-    "q24_min_words_filter" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .withColumn("total_words", Extraction.wordCount(col("text")).cast("long"))
-        .filter(col("total_words") >= 30)
-        .select(col("doc_id"), col("total_words"))
-    }),
-
-    "q25_page_explode" -> ((s, dir) => {
-      // the reference's per-page explode + min-words gate + key synthesis,
-      // SQL-expressible twin of the DocPipeline core (40-word pages)
-      val ws = split(col("text"), " ")
-      val np = ceil(size(ws) / lit(40.0)).cast("int")
-      Tables.documents(s, dir)
-        .select(col("doc_id"), ws.as("ws"), np.as("np"))
-        .select(col("doc_id"), col("ws"),
-          explode(sequence(lit(0), col("np") - 1)).as("page_no"))
-        .select(col("doc_id"), col("page_no"),
-          array_join(slice(col("ws"), col("page_no") * 40 + 1, lit(40)), " ").as("page_text"))
-        .withColumn("page_words", size(split(col("page_text"), " ")).cast("long"))
-        .filter(col("page_words") >= 5)
-        .withColumn("page_key",
-          Extraction.pageKey(format_string("%06d", col("doc_id")), col("page_no")))
-    }),
-
-    // ------------------------------------------------------ text analysis
-    "q26_quality" -> ((s, dir) => {
-      Tables.documents(s, dir).select(col("doc_id"),
-        TextAnalysis.wsTokenCount(col("text")).cast("long").as("ws_tokens"),
-        TextAnalysis.stopwordRatio(col("text")).as("stopword_ratio"),
-        TextAnalysis.meanWordLen(col("text")).as("mean_word_len"),
-        TextAnalysis.qualityScore(col("text")).as("quality"))
-    }),
-
-    "q27_tokens" -> ((s, dir) => {
-      Tables.documents(s, dir).select(col("doc_id"),
-        TextAnalysis.wsTokenCount(col("text")).cast("long").as("ws_tokens"),
-        TextAnalysis.bpeTokenCount(col("text")).cast("long").as("bpe_tokens"))
-    }),
-
-    "q28_fingerprint" -> ((s, dir) => {
-      Tables.documents(s, dir).select(col("doc_id"),
-        TextAnalysis.fingerprintMd5(col("text")).as("fp"))
-    }),
-
-    "q29_langid" -> ((s, dir) => {
-      // heuristic langid is not SQL-expressible → rows-only check
-      Tables.documents(s, dir).select(col("doc_id"),
-        TextAnalysis.langId(col("text")).as("detected_lang"))
-    }),
-
-    // -------------------------------------------------------------- dedup
-    "q30_dedup_exact" -> ((s, dir) => {
-      Dedup.exact(Tables.documents(s, dir), col("text"), col("doc_id"))
-        .select(col("doc_id"), col("n_chars"))
-    }),
-
-    "q31_dedup_norm_groups" -> ((s, dir) => {
-      Dedup.normalizedGroups(Tables.documents(s, dir), col("text"), col("doc_id"))
-    }),
-
-    "q32_minhash_dups" -> ((s, dir) => {
-      // minhash signature uses xxhash64 → not oracle-expressible; rows-only
-      Dedup.minhashCandidates(Tables.documents(s, dir), col("text"), col("doc_id"),
-        shingleK = 3, numHashes = 32, bands = 8, minJaccard = 0.3)
-    }),
-
-    "q33_simhash_dups" -> ((s, dir) => {
-      Dedup.simhashCandidates(Tables.documents(s, dir), col("text"), col("doc_id"),
-        shingleK = 3, maxHamming = 8)
-    }),
-
-    "q34_ngram_jaccard" -> ((s, dir) => {
-      // exact verification over blocked candidates; oracle = pure list
-      // algebra in DuckDB (blocking is complete for jaccard > 0, so the
-      // oracle's cross-join + threshold yields the identical pair set)
-      Dedup.ngramJaccardPairs(
-        Tables.documents(s, dir).filter(col("doc_id") < 100), col("text"), col("doc_id"),
-        k = 2, minJaccard = 0.08)
-    }),
-
-    "q35_embedding_dups" -> ((s, dir) => {
-      Dedup.embeddingNearDups(Tables.embeddings(s, dir), col("embedding"), col("vec_id"),
-        minCosine = 0.4, bruteForce = true)
-    }),
-
-    "q52_dedup_groups" -> ((s, dir) => {
-      // transitive duplicate clusters: iterative min-label connected
-      // components over the exact n-gram Jaccard pair graph — the same
-      // SQL-expressible pair set as q34, so DuckDB recomputes the pairs
-      // and verifies the closure with WITH RECURSIVE. (Components over
-      // minhash pairs stay covered by q32 + DedupSpec.)
-      val pairs = Dedup.ngramJaccardPairs(
-        Tables.documents(s, dir).filter(col("doc_id") < 100), col("text"), col("doc_id"),
-        k = 2, minJaccard = 0.08)
-      Dedup.connectedComponents(pairs)
-        .groupBy(col("component"))
-        .agg(count(lit(1)).as("group_size"), max(col("key")).as("max_key"))
-    }),
-
-    "q56_embedding_dups_lsh" -> ((s, dir) => {
-      // the 100 TB tier of q35: random-hyperplane LSH bucketing instead of
-      // the O(n²) cross join; recall vs the exact pair set asserted in
-      // DedupSpec (approximate → rows-only here)
-      Dedup.embeddingNearDups(Tables.embeddings(s, dir), col("embedding"), col("vec_id"),
-        minCosine = 0.4, planes = 4, bruteForce = false)
-    }),
-
-    // -------------------------------------------------- similarity search
-    "q36_knn_brute" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.bruteForceTopK(
-          emb, col("vec_id"), col("embedding"),
-          emb.filter(col("vec_id") < 10), col("vec_id"), col("embedding"), k = 5)
-        .withColumn("rank", col("rank").cast("long"))
-    }),
-
-    "q66_l2_knn" -> ((s, dir) => {
-      // L2-metric twin of q36: same broadcast + WindowGroupLimit shape,
-      // scored by the codegen'd EuclideanDistance kernel
-      val emb = Tables.embeddings(s, dir)
-      Similarity.bruteForceTopK(
-          emb, col("vec_id"), col("embedding"),
-          emb.filter(col("vec_id") < 10), col("vec_id"), col("embedding"),
-          k = 5, metric = "l2")
-        .withColumn("rank", col("rank").cast("long"))
-    }),
-
-    "q37_knn_lsh" -> ((s, dir) => {
-      // approximate tier — recall measured in tests, rows-only here
-      val emb = Tables.embeddings(s, dir)
-      Similarity.lshTopK(
-          emb, col("vec_id"), col("embedding"),
-          emb.filter(col("vec_id") < 10), col("vec_id"), col("embedding"),
-          k = 5, planes = 6, probeBits = 1)
-        .withColumn("rank", col("rank").cast("long"))
-    }),
-
-    "q49_time_funcs" -> ((s, dir) => {
-      // date/time scalar surface: epoch seconds, interval shift, hour/dow
-      Tables.events(s, dir).select(
-        col("event_id"),
-        unix_timestamp(col("ts")).as("epoch_s"),
-        (col("ts") + expr("INTERVAL 90 minutes")).as("ts_plus"),
-        hour(col("ts")).cast("long").as("hr"),
-        dayofweek(col("ts")).cast("long").as("dow"),
-        to_timestamp(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss")).as("ts_floor_s"))
-    }),
-
-    "q48_knn_ivf" -> ((s, dir) => {
-      // IVF scale path: probe-pruned exact rerank; recall vs brute force
-      // asserted in SimilaritySpec (rows-only here)
-      val emb = Tables.embeddings(s, dir)
-      Similarity.ivfTopK(
-          emb, col("vec_id"), col("embedding"),
-          emb.filter(col("vec_id") < 10), col("vec_id"), col("embedding"),
-          k = 5, nlist = 16, nprobe = 4)
-        .withColumn("rank", col("rank").cast("long"))
-    }),
-
-    // ---------------------------------------------------------- multimodal
-    "q38_multimodal_meta" -> ((s, dir) => {
-      // EXPLICIT stub codec (r18): the default is now the real JDK
-      // reader; the fixture's synthesized-UTF-8 "media" is the one
-      // place the deterministic fake is the correct decode.
-      val withMedia = Multimodal.withBinaryPayload(Tables.documents(s, dir), "text")
-      Multimodal.decodeMetadata(withMedia,
-        codec = Multimodal.FakeImageCodec).toDF()
-    }),
-
-    "q69_frame_sample" -> ((s, dir) => {
-      // frame sampling over "video" payloads: typed mapPartitions explode
-      // (one codec per partition); the stub's arithmetic offsets make the
-      // whole operator oracle-able
-      val withMedia = Multimodal.withBinaryPayload(Tables.documents(s, dir), "text")
-      Multimodal.sampleFrameOffsets(withMedia, stride = 100).toDF()
-    }),
-
-    // ----------------------------------------------------------- streaming
-    "q65_stream_join" -> ((s, dir) => {
-      // REAL stream-stream join (two file streams over the same staged
-      // events, watermarked both sides, time-bounded state) — the oracle
-      // is the batch self-join twin in DuckDB, same discipline as q39.
-      // State partitions are sized to the data for the duration of the
-      // query: each partition is a state store with fixed commit
-      // overhead per micro-batch, and AQE cannot coalesce streaming
-      // state (32 stores over ~100k events measured 2× slower than 8;
-      // r20 re-measured 4 < 8 at this state size — the symmetric-hash
-      // join keeps 4 stores per partition, so even 8 partitions is 32
-      // store commits per micro-batch). At production rates this knob
-      // scales with state volume, not with the session's core count.
-      val staging = StreamingOps.defaultStagingDir(s, dir)
-      StreamingOps.stageEventsForStreaming(s, dir, staging)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      // r20 (guide §5, trim the stateful tail): after the single data
-      // micro-batch, AvailableNow runs one more NO-DATA batch purely to
-      // advance the watermark and evict state — for an INNER stream-
-      // stream join every matched row was already emitted in the data
-      // batch, so that batch writes nothing and costs ~35% of the query
-      // (StreamProbe: batch1 triggerExecution 1.5–2.9 s of ~5 s, all
-      // state-eviction commits). Skip it; the state dies with the temp
-      // checkpoint anyway. q131 (left_outer) MUST keep it — the no-data
-      // batch is what emits the null-padded rows there.
-      val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val clicks = StreamingOps.eventsStream(s, staging)
-          .filter(col("event_type") === "click")
-        val purchases = StreamingOps.eventsStream(s, staging)
-          .filter(col("event_type") === "purchase")
-        val joined = StreamingOps.clickPurchaseJoin(clicks, purchases)
-        StreamingOps.runToMemory(s, joined, "q65_stream_join",
-          org.apache.spark.sql.streaming.OutputMode.Append())
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
-    }),
-
-    "q39_stream_tumbling" -> ((s, dir) => {
-      // batch parquet replayed through a real streaming query (AvailableNow
-      // + memory sink); result must equal the batch/oracle twin q18.
-      // State partitions sized to the data (see q65's rationale).
-      val staging = StreamingOps.defaultStagingDir(s, dir)
-      StreamingOps.stageEventsForStreaming(s, dir, staging)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val stream = StreamingOps.eventsStream(s, staging)
-        val agg = StreamingOps.windowedAgg(stream, "10 minutes")
-        StreamingOps.runToMemory(s, agg, "q39_stream_tumbling")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }),
-
-    // --------------------------------------------- approx / SQL surface
-    "q41_approx_distinct" -> ((s, dir) => {
-      // HLL++ sketch differs from DuckDB's HLL -> rows-only; accuracy vs
-      // exact counts asserted in QueriesSpec (the exact countDistinct is
-      // NOT carried here — it would double the query's cost just to
-      // display a number the spec already checks)
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag"))
-        .agg(approx_count_distinct(col("l_partkey")).as("approx_parts"))
-    }),
-
-    "q42_grouping_sets" -> ((s, dir) => {
-      // Spark 4 groupingSets API — no temp view / SQL parse per call
-      Tables.lineitem(s, dir)
-        .groupingSets(
-          Seq(Seq(col("l_returnflag")), Seq(col("l_linestatus")), Seq.empty),
-          col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
-    }),
-
-    "q43_window_frames" -> ((s, dir) => {
-      // range frame (value-based) + lead/first over a unique total order
-      val wRange = Window.partitionBy(col("o_orderstatus"))
-        .orderBy(col("o_totalprice")).rangeBetween(-100L, 0L)
-      val wSeq = Window.partitionBy(col("o_orderstatus"))
-        .orderBy(col("o_totalprice"), col("o_orderkey"))
-      Tables.orders(s, dir).select(
-        col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
-        sum(col("o_totalprice").cast(DecimalType(18, 4))).over(wRange)
-          .cast("double").as("range_sum"),
-        lead(col("o_orderkey"), 1).over(wSeq).as("next_key"),
-        first(col("o_orderkey")).over(wSeq).as("first_key"))
-    }),
-
-    "q44_pivot" -> ((s, dir) => {
-      // pivot event counts by type per day; fixed value list keeps the
-      // plan a single pass (no values-discovery job)
-      Tables.events(s, dir)
-        .groupBy(date_trunc("day", col("ts")).as("day"))
-        .pivot("event_type", Seq("click", "view", "purchase", "signup", "error"))
-        .agg(count(lit(1)))
-        .na.fill(0L)
-    }),
-
-    "q45_correlated_subquery" -> ((s, dir) => {
-      // per-customer order stats via join-agg (the idiomatic decorrelated
-      // plan Catalyst produces for a correlated scalar subquery)
-      val o = Tables.orders(s, dir)
-      val c = Tables.customer(s, dir)
-      val agg = o.groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("n_orders"), max(col("o_totalprice")).as("max_price"))
-      c.join(agg, c("c_custkey") === agg("o_custkey"), "left")
-        .select(col("c_custkey"), col("c_name"),
-          coalesce(col("n_orders"), lit(0L)).as("n_orders"), col("max_price"))
-    }),
-
-    "q47_map_funcs" -> ((s, dir) => {
-      // props JSON -> map, explode keys, sum values (SURVEY §2.5 Map row)
-      Tables.events(s, dir)
-        .select(explode(from_json(col("props"), MapType(StringType, LongType))).as(Seq("k", "v")))
-        .groupBy(col("k"))
-        .agg(count(lit(1)).as("n"), sum(col("v")).as("sum_v"))
-    }),
-
-    "q46_wordcount_topk" -> ((s, dir) => {
-      // the canonical explode-aggregate: split -> explode -> count -> top-k
-      Tables.documents(s, dir)
-        .select(explode(split(col("text"), " ")).as("word"))
-        .filter(length(col("word")) > 0)
-        .groupBy(col("word")).agg(count(lit(1)).as("n"))
-        .orderBy(desc("n"), col("word"))
-        .limit(20)
-    }),
-
-    "q55_percentiles" -> ((s, dir) => {
-      // exact interpolated percentiles — re-anchored (r11, VERDICT item
-      // 6) on the histogram-refinement selector so NO oracle path keeps
-      // an O(group) buffer: Spark's built-in `percentile` collects the
-      // whole group into one task's aggregation buffer (the documented
-      // scale ceiling this repo's Selection machinery exists to
-      // remove). Two selector calls share scans per value column; the
-      // long (group, q, value) output pivots wide. Bit-equal to the
-      // built-in and to DuckDB quantile_cont (same weighted-mean
-      // interpolation form — Selection scaladoc), so the oracle is
-      // unchanged.
-      val li = Tables.lineitem(s, dir)
-      val ep = graft.operators.Selection.exactGroupedQuantiles(
-        li, "l_returnflag", "l_extendedprice", Seq(0.5, 0.9))
-      val qt = graft.operators.Selection.exactGroupedQuantiles(
-        li, "l_returnflag", "l_quantity", Seq(0.25))
-      ep.groupBy(col("l_returnflag"))
-        .agg(
-          max(when(col("q") === 0.5, col("value"))).as("p50"),
-          max(when(col("q") === 0.9, col("value"))).as("p90"))
-        .join(qt.groupBy(col("l_returnflag"))
-          .agg(max(when(col("q") === 0.25, col("value"))).as("q25")),
-          Seq("l_returnflag"))
-    }),
-
-    "q57_percentile_approx" -> ((s, dir) => {
-      // the 100 TB tier of q55: bounded-memory KLL-style sketch instead of
-      // buffering every value per group. Sketch internals are engine-
-      // specific (≠ DuckDB) → rows-only; accuracy vs exact asserted in
-      // ApproxSpec (±1% of the value range at accuracy=10000)
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag"))
-        .agg(
-          percentile_approx(col("l_extendedprice"), lit(0.5), lit(10000)).as("p50"),
-          percentile_approx(col("l_extendedprice"), lit(0.9), lit(10000)).as("p90"),
-          percentile_approx(col("l_quantity"), lit(0.25), lit(10000)).as("q25"))
-    }),
-
-    "q58_window_dist" -> ((s, dir) => {
-      // distribution window functions over a unique total order
-      val w = Window.partitionBy(col("o_orderstatus"))
-        .orderBy(col("o_totalprice"), col("o_orderkey"))
-      Tables.orders(s, dir).select(
-        col("o_orderkey"), col("o_orderstatus"),
-        ntile(4).over(w).cast("long").as("bucket"),
-        percent_rank().over(w).as("pr"),
-        cume_dist().over(w).as("cd"))
-    }),
-
-    "q59_edit_distance" -> ((s, dir) => {
-      // near-dup verification by edit distance: block on a normalized
-      // 12-char prefix (equi-join — never all-pairs), then Levenshtein
-      // over an 80-char window on the surviving candidates only. The
-      // blocking scales like every other dedup operator here (shuffle on
-      // the block key); the O(len²) distance runs on candidates, not n².
-      val d = Tables.documents(s, dir).select(col("doc_id"), lower(col("text")).as("t"))
-      val a = d.select(col("doc_id").as("doc_a"),
-        substring(col("t"), 1, 80).as("ta"), substring(col("t"), 1, 12).as("blk"))
-      val b = d.select(col("doc_id").as("doc_b"),
-        substring(col("t"), 1, 80).as("tb"), substring(col("t"), 1, 12).as("blk"))
-      a.join(b, Seq("blk")).filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"),
-          levenshtein(col("ta"), col("tb")).cast("long").as("dist"))
-        .filter(col("dist") <= 20)
-    }),
-
-    "q60_stratified_sample" -> ((s, dir) => {
-      // per-stratum deterministic sampling (df.stat.sampleBy is engine-RNG;
-      // this is the reproducible md5-threshold flavor of q53, with a
-      // different rate per stratum — the shape used to rebalance a skewed
-      // training corpus)
-      val h = substring(md5(concat_ws("_", col("l_orderkey"), col("l_linenumber"))), 1, 2)
-      val keep = when(col("l_returnflag") === "A", h < "10")
-        .when(col("l_returnflag") === "N", h < "40")
-        .otherwise(h < "20")
-      Tables.lineitem(s, dir).filter(keep)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"), col("l_quantity"))
-    }),
-
-    "q61_chunking" -> ((s, dir) => {
-      // context-window chunking: overlapping 200-char windows at stride
-      // 150 — one output row per chunk, pure codegen (sequence +
-      // posexplode + substr), no UDF. The training-data op that turns a
-      // document corpus into model-sized pieces.
-      Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"),
-          posexplode(sequence(lit(0), length(col("text")) - 1, lit(150)))
-            .as(Seq("chunk_no", "start")))
-        .select(col("doc_id"), col("chunk_no").cast("long").as("chunk_no"),
-          expr("substring(text, start + 1, 200)").as("chunk"))
-    }),
-
-    "q62_domain_cap" -> ((s, dir) => {
-      // per-domain document cap (C4/RefinedWeb-style: keep the best K per
-      // source so one domain can't dominate the corpus). rank<=K over a
-      // unique order compiles to WindowGroupLimit: partial top-K below
-      // the exchange, so each domain ships at most K rows per partition
-      // — the 100 TB-safe form of "group by domain, keep 10".
-      val w = Window.partitionBy(col("source"))
-        .orderBy(col("n_chars").desc, col("doc_id"))
-      Tables.documents(s, dir)
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 10)
-        .select(col("doc_id"), col("source"), col("n_chars"), col("rk").cast("long").as("rk"))
-    }),
-
-    "q63_repetition" -> ((s, dir) => {
-      // Gopher-style repetition signal: fraction of all word-bigrams
-      // taken by the single most frequent bigram (boilerplate screams
-      // here). Bigrams via posexplode + lead over (doc, pos) — fully
-      // codegen'd; an interpreted HOF lambda would be ~10× slower.
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      val bigrams = Tables.documents(s, dir)
-        .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "word")))
-        .select(col("doc_id"),
-          concat_ws(" ", col("word"), lead(col("word"), 1).over(w)).as("bigram"),
-          lead(col("word"), 1).over(w).isNotNull.as("ok"))
-        .filter(col("ok"))
-      bigrams.groupBy(col("doc_id"), col("bigram")).agg(count(lit(1)).as("c"))
-        .groupBy(col("doc_id"))
-        .agg(sum(col("c")).as("n_bigrams"),
-          (max(col("c")).cast("double") / sum(col("c"))).as("top_bigram_ratio"))
-    }),
-
-    "q64_tfidf" -> ((s, dir) => {
-      // TF-IDF top-5 terms per document — the relevance/quality scorer a
-      // curation pipeline ranks corpora with. Three aggregations + one
-      // broadcast of the (word → df) side; top-5 via rank ≤ K
-      // (WindowGroupLimit again). N rides a broadcast scalar, never a
-      // driver collect.
-      val docs = Tables.documents(s, dir)
-      val tokens = docs
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-        .filter(length(col("word")) > 0)
-      val tf = tokens.groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
-      val df_ = tokens.select(col("doc_id"), col("word")).distinct()
-        .groupBy(col("word")).agg(count(lit(1)).as("df"))
-      val n = docs.agg(count(lit(1)).as("n_docs"))
-      val w = Window.partitionBy(col("doc_id"))
-        .orderBy(desc("score"), col("word"))
-      // round to 9 decimals: JVM Math.log and DuckDB's libm ln disagree
-      // in the last ulp; rank over the ROUNDED score so ties break alike
-      tf.join(df_, Seq("word"))
-        .crossJoin(broadcast(n))
-        .withColumn("score",
-          pround(col("tf").cast("double") * log(col("n_docs").cast("double") / col("df")), 9))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 5)
-        .select(col("doc_id"), col("word"), col("score"), col("rk").cast("long").as("rk"))
-    }),
-
-    "q67_unpivot" -> ((s, dir) => {
-      // wide -> long reshape via stack (the inverse of q44's pivot):
-      // 4 measure columns melt to (name, value) rows, pure codegen
-      Tables.lineitem(s, dir)
-        .filter(col("l_orderkey") < 100)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          expr("""stack(4,
-            'l_quantity', l_quantity,
-            'l_extendedprice', l_extendedprice,
-            'l_discount', l_discount,
-            'l_tax', l_tax) AS (name, value)"""))
-    }),
-
-    "q68_token_budget" -> ((s, dir) => {
-      // budget selection: best documents (by length, stable order) until
-      // a 20k-token budget is spent. The running total is the two-pass
-      // CumSum — no partition-less Window anywhere (PlanSpec-gated).
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id"), col("n_chars"),
-          size(split(col("text"), " ")).cast("long").as("tok"))
-      CumSum.budgetTake(d, Seq(col("n_chars").desc, col("doc_id")),
-          col("tok"), budget = 20000L, cumCol = "cum_tokens")
-        .select(col("doc_id"), col("n_chars"), col("tok"), col("cum_tokens"))
-    }),
-
-    "q70_dedup_keep_best" -> ((s, dir) => {
-      // survivor POLICY variant of exact dedup: keep the highest-quality
-      // member of each content group (keep-first is q30). rank=1 over
-      // (group, quality desc) compiles to WindowGroupLimit — the policy
-      // changes, the scale shape doesn't.
-      val w = Window.partitionBy(col("h"))
-        .orderBy(col("n_chars").desc, col("doc_id"))
-      Tables.documents(s, dir)
-        .withColumn("h", md5(col("text")))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("doc_id"), col("h"), col("n_chars"))
-    }),
-
-    "q71_doc_reassembly" -> ((s, dir) => {
-      // ordered aggregation — the INVERSE of chunking/explode: collect a
-      // doc's non-overlapping chunks and concatenate in chunk order
-      // (collect_list is unordered; array_sort on the (chunk_no, chunk)
-      // struct restores determinism). Reassembled text must equal the
-      // original, so the oracle is exact.
-      val chunks = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"),
-          posexplode(sequence(lit(0), length(col("text")) - 1, lit(200)))
-            .as(Seq("chunk_no", "start")))
-        .select(col("doc_id"), col("chunk_no"),
-          expr("substring(text, start + 1, 200)").as("chunk"))
-      chunks.groupBy(col("doc_id"))
-        .agg(array_join(
-          transform(array_sort(collect_list(struct(col("chunk_no"), col("chunk")))),
-            x => x.getField("chunk")), "").as("text"))
-    }),
-
-    "q53_hash_sample" -> ((s, dir) => {
-      // deterministic ~6% sample: md5-prefix threshold on the row key.
-      // (df.sample is engine-RNG — this is the reproducible flavor that
-      // survives re-runs, task retries, and engine swaps.)
-      Tables.lineitem(s, dir)
-        .filter(substring(md5(concat_ws("_", col("l_orderkey"), col("l_linenumber"))), 1, 2) < "10")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-    }),
-
-    "q54_text_stats" -> ((s, dir) => {
-      // lexical-diversity stats: distinct-word ratio per doc
-      val ws = split(col("text"), " ")
-      Tables.documents(s, dir).select(col("doc_id"),
-        size(ws).cast("long").as("n_words"),
-        size(array_distinct(ws)).cast("long").as("n_distinct"),
-        (size(array_distinct(ws)).cast("double") / size(ws)).as("ttr"))
-    }),
-
-    "q72_line_dedup" -> ((s, dir) => {
-      // corpus-level line dedup (the C4/RefinedWeb discipline): segment
-      // into 5-word lines (the synthetic corpus has no newlines, so the
-      // segmentation mirrors q25's), keep each distinct line's FIRST
-      // occurrence — min(struct(key, line_no)) per line, partial-agg
-      // friendly, ONE shuffle on content — then reassemble survivors in
-      // line order. Docs that were entirely duplicate lines drop out.
-      val ws = split(col("text"), " ")
-      val np = ceil(size(ws) / lit(5.0)).cast("int")
-      val lines = Tables.documents(s, dir)
-        .select(col("doc_id"), ws.as("ws"), np.as("np"))
-        .select(col("doc_id"), col("ws"),
-          explode(sequence(lit(0), col("np") - 1)).as("line_no"))
-        .select(col("doc_id").as("key"), col("line_no").cast("long").as("line_no"),
-          array_join(slice(col("ws"), col("line_no") * 5 + 1, lit(5)), " ").as("line"))
-      Dedup.reassembleLines(Dedup.lineDedup(lines), " ")
-        .select(col("key").as("doc_id"), col("text"), col("n_lines_kept"))
-    }),
-
-    "q73_decontam" -> ((s, dir) => {
-      // benchmark decontamination: 3-word-shingle overlap of the corpus
-      // against a held-out "test set" (every 50th doc of a FIXED id
-      // range — bounded by construction like q181, so the broadcast
-      // holds at any corpus size; a %-of-corpus stand-in would not).
-      // The corpus side shuffles only for the per-doc overlap count.
-      val d = Tables.documents(s, dir)
-      val isBench = (col("doc_id") % 50 === 0) && (col("doc_id") < 10000)
-      val bench = d.filter(isBench)
-      val corpus = d.filter(!isBench)
-      Dedup.decontaminate(corpus, col("text"), col("doc_id"),
-          bench, col("text"), k = 3, minRatio = 0.2)
-        .select(col("key").as("doc_id"), col("n_overlap"), col("n_shingles"),
-          col("overlap_ratio"))
-    }),
-
-    "q74_pii_redact" -> ((s, dir) => {
-      // PII scrub: deterministic planted email/IP/phone per doc, redacted
-      // with typed placeholders; patterns restricted to Java∩RE2 syntax so
-      // the oracle replays them byte-identically.
-      val planted = concat(col("text"),
-        lit(" contact user"), col("doc_id").cast("string"),
-        lit("@example.com from 10.0."), (col("doc_id") % 256).cast("string"),
-        lit(".7 call 555-"), format_string("%04d", col("doc_id") % 10000))
-      Tables.documents(s, dir)
-        .withColumn("full", planted)
-        .select(col("doc_id"),
-          TextAnalysis.redactPii(col("full")).as("redacted"),
-          TextAnalysis.piiCount(col("full"), TextAnalysis.emailPattern).as("n_emails"),
-          TextAnalysis.piiCount(col("full"), TextAnalysis.ipv4Pattern).as("n_ips"),
-          TextAnalysis.piiCount(col("full"), TextAnalysis.phonePattern).as("n_phones"))
-    }),
-
-    "q75_gopher_filter" -> ((s, dir) => {
-      // Gopher-style rule-based quality gate: boolean flags per rule plus
-      // the conjunction — the filter form of q26's continuous scores.
-      val t = col("text")
-      val nWords = TextAnalysis.wsTokenCount(t).cast("long")
-      val mwl = TextAnalysis.meanWordLen(t)
-      val awr = TextAnalysis.alphaWordRatio(t)
-      val stops = size(regexp_extract_all(lower(t),
-        lit(TextAnalysis.stopwordAltPattern), lit(0))).cast("long")
-      val okWords = nWords.between(50L, 100000L)
-      val okLen = mwl >= 3.0 && mwl <= 10.0
-      val okAlpha = awr >= 0.8
-      val okStops = stops >= 2L
-      Tables.documents(s, dir).select(col("doc_id"),
-        nWords.as("n_words"), mwl.as("mean_word_len"),
-        awr.as("alpha_word_ratio"), stops.as("n_stopwords"),
-        okWords.as("ok_words"), okLen.as("ok_word_len"),
-        okAlpha.as("ok_alpha"), okStops.as("ok_stopwords"),
-        (okWords && okLen && okAlpha && okStops).as("pass"))
-    }),
-
-    "q76_range_join" -> ((s, dir) => {
-      // bucketized interval join: clicks matched to the 30-minute windows
-      // opened by a deterministic subset of purchases. NO equi key exists,
-      // yet the plan must not be a nested-loop join — RangeJoin buckets
-      // both sides (width = window length) and equi-joins on the bucket
-      // (CurationSpec gates the plan against BNLJ/CartesianProduct).
-      val ev = Tables.events(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("ts").as("click_ts"))
-      val wins = ev.filter(col("event_type") === "purchase" && col("event_id") % 97 === 0)
-        .select(col("event_id").as("win_id"), col("ts").as("win_start"),
-          (col("ts") + expr("INTERVAL 30 minutes")).as("win_end"))
-      RangeJoin.pointInInterval(clicks, col("click_ts"),
-          wins, col("win_start"), col("win_end"), bucketWidthSec = 1800L)
-        .select(col("click_id"), col("win_id"), col("click_ts"))
-    }),
-
-    "q77_bloom_blocklist" -> ((s, dir) => {
-      // bloom-filter blocklist subtraction: the 100 TB shape of an
-      // anti-join — blocklist aggregated to a broadcast sketch, stream
-      // filtered map-side with NO shuffle. Approximate (fpp extra drops,
-      // zero false negatives) → rows-only; subset + drop-rate bounds vs
-      // the exact anti-join asserted in CurationSpec.
-      val block = Tables.part(s, dir).filter(col("p_size") > 40).select(col("p_partkey"))
-      Blocklist.filterNotIn(Tables.lineitem(s, dir), col("l_partkey"),
-          block, col("p_partkey"), expectedItems = 20000L, fpp = 0.01)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"))
-    }),
-
-    "q78_stream_session" -> ((s, dir) => {
-      // REAL streaming session windows (file stream + AvailableNow +
-      // memory sink), same oracle as the batch twin q19 — the gap-window
-      // state machine must produce identical sessions under micro-batch
-      // replay. State partitions sized to the data (see q65).
-      val staging = StreamingOps.defaultStagingDir(s, dir)
-      StreamingOps.stageEventsForStreaming(s, dir, staging)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val stream = StreamingOps.eventsStream(s, staging)
-        val agg = StreamingOps.sessionAgg(stream, "5 minutes")
-        StreamingOps.runToMemory(s, agg, "q78_stream_session")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }),
-
-    "q79_mixture_sample" -> ((s, dir) => {
-      // mixture resampling toward target domain shares (the corpus-
-      // rebalancing step of a data recipe): two tiny aggregations compute
-      // per-domain keep rates (target share ∝ per-domain weight), rates
-      // broadcast back, rows kept by a deterministic arithmetic hash —
-      // the 100 TB side is scanned once, map-side, no shuffle.
-      // Weight/total sums are exact (small integers as doubles), so the
-      // rate arithmetic is IEEE-identical in any engine.
-      val d = Tables.documents(s, dir)
-      val counts = d.groupBy(col("source")).agg(count(lit(1)).as("cnt"))
-      val withW = counts.withColumn("w",
-        (regexp_replace(col("source"), "src", "").cast("long") % 3 + 1).cast("double"))
-      val g = withW.agg(sum(col("w")).as("sumw"), sum(col("cnt")).as("total"))
-      val rates = withW.crossJoin(broadcast(g))
-        .select(col("source"),
-          least(lit(1.0), (col("w") / col("sumw")) * (col("total").cast("double") / col("cnt"))).as("rate"))
-      // Lehmer/MINSTD step with the modulus taken FIRST: the product
-      // stays < 2^47, so no BIGINT overflow at any doc_id (Spark ANSI
-      // and DuckDB both raise on overflow — and a wrapped product would
-      // silently diverge anyway)
-      val u = (lehmer3(col("doc_id")).cast("double") + 0.5) / 2147483647.0
-      d.join(broadcast(rates), Seq("source"))
-        .filter(u < col("rate"))
-        .select(col("doc_id"), col("source"))
-    }),
-
-    "q80_weighted_sample" -> ((s, dir) => {
-      // weighted sampling without replacement (Efraimidis–Spirakis
-      // priorities): top-k by ln(u)/w where u is a deterministic
-      // arithmetic-hash uniform and w = n_chars — long docs win more
-      // often, reproducibly. ln differs from libm in the last ulp →
-      // pround(9) both sides and break ties on the key (q64 discipline).
-      // orderBy.limit compiles to TakeOrderedAndProject: only k rows per
-      // partition cross the wire.
-      val u = (lehmer3(col("doc_id")).cast("double") + 0.5) / 2147483647.0
-      Tables.documents(s, dir)
-        .select(col("doc_id"), col("n_chars"),
-          pround(log(u) / col("n_chars"), 9).as("priority"))
-        .orderBy(desc("priority"), col("doc_id"))
-        .limit(100)
-    }),
-
-    "q81_vocab_encode" -> ((s, dir) => {
-      // tokenizer vocabulary build + corpus encoding: frequency-ranked
-      // word ids WITHOUT a global window (dense-id discipline — range
-      // repartition + per-partition offsets; a row_number over the whole
-      // vocab would funnel every distinct word through one task), then
-      // every token re-encoded by a broadcast join on the vocab.
-      val tokens = Tables.documents(s, dir)
-        .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "word")))
-        .filter(length(col("word")) > 0)
-      val counts = tokens.groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-      val vocab = DocPipeline.withDenseIds(counts,
-          struct((-col("cnt")).as("nc"), col("word")), "word_id")
-        .select(col("word"), col("word_id"))
-      tokens.join(broadcast(vocab), Seq("word"))
-        .select(col("doc_id"), col("pos").cast("long").as("pos"), col("word_id"))
-    }),
-
-    "q82_centroids" -> ((s, dir) => {
-      // per-label embedding centroids — the k-means update step as a
-      // vector AGGREGATION: explode to (label, dim, value), one
-      // partial+final agg per (label, dim) cell, decimal sums so the
-      // element-wise mean is order-independent (the dsum discipline
-      // applied to vectors; a float sum would diverge from the oracle
-      // under Spark's partial aggregation).
-      Tables.embeddings(s, dir)
-        .select(col("label").cast("long").as("label"),
-          posexplode(col("embedding")).as(Seq("dim", "v")))
-        .groupBy(col("label"), col("dim").cast("long").as("dim"))
-        // pround(9): a float's terminating decimal expansion can tie at the
-        // 13th digit, and the engines' decimal-cast tie-breaking differs —
-        // observed 1e-14 drift on exact-decimal sums (q64 discipline)
-        .agg(pround(sum(col("v").cast("double").cast(DecimalType(27, 12)))
-          .cast("double") / count(lit(1)), 9).as("centroid"))
-    }),
-
-    "q83_histogram" -> ((s, dir) => {
-      // fixed-width numeric histogram: bin = floor(x / width) — a plain
-      // partial+final agg (bins are computed map-side; only bin counts
-      // shuffle). The profiling primitive behind distribution dashboards.
-      Tables.lineitem(s, dir)
-        .groupBy(floor(col("l_extendedprice") / 1000).cast("long").as("bin"))
-        .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("sum_price"))
-    }),
-
-    "q84_profile" -> ((s, dir) => {
-      // single-pass multi-column data profile (nulls / exact distinct /
-      // min / max per column, one table scan for all of them)
-      Profile.profile(Tables.orders(s, dir),
-        Seq("o_orderstatus", "o_orderpriority", "o_custkey"))
-    }),
-
-    "q105_profile_approx" -> ((s, dir) => {
-      // the 100 TB tier of q84: approx_count_distinct (HLL++) per column —
-      // no Expand row multiplication, mergeable sketches. HLL internals are
-      // engine-specific -> rows-only; 5%-accuracy vs the exact q84 asserted
-      // in CurationSpec (q41/q57 discipline).
-      Profile.profile(Tables.orders(s, dir),
-        Seq("o_orderstatus", "o_orderpriority", "o_custkey"), approxDistinct = true)
-    }),
-
-    "q85_kmeans_iter" -> ((s, dir) => {
-      // one full Lloyd iteration: assign every vector to its nearest of 8
-      // seed centroids (seeds broadcast — the corpus never shuffles for
-      // assignment; distance is the codegen'd EuclideanDistance kernel,
-      // bit-exact vs DuckDB list_distance per q66), then recompute
-      // centroids with the q82 decimal-sum vector aggregation. rank=1
-      // over (dist, centroid_id) compiles to WindowGroupLimit.
-      val emb = Tables.embeddings(s, dir)
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
-      val w = Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("centroid_id"))
-      val assigned = emb.select(col("vec_id"), col("embedding"))
-        .crossJoin(broadcast(cents))
-        .withColumn("dist", Vectors.l2Distance(col("embedding"), col("cvec")))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("centroid_id"), col("embedding"))
-      assigned
-        .select(col("centroid_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
-        .groupBy(col("centroid_id"), col("dim").cast("long").as("dim"))
-        .agg(pround(sum(col("v").cast("double").cast(DecimalType(27, 12)))
-            .cast("double") / count(lit(1)), 9).as("new_val"),
-          count(lit(1)).as("n_members"))
-    }),
-
-    "q86_pmi" -> ((s, dir) => {
-      // collocation mining: pointwise mutual information over word
-      // bigrams — ln(c_ab·N / (c_a·c_b)) with all counts as exact
-      // integers (products stay in BIGINT), ln rounded to 9 (q64
-      // discipline), min-support filter, top-50. The association scorer
-      // behind phrase detection in corpus pipelines.
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      val bi = Tables.documents(s, dir)
-        .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "word")))
-        .filter(length(col("word")) > 0)
-        .select(col("doc_id"), col("word"), lead(col("word"), 1).over(w).as("next"))
-        .filter(col("next").isNotNull)
-      // ONE corpus pass: c_a, c_b and N are pure roll-ups of the bigram
-      // counts (c_a = Σ c_ab over next, etc.) — deriving them from cAB
-      // instead of re-aggregating `bi` saves three full tokenize+window
-      // passes; cAB is cached because four branches read it
-      val cAB = Dedup.cacheScoped(
-        bi.groupBy(col("word"), col("next")).agg(count(lit(1)).as("c_ab")))
-      val cA = cAB.groupBy(col("word")).agg(sum(col("c_ab")).as("c_a"))
-      val cB = cAB.groupBy(col("next").as("nw")).agg(sum(col("c_ab")).as("c_b"))
-      val n = cAB.agg(sum(col("c_ab")).as("n_bi"))
-      cAB.join(cA, Seq("word"))
-        .join(cB, cAB("next") === cB("nw")).drop("nw")
-        .crossJoin(broadcast(n))
-        .filter(col("c_ab") >= 5)
-        .withColumn("pmi",
-          pround(log((col("c_ab") * col("n_bi")).cast("double") / (col("c_a") * col("c_b"))), 9))
-        .orderBy(desc("pmi"), col("word"), col("next"))
-        .limit(50)
-        .select(col("word"), col("next"), col("c_ab"), col("pmi"))
-    }),
-
-    "q87_zscore" -> ((s, dir) => {
-      // outlier flagging: per-type z-score from EXACT decimal sums of v
-      // and v² (mean/variance derived from order-independent sums, so the
-      // per-row z is IEEE-identical in any engine — no rounding needed),
-      // stats broadcast back, corpus scanned map-side.
-      val ev = Tables.events(s, dir)
-      val stats = ev.groupBy(col("event_type")).agg(
-        sum(col("value").cast(DecimalType(27, 12))).cast("double").as("s1"),
-        sum((col("value") * col("value")).cast(DecimalType(27, 12))).cast("double").as("s2"),
-        count(lit(1)).as("n"))
-      val mean = col("s1") / col("n")
-      val variance = (col("s2") - col("s1") * col("s1") / col("n")) / (col("n") - 1)
-      // ln/sqrt chains drift a final ulp between engines -> pround(9) and
-      // gate on the ROUNDED value so boundary rows agree (q64 discipline)
-      ev.join(broadcast(stats), Seq("event_type"))
-        .withColumn("z", pround((col("value") - mean) / sqrt(variance), 9))
-        .filter(abs(col("z")) > 2.5)
-        .select(col("event_id"), col("event_type"), col("value"), col("z"))
-    }),
-
-    "q88_salted_join" -> ((s, dir) => {
-      // the skew-mitigation join as an ORACLE-checked query: salting
-      // must redistribute rows without changing semantics, so the oracle
-      // is the PLAIN equi-join. Salt derives from the fact row identity
-      // (deterministic — task retries reproduce identical shuffles); the
-      // dim side replicates 8×.
-      val li = Tables.lineitem(s, dir)
-      val dim = Tables.part(s, dir).select(col("p_partkey").as("l_partkey"), col("p_size"))
-      graft.operators.Skew.saltedJoin(li, dim, "l_partkey",
-          concat_ws("_", col("l_orderkey"), col("l_linenumber")), salts = 8)
-        .groupBy(col("p_size").cast("long").as("p_size"))
-        .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("revenue"))
-    }),
-
-    "q89_resample_ffill" -> ((s, dir) => {
-      // time-series resampling: per-user hourly grid spanning each
-      // user's activity (sequence + explode — no driver loop), gaps
-      // forward-filled with last(ignoreNulls) over a per-user window.
-      // Grid size is bounded by per-user span, not the global range.
-      val ev = Tables.events(s, dir).filter(col("event_type") === "purchase")
-      val w1 = Window.partitionBy(col("user_id"), col("h"))
-        .orderBy(col("ts").desc, col("event_id").desc)
-      val hourly = ev
-        .select(col("user_id"), date_trunc("hour", col("ts")).as("h"),
-          col("ts"), col("event_id"), col("value"))
-        .withColumn("rk", row_number().over(w1))
-        .filter(col("rk") === 1)
-        .select(col("user_id"), col("h"), col("value").as("v"))
-      val span = hourly.groupBy(col("user_id"))
-        .agg(min(col("h")).as("h0"), max(col("h")).as("h1"))
-      val grid = span.select(col("user_id"),
-        explode(sequence(col("h0"), col("h1"), expr("INTERVAL 1 hour"))).as("h"))
-      val w2 = Window.partitionBy(col("user_id")).orderBy(col("h"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      grid.join(hourly, Seq("user_id", "h"), "left")
-        .select(col("user_id"), col("h"),
-          last(col("v"), ignoreNulls = true).over(w2).as("v_ffill"),
-          col("v").isNull.as("gap"))
-    }),
-
-    "q90_impute" -> ((s, dir) => {
-      // null imputation with the per-group mean: nulls planted
-      // deterministically (event_id % 7), group means from exact decimal
-      // sums over the NON-null values (count(v) skips nulls in both
-      // engines), stats broadcast back, coalesce map-side.
-      val ev = Tables.events(s, dir)
-      val base = ev.select(col("event_id"), col("event_type"),
-        when(col("event_id") % 7 === 0, lit(null)).otherwise(col("value")).as("v"))
-      val stats = base.groupBy(col("event_type"))
-        .agg((sum(col("v").cast(DecimalType(27, 12))).cast("double") / count(col("v"))).as("mean_v"))
-      base.join(broadcast(stats), Seq("event_type"))
-        .select(col("event_id"), col("event_type"),
-          coalesce(col("v"), col("mean_v")).as("value_imputed"),
-          col("v").isNull.as("was_imputed"))
-    }),
-
-    "q91_entropy" -> ((s, dir) => {
-      // lexical entropy per document: -Σ p·ln(p) over the word
-      // distribution. Each term is rounded to 9 BEFORE the sum (a double
-      // sum is order-dependent; rounded terms through an exact decimal
-      // sum are engine-independent — the q64 discipline applied to a
-      // reduction, not just a score).
-      val toks = Tables.documents(s, dir)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-        .filter(length(col("word")) > 0)
-      val wc = toks.groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("c"))
-      val tot = wc.groupBy(col("doc_id")).agg(sum(col("c")).as("n"))
-      val p = col("c").cast("double") / col("n")
-      wc.join(tot, Seq("doc_id"))
-        .withColumn("term", pround(p * log(p), 9))
-        .groupBy(col("doc_id"))
-        .agg((-sum(col("term").cast(DecimalType(27, 12)))).cast("double").as("entropy"),
-          count(lit(1)).as("n_distinct_words"))
-    }),
-
-    "q92_funnel" -> ((s, dir) => {
-      // sequence/funnel analytics: per-user first click → purchase within
-      // 60 min, daily conversion rate. Two shuffles on user_id (first-
-      // touch agg + conversion agg) and one on day — every stage is a
-      // partial+final agg or an equi-join on the user key; no window over
-      // the whole event stream.
-      val ev = Tables.events(s, dir)
-      val firstClick = ev.filter(col("event_type") === "click")
-        .groupBy(col("user_id")).agg(min(col("ts")).as("first_click"))
-      val conv = ev.filter(col("event_type") === "purchase")
-        .join(firstClick, Seq("user_id"))
-        .filter(col("ts") >= col("first_click") &&
-          col("ts") <= col("first_click") + expr("INTERVAL 60 minutes"))
-        .groupBy(col("user_id")).agg(min(col("ts")).as("conv_ts"))
-      firstClick.join(conv, Seq("user_id"), "left")
-        .groupBy(date_trunc("day", col("first_click")).as("day"))
-        .agg(count(lit(1)).as("n_users"),
-          count(col("conv_ts")).as("n_converted"),
-          pround(count(col("conv_ts")).cast("double") / count(lit(1)), 9).as("conv_rate"))
-    }),
-
-    "q93_sql_text" -> ((s, dir) => {
-      // the SQL-TEXT surface end-to-end: temp view + the injected native
-      // codegen expression (cosine_sim via GraftExtensions) inside a SQL
-      // string — must plan the identical expression as the Scala DSL and
-      // bit-match DuckDB's list_cosine_similarity. Pairs blocked on the
-      // label equi-key (never all-pairs).
-      GraftExtensions.register(s)
-      Tables.embeddings(s, dir).createOrReplaceTempView("emb_sql")
-      s.sql("""
-        SELECT a.vec_id AS key_a, b.vec_id AS key_b,
-               cosine_sim(a.embedding, b.embedding) AS cosine
-        FROM emb_sql a JOIN emb_sql b
-          ON a.label = b.label AND a.vec_id < b.vec_id
-        WHERE cosine_sim(a.embedding, b.embedding) >= 0.5""")
-    }),
-
-    "q94_stream_dedup" -> ((s, dir) => {
-      // streaming exactly-once dedup: the staged events replayed TWICE
-      // (union of two file streams) through dropDuplicatesWithinWatermark
-      // — every event must come out exactly once, so the oracle is simply
-      // the events table. State is bounded by the watermark; emission is
-      // on first arrival (append mode).
-      val staging = StreamingOps.defaultStagingDir(s, dir)
-      StreamingOps.stageEventsForStreaming(s, dir, staging)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val doubled = StreamingOps.eventsStream(s, staging)
-          .unionAll(StreamingOps.eventsStream(s, staging))
-        val deduped = StreamingOps.dedupWithinWatermark(doubled)
-          .select(col("event_id"), col("event_type"), col("value"))
-        StreamingOps.runToMemory(s, deduped, "q94_stream_dedup",
-          org.apache.spark.sql.streaming.OutputMode.Append())
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }),
-
-    "q95_winsorize" -> ((s, dir) => {
-      // outlier capping (winsorization): clip each value into its
-      // group's [p05, p95]. Exact percentiles as the oracle anchor
-      // (q55); at 100 TB swap percentile_approx (q57) — the clip logic
-      // is unchanged. Bounds broadcast back; corpus clipped map-side.
-      val ev = Tables.events(s, dir)
-      val bounds = ev.groupBy(col("event_type")).agg(
-        expr("percentile(value, 0.05)").as("lo"),
-        expr("percentile(value, 0.95)").as("hi"))
-      ev.join(broadcast(bounds), Seq("event_type"))
-        .select(col("event_id"), col("event_type"),
-          greatest(col("lo"), least(col("hi"), col("value"))).as("value_capped"),
-          (col("value") < col("lo") || col("value") > col("hi")).as("was_clipped"))
-    }),
-
-    "q96_minmax_scale" -> ((s, dir) => {
-      // per-dimension min-max feature scaling of the embedding corpus:
-      // one exploded agg for (dim → min, max), bounds broadcast, rescale
-      // map-side. Exact min/max + IEEE (v-min)/(max-min) → engine-
-      // independent without rounding. Output exploded (vec, dim, scaled)
-      // — reassembly to arrays is q71's ordered-collect pattern.
-      val x = Tables.embeddings(s, dir)
-        .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
-        .select(col("vec_id"), col("dim").cast("long").as("dim"), col("v").cast("double").as("v"))
-      val bounds = x.groupBy(col("dim")).agg(min(col("v")).as("mn"), max(col("v")).as("mx"))
-      x.join(broadcast(bounds), Seq("dim"))
-        .select(col("vec_id"), col("dim"),
-          ((col("v") - col("mn")) / (col("mx") - col("mn"))).as("scaled"))
-        .filter(col("dim") < 8) // keep the dump small; all dims same shape
-    }),
-
-    "q97_trailing_window" -> ((s, dir) => {
-      // trailing 1-hour per-user aggregate: a time-RANGE frame over epoch
-      // seconds (value-bounded, so same-second ties land in the same
-      // frame deterministically in both engines). Partitioned window —
-      // one shuffle on user_id; frame width is the memory knob.
-      val w = Window.partitionBy(col("user_id")).orderBy(col("es"))
-        .rangeBetween(-3599L, 0L)
-      Tables.events(s, dir).filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"),
-          unix_timestamp(col("ts")).as("es"))
-        .select(col("event_id"), col("user_id"), col("ts"),
-          sum(col("value").cast(DecimalType(18, 4))).over(w)
-            .cast("double").as("trail_sum"),
-          count(lit(1)).over(w).cast("long").as("trail_n"))
-    }),
-
-    "q98_gaps" -> ((s, dir) => {
-      // islands-and-gaps WITHOUT a global row window: lead within coarse
-      // id-buckets (partitioned window), bucket boundaries stitched with
-      // the NEXT bucket's min — the summary frame is rows/100k, so its
-      // ordering window is tiny (recurse the bucketing for another 1e5×
-      // if the summary itself ever grows too large).
-      val ids = Tables.events(s, dir).filter(col("event_type") === "click")
-        .select(col("event_id"))
-        .withColumn("bkt", (col("event_id") / 100000L).cast("long"))
-      val w = Window.partitionBy(col("bkt")).orderBy(col("event_id"))
-      val withNext = ids.withColumn("next_id", lead(col("event_id"), 1).over(w))
-      val bmins = ids.groupBy(col("bkt")).agg(min(col("event_id")).as("bmin"))
-      val w2 = Window.orderBy(col("bkt")) // over bucket summaries only
-      val bnext = bmins.withColumn("next_bmin", lead(col("bmin"), 1).over(w2))
-        .select(col("bkt"), col("next_bmin"))
-      withNext.join(broadcast(bnext), Seq("bkt"))
-        .withColumn("succ", coalesce(col("next_id"), col("next_bmin")))
-        .filter(col("succ") - col("event_id") > 1)
-        .select(col("event_id").as("gap_start_after"),
-          (col("succ") - col("event_id") - 1).as("gap_len"))
-    }),
-
-    "q99_group_sample" -> ((s, dir) => {
-      // EXACTLY-k-per-stratum deterministic sample: rank by the portable
-      // arithmetic hash within each stratum, keep rk <= k. Completes the
-      // sampling triad — rate-based (q60), weight-based (q80), and
-      // fixed-size (here); rank<=k compiles to WindowGroupLimit so each
-      // partition forwards at most k rows per stratum.
-      val h = lehmer3(col("doc_id"))
-      val w = Window.partitionBy(col("source")).orderBy(col("h"), col("doc_id"))
-      Tables.documents(s, dir)
-        .withColumn("h", h)
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 3)
-        .select(col("doc_id"), col("source"), col("rk"))
-    }),
-
-    "q100_chisq" -> ((s, dir) => {
-      // chi-square test of independence (event_type × hour-of-day):
-      // observed counts exact, expected = row·col/N in IEEE doubles,
-      // per-cell terms rounded to 9 then decimal-summed (the q91
-      // reduction discipline). Three tiny aggs + one broadcast join —
-      // the contingency table is small by construction.
-      val ev = Tables.events(s, dir)
-        .select(col("event_type"), hour(col("ts")).cast("long").as("hr"))
-      val obs = ev.groupBy(col("event_type"), col("hr")).agg(count(lit(1)).as("o"))
-      val rowT = ev.groupBy(col("event_type")).agg(count(lit(1)).as("rt"))
-      val colT = ev.groupBy(col("hr")).agg(count(lit(1)).as("ct"))
-      val n = ev.agg(count(lit(1)).as("n"))
-      val e = (col("rt") * col("ct")).cast("double") / col("n")
-      obs.join(broadcast(rowT), Seq("event_type"))
-        .join(broadcast(colT), Seq("hr"))
-        .crossJoin(broadcast(n))
-        .withColumn("term", pround((col("o") - e) * (col("o") - e) / e, 9))
-        .agg(sum(col("term").cast(DecimalType(27, 12))).cast("double").as("chi2"),
-          count(lit(1)).as("n_cells"))
-    }),
-
-    "q101_custom_session" -> ((s, dir) => {
-      // gap sessions via the ARBITRARY-state API (flatMapGroupsWithState)
-      // instead of the built-in session_window — same oracle as q19/q78,
-      // so the custom state machine must reproduce the engine's session
-      // semantics exactly (starts, gap-extended ends, decimal sums).
-      StreamingOps.customSessionize(Tables.events(s, dir), gapMinutes = 5)
-    }),
-
-    "q102_mad" -> ((s, dir) => {
-      // robust outliers via median absolute deviation: two exact-
-      // percentile passes (median, then median of |x - median|), both
-      // broadcast back — immune to the very outliers a mean/stddev gate
-      // (q87) gets dragged by. Exact percentile anchors the oracle;
-      // percentile_approx is the documented 100 TB tier (q57).
-      val ev = Tables.events(s, dir)
-      val med = ev.groupBy(col("event_type"))
-        .agg(expr("percentile(value, 0.5)").as("med"))
-      val mad = ev.join(broadcast(med), Seq("event_type"))
-        .groupBy(col("event_type"), col("med"))
-        .agg(expr("percentile(abs(value - med), 0.5)").as("mad"))
-      // 0.6745 ≈ Φ⁻¹(0.75): scales MAD to σ under normality; pround(9)
-      // and gate on the rounded score (the q87 discipline)
-      // mad = 0 (a group where >=50% of values equal the median) would
-      // make every division Infinity/NaN and flag the whole group —
-      // degenerate groups produce no robust verdict instead
-      ev.join(broadcast(mad), Seq("event_type"))
-        .filter(col("mad") > 0)
-        .withColumn("robust_z",
-          pround(lit(0.6745) * (col("value") - col("med")) / col("mad"), 9))
-        .filter(abs(col("robust_z")) > 3.0)
-        .select(col("event_id"), col("event_type"), col("value"), col("robust_z"))
-    }),
-
-    "q103_linreg" -> ((s, dir) => {
-      // least-squares regression + Pearson r per group, entirely from
-      // exact decimal sums (Σx, Σy, Σxy, Σx², Σy²) — one partial+final
-      // agg, then pure IEEE arithmetic on the five exact numbers, so
-      // slope/intercept/r are engine-independent (rounded to 9 like
-      // every derived score). DECIMAL(30,8): y² sums need ~17 integer
-      // digits at sf10 — 22 available.
-      val D30 = DecimalType(30, 8)
-      def esum(c: Column) = sum(c.cast(D30)).cast("double")
-      val x = col("l_quantity"); val y = col("l_extendedprice")
-      val stats = Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"), esum(x).as("sx"), esum(y).as("sy"),
-          esum(x * y).as("sxy"), esum(x * x).as("sxx"), esum(y * y).as("syy"))
-      val nd = col("n").cast("double")
-      val cov = nd * col("sxy") - col("sx") * col("sy")
-      val vx = nd * col("sxx") - col("sx") * col("sx")
-      val vy = nd * col("syy") - col("sy") * col("sy")
-      val slope = cov / vx
-      stats.select(col("l_returnflag"), col("n"),
-        pround(slope, 9).as("slope"),
-        pround((col("sy") - slope * col("sx")) / nd, 9).as("intercept"),
-        pround(cov / sqrt(vx * vy), 9).as("pearson_r"))
-    }),
-
-    "q104_weighted_median" -> ((s, dir) => {
-      // exact weighted median (lower): first value whose cumulative
-      // weight crosses half the group total — per-group windows (never
-      // global), exact decimal cumulative weights so the crossing row is
-      // engine-identical. The statistic a reweighted corpus is
-      // summarized by (plain median ignores the weights q79/q80 assign).
-      val ord = Seq(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
-      val wCum = Window.partitionBy(col("l_returnflag")).orderBy(ord: _*)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAll = Window.partitionBy(col("l_returnflag"))
-      Tables.lineitem(s, dir)
-        .withColumn("cw", sum(col("l_quantity").cast(DecimalType(18, 4))).over(wCum))
-        .withColumn("tw", sum(col("l_quantity").cast(DecimalType(18, 4))).over(wAll))
-        .filter(col("cw") >= col("tw") * 0.5)
-        .groupBy(col("l_returnflag"))
-        .agg(min(col("l_extendedprice")).as("weighted_median"))
-    }),
-
-    "q106_semdedup" -> ((s, dir) => {
-      // SemDeDup (cluster-then-dedup): assign every embedding to its
-      // nearest of 8 seed centroids (broadcast; codegen L2 kernel), then
-      // exact-cosine pairs WITHIN clusters only — the all-pairs scan
-      // becomes per-cluster equi-joins (n²/k). Same bit-exact cosine as
-      // q35, so the whole composition is oracle-matched.
-      val emb = Tables.embeddings(s, dir)
-      val cents = emb.filter(col("vec_id") < 8)
-      Dedup.semanticDedup(emb, col("embedding"), col("vec_id"),
-          cents, col("embedding"), col("vec_id"), minCosine = 0.4)
-        .select(col("cluster"), col("key_a"), col("key_b"), col("cosine"))
-    }),
-
-    "q107_boilerplate_lines" -> ((s, dir) => {
-      // cross-document boilerplate removal: 5-word lines (q72's
-      // segmentation) occurring in ≥ 3 DISTINCT docs are dropped from
-      // EVERY doc (q72 keeps a first occurrence; this keeps none), then
-      // docs reassemble in line order. The boilerplate set is tiny →
-      // broadcast anti-join; the corpus filters map-side.
-      val ws = split(col("text"), " ")
-      val np = ceil(size(ws) / lit(5.0)).cast("int")
-      val lines = Tables.documents(s, dir)
-        .select(col("doc_id"), ws.as("ws"), np.as("np"))
-        .select(col("doc_id"), col("ws"),
-          explode(sequence(lit(0), col("np") - 1)).as("line_no"))
-        .select(col("doc_id").as("key"), col("line_no").cast("long").as("line_no"),
-          array_join(slice(col("ws"), col("line_no") * 5 + 1, lit(5)), " ").as("line"))
-      Dedup.reassembleLines(Dedup.dropCommonLines(lines, minDocs = 3), " ")
-        .select(col("key").as("doc_id"), col("text"), col("n_lines_kept"))
-    }),
-
-    "q108_quality_classifier" -> ((s, dir) => {
-      // model-based quality filter: logistic head over the codegen'd
-      // text signals (fasttext-filter plumbing with a deterministic
-      // linear model). One map-side pass; the decision gates on the
-      // ROUNDED score so exp() ulp drift can't flip boundary docs.
-      val score = TextAnalysis.classifierScore(col("text"),
-        wTokens = 1.2, wStop = 2.0, wAlpha = 1.5, wPunct = -3.0, bias = -1.0)
-      Tables.documents(s, dir)
-        .select(col("doc_id"), score.as("score"))
-        .withColumn("keep", col("score") >= 0.5)
-    }),
-
-    "q109_split_assign" -> ((s, dir) => {
-      // deterministic train/val/test split (80/10/10): the portable
-      // Lehmer hash → uniform u, thresholds assign the split. Map-side
-      // only — no RNG state, so assignment is reproducible across
-      // engines, retries and re-runs (the property `df.randomSplit`
-      // does NOT give you), and a doc never migrates between splits as
-      // the corpus grows.
-      val u = (lehmer3(col("doc_id")).cast("double") + 0.5) / 2147483647.0
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          when(u < 0.8, "train").when(u < 0.9, "val").otherwise("test").as("split"))
-    }),
-
-    "q110_nucleus_select" -> ((s, dir) => {
-      // per-source nucleus (top-p) selection: rank docs by quality
-      // within each source, keep the smallest prefix holding p=50% of
-      // the source's quality mass (top-p sampling applied to data
-      // mixing: spend a per-domain quality budget, drop the tail).
-      // Windows are per-source — never global — and cumulative mass
-      // uses exact decimal sums so the crossing row is engine-identical
-      // (q104 discipline).
-      val qDec = TextAnalysis.qualityScore(col("text")).cast(DecimalType(27, 12))
-      val ord = Seq(col("q").desc, col("doc_id"))
-      val wCum = Window.partitionBy(col("source")).orderBy(ord: _*)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAll = Window.partitionBy(col("source"))
-      Tables.documents(s, dir)
-        .withColumn("q", qDec)
-        .withColumn("cq", sum(col("q")).over(wCum))
-        .withColumn("tq", sum(col("q")).over(wAll))
-        // keep while the mass STRICTLY BEFORE this row is under p·total:
-        // the crossing row is included (top-p semantics)
-        .filter(col("cq") - col("q") < col("tq") * lit(new java.math.BigDecimal("0.5")))
-        .select(col("doc_id"), col("source"), col("q").cast("double").as("quality"))
-    }),
-
-    "q111_markov" -> ((s, dir) => {
-      // first-order Markov transition matrix over per-user event
-      // sequences: lead within (user, ts, event_id) order — partitioned
-      // windows only — then transition counts and row-normalized
-      // probabilities (round 9: c/total division drift). The sequence-
-      // model statistic behind session simulation and anomaly scoring.
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val trans = Tables.events(s, dir)
-        .select(col("user_id"), col("event_type").as("src"),
-          lead(col("event_type"), 1).over(w).as("dst"))
-        .filter(col("dst").isNotNull)
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("c"))
-      val totals = trans.groupBy(col("src")).agg(sum(col("c")).as("total"))
-      trans.join(totals, Seq("src"))
-        .select(col("src"), col("dst"), col("c"),
-          pround(col("c").cast("double") / col("total"), 9).as("p"))
-    }),
-
-    "q112_pagerank" -> ((s, dir) => {
-      // weighted PageRank (3 damped rounds) over the page-transition
-      // graph: nodes = props.k pages, edges = consecutive visits per
-      // user with multi-edge counts as weights. Each round is one
-      // ranks⋈edges shuffle + one exact-decimal contribution agg,
-      // lineage-truncated (the CC discipline) — rounds are a fixed
-      // constant, never O(diameter).
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val pages = Tables.events(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("page"))
-      val edges = pages
-        .select(col("user_id"), col("page").as("src"),
-          lead(col("page"), 1).over(w).as("dst"))
-        .filter(col("dst").isNotNull)
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-      Graph.pageRank(edges, iters = 3, damping = 0.85)
-    }),
-
-    "q113_retention" -> ((s, dir) => {
-      // cohort retention: users grouped by first-seen week, distinct
-      // active users per (cohort, week offset). Two aggs + one join —
-      // the cohort frame is per-user (small relative to events) and
-      // rides the join keyed on user_id; no window at all.
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), to_date(col("ts")).as("d"))
-      val cohorts = ev.groupBy(col("user_id"))
-        .agg(date_trunc("week", min(col("d"))).cast("date").as("cohort_week"))
-      ev.join(cohorts, Seq("user_id"))
-        .select(col("user_id"), col("cohort_week"),
-          floor(datediff(col("d"), col("cohort_week")) / 7).as("week_offset"))
-        .groupBy(col("cohort_week"), col("week_offset"))
-        .agg(countDistinct(col("user_id")).as("n_users"))
-    }),
-
-    "q114_stream_enrich" -> ((s, dir) => {
-      // stream-static enrichment: the events STREAM joins a broadcast
-      // static dimension (customer→nation) inside a real streaming
-      // query — the canonical "enrich facts with dims" pattern; the dim
-      // side is batch, rebroadcast per micro-batch, no stream state
-      // beyond the running agg. Oracle = the batch twin.
-      val staging = StreamingOps.defaultStagingDir(s, dir)
-      StreamingOps.stageEventsForStreaming(s, dir, staging)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val stream = StreamingOps.eventsStream(s, staging)
-        val dims = Tables.customer(s, dir)
-          .join(Tables.nation(s, dir), col("c_nationkey") === col("n_nationkey"))
-          .select(col("c_custkey").as("user_id"), col("n_name"))
-        val agg = StreamingOps.enrichedTotals(stream, dims)
-        StreamingOps.runToMemory(s, agg, "q114_stream_enrich")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }),
-
-    "q118_dup_ngram_fraction" -> ((s, dir) => {
-      // Gopher's in-document repetition metric: fraction of 3-gram
-      // positions whose shingle occurs more than once in the SAME doc
-      // (q63's top-bigram ratio catches one dominant phrase; this
-      // catches diffuse copy-paste). Shingling is the codegen kernel
-      // (non-distinct -> every position counts); two map-combinable
-      // aggs on (doc, shingle), fraction gated on the rounded value.
-      val sh = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          explode(graft.functions.Shingles.shingles(col("text"), 3)).as("g"))
-      val perShingle = sh.groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
-      perShingle.groupBy(col("doc_id"))
-        .agg(sum(col("c")).as("n_pos"),
-          sum(when(col("c") >= 2, col("c")).otherwise(lit(0L))).as("n_dup_pos"))
-        .select(col("doc_id"), col("n_pos"), col("n_dup_pos"),
-          pround(col("n_dup_pos").cast("double") / col("n_pos"), 9).as("dup_frac"))
-    }),
-
-    "q119_curation_funnel" -> ((s, dir) => {
-      // curation-gate funnel: survivors of each successive filter stage
-      // (length → quality → PII-free → Gopher alpha rule) per source, in
-      // ONE scan with conditional aggs — the observability query a 100 TB
-      // curation run reports after every stage without re-scanning.
-      // PII planted on every 10th doc (q74's pattern — the synthetic
-      // corpus has none) so the PII gate visibly drops rows
-      val ft = when(col("doc_id") % 10 === 0,
-        concat(col("text"), lit(" contact user"), col("doc_id"), lit("@example.com")))
-        .otherwise(col("text"))
-      val wc = TextAnalysis.wsTokenCount(col("ft"))
-      val q = TextAnalysis.qualityScore(col("ft"))
-      val pii = TextAnalysis.piiCount(col("ft"), TextAnalysis.emailPattern) +
-        TextAnalysis.piiCount(col("ft"), TextAnalysis.ipv4Pattern)
-      val alpha = TextAnalysis.alphaWordRatio(col("ft"))
-      val s1 = wc >= lit(10)
-      val s2 = s1 && q >= lit(0.05)
-      val s3 = s2 && pii === lit(0)
-      val s4 = s3 && alpha >= lit(0.8)
-      Tables.documents(s, dir)
-        .withColumn("ft", ft)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_total"),
-          sum(s1.cast("long")).as("n_len"),
-          sum(s2.cast("long")).as("n_quality"),
-          sum(s3.cast("long")).as("n_pii_free"),
-          sum(s4.cast("long")).as("n_final"))
-    }),
-
-    "q138_audio_windows" -> ((s, dir) => {
-      // audio-window framing over opaque binary payloads (PCM16 mono
-      // stand-in): window 400 / hop 160 samples, trailing partials
-      // dropped — the STFT front-end plumbing, arithmetic like q69 so
-      // the typed mapPartitions explode is oracle-able.
-      val media = Multimodal.withBinaryPayload(Tables.documents(s, dir), "text")
-      Multimodal.sampleAudioWindows(media).toDF()
-    }),
-
-    "q156_pareto_frontier" -> ((s, dir) => {
-      // Pareto frontier (skyline): docs not strictly dominated on
-      // (quality, word count) — multi-objective corpus selection
-      // without a scalarized score. Sweep-line, not an O(n²)
-      // self-join: per-quality-level max wc, EXCLUSIVE prefix max over
-      // levels (two-pass CumSum discipline — no global window), then
-      // one equi-join back; dominated iff some strictly-better-quality
-      // level reached a strictly higher wc.
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id"), TextAnalysis.wsTokenCount(col("text")).as("wc"),
-          TextAnalysis.qualityScore(col("text")).as("q"))
-      val levels = d.groupBy(col("q")).agg(max(col("wc")).as("lvl_max"))
-      val lv = CumSum.withPrefixMax(levels, Seq(col("q").desc), col("lvl_max"), "prior_max")
-      d.join(lv.select(col("q"), col("prior_max")), Seq("q"))
-        .filter(col("prior_max").isNull || col("prior_max") <= col("wc"))
-        .select(col("doc_id"), pround(col("q"), 9).as("quality"), col("wc"))
-    }),
-
-    "q154_dedup_provenance" -> ((s, dir) => {
-      // dedup audit trail: for every DROPPED doc, which survivor
-      // absorbed it — (absorbed, survivor) from the q52 component
-      // labels (survivor = component min). The provenance record a
-      // compliant dedup pipeline keeps (why is my page gone → absorbed
-      // by which canonical doc).
-      val pairs = Dedup.ngramJaccardPairs(
-        Tables.documents(s, dir).filter(col("doc_id") < 100), col("text"), col("doc_id"),
-        k = 2, minJaccard = 0.08)
-      Dedup.connectedComponents(pairs)
-        .filter(col("key") =!= col("component"))
-        .select(col("key").as("absorbed"), col("component").as("survivor"))
-    }),
-
-    "q155_quantile_bands" -> ((s, dir) => {
-      // weekly latency-band monitoring: exact p50/p95 of value per
-      // (week, event_type) — q55's exact-percentile anchor applied per
-      // time bucket, the SLO trend surface; q57's sketch is the
-      // unbounded-cardinality tier as ever.
-      Tables.events(s, dir)
-        .groupBy(date_trunc("week", col("ts")).cast("date").as("week"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          pround(percentile(col("value"), lit(0.5)), 9).as("p50"),
-          pround(percentile(col("value"), lit(0.95)), 9).as("p95"))
-    }),
-
-    "q153_skew_report" -> ((s, dir) => {
-      // join-skew diagnostics: per-key frequency stats of the join
-      // column (top-10 hottest keys + their share and the max/avg skew
-      // factor) — the report that decides between plain join, AQE
-      // skewJoin and Skew.adaptiveSalts BEFORE a 100 TB shuffle is
-      // paid. Two tiny aggs over one keyed count.
-      val counts = Dedup.cacheScoped(Tables.lineitem(s, dir)
-        .groupBy(col("l_partkey")).agg(count(lit(1)).as("c")))
-      val tot = counts.agg(sum(col("c")).as("total"), count(lit(1)).as("n_keys"),
-        max(col("c")).as("max_c"))
-      counts.crossJoin(broadcast(tot))
-        .orderBy(desc("c"), col("l_partkey"))
-        .limit(10)
-        .select(col("l_partkey"), col("c"),
-          pround(col("c").cast("double") / col("total"), 9).as("share"),
-          // cast BEFORE multiplying: max_c * n_keys in long arithmetic
-          // overflows at production cardinalities (Spark wraps silently,
-          // DuckDB raises — both wrong); double * double does not
-          pround(col("max_c").cast("double") * col("n_keys").cast("double")
-              / col("total").cast("double"), 9)
-            .as("skew_factor"))
-    }),
-
-    "q151_stream_topk" -> ((s, dir) => {
-      // streaming leaderboard: running page-visit counts under real
-      // micro-batch replay, top-10 in Complete mode (sort+limit is
-      // legal there — the continuously-updated "trending now" surface).
-      // Oracle = the batch count twin.
-      val staging = StreamingOps.defaultStagingDir(s, dir)
-      StreamingOps.stageEventsForStreaming(s, dir, staging)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val counts = StreamingOps.eventsStream(s, staging)
-          .select(get_json_object(col("props"), "$.k").cast("long").as("page"))
-          .groupBy(col("page")).agg(count(lit(1)).as("n"))
-          .orderBy(desc("n"), col("page")).limit(10)
-        StreamingOps.runToMemory(s, counts, "q151_stream_topk")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }),
-
-    "q152_rate_spikes" -> ((s, dir) => {
-      // operational anomaly detection: per-hour event counts, z-score
-      // against the global hourly mean/variance from exact decimal
-      // sums (q87's discipline applied to the rate series), flag
-      // |z| > 2.5 hours — the pipeline-health query that catches
-      // ingestion spikes and stalls.
-      val hours = Tables.events(s, dir)
-        .groupBy(date_trunc("hour", col("ts")).as("hour"))
-        .agg(count(lit(1)).as("n"))
-      val stats = hours.agg(
-        sum(col("n").cast(DecimalType(27, 12))).cast("double").as("s1"),
-        sum((col("n") * col("n")).cast(DecimalType(27, 12))).cast("double").as("s2"),
-        count(lit(1)).as("k"))
-      val mean = col("s1") / col("k")
-      val variance = (col("s2") - col("s1") * col("s1") / col("k")) / (col("k") - 1)
-      hours.crossJoin(broadcast(stats))
-        .withColumn("z", pround((col("n") - mean) / sqrt(variance), 9))
-        .filter(abs(col("z")) > 2.5)
-        .select(col("hour"), col("n"), col("z"))
-    }),
-
-    "q148_covisitation" -> ((s, dir) => {
-      // session co-visitation matrix (the "users who viewed k also
-      // viewed k'" statistic): gap-sessionize (30 min, the q19/q98
-      // bucketed discipline applied per user), DISTINCT pages per
-      // session, pairs within session via self-join on the session key
-      // — blocking on session bounds the pair blow-up to
-      // Σ |session|², never |corpus|². Top-30 pairs.
-      sessionPagePairs(sessionPageSets(s, dir))
-        .groupBy(col("page_a"), col("page_b")).agg(count(lit(1)).as("n_sessions"))
-        .orderBy(desc("n_sessions"), col("page_a"), col("page_b"))
-        .limit(30)
-    }),
-
-    "q149_time_decay" -> ((s, dir) => {
-      // time-decayed user activity (freshness-aware scoring): weight =
-      // exp(-age_days/30) from the corpus max ts; per-event weights
-      // rounded to 9 then exact-decimal summed (q91 discipline) so the
-      // order-free reduction is engine-exact. The recency prior of
-      // freshness-aware corpus/feed selection.
-      val ev = Tables.events(s, dir)
-      val mx = ev.agg(max(unix_timestamp(col("ts"))).as("mx"))
-      ev.crossJoin(broadcast(mx))
-        .withColumn("wgt", pround(
-          exp((unix_timestamp(col("ts")) - col("mx")).cast("double") / (30.0 * 86400.0)), 9))
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          pround(sum(col("wgt").cast(DecimalType(18, 9))).cast("double"), 9).as("decayed_score"))
-    }),
-
-    "q150_calibration" -> ((s, dir) => {
-      // classifier calibration report: decile-bucket the q108 scores,
-      // per-bucket mean score vs observed positive rate (lang = 'en' as
-      // the stand-in label) — the model-evaluation query behind every
-      // quality-filter deployment. Floor-bucketing is deterministic
-      // (no ntile ties); one scan + one tiny agg.
-      val score = TextAnalysis.classifierScore(col("text"),
-        wTokens = 1.2, wStop = 2.0, wAlpha = 1.5, wPunct = -3.0, bias = -1.0)
-      Tables.documents(s, dir)
-        .select(col("doc_id"), score.as("score"),
-          (col("lang") === "en").cast("long").as("y"))
-        .withColumn("bucket", least(floor(col("score") * 10), lit(9L)).cast("long"))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n"),
-          pround(sum(col("score").cast(DecimalType(18, 9))).cast("double") / count(lit(1)), 9)
-            .as("mean_score"),
-          pround(sum(col("y")).cast("double") / count(lit(1)), 9).as("pos_rate"))
-    }),
-
-    "q146_skipgram_pmi" -> ((s, dir) => {
-      // word2vec-style windowed co-occurrence PMI (window 3, directed):
-      // q86's adjacent-bigram statistic widened via THREE lead columns
-      // unioned — still no self-join, one tokenize pass. The
-      // co-occurrence matrix embeddings factorize.
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      val tok = Tables.documents(s, dir)
-        .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "word")))
-        .filter(length(col("word")) > 0)
-      val led = tok.select(col("doc_id"), col("word"),
-        lead(col("word"), 1).over(w).as("n1"),
-        lead(col("word"), 2).over(w).as("n2"),
-        lead(col("word"), 3).over(w).as("n3"))
-      val pairs = (1 to 3).map(i =>
-          led.filter(col(s"n$i").isNotNull)
-            .select(col("word"), col(s"n$i").as("ctx")))
-        .reduce(_ unionAll _)
-      val cAB = Dedup.cacheScoped(
-        pairs.groupBy(col("word"), col("ctx")).agg(count(lit(1)).as("c_ab")))
-      val cA = cAB.groupBy(col("word")).agg(sum(col("c_ab")).as("c_a"))
-      val cB = cAB.groupBy(col("ctx").as("cw")).agg(sum(col("c_ab")).as("c_b"))
-      val n = cAB.agg(sum(col("c_ab")).as("n_pairs"))
-      cAB.join(cA, Seq("word"))
-        .join(cB, cAB("ctx") === cB("cw")).drop("cw")
-        .crossJoin(broadcast(n))
-        .filter(col("c_ab") >= 8)
-        .withColumn("pmi",
-          pround(log((col("c_ab") * col("n_pairs")).cast("double") / (col("c_a") * col("c_b"))), 9))
-        .orderBy(desc("pmi"), col("word"), col("ctx"))
-        .limit(50)
-        .select(col("word"), col("ctx"), col("c_ab"), col("pmi"))
-    }),
-
-    "q147_tfidf_pairs" -> ((s, dir) => {
-      // pairwise document similarity over SPARSE tf-idf vectors — the
-      // classic IR shape: vectors live as (doc, term, weight) rows, the
-      // dot product is a JOIN on the shared term (a pair with no common
-      // term never materializes — the sparse analog of LSH blocking),
-      // norms broadcast back, exact-decimal dot reduction. Top-20 pairs.
-      //
-      // TERMS ARE 3-WORD SHINGLES with a df ≤ N/20 prune, and both
-      // choices are the 100 TB discipline, not a convenience: a
-      // high-df term joins df² candidate pairs, so word terms on this
-      // tiny-vocabulary corpus (31 words, every one in ~every doc)
-      // explode quadratically — measured 160 s at sf0.1 vs 2.5 s with
-      // shingle terms (vocab 27k, max df 25; SCALE.md "q147"). The
-      // prune is the standard stop-term cut; near-ubiquitous terms
-      // carry ~zero idf weight anyway.
-      val maxDfFrac = 0.05
-      // r20: a documentsFanned input was TRIED here (the q157/q314 fan-out
-      // discipline) and measured WORSE (solo 2.4 → 4.0 s at 32c, paired
-      // runs) — the extra exchange re-layouts the cacheScoped tf frame and
-      // the downstream posting groupBy loses its reused partitioning.
-      // Deliberately left on the single-task scan; the pair explode (the
-      // real cost) is already fanned below.
-      val tok = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          explode(graft.functions.Shingles.shingles(col("text"), 3)).as("w"))
-      val tf = Dedup.cacheScoped(tok.groupBy(col("doc_id"), col("w"))
-        .agg(count(lit(1)).as("tf")))
-      val dfq = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-      val nDocs = Tables.documents(s, dir).agg(countDistinct(col("doc_id")).as("n_docs"))
-      // the df prune is BOTH fractional and absolute: the fractional
-      // cut drops near-ubiquitous (zero-idf) terms; the ABSOLUTE cap
-      // is the 100 TB guard — with it, candidate pairs are bounded by
-      // cap·nnz (LINEAR in corpus size), where a fractional cap alone
-      // leaves Σdf² growing quadratically as every term's df scales
-      // with the corpus (measured in the r11 ×10 blow-up run:
-      // SCALE_BLOWUP.json / SCALE.md "q147"). 250 > every observed df
-      // at the tested SFs, so results are unchanged below sf≈0.5.
-      val maxDfAbs = 250
-      val tfidf = Dedup.cacheScoped(tf.join(dfq, Seq("w")).crossJoin(broadcast(nDocs))
-        .filter(col("df") <= least(col("n_docs") * maxDfFrac, lit(maxDfAbs)))
-        .select(col("doc_id"), col("w"),
-          pround(col("tf") * log(col("n_docs").cast("double") / col("df")), 9).as("wt")))
-      val norms = tfidf.groupBy(col("doc_id"))
-        .agg(sqrt(sum((col("wt") * col("wt")).cast(DecimalType(27, 12))).cast("double")).as("norm"))
-      // r19 (guide §2.4): pair generation WITHOUT the w self-join — per
-      // term, collect the ≤ maxDfAbs (doc, wt) postings (bounded by the
-      // df cap, so the in-row array can never exceed 250 entries at ANY
-      // corpus size) and explode the C(df,2) ordered pairs in-row (the
-      // q157 idiom). tfidf is already w-partitioned from the df join, so
-      // the posting-list groupBy adds NO exchange where the old a⋈b
-      // join re-shuffled both branches; per-term products and the
-      // DECIMAL(27,12) casts are unchanged term-for-term, so the exact
-      // dot sums are bit-identical.
-      // The posting-array frame is REPARTITIONED before the pair
-      // explode (the documentsFanned CPU-fan-out discipline): the
-      // C(df,2) pair expansion is the query's heavy per-row work, and
-      // without the explicit fan-out it inherits the cached frame's
-      // AQE-coalesced (tiny) layout and serializes on a couple of
-      // cores — measured 7.0 s solo vs 2.7 s fanned at sf0.1. The
-      // exchange carries only the ≤ maxDfAbs-entry arrays (bytes ≈ the
-      // old join's ONE probe side), and the explode then runs at full
-      // width.
-      val dots = tfidf
-        .groupBy(col("w"))
-        .agg(sort_array(collect_list(struct(col("doc_id"), col("wt")))).as("ps"))
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(explode(flatten(transform(col("ps"), (a, i) =>
-          transform(slice(col("ps"), i + lit(2), size(col("ps"))), b =>
-            struct(a.getField("doc_id").as("doc_a"),
-              b.getField("doc_id").as("doc_b"),
-              (a.getField("wt") * b.getField("wt")).as("prod")))))).as("p"))
-        .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-        .agg(sum(col("p.prod").cast(DecimalType(27, 12))).cast("double").as("dot"))
-      dots.join(broadcast(norms.select(col("doc_id").as("doc_a"), col("norm").as("norm_a"))), Seq("doc_a"))
-        .join(broadcast(norms.select(col("doc_id").as("doc_b"), col("norm").as("norm_b"))), Seq("doc_b"))
-        .select(col("doc_a"), col("doc_b"),
-          pround(col("dot") / (col("norm_a") * col("norm_b")), 9).as("cosine"))
-        .orderBy(desc("cosine"), col("doc_a"), col("doc_b"))
-        .limit(20)
-    }),
-
-    "q144_domain_coherence" -> ((s, dir) => {
-      // domain-coherence outliers: each doc's embedding vs its SOURCE's
-      // mean embedding (q82 centroid machinery per source, exact
-      // decimal means rounded to 9), flag docs whose cosine to their
-      // own domain centroid is lowest — the "does this doc belong to
-      // its domain" signal behind SemDeDup-adjacent curation. Centroids
-      // are per-source (tiny) → broadcast back; cosine is the bit-exact
-      // q35 kernel over the rounded centroid vector.
-      val emb = Tables.embeddings(s, dir)
-        .join(Tables.documents(s, dir).select(col("doc_id").as("vec_id"), col("source")),
-          Seq("vec_id"))
-      val cents = emb
-        .select(col("source"), posexplode(col("embedding")).as(Seq("dim", "v")))
-        .groupBy(col("source"), col("dim"))
-        .agg(pround(sum(col("v").cast("double").cast(DecimalType(27, 12)))
-          .cast("double") / count(lit(1)), 9).as("cv"))
-        .groupBy(col("source"))
-        .agg(array_sort(collect_list(struct(col("dim"), col("cv")))).as("pairs"))
-        .select(col("source"),
-          transform(col("pairs"), p => p.getField("cv").cast("float")).as("centroid"))
-      val w = Window.partitionBy(col("source")).orderBy(col("cos"), col("vec_id"))
-      emb.join(broadcast(cents), Seq("source"))
-        .withColumn("cos", Vectors.cosine(col("embedding"), col("centroid")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("source"), col("vec_id"), col("cos"), col("rank"))
-    }),
-
-    "q145_dataset_card" -> ((s, dir) => {
-      // the dataset card: corpus-level release stats in ONE scan of
-      // conditional/exact aggregates — docs, tokens, chars, language
-      // shares, quality quantiles, exact-dup rate. What ships in the
-      // README of a published corpus; every component reuses an
-      // oracle-proven formula (q21/q26/q30/q55 parity).
-      val wc = TextAnalysis.wsTokenCount(col("text"))
-      val q = TextAnalysis.qualityScore(col("text"))
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("text"), wc.as("wc"), q.as("q"),
-          md5(col("text")).as("h"))
-      val dups = d.groupBy(col("h")).agg(count(lit(1)).as("c"))
-        .agg(sum(col("c") - 1).as("n_exact_dups"))
-      d.agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("wc").cast("long")).as("n_tokens"),
-        sum(length(col("text")).cast("long")).as("n_chars"),
-        countDistinct(col("lang")).as("n_langs"),
-        sum((col("lang") === "en").cast("long")).as("n_en"),
-        pround(percentile(col("q"), lit(0.5)), 9).as("q_median"),
-        pround(min(col("q")), 9).as("q_min"),
-        pround(max(col("q")), 9).as("q_max"))
-        .crossJoin(broadcast(dups))
-    }),
-
-    "q143_linreg_gd" -> ((s, dir) => {
-      // model TRAINING as an iterative corpus loop: 3 full-batch
-      // gradient-descent steps of linear least squares (predict quality
-      // from cheap text features). One scan per step; parameters ride
-      // the plan as literals and the only driver traffic is the
-      // k+1-double gradient row per step. Squared-loss gradients are
-      // pure arithmetic (no transcendentals) + exact-decimal reduction
-      // → the whole trajectory is engine-exact and the oracle unrolls
-      // it (the q112 discipline applied to optimization).
-      val wc = TextAnalysis.wsTokenCount(col("text"))
-      Optim.linregGD(
-        Tables.documents(s, dir),
-        features = Seq(least(wc.cast("double") / 100.0, lit(1.0)),
-          TextAnalysis.alphaRatio(col("text"))),
-        y = TextAnalysis.qualityScore(col("text")),
-        iters = 3, lr = 0.5)
-    }),
-
-    "q141_lexicon_rate" -> ((s, dir) => {
-      // lexicon-driven flagged-term rate (the C4 blocklist-filter shape
-      // with a neutral placeholder lexicon): rate = flagged tokens /
-      // total tokens, gate at 20%. The lexicon broadcasts (word lists
-      // are tiny); the corpus tokenizes once map-side and shuffles only
-      // per-doc counts.
-      import s.implicits._
-      val lexicon = Seq("the", "of", "and", "data").toDF("w")
-      val tok = Tables.documents(s, dir)
-        .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("w"))
-        .filter(length(col("w")) > 0)
-      val totals = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("n_tokens"))
-      val flagged = tok.join(broadcast(lexicon), Seq("w"))
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_flagged"))
-      totals.join(flagged, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_tokens"),
-          coalesce(col("n_flagged"), lit(0L)).as("n_flagged"),
-          pround(coalesce(col("n_flagged"), lit(0L)).cast("double") / col("n_tokens"), 9)
-            .as("flag_rate"))
-        .withColumn("keep", col("flag_rate") < 0.2)
-    }),
-
-    "q142_snapshot_diff" -> ((s, dir) => {
-      // corpus snapshot diff: added / removed / changed / unchanged
-      // between two versions (yesterday = first 400 docs with every
-      // (doc_id % 100 == 50) doc edited — synthesized deterministically,
-      // the q74 planted-input pattern). Full-outer join on the key,
-      // change detection on content hash; the report every dataset
-      // release pipeline prints.
-      val today = Tables.documents(s, dir).select(col("doc_id"), md5(col("text")).as("h_t"))
-      val yesterday = Tables.documents(s, dir)
-        .filter(col("doc_id") < 400)
-        .select(col("doc_id"),
-          md5(when(col("doc_id") % 100 === 50, concat(col("text"), lit(" edited")))
-            .otherwise(col("text"))).as("h_y"))
-      today.join(yesterday, Seq("doc_id"), "full_outer")
-        .select(when(col("h_y").isNull, "added")
-          .when(col("h_t").isNull, "removed")
-          .when(col("h_t") =!= col("h_y"), "changed")
-          .otherwise("unchanged").as("status"))
-        .groupBy(col("status")).agg(count(lit(1)).as("n"))
-    }),
-
-    "q139_bigram_ppl" -> ((s, dir) => {
-      // in-corpus bigram-LM scoring (the CCNet/KenLM perplexity filter
-      // with the LM trained on the corpus itself): p(b|a) add-half
-      // smoothed from exact bigram/unigram counts, per-doc mean log-prob
-      // with the rounded-term + exact-decimal-mean discipline (q91).
-      // Docs scoring far below the corpus mean read as gibberish; far
-      // above as boilerplate. One tokenize pass builds both the model
-      // and the per-doc stream (cached); scoring is a join on the
-      // bigram key.
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      val bi = Dedup.cacheScoped(Tables.documents(s, dir)
-        .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "word")))
-        .filter(length(col("word")) > 0)
-        .select(col("doc_id"), col("word"), lead(col("word"), 1).over(w).as("next"))
-        .filter(col("next").isNotNull))
-      val cAB = bi.groupBy(col("word"), col("next")).agg(count(lit(1)).as("c_ab"))
-      val cA = cAB.groupBy(col("word")).agg(sum(col("c_ab")).as("c_a"))
-      val v = cAB.agg(countDistinct(col("next")).as("vocab"))
-      val model = cAB.join(cA, Seq("word")).crossJoin(broadcast(v))
-        .select(col("word"), col("next"),
-          pround(log((col("c_ab") + 0.5) /
-            (col("c_a").cast("double") + lit(0.5) * col("vocab"))), 9).as("lp"))
-      bi.join(model, Seq("word", "next"))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_bigrams"),
-          // pround(6), not the house pround(9): the decimal sum is wide
-          // (38,12) and engines' decimal→double conversions can differ
-          // by 1 ulp, which a 9-digit boundary can expose (observed on
-          // ONE row at sf0.1); at 6 digits the boundary window is 1000×
-          // narrower than the conversion ulp everywhere in range
-          pround(sum(col("lp").cast(DecimalType(27, 12))).cast("double") / count(lit(1)), 6)
-            .as("mean_logprob"))
-    }),
-
-    "q140_readability" -> ((s, dir) => {
-      // Flesch reading ease from regex-countable proxies: sentences =
-      // [.!?]+ runs (min 1), syllables = vowel groups per word (the
-      // standard approximation). Pure codegen regexp_count arithmetic;
-      // score rounded to 9. The readability gate of classic text
-      // curation stacks.
-      val words = TextAnalysis.wsTokenCount(col("text")).cast("double")
-      val sentences = greatest(size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0))),
-        lit(1)).cast("double")
-      val syllables = greatest(size(regexp_extract_all(lower(col("text")),
-        lit("[aeiouy]+"), lit(0))), lit(1)).cast("double")
-      Tables.documents(s, dir)
-        .filter(TextAnalysis.wsTokenCount(col("text")) > 0)
-        .select(col("doc_id"),
-          words.cast("long").as("n_words"),
-          sentences.cast("long").as("n_sentences"),
-          syllables.cast("long").as("n_syllables"),
-          pround(lit(206.835) - lit(1.015) * (words / sentences)
-            - lit(84.6) * (syllables / words), 9).as("flesch"))
-    }),
-
-    "q137_neardup_corpus" -> ((s, dir) => {
-      // the one-call near-dup dedup composition: LSH candidates →
-      // transitive groups → keep-best survivor (per-stage parity is
-      // q32/q52/q70; MinHash internals make the composition rows-only,
-      // with the planted-chain CurationSpec pinning semantics).
-      Dedup.nearDupCorpus(Tables.documents(s, dir), col("text"), col("doc_id"),
-          TextAnalysis.qualityScore(col("text")))
-        .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
-    }),
-
-    "q136_sql_shingles" -> ((s, dir) => {
-      // the shingle KERNEL from SQL text: distinct_shingles() is the
-      // same codegen'd Catalyst expression the Scala DSL plans (q93's
-      // argument extended to the text kernels) — a SQL-first user runs
-      // the dedup preprocessing without touching the DSL.
-      GraftExtensions.register(s)
-      Tables.documents(s, dir).createOrReplaceTempView("documents_q136")
-      s.sql("""SELECT doc_id,
-        |  size(distinct_shingles(text, 3)) AS n_shingles,
-        |  size(shingles(text, 3)) AS n_positions
-        |FROM documents_q136""".stripMargin)
-    }),
-
-    "q132_source_overlap" -> ((s, dir) => {
-      // cross-source contamination matrix: |shingles(a) ∩ shingles(b)| /
-      // |shingles(a)| for every source pair — q73's decontamination
-      // generalized to all-pairs provenance diagnostics. Distinct
-      // (source, shingle) first (the blocking key is the shingle, so
-      // hot boilerplate shingles are AQE skew territory, same as LSH
-      // buckets); per-source totals broadcast back.
-      val sh = Tables.documents(s, dir)
-        .select(col("source"),
-          explode(graft.functions.Shingles.shingles(col("text"), 3, distinct = true)).as("g"))
-        .distinct()
-      val totals = sh.groupBy(col("source")).agg(count(lit(1)).as("n_a"))
-      val a = sh.select(col("source").as("src_a"), col("g"))
-      val b = sh.select(col("source").as("src_b"), col("g"))
-      a.join(b, Seq("g")).filter(col("src_a") < col("src_b"))
-        .groupBy(col("src_a"), col("src_b")).agg(count(lit(1)).as("n_shared"))
-        .join(broadcast(totals.select(col("source").as("src_a"), col("n_a"))), Seq("src_a"))
-        .filter(col("n_shared") >= 10)
-        .select(col("src_a"), col("src_b"), col("n_shared"), col("n_a"),
-          pround(col("n_shared").cast("double") / col("n_a"), 9).as("overlap_ratio"))
-    }),
-
-    "q133_kwic" -> ((s, dir) => {
-      // keyword-in-context: every occurrence of a term with ±3 words of
-      // context — the corpus-inspection query behind "show me how this
-      // token is used". Tokenize once (posexplode), match, slice the
-      // window from the token array; all codegen, no UDF.
-      val term = "data"
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      d.select(col("doc_id"), col("ws"), posexplode(col("ws")).as(Seq("pos", "w")))
-        .filter(col("w") === term)
-        .select(col("doc_id"), col("pos").cast("long").as("pos"),
-          array_join(slice(col("ws"), greatest(col("pos") - 2, lit(1)),
-            least(col("pos") + 4, size(col("ws"))) - greatest(col("pos") - 2, lit(1)) + 1),
-            " ").as("context"))
-    }),
-
-    "q134_compression_ratio" -> ((s, dir) => {
-      // compression-ratio quality signal (the low-information-content
-      // proxy: highly compressible ≈ repetitive/boilerplate): deflate
-      // level 6, ratio = compressed/raw. Deterministic for a given
-      // input (zlib is), but NOT SQL-expressible → rows-only; the
-      // CurationSpec planted test pins the semantics (repeated text
-      // compresses far better than word-soup). One of the two justified
-      // UDFs (no codegen zlib) — still a map-side single pass.
-      Tables.documents(s, dir)
-        .select(col("doc_id"), TextAnalysis.compressionRatio(col("text")).as("ratio"),
-          length(col("text")).cast("long").as("n_chars_raw"))
-        .filter(col("n_chars_raw") > 0)
-    }),
-
-    "q135_ttr" -> ((s, dir) => {
-      // per-source type-token ratio (lexical diversity): distinct words
-      // / total words. countDistinct is the exact anchor; at 100 TB the
-      // q105 swap (approx_count_distinct) applies unchanged.
-      Tables.documents(s, dir)
-        .select(col("source"), explode(split(col("text"), " ")).as("w"))
-        .filter(length(col("w")) > 0)
-        .groupBy(col("source"))
-        .agg(countDistinct(col("w")).as("n_types"), count(lit(1)).as("n_tokens"))
-        .withColumn("ttr", pround(col("n_types").cast("double") / col("n_tokens"), 9))
-    }),
-
-    "q131_stream_outer_join" -> ((s, dir) => {
-      // stream-stream LEFT OUTER join: clicks with no purchase in the
-      // lookback emit null-padded AFTER the watermark closes their
-      // window (state eviction is what produces the null row — the
-      // subtle semantics this query pins). The comparison restricts
-      // BOTH engines to the CLOSED region — clicks old enough that the
-      // final watermark (max_ts - wm) has provably passed click_ts +
-      // lookback — because the open tail's null rows are unemittable by
-      // definition, in any streaming engine.
-      val staging = StreamingOps.defaultStagingDir(s, dir)
-      StreamingOps.stageEventsForStreaming(s, dir, staging)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val clicks = StreamingOps.eventsStream(s, staging)
-          .filter(col("event_type") === "click")
-        val purchases = StreamingOps.eventsStream(s, staging)
-          .filter(col("event_type") === "purchase")
-        val joined = StreamingOps.clickPurchaseJoin(clicks, purchases,
-          joinType = "left_outer")
-        val res = StreamingOps.runToMemory(s, joined, "q131_stream_outer_join",
-          org.apache.spark.sql.streaming.OutputMode.Append())
-        val closed = Tables.events(s, dir)
-          .agg((max(col("ts")) - expr("INTERVAL 480 minutes")).as("closed_ts"))
-        res.crossJoin(broadcast(closed))
-          .filter(col("click_ts") < col("closed_ts"))
-          .select(col("click_id"), col("user_id"), col("click_ts"),
-            col("purchase_id"), col("purchase_ts"), col("purchase_value"))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }),
-
-    "q129_profile_drift" -> ((s, dir) => {
-      // snapshot drift detection: profile today's corpus vs yesterday's
-      // (first half by key — the synthetic stand-in for two snapshots)
-      // and report per-column deltas of null rate and distinct count —
-      // the data-quality diff run before every training refresh. Two
-      // one-scan profiles (q84 machinery) joined on column name.
-      val today = Tables.documents(s, dir)
-      val yesterday = today.filter(col("doc_id") < 250)
-      val cols = Seq("source", "lang", "n_chars")
-      val pT = Profile.profile(today, cols)
-        .select(col("col_name"), col("n_null").as("nulls_t"),
-          col("n_distinct").as("distinct_t"), col("n_rows").as("rows_t"))
-      val pY = Profile.profile(yesterday, cols)
-        .select(col("col_name"), col("n_null").as("nulls_y"),
-          col("n_distinct").as("distinct_y"), col("n_rows").as("rows_y"))
-      pT.join(pY, Seq("col_name"))
-        .select(col("col_name"),
-          col("distinct_t"), col("distinct_y"),
-          (col("distinct_t") - col("distinct_y")).as("distinct_delta"),
-          pround(col("nulls_t").cast("double") / col("rows_t")
-            - col("nulls_y").cast("double") / col("rows_y"), 9).as("null_rate_delta"))
-    }),
-
-    "q130_data_contracts" -> ((s, dir) => {
-      // data-contract checks (dbt-test / expectation-suite shape): each
-      // rule is a conditional agg over ONE scan of its table; the FK
-      // rule is a broadcast-key anti-join probe. Returns violation
-      // counts per rule — the report a 100 TB ingest gates on.
-      val li = Tables.lineitem(s, dir)
-      val ord = Tables.orders(s, dir)
-      val rowRules = li.agg(
-        sum((col("l_quantity") < 1 || col("l_quantity") > 50).cast("long")).as("qty_range"),
-        sum((col("l_extendedprice") <= 0).cast("long")).as("price_positive"),
-        sum((col("l_shipdate").isNull).cast("long")).as("shipdate_null"))
-      val fkViolations = li.join(ord.select(col("o_orderkey").as("l_orderkey")),
-          Seq("l_orderkey"), "left_anti")
-        .agg(count(lit(1)).as("fk_orphans"))
-      rowRules.crossJoin(fkViolations)
-        .select(
-          struct(lit("lineitem_qty_1_50").as("rule"), col("qty_range").as("violations")).as("r1"),
-          struct(lit("lineitem_price_gt0").as("rule"), col("price_positive").as("violations")).as("r2"),
-          struct(lit("lineitem_shipdate_not_null").as("rule"), col("shipdate_null").as("violations")).as("r3"),
-          struct(lit("lineitem_orderkey_fk").as("rule"), col("fk_orphans").as("violations")).as("r4"))
-        .select(explode(array(col("r1"), col("r2"), col("r3"), col("r4"))).as("x"))
-        .select(col("x.rule").as("rule"), col("x.violations").as("violations"))
-    }),
-
-    "q127_semantic_search" -> ((s, dir) => {
-      // retrieval end-to-end: ANN top-5 per query over the embedding
-      // store (broadcast queries, WindowGroupLimit — the q36 shape) then
-      // hydrate hits from the document store (vec_id ≡ doc_id), returning
-      // text metadata + quality. The two-tier pattern every RAG corpus
-      // serves: search the small vector index, join the big doc store by
-      // key — the doc store never participates in the distance scan.
-      val emb = Tables.embeddings(s, dir)
-      val q = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val c = emb.select(col("vec_id").as("doc_id"), col("embedding").as("cv"))
-      val w = Window.partitionBy(col("query_id")).orderBy(desc("cosine"), col("doc_id"))
-      val hits = c.join(broadcast(q), col("doc_id") =!= col("query_id"))
-        .withColumn("cosine", Vectors.cosine(col("qv"), col("cv")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("doc_id"), col("cosine"), col("rank"))
-      hits.join(Tables.documents(s, dir), Seq("doc_id"))
-        .select(col("query_id"), col("doc_id"), col("cosine"), col("rank"),
-          col("source"), col("lang"), col("n_chars"),
-          pround(TextAnalysis.qualityScore(col("text")), 9).as("quality"))
-    }),
-
-    "q128_curation_e2e" -> ((s, dir) => {
-      // the curation pipeline END-TO-END as one declarative plan: gates
-      // (length → quality) → normalized exact dedup (keep-min survivor)
-      // → per-source report. Every stage is an operator whose parity is
-      // individually proven (q21/q26/q31/q30); composing them stays one
-      // plan — gates fuse into the scan, dedup is the one content
-      // shuffle, the report is the one agg. What a user actually runs.
-      val surv = Tables.documents(s, dir)
-        .withColumn("wc", TextAnalysis.wsTokenCount(col("text")))
-        .withColumn("quality", TextAnalysis.qualityScore(col("text")))
-        .filter(col("wc") >= 20 && col("quality") >= 0.05)
-        .withColumn("fp", md5(TextAnalysis.normalizeText(col("text"))))
-      // survivor selection is min(struct) — ONE scan + one content
-      // shuffle (the Dedup.exact shape), never a join back to the corpus
-      surv.groupBy(col("fp"))
-        .agg(min(struct(col("doc_id"), col("source"), col("wc"), col("quality"))).as("__s"))
-        .select(col("__s.source").as("source"), col("__s.wc").as("wc"),
-          col("__s.quality").as("quality"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("wc")).as("n_tokens"),
-          pround(sum(col("quality").cast(DecimalType(18, 9))).cast("double"), 9).as("quality_mass"))
-    }),
-
-    "q124_temperature_mix" -> ((s, dir) => {
-      // temperature-flattened language mixing (the LLaMA/PaLM data
-      // recipe): target share ∝ p^α (α=0.5 lifts low-resource langs),
-      // keep rate = min(1, target·K/cnt), membership by the portable
-      // Lehmer hash. The α-powered terms are rounded then decimal-
-      // summed so the normalizer Z is engine-exact; rates gate on the
-      // ROUNDED value (q79's shape + the q87 rounding discipline).
-      val d = Tables.documents(s, dir)
-      val counts = d.groupBy(col("lang")).agg(count(lit(1)).as("cnt"))
-      val tot = counts.agg(sum(col("cnt")).as("total"))
-      val sh = counts.crossJoin(broadcast(tot))
-        .withColumn("s9", pround(pow(col("cnt").cast("double") / col("total"), 0.5), 9))
-      val z = sh.agg(sum(col("s9").cast(DecimalType(18, 9))).cast("double").as("z"))
-      val rates = sh.crossJoin(broadcast(z))
-        .withColumn("rate", pround(least(lit(1.0),
-          col("s9") / col("z") * lit(0.6) * col("total") / col("cnt")), 9))
-        .select(col("lang"), col("rate"))
-      val u = (lehmer3(col("doc_id")).cast("double") + 0.5) / 2147483647.0
-      d.join(broadcast(rates), Seq("lang"))
-        .filter(u < col("rate"))
-        .select(col("doc_id"), col("lang"))
-    }),
-
-    "q125_rare_suppress" -> ((s, dir) => {
-      // k-anonymity-style suppression: rows whose (source, lang) combo
-      // occurs < 5 times drop entirely (rare combos identify their
-      // members — the privacy-curation gate). Combo counts are tiny →
-      // broadcast; the corpus filters map-side, one agg total.
-      val d = Tables.documents(s, dir)
-      val combos = d.groupBy(col("source"), col("lang"))
-        .agg(count(lit(1)).as("n_combo"))
-        .filter(col("n_combo") >= 5)
-      d.join(broadcast(combos), Seq("source", "lang"))
-        .select(col("doc_id"), col("source"), col("lang"), col("n_combo"))
-    }),
-
-    "q126_trending" -> ((s, dir) => {
-      // weekly trending pages: top-3 props.k per week by visit count —
-      // rank ≤ 3 over (week) compiles to WindowGroupLimit, so each
-      // partition forwards at most 3 rows per week into the exchange.
-      val t = Tables.events(s, dir)
-        .select(date_trunc("week", col("ts")).cast("date").as("week"),
-          get_json_object(col("props"), "$.k").cast("long").as("page"))
-        .groupBy(col("week"), col("page")).agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy(col("week")).orderBy(desc("n"), col("page"))
-      t.withColumn("rank", row_number().over(w)).filter(col("rank") <= 3)
-    }),
-
-    "q121_incremental_dedup" -> ((s, dir) => {
-      // incremental near-dup dedup: a synthetic "daily increment" (every
-      // 25th doc, one word appended — a near-dup of its original) lands
-      // against the FULL corpus signature index. Only new×index bands
-      // join — index-vs-index pairs were resolved at index build and are
-      // never recomputed. MinHash internals are engine-specific → rows-
-      // only; CurationSpec pins the planted-recall semantics.
-      val d = Tables.documents(s, dir)
-      val increment = d.filter(col("doc_id") % 25 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(col("text"), lit(" tail token")).as("text"))
-      val idx = Dedup.signatures(d, col("text"), col("doc_id"))
-      Dedup.incrementalMinhashDups(increment, col("text"), col("doc_id"), idx)
-        .select(col("new_key"), col("index_key"), col("est_jaccard"))
-    }),
-
-    "q122_sequence_pack" -> ((s, dir) => {
-      // training-sequence packing: documents in stable (doc_id) order
-      // fill 512-token bins by global prefix sum — bin = (cum - tok) div
-      // 512, so a doc starts the bin its first token lands in. The
-      // running total is the two-pass CumSum (NO global window, the q68
-      // discipline); the report is per-bin fill — the packer feeding a
-      // fixed-context trainer, minus the within-bin concat that the
-      // webdataset sink already does.
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("tok"))
-      CumSum.withRunningTotal(d, Seq(col("doc_id")), col("tok"), "cum")
-        .withColumn("bin", ((col("cum") - col("tok")) / 512).cast("long"))
-        .groupBy(col("bin"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("tok")).as("n_tokens"),
-          min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
-    }),
-
-    "q123_hard_negatives" -> ((s, dir) => {
-      // contrastive hard-negative mining: for each query vector, the
-      // top-3 nearest neighbors whose label DIFFERS — the pairs that
-      // teach an embedding model the most. Same broadcast-queries /
-      // WindowGroupLimit shape as q36 with the label-mismatch predicate
-      // inside the join (pairs never materialize beyond candidates).
-      val emb = Tables.embeddings(s, dir)
-      val q = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-          col("label").as("q_label"))
-      val c = emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"),
-        col("label").as("n_label"))
-      val w = Window.partitionBy(col("query_id")).orderBy(desc("cosine"), col("neighbor_id"))
-      c.join(broadcast(q), col("q_label") =!= col("n_label"))
-        .withColumn("cosine", Vectors.cosine(col("qv"), col("cv")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("query_id"), col("neighbor_id"), col("q_label"),
-          col("n_label"), col("cosine"), col("rank"))
-    }),
-
-    "q120_zorder_layout" -> ((s, dir) => {
-      // Z-order layout audit: Morton-interleave (user_id, props.k) into
-      // one clustering key, bucket by its high bits, and report each
-      // bucket's per-dimension bounding box — the zone-map ranges a scan
-      // would prune against. Z-order buckets box BOTH dimensions tightly
-      // (8×8 grid cells here); a single-column range layout would bound
-      // one and leave the other full-range (ScaleSpec quantifies it).
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-      ev.withColumn("z", Layout.zValue(col("user_id"), col("k"), bits = 8))
-        .withColumn("bucket", shiftrightunsigned(col("z"), 10))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n"),
-          min(col("user_id")).as("u_min"), max(col("user_id")).as("u_max"),
-          min(col("k")).as("k_min"), max(col("k")).as("k_max"))
-    }),
-
-    "q115_cms_heavy_hitters" -> ((s, dir) => {
-      // EXACT heavy hitters through a count-min prefilter — q46's
-      // 100 TB tier, and (since round 7) a full oracle row via the
-      // sketch's ONE-SIDED error bound: CMS never undercounts
-      // (est ≥ true always — exact integer counters, commutative
-      // merge), so "CMS estimate ≥ T" is a guaranteed superset of the
-      // true ≥T set. Pass 1 reduces the corpus into one fixed-size
-      // (32 KB) mergeable sketch; pass 2 probes the broadcast sketch
-      // per row MAP-SIDE and drops every row of a non-candidate word
-      // BEFORE the shuffle — the exact count then aggregates only
-      // candidate-word rows (a sliver of the corpus), and the final
-      // HAVING n ≥ T removes the sketch's false positives. Output is
-      // bit-identical to the one-shuffle exact plan the oracle runs;
-      // the sketch machinery itself keeps its SketchSpec bounds.
-      val words = Dedup.cacheScoped(Tables.documents(s, dir)
-        .select(explode(split(col("text"), " ")).as("word"))
-        .filter(length(col("word")) > 0))
-      // the sketch is ONE row — land it on the driver and broadcast the
-      // raw counter array; probing then costs a few hashes per row. A
-      // crossJoin'd sketch COLUMN re-converts the 4096-long array from
-      // Catalyst form on every row (measured 22 s at sf0.1 vs 1.3 s).
-      val skRow = words.agg(
-        graft.functions.Sketch.cms(col("word")).as("sk"),
-        count(lit(1)).as("total")).head()
-      val counters = skRow.getSeq[Long](0).toArray
-      val thresh = (skRow.getLong(1) * 0.002).toLong
-      // codegen probe (no UDF): the prior per-row UTF8String→String
-      // decode + Scala call was 1.5 µs/row — 9× the exact agg it
-      // prefilters (r11 profile); the expression hashes bytes in place
-      // inside whole-stage codegen
-      words.filter(graft.functions.Sketch.probe(counters, col("word")) >= lit(thresh))
-        .groupBy(col("word")).agg(count(lit(1)).as("n"))
-        .filter(col("n") >= lit(thresh))
-        .select(col("word"), col("n"))
-        .orderBy(desc("n"), col("word"))
-    }),
-
-    "q116_embed_quantize" -> ((s, dir) => {
-      // int8 embedding quantization (asymmetric, per-vector min/max):
-      // code = pround((v - min) / scale) in 0..255, the storage-reduction
-      // step before ANN at 100 TB (4 bytes → 1 per dim). Pure map-side
-      // HOF arithmetic (no UDF); emitted as scalars (code sum + bounds +
-      // max reconstruction error, round 9) so the oracle hashes stably.
-      val v = col("embedding")
-      val mn = array_min(v).cast("double")
-      val mx = array_max(v).cast("double")
-      val scale = (col("mx") - col("mn")) / 255.0
-      Tables.embeddings(s, dir)
-        .select(col("vec_id"), v.as("v"), mn.as("mn"), mx.as("mx"))
-        .filter(col("mx") > col("mn")) // constant vectors have no scale
-        .select(col("vec_id"), col("mn"), col("mx"),
-          pround(scale, 9).as("scale"),
-          aggregate(
-            transform(col("v"), x => pround((x.cast("double") - col("mn")) / scale, 0)),
-            lit(0L), (acc, x) => acc + x.cast("long")).as("code_sum"),
-          pround(aggregate(
-            transform(col("v"), x =>
-              abs(pround((x.cast("double") - col("mn")) / scale, 0) * scale + col("mn")
-                - x.cast("double"))),
-            lit(0.0), (acc, x) => greatest(acc, x)), 9).as("max_err"))
-    }),
-
-    "q117_url_dedup" -> ((s, dir) => {
-      // URL canonicalization + dedup — the reference's own dedup surface
-      // (get_pdf_links_from_cc.py dropDuplicates on url) done right:
-      // lowercase scheme/host, strip www., default port, query string,
-      // fragment and trailing slash, then group. Synthetic URLs derive
-      // from doc_id (q74's planted-input pattern) so the oracle replays
-      // the construction; the canonicalizer is a codegen regexp chain.
-      val raw = concat(lit("HTTPS://WWW.Site"), col("doc_id") % 7,
-        lit(".COM:443/Path/"), col("doc_id") % 40,
-        lit("/?utm_source=feed&id="), col("doc_id"), lit("#frag"))
-      val canon =
-        regexp_replace(
-          regexp_replace(
-            regexp_replace(lower(raw), "[?#].*$", ""),   // query + fragment
-            "://www\\.", "://"),                          // www prefix
-          ":443/", "/")                                   // default port
-      val c2 = regexp_replace(canon, "/$", "")            // trailing slash
-      Tables.documents(s, dir)
-        .select(col("doc_id"), c2.as("canonical_url"))
-        .groupBy(col("canonical_url"))
-        .agg(min(col("doc_id")).as("keep_doc"), count(lit(1)).as("n_dups"))
-    }),
-
-    // ------------------------------------------------------- doc pipeline
-    "q40_doc_pipeline_stats" -> ((s, dir) => {
-      // full pipeline status channel; the deterministic stub decoder's
-      // arithmetic is SQL-expressible, so this is oracle-matched (see the
-      // q40 oracle for the page/word-count reconstruction)
-      val cfg = PipelineConfig(minWordsPerPage = 5, getLanguage = false,
-        saveFigures = true, maxPages = Some(8))
-      val docs = Tables.documents(s, dir)
-        .withColumn("payload", encode(col("text"), "UTF-8")).drop("text")
-      val keyed = DocPipeline.withKeys(docs, col("doc_id"), cfg)
-      val decoded = DocPipeline.decodePages(keyed, FakePdfDecoder(40), "payload")
-      val tagged = DocPipeline.explodePages(decoded.drop("payload"), cfg)
-      DocPipeline.channels(tagged)._2
-    }),
-
-    // ----------------------------------------------- round 7: new surface
-    "q157_substr_fingerprints" -> ((s, dir) => {
-      // exact substring duplication across docs (the Lee et al.
-      // exact-substr dedup discipline in fingerprint form): every char
-      // 40-gram, MOD-p selected by the gram's OWN md5 (content-defined,
-      // so alignment-invariant — a positional stride would miss spans
-      // at shifted offsets). Positions explode FIRST so gram + md5 +
-      // select stay flat codegen expressions (a transform/filter HOF
-      // pipeline evaluates interpreted: measured 4.4 s vs this shape).
-      // ONE content shuffle: collect_set(doc) per gram dedups the
-      // (doc, gram) occurrences map-side AND subsumes the former
-      // distinct + df-prune + self-join pipeline (three branches over a
-      // cached frame — 6.1 s cold at sf0.1 vs 3.0 s here); the doc set
-      // is capped at 20 (q147's stop-term cut for boilerplate grams),
-      // so pair generation is a bounded in-row nested transform
-      // (≤ 190 pairs per gram), never a join.
-      // two-level explode: text → overlapping 103-char chunks (stride
-      // 64, overlap k-1 so every absolute position appears exactly
-      // once) → positions within the chunk. A single position explode
-      // would copy the FULL text into each of ~|text| generated rows
-      // (GenerateExec copies the child row per element — 4.5 GB of row
-      // traffic at sf0.1, measured 4.3 s); chunking first bounds each
-      // copy at 103 chars (3.0 s).
-      val k = 40
-      val stride = 64
-      val gram = expr(s"substring(chunk, pos, $k)")
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          // greatest(len, 1): sequence(1, 0, 64) on empty text is an
-          // ERROR in Spark (start > stop with positive step), not an
-          // empty array — the degenerate chunk explodes once and its
-          // sub-k gram is length-filtered
-          explode(sequence(lit(1), greatest(length(col("text")), lit(1)),
-            lit(stride))).as("cstart"),
-          col("text"))
-        .select(col("doc_id"),
-          expr(s"substring(text, cstart, ${stride + k - 1})").as("chunk"))
-        // r20 (guide §2.6 / documentsFanned discipline): documents is one
-        // parquet row group, so the whole position-explode + md5 chain ran
-        // as ONE scan task (solo 3.2 s at 32c, 31 cores idle). Fanning the
-        // ~|text|/64 chunk rows round-robin costs one tiny exchange
-        // (chunks ≈ 1.6× text bytes) and runs the md5 selection at full
-        // width; chunk-level (not doc-level) spread also balances skewed
-        // doc lengths. Per-row CPU (64 md5s per chunk) dwarfs the bytes
-        // at any scale; defaultParallelism tracks the session.
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(col("doc_id"), col("chunk"),
-          explode(sequence(lit(1),
-            greatest(length(col("chunk")) - (k - 1), lit(1)))).as("pos"))
-        .select(col("doc_id"), gram.as("gram"))
-        .filter(length(col("gram")) === k &&
-          substring(md5(col("gram")), 1, 1).isin("0", "1", "2", "3"))
-        .groupBy(col("gram")).agg(sort_array(collect_set(col("doc_id"))).as("ds"))
-        .filter(size(col("ds")).between(2, 20))
-        .select(explode(flatten(transform(col("ds"), (a, i) =>
-          transform(slice(col("ds"), i + lit(2), size(col("ds"))), b =>
-            struct(a.as("doc_a"), b.as("doc_b")))))).as("p"))
-        .select(col("p.doc_a"), col("p.doc_b"))
-        .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("n_shared"))
-        .orderBy(desc("n_shared"), col("doc_a"), col("doc_b")).limit(20)
-    }),
-
-    "q158_record_linkage" -> ((s, dir) => {
-      // entity resolution, Fellegi–Sunter-lite: BLOCK on (brand, head
-      // noun) so candidates are per-block O(block²) — never corpus²;
-      // SCORE with codegen levenshtein; SELECT the best match per
-      // record via a per-key window (WindowGroupLimit) and a final
-      // top-100 (TakeOrderedAndProject). The blocking key is the
-      // recall/cost lever a real MDM pipeline tunes.
-      // edit distance is symmetric: score each unordered pair ONCE
-      // (key_a < key_b halves the join output and the levenshtein
-      // evals), then mirror the scored pairs for per-record selection.
-      // Pair-once + min(struct) best-match measured 3.1 → 2.1 s at
-      // sf0.1 vs the both-directions + row_number formulation.
-      val p = Tables.part(s, dir).select(col("p_partkey"), col("p_name"),
-        col("p_brand"), element_at(split(col("p_name"), " "), -1).as("blk"))
-      // r20 (guide §2.6 / documentsFanned discipline): part is one parquet
-      // row group, so the broadcast-join probe side was ONE task — every
-      // blocked levenshtein ran on one core. One ~20k-row exchange fans it
-      // to full width (per-row cost = |block| levenshteins ≫ bytes).
-      val a = p.select(col("p_partkey").as("key_a"), col("p_name").as("name_a"),
-        col("p_brand").as("brand"), col("blk"))
-        .repartition(s.sparkContext.defaultParallelism)
-      val b = p.select(col("p_partkey").as("key_b"), col("p_name").as("name_b"),
-        col("p_brand").as("brand"), col("blk"))
-      val scored = a.join(b, Seq("brand", "blk")).filter(col("key_a") < col("key_b"))
-        .select(col("key_a"), col("name_a"), col("key_b"), col("name_b"),
-          levenshtein(col("name_a"), col("name_b")).cast("long").as("dist"))
-      // r20 (guide §2.4): the former scored.unionByName(scored.select(…))
-      // re-executed the WHOLE join branch — every levenshtein evaluated
-      // twice (two BroadcastHashJoin subtrees in the before-plan). The
-      // in-row 2-element explode emits both directions from ONE scored
-      // row: same row multiset, half the edit-distance work, one branch.
-      val mirrored = scored.select(explode(array(
-          struct(col("key_a"), col("name_a"), col("key_b"), col("name_b"), col("dist")),
-          struct(col("key_b").as("key_a"), col("name_b").as("name_a"),
-            col("key_a").as("key_b"), col("name_a").as("name_b"), col("dist")))).as("m"))
-        .select(col("m.key_a").as("key_a"), col("m.name_a").as("name_a"),
-          col("m.key_b").as("key_b"), col("m.name_b").as("name_b"),
-          col("m.dist").as("dist"))
-      // best match = min(struct(dist, key_b)) — partial-agg friendly
-      // (map-side combine), where a row_number window would sort every
-      // candidate group after the shuffle
-      mirrored.groupBy(col("key_a"))
-        .agg(min(struct(col("dist"), col("key_b"), col("name_a"))).as("s"))
-        .select(col("key_a"), col("s.name_a").as("name_a"),
-          col("s.key_b").as("best_match"), col("s.dist").as("dist"))
-        .orderBy(col("key_a")).limit(100)
-    }),
-
-    "q159_retention_cohorts" -> ((s, dir) => {
-      // cohort retention: users bucketed by first-activity week, count
-      // retained per week offset — the growth-analytics staple. The
-      // (user, week) frame is pre-distincted so the join carries
-      // user-weeks, not raw events; the first-week agg shares the
-      // user_id partitioning with the join (exchange reuse), so the
-      // event scan shuffles once.
-      val e = Dedup.cacheScoped(Tables.events(s, dir)
-        .select(col("user_id"), date_trunc("week", col("ts")).cast("date").as("wk"))
-        .distinct())
-      val first = e.groupBy(col("user_id")).agg(min(col("wk")).as("cohort"))
-      e.join(first, Seq("user_id"))
-        .groupBy(col("cohort"),
-          (datediff(col("wk"), col("cohort")) / 7).cast("long").as("week_offset"))
-        .agg(count(lit(1)).as("n_users"))
-        .orderBy(col("cohort"), col("week_offset"))
-    }),
-
-    "q160_attribution" -> ((s, dir) => {
-      // last-touch revenue attribution: each purchase credits the
-      // latest click of the same user within 7 days — the as-of join
-      // (q15's one-shuffle union-and-carry, no range join) reused as a
-      // marketing operator. Clicks pre-aggregate to one per (user, ts)
-      // so the carry is deterministic; unattributed purchases keep a
-      // null page and stay in the report.
-      val ev = Tables.events(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max_by(get_json_object(col("props"), "$.k").cast("long"),
-          col("event_id")).as("page"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id").as("purchase_id"),
-          col("value"))
-      AsOf.join(purchases, clicks, "user_id", "ts", Seq("page"),
-          tolerance = Some("7 DAY"))
-        .groupBy(col("right_page").as("page"))
-        .agg(count(lit(1)).as("n_purchases"), dsum(col("value")).as("revenue"))
-    }),
-
-    "q161_kmv_distinct" -> ((s, dir) => {
-      // K-minimum-values distinct-count sketch, made ORACLE-EXACT by
-      // hashing with md5 (bit-identical in DuckDB): est = (k-1)/u_k,
-      // u_k the k-th smallest normalized hash over distinct keys. The
-      // third deterministic-approximation row (q105/q115 discipline) —
-      // unlike HLL (q41) the estimator itself hash-matches. Scale
-      // shape: map-side partial distinct, then bottom-k rides
-      // TakeOrderedAndProject (per-partition top-k, k rows merged).
-      val k = 256
-      val keys = Dedup.cacheScoped(
-        Tables.lineitem(s, dir).select(col("l_partkey").as("key")).distinct())
-      val bottom = keys
-        .select(col("key"),
-          conv(substring(md5(col("key").cast("string")), 1, 8), 16, 10)
-            .cast("long").as("h"))
-        .orderBy(col("h"), col("key")).limit(k)
-      val t = bottom.agg(max(col("h")).as("kth"), count(lit(1)).as("k_actual"))
-      val x = keys.agg(count(lit(1)).as("n_exact"))
-      t.crossJoin(broadcast(x))
-        .select(col("n_exact"), col("k_actual"),
-          // < k distinct keys means the "sketch" holds the whole
-          // population — the estimator formula is meaningless there and
-          // the exact count is free (q175's fallback, mirrored)
-          when(col("k_actual") < k, col("k_actual").cast("double"))
-            .otherwise(pround(lit((k - 1).toDouble)
-              / (col("kth").cast("double") / 4294967296.0), 3)).as("kmv_est"))
-    }),
-
-    "q162_triangles" -> ((s, dir) => {
-      // triangle participation on the co-visitation graph (q148's
-      // edges) — the density signal behind community detection and
-      // related-content surfaces. Edges are session-blocked pairs
-      // (bounded by Σ|session|², q148's argument) and ORIENTED
-      // (DEGREE-ordered via Graph.orientByDegree — hubs never fan out,
-      // so the wedge join's Σ indeg·outdeg candidate count stays
-      // near-linear where an id order lets one mid-id hub pay
-      // O(deg²)), so each triangle materializes exactly once through
-      // two equi-joins + a semi-join closure check. Per-page counts
-      // are orientation-invariant, so the oracle is unchanged.
-      val edges = Dedup.cacheScoped(graft.operators.Graph.orientByDegree(
-        sessionPagePairs(sessionPageSets(s, dir))
-          .select(col("page_a").as("a"), col("page_b").as("b"))))
-      val tri = edges.select(col("u").as("x"), col("v").as("y"))
-        .join(edges.select(col("u").as("y"), col("v").as("z")), Seq("y"))
-        .join(edges.select(col("u").as("x"), col("v").as("z")), Seq("x", "z"),
-          "left_semi")
-      tri.select(explode(array(col("x"), col("y"), col("z"))).as("page"))
-        .groupBy(col("page")).agg(count(lit(1)).as("n_triangles"))
-        .orderBy(desc("n_triangles"), col("page")).limit(10)
-    }),
-
-    "q163_logodds_terms" -> ((s, dir) => {
-      // distinctive vocabulary between two corpus slices (Monroe et
-      // al. "Fightin' Words": log-odds with a +0.5 prior, z-scored by
-      // the delta's variance) — the corpus-comparison surface behind
-      // "what characterizes slice A". One tokenize pass, one
-      // groupBy(word) with conditional partial-agg counts (no
-      // per-group subqueries), scalar totals broadcast back.
-      val words = Tables.documents(s, dir)
-        .select(when(substring(col("source"), 4, 10).cast("int") < 10,
-          lit("a")).otherwise(lit("b")).as("grp"),
-          explode(split(col("text"), " ")).as("word"))
-        .filter(length(col("word")) > 0)
-      val c = words.groupBy(col("word")).agg(
-        sum(when(col("grp") === "a", 1L).otherwise(0L)).as("a"),
-        sum(when(col("grp") === "b", 1L).otherwise(0L)).as("b"))
-      val t = c.agg(sum(col("a")).as("ta"), sum(col("b")).as("tb"))
-      c.crossJoin(broadcast(t))
-        .select(col("word"), col("a").as("n_a"), col("b").as("n_b"),
-          pround((log((col("a") + 0.5) / (col("ta") - col("a") + 0.5))
-              - log((col("b") + 0.5) / (col("tb") - col("b") + 0.5)))
-            / sqrt(lit(1.0) / (col("a") + 0.5) + lit(1.0) / (col("b") + 0.5)),
-            9).as("z"))
-        .orderBy(desc("z"), col("word")).limit(20)
-    }),
-
-    "q164_containment" -> ((s, dir) => {
-      // shingle-containment dedup (|A∩B|/|A| ≥ 0.6): catches SUBSET
-      // duplication — a doc quoted whole inside a larger one — which
-      // symmetric Jaccard (q34) under-scores. Directed: both (a,b) and
-      // (b,a) report when their containment holds. Same bucketed shape
-      // as every dedup op: distinct shingles equi-join, per-doc sizes
-      // broadcast back; q34's doc_id < 200 oracle-tier bound.
-      val docs = Tables.documents(s, dir).filter(col("doc_id") < 200)
-      val sh = Dedup.cacheScoped(docs.select(col("doc_id"),
-        explode(array_distinct(
-          graft.functions.Shingles.shingles(col("text"), 3))).as("sh")))
-      val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      val shared = sh.select(col("sh"), col("doc_id").as("doc_a"))
-        .join(sh.select(col("sh"), col("doc_id").as("doc_b")), Seq("sh"))
-        .filter(col("doc_a") =!= col("doc_b"))
-        .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("n_shared"))
-      shared.join(broadcast(sizes.select(col("doc_id").as("doc_a"), col("sz"))),
-          Seq("doc_a"))
-        .filter(col("n_shared").cast("double") / col("sz") >= 0.6)
-        .select(col("doc_a"), col("doc_b"),
-          pround(col("n_shared").cast("double") / col("sz"), 9).as("containment"))
-        .orderBy(desc("containment"), col("doc_a"), col("doc_b"))
-    }),
-
-    "q165_median_refine" -> ((s, dir) => {
-      // EXACT grouped median WITHOUT the per-group buffer — q55's
-      // scale ceiling solved while staying exact: histogram refinement
-      // (Selection.exactGroupedMedian) bins map-side against broadcast
-      // bounds, walks the bounded groups×bins histogram on the driver,
-      // and re-scans only the target bins (~n/bins of the data).
-      // Exactness is oracle-proven: bit-equal to quantile_cont because
-      // the selection is true order statistics, not an approximation.
-      graft.operators.Selection.exactGroupedMedian(
-          Tables.lineitem(s, dir), "l_returnflag", "l_extendedprice")
-        .select(col("l_returnflag"), pround(col("median"), 9).as("median"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    "q166_psi_drift" -> ((s, dir) => {
-      // population stability index between a reference and current
-      // window of the value distribution, per event_type — the
-      // industry-standard drift gate (PSI > 0.2 = investigate) behind
-      // q129's column-level drift report. Equal-width bins over the
-      // global per-type [min, max] (bounds broadcast back, binning
-      // map-side); +0.5 Laplace smoothing keeps empty bins finite.
-      // One scan for bounds, one for the binned counts.
-      val split = to_timestamp(lit("2024-01-15 00:00:00"))
-      val ev = Tables.events(s, dir)
-        .select(col("event_type"), col("value"),
-          when(col("ts") < split, lit("ref")).otherwise(lit("cur")).as("win"))
-      val bounds = ev.groupBy(col("event_type"))
-        .agg(min(col("value")).as("lo"), max(col("value")).as("hi"))
-      val binned = ev.join(broadcast(bounds), Seq("event_type"))
-        .withColumn("b", when(col("hi") <= col("lo"), lit(0)).otherwise(
-          least(lit(9), floor((col("value") - col("lo"))
-            / (col("hi") - col("lo")) * 10).cast("int"))))
-      val cells0 = binned.groupBy(col("event_type"), col("b")).agg(
-        sum(when(col("win") === "ref", 1L).otherwise(0L)).as("cr"),
-        sum(when(col("win") === "cur", 1L).otherwise(0L)).as("cc"))
-      // the +0.5/10-bin smoothing assumes ALL 10 bins contribute a
-      // term: a bin empty in BOTH windows still carries a nonzero
-      // (0.5/(nr+5) - 0.5/(nc+5))·ln(...) when nr ≠ nc — materialize
-      // the full grid so those terms aren't silently dropped
-      val cells = bounds.select(col("event_type"))
-        .withColumn("b", explode(sequence(lit(0), lit(9))))
-        .join(cells0, Seq("event_type", "b"), "left")
-        .na.fill(0L, Seq("cr", "cc"))
-      val tot = cells.groupBy(col("event_type"))
-        .agg(sum(col("cr")).as("nr"), sum(col("cc")).as("nc"))
-      cells.join(broadcast(tot), Seq("event_type"))
-        .withColumn("pr", (col("cr") + 0.5) / (col("nr") + 5.0))
-        .withColumn("pc", (col("cc") + 0.5) / (col("nc") + 5.0))
-        .withColumn("term", floor((col("pr") - col("pc"))
-          * log(col("pr") / col("pc")) * 1e12 + 0.5) / 1e12)
-        .groupBy(col("event_type"), col("nr"), col("nc"))
-        // q91 discipline: round each term, reduce in exact decimal —
-        // a raw double sum would be partial-agg-order-dependent.
-        // Floor-form, not pround(double, n): the 12-digit term sum hits
-        // the outer 9-digit HALF_UP boundary with ~1e-3 odds per row
-        // and Spark/DuckDB break the tie differently (the r9 q210
-        // lesson, same shape as this query).
-        .agg((floor(sum(col("term").cast(DecimalType(27, 14)))
-          .cast("double") * 1e9 + 0.5) / 1e9).as("psi"))
-        .select(col("event_type"), col("nr").as("n_ref"), col("nc").as("n_cur"),
-          col("psi"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q168_quantiles_refine" -> ((s, dir) => {
-      // q55's FULL quantile band (p50/p95/p99) from the histogram-
-      // refinement selector — all three quantiles share the same three
-      // scans (bounds, histogram, target-bin slices), so the exact
-      // band costs the same as one median and no task ever buffers a
-      // group. Bit-equal to quantile_cont (same interpolation form).
-      graft.operators.Selection.exactGroupedQuantiles(
-          Tables.lineitem(s, dir), "l_returnflag", "l_extendedprice",
-          Seq(0.5, 0.95, 0.99))
-        .groupBy(col("l_returnflag"))
-        .agg(
-          pround(max(when(col("q") === 0.5, col("value"))), 9).as("p50"),
-          pround(max(when(col("q") === 0.95, col("value"))), 9).as("p95"),
-          pround(max(when(col("q") === 0.99, col("value"))), 9).as("p99"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    "q170_quantized_ann" -> ((s, dir) => {
-      // int8-coarse ANN + exact rerank — the memory-bound discipline at
-      // 100 TB: the coarse scan touches 1-byte codes (4× less IO than
-      // float32; q116's quantizer), integer distances are EXACT ints
-      // (engine-portable, no float drift), and recall is restored by
-      // reranking the top-100 candidates with the codegen cosine kernel
-      // (q36's oracle-proven parity with list_cosine_similarity).
-      // Queries broadcast; the corpus never shuffles; both rank cuts
-      // are per-query WindowGroupLimits.
-      val scale = (col("mx") - col("mn")) / 255.0
-      val coded = Dedup.cacheScoped(Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("embedding"),
-          array_min(col("embedding")).cast("double").as("mn"),
-          array_max(col("embedding")).cast("double").as("mx"))
-        .filter(col("mx") > col("mn"))
-        .select(col("vec_id"), col("embedding"),
-          transform(col("embedding"), x =>
-            pround((x.cast("double") - col("mn")) / scale, 0).cast("long"))
-            .as("code")))
-      val q = coded.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("code").as("qcode"),
-          col("embedding").as("qe"))
-      val cand = coded.select(col("vec_id").as("neighbor_id"),
-        col("code").as("ccode"), col("embedding").as("ce"))
-      val coarse = cand.crossJoin(broadcast(q))
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .withColumn("qdist", aggregate(
-          zip_with(col("qcode"), col("ccode"), (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, x) => acc + x))
-      val wc = Window.partitionBy(col("query_id")).orderBy(col("qdist"), col("neighbor_id"))
-      val wr = Window.partitionBy(col("query_id")).orderBy(desc("cosine"), col("neighbor_id"))
-      coarse.withColumn("crank", row_number().over(wc)).filter(col("crank") <= 100)
-        .withColumn("cosine", Vectors.cosine(col("qe"), col("ce")))
-        .withColumn("rank", row_number().over(wr).cast("long"))
-        .filter(col("rank") <= 10)
-        .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
-    }),
-
-    "q175_kmv_grouped" -> ((s, dir) => {
-      // per-GROUP distinct-count sketches — q161's KMV with a group key:
-      // bottom-k md5 hashes per group ride a WindowGroupLimit (each
-      // partition forwards ≤ k rows per group), est = (k-1)/u_k. The
-      // per-group sketch shape is what a 100 TB profiler emits per
-      // column/day; md5 keeps the ESTIMATOR oracle-exact (q161's
-      // argument), and small groups (≤ k distinct) fall back to their
-      // exact count by construction.
-      val k = 64
-      val keys = Dedup.cacheScoped(Tables.lineitem(s, dir)
-        .select(col("l_returnflag").as("g"), col("l_partkey").as("key")).distinct())
-      val h = conv(substring(md5(col("key").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-      val w = Window.partitionBy(col("g")).orderBy(col("h"), col("key"))
-      val bottom = keys.select(col("g"), col("key"), h.as("h"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      bottom.groupBy(col("g"))
-        .agg(max(col("h")).as("kth"), count(lit(1)).as("k_actual"))
-        .join(keys.groupBy(col("g")).agg(count(lit(1)).as("n_exact")), Seq("g"))
-        .select(col("g"), col("n_exact"), col("k_actual"),
-          when(col("k_actual") < k, col("k_actual").cast("double"))
-            .otherwise(pround(lit((k - 1).toDouble)
-              / (col("kth").cast("double") / 4294967296.0), 3)).as("kmv_est"))
-        .orderBy(col("g"))
-    }),
-
-    "q176_equidepth_hist" -> ((s, dir) => {
-      // equi-depth histogram (the optimizer-statistics shape: equal ROW
-      // counts per bucket, data-adaptive edges) from the histogram-
-      // refinement selector — deciles of l_extendedprice per returnflag,
-      // all nine edges from the same three scans, no per-group buffer.
-      // The q83 equal-width histogram is the fixed-grid twin.
-      graft.operators.Selection.exactGroupedQuantiles(
-          Tables.lineitem(s, dir), "l_returnflag", "l_extendedprice",
-          (1 to 9).map(_ / 10.0))
-        .select(col("l_returnflag"),
-          pround(col("q") * 10, 0).cast("long").as("decile"),
-          pround(col("value"), 9).as("edge"))
-        .orderBy(col("l_returnflag"), col("decile"))
-    }),
-
-    "q174_cuped" -> ((s, dir) => {
-      // CUPED variance-reduced A/B readout (Deng et al., the
-      // experimentation-platform staple): per-user pre-period covariate
-      // x and post-period metric y, pooled theta = cov(x,y)/var(x),
-      // adjusted y* = y - theta·(x - mean x); report per-arm means and
-      // the variance ratio. Three aggs (user rollup, pooled moments,
-      // arm readout) with scalar broadcasts between — the corpus-sized
-      // frame shuffles once on user_id. Every double product is
-      // rounded then decimal-reduced (q91 discipline), so the pooled
-      // moments are partial-agg-order-free. On this synthetic corpus
-      // pre/post are uncorrelated (no user persistence), so the
-      // variance ratio honestly reads ≈ 1 — the formula, not the win,
-      // is what the oracle verifies.
-      val split = to_timestamp(lit("2024-01-15 00:00:00"))
-      val D6 = DecimalType(27, 6)
-      val u = Tables.events(s, dir).groupBy(col("user_id"))
-        .agg(
-          sum(when(col("ts") < split, col("value")).otherwise(lit(0.0))
-            .cast(DecimalType(18, 4))).cast("double").as("x"),
-          sum(when(col("ts") >= split, col("value")).otherwise(lit(0.0))
-            .cast(DecimalType(18, 4))).cast("double").as("y"))
-        .select((col("user_id") % 2).as("t"), col("x"), col("y"))
-      val m = u.agg(count(lit(1)).as("n"),
-        sum(col("x").cast(D6)).cast("double").as("sx"),
-        sum(col("y").cast(D6)).cast("double").as("sy"),
-        sum(pround(col("x") * col("y"), 6).cast(D6)).cast("double").as("sxy"),
-        sum(pround(col("x") * col("x"), 6).cast(D6)).cast("double").as("sxx"))
-      val th = m.select(col("n"), (col("sx") / col("n")).as("mx"),
-        ((col("sxy") - col("sx") * col("sy") / col("n"))
-          / (col("sxx") - col("sx") * col("sx") / col("n"))).as("theta"))
-      val adj = u.crossJoin(broadcast(th))
-        .select(col("t"), col("y"),
-          pround(col("y") - col("theta") * (col("x") - col("mx")), 6).as("ya"))
-      val arm = adj.groupBy(col("t")).agg(
-        count(lit(1)).as("n_users"),
-        (sum(col("y").cast(D6)).cast("double") / count(lit(1))).as("my"),
-        (sum(col("ya").cast(D6)).cast("double") / count(lit(1))).as("mya"),
-        (sum(pround(col("ya") * col("ya"), 6).cast(DecimalType(33, 6)))
-          .cast("double") / count(lit(1))).as("myy2"),
-        (sum(pround(col("y") * col("y"), 6).cast(DecimalType(33, 6)))
-          .cast("double") / count(lit(1))).as("my2"))
-      arm.select(col("t"), col("n_users"),
-          pround(col("my"), 6).as("mean_y"),
-          pround(col("mya"), 6).as("mean_adj"),
-          pround((col("myy2") - col("mya") * col("mya"))
-            / (col("my2") - col("my") * col("my")), 6).as("var_ratio"))
-        .orderBy(col("t"))
-    }),
-
-    "q173_bloom_anti_join" -> ((s, dir) => {
-      // EXACT anti-join at bloom cost — q77's approximate tier promoted
-      // to an oracle row by the one-sided bound (the q115 discipline):
-      // no false negatives means bloom-cleared rows are DEFINITE
-      // non-members (kept map-side, zero shuffle); only the ~1% sliver
-      // of possible members pays the exact anti-join that strips the
-      // false positives. Output ≡ the plain anti-join the oracle runs.
-      val block = Tables.part(s, dir).filter(col("p_size") > 40).select(col("p_partkey"))
-      Blocklist.exactAntiJoin(Tables.lineitem(s, dir), col("l_partkey"),
-          block, col("p_partkey"), expectedItems = 20000L, fpp = 0.01)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"))
-    }),
-
-    "q171_upsert_latest" -> ((s, dir) => {
-      // corpus upsert (MERGE-INTO's keep-latest core): a refresh batch
-      // overlays the snapshot, latest version wins per key — one
-      // shuffle via max(struct(version, row)) on the key (the q30/q158
-      // selection discipline: partial-agg map-side, never a window or
-      // a join-back). The refresh batch here is a deterministic
-      // re-crawl of every 5th doc with one char appended.
-      val old = Tables.documents(s, dir)
-        .select(col("doc_id"), col("n_chars"), lit(1L).as("version"))
-      val fresh = Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), (col("n_chars") + 1).as("n_chars"), lit(2L).as("version"))
-      old.unionByName(fresh)
-        .groupBy(col("doc_id"))
-        .agg(max(struct(col("version"), col("n_chars"))).as("__s"))
-        .select(col("doc_id"), col("__s.version").as("version"),
-          col("__s.n_chars").as("n_chars"))
-    }),
-
-    "q172_interval_overlap" -> ((s, dir) => {
-      // interval×interval overlap join — q76's generalization where BOTH
-      // sides are ranges (ad-windows × session-windows, the scheduling/
-      // co-occurrence primitive). Bucketized equi-join, exact predicate
-      // inside, and the max-start-bucket guard emits each overlapping
-      // pair exactly once — no nested loop, no distinct pass
-      // (plan-gated against BNLJ/CartesianProduct).
-      val ev = Tables.events(s, dir)
-      val a = ev.filter(col("event_type") === "purchase" && col("event_id") % 97 === 0)
-        .select(col("event_id").as("win_a"), col("ts").as("a_start"),
-          (col("ts") + expr("INTERVAL 30 minutes")).as("a_end"))
-      val b = ev.filter(col("event_type") === "click" && col("event_id") % 53 === 0)
-        .select(col("event_id").as("win_b"), col("ts").as("b_start"),
-          (col("ts") + expr("INTERVAL 10 minutes")).as("b_end"))
-      RangeJoin.intervalOverlap(a, col("a_start"), col("a_end"),
-          b, col("b_start"), col("b_end"), bucketWidthSec = 1800L)
-        .select(col("win_a"), col("win_b"),
-          (unix_timestamp(least(col("a_end"), col("b_end")))
-            - unix_timestamp(greatest(col("a_start"), col("b_start"))))
-            .as("overlap_sec"))
-    }),
-
-    "q169_bm25" -> ((s, dir) => {
-      // BM25 keyword retrieval (k1=1.2, b=0.75, Lucene's always-positive
-      // idf) — the lexical-search scorer a doc store pairs with the ANN
-      // path (q127) for hybrid retrieval. One tokenize pass feeds doc
-      // lengths AND term frequencies; the query's posting lists (tf) are
-      // the only rows that reach the scoring join — corpus-sized frames
-      // never shuffle for a 3-term query. Corpus stats ride a scalar
-      // broadcast; per-term scores round then reduce in exact decimal
-      // (q91 discipline).
-      val terms = Seq("spark", "join", "scan")
-      val words = Dedup.cacheScoped(Tables.documents(s, dir)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        .filter(length(col("w")) > 0))
-      val dl = words.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-      val st = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_dl"))
-      val tf = words.filter(col("w").isin(terms: _*))
-        .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
-      val dfq = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-      val avgdl = col("total_dl").cast("double") / col("n_docs")
-      tf.join(dl, Seq("doc_id")).join(broadcast(dfq), Seq("w"))
-        .crossJoin(broadcast(st))
-        .withColumn("s", pround(
-          log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-            * col("tf") * 2.2
-            / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / avgdl)), 12))
-        .groupBy(col("doc_id"))
-        .agg(pround(sum(col("s").cast(DecimalType(27, 14))).cast("double"), 9)
-          .as("bm25"))
-        .orderBy(desc("bm25"), col("doc_id")).limit(20)
-    }),
-
-    "q167_split_leakage" -> ((s, dir) => {
-      // train/test contamination audit: near-dup pairs (q154's
-      // Jaccard-verified tier) that CROSS the q109 split boundary — a
-      // doc and its near-copy landing in different splits silently
-      // inflates eval. Pairs come from the shingle-blocked jaccard
-      // join; the deterministic Lehmer split assignment (q109) is
-      // recomputed map-side on both ends (cheaper than a join against
-      // the assignment frame — it is a pure hash of the key).
-      def splitOf(c: Column) = {
-        val u = (lehmer3(c).cast("double") + 0.5) / 2147483647.0
-        when(u < 0.8, "train").when(u < 0.9, "val").otherwise("test")
-      }
-      val pairs = Dedup.ngramJaccardPairs(
-        Tables.documents(s, dir).filter(col("doc_id") < 100),
-        col("text"), col("doc_id"), k = 2, minJaccard = 0.08)
-      pairs
-        .select(col("key_a"), col("key_b"),
-          splitOf(col("key_a")).as("split_a"), splitOf(col("key_b")).as("split_b"),
-          pround(col("jaccard"), 9).as("jaccard"))
-        .filter(col("split_a") =!= col("split_b"))
-        .orderBy(col("key_a"), col("key_b"))
-    }),
-
-    // ------------------------------------------- round 8: cluster + curate
-    "q177_kmeans_lloyd" -> ((s, dir) => {
-      // converged Lloyd k-means (3 steps) from the 8 lowest-id seeds —
-      // the driver-loop training discipline (q143's parameters-as-
-      // literals) applied to q85's single centroid step: assignment is
-      // map-side against k×d float LITERALS (the corpus never shuffles
-      // to be assigned), per-dim means partial-aggregate in exact
-      // decimal, and each step's round-9 → float narrowing keeps the
-      // trajectory engine-exact (q144's centroid argument). Driver
-      // traffic per step: k×d doubles — corpus-size-independent.
-      val (_, means) = Cluster.lloyd(Tables.embeddings(s, dir),
-        col("vec_id"), col("embedding"), k = 8, iters = 3)
-      means.select(col("cluster").cast("long").as("centroid_id"), col("dim"),
-        col("cv").as("new_val"), col("n_members"))
-    }),
-
-    "q178_semdedup" -> ((s, dir) => {
-      // the full SemDeDup verdict (Abbas et al. 2023) on REFINED
-      // clusters: q106 emits candidate pairs under the raw seed
-      // assignment (window argmin = a per-vector shuffle); this runs a
-      // real Lloyd step first (q177's engine-exact trajectory), assigns
-      // map-side against centroid LITERALS (zero shuffle for
-      // assignment), and emits the per-vector keep/drop decision — the
-      // dedup output a pipeline consumes. Pair blow-up stays bounded
-      // by Σ|cluster|²; deterministic keep-lowest-key exemplar
-      // (q30/q32 discipline).
-      Cluster.semDedup(Tables.embeddings(s, dir), col("vec_id"), col("embedding"),
-          k = 8, iters = 1, minCosine = 0.4)
-        .select(col("key").as("vec_id"), col("cluster").cast("long").as("cluster"),
-          col("removed"))
-    }),
-
-    "q179_gopher_repetition" -> ((s, dir) => {
-      // Gopher repetition gates in their CHARACTER-mass form (Rae et
-      // al. 2021 §A1.1 as reproduced in RedPajama/Dolma — q63/q118 are
-      // the position-mass cousins): per-doc fraction of characters in
-      // the most frequent word 2-gram and in duplicated word 3-grams
-      // (count·len(gram)/len(text), the standard over-counting
-      // convention, clipped at 1), plus the duplicate-word fraction
-      // and the paper's combined pass/fail flag. ONE tokenize pass:
-      // both gram families come from lead() columns over the same
-      // per-doc window; counts stay exact integers until the final
-      // division.
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      val tok = Dedup.cacheScoped(Tables.documents(s, dir)
-        .select(col("doc_id"), length(col("text")).as("nc"),
-          posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
-        .filter(length(col("w")) > 0)
-        .select(col("doc_id"), col("nc"), col("w"),
-          lead(col("w"), 1).over(w).as("l1"), lead(col("w"), 2).over(w).as("l2")))
-      val top2 = tok.filter(col("l1").isNotNull)
-        .select(col("doc_id"), col("nc"), concat_ws(" ", col("w"), col("l1")).as("g"))
-        .groupBy(col("doc_id"), col("g"))
-        .agg(max(col("nc")).as("nc"), count(lit(1)).as("c"))
-        .groupBy(col("doc_id"))
-        .agg(max(col("c") * length(col("g"))).as("tc"), max(col("nc")).as("nc"))
-      val dup3 = tok.filter(col("l2").isNotNull)
-        .select(col("doc_id"), concat_ws(" ", col("w"), col("l1"), col("l2")).as("g"))
-        .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
-        .groupBy(col("doc_id"))
-        .agg(sum(when(col("c") >= 2, col("c") * length(col("g"))).otherwise(lit(0L))).as("dc"))
-      val dw = tok.groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("nw"), countDistinct(col("w")).as("ndw"))
-      top2.join(dup3, Seq("doc_id")).join(dw, Seq("doc_id"))
-        .select(col("doc_id"),
-          pround(col("tc").cast("double") / col("nc"), 9).as("top2_frac"),
-          pround(least(col("dc").cast("double") / col("nc"), lit(1.0)), 9).as("dup3_frac"),
-          pround(lit(1.0) - col("ndw").cast("double") / col("nw"), 9).as("dup_word_frac"),
-          (col("tc").cast("double") / col("nc") > 0.15
-            || col("dc").cast("double") / col("nc") > 0.10).as("flagged"))
-    }),
-
-    "q180_dsir" -> ((s, dir) => {
-      // DSIR-style importance weights (Xie et al. 2023): score every
-      // doc by how target-like its unigram distribution is — Σ over
-      // tokens of ln(p_target/p_raw) with +0.5 / +0.5·V smoothing,
-      // target = the 'en' slice. One tokenize pass feeds per-doc
-      // counts AND both vocabulary distributions (the raw and target
-      // counts are one conditional roll-up of the same frame); the
-      // per-word log-ratio is a broadcast scalar table; per-term
-      // products round then decimal-reduce (q91). Top-20 non-target
-      // docs = what DSIR would pull INTO a target-domain mix.
-      // cache the POST-aggregation (doc, word) counts, not the raw
-      // exploded token frame: dc is both reused frames' common input
-      // (caching tok still re-ran dc's groupBy twice), and it is the
-      // far smaller artifact — an exploded token cache is corpus-sized
-      // string storage whose memory pressure is exactly what a loaded
-      // box amplifies
-      val dc = Dedup.cacheScoped(Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("w"))
-        .filter(length(col("w")) > 0)
-        .groupBy(col("doc_id"), col("lang"), col("w")).agg(count(lit(1)).as("c")))
-      val wc = dc.groupBy(col("w")).agg(
-        sum(col("c")).as("cr"),
-        sum(when(col("lang") === "en", col("c")).otherwise(lit(0L))).as("ct"))
-      val tot = wc.agg(sum(col("cr")).as("nr"), sum(col("ct")).as("nt"), count(lit(1)).as("v"))
-      val lr = wc.crossJoin(broadcast(tot))
-        .select(col("w"), pround(
-          log(((col("ct") + 0.5) / (col("nt") + col("v") * 0.5))
-            / ((col("cr") + 0.5) / (col("nr") + col("v") * 0.5))), 12).as("lr"))
-      dc.filter(col("lang") =!= "en")
-        .join(broadcast(lr), Seq("w"))
-        .groupBy(col("doc_id"), col("lang"))
-        .agg(pround(sum(pround(col("c") * col("lr"), 9).cast(DecimalType(27, 9)))
-          .cast("double"), 6).as("dsir_weight"))
-        .orderBy(desc("dsir_weight"), col("doc_id")).limit(20)
-    }),
-
-    "q181_decontamination" -> ((s, dir) => {
-      // eval-contamination ATTRIBUTION: q73 reports each corpus doc's
-      // pooled overlap ratio against the whole benchmark; this
-      // attributes shared n-grams to the SPECIFIC benchmark item —
-      // the (corpus doc, eval item, n shared grams) provenance rows an
-      // eval card ships (word 3-grams stand in for the usual 13-grams
-      // on this tiny-vocab corpus). Distinct doc×gram pairs equi-join
-      // the BROADCAST benchmark gram set — the corpus side never
-      // shuffles for the probe. The broadcast is valid because the
-      // bench set is BOUNDED by construction (fixed doc_id < 10000
-      // range — a real eval suite is a fixed artifact, not a corpus
-      // fraction); an unbounded %-of-corpus stand-in would outgrow
-      // the driver at 100 TB, where the fallback is a plain shuffle
-      // equi-join on gram (Dedup.decontaminate's shape either way).
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      val grams = Tables.documents(s, dir)
-        .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
-        .filter(length(col("w")) > 0)
-        .select(col("doc_id"), col("w"),
-          lead(col("w"), 1).over(w).as("l1"), lead(col("w"), 2).over(w).as("l2"))
-        .filter(col("l2").isNotNull)
-        .select(col("doc_id"), concat_ws(" ", col("w"), col("l1"), col("l2")).as("gram"))
-        .distinct()
-      val isBench = (col("doc_id") % 97 === 0) && (col("doc_id") < 10000)
-      val bench = grams.filter(isBench)
-        .select(col("doc_id").as("bench_id"), col("gram"))
-      grams.filter(!isBench)
-        .join(broadcast(bench), Seq("gram"))
-        .groupBy(col("doc_id"), col("bench_id"))
-        .agg(count(lit(1)).as("n_shared"))
-        .filter(col("n_shared") >= 2)
-        .orderBy(col("doc_id"), col("bench_id"))
-    }),
-
-    "q182_funnel_3stage" -> ((s, dir) => {
-      // strictly-ordered 3-stage funnel view → click → purchase (q92
-      // is the 2-stage windowed conversion-rate twin): each stage's
-      // timestamp is the MIN event strictly AFTER the previous stage,
-      // so every stage frame stays one row per user and the three
-      // joins share the user_id shuffle key (exchange reuse).
-      val ev = Dedup.cacheScoped(Tables.events(s, dir)
-        .select(col("user_id"), col("event_type"), unix_timestamp(col("ts")).as("sec")))
-      val v = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("sec")).as("t1"))
-      val c = ev.filter(col("event_type") === "click").join(v, Seq("user_id"))
-        .filter(col("sec") > col("t1"))
-        .groupBy(col("user_id")).agg(min(col("sec")).as("t2"), max(col("t1")).as("t1"))
-      val p = ev.filter(col("event_type") === "purchase").join(c, Seq("user_id"))
-        .filter(col("sec") > col("t2"))
-        .groupBy(col("user_id")).agg(min(col("sec")).as("t3"), max(col("t1")).as("t1"))
-      v.agg(count(lit(1)).as("n_view"))
-        .crossJoin(c.agg(count(lit(1)).as("n_click")))
-        .crossJoin(p.agg(count(lit(1)).as("n_purchase"),
-          pround(sum(col("t3") - col("t1")).cast("double") / count(lit(1)) / 3600.0, 9)
-            .as("avg_hours_to_convert")))
-    }),
-
-    "q183_assoc_rules" -> ((s, dir) => {
-      // association rules over session co-visitation (market-basket
-      // analysis, the "viewers also viewed" scorer; q86's PMI is the
-      // log-scaled collocation cousin over word bigrams): support /
-      // confidence / lift from the q148 session-blocked pair counts —
-      // N, per-page session counts and pair counts are ONE distinct-
-      // session frame plus two roll-ups; both rule directions reuse
-      // the same undirected pair count (unioned, never recomputed).
-      // Counts stay exact integers; ratios divide at the end.
-      // r19: the session frame is the per-session page-SET form
-      // (sessionPageSets) — n_sess = one row per set group (identical
-      // to the old countDistinct(user_id, sid): a group exists exactly
-      // where a distinct (user_id, sid) pair did), per-page session
-      // counts explode the sets (each distinct page once per session,
-      // the old distinct frame's row multiset), pairs explode in-row.
-      val sess = Dedup.cacheScoped(sessionPageSets(s, dir))
-      val n = sess.agg(count(lit(1)).as("n_sess"))
-      val pageN = sess.select(explode(col("pgs")).as("page"))
-        .groupBy(col("page")).agg(count(lit(1)).as("np"))
-      val pairs = sessionPagePairs(sess)
-        .select(col("page_a").as("pa"), col("page_b").as("pb"))
-        .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("n_ab"))
-      val both = pairs.select(col("pa").as("ante"), col("pb").as("cons"), col("n_ab"))
-        .unionByName(pairs.select(col("pb").as("ante"), col("pa").as("cons"), col("n_ab")))
-      both
-        .join(broadcast(pageN.select(col("page").as("ante"), col("np").as("na"))), Seq("ante"))
-        .join(broadcast(pageN.select(col("page").as("cons"), col("np").as("nb"))), Seq("cons"))
-        .crossJoin(broadcast(n))
-        .filter(col("n_ab") >= 10)
-        .select(col("ante"), col("cons"), col("n_ab"),
-          pround(col("n_ab").cast("double") / col("n_sess"), 9).as("support"),
-          pround(col("n_ab").cast("double") / col("na"), 9).as("confidence"),
-          pround((col("n_ab") * col("n_sess")).cast("double") / (col("na") * col("nb")), 9)
-            .as("lift"))
-        .orderBy(desc("lift"), col("ante"), col("cons")).limit(30)
-    }),
-
-    "q184_winsorized_mean" -> ((s, dir) => {
-      // winsorized robust statistics: clamp to the exact per-group
-      // [p05, p95] band from the histogram-refinement selector (q165 —
-      // no per-group sort buffer, unlike q95's percentile() clip tier),
-      // then exact-decimal means of the clamped values next to the raw
-      // mean — the outlier-robust readout on the exact-quantile path.
-      val qs = graft.operators.Selection.exactGroupedQuantiles(
-        Tables.lineitem(s, dir), "l_returnflag", "l_extendedprice", Seq(0.05, 0.95))
-      val band = qs.groupBy(col("l_returnflag")).agg(
-        pround(max(when(col("q") === 0.05, col("value"))), 9).as("lo"),
-        pround(max(when(col("q") === 0.95, col("value"))), 9).as("hi"))
-      Tables.lineitem(s, dir).join(broadcast(band), Seq("l_returnflag"))
-        .withColumn("wv", least(greatest(col("l_extendedprice"), col("lo")), col("hi")))
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"),
-          pround(sum(col("l_extendedprice").cast(DecimalType(18, 4))).cast("double")
-            / count(lit(1)), 9).as("raw_mean"),
-          pround(sum(pround(col("wv"), 9).cast(DecimalType(27, 9))).cast("double")
-            / count(lit(1)), 9).as("wins_mean"),
-          max(col("lo")).as("lo"), max(col("hi")).as("hi"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    "q185_stratified_sample" -> ((s, dir) => {
-      // PROPORTIONAL stratified sampling — the 4th member of the
-      // sampling family (q60 fixed-rate, q80 weighted, q99 fixed-k):
-      // within each lang stratum take the first ⌈n/10⌉ docs in
-      // md5(doc_id) order, the allocation that tracks stratum size —
-      // a reproducible 10% audit sample. Strata sizes ride a broadcast
-      // join; md5 order is engine-portable (q161's hash argument).
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), md5(col("doc_id").cast("string")).as("h"))
-      val sizes = d.groupBy(col("lang")).agg(count(lit(1)).as("stratum_n"))
-      val w = Window.partitionBy(col("lang")).orderBy(col("h"), col("doc_id"))
-      d.withColumn("rn", row_number().over(w))
-        .join(broadcast(sizes), Seq("lang"))
-        .filter(col("rn") <= ceil(col("stratum_n") / lit(10.0)))
-        .select(col("lang"), col("stratum_n"), col("doc_id"), col("rn").cast("long").as("rn"))
-    }),
-
-    "q186_vocab_coverage" -> ((s, dir) => {
-      // tokenizer-budget planning: frequency-ranked vocabulary
-      // coverage — the smallest vocab prefix covering 50/90/99% of
-      // token mass, with the coverage attained there (q81 builds the
-      // ranked vocab itself; this answers "how big must it be"). The corpus rolls
-      // up to a VOCAB-sized frame before the only window (global order
-      // over ~|V| rows — the q156 tiny-frame exception, never the
-      // corpus); the threshold test stays exact-integer
-      // (cum·100 ≥ pct·N, no double compare at the boundary).
-      val wc = Tables.documents(s, dir)
-        .select(explode(split(col("text"), " ")).as("w"))
-        .filter(length(col("w")) > 0)
-        .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      val tot = wc.agg(sum(col("c")).as("n_tok"))
-      val ord = Window.orderBy(desc("c"), col("w"))
-      val ranked = wc
-        .withColumn("rank", row_number().over(ord))
-        .withColumn("cum", sum(col("c")).over(
-          ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .crossJoin(broadcast(tot))
-      val taus = s.range(1).select(explode(array(lit(50L), lit(90L), lit(99L))).as("pct"))
-      ranked.crossJoin(broadcast(taus))
-        .filter(col("cum") * 100 >= col("pct") * col("n_tok"))
-        .groupBy(col("pct"))
-        .agg(min(struct(col("rank"), col("cum"))).as("s"), max(col("n_tok")).as("n_tok"))
-        .select(col("pct"), col("s.rank").cast("long").as("vocab_size"),
-          pround(col("s.cum").cast("double") / col("n_tok"), 9).as("coverage"))
-        .orderBy(col("pct"))
-    }),
-
-    "q187_sequence_packing" -> ((s, dir) => {
-      // concat-and-chunk sequence packing: the corpus concatenated in
-      // doc_id order and cut into fixed 256-token context windows, so
-      // a doc can SPAN chunk boundaries (q122's bin packer assigns each
-      // doc to the single bin its first token lands in — no spans);
-      // per-doc [first, last] chunk spans come from the EXCLUSIVE
-      // running offset via the two-pass prefix sum (CumSum — no global
-      // window). The readout is the packing plan's shape: chunks,
-      // boundary-crossing docs (= attention-mask complexity), worst
-      // span.
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id"), TextAnalysis.wsTokenCount(col("text")).cast("long").as("wc"))
-        .filter(col("wc") > 0)
-      CumSum.withRunningTotal(d, Seq(col("doc_id")), col("wc"), "cum")
-        .withColumn("fc", expr("(cum - wc) div 256"))
-        .withColumn("lc", expr("(cum - 1) div 256"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("wc")).as("total_tokens"),
-          (max(col("lc")) + 1).as("n_chunks"),
-          sum((col("lc") > col("fc")).cast("long")).as("n_boundary_docs"),
-          max(col("lc") - col("fc") + 1).as("max_span"))
-    }),
-
-    "q188_ivf_trained" -> ((s, dir) => {
-      // IVF ANN over a TRAINED codebook — q48's scale path upgraded
-      // twice: the coarse quantizer is a Lloyd-refined codebook (q177's
-      // engine-exact trajectory), and corpus assignment AND query
-      // probes are literal-centroid map-side expressions (q48 windows
-      // per vector — a corpus shuffle this deletes). Determinism makes
-      // the WHOLE approximate search an oracle row: recall vs brute
-      // force becomes a measured property (SimilaritySpec), not
-      // nondeterminism — q48 stays the rows-only raw-seed tier.
-      val emb = Tables.embeddings(s, dir)
-      val (state, _) = Cluster.lloyd(emb, col("vec_id"), col("embedding"), k = 8, iters = 2)
-      Cluster.ivfTopK(emb, col("vec_id"), col("embedding"),
-        emb.filter(col("vec_id") < 10), col("vec_id"), col("embedding"),
-        state, k = 5, nprobe = 3)
-    }),
-
-    "q189_mixture_weights" -> ((s, dir) => {
-      // training-mix DESIGN readout (the Pile/DoReMi recipe): per-
-      // source TOKEN mass → share^α (α = 0.7, written exp(α·ln p) so
-      // both engines compose the same transcendentals q86/q149 proved)
-      // → renormalized weight → expected tokens at a 100k budget.
-      // q124 is the APPLY side (doc-level keep-rate sampler over
-      // langs); this emits the per-source budget table a mix designer
-      // reviews before that sampler runs. Two tiny aggs over one
-      // corpus scan; derived doubles round then decimal-reduce (q91).
-      val B = 100000.0
-      val src = Tables.documents(s, dir)
-        .groupBy(col("source"))
-        .agg(sum(TextAnalysis.wsTokenCount(col("text")).cast("long")).as("n_tokens"))
-      val tot = src.agg(sum(col("n_tokens")).as("n_total"))
-      val t = src.crossJoin(broadcast(tot))
-        .withColumn("share", col("n_tokens").cast("double") / col("n_total"))
-        .withColumn("t", pround(exp(log(col("share")) * 0.7), 12))
-      val tt = t.agg(sum(col("t").cast(DecimalType(27, 12))).cast("double").as("t_sum"))
-      t.crossJoin(broadcast(tt))
-        .select(col("source"), col("n_tokens"), pround(col("share"), 9).as("share"),
-          pround(col("t") / col("t_sum"), 9).as("weight"),
-          pround(col("t") / col("t_sum") * B, 3).as("expected_tokens"))
-        .orderBy(col("source"))
-    }),
-
-
-    "q190_rrf_fusion" -> ((s, dir) => {
-      // hybrid retrieval: reciprocal-rank fusion (RRF, k=60) of the
-      // BM25 lexical ranker (q169's scorer) and the embedding cosine
-      // ranker (q36's kernel; doc_id ≡ vec_id) — the standard
-      // score-free fusion a RAG stack runs. Each ranker contributes
-      // its top-50; ranks come from a window over those 50-row frames
-      // (tiny-frame exception); 1/(60+rank) sums are two-term IEEE,
-      // exact in any engine.
-      val terms = Seq("spark", "join", "scan")
-      val words = Dedup.cacheScoped(Tables.documents(s, dir)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        .filter(length(col("w")) > 0))
-      val dl = words.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-      val st = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_dl"))
-      val tf = words.filter(col("w").isin(terms: _*))
-        .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
-      val dfq = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-      val avgdl = col("total_dl").cast("double") / col("n_docs")
-      val bm25 = tf.join(dl, Seq("doc_id")).join(broadcast(dfq), Seq("w"))
-        .crossJoin(broadcast(st))
-        .withColumn("s", pround(
-          log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-            * col("tf") * 2.2
-            / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / avgdl)), 12))
-        .groupBy(col("doc_id"))
-        .agg(pround(sum(col("s").cast(DecimalType(27, 14))).cast("double"), 9).as("bm25"))
-        .orderBy(desc("bm25"), col("doc_id")).limit(50)
-        .withColumn("rb", row_number().over(Window.orderBy(desc("bm25"), col("doc_id"))))
-      val emb = Tables.embeddings(s, dir)
-      val qv = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").as("qv"))
-      val cos = emb.crossJoin(broadcast(qv))
-        .filter(col("vec_id") =!= 0)
-        .select(col("vec_id").as("doc_id"), Vectors.cosine(col("embedding"), col("qv")).as("cos"))
-        .orderBy(desc("cos"), col("doc_id")).limit(50)
-        .withColumn("rc", row_number().over(Window.orderBy(desc("cos"), col("doc_id"))))
-      bm25.select(col("doc_id"), col("rb"))
-        .join(cos.select(col("doc_id"), col("rc")), Seq("doc_id"), "full_outer")
-        .select(col("doc_id"),
-          col("rb").cast("long").as("bm25_rank"),
-          col("rc").cast("long").as("cos_rank"),
-          pround(
-            coalesce(lit(1.0) / (col("rb") + 60), lit(0.0))
-              + coalesce(lit(1.0) / (col("rc") + 60), lit(0.0)), 12).as("rrf"))
-        .orderBy(desc("rrf"), col("doc_id")).limit(20)
-    }),
-
-    "q191_scd2_history" -> ((s, dir) => {
-      // slowly-changing-dimension type 2 build (the warehouse staple
-      // q142's snapshot diff and q171's keep-latest upsert both stop
-      // short of): each user's event_type CHANGES open a validity
-      // interval — consecutive repeats collapse first (run-length
-      // encode via lag), each interval closes at the next change
-      // (lead), the latest stays open (null valid_to). Two window
-      // passes on the SAME user_id key — one shuffle, exchange reused;
-      // never a self-join against the history.
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      Tables.events(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-        .withColumn("prev", lag(col("event_type"), 1).over(w))
-        .filter(col("prev").isNull || col("prev") =!= col("event_type"))
-        .withColumn("valid_to", lead(col("ts"), 1).over(w))
-        .select(col("user_id"), col("event_type"), col("ts").as("valid_from"),
-          col("valid_to"), col("valid_to").isNull.as("is_current"))
-    }),
-
-    "q192_cluster_labels" -> ((s, dir) => {
-      // cluster labeling — the corpus-cartography readout ("what IS
-      // each embedding cluster?") that makes q177/q178/q188's codebook
-      // human-legible: q177's map-side assignment joined to one
-      // tokenize pass, then q163's prior-smoothed log-odds scored per
-      // CLUSTER against the rest of the corpus; top-3 distinctive
-      // terms per cluster ride a WindowGroupLimit. Word and cluster
-      // totals are roll-ups of the same (cluster, word) counts —
-      // one tokenize, one content shuffle.
-      val emb = Tables.embeddings(s, dir)
-      val (state, _) = Cluster.lloyd(emb, col("vec_id"), col("embedding"), k = 8, iters = 2)
-      val assign = emb.select(col("vec_id").as("doc_id"),
-        Cluster.assignCol(col("embedding"), state.centroids.toSeq).as("cluster"))
-      // join the cluster assignment at DOC level, then explode: the join
-      // probes n_docs rows instead of n_tokens, and at 100 TB (where
-      // assign is corpus-sized and must shuffle) the shuffle moves doc
-      // rows, never the exploded token stream
-      val words = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"))
-        .join(assign, Seq("doc_id"))
-        .select(col("cluster"), explode(split(col("text"), " ")).as("word"))
-        .filter(length(col("word")) > 0)
-      val cw = Dedup.cacheScoped(
-        words.groupBy(col("cluster"), col("word")).agg(count(lit(1)).as("cw")))
-      val wtot = cw.groupBy(col("word")).agg(sum(col("cw")).as("w_all"))
-      val ctot = cw.groupBy(col("cluster")).agg(sum(col("cw")).as("n_c"))
-      val n = ctot.agg(sum(col("n_c")).as("n_all"))
-      val z = cw.join(broadcast(wtot), Seq("word")).join(broadcast(ctot), Seq("cluster"))
-        .crossJoin(broadcast(n))
-        .withColumn("rest", col("w_all") - col("cw"))
-        .withColumn("n_rest", col("n_all") - col("n_c"))
-        .withColumn("z", pround(
-          (log((col("cw") + 0.5) / (col("n_c") - col("cw") + 0.5))
-            - log((col("rest") + 0.5) / (col("n_rest") - col("rest") + 0.5)))
-          / sqrt(lit(1.0) / (col("cw") + 0.5) + lit(1.0) / (col("rest") + 0.5)), 9))
-      val w = Window.partitionBy(col("cluster")).orderBy(desc("z"), col("word"))
-      z.withColumn("rank", row_number().over(w)).filter(col("rank") <= 3)
-        .select(col("cluster").cast("long").as("cluster"), col("word"), col("cw"),
-          col("z"), col("rank").cast("long").as("rank"))
-    }),
-
-    "q193_cohens_kappa" -> ((s, dir) => {
-      // inter-rater agreement (Cohen's kappa) between the q108 linear
-      // quality classifier (round-9 score ≥ 0.5) and the lang='en'
-      // label — the "do my two labelers agree beyond chance" statistic
-      // behind weak-supervision pipelines (q150 calibrates one rater;
-      // this compares two). One scan of conditional exact counts;
-      // kappa in closed form from the 2×2 table, every product taken
-      // in double BEFORE multiplying (the q153 overflow lesson —
-      // na·nb at corpus scale exceeds long).
-      val score = TextAnalysis.classifierScore(col("text"),
-        wTokens = 1.2, wStop = 2.0, wAlpha = 1.5, wPunct = -3.0, bias = -1.0)
-      val d = Tables.documents(s, dir)
-        .select((score >= 0.5).cast("long").as("a"),
-          (col("lang") === "en").cast("long").as("b"))
-      val nD = col("n").cast("double")
-      val pe = (col("na").cast("double") * col("nb")
-        + (nD - col("na")) * (col("n") - col("nb"))) / (nD * col("n"))
-      d.agg(count(lit(1)).as("n"),
-          sum(col("a") * col("b")).as("n11"),
-          sum((lit(1) - col("a")) * (lit(1) - col("b"))).as("n00"),
-          sum(col("a")).as("na"), sum(col("b")).as("nb"))
-        .select(col("n"), col("n11"), col("n00"), col("na"), col("nb"),
-          pround(((col("n11") + col("n00")).cast("double") / nD - pe)
-            / (lit(1.0) - pe), 9).as("kappa"))
-    }),
-
-    "q194_wasserstein_drift" -> ((s, dir) => {
-      // distribution drift as earth-mover distance (Wasserstein-1) —
-      // the metric PSI (q166) bin-approximates: W1 between the
-      // ref/cur windows per event_type on the decile grid, and BOTH
-      // windows' deciles come from ONE exact-quantile selector call
-      // on the (type, window) composite group (q165's three shared
-      // scans, no per-group buffer). W1 = mean |q_ref(u) − q_cur(u)|
-      // over the nine deciles; per-term rounding + decimal reduction
-      // (q91) keeps the mean engine-exact.
-      val cutover = to_timestamp(lit("2024-01-15 00:00:00"))
-      val ev = Tables.events(s, dir)
-        .select(concat(col("event_type"), lit("|"),
-          when(col("ts") < cutover, "ref").otherwise("cur")).as("g"), col("value"))
-      val qs = graft.operators.Selection.exactGroupedQuantiles(
-        ev, "g", "value", (1 to 9).map(_ / 10.0))
-      val parts = qs.select(split(col("g"), "\\|").getItem(0).as("event_type"),
-        split(col("g"), "\\|").getItem(1).as("win"), col("q"), col("value"))
-      val a = parts.filter(col("win") === "ref")
-        .select(col("event_type"), col("q"), col("value").as("qr"))
-      val b = parts.filter(col("win") === "cur")
-        .select(col("event_type"), col("q"), col("value").as("qc"))
-      a.join(b, Seq("event_type", "q"))
-        .groupBy(col("event_type"))
-        .agg(pround(sum(pround(abs(col("qr") - col("qc")), 9).cast(DecimalType(27, 9)))
-          .cast("double") / 9.0, 9).as("w1"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q195_ecdf_transform" -> ((s, dir) => {
-      // corpus-WIDE ECDF / rank transform with NO global window (q58's
-      // cume_dist is per-group; global cume_dist would single-partition
-      // the corpus — the WindowExec trap): CumSum.ecdfTable rolls up to
-      // per-value counts, then runs the two-pass running total over the
-      // value-ordered count frame — valid even when the value column is
-      // continuous and the count frame is corpus-sized (the former
-      // bounded-distinct Window tier is gone; the two-pass IS the
-      // general tier). The probe join back is broadcast-eligible
-      // because the probe side is tiny, not because the table is.
-      // The quantile-normalization step behind rank-based scaling.
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("n_chars"))
-      val ecdf = graft.operators.CumSum.ecdfTable(d, col("n_chars"), "n_chars")
-        .select(col("n_chars"), pround(col("ecdf"), 9).as("ecdf"))
-      d.filter(col("doc_id") < 100)
-        .join(ecdf, Seq("n_chars"))
-        .select(col("doc_id"), col("n_chars"), col("ecdf"))
-    }),
-
-    "q196_unicode_nfc" -> ((s, dir) => {
-      // Unicode NFC canonicalization — the step every multilingual
-      // pipeline runs BEFORE hashing/dedup (decomposed e+U+0301 and
-      // precomposed é must share a dedup bucket; q30's md5 over raw
-      // text silently splits them). Native codegen expression over the
-      // JDK normalizer, map-side only. The ASCII synthetic corpus
-      // would make NFC a no-op, so the query PLANTS a decomposed
-      // accent per doc and verifies composition: codepoint length
-      // shrinks by exactly one and byte equality flips.
-      val aug = concat(col("text"), lit("e\u0301"))
-      Tables.documents(s, dir).filter(col("doc_id") < 100)
-        .select(col("doc_id"),
-          length(aug).cast("long").as("len_raw"),
-          length(Extraction.nfc(aug)).cast("long").as("len_nfc"),
-          (Extraction.nfc(aug) === aug).as("unchanged"))
-    }),
-
-    "q197_nfc_dedup" -> ((s, dir) => {
-      // q196 composed into q30's exact dedup — the integration the NFC
-      // expression exists for: every 10th doc appears twice, once with
-      // a DECOMPOSED accent (e+U+0301) and once PRECOMPOSED (é); dedup
-      // on md5(NFC(text)) collapses each pair (raw md5(text) would
-      // miss all of them), survivor = min key per content hash (q30's
-      // single-shuffle min-struct discipline, hash keys can't skew).
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val planted = d.filter(col("doc_id") % 10 === 0)
-      val a = planted.select(col("doc_id"),
-        concat(col("text"), lit("e\u0301")).as("text"))
-      val b = planted.select((col("doc_id") + 1000000L).as("doc_id"),
-        concat(col("text"), lit("\u00e9")).as("text"))
-      d.filter(col("doc_id") % 10 =!= 0).unionByName(a).unionByName(b)
-        .groupBy(md5(Extraction.nfc(col("text"))).as("h"))
-        .agg(min(col("doc_id")).as("survivor"), count(lit(1)).as("n_copies"))
-        .filter(col("n_copies") >= 2)
-        .select(col("survivor"), col("n_copies"))
-    }),
-
-    "q198_ks_drift" -> ((s, dir) => {
-      // exact two-sample Kolmogorov–Smirnov drift per event_type:
-      // KS = sup over the POOLED value grid of |ECDF_ref − ECDF_cur|.
-      // q166's PSI needs a bin choice and q194's W1 a quantile grid;
-      // KS is the binless exactly-computable drift statistic. Scale
-      // shape: one partial agg to per-(type, value) window counts,
-      // then BOTH windows' cumulative counts in ONE
-      // CumSum.withRunningTotals pass ordered by (type, value);
-      // per-type exclusive prefix offsets (a |types|-row driver
-      // frame) rebase the global running totals to within-type — no
-      // per-type Window ever sees a corpus-sized distinct-value
-      // frame (q195's continuous-tier argument, grouped). The sup is
-      // a max over exact-long-ratio doubles; one floor-round at the
-      // end keeps it engine-exact.
-      val cutover = to_timestamp(lit("2024-01-15 00:00:00"))
-      val ev = Tables.events(s, dir).select(col("event_type"), col("value"),
-        when(col("ts") < cutover, "ref").otherwise("cur").as("win"))
-      // cacheScoped: the count frame feeds both the cumulative pass and
-      // the per-type totals — one events scan, not two
-      val c = Dedup.cacheScoped(ev.groupBy(col("event_type"), col("value")).agg(
-        sum(when(col("win") === "ref", 1L).otherwise(0L)).as("cr"),
-        sum(when(col("win") === "cur", 1L).otherwise(0L)).as("cc")))
-      val cum = graft.operators.CumSum.withRunningTotals(c,
-        Seq(col("event_type"), col("value")),
-        Seq(col("cr") -> "gcr", col("cc") -> "gcc"))
-      val tot = c.groupBy(col("event_type"))
-        .agg(sum(col("cr")).as("tr"), sum(col("cc")).as("tc"))
-        .orderBy(col("event_type")).collect()
-      var (ar, ac) = (0L, 0L)
-      val offs = tot.map { r =>
-        val row = (r.getString(0), ar, ac, r.getLong(1), r.getLong(2))
-        ar += r.getLong(1); ac += r.getLong(2); row
-      }.toIndexedSeq
-      import s.implicits._
-      val offDf = offs.toDF("event_type", "offr", "offc", "tr", "tc")
-      cum.join(broadcast(offDf), Seq("event_type"))
-        .filter(col("tr") > 0 && col("tc") > 0)
-        .select(col("event_type"),
-          abs((col("gcr") - col("offr")).cast("double") / col("tr")
-            - (col("gcc") - col("offc")).cast("double") / col("tc")).as("d"))
-        .groupBy(col("event_type"))
-        .agg((floor(max(col("d")) * 1e9 + 0.5) / 1e9).as("ks"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q199_embedding_dim_profile" -> ((s, dir) => {
-      // per-DIMENSION embedding QC — mean/std/min/max and a dead-dim
-      // flag per coordinate (collapsed training runs and quantization
-      // bugs surface as near-zero-variance dims; the vector-column
-      // twin of q84's table profile and the moments behind q96's
-      // min-max scaling stats). One posexplode scan, one (dim)
-      // partial agg of exact-decimal Σv/Σv² — shuffle rows are
-      // dims × partitions, independent of corpus size; moments are
-      // pure IEEE arithmetic on the exact sums (q103 discipline).
-      val D = DecimalType(27, 12)
-      val e = Tables.embeddings(s, dir)
-        .select(posexplode(col("embedding")).as(Seq("dim", "v")))
-        .select(col("dim").cast("long").as("dim"), col("v").cast("double").as("v"))
-      val stats = e.groupBy(col("dim")).agg(
-        count(lit(1)).as("n"),
-        sum(col("v").cast(D)).cast("double").as("sv"),
-        sum((col("v") * col("v")).cast(D)).cast("double").as("svv"),
-        min(col("v")).as("vmin"), max(col("v")).as("vmax"))
-      val nd = col("n").cast("double")
-      val variance = greatest((col("svv") - col("sv") * col("sv") / nd) / nd, lit(0.0))
-      stats.select(col("dim"), col("n"),
-        (floor(col("sv") / nd * 1e9 + 0.5) / 1e9).as("mean"),
-        (floor(sqrt(variance) * 1e9 + 0.5) / 1e9).as("std"),
-        col("vmin"), col("vmax"),
-        (sqrt(variance) < 1e-6).as("dead"))
-        .orderBy(col("dim"))
-    }),
-
-    "q200_zipf_fit" -> ((s, dir) => {
-      // Zipf power-law fit of the corpus vocabulary: OLS slope of
-      // ln(freq) on ln(rank) over the TOP-1000 frequency ranks — the
-      // conventional head fit (the tail departs from the power law,
-      // and bounding the frame also bounds the libm-parity exposure
-      // of the per-term ln). Rank via q81's dense-id discipline (no
-      // global window over the vocab), head filter, then q103's
-      // closed-form exact-decimal OLS — one tiny agg, one output row.
-      // Per-term ln values floor-round to 9 BEFORE the decimal sum so
-      // both engines reduce identical summands.
-      val D = DecimalType(30, 12)
-      def r9(c: Column): Column = floor(c * 1e9 + 0.5) / 1e9
-      def esum(c: Column) = sum(c.cast(D)).cast("double")
-      val counts = Tables.documents(s, dir)
-        .select(explode(split(col("text"), " ")).as("word"))
-        .filter(length(col("word")) > 0)
-        .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-      val ranked = DocPipeline.withDenseIds(counts,
-          struct((-col("cnt")).as("nc"), col("word")), "rk")
-        .filter(col("rk") < 1000)
-        .select(r9(log(col("rk") + 1.0)).as("x"), r9(log(col("cnt"))).as("y"))
-      val st = ranked.agg(count(lit(1)).as("n"),
-        esum(col("x")).as("sx"), esum(col("y")).as("sy"),
-        esum(col("x") * col("y")).as("sxy"), esum(col("x") * col("x")).as("sxx"))
-      val nd = col("n").cast("double")
-      val slope = (nd * col("sxy") - col("sx") * col("sy")) /
-        (nd * col("sxx") - col("sx") * col("sx"))
-      st.select(col("n").as("n_terms"), r9(slope).as("slope"),
-        r9((col("sy") - slope * col("sx")) / nd).as("intercept"))
-    }),
-
-    "q201_url_canonical" -> ((s, dir) => {
-      // URL canonicalization dedup — the crawl-frontier staple the
-      // reference's URL-list ingestion implies (downloader.py consumes
-      // raw url lists): mixed-case scheme/host, default :443 port,
-      // utm_* tracking params and fragments all denote ONE resource,
-      // and a frontier that misses that refetches it. The synthetic
-      // corpus has no URL column, so the query PLANTS the messy forms
-      // deterministically (q196's planting discipline), canonicalizes
-      // with a pure-codegen regex chain (Java∩RE2 syntax, q74
-      // discipline; no capture-group replacements — DuckDB uses \\1
-      // where Java uses $1), and groups: md5-free exact dedup on the
-      // canonical string, q30's min-survivor shape.
-      val u = concat(lit("HTTPS://WWW.Example.COM:443/p/"),
-        (col("doc_id") % 100).cast("string"),
-        lit("?utm_campaign=c"), col("doc_id").cast("string"),
-        lit("&x="), (col("doc_id") % 3).cast("string"),
-        lit("#s"), col("doc_id").cast("string"))
-      val noFrag = regexp_replace(u, "#.*$", "")
-      val prefix = regexp_replace(lower(regexp_extract(noFrag, "^[^/]*//[^/]*", 0)),
-        ":443$", "")
-      val rest = regexp_replace(
-        regexp_replace(regexp_replace(noFrag, "^[^/]*//[^/]*", ""),
-          "\\?utm_[^&]*&", "?"),
-        "[?&]utm_[^&]*", "")
-      Tables.documents(s, dir)
-        .select(col("doc_id"), concat(prefix, rest).as("canon_url"))
-        .groupBy(col("canon_url"))
-        .agg(min(col("doc_id")).as("survivor"), count(lit(1)).as("n_copies"))
-        .filter(col("n_copies") >= 2)
-        .orderBy(col("canon_url"))
-    }),
-
-    "q202_phrase_search" -> ((s, dir) => {
-      // phrase search over a POSITIONAL posting join — the retrieval
-      // feature q169's BM25 (bag-of-words) and q190's fusion can't
-      // express: "w1 w2" as ADJACENT tokens. The corpus's top bigram
-      // (found with one per-doc lead pass, q181's gram shape) is the
-      // query; matching is two posting-list filters (map-side against
-      // the broadcast 1-row phrase) equi-joined on doc_id with the
-      // pos+1 adjacency predicate — the inverted-index formulation:
-      // no document is ever re-scanned or reconstructed, and the join
-      // size is bounded by the two posting lists, not the corpus.
-      val tokens = Dedup.cacheScoped(Tables.documents(s, dir)
-        .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "word")))
-        .filter(length(col("word")) > 0)
-        .select(col("doc_id"), col("pos").cast("long").as("pos"), col("word")))
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      val top = tokens
-        .select(col("word").as("w1"), lead(col("word"), 1).over(w).as("w2"))
-        .filter(col("w2").isNotNull)
-        .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cnt"))
-        .orderBy(desc("cnt"), col("w1"), col("w2")).limit(1)
-      val a = tokens.join(broadcast(top.select(col("w1").as("word"))), Seq("word"))
-        .select(col("doc_id"), col("pos"))
-      val b = tokens.join(broadcast(top.select(col("w2").as("word"))), Seq("word"))
-        .select(col("doc_id"), col("pos").as("pos2"))
-      a.join(b, a("doc_id") === b("doc_id") && col("pos2") === col("pos") + 1)
-        .select(a("doc_id"))
-        .agg(countDistinct(col("doc_id")).as("n_docs"), count(lit(1)).as("n_occurrences"))
-        .crossJoin(broadcast(top.select(col("w1"), col("w2"))))
-        .select(col("w1"), col("w2"), col("n_docs"), col("n_occurrences"))
-    }),
-
-    "q203_clustering_coeff" -> ((s, dir) => {
-      // local clustering coefficient on the co-visitation graph —
-      // 2·tri(v) / (deg(v)·(deg(v)−1)), the community-density signal
-      // q162's raw triangle counts feed: a page in one tight community
-      // scores 1.0 at any degree, a hub bridging many communities
-      // scores near 0. Same degree-oriented wedge join as q162
-      // (per-node counts are orientation-invariant), degrees from the
-      // undirected edge set, coefficient as pure IEEE arithmetic on
-      // the two exact longs with one final floor-round.
-      val und = Dedup.cacheScoped(sessionPagePairs(sessionPageSets(s, dir))
-        .select(col("page_a").as("a"), col("page_b").as("b"))
-        .distinct())
-      val deg = und.select(explode(array(col("a"), col("b"))).as("page"))
-        .groupBy(col("page")).agg(count(lit(1)).as("degree"))
-      val edges = Dedup.cacheScoped(graft.operators.Graph.orientByDegree(und))
-      val tri = edges.select(col("u").as("x"), col("v").as("y"))
-        .join(edges.select(col("u").as("y"), col("v").as("z")), Seq("y"))
-        .join(edges.select(col("u").as("x"), col("v").as("z")), Seq("x", "z"),
-          "left_semi")
-        .select(explode(array(col("x"), col("y"), col("z"))).as("page"))
-        .groupBy(col("page")).agg(count(lit(1)).as("n_triangles"))
-      deg.filter(col("degree") >= 2)
-        .join(tri, Seq("page"), "left")
-        .select(col("page"), col("degree"),
-          coalesce(col("n_triangles"), lit(0L)).as("n_triangles"),
-          (floor(lit(2.0) * coalesce(col("n_triangles"), lit(0L))
-            / (col("degree") * (col("degree") - 1)) * 1e9 + 0.5) / 1e9).as("coeff"))
-        .orderBy(desc("coeff"), col("page")).limit(10)
-    }),
-
-    "q204_kcore" -> ((s, dir) => {
-      // 3-core of the co-visitation graph — the dense-community
-      // pre-filter (peel the low-degree fringe BEFORE paying for
-      // community detection / q203's coefficients on nodes that can't
-      // be in one). Iterative peel with cascading removals runs to a
-      // fixpoint (Graph.kCore: per-round degree agg + two semi-joins,
-      // checkpoint lineage truncation, observed edge-count telemetry,
-      // loud maxIter failure). The oracle unrolls 12 peel rounds —
-      // rounds past the fixpoint are no-ops, so any convergence in
-      // ≤ 12 rounds hash-matches exactly; a deeper cascade would
-      // MISMATCH loudly rather than silently truncate.
-      // r19: the pair frame goes to kCore undeduplicated — kCore's own
-      // symmetrize+distinct subsumes the former .distinct() exchange
-      val und = sessionPagePairs(sessionPageSets(s, dir))
-        .select(col("page_a").as("a"), col("page_b").as("b"))
-      val (core, _) = graft.operators.Graph.kCore(und, k = 3)
-      core.orderBy(col("page"))
-    }),
-
-    "q205_assortativity" -> ((s, dir) => {
-      // degree assortativity (Newman r) of the co-visitation graph —
-      // do popular pages co-occur with popular pages? The one-number
-      // mixing diagnostic community pipelines check before trusting
-      // degree-based cuts. Pearson r of (deg(src), deg(dst)) over the
-      // SYMMETRIZED edge list: two equi-joins onto the degree frame,
-      // q103's closed form on exact DECIMAL(38,0) sums of integer
-      // degrees (long products would overflow at web scale), floor-
-      // round once.
-      val und = sessionPagePairs(sessionPageSets(s, dir))
-        .select(col("page_a").as("u"), col("page_b").as("v"))
-        .distinct()
-      val sym = Dedup.cacheScoped(und.select(col("u").as("src"), col("v").as("dst"))
-        .union(und.select(col("v").as("src"), col("u").as("dst"))))
-      val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("d"))
-      val D = DecimalType(38, 0)
-      def esum(c: Column) = sum(c.cast(D)).cast("double")
-      val e = sym
-        .join(deg.select(col("src"), col("d").as("dx")), Seq("src"))
-        .join(deg.select(col("src").as("dst"), col("d").as("dy")), Seq("dst"))
-      val st = e.agg(count(lit(1)).as("m"),
-        esum(col("dx")).as("sx"), esum(col("dy")).as("sy"),
-        esum(col("dx") * col("dy")).as("sxy"),
-        esum(col("dx") * col("dx")).as("sxx"),
-        esum(col("dy") * col("dy")).as("syy"))
-      val md = col("m").cast("double")
-      val r = (md * col("sxy") - col("sx") * col("sy")) /
-        sqrt((md * col("sxx") - col("sx") * col("sx")) *
-          (md * col("syy") - col("sy") * col("sy")))
-      st.select(col("m").as("n_directed_edges"),
-        (floor(r * 1e9 + 0.5) / 1e9).as("assortativity"))
-    }),
-
-    "q206_adamic_adar" -> ((s, dir) => {
-      // Adamic–Adar link prediction on the co-visitation graph: for
-      // NON-adjacent page pairs, Σ over common neighbors w of
-      // 1/ln(deg(w)) — the related-content score that discounts hub
-      // co-neighbors. Delegates to Graph.adamicAdar: HUB-CAPPED wedge
-      // join (each node wedges through its 64 id-smallest neighbors;
-      // candidates bounded by E·64 instead of Σdeg² — the web-scale
-      // mitigation this query's r9 scaladoc prescribed but didn't
-      // implement), true degrees in the discount, existing edges
-      // removed by an anti-join, per-term scores floor-rounded to 9
-      // then summed as exact DECIMAL(27,9). The oracle implements the
-      // identical deterministic cap.
-      val und = sessionPagePairs(sessionPageSets(s, dir))
-        .select(col("page_a").as("u"), col("page_b").as("v"))
-        .distinct()
-      graft.operators.Graph.adamicAdar(und, capK = 64, topN = 10)
-    }),
-
-    "q207_cusum_changepoint" -> ((s, dir) => {
-      // CUSUM changepoint score on daily event rates — the monitoring
-      // primitive that catches a PERSISTENT rate shift where q87's
-      // z-score flags single outliers: S_i = C_i − min_{j≤i} C_j with
-      // C = Σ(x·D − T) (deviations from the mean, SCALED BY the day
-      // count so everything stays integer — no float recurrence), the
-      // running-max identity that turns the textbook max(0, S+x−μ)
-      // recurrence into two prefix passes. Day frames are bounded by
-      // the CALENDAR (≤ 365·years rows per type at any corpus size),
-      // so per-type windows are the legitimately-bounded exception to
-      // the no-partitioned-window rule (q110's argument). One scan,
-      // one (type, day) agg, exact until the final divide.
-      val daily = Tables.events(s, dir)
-        .groupBy(col("event_type"), date_trunc("DAY", col("ts")).as("day"))
-        .agg(count(lit(1)).as("x"))
-      val wAll = Window.partitionBy(col("event_type"))
-      val wOrd = wAll.orderBy(col("day"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      daily
-        .withColumn("dcnt", count(lit(1)).over(wAll))
-        .withColumn("tot", sum(col("x")).over(wAll))
-        .withColumn("c", sum(col("x") * col("dcnt") - col("tot")).over(wOrd))
-        .withColumn("s", col("c") - min(col("c")).over(wOrd))
-        .select(col("event_type"), col("day"),
-          (floor(col("s").cast("double") / col("dcnt") * 1e9 + 0.5) / 1e9)
-            .as("cusum"))
-        .orderBy(desc("cusum"), col("event_type"), col("day")).limit(10)
-    }),
-
-    "q208_label_prop" -> ((s, dir) => {
-      // synchronous label-propagation communities, 3 FIXED rounds —
-      // the cheap community detector LPA (Raghavan et al.): each round
-      // every node adopts its neighbors' most frequent label. LPA is
-      // notoriously nondeterministic in async formulations; this one
-      // is engine-exact by construction: synchronous rounds, fixed
-      // count (the q112/q143 unrolled-iteration discipline — CC/q204
-      // run to fixpoints because their results are order-invariant;
-      // LPA's isn't, so the round count IS part of the definition),
-      // ties broken (max count, then MIN label) via one struct-max
-      // partial agg — no per-node window. Per round: one edges⋈labels
-      // equi-join + two partial aggs.
-      val und = sessionPagePairs(sessionPageSets(s, dir))
-        .select(col("page_a").as("u"), col("page_b").as("v"))
-        .distinct()
-      val sym = Dedup.cacheScoped(und
-        .union(und.select(col("v"), col("u"))).toDF("src", "dst"))
-      var labels = sym.select(col("src").as("node")).distinct()
-        .withColumn("lbl", col("node"))
-      for (_ <- 1 to 3) {
-        val msgs = sym
-          .join(labels.select(col("node").as("src"), col("lbl")), Seq("src"))
-          .groupBy(col("dst").as("node"), col("lbl"))
-          .agg(count(lit(1)).as("cnt"))
-        labels = msgs.groupBy(col("node"))
-          .agg(max(struct(col("cnt"), (-col("lbl")).as("nl"))).as("m"))
-          .select(col("node"), (-col("m.nl")).as("lbl"))
-      }
-      labels.select(col("node").as("page"), col("lbl").as("community"))
-        .orderBy(col("page"))
-    }),
-
-    "q209_textrank" -> ((s, dir) => {
-      // TextRank keyword extraction (Mihalcea & Tarau): PageRank on the
-      // word co-occurrence graph — adjacent-word edges, symmetric,
-      // weighted by co-occurrence count — surfaces the corpus's
-      // central vocabulary the way raw frequency (q13-style top-k)
-      // can't: a word ranks high for co-occurring with OTHER central
-      // words. Composition: one tokenize pass → lead() adjacency →
-      // (a,b) weight agg → Graph.pageRank (q112's engine-exact
-      // decimal-contribution iteration, 3 damped rounds) → top-20.
-      // String keys route pageRank to its distributed tier — the
-      // 100 TB path exercised on an oracle-matched query.
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      val adj = Tables.documents(s, dir)
-        .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "word")))
-        .filter(length(col("word")) > 0)
-        .select(col("doc_id"), col("word").as("u"),
-          lead(col("word"), 1).over(w).as("v"))
-        .filter(col("v").isNotNull && col("u") =!= col("v"))
-      val und = adj
-        .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("w"))
-      val edges = und.select(col("a").as("src"), col("b").as("dst"), col("w"))
-        .union(und.select(col("b").as("src"), col("a").as("dst"), col("w")))
-      graft.operators.Graph.pageRank(edges, iters = 3)
-        .orderBy(desc("rank"), col("node")).limit(20)
-        .select(col("node").as("word"), col("rank"))
-    }),
-
-    "q210_stream_psi" -> ((s, dir) => {
-      // STREAMING drift monitor — q166's PSI turned into a live gate:
-      // the value stream is binned against a REFERENCE distribution
-      // whose bounds are FROZEN at reference time (the production
-      // norm: the grid must not move under the monitor), counts
-      // aggregate per (daily window, bin) inside a real streaming
-      // query, and the PSI reduction is a tiny batch query over the
-      // sink table — the monitoring-dashboard pattern (stateful
-      // stream does the corpus-sized work; the dashboard math runs
-      // on bins×days rows). Oracle = the batch twin.
-      // ROOT CAUSE of the r9/r10 driver hash-mismatch (found r11, NOT
-      // libm): the oracle's uncast SUM(cc) is a DuckDB HUGEINT, which
-      // pandas converts to float64; the driver's hash is dtype-
-      // sensitive across the int/float divide, so n_cur mismatched the
-      // Spark int64 even with every value equal. Fixed by CAST(SUM(cc)
-      // AS BIGINT) in the oracle; scripts/check_oracle.py now fails
-      // loudly on any int↔float dtype cross.
-      val split = to_timestamp(lit("2024-01-15 00:00:00"))
-      val staging = StreamingOps.defaultStagingDir(s, dir)
-      StreamingOps.stageEventsForStreaming(s, dir, staging)
-      val ref = Tables.events(s, dir).filter(col("ts") < split).select(col("value"))
-      val bounds = ref.agg(min(col("value")).as("lo"), max(col("value")).as("hi"))
-      val binOf = when(col("hi") <= col("lo"), lit(0)).otherwise(
-        least(lit(9), floor((col("value") - col("lo"))
-          / (col("hi") - col("lo")) * 10).cast("int")))
-      val refBins = ref.crossJoin(broadcast(bounds)).select(binOf.as("b"))
-        .groupBy(col("b")).agg(count(lit(1)).as("cr"))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val stream = StreamingOps.eventsStream(s, staging)
-          .filter(col("ts") >= split)
-          .crossJoin(broadcast(bounds))
-          .select(window(col("ts"), "1 day").as("w"), binOf.as("b"))
-          .groupBy(col("w"), col("b")).agg(count(lit(1)).as("cc"))
-        val sunk = StreamingOps.runToMemory(s, stream, "q210_stream_psi")
-          .select(col("w.start").as("day"), col("b"), col("cc"))
-        // dashboard-side PSI per day: full 10-bin grid (q166's
-        // empty-bin argument), ref totals broadcast, term-rounded
-        // exact-decimal reduction
-        val grid = sunk.select(col("day")).distinct()
-          .withColumn("b", explode(sequence(lit(0), lit(9))))
-          .join(sunk, Seq("day", "b"), "left").na.fill(0L, Seq("cc"))
-          .join(broadcast(refBins), Seq("b"), "left").na.fill(0L, Seq("cr"))
-        val nr = refBins.agg(sum(col("cr")).as("nr"))
-        val nc = grid.groupBy(col("day")).agg(sum(col("cc")).as("nc"))
-        // floor-form rounding end-to-end (r9 lesson): pround(double, n)
-        // is BigDecimal-HALF_UP in Spark vs libm in DuckDB and the
-        // 12-digit term sum hits the outer 9-digit half boundary with
-        // ~1e-3 odds per row; floor(x·1eN+0.5)/1eN is pure IEEE and
-        // engine-identical even ON a boundary.
-        grid.join(broadcast(nc), Seq("day")).crossJoin(broadcast(nr))
-          .withColumn("pr", (col("cr") + 0.5) / (col("nr") + 5.0))
-          .withColumn("pc", (col("cc") + 0.5) / (col("nc") + 5.0))
-          .withColumn("term", floor((col("pr") - col("pc"))
-            * log(col("pr") / col("pc")) * 1e12 + 0.5) / 1e12)
-          .groupBy(col("day"), col("nc"))
-          .agg((floor(sum(col("term").cast(DecimalType(27, 14)))
-            .cast("double") * 1e9 + 0.5) / 1e9).as("psi"))
-          .select(col("day"), col("nc").as("n_cur"), col("psi"))
-          .orderBy(col("day"))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }),
-
-    "q211_scd2_lookup" -> ((s, dir) => {
-      // point-in-time dimension lookup — the join q191's SCD-2 build
-      // exists FOR: facts enriched with the dimension version valid AT
-      // EVENT TIME (as-of-state attribution; joining the current
-      // version would leak the future). Dimension: each user's value
-      // TIER (floor(value/25)) at their 'view' events, run-length
-      // collapsed into [valid_from, valid_to) intervals (q191's two
-      // window passes, one user_id shuffle). Facts: 'purchase'
-      // events. The lookup is an EQUI-join on user_id with the
-      // interval predicate riding the same sort-merge — intervals per
-      // user are disjoint by construction, so no range-bucketing is
-      // needed (q76's machinery is for the non-equi case).
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val ev = Tables.events(s, dir)
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          floor(col("value") / 25).cast("long").as("tier"))
-      val scd = views
-        .withColumn("prev", lag(col("tier"), 1).over(w))
-        .filter(col("prev").isNull || col("prev") =!= col("tier"))
-        .withColumn("valid_to", lead(col("ts"), 1).over(w))
-        .select(col("user_id"), col("tier"),
-          col("ts").as("valid_from"), col("valid_to"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value"))
-      purchases.join(scd,
-          purchases("user_id") === scd("user_id") &&
-            purchases("ts") >= scd("valid_from") &&
-            (scd("valid_to").isNull || purchases("ts") < scd("valid_to")))
-        .groupBy(col("tier"))
-        .agg(count(lit(1)).as("n_purchases"), dsum(col("value")).as("total_value"))
-        .orderBy(col("tier"))
-    }),
-
-    "q212_benford" -> ((s, dir) => {
-      // Benford first-significant-digit test per event_type — the
-      // data-forensics staple (synthetic/fabricated numeric columns
-      // flunk it): χ² goodness-of-fit of the observed digit counts
-      // against log10(1+1/d). q100's χ² tests INDEPENDENCE of two
-      // observed categoricals; this tests fit against a FIXED law.
-      // PORTABILITY (the r9 hash-mismatch lesson): no transcendentals
-      // anywhere. Digit extraction via floor(log10 v) can flip the
-      // leading digit entirely when log10 differs 1 ulp near a power
-      // of 10 between the JVM and libm; instead quantize value to an
-      // exact centi-unit integer k = floor(v·100 + 0.5) (IEEE-pure,
-      // engine-identical) and take k's leading digit by plain double
-      // division — k/p < 16 with p a power of 10 is correctly rounded
-      // and identical in both engines. The Benford expectations
-      // log10(1+1/d) are 9 CONSTANTS, inlined as decimal literals
-      // (both engines parse literals correctly-rounded). Terms use
-      // the floor-form round (floor(x·1e9+0.5)/1e9 — pure IEEE),
-      // never pround(double, n) whose BigDecimal-HALF_UP vs libm
-      // semantics diverge on half boundaries. Full 1–9 grid so
-      // absent digits still contribute (q166's empty-bin argument).
-      // The r9/r10 driver hash-mismatch was NONE of the above: the
-      // oracle's uncast SUM(o) → HUGEINT → pandas float64 vs Spark
-      // int64 n_values (dtype-sensitive driver hash). Fixed r11 with
-      // CAST(SUM(o) AS BIGINT); see q210's note.
-      val k = floor(col("value") * 100 + 0.5)
-      val d = when(k >= 1e12, floor(k / 1e12))
-        .when(k >= 1e11, floor(k / 1e11)).when(k >= 1e10, floor(k / 1e10))
-        .when(k >= 1e9, floor(k / 1e9)).when(k >= 1e8, floor(k / 1e8))
-        .when(k >= 1e7, floor(k / 1e7)).when(k >= 1e6, floor(k / 1e6))
-        .when(k >= 1e5, floor(k / 1e5)).when(k >= 1e4, floor(k / 1e4))
-        .when(k >= 1e3, floor(k / 1e3)).when(k >= 100, floor(k / 100))
-        .when(k >= 10, floor(k / 10)).otherwise(k)
-      val ev = Tables.events(s, dir).filter(col("value") > 0 && k >= 1)
-        .select(col("event_type"), d.cast("int").as("d"))
-      val obs = ev.groupBy(col("event_type"), col("d")).agg(count(lit(1)).as("o"))
-      val grid = obs.select(col("event_type")).distinct()
-        .withColumn("d", explode(sequence(lit(1), lit(9))))
-        .join(obs, Seq("event_type", "d"), "left").na.fill(0L, Seq("o"))
-      val tot = grid.groupBy(col("event_type")).agg(sum(col("o")).as("n"))
-      val benford = when(col("d") === 1, lit(0.3010299956639812))
-        .when(col("d") === 2, lit(0.17609125905568124))
-        .when(col("d") === 3, lit(0.12493873660829992))
-        .when(col("d") === 4, lit(0.09691001300805642))
-        .when(col("d") === 5, lit(0.07918124604762482))
-        .when(col("d") === 6, lit(0.06694678963061322))
-        .when(col("d") === 7, lit(0.05799194697768673))
-        .when(col("d") === 8, lit(0.05115252244738129))
-        .otherwise(lit(0.04575749056067514))
-      grid.join(broadcast(tot), Seq("event_type"))
-        .withColumn("e", col("n") * benford)
-        .withColumn("term", (col("o") - col("e")) * (col("o") - col("e")) / col("e"))
-        .groupBy(col("event_type"), col("n"))
-        .agg((floor(sum((floor(col("term") * 1e9 + 0.5) / 1e9)
-            .cast(DecimalType(27, 9))).cast("double") * 1e9 + 0.5) / 1e9)
-          .as("chi2"))
-        .select(col("event_type"), col("n").as("n_values"), col("chi2"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q213_gini" -> ((s, dir) => {
-      // exact Gini coefficient of the value distribution per
-      // event_type — the concentration metric ("is engagement mass in
-      // a few whales?") behind mixture design decisions. Closed form
-      // over DISTINCT-value counts: G = Σ_v v·c_v·(2·cum_v − c_v − n)
-      // / (n · Σ v·c_v) with cum = inclusive cumulative count in
-      // value order — computed by q198's grouped two-pass (ONE
-      // withRunningTotals layout pass + per-type driver offsets), so
-      // no per-type window ever sees a corpus-sized frame.
-      // PORTABILITY (the r9 hash-mismatch lesson): the old form
-      // floor-rounded the ~1e9-magnitude double product v·c·(2cum−c−n)
-      // at 1e6 and cast to DECIMAL(30,6) — at that magnitude the
-      // double's ulp sits AT the 6th decimal, so the decimal cast is
-      // engine-unstable. Instead `value` is quantized ONCE on entry to
-      // an exact centi-unit integer (floor(v·100+0.5), IEEE-pure; the
-      // fixture's values are 2-decimal so this is lossless) and the
-      // whole num/den reduction runs in exact integer DECIMAL(38,0) /
-      // DuckDB HUGEINT — num stays < 2^53 through sf1, so the final
-      // int→double casts are exact in both engines and the single
-      // closing division + floor-form round is bit-identical.
-      // The r9/r10 driver hash-mismatch was never arithmetic: the
-      // oracle's uncast window SUM(cnt) → HUGEINT → pandas float64 vs
-      // Spark int64 n_values (dtype-sensitive driver hash). Fixed r11
-      // with CAST(... AS BIGINT); see q210's note.
-      val ev = Tables.events(s, dir).filter(col("value") >= 0)
-        .select(col("event_type"), col("value"))
-      val c = Dedup.cacheScoped(ev.groupBy(col("event_type"), col("value"))
-        .agg(count(lit(1)).as("cnt")))
-      val cum = graft.operators.CumSum.withRunningTotals(c,
-        Seq(col("event_type"), col("value")), Seq(col("cnt") -> "gcum"))
-      val tot = c.groupBy(col("event_type")).agg(sum(col("cnt")).as("n"))
-        .orderBy(col("event_type")).collect()
-      var acc = 0L
-      val offs = tot.map { r =>
-        val row = (r.getString(0), acc, r.getLong(1)); acc += r.getLong(1); row
-      }.toIndexedSeq
-      import s.implicits._
-      val offDf = offs.toDF("event_type", "off", "n")
-      val DI = DecimalType(14, 0)
-      val cumw = col("gcum") - col("off")
-      val vc = floor(col("value") * 100 + 0.5).cast(DI)
-      val numTerm = vc * col("cnt").cast(DI) *
-        (lit(2) * cumw - col("cnt") - col("n")).cast(DI)
-      val denTerm = vc * col("cnt").cast(DI)
-      cum.join(broadcast(offDf), Seq("event_type"))
-        .select(col("event_type"), col("n"),
-          numTerm.as("nt"), denTerm.as("dt"))
-        .groupBy(col("event_type"), col("n"))
-        .agg(sum(col("nt")).cast("double").as("num"),
-          sum(col("dt")).cast("double").as("den"))
-        .select(col("event_type"), col("n").as("n_values"),
-          (floor(col("num") / (col("n") * col("den")) * 1e9 + 0.5) / 1e9).as("gini"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q214_attribution" -> ((s, dir) => {
-      // position-based (40/20/40) multi-touch attribution — the
-      // marketing-science step past q160's single-touch as-of: each
-      // purchase credits its view/click touches in a 7-DAY lookback
-      // (first 40%, last 40%, middles share 20%; n=1 → 1.0, n=2 →
-      // .5/.5), credits summed per channel. The lookback BOUNDS the
-      // touch join (never all-history), ranks ride per-(user,
-      // purchase) windows whose frames the lookback also bounds;
-      // credit arithmetic is small rationals floor-rounded to 9 and
-      // decimal-reduced.
-      val ev = Tables.events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("pts"))
-      val touches = ev.filter(col("event_type").isin("view", "click"))
-        .select(col("user_id"), col("ts").as("tts"), col("event_id"),
-          col("event_type").as("channel"))
-      val joined = purchases.join(touches, Seq("user_id"))
-        .filter(col("tts") < col("pts") &&
-          col("tts") >= col("pts") - expr("INTERVAL 7 DAYS"))
-      val w = Window.partitionBy(col("user_id"), col("pts"))
-        .orderBy(col("tts"), col("event_id"))
-      val ranked = joined
-        .withColumn("rk", row_number().over(w))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy(col("user_id"), col("pts"))))
-      val credit = when(col("n") === 1, lit(1.0))
-        .when(col("n") === 2, lit(0.5))
-        .when(col("rk") === 1 || col("rk") === col("n"), lit(0.4))
-        .otherwise(lit(0.2) / (col("n") - 2))
-      ranked
-        .select(col("channel"),
-          (floor(credit * 1e9 + 0.5) / 1e9).cast(DecimalType(27, 9)).as("c"))
-        .groupBy(col("channel"))
-        .agg(sum(col("c")).cast("double").as("credit"), count(lit(1)).as("n_touches"))
-        .orderBy(col("channel"))
-    }),
-
-    "q215_peak_concurrency" -> ((s, dir) => {
-      // peak session concurrency by sweep line — "how many sessions
-      // were open at once, and when did load peak": q19's sessions
-      // become +1/−1 boundary deltas NETTED per instant first (so the
-      // cumulative order is total — no tie semantics to get wrong;
-      // a start and an end at the same instant cancel, the half-open
-      // [start, end) convention), then the GLOBAL running total over
-      // the boundary stream is CumSum's two-pass — corpus-sized, no
-      // global window. Top-10 peak moments: the interval-stabbing
-      // primitive behind capacity planning.
-      val sess = graft.streaming.StreamingOps
-        .sessionAgg(Tables.events(s, dir), "5 minutes")
-        .select(col("session_start"), col("session_end"))
-      val deltas = sess.select(col("session_start").as("ts"), lit(1L).as("delta"))
-        .union(sess.select(col("session_end").as("ts"), lit(-1L).as("delta")))
-      val net = deltas.groupBy(col("ts")).agg(sum(col("delta")).as("delta"))
-      graft.operators.CumSum
-        .withRunningTotal(net, Seq(col("ts")), col("delta"), "concurrency")
-        .select(col("ts"), col("concurrency"))
-        .orderBy(desc("concurrency"), col("ts")).limit(10)
-    }),
-
-    "q216_time_to_convert" -> ((s, dir) => {
-      // time-to-event analysis: the DISTRIBUTION of view→purchase
-      // delay (q92 reports the conversion RATE; how long conversion
-      // takes is the survival-analysis companion). First view / first
-      // purchase-after-view per user are one-row-per-user frames on a
-      // shared user_id shuffle (q182's stage shape); the delay
-      // quantiles come from the no-buffer histogram-refinement
-      // selector — integer seconds, so interpolation is exact in both
-      // engines.
-      val ev = Dedup.cacheScoped(Tables.events(s, dir)
-        .select(col("user_id"), col("event_type"), unix_timestamp(col("ts")).as("sec")))
-      val v = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("sec")).as("t1"))
-      val p = ev.filter(col("event_type") === "purchase").join(v, Seq("user_id"))
-        .filter(col("sec") > col("t1"))
-        .groupBy(col("user_id")).agg(min(col("sec") - col("t1")).as("delay"))
-      graft.operators.Selection.exactGroupedQuantiles(
-          p.withColumn("g", lit("all")), "g", "delay",
-          Seq(0.5, 0.9, 0.99))
-        .select(col("q"), col("value").as("delay_sec"))
-        .orderBy(col("q"))
-    }),
-
-    "q217_trailing_wau" -> ((s, dir) => {
-      // trailing 7-day distinct users per day (WAU) — the windowed
-      // COUNT DISTINCT that trailing-sum machinery (q97) can't
-      // decompose: distinct (user, day) activity exploded across the
-      // 7 report days it contributes to (a 7× map-side explode — an
-      // EQUI join shape, never a range join), re-distincted, counted
-      // per report day; report days clipped to observed days. Exact
-      // at any scale; the sketch alternative (q41's HLL) trades this
-      // exactness for state when 7× explode is too much.
-      val daily = Tables.events(s, dir)
-        .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-      val days = daily.select(col("day")).distinct()
-      val contrib = daily
-        .withColumn("off", explode(sequence(lit(0), lit(6))))
-        .select(date_add(col("day"), col("off")).as("day"), col("user_id"))
-        .join(days, Seq("day"), "left_semi")
-      contrib.groupBy(col("day"))
-        .agg(countDistinct(col("user_id")).as("wau"))
-        .orderBy(col("day"))
-    }),
-
-    "q218_dedup_yield" -> ((s, dir) => {
-      // dedup yield report — the capacity-planning readout run BEFORE
-      // committing to a dedup pass ("what would q30 actually save"):
-      // exact-dup group sizes rolled into a size histogram with docs
-      // and characters removed per size class. The synthetic corpus
-      // is dup-free, so every 10th doc is PLANTED as a copy (q197's
-      // discipline) — the histogram then exercises both size classes.
-      // Two partial aggs over one md5 shuffle (uniform by
-      // construction); every number is an exact integer.
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"), col("n_chars"))
-      val corpus = d.unionByName(d.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"), col("n_chars")))
-      val g = corpus
-        .select(md5(col("text")).as("h"), col("n_chars"))
-        .groupBy(col("h"))
-        .agg(count(lit(1)).as("sz"), sum(col("n_chars")).as("chars"),
-          max(col("n_chars")).as("keep_chars"))
-      g.groupBy(col("sz"))
-        .agg(count(lit(1)).as("n_groups"),
-          sum(col("sz") - 1).as("docs_removed"),
-          sum(col("chars") - col("keep_chars")).as("chars_removed"))
-        .orderBy(col("sz"))
-    }),
-
-    "q219_cross_source_dups" -> ((s, dir) => {
-      // cross-source duplication matrix — WHICH sources copy from
-      // which (q132's shingle overlap scores fuzzy similarity; this
-      // counts byte-exact shared content): distinct (content hash,
-      // source) pairs self-joined on the hash, source-pair counts.
-      // Every 10th doc is planted into the NEXT source (rotation
-      // over the 20-source universe) so the matrix is exercised.
-      // The join is bounded by Σ(sources-per-hash)² — content shared
-      // by MANY sources is the skew case, the same AQE argument as
-      // every content-keyed join. Top-10 copying pairs.
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"), col("source"))
-      val srcNum = substring(col("source"), 4, 10).cast("int")
-      val planted = d.filter(col("doc_id") % 10 === 0)
-        .select(col("text"),
-          concat(lit("src"), ((srcNum + 1) % 20).cast("string")).as("source"))
-      val hs = Dedup.cacheScoped(d.select(col("text"), col("source"))
-        .unionByName(planted)
-        .select(md5(col("text")).as("h"), col("source").as("src"))
-        .distinct())
-      hs.select(col("h"), col("src").as("src_a"))
-        .join(hs.select(col("h"), col("src").as("src_b")), Seq("h"))
-        .filter(col("src_a") < col("src_b"))
-        .groupBy(col("src_a"), col("src_b"))
-        .agg(count(lit(1)).as("n_shared"))
-        .orderBy(desc("n_shared"), col("src_a"), col("src_b")).limit(10)
-    }),
-
-    "q220_mann_kendall" -> ((s, dir) => {
-      // Mann–Kendall monotonic-trend test on daily event counts per
-      // type — IS volume drifting up or down (q207's CUSUM finds WHERE
-      // a shift happened; this scores WHETHER a monotone trend
-      // exists): S = Σ_{i<j} sign(x_j − x_i) over day pairs, exact
-      // integer; the pair join is CALENDAR²-bounded per type (q207's
-      // bounded-day argument squared — still tiny at any corpus
-      // size). Tie-corrected variance, z = (S ∓ 1)/√var, one
-      // floor-round at the end.
-      val daily = Dedup.cacheScoped(Tables.events(s, dir)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("x")))
-      val pairs = daily.select(col("event_type"), col("day").as("d1"), col("x").as("x1"))
-        .join(daily.select(col("event_type"), col("day").as("d2"), col("x").as("x2")),
-          Seq("event_type"))
-        .filter(col("d1") < col("d2"))
-      val sAgg = pairs.groupBy(col("event_type"))
-        .agg(sum(signum(col("x2") - col("x1")).cast("long")).as("s_stat"))
-      val nAgg = daily.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-      val ties = daily.groupBy(col("event_type"), col("x"))
-        .agg(count(lit(1)).as("t"))
-        .groupBy(col("event_type"))
-        .agg(sum(col("t") * (col("t") - 1) * (lit(2) * col("t") + 5)).as("tsum"))
-      val varExpr = (col("n") * (col("n") - 1) * (lit(2) * col("n") + 5) - col("tsum"))
-        .cast("double") / 18.0
-      val z = when(col("s_stat") > 0, (col("s_stat") - 1).cast("double") / sqrt(varExpr))
-        .when(col("s_stat") < 0, (col("s_stat") + 1).cast("double") / sqrt(varExpr))
-        .otherwise(lit(0.0))
-      sAgg.join(nAgg, Seq("event_type")).join(ties, Seq("event_type"))
-        .select(col("event_type"), col("n").as("n_days"), col("s_stat"),
-          (floor(z * 1e9 + 0.5) / 1e9).as("z"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q221_roc_auc" -> ((s, dir) => {
-      // exact ROC-AUC of the cheap quality score as a detector of
-      // English docs, per source — the threshold-free eval loop for
-      // ranker/filter models (q108 trains a head; this scores any
-      // scorer, and q150's calibration bins need a threshold). AUC via
-      // the rank-sum identity with midrank tie handling: roll up to
-      // per-(source, score) counts, ONE CumSum two-pass over the
-      // (source, score) order (scores are continuous, so the count
-      // frame is corpus-sized — q195's regime; never a global window),
-      // rebase per source with exclusive prefix offsets (q198's
-      // |groups|-row driver frame). 2·R⁺ = Σ np·(2·cumBefore + n + 1)
-      // stays exact long arithmetic; AUC = (2R⁺ − P(P+1)) / (2PN) is
-      // one exact-long double division — correctly rounded, hence
-      // engine-identical with no explicit rounding.
-      val d = Tables.documents(s, dir).select(col("source"),
-        TextAnalysis.qualityScore(col("text")).as("score"),
-        (col("lang") === "en").cast("long").as("pos"))
-      val c = Dedup.cacheScoped(d.groupBy(col("source"), col("score"))
-        .agg(count(lit(1)).as("n"), sum(col("pos")).as("np")))
-      val cum = CumSum.withRunningTotal(c, Seq(col("source"), col("score")),
-        col("n"), "gcum")
-      val tot = c.groupBy(col("source"))
-        .agg(sum(col("n")).as("tn"), sum(col("np")).as("tp"))
-        .orderBy(col("source")).collect()
-      var acc = 0L
-      val offs = tot.map { r =>
-        val row = (r.getString(0), acc, r.getLong(1), r.getLong(2))
-        acc += r.getLong(1); row
-      }.toIndexedSeq
-      import s.implicits._
-      val offDf = offs.toDF("source", "off", "tn", "tp")
-      cum.join(broadcast(offDf), Seq("source"))
-        .withColumn("r2",
-          lit(2) * (col("gcum") - col("off") - col("n")) + col("n") + 1)
-        .groupBy(col("source")).agg(sum(col("np") * col("r2")).as("rp2"))
-        .join(broadcast(offDf), Seq("source"))
-        .filter(col("tp") > 0 && col("tn") - col("tp") > 0)
-        .select(col("source"), col("tp").as("n_pos"),
-          (col("tn") - col("tp")).as("n_neg"),
-          ((col("rp2") - col("tp") * (col("tp") + 1)).cast("double")
-            / (lit(2) * col("tp") * (col("tn") - col("tp"))).cast("double"))
-            .as("auc"))
-        .orderBy(col("source"))
-    }),
-
-    "q222_mann_whitney" -> ((s, dir) => {
-      // exact Mann–Whitney U: does the `value` distribution of clicks
-      // differ from purchases? The nonparametric two-sample test behind
-      // A/B readouts on skewed metrics (q174's CUPED assumes means;
-      // ranks don't). Same midrank machinery as q221 — per-value
-      // counts, one global CumSum two-pass (values are continuous;
-      // no global window) — then 2R₁ exact, tie-corrected variance,
-      // continuity-corrected z. All integer arithmetic until the final
-      // σ (sqrt is correctly rounded, so the mirrored formula is
-      // engine-identical); one floor-round on z.
-      val ev = Tables.events(s, dir)
-        .filter(col("event_type").isin("click", "purchase"))
-        .select(col("value"),
-          (col("event_type") === "click").cast("long").as("g1"))
-      val c = Dedup.cacheScoped(ev.groupBy(col("value"))
-        .agg(count(lit(1)).as("n"), sum(col("g1")).as("n1v")))
-      val cum = CumSum.withRunningTotal(c, Seq(col("value")), col("n"), "gcum")
-      val r = cum.agg(sum(col("n1v") *
-        (lit(2) * (col("gcum") - col("n")) + col("n") + 1)).as("r1x2"))
-      // tie term in DECIMAL: long n³ silently wraps past n ≈ 2.1M tied
-      // rows while DuckDB widens to HUGEINT — exact-arithmetic
-      // discipline (r9 ADVICE), no present-day fixture reaches it
-      val nD = col("n").cast(DecimalType(14, 0))
-      val t = c.agg(sum(col("n")).as("nn"), sum(col("n1v")).as("n1"),
-        sum(nD * nD * nD - nD).as("tie"))
-      val j = r.crossJoin(broadcast(t))
-        .withColumn("n2", col("nn") - col("n1"))
-        .withColumn("u1x2", col("r1x2") - col("n1") * (col("n1") + 1))
-        .withColumn("num2", col("u1x2") - col("n1") * col("n2"))
-        .withColumn("sig", sqrt(
-          col("n1").cast("double") * col("n2").cast("double") / 12.0
-            * (col("nn").cast("double") + 1.0
-               - col("tie").cast("double")
-                 / (col("nn").cast("double") * (col("nn").cast("double") - 1.0)))))
-      val z = when(col("num2") > 0,
-          (col("num2") - 1).cast("double") / (lit(2.0) * col("sig")))
-        .when(col("num2") < 0,
-          (col("num2") + 1).cast("double") / (lit(2.0) * col("sig")))
-        .otherwise(lit(0.0))
-      j.select(col("n1"), col("n2"),
-        (col("u1x2").cast("double") / 2.0).as("u1"),
-        (floor(z * 1e9 + 0.5) / 1e9).as("z"))
-    }),
-
-    "q223_seasonal_decompose" -> ((s, dir) => {
-      // STL-lite additive decomposition of daily event volume per type
-      // [EXT]: trend = centered 7-day moving average (full windows
-      // only), seasonal = day-of-week mean of the detrended series,
-      // residual = detrended − seasonal — the monitoring decomposition
-      // that separates "weekend dip" from "real drop" (q207 flags
-      // level shifts; this explains the periodic part). Day frames are
-      // calendar-bounded (q207's argument), so the per-type ordered
-      // window is legitimate at any corpus size; dow means reduce with
-      // the house pround+decimal discipline. dow via weekday()+1 =
-      // DuckDB's isodow (Mon=1) — Spark's dayofweek() starts at
-      // Sunday and would silently shift the seasonal index.
-      val daily = Tables.events(s, dir)
-        .groupBy(col("event_type"), date_trunc("DAY", col("ts")).as("day"))
-        .agg(count(lit(1)).as("x"))
-      val w7 = Window.partitionBy(col("event_type")).orderBy(col("day"))
-        .rowsBetween(-3, 3)
-      val t = daily
-        .withColumn("s7", sum(col("x")).over(w7))
-        .withColumn("c7", count(lit(1)).over(w7))
-        .withColumn("trend", when(col("c7") === 7, col("s7") / lit(7.0)))
-        .withColumn("detr", col("x") - col("trend"))
-        .withColumn("dow", weekday(col("day")) + 1)
-      val seas = t.filter(col("detr").isNotNull)
-        .groupBy(col("event_type"), col("dow"))
-        .agg((sum(pround(col("detr"), 9).cast(DecimalType(27, 9))).cast("double")
-          / count(lit(1))).as("s0"))
-      t.join(seas, Seq("event_type", "dow"), "left")
-        .select(col("event_type"), col("day"), col("x"),
-          pround(col("trend"), 9).as("trend"),
-          pround(col("s0"), 9).as("seasonal"),
-          pround(col("detr") - col("s0"), 9).as("residual"))
-        .orderBy(col("event_type"), col("day"))
-    }),
-
-    "q224_sorted_neighborhood" -> ((s, dir) => {
-      // sorted-neighborhood blocking dedup [EXT] (Hernández–Stolfo):
-      // the classic record-linkage alternative to LSH blocking — sort
-      // the corpus by a normalized key and compare each record ONLY to
-      // its w nearest neighbors in sort order. Candidates are exactly
-      // ≤ w·n regardless of skew (an LSH hot band can go quadratic;
-      // the sorted window cannot). Global rank WITHOUT a global
-      // window via the q25 dense-id two-pass (range-partitioned sort +
-      // broadcast offsets — the terasort shape, legitimate at 100 TB);
-      // neighbor pairs via a rid-div-w band equi-join (each row emits
-      // its own and the next band key — never a theta join); verified
-      // with exact word-set Jaccard (q34's array machinery, 1-shingle
-      // word sets).
-      val w = 4
-      val docs = Tables.documents(s, dir).select(col("doc_id"),
-        substring(regexp_replace(lower(col("text")), "[^a-z0-9]", ""), 1, 32).as("nk"),
-        graft.functions.Shingles.shingles(col("text"), 1, distinct = true).as("ws"))
-      val ranked = graft.operators.DocPipeline.withDenseIds(
-        docs, struct(col("nk"), col("doc_id")), "rid")
-      val x = Dedup.cacheScoped(ranked.select(col("doc_id"), col("rid"), col("ws")))
-      val aExp = x.select(col("rid").as("rid_a"), col("doc_id").as("id_a"),
-          col("ws").as("ws_a"), floor(col("rid") / lit(w.toDouble)).as("b0"))
-        .withColumn("jb", explode(array(col("b0"), col("b0") + 1))).drop("b0")
-      val bSide = x.select(floor(col("rid") / lit(w.toDouble)).as("jb"),
-        col("rid").as("rid_b"), col("doc_id").as("id_b"), col("ws").as("ws_b"))
-      aExp.join(bSide, Seq("jb"))
-        .filter((col("rid_b") - col("rid_a")).between(1, w))
-        .filter(size(array_union(col("ws_a"), col("ws_b"))) > 0)
-        .select(col("id_a"), col("id_b"),
-          (size(array_intersect(col("ws_a"), col("ws_b"))).cast("double") /
-            size(array_union(col("ws_a"), col("ws_b")))).as("jaccard"))
-        .filter(col("jaccard") > 0)
-        .orderBy(desc("jaccard"), col("id_a"), col("id_b")).limit(20)
-        .select(col("id_a"), col("id_b"), pround(col("jaccard"), 9).as("jaccard"))
-    }),
-
-    "q225_theil_sen" -> ((s, dir) => {
-      // Theil–Sen robust trend [EXT]: the median of all pairwise daily
-      // slopes per event_type — the estimator that shrugs off the
-      // outlier days that wreck q103's least squares (29% breakdown
-      // point vs 0%). Day-pair frames are calendar²-bounded per type
-      // (q220's argument — ≤ (365·years)², never corpus-sized), and
-      // the median rides the no-buffer histogram-refinement selector,
-      // bit-equal to quantile_cont.
-      val daily = Tables.events(s, dir)
-        .groupBy(col("event_type"), date_trunc("DAY", col("ts")).as("day"))
-        .agg(count(lit(1)).as("x"))
-        .withColumn("di", datediff(col("day"), to_date(lit("2024-01-01"))))
-      val a = daily.select(col("event_type"), col("di").as("da"), col("x").as("xa"))
-      val b = daily.select(col("event_type"), col("di").as("db"), col("x").as("xb"))
-      val slopes = Dedup.cacheScoped(
-        a.join(b, Seq("event_type")).filter(col("db") > col("da"))
-          .select(col("event_type"),
-            ((col("xb") - col("xa")).cast("double") / (col("db") - col("da")))
-              .as("slope")))
-      val med = graft.operators.Selection.exactGroupedQuantiles(
-        slopes, "event_type", "slope", Seq(0.5))
-      val n = slopes.groupBy(col("event_type")).agg(count(lit(1)).as("n_pairs"))
-      med.join(n, Seq("event_type"))
-        .select(col("event_type"), col("n_pairs"), pround(col("value"), 9).as("sen_slope"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q226_embedding_covariance" -> ((s, dir) => {
-      // per-label covariance matrix of the first 16 embedding dims
-      // [EXT] — the PCA/whitening prep and the QC companion to q199's
-      // per-dim profile (a near-singular covariance flags collapsed
-      // dimensions; cross-label covariance shifts flag encoder drift).
-      // Upper triangle flattened MAP-SIDE by a nested posexplode over
-      // the same row (never a self-join): n·d(d+1)/2 product rows flow
-      // into a partial agg keyed by (label, i, j), so the shuffle
-      // carries ≤ labels·136 cells at any corpus size. float·float is
-      // EXACT in double (24-bit mantissas), the per-cell sums reduce
-      // in DECIMAL(27,12) (order-free), and cov = E[xy] − E[x]E[y]
-      // closes in IEEE doubles + pround. Dims are 1-based in the
-      // output to match the oracle's list indexing.
-      val d = 16
-      val base = Tables.embeddings(s, dir)
-        .select(col("label").cast("long").as("label"),
-          slice(col("embedding"), 1, d).as("e"))
-      val lvl1 = base.select(col("label"), col("e"),
-        posexplode(col("e")).as(Seq("i0", "xi")))
-      val tri = lvl1.select(col("label"), col("i0"), col("xi"),
-          posexplode(slice(col("e"), col("i0") + 1, lit(d))).as(Seq("k", "xj")))
-        .select(col("label"), (col("i0") + 1).as("i"),
-          (col("i0") + col("k") + 1).as("j"),
-          (col("xi").cast("double") * col("xj").cast("double")).as("xy"))
-      val sxy = tri.groupBy(col("label"), col("i"), col("j"))
-        .agg(sum(col("xy").cast(DecimalType(27, 12))).cast("double").as("sxy"),
-          count(lit(1)).as("n"))
-      val mx = base.select(col("label"), posexplode(col("e")).as(Seq("i0", "x")))
-        .groupBy(col("label"), (col("i0") + 1).as("i"))
-        .agg(sum(col("x").cast("double").cast(DecimalType(27, 12)))
-          .cast("double").as("sx"))
-      sxy
-        .join(broadcast(mx.select(col("label"), col("i"), col("sx").as("sxi"))),
-          Seq("label", "i"))
-        .join(broadcast(mx.select(col("label"), col("i").as("j"), col("sx").as("sxj"))),
-          Seq("label", "j"))
-        .select(col("label"), col("i"), col("j"),
-          pround(col("sxy") / col("n")
-            - (col("sxi") / col("n")) * (col("sxj") / col("n")), 9).as("cov"))
-        .orderBy(col("label"), col("i"), col("j"))
-    }),
-
-    "q227_stream_hourly_anomaly" -> ((s, dir) => {
-      // STREAMING hourly-volume anomaly gate [EXT] — q210's
-      // monitoring-dashboard split applied to q87's z-score: the
-      // baseline (mean/std of hourly counts per HOUR-OF-DAY, so a 3am
-      // lull isn't an anomaly at 3am) is FROZEN from the reference
-      // window; the live stream aggregates per absolute hour inside a
-      // real streaming query; the dashboard z-scores the sink against
-      // the broadcast baseline (≤ 24 rows). Variance via exact integer
-      // Σx/Σx² decimal sums; sqrt is IEEE-correctly-rounded so the
-      // closing arithmetic is engine-identical; negative-epsilon
-      // variance clamped via greatest(var, 0) on BOTH sides.
-      val split = to_timestamp(lit("2024-01-15 00:00:00"))
-      val staging = StreamingOps.defaultStagingDir(s, dir)
-      StreamingOps.stageEventsForStreaming(s, dir, staging)
-      val refHourly = Tables.events(s, dir).filter(col("ts") < split)
-        .groupBy(date_trunc("HOUR", col("ts")).as("h"))
-        .agg(count(lit(1)).as("c"))
-      val baseline = refHourly
-        .groupBy(hour(col("h")).as("hod"))
-        .agg(count(lit(1)).as("nh"),
-          sum(col("c").cast(DecimalType(27, 0))).cast("double").as("sc"),
-          sum((col("c") * col("c")).cast(DecimalType(27, 0))).cast("double").as("sc2"))
-        .select(col("hod"), (col("sc") / col("nh")).as("mu"),
-          sqrt(greatest(
-            col("sc2") / col("nh") - (col("sc") / col("nh")) * (col("sc") / col("nh")),
-            lit(0.0))).as("sd"))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val stream = StreamingOps.eventsStream(s, staging)
-          .filter(col("ts") >= split)
-          .select(window(col("ts"), "1 hour").as("w"))
-          .groupBy(col("w")).agg(count(lit(1)).as("n"))
-        val sunk = StreamingOps.runToMemory(s, stream, "q227_stream_hourly_anomaly")
-          .select(col("w.start").as("hs"), col("n"))
-        sunk.join(broadcast(baseline), hour(col("hs")) === col("hod"))
-          .filter(col("sd") > 0)
-          .select(col("hs"), col("n"),
-            pround((col("n") - col("mu")) / col("sd"), 9).as("z"))
-          .orderBy(desc("z"), col("hs")).limit(20)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }),
-
-    "q228_harmonic_centrality" -> ((s, dir) => {
-      // 3-hop harmonic centrality on the co-visitation page graph
-      // [EXT]: Σ over v reachable in d(u,v) ≤ 3 of 1/d — the
-      // closeness-family complement to q112's PageRank (authority ≠
-      // proximity). Delegates to Graph.harmonicCentrality3 (round-14):
-      // ring-subtraction BFS, all equi/anti joins — with the q206-style
-      // HUB-CAP TIER for skewed graphs (Σ deg² over `exactWedgeCap`
-      // routes expansion through each node's 64 id-smallest neighbors,
-      // bounding ring candidates by E·64 instead of Σ deg³). Test-scale
-      // graphs stay under the guard, so this query runs the EXACT tier
-      // and the oracle is the textbook computation; the capped tier is
-      // pinned by the planted-hub spec; the tier taken is surfaced
-      // (Graph.lastHarmonicTier, r15) — a capped run is a documented
-      // lower bound, so the oracle comparison is only meaningful when
-      // the tier is "exact". Harmonic = n1 + n2/2 + n3/3: exact
-      // integer counts, two IEEE divisions, engine-identical.
-      val und = sessionPagePairs(sessionPageSets(s, dir))
-        .select(col("page_a").as("u"), col("page_b").as("v"))
-        .distinct()
-      graft.operators.Graph.harmonicCentrality3(und, hubCap = 64, topN = 20)
-    }),
-
-    "q229_rolling_correlation" -> ((s, dir) => {
-      // 7-day rolling Pearson correlation between daily click and
-      // purchase volumes [EXT] — the co-movement monitor behind "did
-      // the funnel decouple?" (q103 fits ONE global line; this tracks
-      // the relationship day by day). All sums are exact integers
-      // inside calendar-bounded frames (≤ 365·years rows total — the
-      // single ordered series is the documented tiny-frame exception,
-      // like q207); the closing r = (n·sxy − sx·sy)/√(...) is pure
-      // IEEE, identical in both engines; degenerate windows (zero
-      // variance) drop via the den > 0 guard on both sides.
-      val ev = Tables.events(s, dir)
-        .filter(col("event_type").isin("click", "purchase"))
-        .groupBy(date_trunc("DAY", col("ts")).as("day"))
-        .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("x"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("y"))
-      val w7 = Window.orderBy(col("day")).rowsBetween(-6, 0)
-      val m = ev
-        .withColumn("cnt", count(lit(1)).over(w7))
-        .withColumn("sx", sum(col("x")).over(w7))
-        .withColumn("sy", sum(col("y")).over(w7))
-        .withColumn("sxy", sum(col("x") * col("y")).over(w7))
-        .withColumn("sxx", sum(col("x") * col("x")).over(w7))
-        .withColumn("syy", sum(col("y") * col("y")).over(w7))
-        .filter(col("cnt") === 7)
-      val num = (col("cnt") * col("sxy") - col("sx") * col("sy")).cast("double")
-      val den = sqrt((col("cnt") * col("sxx") - col("sx") * col("sx")).cast("double")
-        * (col("cnt") * col("syy") - col("sy") * col("sy")).cast("double"))
-      m.filter((col("cnt") * col("sxx") - col("sx") * col("sx")) > 0 &&
-          (col("cnt") * col("syy") - col("sy") * col("sy")) > 0)
-        .select(col("day"), pround(num / den, 9).as("r"))
-        .orderBy(col("day"))
-    }),
-
-    "q230_aspect_bucketing" -> ((s, dir) => {
-      // aspect-ratio bucketing [EXT] — the diffusion-training batcher
-      // (SDXL-style): each image lands in the ladder bucket minimizing
-      // its aspect distance, then per-bucket batch counts at B=8 — the
-      // "how many uniform batches does my corpus yield" capacity
-      // planner. Distance is the CROSS-MULTIPLIED |w·bh − h·bw| (exact
-      // integer arithmetic — no log-ratio transcendental to diverge
-      // between engines; ties to the smaller bucket index, resolved by
-      // one struct-min partial agg, never a per-doc window). Decode
-      // rides the q38 typed-mapPartitions codec path (stubbed codec,
-      // real plumbing); the 7-row ladder broadcasts with the closure.
-      import s.implicits._
-      val withMedia = Multimodal.withBinaryPayload(
-        Tables.documents(s, dir).select(col("doc_id"), col("text")), "text")
-      val meta = Multimodal.decodeMetadata(withMedia,
-          codec = Multimodal.FakeImageCodec).toDF()
-        .select(col("doc_id"), col("width").cast("long").as("w"),
-          col("height").cast("long").as("h"))
-      val ladder = Seq((1, 256L, 1024L), (2, 384L, 768L), (3, 448L, 576L),
-        (4, 512L, 512L), (5, 576L, 448L), (6, 768L, 384L), (7, 1024L, 256L))
-        .toDF("bucket", "bw", "bh")
-      meta.crossJoin(broadcast(ladder))
-        .select(col("doc_id"), col("bucket"), col("bw"), col("bh"),
-          abs(col("w") * col("bh") - col("h") * col("bw")).as("cost"))
-        .groupBy(col("doc_id"))
-        .agg(min(struct(col("cost"), col("bucket"), col("bw"), col("bh"))).as("best"))
-        .groupBy(col("best.bucket").as("bucket"),
-          col("best.bw").as("bw"), col("best.bh").as("bh"))
-        .agg(count(lit(1)).as("n_docs"))
-        .withColumn("n_batches", ceil(col("n_docs") / lit(8.0)).cast("long"))
-        .withColumn("leftover", col("n_docs") % 8)
-        .orderBy(col("bucket"))
-    }),
-
-    "q231_neyman_allocation" -> ((s, dir) => {
-      // Neyman-optimal stratified sample allocation [EXT]: per-source
-      // sample budgets n_h ∝ N_h·σ_h — the design that minimizes
-      // estimator variance at fixed total budget (q185 allocates
-      // proportionally to SIZE; Neyman also weights by in-stratum
-      // spread, so a volatile source gets more budget than a uniform
-      // one). σ from exact integer Σx/Σx² decimal sums (population
-      // form); integerization by largest-remainder (Hamilton): floors
-      // first, the remaining seats by biggest fractional part — ranked
-      // over the ≤|sources|-row strata frame (tiny-frame window
-      // exception, like q110's top-50). All shares are identical IEEE
-      // doubles in both engines, so seat order ties break identically
-      // (then by source name). Degenerate all-σ=0 corpora fall back to
-      // proportional-to-size on BOTH sides.
-      val budget = 1000L
-      val st = Tables.documents(s, dir)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("nh"),
-          sum(col("n_chars").cast(DecimalType(27, 0))).cast("double").as("sx"),
-          sum((col("n_chars") * col("n_chars")).cast(DecimalType(27, 0)))
-            .cast("double").as("sx2"))
-        .select(col("source"), col("nh"),
-          sqrt(greatest(col("sx2") / col("nh")
-            - (col("sx") / col("nh")) * (col("sx") / col("nh")), lit(0.0))).as("sigma"))
-      val tot = st.agg(sum(col("nh") * col("sigma")).as("wsum"),
-        sum(col("nh")).as("ntot"))
-      val shared = st.crossJoin(broadcast(tot))
-        .withColumn("share", when(col("wsum") > 0,
-            lit(budget.toDouble) * col("nh") * col("sigma") / col("wsum"))
-          .otherwise(lit(budget.toDouble) * col("nh") / col("ntot")))
-        .withColumn("base", floor(col("share")))
-        .withColumn("frac", col("share") - col("base"))
-      val wRank = Window.orderBy(desc("frac"), col("source"))
-      shared
-        .withColumn("extra",
-          when(row_number().over(wRank) <=
-            (lit(budget) - sum(col("base")).over()), 1L).otherwise(0L))
-        .select(col("source"), col("nh").as("n_docs"),
-          pround(col("sigma"), 9).as("sigma"),
-          (col("base") + col("extra")).as("alloc"))
-        .orderBy(col("source"))
-    }),
-
-    "q232_kendall_tau" -> ((s, dir) => {
-      // Kendall τ-b between daily click and purchase volumes [EXT] —
-      // the tie-robust rank companion to q229's rolling Pearson (rank
-      // concordance survives outlier days that bend a linear r; τ-b's
-      // denominator corrects for tied days on either margin). Same
-      // calendar²-bounded day-pair join as q220; concordant/discordant
-      // /tie counts are EXACT integers, the closing
-      // (C−D)/√((n0−n1)(n0−n2)) is two exact-int casts, one sqrt and
-      // one division — pure IEEE both engines, one floor-round.
-      val daily = Dedup.cacheScoped(Tables.events(s, dir)
-        .filter(col("event_type").isin("click", "purchase"))
-        .groupBy(date_trunc("DAY", col("ts")).as("day"))
-        .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("x"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("y")))
-      val pairs = daily.select(col("day").as("d1"), col("x").as("x1"), col("y").as("y1"))
-        .join(daily.select(col("day").as("d2"), col("x").as("x2"), col("y").as("y2")),
-          col("d1") < col("d2"))
-      val cd = pairs.agg(
-        count(lit(1)).as("n0"),
-        sum(when((col("x2") - col("x1")) * (col("y2") - col("y1")) > 0, 1L)
-          .otherwise(0L)).as("c"),
-        sum(when((col("x2") - col("x1")) * (col("y2") - col("y1")) < 0, 1L)
-          .otherwise(0L)).as("d"),
-        sum(when(col("x1") === col("x2"), 1L).otherwise(0L)).as("n1"),
-        sum(when(col("y1") === col("y2"), 1L).otherwise(0L)).as("n2"))
-      val n = daily.agg(count(lit(1)).as("n_days"))
-      cd.crossJoin(n)
-        .filter(col("n0") - col("n1") > 0 && col("n0") - col("n2") > 0)
-        .select(col("n_days"), col("c").as("concordant"), col("d").as("discordant"),
-          (floor((col("c") - col("d")).cast("double")
-            / sqrt((col("n0") - col("n1")).cast("double")
-              * (col("n0") - col("n2")).cast("double")) * 1e9 + 0.5) / 1e9).as("tau_b"))
-    }),
-
-    "q233_calibration_error" -> ((s, dir) => {
-      // expected calibration error [EXT] — q150's decile reliability
-      // table reduced to the headline scalar: ECE = Σ_b (n_b/N)·
-      // |acc_b − conf_b| (Guo et al.'s metric behind "is the quality
-      // classifier overconfident?"). Rides q150's exact calibration
-      // study — same weights, same least(floor(p·10), 9) deciles — so
-      // the scalar IS that table's summary; per-bucket sums reduce in
-      // exact decimal (scores are 9-digit by construction, labels
-      // integer), the closing weighted sum floor-rounds each |gap| at
-      // 9 then reduces in DECIMAL — fully engine-portable.
-      // The r10 driver hash-mismatch was not the sigmoid: the oracle's
-      // uncast SUM(nb) → HUGEINT → pandas float64 vs Spark int64
-      // n_docs (dtype-sensitive driver hash). Fixed r11 with
-      // CAST(SUM(nb) AS BIGINT); see q210's note.
-      val score = TextAnalysis.classifierScore(col("text"),
-        wTokens = 1.2, wStop = 2.0, wAlpha = 1.5, wPunct = -3.0, bias = -1.0)
-      val scored = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          score.as("p"), (col("lang") === "en").cast("long").as("y"))
-        .withColumn("b", least(floor(col("p") * 10), lit(9L)).cast("long"))
-      val buckets = scored.groupBy(col("b"))
-        .agg(count(lit(1)).as("nb"),
-          sum(col("p").cast(DecimalType(27, 9))).cast("double").as("sp"),
-          sum(col("y")).as("sy"))
-      val tot = buckets.agg(sum(col("nb")).as("nn"))
-      val gap9 = floor(abs(col("sy").cast("double") / col("nb")
-        - col("sp") / col("nb")) * 1e9 + 0.5) / 1e9
-      // tight precisions: (10,9)×(14,0) → DECIMAL(25,9), exact. Wider
-      // declarations ((27,9)×(27,0) → needs 55) trip Spark's
-      // allowPrecisionLoss scale-truncation to 6 digits and silently
-      // shave each weight (observed 2e-9 on the final ECE).
-      buckets.crossJoin(broadcast(tot))
-        .select((gap9.cast(DecimalType(10, 9))
-          * col("nb").cast(DecimalType(14, 0))).as("w"), col("nn"))
-        .groupBy(col("nn"))
-        .agg((floor(sum(col("w")).cast("double") / col("nn").cast("double")
-          * 1e9 + 0.5) / 1e9).as("ece"))
-        .select(col("nn").as("n_docs"), col("ece"))
-    }),
-
-    "q234_km_survival" -> ((s, dir) => {
-      // Kaplan–Meier survival of view→purchase conversion [EXT] —
-      // S(t) = Π_{u≤t}(1 − d_u/n_u), the survival companion to q216's
-      // delay quantiles (quantiles describe converters; KM describes
-      // EVERYONE, censoring the users who never converted inside the
-      // 168 h window — dropping them biases time-to-convert toward
-      // the fast converters). Administrative censoring at the horizon
-      // means at-risk = N − cumulative events: pure integers through
-      // the whole table. The product telescopes as exp(Σ ln((n−d)/n))
-      // with each ln term floor-rounded at 12 and summed over the
-      // ≤168-row hour grid (tiny-frame window exception, like q207) —
-      // the q166/q210 transcendental discipline, so both engines walk
-      // identical doubles into the one exp, floor-rounded at 9.
-      val ev = Tables.events(s, dir)
-      val v = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("ts")).as("v_ts"))
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("p_ts"))
-      val firstP = v.join(p, Seq("user_id"))
-        .filter(col("p_ts") >= col("v_ts"))
-        .groupBy(col("user_id"), col("v_ts")).agg(min(col("p_ts")).as("p_ts"))
-      val delays = v.join(firstP, Seq("user_id", "v_ts"), "left")
-        .select(col("user_id"),
-          ((unix_timestamp(col("p_ts")) - unix_timestamp(col("v_ts"))) / 3600L)
-            .cast("long").as("delay_h"))
-        .withColumn("event", col("delay_h").isNotNull && col("delay_h") < 168)
-      val nTot = delays.agg(count(lit(1)).as("n_users"))
-      val grid = delays.filter(col("event"))
-        .groupBy(col("delay_h").as("t")).agg(count(lit(1)).as("d"))
-      val wCum = Window.orderBy(col("t"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      grid.crossJoin(broadcast(nTot))
-        .withColumn("cumd", sum(col("d")).over(wCum))
-        .withColumn("n_at_risk", col("n_users") - col("cumd") + col("d"))
-        // n_at_risk == d (everyone left converts this hour) zeroes the
-        // survival curve from here on; ln(0) = -inf must not enter the
-        // floor-form (Spark's floor(-inf) -> Long.MinValue vs DuckDB's
-        // -inf double would diverge) — carry a hit-zero flag instead
-        .withColumn("lt", when(col("n_at_risk") > col("d"), floor(
-          log((col("n_at_risk") - col("d")).cast("double") / col("n_at_risk"))
-            * 1e12 + 0.5) / 1e12).otherwise(lit(0.0)))
-        .withColumn("ls", sum(col("lt").cast(DecimalType(27, 14))).over(wCum))
-        .withColumn("hit0",
-          max((col("n_at_risk") === col("d")).cast("int")).over(wCum))
-        .select(col("t").as("t_hours"), col("d").as("n_events"), col("n_at_risk"),
-          when(col("hit0") === 1, lit(0.0)).otherwise(
-            floor(exp(col("ls").cast("double")) * 1e9 + 0.5) / 1e9).as("survival"))
-        .orderBy(col("t_hours"))
-    }),
-
-    "q235_bootstrap_ci" -> ((s, dir) => {
-      // deterministic Poisson-bootstrap confidence interval for the
-      // mean value per event_type [EXT] — the error-bars operator
-      // behind every dashboard number. B=100 replicates via the
-      // POISSON bootstrap (Chamandy et al.'s map-side resampling: each
-      // row draws a Poisson(1) replicate weight independently — no
-      // global resample pass, the form that works on unbounded
-      // streams): u = the q109 Lehmer hash of (event_id·101 + b) — the
-      // house portable PRNG, pure integer arithmetic in both engines —
-      // inverted through a LITERAL Poisson(1) CDF ladder (both engines
-      // parse the same 7 cumulative constants; k capped at 7,
-      // P ≈ 1e-5). Replicate sums fold INSIDE one typed aggregate per
-      // event_type (operators/Bootstrap.scala): state is two long[B]
-      // arrays — n agg probes instead of the naive n·B-row explode
-      // (which cost a 60M-row decimal hash-agg at sf0.1), partial
-      // state 2·B longs per group at ANY corpus size. Each term is
-      // floor(w·value·1e4+0.5), an exact integer both engines sum
-      // order-free; the percentile band over the 100 replicate means
-      // rides the no-buffer selector, bit-equal to quantile_cont.
-      val B = 100
-      val reps = Tables.events(s, dir)
-        .groupBy(col("event_type"))
-        .agg(graft.operators.Bootstrap.poissonReps(B)(
-          col("event_id"), col("value")).as("r"))
-        .select(col("event_type"),
-          explode(arrays_zip(col("r.swx"), col("r.sw"))).as("z"))
-        .filter(col("z.sw") > 0)
-        .select(col("event_type"),
-          (col("z.swx").cast("double") / lit(10000.0)
-            / col("z.sw").cast("double")).as("m"))
-      val band = graft.operators.Selection.exactGroupedQuantiles(
-        Dedup.cacheScoped(reps), "event_type", "m", Seq(0.025, 0.975))
-      val mean = Tables.events(s, dir).groupBy(col("event_type"))
-        .agg((dsum(col("value")) / count(lit(1))).as("mean_value"))
-      mean.join(band.groupBy(col("event_type")).agg(
-          max(when(col("q") === 0.025, col("value"))).as("lo95"),
-          max(when(col("q") === 0.975, col("value"))).as("hi95")),
-        Seq("event_type"))
-        .select(col("event_type"), pround(col("mean_value"), 9).as("mean_value"),
-          pround(col("lo95"), 9).as("lo95"), pround(col("hi95"), 9).as("hi95"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q236_spearman" -> ((s, dir) => {
-      // Spearman rank correlation between daily click and purchase
-      // volumes [EXT] — the monotone-association companion to q232's
-      // τ-b (ρ uses rank MAGNITUDES, τ counts inversions; the pair
-      // diverges under heavy ties, so dashboards report both). Midranks
-      // come from per-value counts + one cumulative over the ≤|days|-row
-      // value frame (tiny-frame window exception, like q207):
-      // 2·midrank = 2(cum−cnt)+cnt+1 is an exact INTEGER, so every sum
-      // in the closing Pearson-on-ranks formula is exact long
-      // arithmetic; the ×2 scale cancels exactly (sqrt of an exact 4A
-      // is exactly 2√A in IEEE), leaving one sqrt+division and a single
-      // floor-round — engine-identical by construction.
-      val daily = Dedup.cacheScoped(Tables.events(s, dir)
-        .filter(col("event_type").isin("click", "purchase"))
-        .groupBy(date_trunc("DAY", col("ts")).as("day"))
-        .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("x"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("y")))
-      val wv = Window.orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      def rank2(c: String): DataFrame = daily.groupBy(col(c).as("v"))
-        .agg(count(lit(1)).as("cnt"))
-        .withColumn("cum", sum(col("cnt")).over(wv))
-        .select(col("v").as(c),
-          (lit(2L) * (col("cum") - col("cnt")) + col("cnt") + 1L).as("r2" + c))
-      daily.join(broadcast(rank2("x")), Seq("x"))
-        .join(broadcast(rank2("y")), Seq("y"))
-        .agg(count(lit(1)).as("n"), sum(col("r2x")).as("sx"), sum(col("r2y")).as("sy"),
-          sum(col("r2x") * col("r2x")).as("sxx"),
-          sum(col("r2y") * col("r2y")).as("syy"),
-          sum(col("r2x") * col("r2y")).as("sxy"))
-        .filter(col("n") * col("sxx") - col("sx") * col("sx") > 0 &&
-          col("n") * col("syy") - col("sy") * col("sy") > 0)
-        .select(col("n").as("n_days"),
-          (floor((col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
-            / (sqrt((col("n") * col("sxx") - col("sx") * col("sx")).cast("double"))
-              * sqrt((col("n") * col("syy") - col("sy") * col("sy")).cast("double")))
-            * 1e9 + 0.5) / 1e9).as("rho"))
-    }),
-
-    "q237_path_trigrams" -> ((s, dir) => {
-      // top-20 event-type path trigrams [EXT] — the second-order
-      // sequence motifs q111's first-order transition matrix cannot
-      // see (a Markov chain factorizes P(a→b→c) = P(b|a)·P(c|b); the
-      // trigram counts expose exactly the paths where that product is
-      // wrong — the "view→click→purchase vs view→click→error" split
-      // behind journey mining). Two leads over the per-user window
-      // (never a global sequence sort), exact motif counts, support as
-      // one floor-rounded division, deterministic top-20 via
-      // TakeOrderedAndProject on (count desc, motif) — no global sort
-      // materializes.
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val tri = Tables.events(s, dir)
-        .select(col("user_id"), col("event_type").as("e1"), col("ts"), col("event_id"))
-        .withColumn("e2", lead(col("e1"), 1).over(w))
-        .withColumn("e3", lead(col("e1"), 2).over(w))
-        .filter(col("e3").isNotNull)
-        .groupBy(col("e1"), col("e2"), col("e3")).agg(count(lit(1)).as("n_paths"))
-      val tot = tri.agg(sum(col("n_paths")).as("n_tot"))
-      tri.crossJoin(broadcast(tot))
-        .select(col("e1"), col("e2"), col("e3"), col("n_paths"),
-          (floor(col("n_paths").cast("double") / col("n_tot") * 1e9 + 0.5) / 1e9)
-            .as("support"))
-        .orderBy(col("n_paths").desc, col("e1"), col("e2"), col("e3"))
-        .limit(20)
-    }),
-
-    "q238_acf" -> ((s, dir) => {
-      // lag-1..7 autocorrelation of the daily event count per type
-      // [EXT] — Box–Jenkins model identification for the volume series:
-      // a spike at lag 7 CONFIRMS the weekly period q223's decompose
-      // assumes, decay across lags separates trend from noise (q229
-      // correlates two DIFFERENT series; the ACF correlates a series
-      // with its own shifted self). Daily counts are exact ints; the
-      // full-series mean enters every centered product as the same IEEE
-      // double; the 7 lag alignments are one explode + equi-join on the
-      // shifted day (calendar-bounded — never a window over the
-      // series); products floor-round at 12, reduce in DECIMAL, and
-      // each lag closes with a single floor-9 ratio against the lag-0
-      // denominator.
-      acfFrame(s, dir, 7).orderBy(col("event_type"), col("lag"))
-    }),
-
-    "q239_hill_tail" -> ((s, dir) => {
-      // Hill tail-index estimator per event_type [EXT] — "how heavy is
-      // the value tail": α̂ = k / Σ_{i≤k} ln(x_(i)/x_(k+1)) over the top
-      // k+1 order statistics (Hill 1975, the POT estimator behind p99
-      // capacity planning; α < 2 means infinite variance — means stop
-      // converging). The per-type rank is a WindowGroupLimit top-(k+1)
-      // (the rank filter pushes the limit into the shuffle — never a
-      // global sort; event_id breaks value ties so the retained multiset
-      // is deterministic), the (k+1)-th value joins back as a ≤|types|-
-      // row broadcast, each ln(x/x_{k+1}) is one division + ln floor-
-      // rounded at 12 (q166 transcendental discipline), summed in
-      // DECIMAL(27,14), inverted once and floor-rounded at 9.
-      val k = 100
-      val w = Window.partitionBy(col("event_type"))
-        .orderBy(col("value").desc, col("event_id"))
-      val ranked = Dedup.cacheScoped(Tables.events(s, dir)
-        .filter(col("value") > 0)
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= k + 1)
-        .select(col("event_type"), col("rk"), col("value")))
-      val xk1 = ranked.filter(col("rk") === k + 1)
-        .select(col("event_type"), col("value").as("xk"))
-      ranked.filter(col("rk") <= k)
-        .join(broadcast(xk1), Seq("event_type"))
-        .select(col("event_type"), col("xk"),
-          (floor(log(col("value") / col("xk")) * 1e12 + 0.5) / 1e12).as("lt"))
-        .groupBy(col("event_type"), col("xk"))
-        .agg(sum(col("lt").cast(DecimalType(27, 14))).cast("double").as("sl"))
-        .filter(col("sl") > 0)
-        .select(col("event_type"), col("xk").as("x_kplus1"),
-          (floor(lit(k).cast("double") / col("sl") * 1e9 + 0.5) / 1e9).as("alpha"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q240_jsd_sources" -> ((s, dir) => {
-      // Jensen–Shannon divergence between source token distributions
-      // [EXT] — the symmetric, bounded (≤ ln 2) corpus-mixing metric:
-      // PSI (q166) and KS (q198) compare VALUE distributions; JSD is
-      // the standard measure for "how different is source A's language
-      // from source B's" when weighting a pretraining mixture. Key
-      // scale identity: words present in only ONE source contribute
-      // exactly p·ln2, so JSD = ½[Σ_shared(p·ln(2p/(p+q)) +
-      // q·ln(2q/(p+q))) + ln2·(2 − mass₁ − mass₂)] needs NO outer
-      // join — one word equi-join for the shared terms (fan-out ≤
-      // |sources|² per word, vocabulary-bounded) and exact-integer
-      // shared-mass counts; transcendental terms floor-round at 12
-      // into DECIMAL sums (q166 discipline), masses are single
-      // exact-int divisions, one floor-9 close.
-      val LN2 = 0.6931471805599453
-      val toks = Tables.documents(s, dir)
-        .select(col("source"), explode(split(lower(col("text")), " ")).as("w"))
-        .filter(length(col("w")) > 0)
-      val wc = Dedup.cacheScoped(
-        toks.groupBy(col("source"), col("w")).agg(count(lit(1)).as("c")))
-      val tot = wc.groupBy(col("source")).agg(sum(col("c")).as("n"))
-      val a = wc.join(broadcast(tot), Seq("source"))
-        .select(col("source").as("s1"), col("w"), col("c").as("c1"), col("n").as("n1"))
-      val b = wc.join(broadcast(tot), Seq("source"))
-        .select(col("source").as("s2"), col("w"), col("c").as("c2"), col("n").as("n2"))
-      val p = col("c1").cast("double") / col("n1")
-      val q = col("c2").cast("double") / col("n2")
-      val term = floor((p * log(lit(2) * p / (p + q))
-        + q * log(lit(2) * q / (p + q))) * 1e12 + 0.5) / 1e12
-      a.join(b, Seq("w")).filter(col("s1") < col("s2"))
-        .select(col("s1"), col("s2"), col("n1"), col("n2"),
-          col("c1"), col("c2"), term.cast(DecimalType(27, 14)).as("t"))
-        .groupBy(col("s1"), col("s2"), col("n1"), col("n2"))
-        .agg(count(lit(1)).as("n_shared"), sum(col("t")).cast("double").as("ts"),
-          sum(col("c1")).as("m1"), sum(col("c2")).as("m2"))
-        .select(col("s1"), col("s2"), col("n_shared"),
-          (floor((col("ts") + lit(LN2) * (lit(2)
-            - col("m1").cast("double") / col("n1")
-            - col("m2").cast("double") / col("n2"))) / 2 * 1e9 + 0.5) / 1e9).as("jsd"))
-        .orderBy(col("s1"), col("s2"))
-    }),
-
-    "q241_mutual_info" -> ((s, dir) => {
-      // mutual information between the value bin and event_type [EXT]
-      // — the model-free feature-relevance / leakage detector ("does
-      // value predict event_type?"): q86/q146 compute word-pair PMI,
-      // q91 per-doc entropy; this is I(X;Y) = Σ (n_xy/n)·
-      // ln(n_xy·n/(n_x·n_y)) over the (bin × type) contingency — the
-      // quantity feature selection ranks on. Fixed-width bins are
-      // map-side (q83's histogram shape), every count is exact, each
-      // cell's log ratio takes exact-integer products (< 2⁵³ so the
-      // double casts are exact), floor-rounds at 12, weights by the
-      // exact cell count, floor-rounds again and reduces in DECIMAL;
-      // one division by n and a floor-9 close the scalar.
-      val binned = Tables.events(s, dir)
-        .select(col("event_type").as("t"), floor(col("value") / 25).cast("long").as("b"))
-      val cells = Dedup.cacheScoped(
-        binned.groupBy(col("t"), col("b")).agg(count(lit(1)).as("nxy")))
-      val nx = cells.groupBy(col("t")).agg(sum(col("nxy")).as("nx"))
-      val ny = cells.groupBy(col("b")).agg(sum(col("nxy")).as("ny"))
-      val nT = cells.agg(sum(col("nxy")).as("n"))
-      val lr = floor(log((col("nxy") * col("n")).cast("double")
-        / (col("nx") * col("ny")).cast("double")) * 1e12 + 0.5) / 1e12
-      val wterm = floor(col("nxy").cast("double") * lr * 1e12 + 0.5) / 1e12
-      cells.join(broadcast(nx), Seq("t")).join(broadcast(ny), Seq("b"))
-        .crossJoin(broadcast(nT))
-        .select(col("n"), wterm.cast(DecimalType(27, 14)).as("wt"))
-        .groupBy(col("n"))
-        .agg(count(lit(1)).as("n_cells"), sum(col("wt")).cast("double").as("sw"))
-        .select(col("n").as("n_events"), col("n_cells"),
-          (floor(col("sw") / col("n") * 1e9 + 0.5) / 1e9).as("mi_nats"))
-    }),
-
-    "q242_mmr_rerank" -> ((s, dir) => {
-      // MMR diversified retrieval [EXT] — the rerank between q36's raw
-      // top-k and what a RAG context window actually wants: k results
-      // that are relevant AND non-redundant (raw top-k over a corpus
-      // with near-dups returns the same passage k times; MMR trades
-      // λ·relevance against (1−λ)·max-similarity-to-selected). The
-      // distributed shape: candidate generation is the corpus-scale
-      // bruteForceTopK (broadcast query, WindowGroupLimit top-pool);
-      // the greedy argmax — inherently sequential in k — runs on the
-      // ≤50-row pool driver-side (bounded by construction, the q177
-      // centroid-walk collect tier). Oracle row since round 12: the 10
-      // greedy steps unroll as materialized CTEs (the q177/q208
-      // discipline) over a precomputed pool×pool cosine CTE;
-      // mmrSelect's cosine is dot/(√na·√nb) in array order — exactly
-      // DuckDB's list_cosine_similarity (the q36 parity precedent) —
-      // and the score 0.7·rel − (1.0−0.7)·maxsim is the same IEEE
-      // expression both sides, so every argmax compares identical
-      // doubles (ties break by vec_id in both engines). OperatorSpec
-      // additionally pins the selection to an independent quadratic
-      // reference + invariants.
-      val emb = Tables.embeddings(s, dir)
-      val qv = emb.orderBy(col("vec_id")).limit(1)
-      val pool = Similarity.bruteForceTopK(
-        emb, col("vec_id"), col("embedding"),
-        qv, col("vec_id"), col("embedding"), k = 50)
-      val rows = pool
-        .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding")),
-          Seq("neighbor_id"))
-        .select(col("neighbor_id"), col("embedding"), col("cosine"))
-        .collect() // ≤ pool rows by construction — never corpus-sized
-      val cands = rows.map(r => (r.getLong(0),
-        r.getSeq[Float](1).map(_.toDouble).toArray, r.getDouble(2))).toIndexedSeq
-      val sel = Similarity.mmrSelect(cands, k = 10, lambda = 0.7)
-      import s.implicits._
-      sel.toDF("vec_id", "mmr", "rank")
-        .select(col("rank").cast("long").as("rank"), col("vec_id"),
-          pround(col("mmr"), 9).as("mmr_score"))
-        .orderBy(col("rank"))
-    }),
-
-    "q243_mg_heavy_hitters" -> ((s, dir) => {
-      // exact heavy hitters through a mergeable Misra–Gries sketch
-      // [EXT] — the deterministic single-pass twin of q115's CMS: MG
-      // guarantees every token with true count > n/k survives in its
-      // ≤(k−1)-entry summary (Sketch.MgAgg scaladoc), so the sketch's
-      // candidate set SUPERSETS the true heavy hitters regardless of
-      // partitioning. The token stream never shuffles — partial O(k)
-      // maps merge; candidates broadcast back to prune the exact
-      // recount to ≤(k−1) tokens' occurrences, and the n/k filter on
-      // exact counts makes the output the EXACT heavy-hitter set:
-      // oracle-able even though the sketch is approximate (q115's
-      // one-sided-bound pattern upgraded to exact equality).
-      val k = 20
-      val toks = Dedup.cacheScoped(Tables.documents(s, dir)
-        .select(explode(split(lower(col("text")), " ")).as("w"))
-        .filter(length(col("w")) > 0))
-      val nT = toks.agg(count(lit(1)).as("n"))
-      val cands = toks.agg(graft.functions.Sketch.mgSummary(col("w"), k).as("m"))
-        .select(explode(map_keys(col("m"))).as("w"))
-      toks.join(broadcast(cands), Seq("w"))
-        .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-        .crossJoin(broadcast(nT))
-        .filter(col("cnt") * k > col("n"))
-        .select(col("w").as("word"), col("cnt"))
-        .orderBy(col("cnt").desc, col("word"))
-    }),
-
-    "q244_source_concentration" -> ((s, dir) => {
-      // corpus composition concentration [EXT] — the "is the mixture
-      // dominated by one domain" dashboard scalar triple: HHI = Σ
-      // share² (antitrust's market-concentration index applied to
-      // token mass per source), effective source count 1/HHI, and
-      // Shannon diversity exp(−Σ share·ln share) (the two diverge
-      // under skew: HHI weights the head, entropy the tail). q189
-      // PRESCRIBES target mixture weights; this MEASURES the realized
-      // concentration — by token mass, not doc count, since training
-      // epochs consume tokens (q213's Gini is value-concentration per
-      // type; this is corpus-share concentration). Exact-integer token
-      // masses, one division per share, share² and share·ln(share)
-      // floor-round at 12 into DECIMAL sums, floor-9 closes.
-      val mass = Tables.documents(s, dir)
-        .select(col("source"),
-          size(regexp_extract_all(col("text"), lit("\\S+"), lit(0)))
-            .cast("long").as("toks"))
-        .groupBy(col("source")).agg(sum(col("toks")).as("m"))
-      val tot = mass.agg(sum(col("m")).as("n"))
-      val share = col("m").cast("double") / col("n")
-      mass.crossJoin(broadcast(tot))
-        .select(col("n"),
-          (floor(share * share * 1e12 + 0.5) / 1e12)
-            .cast(DecimalType(27, 14)).as("s2"),
-          (floor(share * log(share) * 1e12 + 0.5) / 1e12)
-            .cast(DecimalType(27, 14)).as("slns"))
-        .groupBy(col("n"))
-        .agg(count(lit(1)).as("n_sources"),
-          sum(col("s2")).cast("double").as("hhi"),
-          sum(col("slns")).cast("double").as("sh"))
-        .select(col("n_sources"), pround(col("hhi"), 9).as("hhi"),
-          (floor(lit(1.0) / col("hhi") * 1e9 + 0.5) / 1e9).as("eff_sources"),
-          (floor(exp(-col("sh")) * 1e9 + 0.5) / 1e9).as("shannon_diversity"))
-    }),
-
-    "q245_poststrat_mean" -> ((s, dir) => {
-      // post-stratified (inverse-propensity) mean [EXT] — the
-      // covariate-shift correction behind "clicks skew toward evening
-      // hours; what would their mean value be if they followed overall
-      // traffic?": m̂ = Σ_h (N_h/N)·mean(value | click, h), i.e. each
-      // hour stratum's click mean reweighted by the POPULATION hour
-      // distribution (equivalently IPW with exact stratum propensities
-      // C_h/N_h — no fitted model, so the weights are exact-integer
-      // ratios). q174's CUPED reduces variance with a pre-period
-      // covariate; this removes allocation BIAS. One pass builds both
-      // strata tables (≤24 rows each, broadcast); per-stratum terms
-      // are two exact divisions and a product, floor-rounded at 12
-      // into a DECIMAL sum; the naive mean rides the dsum discipline.
-      val ev = Tables.events(s, dir)
-      val pop = ev.groupBy(hour(col("ts")).cast("long").as("h"))
-        .agg(count(lit(1)).as("nh"))
-      val clk = ev.filter(col("event_type") === "click")
-        .groupBy(hour(col("ts")).cast("long").as("h"))
-        .agg(count(lit(1)).as("ch"), dsum(col("value")).as("sh"))
-      val nT = ev.agg(count(lit(1)).as("n"))
-      val naive = ev.filter(col("event_type") === "click")
-        .agg((dsum(col("value")) / count(lit(1))).as("naive"))
-      val term = floor(col("nh").cast("double") / col("n")
-        * (col("sh") / col("ch")) * 1e12 + 0.5) / 1e12
-      pop.join(clk, Seq("h")).crossJoin(broadcast(nT))
-        .select(term.cast(DecimalType(27, 14)).as("t"))
-        .agg(count(lit(1)).as("n_strata"), sum(col("t")).cast("double").as("adj"))
-        .crossJoin(broadcast(naive))
-        .select(col("n_strata"), pround(col("naive"), 9).as("naive_mean"),
-          pround(col("adj"), 9).as("poststrat_mean"))
-    }),
-
-    "q246_burstiness" -> ((s, dir) => {
-      // volume burstiness per event_type [EXT] — point-process QC for
-      // the ingest stream: Fano factor Var/Mean of the daily count (1
-      // for Poisson traffic, ≫1 for bursty; the overdispersion test
-      // behind "is this organic or a bot flood") and Goh–Barabási
-      // B = (σ−μ)/(σ+μ) ∈ (−1, 1). All moments are exact-integer sums
-      // over the ≤calendar-row daily frame; Σx² widens through
-      // DECIMAL(38,0) (long Σx² wraps once daily counts reach ~10⁹ at
-      // corpus scale — the q222 wrap lesson); the closings are a
-      // handful of IEEE ops from exact-int casts, floor-rounded once.
-      val daily = Tables.events(s, dir)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("x"))
-      daily.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-          sum(col("x").cast(DecimalType(38, 0)) * col("x")).as("sxx"))
-        .filter(col("n") > 1 && col("sx") > 0)
-        .select(col("event_type"), col("n").as("n_days"),
-          (floor((col("n").cast(DecimalType(38, 0)) * col("sxx")
-            - col("sx").cast(DecimalType(38, 0)) * col("sx")).cast("double")
-            / (col("n") * (col("n") - 1)).cast("double")
-            / (col("sx").cast("double") / col("n")) * 1e9 + 0.5) / 1e9).as("fano"),
-          (floor((sqrt((col("n").cast(DecimalType(38, 0)) * col("sxx")
-              - col("sx").cast(DecimalType(38, 0)) * col("sx")).cast("double")
-              / (col("n") * (col("n") - 1)).cast("double"))
-            - col("sx").cast("double") / col("n"))
-            / (sqrt((col("n").cast(DecimalType(38, 0)) * col("sxx")
-              - col("sx").cast(DecimalType(38, 0)) * col("sx")).cast("double")
-              / (col("n") * (col("n") - 1)).cast("double"))
-            + col("sx").cast("double") / col("n")) * 1e9 + 0.5) / 1e9).as("b_coef"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q247_two_proportion_z" -> ((s, dir) => {
-      // two-proportion z-test on funnel conversion across cohorts [EXT]
-      // — "did weekend users convert view→click at a different rate
-      // than weekday users": the significance gate product analytics
-      // runs before acting on a funnel diff (q182 measures the funnel;
-      // q222 compares VALUE distributions; this tests a RATE between
-      // two user cohorts). Cohort = ISO-weekday of the user's first
-      // event (weekend vs weekday); conversion = had a view AND later
-      // (or equal) a click. Per-user reductions are exact min/bool
-      // aggs; the four cells are exact counts; ẑ closes with pooled
-      // p̂(1−p̂)(1/n₁+1/n₂) — pure IEEE from exact ints, one floor-9.
-      val ev = Tables.events(s, dir)
-      val firstTs = ev.groupBy(col("user_id")).agg(min(col("ts")).as("f_ts"))
-      val conv = ev.filter(col("event_type").isin("view", "click"))
-        .groupBy(col("user_id"))
-        .agg(min(when(col("event_type") === "view", col("ts"))).as("v_ts"),
-          max(when(col("event_type") === "click", col("ts"))).as("c_ts"))
-        .filter(col("v_ts").isNotNull)
-        .select(col("user_id"),
-          (col("c_ts").isNotNull && col("c_ts") >= col("v_ts")).cast("long").as("cv"))
-      val cohorts = firstTs
-        .select(col("user_id"), (weekday(col("f_ts")) >= 5).cast("long").as("wknd"))
-        .join(conv, Seq("user_id"))
-        .groupBy(col("wknd"))
-        .agg(count(lit(1)).as("n"), sum(col("cv")).as("x"))
-      val wide = cohorts.agg(
-        max(when(col("wknd") === 1, col("n"))).as("n1"),
-        max(when(col("wknd") === 1, col("x"))).as("x1"),
-        max(when(col("wknd") === 0, col("n"))).as("n2"),
-        max(when(col("wknd") === 0, col("x"))).as("x2"))
-      val p1 = col("x1").cast("double") / col("n1")
-      val p2 = col("x2").cast("double") / col("n2")
-      val pp = (col("x1") + col("x2")).cast("double") / (col("n1") + col("n2"))
-      wide.filter(col("n1") > 0 && col("n2") > 0)
-        .select(col("n1"), col("x1"), col("n2"), col("x2"),
-          (floor((p1 - p2) / sqrt(pp * (lit(1.0) - pp)
-            * (lit(1.0) / col("n1") + lit(1.0) / col("n2"))) * 1e9 + 0.5) / 1e9)
-            .as("z"))
-    }),
-
-    "q248_mase" -> ((s, dir) => {
-      // seasonal-naive forecast error (MASE) per event_type [EXT] —
-      // Hyndman's scale-free forecast-accuracy metric: MAE of the
-      // seasonal-naive forecast x̂_t = x_{t−7} scaled by the in-sample
-      // MAE of the plain naive x̂_t = x_{t−1}; < 1 means "the weekly
-      // pattern predicts better than persistence" — the acceptance
-      // gate for q223's seasonal model. Absolute diffs are exact
-      // integers over the two calendar-bounded self-joins (q238's
-      // shifted-day equi-join shape); MASE = Σe·n₁ / (n₇·Σb) stays in
-      // exact integer arithmetic until one final division, floor-9.
-      val daily = Dedup.cacheScoped(Tables.events(s, dir)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("x")))
-      def shifted(lag: Int, en: String, xn: String) = daily.select(
-        col("event_type"), date_add(col("day"), lag).as("day"), col("x").as(xn))
-        .join(daily.select(col("event_type"), col("day"), col("x").as(en)),
-          Seq("event_type", "day"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as(s"n_$xn"),
-          sum(abs(col(en) - col(xn))).as(s"s_$xn"))
-      shifted(7, "e7", "x7").join(shifted(1, "e1", "x1"), Seq("event_type"))
-        .filter(col("s_x1") > 0)
-        .select(col("event_type"), col("n_x7").as("n_pairs7"),
-          col("n_x1").as("n_pairs1"),
-          (floor((col("s_x7") * col("n_x1")).cast("double")
-            / (col("n_x7") * col("s_x1")).cast("double") * 1e9 + 0.5) / 1e9)
-            .as("mase"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q249_rbo_sources" -> ((s, dir) => {
-      // rank-biased overlap between source top-20 token lists [EXT] —
-      // Webber et al.'s top-weighted list-similarity: q240's JSD
-      // compares the full DISTRIBUTIONS; RBO asks "do the sources
-      // agree on what's at the TOP", the right metric for vocabulary-
-      // head drift between corpus snapshots. RBO@k = (1−p)·Σ_{d≤k}
-      // p^{d−1}·|A_d∩B_d|/d with p=0.9. The geometric weights are a
-      // PRECOMPUTED literal ladder (both engines parse the same
-      // shortest-repr doubles — the q235 CDF-ladder portability trick;
-      // computing p^(d−1) via pow() would race engine libm), the
-      // per-source top-20 is a WindowGroupLimit, the depth frame is a
-      // ≤20-row explode over the ≤400-cell pair join, and the weighted
-      // terms floor-round at 12 into a DECIMAL sum.
-      val p = 0.9
-      val K = 20
-      val weights = (1 to K).map(d => (1 - p) * math.pow(p, d - 1))
-      val wArr = array(weights.map(lit): _*)
-      val toks = Tables.documents(s, dir)
-        .select(col("source"), explode(split(lower(col("text")), " ")).as("w"))
-        .filter(length(col("w")) > 0)
-      val wRank = Window.partitionBy(col("source"))
-        .orderBy(col("cnt").desc, col("w"))
-      val top = Dedup.cacheScoped(toks
-        .groupBy(col("source"), col("w")).agg(count(lit(1)).as("cnt"))
-        .withColumn("r", row_number().over(wRank))
-        .filter(col("r") <= K)
-        .select(col("source"), col("w"), col("r")))
-      val pairs = top.select(col("source").as("s1"), col("w"), col("r").as("ra"))
-        .join(top.select(col("source").as("s2"), col("w"), col("r").as("rb")),
-          Seq("w"))
-        .filter(col("s1") < col("s2"))
-      pairs.withColumn("d", explode(sequence(greatest(col("ra"), col("rb")), lit(K))))
-        .groupBy(col("s1"), col("s2"), col("d"))
-        .agg(count(lit(1)).as("xd"))
-        .select(col("s1"), col("s2"),
-          (floor(element_at(wArr, col("d").cast("int"))
-            * col("xd") / col("d") * 1e12 + 0.5) / 1e12)
-            .cast(DecimalType(27, 14)).as("t"))
-        .groupBy(col("s1"), col("s2"))
-        .agg((floor(sum(col("t")).cast("double") * 1e9 + 0.5) / 1e9).as("rbo"))
-        .orderBy(col("s1"), col("s2"))
-    }),
-
-    "q250_k_anonymity" -> ((s, dir) => {
-      // k-anonymity / l-diversity audit over quasi-identifiers [EXT] —
-      // the privacy QC that complements the RTBF delete path
-      // (WebDataset.deleteKeys): a released corpus slice is k-anonymous
-      // when every (source, size-bucket) quasi-identifier combination
-      // covers ≥ k documents, and l-diverse when each combination
-      // spans ≥ l distinct values of the sensitive attribute (lang) —
-      // small cells re-identify, monocultural cells attribute. One
-      // exact agg over the quasi grid; flags are pure comparisons;
-      // output is the violating cells (the audit artifact a release
-      // gate consumes), deterministically ordered.
-      val k = 10
-      val l = 2
-      Tables.documents(s, dir)
-        .groupBy(col("source"), floor(col("n_chars") / 100).cast("long").as("size_bucket"))
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(col("lang")).as("n_langs"))
-        .filter(col("n_docs") < k || col("n_langs") < l)
-        .select(col("source"), col("size_bucket"), col("n_docs"), col("n_langs"),
-          (col("n_docs") < k).cast("long").as("k_violation"),
-          (col("n_langs") < l).cast("long").as("l_violation"))
-        .orderBy(col("source"), col("size_bucket"))
-    }),
-
-    "q251_smd_balance" -> ((s, dir) => {
-      // standardized-mean-difference covariate balance [EXT] — the
-      // third leg of the causal-inference triple (q174 CUPED reduces
-      // variance, q245 post-stratification removes bias, SMD CHECKS
-      // the randomization): per-covariate (μ₁−μ₂)/√((s₁²+s₂²)/2)
-      // between the q174 arms; |SMD| > 0.1 flags imbalance before any
-      // readout is trusted. Per-user rollup shuffles once on user_id;
-      // per-arm moments are pround-then-DECIMAL sums (q174's
-      // discipline), the ≤2-row arm frame pivots wide via max(when),
-      // and the close is pure IEEE from decimal-cast doubles, floor-9.
-      val split = to_timestamp(lit("2024-01-15 00:00:00"))
-      val D6 = DecimalType(27, 6)
-      val u = Dedup.cacheScoped(Tables.events(s, dir).groupBy(col("user_id"))
-        .agg(
-          sum(when(col("ts") < split, col("value")).otherwise(lit(0.0))
-            .cast(DecimalType(18, 4))).cast("double").as("x"),
-          sum(when(col("ts") < split, 1L).otherwise(0L)).cast("double").as("c"))
-        .select((col("user_id") % 2).as("t"), col("x"), col("c")))
-      def smdOf(cn: String, label: String): DataFrame = {
-        val arms = u.groupBy(col("t")).agg(count(lit(1)).as("n"),
-          sum(col(cn).cast(D6)).cast("double").as("s"),
-          sum(pround(col(cn) * col(cn), 6).cast(D6)).cast("double").as("ss"))
-        val w = arms.agg(
-          max(when(col("t") === 1, col("n"))).as("n1"),
-          max(when(col("t") === 1, col("s"))).as("s1"),
-          max(when(col("t") === 1, col("ss"))).as("ss1"),
-          max(when(col("t") === 0, col("n"))).as("n2"),
-          max(when(col("t") === 0, col("s"))).as("s2"),
-          max(when(col("t") === 0, col("ss"))).as("ss2"))
-        val m1 = col("s1") / col("n1"); val m2 = col("s2") / col("n2")
-        val v1 = (col("ss1") - col("s1") * col("s1") / col("n1")) / (col("n1") - 1)
-        val v2 = (col("ss2") - col("s2") * col("s2") / col("n2")) / (col("n2") - 1)
-        w.filter(col("n1") > 1 && col("n2") > 1)
-          .select(lit(label).as("covariate"), col("n1"), col("n2"),
-            pround(m1, 9).as("mean_t"), pround(m2, 9).as("mean_c"),
-            when(v1 + v2 > 0,
-              floor((m1 - m2) / sqrt((v1 + v2) / 2) * 1e9 + 0.5) / 1e9)
-              .as("smd"))
-      }
-      smdOf("x", "pre_value_sum").unionAll(smdOf("c", "pre_event_count"))
-        .orderBy(col("covariate"))
-    }),
-
-    "q252_power_analysis" -> ((s, dir) => {
-      // A/B sample-size planner per event_type [EXT] — "how many users
-      // per arm to detect a 5% lift at α=0.05, power 0.8": n = 2σ²
-      // (z_{α/2}+z_β)²/δ² with δ = 5% of the mean — the planning
-      // counterpart to q247's post-hoc z (run BEFORE the experiment;
-      // rates that need more samples than traffic allows never launch).
-      // z constants are literals (identical parsed doubles — never an
-      // engine inverse-normal), moments are pround-then-DECIMAL sums,
-      // the close is pure IEEE with one ceil (exact on both engines'
-      // doubles) and one floor-9 per reported scalar.
-      val zA = 1.959963984540054 // z_{0.975}
-      val zB = 0.8416212335729143 // z_{0.80}
-      val D6 = DecimalType(27, 6)
-      val m = Tables.events(s, dir).groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(18, 4))).cast("double").as("s"),
-          sum(pround(col("value") * col("value"), 6).cast(D6)).cast("double").as("ss"))
-      val mu = col("s") / col("n")
-      val v = (col("ss") - col("s") * col("s") / col("n")) / (col("n") - 1)
-      val delta = lit(0.05) * mu
-      m.filter(col("n") > 1)
-        .select(col("event_type"), col("n").as("n_obs"),
-          pround(mu, 9).as("mean_value"),
-          pround(sqrt(v), 9).as("sd"),
-          pround(delta, 9).as("mde_abs"),
-          ceil(lit(2.0) * v * (lit(zA) + lit(zB)) * (lit(zA) + lit(zB))
-            / (delta * delta)).cast("long").as("n_per_arm"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q253_silhouette" -> ((s, dir) => {
-      // simplified silhouette over the q177 Lloyd clustering [EXT] —
-      // the cluster-VALIDATION scalar the k-means family lacked
-      // (q177 trains, q192 labels, q188 probes; nothing said whether
-      // k=8 is any good): s_i = (b−a)/max(a,b) with a = distance to
-      // the own centroid, b = to the nearest other (Hruschka's
-      // centroid-based simplification — the O(n·k) form that scales;
-      // full silhouette is O(n²) pairwise). Distances are per-dim
-      // (x−c)² terms floor-rounded at 12 and DECIMAL-summed (the q226
-      // triangle discipline), which makes d² bit-identical across
-      // engines BEFORE the assignment argmin — so even equidistant
-      // ties cannot diverge (stronger than ordering on raw
-      // list_distance). Centroids are k×d literals (corpus never
-      // shuffles to be assigned); the d² frame is |corpus|·k rows.
-      // r19 (guide §2.4): the per-(vector, centroid) d² frame is pure
-      // MAP-SIDE math — each of the k=8 distances folds in-row against
-      // the centroid literal (the Pca.topComponent exact-DECIMAL fold;
-      // a sequential exact-decimal fold equals the old per-(vec, cid)
-      // grouped sum term-for-term), and nearest/second-nearest come
-      // from an in-row sort of the 8 (d2, cid) structs — exactly the
-      // old window's (d2, cid) total order. The old shape exploded
-      // |corpus|·64 rows, broadcast-joined each against 8 centroids,
-      // shuffled the |corpus|·8 d² frame into a groupBy and ranked it
-      // through a second window exchange — both exchanges gone; the
-      // only shuffle left is the ≤k-row cluster roll-up (plus lloyd's
-      // own iteration aggs, unchanged).
-      val emb = Tables.embeddings(s, dir)
-      val (state, _) = Cluster.lloyd(emb, col("vec_id"), col("embedding"),
-        k = 8, iters = 3)
-      val D14 = DecimalType(27, 14)
-      val d2Structs = state.centroids.zipWithIndex.map { case (cvec, i) =>
-        val cLit = array(cvec.toIndexedSeq.map(v => lit(v.toDouble)): _*)
-        val d2 = aggregate(
-          zip_with(col("embedding"), cLit, (x, c) =>
-            (floor((x.cast("double") - c) * (x.cast("double") - c) * 1e12 + 0.5) / 1e12)
-              .cast(D14)),
-          lit(0).cast(D14), (acc, t) => (acc + t).cast(D14)).cast("double")
-        struct(d2.as("d2"), lit(i.toLong).as("cid"))
-      }
-      val ab = emb
-        .select(col("vec_id"), array_sort(array(d2Structs.toIndexedSeq: _*)).as("ds"))
-        .select(col("vec_id"), col("ds")(0).getField("cid").as("cid"),
-          sqrt(col("ds")(0).getField("d2")).as("a"),
-          sqrt(col("ds")(1).getField("d2")).as("b"))
-      ab.select(col("cid"),
-          when(greatest(col("a"), col("b")) > 0,
-            floor((col("b") - col("a")) / greatest(col("a"), col("b"))
-              * 1e12 + 0.5) / 1e12).otherwise(lit(0.0))
-            .cast(DecimalType(27, 14)).as("sil"))
-        .groupBy(col("cid"))
-        .agg(count(lit(1)).as("n_vecs"),
-          (floor(sum(col("sil")).cast("double") / count(lit(1)) * 1e9 + 0.5) / 1e9)
-            .as("silhouette"))
-        .select(col("cid").as("cluster"), col("n_vecs"), col("silhouette"))
-        .orderBy(col("cluster"))
-    }),
-
-    "q254_isotonic_calibration" -> ((s, dir) => {
-      // isotonic (PAV) calibration repair [EXT] — q150 DIAGNOSES
-      // miscalibration, q233 scores it; this FIXES it: the monotone
-      // map score→P(label) that Zadrozny–Elkan calibration deploys.
-      // The corpus reduces to ≤10 decile bins (q150's exact frame).
-      // PAV's sequential pooling is not ANSI-expressible — but its
-      // SOLUTION is: the minimax identity (Robertson–Wright–Dykstra)
-      // gives fit_i = max_{j≤i} min_{k≥i} wavg(acc_j..acc_k), an O(n³)
-      // closed form that is trivial on a 10-row frame and turns this
-      // row from rows-only into a full oracle row (round 12). Segment
-      // means stay EXACT integers (nb·acc9 with acc9 = the 9-decimal
-      // quantized accuracy ×1e9) until one double division, so both
-      // engines compare identical doubles and pick identical extrema
-      // — no accumulation-order hazard. Optim.pav stays the operator
-      // (OperatorSpec: O(n²) reference, monotonicity, mass
-      // preservation; round-12 spec pins pav ≡ minimax).
-      val score = TextAnalysis.classifierScore(col("text"),
-        wTokens = 1.2, wStop = 2.0, wAlpha = 1.5, wPunct = -3.0, bias = -1.0)
-      val bins = Tables.documents(s, dir)
-        .select(score.as("p"), (col("lang") === "en").cast("long").as("y"))
-        .withColumn("b", least(floor(col("p") * 10), lit(9L)).cast("long"))
-        .groupBy(col("b"))
-        .agg(count(lit(1)).as("nb"),
-          pround(sum(col("p").cast(DecimalType(27, 9))).cast("double")
-            / count(lit(1)), 9).as("conf"),
-          pround(sum(col("y")).cast("double") / count(lit(1)), 9).as("acc"))
-        .orderBy(col("b"))
-        .collect() // ≤10 rows by construction — the calibration grid
-      val iso = graft.operators.Optim.isotonicMinimax(
-        bins.map(_.getDouble(3)).toIndexedSeq, bins.map(_.getLong(1)).toIndexedSeq)
-      import s.implicits._
-      bins.zip(iso).map { case (r, f) =>
-        (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3),
-          math.floor(f * 1e9 + 0.5) / 1e9)
-      }.toSeq.toDF("bucket", "n", "conf", "acc", "iso_acc")
-        .orderBy(col("bucket"))
-    }),
-
-    "q255_entropy_rate" -> ((s, dir) => {
-      // Markov entropy rate of the event stream [EXT] — the sequence-
-      // predictability scalar over q111's chain: H = Σ_s π_s·H_s with
-      // the plug-in π = empirical source frequency and H_s the row
-      // entropy of transitions out of s (Shannon's entropy rate for a
-      // first-order chain; low H means journeys are script-like,
-      // rising H flags behavior drift — the sequence twin of q91's
-      // static lexical entropy). Per-user lead pairs shuffle once;
-      // row entropies are floor-12 −p·ln p terms in DECIMAL sums over
-      // the ≤|types|² transition frame; the outer mix is a second
-      // floor-12 weighted DECIMAL reduction, floor-9 close.
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val pairs = Tables.events(s, dir)
-        .select(col("user_id"), col("event_type").as("src"), col("ts"), col("event_id"))
-        .withColumn("dst", lead(col("src"), 1).over(w))
-        .filter(col("dst").isNotNull)
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("c"))
-      val tot = pairs.groupBy(col("src")).agg(sum(col("c")).as("ns"))
-      val nT = pairs.agg(sum(col("c")).as("n"))
-      val p = col("c").cast("double") / col("ns")
-      val hs = pairs.join(broadcast(tot), Seq("src"))
-        .select(col("src"), col("ns"),
-          (-(floor(p * log(p) * 1e12 + 0.5) / 1e12))
-            .cast(DecimalType(27, 14)).as("t"))
-        .groupBy(col("src"), col("ns"))
-        .agg(sum(col("t")).cast("double").as("h"))
-      hs.crossJoin(broadcast(nT))
-        .select(col("n"),
-          (floor(col("ns").cast("double") / col("n") * col("h") * 1e12 + 0.5) / 1e12)
-            .cast(DecimalType(27, 14)).as("wt"))
-        .groupBy(col("n"))
-        .agg(count(lit(1)).as("n_states"),
-          (floor(sum(col("wt")).cast("double") * 1e9 + 0.5) / 1e9).as("entropy_rate"))
-        .select(col("n").as("n_transitions"), col("n_states"), col("entropy_rate"))
-    }),
-
-    "q256_conformal_interval" -> ((s, dir) => {
-      // split-conformal prediction interval per event_type [EXT] —
-      // distribution-free UQ (Vovk; Lei et al.): the train half fits
-      // the predictor (the per-type mean), the calibration half takes
-      // q̂ = the ceil((n+1)(1−α))-th smallest |residual|, and [μ̂ ± q̂]
-      // covers a fresh point with P ≥ 1−α under exchangeability ALONE
-      // — no normality, no variance estimate (q235's bootstrap is the
-      // resampling cousin; this one carries a finite-sample
-      // guarantee). The split is the q109 portable Lehmer parity
-      // (engine-identical); the conformal rank is data-dependent per
-      // type, so it rides the selector's NEW rank entry point
-      // (Selection.exactGroupedOrderStat — never a corpus sort
-      // window); α = 0.1. ceil runs on (n+1)·0.9 as a DOUBLE in both
-      // engines (decimal 0.9 would ceil differently at exact-integer
-      // boundaries: 10·0.9 is 9 in decimal, 9.000…002 in IEEE).
-      val ev = Tables.events(s, dir)
-        .withColumn("half", lehmer3(col("event_id")) % 2)
-      val mu = ev.filter(col("half") === 0).groupBy(col("event_type"))
-        .agg((dsum(col("value")) / count(lit(1))).as("mu"))
-      val cal = Dedup.cacheScoped(ev.filter(col("half") === 1)
-        .join(broadcast(mu), Seq("event_type"))
-        .select(col("event_type"), col("event_id"),
-          abs(col("value") - col("mu")).as("res")))
-      val ks: Map[Any, Long] = cal.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n")).collect()
-        .map(r => (r.get(0): Any,
-          math.min(math.ceil((r.getLong(1) + 1) * 0.9).toLong, r.getLong(1))))
-        .toMap
-      val qh = graft.operators.Selection.exactGroupedOrderStat(
-        cal, "event_type", "res", ks)
-      mu.join(qh, Seq("event_type"))
-        .select(col("event_type"), col("k").as("k_rank"),
-          pround(col("mu"), 9).as("mu"), pround(col("value"), 9).as("qhat"),
-          pround(col("mu") - col("value"), 9).as("lo"),
-          pround(col("mu") + col("value"), 9).as("hi"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q257_eb_shrinkage" -> ((s, dir) => {
-      // empirical-Bayes (James–Stein) shrinkage of per-source quality
-      // means [EXT] — the small-domain estimator behind every
-      // per-domain dashboard: a 30-doc source's raw mean is mostly
-      // noise, so m̃_s = m̄ + B_s·(m_s − m̄) with B_s = τ²/(τ² + σ²/n_s)
-      // pulls it toward the grand mean exactly as hard as its sample
-      // size warrants (normal-normal EB; τ² by method of moments,
-      // clamped at 0 — all-shrink when between-variance vanishes).
-      // Scores are the q108/q233 portable sigmoid (9-digit by
-      // construction); within-σ² from pround-DECIMAL moments; the
-      // ≤|sources|-row shrink frame closes in pure IEEE, floor-9.
-      val D6 = DecimalType(27, 6)
-      val score = TextAnalysis.classifierScore(col("text"),
-        wTokens = 1.2, wStop = 2.0, wAlpha = 1.5, wPunct = -3.0, bias = -1.0)
-      val perSrc = Dedup.cacheScoped(Tables.documents(s, dir)
-        .select(col("source"), score.as("p"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("p").cast(DecimalType(27, 9))).cast("double").as("s"),
-          sum(pround(col("p") * col("p"), 6).cast(D6)).cast("double").as("ss")))
-      // every cross-source reduction routes through pround+DECIMAL —
-      // a raw double sum would be partial-agg-order-dependent even on
-      // this ≤|sources|-row frame
-      val g = perSrc.agg(sum(col("n")).as("nn"), count(lit(1)).as("kk"),
-        sum(col("s").cast(DecimalType(27, 9))).cast("double").as("stot"),
-        sum(col("ss").cast(D6)).cast("double").as("sstot"),
-        sum(pround((col("s") / col("n")) * (col("s") / col("n")), 9)
-          .cast(DecimalType(27, 9))).cast("double").as("sm2"),
-        sum(pround(col("s") / col("n"), 9).cast(DecimalType(27, 9)))
-          .cast("double").as("smraw"),
-        sum(pround(lit(1.0) / col("n"), 12).cast(DecimalType(27, 14)))
-          .cast("double").as("sinv"))
-      // σ²: global sample variance of scores; between: sample variance
-      // of the k raw means; τ² = max(0, between − σ²·avg(1/n))
-      val mbar = col("stot") / col("nn")
-      val sig2 = (col("sstot") - col("stot") * col("stot") / col("nn")) /
-        (col("nn") - 1)
-      val between = (col("sm2") - col("smraw") * col("smraw") / col("kk")) /
-        (col("kk") - 1)
-      val tau2 = greatest(between - sig2 * (col("sinv") / col("kk")), lit(0.0))
-      perSrc.crossJoin(broadcast(g))
-        .filter(col("kk") > 1 && col("nn") > col("kk"))
-        .select(col("source"), col("n"),
-          pround(col("s") / col("n"), 9).as("raw_mean"),
-          (floor(tau2 / (tau2 + sig2 / col("n")) * 1e9 + 0.5) / 1e9).as("shrink_b"),
-          pround(mbar + tau2 / (tau2 + sig2 / col("n"))
-            * (col("s") / col("n") - mbar), 9).as("shrunk_mean"))
-        .orderBy(col("source"))
-    }),
-
-    "q258_topic_coherence" -> ((s, dir) => {
-      // NPMI topic coherence of per-source top terms [EXT] — the
-      // topic-model evaluation metric (Lau et al.; Röder's C_NPMI)
-      // applied to each source's vocabulary head: do its top-10
-      // document-frequency terms actually CO-OCCUR in documents
-      // (coherent domain) or just individually often (grab-bag)?
-      // NPMI(w₁,w₂) = ln(df₁₂·D/(df₁·df₂)) / −ln(df₁₂/D) over the ≤45
-      // pairs per source; q86/q146 compute corpus-wide collocation PMI
-      // — this is the NORMALIZED, presence-based variant scoped to the
-      // vocabulary head, the form used to score topic quality. Top
-      // terms rank by a WindowGroupLimit over per-source document
-      // frequencies; presence rows semi-join against the ≤10·|sources|
-      // broadcast term list; every count is exact, each ln takes
-      // exact-integer ratios floor-rounded at 12, the per-source mean
-      // reduces in DECIMAL. Zero-co-occurrence pairs drop (inner join)
-      // — deterministic and mirrored, the standard C_NPMI convention.
-      // r19 (guide §2.4): the distinct presence frame is folded into a
-      // per-(source, doc) sorted word SET (one exchange builds it and
-      // subsumes the old standalone distinct); per-doc top-term hits
-      // re-group WITHOUT an exchange (explode/broadcast-join preserve
-      // the set frame's (source, doc_id) partitioning), and the ≤45
-      // pairs per doc explode in-row (q157 idiom) instead of the old
-      // (source, doc_id) self-join — old 5-exchange chain → 3.
-      val sets = Dedup.cacheScoped(Tables.documents(s, dir)
-        .select(col("source"), col("doc_id"),
-          explode(split(lower(col("text")), " ")).as("w"))
-        .filter(length(col("w")) > 0)
-        .groupBy(col("source"), col("doc_id"))
-        .agg(array_sort(collect_set(col("w"))).as("ws")))
-      val dS = sets.groupBy(col("source")).agg(count(lit(1)).as("d"))
-      val wDf = Window.partitionBy(col("source")).orderBy(col("df").desc, col("w"))
-      val top = sets.select(col("source"), explode(col("ws")).as("w"))
-        .groupBy(col("source"), col("w"))
-        .agg(count(lit(1)).as("df"))
-        .withColumn("r", row_number().over(wDf))
-        .filter(col("r") <= 10)
-        .select(col("source"), col("w"), col("df"))
-      val hits = sets.select(col("source"), col("doc_id"), explode(col("ws")).as("w"))
-        .join(broadcast(top), Seq("source", "w"))
-        .groupBy(col("source"), col("doc_id"))
-        .agg(array_sort(collect_set(struct(col("w"), col("df")))).as("ts"))
-      val pairs = hits.select(col("source"),
-          explode(flatten(transform(col("ts"), (a, i) =>
-            transform(slice(col("ts"), i + lit(2), size(col("ts"))), b =>
-              struct(a.getField("w").as("w1"), b.getField("w").as("w2"),
-                a.getField("df").as("df1"), b.getField("df").as("df2")))))).as("p"))
-        .select(col("source"), col("p.w1").as("w1"), col("p.w2").as("w2"),
-          col("p.df1").as("df1"), col("p.df2").as("df2"))
-        .groupBy(col("source"), col("w1"), col("w2"), col("df1"), col("df2"))
-        .agg(count(lit(1)).as("df12"))
-      val npmi = floor(
-        log((col("df12") * col("d")).cast("double")
-          / (col("df1") * col("df2")).cast("double"))
-        / -log(col("df12").cast("double") / col("d")) * 1e12 + 0.5) / 1e12
-      pairs.join(broadcast(dS), Seq("source"))
-        .filter(col("df12") < col("d")) // p12 = 1 makes the normalizer ln(1) = 0
-        .select(col("source"), npmi.cast(DecimalType(27, 14)).as("t"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_pairs"),
-          (floor(sum(col("t")).cast("double") / count(lit(1)) * 1e9 + 0.5) / 1e9)
-            .as("coherence"))
-        .orderBy(col("source"))
-    }),
-
-    "q259_sample_selectivity" -> ((s, dir) => {
-      // sample-based selectivity estimation QC [EXT] — the "how wrong
-      // is ANALYZE" report: cost-based planners estimate predicate
-      // selectivity from a small sample; this measures the estimate
-      // against ground truth for a ladder of `value > t` predicates so
-      // the statistics refresh policy has numbers (big rel_err on the
-      // tail thresholds = the classic sample-misses-the-tail failure).
-      // The 10% sample is the q109 portable Lehmer hash (deterministic
-      // and engine-identical — a random() sample could never oracle);
-      // both counts reduce in ONE conditional agg over one scan each;
-      // the estimate scales by the EXACT sample fraction, rel_err
-      // closes floor-9 (actual = 0 rows are dropped — mirrored).
-      val thresholds = Seq(50, 100, 200, 300)
-      val ev = Dedup.cacheScoped(Tables.events(s, dir)
-        .select(col("value"), (lehmer3(col("event_id")) % 10 === 0).as("in_sample")))
-      val aggCols = Seq(count(lit(1)).as("n"),
-        sum(col("in_sample").cast("long")).as("n_samp")) ++
-        thresholds.flatMap(t => Seq(
-          sum(when(col("value") > t, 1L).otherwise(0L)).as(s"a_$t"),
-          sum(when(col("in_sample") && col("value") > t, 1L).otherwise(0L)).as(s"s_$t")))
-      val agg = Dedup.cacheScoped(ev.agg(aggCols.head, aggCols.tail: _*))
-      thresholds.map { t =>
-        agg.select(lit(t.toLong).as("threshold"), col(s"a_$t").as("actual"),
-          col(s"s_$t").as("n_sample_hits"),
-          (floor(col(s"s_$t").cast("double") / col("n_samp") * col("n")
-            * 1e9 + 0.5) / 1e9).as("estimate"),
-          when(col(s"a_$t") > 0,
-            floor((col(s"s_$t").cast("double") / col("n_samp") * col("n")
-              - col(s"a_$t")) / col(s"a_$t") * 1e9 + 0.5) / 1e9).as("rel_err"))
-          .filter(col("actual") > 0)
-      }.reduce(_ unionAll _).orderBy(col("threshold"))
-    }),
-
-    "q260_heaps_law" -> ((s, dir) => {
-      // Heaps'-law vocabulary growth fit [EXT] — V(n) ≈ K·n^β: how fast
-      // does the vocabulary grow as the corpus grows (q200's Zipf fit
-      // is the static rank-frequency law; Heaps is its GROWTH twin —
-      // the pair is the standard corpus-statistics health check, and β
-      // drifting upward across snapshots means rising boilerplate /
-      // synthetic text). Doc order comes from the dense-id two-pass
-      // (q25 discipline — no global window over documents); V at each
-      // of 10 cutoffs = words whose FIRST-occurrence rank ≤ cutoff
-      // (one pass + a 10-row broadcast theta filter — never 10 corpus
-      // scans); cutoffs are exact integer ceil((m·D)/10) via `div`;
-      // the log-log OLS runs on floor-12 lns over the 10-point frame
-      // in DECIMAL sums, slope and K close pure-IEEE, floor-9.
-      val docs = DocPipeline.withDenseIds(
-        Tables.documents(s, dir).select(col("doc_id"), col("text")),
-        col("doc_id"), "rid")
-      val fr = docs
-        .select((col("rid") + 1).as("r"), explode(split(lower(col("text")), " ")).as("w"))
-        .filter(length(col("w")) > 0)
-        .groupBy(col("w")).agg(min(col("r")).as("fr"))
-      val dT = docs.agg(count(lit(1)).as("d"))
-      val cuts = dT.withColumn("m", explode(sequence(lit(1), lit(10))))
-        .select(col("m").cast("long").as("m"),
-          expr("(m * d + 9) div 10").as("cutoff"))
-      val pts = fr.crossJoin(broadcast(cuts))
-        .filter(col("fr") <= col("cutoff"))
-        .groupBy(col("m"), col("cutoff")).agg(count(lit(1)).as("v"))
-      val xy = pts.select(
-        (floor(log(col("cutoff").cast("double")) * 1e12 + 0.5) / 1e12).as("x"),
-        (floor(log(col("v").cast("double")) * 1e12 + 0.5) / 1e12).as("y"))
-        .select(col("x"), col("y"),
-          (floor(col("x") * col("y") * 1e12 + 0.5) / 1e12).as("xy"),
-          (floor(col("x") * col("x") * 1e12 + 0.5) / 1e12).as("xx"))
-      val D14 = DecimalType(27, 14)
-      val f = xy.agg(count(lit(1)).as("np"),
-        sum(col("x").cast(D14)).cast("double").as("sx"),
-        sum(col("y").cast(D14)).cast("double").as("sy"),
-        sum(col("xy").cast(D14)).cast("double").as("sxy"),
-        sum(col("xx").cast(D14)).cast("double").as("sxx"))
-      val beta = (col("np") * col("sxy") - col("sx") * col("sy")) /
-        (col("np") * col("sxx") - col("sx") * col("sx"))
-      f.filter(col("np") * col("sxx") - col("sx") * col("sx") > 0)
-        .select(col("np").as("n_points"),
-          (floor(beta * 1e9 + 0.5) / 1e9).as("beta"),
-          (floor(exp(col("sy") / col("np") - beta * (col("sx") / col("np")))
-            * 1e9 + 0.5) / 1e9).as("k_coef"))
-    }),
-
-    "q261_stream_conformal" -> ((s, dir) => {
-      // STREAMING conformal anomaly gate [EXT] — q256's finite-sample
-      // band deployed as a live monitor (the conformal take on q227's
-      // z-gate: z assumes normality; the conformal band guarantees
-      // ~10% exceedance under NO distributional assumption, so a day
-      // running far above 0.1 reads as distribution shift, not as a
-      // violated Gaussian). μ̂ and q̂ are FROZEN from the pre-split
-      // train/cal halves (portable Lehmer parity + the selector's
-      // rank entry point); the live stream broadcast-joins the
-      // ≤|types|-row band (q114's stream-static shape), flags
-      // |value−μ̂| > q̂ map-side, and aggregates per (day, type) inside
-      // a real streaming query — per-row state never accumulates,
-      // only the window counts do.
-      val split = to_timestamp(lit("2024-01-15 00:00:00"))
-      val staging = StreamingOps.defaultStagingDir(s, dir)
-      StreamingOps.stageEventsForStreaming(s, dir, staging)
-      val pre = Tables.events(s, dir).filter(col("ts") < split)
-        .withColumn("half", lehmer3(col("event_id")) % 2)
-      val mu = pre.filter(col("half") === 0).groupBy(col("event_type"))
-        .agg((dsum(col("value")) / count(lit(1))).as("mu"))
-      val cal = Dedup.cacheScoped(pre.filter(col("half") === 1)
-        .join(broadcast(mu), Seq("event_type"))
-        .select(col("event_type"), abs(col("value") - col("mu")).as("res")))
-      val ks: Map[Any, Long] = cal.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n")).collect()
-        .map(r => (r.get(0): Any,
-          math.min(math.ceil((r.getLong(1) + 1) * 0.9).toLong, r.getLong(1))))
-        .toMap
-      val band = graft.operators.Selection.exactGroupedOrderStat(
-          cal, "event_type", "res", ks)
-        .select(col("event_type"), col("value").as("qhat"))
-        .join(mu, Seq("event_type"))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val stream = StreamingOps.eventsStream(s, staging)
-          .filter(col("ts") >= split)
-          .join(broadcast(band), Seq("event_type"))
-          .select(col("event_type"), window(col("ts"), "1 day").as("w"),
-            (abs(col("value") - col("mu")) > col("qhat")).cast("long").as("out"))
-          .groupBy(col("w"), col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(col("out")).as("n_out"))
-        StreamingOps.runToMemory(s, stream, "q261_stream_conformal")
-          .select(col("w.start").as("day"), col("event_type"), col("n"), col("n_out"),
-            (floor(col("n_out").cast("double") / col("n") * 1e9 + 0.5) / 1e9)
-              .as("out_rate"))
-          .orderBy(col("day"), col("event_type"))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }),
-
-    "q262_did" -> ((s, dir) => {
-      // difference-in-differences [EXT] — the panel-data causal
-      // estimator the A/B family still lacked (q174 needs
-      // randomization; DiD works on OBSERVATIONAL rollouts):
-      // δ̂ = (ȳ_T,post − ȳ_T,pre) − (ȳ_C,post − ȳ_C,pre), which
-      // differences away both the group level and the common time
-      // trend; SE from the four cells' variances (independent-means
-      // approximation — the same ingredients q247/q252 use). Arms are
-      // the q174 user parity, periods split at the q174 date; all
-      // four cells reduce in ONE conditional agg over one scan
-      // (pround+DECIMAL moments), the ≤1-row close is pure IEEE,
-      // floor-9.
-      val split = to_timestamp(lit("2024-01-15 00:00:00"))
-      val D6 = DecimalType(27, 6)
-      val cells = Tables.events(s, dir)
-        .select((col("user_id") % 2).as("t"),
-          (col("ts") >= split).cast("long").as("post"), col("value"))
-        .groupBy(col("t"), col("post"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(18, 4))).cast("double").as("s"),
-          sum(pround(col("value") * col("value"), 6).cast(D6)).cast("double").as("ss"))
-      def cell(t: Int, p: Int, c: String) =
-        max(when(col("t") === t && col("post") === p, col(c))).as(s"${c}_${t}$p")
-      val w = cells.agg(
-        cell(1, 0, "n"), cell(1, 0, "s"), cell(1, 0, "ss"),
-        cell(1, 1, "n"), cell(1, 1, "s"), cell(1, 1, "ss"),
-        cell(0, 0, "n"), cell(0, 0, "s"), cell(0, 0, "ss"),
-        cell(0, 1, "n"), cell(0, 1, "s"), cell(0, 1, "ss"))
-      def m(t: Int, p: Int) = col(s"s_$t$p") / col(s"n_$t$p")
-      def v(t: Int, p: Int) =
-        (col(s"ss_$t$p") - col(s"s_$t$p") * col(s"s_$t$p") / col(s"n_$t$p")) /
-          (col(s"n_$t$p") - 1) / col(s"n_$t$p")
-      val did = m(1, 1) - m(1, 0) - (m(0, 1) - m(0, 0))
-      w.filter(col("n_10") > 1 && col("n_11") > 1 && col("n_00") > 1 && col("n_01") > 1)
-        .select(
-          col("n_10").as("n_treat_pre"), col("n_11").as("n_treat_post"),
-          col("n_00").as("n_ctrl_pre"), col("n_01").as("n_ctrl_post"),
-          pround(did, 9).as("did"),
-          (floor(sqrt(v(1, 1) + v(1, 0) + v(0, 1) + v(0, 0)) * 1e9 + 0.5) / 1e9)
-            .as("se"))
-    }),
-
-    "q263_ndcg" -> ((s, dir) => {
-      // nDCG@10 of the BM25 ranking [EXT] — the graded ranking-quality
-      // metric the IR family lacked (the recall@k specs check ANN
-      // CANDIDATE quality; nDCG scores the ORDERING): relevance = tf
-      // of the query's first term capped at 3 (a deterministic graded
-      // proxy both engines derive from the same posting lists), gains
-      // 2^rel−1, discounts 1/log₂(i+1) as a literal ladder (q249
-      // discipline — never engine log2), IDCG from the corpus-ideal
-      // ordering so a perfect ranker scores exactly 1. The only
-      // corpus-sized pass is the shared tokenize; the ranking and the
-      // ideal list are ≤10-row frames.
-      val discounts = (1 to 10).map(i => 1.0 / (math.log(i + 1.0) / math.log(2.0)))
-      val dArr = array(discounts.map(lit): _*)
-      val (bm25, words) = bm25Scores(s, dir)
-      val rel = words.filter(col("w") === bm25Terms.head)
-        .groupBy(col("doc_id")).agg(least(count(lit(1)), lit(3L)).as("rel"))
-      def gain(c: Column) = when(c === 1, 1L).when(c === 2, 3L)
-        .when(c === 3, 7L).otherwise(0L)
-      val wTop = Window.orderBy(desc("bm25"), col("doc_id"))
-      val dcg = bm25.orderBy(desc("bm25"), col("doc_id")).limit(10)
-        .withColumn("i", row_number().over(wTop))
-        .join(rel, Seq("doc_id"), "left")
-        .select((floor(gain(coalesce(col("rel"), lit(0L))).cast("double")
-          * element_at(dArr, col("i")) * 1e12 + 0.5) / 1e12)
-          .cast(DecimalType(27, 14)).as("t"))
-        .agg(sum(col("t")).cast("double").as("dcg"))
-      val wIdeal = Window.orderBy(desc("rel"), col("doc_id"))
-      val idcg = rel.orderBy(desc("rel"), col("doc_id")).limit(10)
-        .withColumn("i", row_number().over(wIdeal))
-        .select((floor(gain(col("rel")).cast("double")
-          * element_at(dArr, col("i")) * 1e12 + 0.5) / 1e12)
-          .cast(DecimalType(27, 14)).as("t"))
-        .agg(sum(col("t")).cast("double").as("idcg"))
-      dcg.crossJoin(broadcast(idcg))
-        .filter(col("idcg") > 0)
-        .select(pround(col("dcg"), 9).as("dcg"), pround(col("idcg"), 9).as("idcg"),
-          (floor(col("dcg") / col("idcg") * 1e9 + 0.5) / 1e9).as("ndcg"))
-    }),
-
-    "q264_map_at_k" -> ((s, dir) => {
-      // MAP@10 of the BM25 ranking [EXT] — the binary-relevance
-      // companion to q263's graded nDCG: average precision integrates
-      // precision at every relevant rank, so one irrelevant doc ranked
-      // above a relevant one is charged at exactly the rank it
-      // corrupts (the canonical ad-hoc-retrieval headline metric).
-      // rel = doc contains the query's head term; AP@10 =
-      // Σ_{i≤10, rel_i} P@i / min(R, 10) with R the corpus-wide
-      // relevant count (the TREC-eval denominator). Only corpus-sized
-      // pass is [[bm25Scores]]' shared tokenize; the ranked frame is
-      // 10 rows. P@i is an exact-long ratio pround(12) into a DECIMAL
-      // sum; floor-9 close.
-      val (bm25, words) = bm25Scores(s, dir)
-      val rel = words.filter(col("w") === bm25Terms.head)
-        .select(col("doc_id")).distinct()
-      val nRel = rel.agg(count(lit(1)).as("n_rel"))
-      val wTop = Window.orderBy(desc("bm25"), col("doc_id"))
-      bm25.orderBy(desc("bm25"), col("doc_id")).limit(10)
-        .withColumn("i", row_number().over(wTop))
-        .join(rel.withColumn("hit", lit(1L)), Seq("doc_id"), "left")
-        .withColumn("hit", coalesce(col("hit"), lit(0L)))
-        .withColumn("cumhit", sum(col("hit")).over(
-          wTop.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .agg(
-          sum(when(col("hit") === 1L,
-              pround(col("cumhit").cast("double") / col("i"), 12))
-            .otherwise(lit(0.0)).cast(DecimalType(27, 14))).as("apnum"),
-          sum(col("hit")).as("hits"))
-        .crossJoin(broadcast(nRel))
-        .filter(col("n_rel") > 0)
-        .select(col("n_rel"), col("hits").as("hits_at_10"),
-          (floor(col("apnum").cast("double")
-            / least(col("n_rel"), lit(10L)).cast("double") * 1e9 + 0.5) / 1e9)
-            .as("ap_at_10"))
-    }),
-
-    "q265_pr_auc" -> ((s, dir) => {
-      // average precision (step-function PR-AUC) per source [EXT] —
-      // q221's ROC-AUC twin for the IMBALANCED regime: ROC flatters a
-      // rare-positive detector (false positives barely dent the huge
-      // negative mass) while PR tracks precision exactly where the
-      // positives live — the right eval for quality filters that keep
-      // 1% of a crawl. Same per-(source, score) count frame and
-      // no-global-window discipline as q221: ONE CumSum two-pass over
-      // (source, score DESC) carrying BOTH n and np, per-source rebase
-      // with driver offsets (≤|sources| rows), then AP =
-      // Σ_thresholds ΔTP·cumTP / (P·cumN) — each term an exact-long
-      // ratio pround(12) into a DECIMAL sum, floor-9 close.
-      val d = Tables.documents(s, dir).select(col("source"),
-        TextAnalysis.qualityScore(col("text")).as("score"),
-        (col("lang") === "en").cast("long").as("pos"))
-      val c = Dedup.cacheScoped(d.groupBy(col("source"), col("score"))
-        .agg(count(lit(1)).as("n"), sum(col("pos")).as("np")))
-      val cum = CumSum.withRunningTotals(c,
-        Seq(col("source"), col("score") * lit(-1.0)),
-        Seq(col("n") -> "gn", col("np") -> "gnp"))
-      val tot = c.groupBy(col("source"))
-        .agg(sum(col("n")).as("tn"), sum(col("np")).as("tp"))
-        .orderBy(col("source")).collect()
-      var accN = 0L
-      var accP = 0L
-      val offs = tot.map { r =>
-        val row = (r.getString(0), accN, accP, r.getLong(1), r.getLong(2))
-        accN += r.getLong(1); accP += r.getLong(2); row
-      }.toIndexedSeq
-      import s.implicits._
-      val offDf = offs.toDF("source", "offn", "offp", "tn", "tp")
-      cum.join(broadcast(offDf), Seq("source"))
-        .filter(col("tp") > 0 && col("tn") - col("tp") > 0)
-        .withColumn("cn", col("gn") - col("offn"))
-        .withColumn("ctp", col("gnp") - col("offp"))
-        // double-FIRST products: long·long wraps past 2^63 at corpus
-        // scale while DuckDB widens to HUGEINT; IEEE double multiply is
-        // engine-identical at any magnitude (q222 tie-term lesson)
-        .withColumn("term", pround(
-          (col("np").cast("double") * col("ctp").cast("double"))
-            / (col("tp").cast("double") * col("cn").cast("double")), 12))
-        .groupBy(col("source"))
-        .agg(sum(col("term").cast(DecimalType(27, 14))).as("apd"))
-        .join(broadcast(offDf), Seq("source"))
-        .select(col("source"), col("tp").as("n_pos"),
-          (floor(col("apd").cast("double") * 1e9 + 0.5) / 1e9).as("ap"))
-        .orderBy(col("source"))
-    }),
-
-    "q266_max_concurrency" -> ((s, dir) => {
-      // peak session concurrency [EXT] — the interval boundary sweep
-      // (+1 at each session start, −1 at each end, running-sum, max):
-      // "how many sessions were live at once", the capacity-planning /
-      // rate-limit-sizing number the interval family (q172 overlap
-      // join, q92 funnel) cannot answer. Sessions are the 30-min-gap
-      // per-user kind; the boundary frame is 2 rows/session and the
-      // global running sum rides the CumSum two-pass (never a global
-      // window) over the total order (ts, start-before-end, user, sid)
-      // — ends sort AFTER starts at the same instant, so touching
-      // sessions count as overlapping. Within an order-tie block all
-      // deltas are equal, so the live-count multiset (hence peak,
-      // peak_ts, n_at_peak) is tie-order invariant; all arithmetic is
-      // exact longs.
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val sess = Tables.events(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"))
-        .withColumn("gap", (unix_timestamp(col("ts")) -
-          unix_timestamp(lag(col("ts"), 1).over(w))) >= 1800)
-        .withColumn("brk", when(col("gap").isNull || !col("gap"), 0L).otherwise(1L))
-        .withColumn("sid", sum(col("brk")).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy(col("user_id"), col("sid"))
-        .agg(min(col("ts")).as("st"), max(col("ts")).as("en"))
-      val bounds = sess.select(col("st").as("ts"), lit(1L).as("delta"),
-          col("user_id"), col("sid"))
-        .unionAll(sess.select(col("en").as("ts"), lit(-1L).as("delta"),
-          col("user_id"), col("sid")))
-      val cum = CumSum.withRunningTotal(bounds,
-        Seq(col("ts"), col("delta") * lit(-1L), col("user_id"), col("sid")),
-        col("delta"), "live")
-      val peak = cum.agg(max(col("live")).as("peak"))
-      cum.crossJoin(broadcast(peak))
-        .filter(col("live") === col("peak"))
-        .groupBy(col("peak"))
-        .agg(min(col("ts")).as("peak_ts"), count(lit(1)).as("n_at_peak"))
-        .select(col("peak"), col("peak_ts"), col("n_at_peak"))
-    }),
-
-    "q267_cramers_v" -> ((s, dir) => {
-      // Cramér's V of event_type × weekday [EXT] — the normalized
-      // effect-size companion to q100's χ²: χ² grows linearly with n,
-      // so at corpus scale EVERYTHING is "significant"; V ∈ [0,1] is
-      // comparable across tables and corpora — the right "is usage
-      // actually day-dependent" number for seasonality triage. Weekday
-      // from exact integer epoch-day arithmetic (never engine
-      // date-part conventions, which disagree on week start); margins
-      // broadcast back onto the |types|×7 cell frame; each (o−e)²/e
-      // term pround(9) into a DECIMAL sum; dof and the min(r,c)−1
-      // normalizer from exact distinct counts.
-      val ev = Tables.events(s, dir).select(col("event_type"),
-        (datediff(to_date(col("ts")), lit("1970-01-01").cast("date")) % 7).as("dow"))
-      val cells = ev.groupBy(col("event_type"), col("dow")).agg(count(lit(1)).as("o"))
-      val rowT = cells.groupBy(col("event_type")).agg(sum(col("o")).as("rt"))
-      val colT = cells.groupBy(col("dow")).agg(sum(col("o")).as("ct"))
-      val nT = cells.agg(sum(col("o")).as("n"),
-        countDistinct(col("event_type")).as("r"), countDistinct(col("dow")).as("c"))
-      cells.join(broadcast(rowT), Seq("event_type"))
-        .join(broadcast(colT), Seq("dow"))
-        .crossJoin(broadcast(nT))
-        // double-first product: rt·ct reaches n² (wraps long at corpus
-        // scale; DuckDB's HUGEINT wouldn't) — IEEE multiply is portable
-        .withColumn("e", col("rt").cast("double") * col("ct").cast("double")
-          / col("n").cast("double"))
-        .withColumn("term",
-          pround((col("o") - col("e")) * (col("o") - col("e")) / col("e"), 9))
-        .groupBy(col("n"), col("r"), col("c"))
-        .agg(sum(col("term").cast(DecimalType(27, 10))).cast("double").as("chi2"))
-        .select(col("n"), ((col("r") - 1) * (col("c") - 1)).as("dof"),
-          pround(col("chi2"), 6).as("chi2"),
-          (floor(sqrt(col("chi2")
-            / (col("n") * least(col("r") - 1, col("c") - 1)).cast("double"))
-            * 1e9 + 0.5) / 1e9).as("v"))
-    }),
-
-    "q268_cohens_kappa" -> ((s, dir) => {
-      // Cohen's κ between two deterministic raters [EXT] — the
-      // chance-corrected agreement number for label QC: raw agreement
-      // flatters skewed label distributions (two raters who both say
-      // "keep almost everything" agree by accident), κ subtracts the
-      // margin-product chance floor — the standard inter-annotator
-      // report before trusting a relabeling campaign. Rater A: the
-      // cheap quality score ≥ 0.5; rater B: lang = 'en'. All four
-      // contingency cells reduce in ONE conditional agg over one scan;
-      // po/pe close in exact longs → double ratios mirrored term-for-
-      // term in the oracle, floor-9.
-      val d = Tables.documents(s, dir).select(
-        (TextAnalysis.qualityScore(col("text")) >= 0.5).cast("long").as("a"),
-        (col("lang") === "en").cast("long").as("b"))
-      val nD = col("n").cast("double")
-      val pe = (col("na").cast("double") / nD) * (col("nb").cast("double") / nD) +
-        ((col("n") - col("na")).cast("double") / nD) *
-          ((col("n") - col("nb")).cast("double") / nD)
-      val po = col("agree").cast("double") / nD
-      d.agg(count(lit(1)).as("n"), sum(col("a")).as("na"), sum(col("b")).as("nb"),
-          sum(when(col("a") === col("b"), 1L).otherwise(0L)).as("agree"))
-        .filter(col("n") > 0 && pe =!= 1.0)
-        .select(col("n"), col("na").as("n_a_pos"), col("nb").as("n_b_pos"),
-          pround(po, 9).as("po"), pround(pe, 9).as("pe"),
-          (floor((po - pe) / (lit(1.0) - pe) * 1e9 + 0.5) / 1e9).as("kappa"))
-    }),
-
-    "q269_changepoint" -> ((s, dir) => {
-      // single-changepoint estimate (binary segmentation, first level)
-      // on the daily total-value series [EXT] — "WHEN did the metric
-      // shift": q207's CUSUM monitors drift online, this RETROSPECTIVELY
-      // locates the split t maximizing the between-segment sum of
-      // squares BSS(t) = (S_t − t·S_T/T)²·T/(t(T−t)) — the first
-      // recursion level of binary segmentation. One corpus pass (daily
-      // DECIMAL sums — exact, order-free), then all candidate splits on
-      // the ≤|days| frame: prefix sums stay in DECIMAL (a windowed
-      // double sum would tie the hash to the engine's summation tree),
-      // statistics convert once to double, mirrored term-for-term;
-      // argmax by (gain DESC, day) is total. Tiny-frame global window
-      // only (|days| rows).
-      val daily = Tables.events(s, dir)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(sum(col("value").cast(DecimalType(18, 4))).as("y"))
-      val w = Window.orderBy(col("day"))
-      val cum = daily
-        .withColumn("t", row_number().over(w).cast("long"))
-        .withColumn("st", sum(col("y")).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      val tot = daily.agg(count(lit(1)).as("tt"), sum(col("y")).as("stt"))
-      cum.crossJoin(broadcast(tot))
-        .filter(col("t") < col("tt"))
-        .withColumn("std", col("st").cast("double"))
-        .withColumn("sttd", col("stt").cast("double"))
-        .withColumn("diff", col("std")
-          - col("t").cast("double") * col("sttd") / col("tt").cast("double"))
-        .withColumn("gain", pround(col("diff") * col("diff") * col("tt").cast("double")
-          / (col("t").cast("double") * (col("tt") - col("t")).cast("double")), 6))
-        .orderBy(desc("gain"), col("day")).limit(1)
-        .select(col("day").as("split_day"), col("t").as("n_left"),
-          (col("tt") - col("t")).as("n_right"), col("gain"),
-          pround(col("std") / col("t").cast("double"), 6).as("mean_left"),
-          pround((col("sttd") - col("std"))
-            / (col("tt") - col("t")).cast("double"), 6).as("mean_right"))
-    }),
-
-    "q270_lognormal_tail" -> ((s, dir) => {
-      // log-normal fit + tail-mass check of doc length per source [EXT]
-      // — the distributional QC behind length-based curation gates:
-      // doc lengths are canonically log-normal; a heavy log-space skew
-      // or tail mass far above the 2σ prediction (Φ(−2) ≈ 0.02275)
-      // says the source mixes regimes (boilerplate + books) and a
-      // single length cut is wrong. Moments of ln(n_chars) pround(9)
-      // into DECIMAL sums (one pass); thresholds broadcast back for
-      // the tail count (second pass, map-side); compare ROUNDED lx to
-      // ROUNDED threshold so an exp/ln last-ulp can't flip a boundary
-      // doc (q87 discipline).
-      val d = Dedup.cacheScoped(Tables.documents(s, dir)
-        .filter(col("n_chars") > 0)
-        .select(col("source"), log(col("n_chars").cast("double")).as("lx")))
-      val st = d.groupBy(col("source")).agg(
-          count(lit(1)).as("n"),
-          sum(pround(col("lx"), 9).cast(DecimalType(27, 10))).cast("double").as("s1"),
-          sum(pround(col("lx") * col("lx"), 9).cast(DecimalType(27, 10)))
-            .cast("double").as("s2"),
-          sum(pround(col("lx") * col("lx") * col("lx"), 9).cast(DecimalType(27, 10)))
-            .cast("double").as("s3"))
-        .filter(col("n") > 2)
-        .withColumn("mu", col("s1") / col("n"))
-        .withColumn("m2", col("s2") / col("n") - col("mu") * col("mu"))
-        .filter(col("m2") > 0)
-        .withColumn("m3", col("s3") / col("n")
-          - lit(3.0) * col("mu") * (col("s2") / col("n"))
-          + lit(2.0) * col("mu") * col("mu") * col("mu"))
-        .withColumn("sigma", sqrt(col("m2")))
-        .withColumn("thr", pround(col("mu") + lit(2.0) * col("sigma"), 9))
-      val tail = d.join(broadcast(st.select(col("source"), col("thr"))), Seq("source"))
-        .groupBy(col("source"))
-        .agg(sum(when(pround(col("lx"), 9) > col("thr"), 1L).otherwise(0L)).as("n_tail"))
-      st.join(tail, Seq("source"))
-        .select(col("source"), col("n"),
-          pround(col("mu"), 9).as("mu_log"),
-          (floor(col("sigma") * 1e9 + 0.5) / 1e9).as("sigma_log"),
-          (floor(col("m3") / (col("sigma") * col("m2")) * 1e9 + 0.5) / 1e9)
-            .as("skew_log"),
-          pround(col("n_tail").cast("double") / col("n"), 9).as("tail_frac"),
-          pround(col("n_tail").cast("double") / col("n") - 0.02275, 9).as("tail_excess"))
-        .orderBy(col("source"))
-    }),
-
-    "q271_gumbel_fit" -> ((s, dir) => {
-      // Gumbel fit of daily block maxima [EXT] — extreme-value theory's
-      // block-maxima branch (q239's Hill index is the OTHER branch:
-      // tail decay of ALL large values; Gumbel models the distribution
-      // of per-period RECORDS — the "how bad is the worst day of the
-      // next year" capacity question). Method of moments: β̂ = s·√6/π,
-      // μ̂ = m − γ·β̂, 99% return level μ̂ − β̂·ln(−ln 0.99); √6/π, γ and
-      // the ln(−ln p) constant are Scala-computed literals embedded in
-      // BOTH plans (never engine-evaluated transcendentals of
-      // constants). One corpus pass (daily max), moments on the
-      // ≤|days| frame in pround+DECIMAL.
-      val sqrt6OverPi = math.sqrt(6.0) / math.Pi
-      val gamma = 0.5772156649015329
-      val c99 = math.log(-math.log(0.99))
-      val daily = Tables.events(s, dir)
-        .groupBy(to_date(col("ts")).as("day")).agg(max(col("value")).as("mx"))
-      daily.agg(count(lit(1)).as("n"),
-          sum(pround(col("mx"), 6).cast(DecimalType(27, 8))).cast("double").as("s1"),
-          sum(pround(col("mx") * col("mx"), 6).cast(DecimalType(27, 8)))
-            .cast("double").as("s2"))
-        .filter(col("n") > 1)
-        .withColumn("m", col("s1") / col("n"))
-        .withColumn("v", (col("s2") - col("s1") * col("s1") / col("n"))
-          / (col("n") - 1))
-        .filter(col("v") > 0)
-        .withColumn("beta", sqrt(col("v")) * lit(sqrt6OverPi))
-        .withColumn("mu", col("m") - lit(gamma) * col("beta"))
-        .select(col("n").as("n_blocks"), pround(col("m"), 9).as("mean_max"),
-          pround(col("mu"), 9).as("mu"),
-          (floor(col("beta") * 1e9 + 0.5) / 1e9).as("beta"),
-          (floor((col("mu") - col("beta") * lit(c99)) * 1e9 + 0.5) / 1e9)
-            .as("return_99"))
-    }),
-
-    "q272_spell_variants" -> ((s, dir) => {
-      // edit-distance-1 spell-variant mining over the corpus vocabulary
-      // [EXT] — the fuzzy-matching tier of the dedup/linkage family
-      // (q158 blocks RECORDS on exact keys; q224 sorts neighborhoods;
-      // this finds typo/variant WORD pairs — normalization candidates
-      // for tokenizer vocab and query rewriting). Levenshtein is
-      // exact-integer in both engines (no float parity surface).
-      // Blocked self-join: equal 2-char prefix + |Δlen| ≤ 1 bounds
-      // pairs to Σ_blk |blk|² over the VOCABULARY (not the corpus) —
-      // the standard blocking recall trade, stated; distance-1 pairs
-      // differing inside the first 2 chars are out of block by design.
-      // Top-20 by combined document frequency, total order.
-      val vocab = Tables.documents(s, dir)
-        .select(explode(split(col("text"), " ")).as("w"))
-        .filter(col("w").rlike("^[a-z]{4,12}$"))
-        .groupBy(col("w")).agg(count(lit(1)).as("df"))
-      val v = Dedup.cacheScoped(vocab.withColumn("blk", substring(col("w"), 1, 2)))
-      v.as("a").join(v.as("b"),
-          col("a.blk") === col("b.blk") && col("a.w") < col("b.w") &&
-            abs(length(col("a.w")) - length(col("b.w"))) <= 1)
-        .filter(levenshtein(col("a.w"), col("b.w")) === 1)
-        .select(col("a.w").as("w1"), col("b.w").as("w2"),
-          col("a.df").as("df1"), col("b.df").as("df2"))
-        .orderBy((col("df1") + col("df2")).desc, col("w1"), col("w2"))
-        .limit(20)
-    }),
-
-    "q273_sax_motifs" -> ((s, dir) => {
-      // SAX motif discovery on the daily-volume series [EXT] — symbolic
-      // aggregate approximation: z-normalize the daily counts, map to a
-      // 4-letter alphabet at the N(0,1) quartile breakpoints (±0.6745,
-      // 0 — literals), and count 3-day words; the top motifs are the
-      // series' recurring local shapes (the time-series twin of q237's
-      // path trigrams). Calendar joins align consecutive days (q238's
-      // discipline — never a window over the series); counts are exact
-      // ints, z pround(9) before the breakpoint compare so a last-ulp
-      // can't flip a letter; population variance via double-first
-      // products (exact-int squares would overflow long at corpus
-      // scale).
-      val daily = Dedup.cacheScoped(Tables.events(s, dir)
-        .groupBy(to_date(col("ts")).as("day")).agg(count(lit(1)).as("x")))
-      val st = daily.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-        sum((col("x").cast(DecimalType(38, 0)) * col("x"))).as("sxx"))
-      val lettered = daily.crossJoin(broadcast(st))
-        .filter(col("n") > 1)
-        .withColumn("m", col("sx").cast("double") / col("n").cast("double"))
-        .withColumn("v", col("sxx").cast("double") / col("n").cast("double")
-          - col("m") * col("m"))
-        .filter(col("v") > 0)
-        .withColumn("z", pround((col("x").cast("double") - col("m")) / sqrt(col("v")), 9))
-        .withColumn("l", when(col("z") < -0.6745, lit("a"))
-          .when(col("z") < 0.0, lit("b"))
-          .when(col("z") < 0.6745, lit("c")).otherwise(lit("d")))
-        .select(col("day"), col("l"))
-      lettered.as("d0")
-        .join(lettered.as("d1"), date_add(col("d0.day"), 1) === col("d1.day"))
-        .join(lettered.as("d2"), date_add(col("d0.day"), 2) === col("d2.day"))
-        .select(concat(col("d0.l"), col("d1.l"), col("d2.l")).as("motif"))
-        .groupBy(col("motif")).agg(count(lit(1)).as("cnt"))
-        .orderBy(desc("cnt"), col("motif")).limit(5)
-    }),
-
-    "q274_cv_accuracy" -> ((s, dir) => {
-      // 5-fold cross-validated accuracy of a nearest-class-mean text
-      // classifier [EXT] — the eval loop q108's training head lacks:
-      // in-sample accuracy flatters any model, CV is the honest
-      // number. The k training sets come from ONE scan via the
-      // complement trick: per-(fold, class) count/sum cells reduce
-      // once; the held-out fold's training mean is (total − fold) /
-      // (n − n_fold) — exact DECIMAL subtraction, never k passes over
-      // the corpus. Fold means broadcast back for a map-side predict;
-      // ROUNDED score vs ROUNDED means in the decision (q87
-      // discipline) so a last-ulp can't flip a prediction.
-      val k = 5
-      val d = Dedup.cacheScoped(Tables.documents(s, dir).select(
-        (col("doc_id") % k).as("fold"),
-        (col("lang") === "en").cast("long").as("y"),
-        pround(TextAnalysis.qualityScore(col("text")), 9).as("sc")))
-      val cell = d.groupBy(col("fold"), col("y"))
-        .agg(count(lit(1)).as("nf"), sum(col("sc").cast(DecimalType(27, 10))).as("sf"))
-      val tot = cell.groupBy(col("y"))
-        .agg(sum(col("nf")).as("nt"), sum(col("sf")).as("stot"))
-      val tr = cell.join(broadcast(tot), Seq("y"))
-        .filter(col("nt") - col("nf") > 0)
-        .select(col("fold"), col("y"),
-          pround((col("stot") - col("sf")).cast("double")
-            / (col("nt") - col("nf")).cast("double"), 9).as("m"))
-      val means = tr.groupBy(col("fold")).agg(
-          max(when(col("y") === 1, col("m"))).as("m1"),
-          max(when(col("y") === 0, col("m"))).as("m0"))
-        .filter(col("m1").isNotNull && col("m0").isNotNull)
-      d.join(broadcast(means), Seq("fold"))
-        .withColumn("pred",
-          (abs(col("sc") - col("m1")) < abs(col("sc") - col("m0"))).cast("long"))
-        .groupBy(col("fold"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("pred") === col("y"), 1L).otherwise(0L)).as("n_correct"))
-        .withColumn("accuracy", pround(col("n_correct").cast("double") / col("n"), 9))
-        .orderBy(col("fold"))
-    }),
-
-    "q275_durbin_watson" -> ((s, dir) => {
-      // Durbin–Watson serial-correlation test on daily-trend residuals
-      // [EXT] — the regression-diagnostics gap: q103 fits the line,
-      // q238 autocorrelates the RAW series; DW asks whether the
-      // RESIDUALS of a fitted trend still carry lag-1 structure (if so,
-      // the trend's SEs are fiction — the classic monitoring false-
-      // confidence trap). OLS on the ≤|days| frame from exact sums
-      // (DECIMAL for Σy/Σty, longs for Σt/Σt²) → doubles once,
-      // mirrored; residuals pround(9); adjacent pairs by row-index
-      // equi-join; num/den terms pround(12)→DECIMAL. Tiny-frame global
-      // window only (row_number over |days|).
-      val daily = Tables.events(s, dir)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(sum(col("value").cast(DecimalType(18, 4))).as("y"))
-      val w = Window.orderBy(col("day"))
-      val idx = Dedup.cacheScoped(daily
-        .withColumn("t", row_number().over(w).cast("long"))
-        .withColumn("yd", col("y").cast("double")))
-      // y·t double-FIRST then pround(4): the DECIMAL(28,4)·long product
-      // trips Spark's allowPrecisionLoss scale truncation (q233 lesson)
-      // — the rounded double product is the exact decimal value and
-      // engine-identical below ~1e12 magnitude
-      val st = idx.agg(count(lit(1)).as("n"), sum(col("t")).as("st1"),
-        sum(col("y")).as("sy"),
-        sum(pround(col("yd") * col("t").cast("double"), 4)
-          .cast(DecimalType(38, 6))).as("sty"),
-        sum(col("t") * col("t")).as("st2"))
-      val nd = col("n").cast("double")
-      val fit = st.filter(col("n") > 2)
-        .withColumn("st1d", col("st1").cast("double"))
-        .withColumn("syd", col("sy").cast("double"))
-        .withColumn("styd", col("sty").cast("double"))
-        .withColumn("st2d", col("st2").cast("double"))
-        .withColumn("b", (nd * col("styd") - col("st1d") * col("syd"))
-          / (nd * col("st2d") - col("st1d") * col("st1d")))
-        .withColumn("a", (col("syd") - col("b") * col("st1d")) / nd)
-        .select(col("a"), col("b"))
-      val e = idx.crossJoin(broadcast(fit))
-        .select(col("t"),
-          pround(col("yd") - (col("a") + col("b") * col("t").cast("double")), 9).as("e"))
-      // squared residuals round at scale 6, not 12: e² reaches 1e7 at
-      // sf0.01 already (1e10+ at larger SFs), and scale 6 keeps the
-      // scaled terms deep inside the exact-integer double range (the
-      // find that motivated pround's 2^52 identity guard)
-      val den = e.agg(
-        sum(pround(col("e") * col("e"), 6).cast(DecimalType(27, 8))).cast("double")
-          .as("den"), count(lit(1)).as("n"))
-      val num = e.select((col("t") + 1).as("t"), col("e").as("e0"))
-        .join(e.select(col("t"), col("e").as("e1")), Seq("t"))
-        .agg(sum(pround((col("e1") - col("e0")) * (col("e1") - col("e0")), 6)
-          .cast(DecimalType(27, 8))).cast("double").as("num"))
-      num.crossJoin(broadcast(den))
-        .filter(col("den") > 0)
-        .select(col("n"),
-          (floor(col("num") / col("den") * 1e9 + 0.5) / 1e9).as("dw"),
-          (floor((lit(1.0) - col("num") / col("den") / 2.0) * 1e9 + 0.5) / 1e9)
-            .as("rho1"))
-    }),
-
-    "q276_tost_equivalence" -> ((s, dir) => {
-      // TOST equivalence test (two one-sided z-tests) on click-vs-view
-      // value means [EXT] — the inverse of q247's difference test: a
-      // non-significant difference is NOT evidence of equivalence;
-      // TOST bounds the difference inside ±δ (δ = 5% of the control
-      // mean) with BOTH one-sided tests — the parity gate before
-      // swapping a data source or scorer version. Both groups' moments
-      // in ONE conditional agg (q262 cell shape), pround+DECIMAL sums,
-      // decision on ROUNDED t's vs the 1.645 literal (q87 discipline).
-      val D6 = DecimalType(27, 6)
-      val g = Tables.events(s, dir)
-        .filter(col("event_type").isin("click", "view"))
-        .select((col("event_type") === "click").cast("long").as("t"), col("value"))
-        .groupBy(col("t"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(18, 4))).cast("double").as("sv"),
-          sum(pround(col("value") * col("value"), 6).cast(D6)).cast("double").as("svv"))
-      def cell(t: Int, c: String) =
-        max(when(col("t") === t, col(c))).as(s"${c}$t")
-      val wv = g.agg(cell(1, "n"), cell(1, "sv"), cell(1, "svv"),
-        cell(0, "n"), cell(0, "sv"), cell(0, "svv"))
-      def m(t: Int) = col(s"sv$t") / col(s"n$t")
-      def v(t: Int) = (col(s"svv$t") - col(s"sv$t") * col(s"sv$t") / col(s"n$t")) /
-        (col(s"n$t") - 1) / col(s"n$t")
-      val diff = m(1) - m(0)
-      val delta = lit(0.05) * m(0)
-      val se = sqrt(v(1) + v(0))
-      val tl = pround((diff + delta) / se, 9)
-      val tu = pround((diff - delta) / se, 9)
-      wv.filter(col("n1") > 1 && col("n0") > 1)
-        .select(col("n1").as("n_click"), col("n0").as("n_view"),
-          pround(diff, 9).as("diff"),
-          (floor(delta * 1e9 + 0.5) / 1e9).as("margin"),
-          tl.as("t_lower"), tu.as("t_upper"),
-          (tl > 1.645 && tu < -1.645).cast("long").as("equivalent"))
-    }),
-
-    "q277_hapax_profile" -> ((s, dir) => {
-      // hapax-legomena lexical profile per source [EXT] — the
-      // vocabulary-richness triple the diversity family still lacked
-      // (q135 TTR is size-biased; q260 Heaps fits GROWTH; this profiles
-      // the FREQUENCY SPECTRUM): hapax fraction V1/V (synthetic/
-      // templated text runs low), Sichel's S = V2/V (stable across
-      // sizes), Honoré's R = 100·ln N/(1 − V1/V). One corpus tokenize
-      // → per-(source, word) counts → |vocab|-frame spectrum agg;
-      // exact longs into mirrored double ratios, ln on an exact
-      // integer (portable per q258).
-      val wc = Tables.documents(s, dir)
-        .select(col("source"), explode(split(col("text"), " ")).as("w"))
-        .filter(length(col("w")) > 0)
-        .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
-      wc.groupBy(col("source")).agg(
-          count(lit(1)).as("v"),
-          sum(col("c")).as("n_tokens"),
-          sum(when(col("c") === 1, 1L).otherwise(0L)).as("v1"),
-          sum(when(col("c") === 2, 1L).otherwise(0L)).as("v2"))
-        .filter(col("v") > 0 && col("v1") < col("v"))
-        .select(col("source"), col("n_tokens"), col("v"), col("v1"), col("v2"),
-          pround(col("v1").cast("double") / col("v"), 9).as("hapax_frac"),
-          pround(col("v2").cast("double") / col("v"), 9).as("sichel_s"),
-          (floor(lit(100.0) * log(col("n_tokens").cast("double"))
-            / (lit(1.0) - col("v1").cast("double") / col("v")) * 1e9 + 0.5) / 1e9)
-            .as("honore_r"))
-        .orderBy(col("source"))
-    }),
-
-    "q278_seasonal_mk" -> ((s, dir) => {
-      // seasonal Mann–Kendall trend test per type [EXT] — q220 on a
-      // weekly-seasonal series confounds trend with weekday mix; the
-      // seasonal form runs MK WITHIN each weekday sub-series and sums
-      // S and var over seasons (Hirsch–Slack), so a pure weekday
-      // pattern scores exactly 0. Same exact-integer pair machinery as
-      // q220 with (calendar/7)²-bounded pair joins per (type, dow);
-      // weekday from epoch-day integer arithmetic (q267 discipline).
-      val daily = Dedup.cacheScoped(Tables.events(s, dir)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("x"))
-        .withColumn("dow",
-          datediff(col("day"), lit("1970-01-01").cast("date")) % 7))
-      val pairs = daily
-        .select(col("event_type"), col("dow"), col("day").as("d1"), col("x").as("x1"))
-        .join(daily.select(col("event_type"), col("dow"), col("day").as("d2"),
-          col("x").as("x2")), Seq("event_type", "dow"))
-        .filter(col("d1") < col("d2"))
-      val sAgg = pairs.groupBy(col("event_type"))
-        .agg(sum(signum(col("x2") - col("x1")).cast("long")).as("s_stat"))
-      val nAgg = daily.groupBy(col("event_type"), col("dow"))
-        .agg(count(lit(1)).as("nw"))
-      val ties = daily.groupBy(col("event_type"), col("dow"), col("x"))
-        .agg(count(lit(1)).as("t"))
-        .groupBy(col("event_type"), col("dow"))
-        .agg(sum(col("t") * (col("t") - 1) * (lit(2) * col("t") + 5)).as("tsum"))
-      val varW = nAgg.join(ties, Seq("event_type", "dow"))
-        .select(col("event_type"), col("nw"),
-          (col("nw") * (col("nw") - 1) * (lit(2) * col("nw") + 5) - col("tsum"))
-            .as("vw"))
-        .groupBy(col("event_type"))
-        .agg(sum(col("vw")).as("vsum"), sum(col("nw")).as("n_days"))
-      val varExpr = col("vsum").cast("double") / 18.0
-      val z = when(col("s_stat") > 0, (col("s_stat") - 1).cast("double") / sqrt(varExpr))
-        .when(col("s_stat") < 0, (col("s_stat") + 1).cast("double") / sqrt(varExpr))
-        .otherwise(lit(0.0))
-      sAgg.join(varW, Seq("event_type"))
-        .filter(col("vsum") > 0)
-        .select(col("event_type"), col("n_days"), col("s_stat"),
-          (floor(z * 1e9 + 0.5) / 1e9).as("z"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q279_pacf" -> ((s, dir) => {
-      // partial autocorrelation at lags 1–3 via Durbin–Levinson [EXT]
-      // — the Box–Jenkins companion q238 implies but can't answer: the
-      // ACF of an AR(1) decays at EVERY lag, so "is there structure
-      // BEYOND lag 1" needs the partial form (PACF cuts off at the AR
-      // order — THE model-order diagnostic). Rides [[acfFrame]]'s
-      // exact arithmetic (one shared pipeline), pivots the 3 lags on a
-      // |types|-row frame, and closes the D–L recursion level by level
-      // with term-for-term mirrored doubles.
-      val piv = acfFrame(s, dir, 3)
-        .groupBy(col("event_type")).agg(
-          max(when(col("lag") === 1, col("acf"))).as("r1"),
-          max(when(col("lag") === 2, col("acf"))).as("r2"),
-          max(when(col("lag") === 3, col("acf"))).as("r3"))
-        .filter(col("r1").isNotNull && col("r2").isNotNull && col("r3").isNotNull)
-        .filter(lit(1.0) - col("r1") * col("r1") =!= 0.0)
-      piv
-        .withColumn("phi22", (col("r2") - col("r1") * col("r1"))
-          / (lit(1.0) - col("r1") * col("r1")))
-        .withColumn("phi21", col("r1") - col("phi22") * col("r1"))
-        .filter(lit(1.0) - col("phi21") * col("r1") - col("phi22") * col("r2") =!= 0.0)
-        .select(col("event_type"), col("r1").as("pacf1"),
-          (floor(col("phi22") * 1e9 + 0.5) / 1e9).as("pacf2"),
-          (floor((col("r3") - col("phi21") * col("r2") - col("phi22") * col("r1"))
-            / (lit(1.0) - col("phi21") * col("r1") - col("phi22") * col("r2"))
-            * 1e9 + 0.5) / 1e9).as("pacf3"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q280_shapley_attribution" -> ((s, dir) => {
-      // Shapley-value conversion attribution [EXT] — the
-      // order-independent marginal-credit estimator the attribution
-      // family lacked: q160 credits ONE touch, q214 a fixed 40/20/40
-      // rule; Shapley averages each channel's marginal conversion lift
-      // over all coalition orderings — the unique credit satisfying
-      // efficiency/symmetry/dummy. v(S) = conversion rate of users
-      // whose touch-set is EXACTLY S (0 for unobserved sets — stated
-      // convention). One corpus pass to per-user (mask, converted);
-      // the 16-coalition rate frame and the 32-row factorial-weighted
-      // skeleton (generated in Scala, broadcast, and embedded as the
-      // SAME literal VALUES in the oracle) close map-side.
-      val users = Tables.events(s, dir).groupBy(col("user_id")).agg(
-        (max(when(col("event_type") === "click", 1L).otherwise(0L))
-          + lit(2L) * max(when(col("event_type") === "error", 1L).otherwise(0L))
-          + lit(4L) * max(when(col("event_type") === "signup", 1L).otherwise(0L))
-          + lit(8L) * max(when(col("event_type") === "view", 1L).otherwise(0L)))
-          .as("mask"),
-        max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("conv"))
-      val rates = users.groupBy(col("mask"))
-        .agg(count(lit(1)).as("nu"), sum(col("conv")).as("nc"))
-        .select(col("mask"),
-          pround(col("nc").cast("double") / col("nu"), 12).as("r"))
-      import s.implicits._
-      val sk = shapleySkeleton.toDF("channel", "m0", "m1", "w")
-      sk.join(broadcast(rates.select(col("mask").as("m0"), col("r").as("r0"))),
-          Seq("m0"), "left")
-        .join(broadcast(rates.select(col("mask").as("m1"), col("r").as("r1"))),
-          Seq("m1"), "left")
-        .withColumn("term", pround(col("w")
-          * (coalesce(col("r1"), lit(0.0)) - coalesce(col("r0"), lit(0.0))), 12))
-        .groupBy(col("channel"))
-        .agg((floor(sum(col("term").cast(DecimalType(27, 14))).cast("double")
-          * 1e9 + 0.5) / 1e9).as("phi"))
-        .orderBy(col("channel"))
-    }),
-
-    "q281_caliper_matching" -> ((s, dir) => {
-      // 1-NN caliper propensity matching (with replacement) for the
-      // ATT [EXT] — the causal family's matching estimator (q262 DiD
-      // needs a time split, q245 post-stratifies on coarse cells;
-      // matching compares each treated unit to its CLOSEST control on
-      // a covariate, discarding off-support units): covariate x =
-      // per-user view count, outcome y = total purchase value, arms =
-      // the q174 user parity, caliper 5. The candidate join is the
-      // range-join bucket discipline (q76): treated explode into 3
-      // caliper buckets, equi-join controls on the bucket — bounded
-      // blow-up, no window, no cross join; the 1-NN argmin is a
-      // min-struct with total tie policy (|Δx|, control x, control id).
-      val users = Tables.events(s, dir).groupBy(col("user_id")).agg(
-        sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("x"),
-        sum(when(col("event_type") === "purchase",
-          col("value").cast(DecimalType(18, 4))).otherwise(lit(null)))
-          .cast("double").as("y"))
-        .select(col("user_id"), col("x"), coalesce(col("y"), lit(0.0)).as("y"),
-          (col("user_id") % 2).as("t"))
-      val ctl = users.filter(col("t") === 0)
-        .select(expr("x div 5").as("b"), col("x").as("xc"),
-          col("user_id").as("cid"), col("y").as("yc"))
-      val trt = users.filter(col("t") === 1)
-        .withColumn("db", explode(array(lit(-1L), lit(0L), lit(1L))))
-        .select(col("user_id").as("tid"), col("x").as("xt"), col("y").as("yt"),
-          (expr("x div 5") + col("db")).as("b"))
-      val matched = trt.join(ctl, Seq("b"))
-        .filter(abs(col("xt") - col("xc")) <= 5)
-        .groupBy(col("tid"), col("xt"), col("yt"))
-        .agg(min(struct(abs(col("xt") - col("xc")).as("adist"), col("xc"),
-          col("cid"), col("yc"))).as("mc"))
-        .select(col("tid"), col("yt"), col("mc.yc").as("yc"))
-      val nT = users.filter(col("t") === 1).agg(count(lit(1)).as("n_treated"))
-      matched
-        .select((col("yt") - col("yc")).as("d"))
-        .agg(count(lit(1)).as("n_matched"),
-          sum(col("d").cast(DecimalType(18, 4))).cast("double").as("sd"),
-          sum(pround(col("d") * col("d"), 6).cast(DecimalType(27, 8)))
-            .cast("double").as("sdd"))
-        .crossJoin(broadcast(nT))
-        .filter(col("n_matched") > 1)
-        .select(col("n_treated"), col("n_matched"),
-          pround(col("sd") / col("n_matched"), 9).as("att"),
-          (floor(sqrt((col("sdd") - col("sd") * col("sd") / col("n_matched"))
-            / (col("n_matched") - 1) / col("n_matched")) * 1e9 + 0.5) / 1e9)
-            .as("se"))
-    }),
-
-    "q282_ewma_chart" -> ((s, dir) => {
-      // EWMA control chart on daily volume per type [EXT] — the
-      // small-shift monitor the gate family lacked: q227's z-gate
-      // needs a full-σ jump to fire, the EWMA statistic accumulates
-      // drift (the classic SPC chart for 0.5–1σ shifts). Truncated
-      // 20-day kernel with λ=0.2: the weight ladder and its
-      // normalizer are Scala-computed literals shared by BOTH plans
-      // (q263 discount discipline); the lag alignment is a row-index
-      // equi-join per type (never a sliding window over the corpus);
-      // flag when |x − ewma| > 3σ̂·√(λ/(2−λ)) on ROUNDED operands.
-      val lam = 0.2
-      val weights = (0 until 20).map(j => lam * math.pow(1 - lam, j))
-      val norm = weights.sum
-      val sfac = math.sqrt(lam / (2 - lam))
-      val warr = array(weights.map(lit): _*)
-      val wt = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      val daily = Dedup.cacheScoped(Tables.events(s, dir)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("x"))
-        .withColumn("t", row_number().over(wt).cast("long")))
-      val sig = daily.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-          sum((col("x").cast(DecimalType(38, 0)) * col("x"))).as("sxx"))
-        .filter(col("n") > 1)
-        .withColumn("m", col("sx").cast("double") / col("n").cast("double"))
-        .select(col("event_type"),
-          sqrt(col("sxx").cast("double") / col("n").cast("double")
-            - col("m") * col("m")).as("sig"))
-      val ew = daily.withColumn("j", explode(sequence(lit(0), lit(19))))
-        .select(col("event_type"), col("t"), (col("t") - col("j")).as("tj"),
-          element_at(warr, (col("j") + 1).cast("int")).as("wj"))
-        .filter(col("t") >= 20)
-        .join(daily.select(col("event_type"), col("t").as("tj"), col("x")),
-          Seq("event_type", "tj"))
-        .withColumn("term", pround(col("wj") * col("x"), 9))
-        .groupBy(col("event_type"), col("t"))
-        .agg((floor(sum(col("term").cast(DecimalType(27, 10))).cast("double")
-          / lit(norm) * 1e9 + 0.5) / 1e9).as("ewma"))
-      ew.join(daily.select(col("event_type"), col("t"), col("x")),
-          Seq("event_type", "t"))
-        .join(broadcast(sig), Seq("event_type"))
-        .withColumn("dev", pround(abs(col("x") - col("ewma")), 9))
-        .withColumn("flag",
-          (col("dev") > pround(lit(3.0) * col("sig") * lit(sfac), 9)).cast("long"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_scored"), sum(col("flag")).as("n_flagged"),
-          max(col("dev")).as("max_dev"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q283_bh_fdr" -> ((s, dir) => {
-      // Benjamini–Hochberg FDR over per-type mean-shift tests [EXT] —
-      // the multiplicity correction the testing family lacked: running
-      // q247-style tests per type at α each inflates the family-wise
-      // false-discovery rate; BH's step-up (reject all p ≤ the largest
-      // p_(i) ≤ αi/m) controls FDR at α = 0.1. z per type compares
-      // daily counts before/after the q262 split date; Φ via the
-      // Abramowitz–Stegun 7.1.26 polynomial in Horner form with
-      // literal coefficients (pure exp + arithmetic, mirrored
-      // term-for-term — never an engine's erf). |types|-row frame
-      // windows only.
-      val daily = Tables.events(s, dir)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("x"))
-        .withColumn("post",
-          (col("day") >= lit("2024-01-15").cast("date")).cast("long"))
-      val gstats = daily.groupBy(col("event_type"), col("post"))
-        .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-          sum((col("x").cast(DecimalType(38, 0)) * col("x"))).as("sxx"))
-      def cellc(p: Int, c: String) =
-        max(when(col("post") === p, col(c))).as(s"${c}$p")
-      val wv = gstats.groupBy(col("event_type"))
-        .agg(cellc(0, "n"), cellc(0, "sx"), cellc(0, "sxx"),
-          cellc(1, "n"), cellc(1, "sx"), cellc(1, "sxx"))
-        .filter(col("n0") > 1 && col("n1") > 1)
-      def mm(p: Int) = col(s"sx$p").cast("double") / col(s"n$p").cast("double")
-      def vv(p: Int) = (col(s"sxx$p").cast("double") / col(s"n$p").cast("double")
-        - mm(p) * mm(p)) / (col(s"n$p").cast("double") - 1.0)
-      val z = pround((mm(1) - mm(0)) / sqrt(vv(1) + vv(0)), 9)
-      val az = abs(col("z"))
-      val tA = lit(1.0) / (lit(1.0) + lit(0.2316419) * az)
-      val poly = tA * (lit(0.319381530) + tA * (lit(-0.356563782)
-        + tA * (lit(1.781477937) + tA * (lit(-1.821255978)
-          + tA * lit(1.330274429)))))
-      val pdf = exp(az * az * lit(-0.5)) * lit(0.3989422804014327)
-      val scored = wv.select(col("event_type"), z.as("z"))
-        .withColumn("p", pround(lit(2.0) * pdf * poly, 12))
-      val wRank = Window.orderBy(col("p"), col("event_type"))
-      val ranked = scored
-        .withColumn("rank", row_number().over(wRank).cast("long"))
-        .crossJoin(broadcast(scored.agg(count(lit(1)).as("m"))))
-        .withColumn("ok", (col("p") <= lit(0.1) * col("rank").cast("double")
-          / col("m").cast("double")).cast("long"))
-      val kMax = ranked.agg(max(when(col("ok") === 1, col("rank"))
-        .otherwise(lit(0L))).as("kmax"))
-      ranked.crossJoin(broadcast(kMax))
-        .select(col("event_type"), col("z"), col("p"), col("rank"),
-          (col("rank") <= col("kmax")).cast("long").as("rejected"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q284_partial_correlation" -> ((s, dir) => {
-      // partial correlation r_xy·z [EXT] — the confound-aware
-      // correlation the moments family lacked: q103's Pearson r of
-      // (value, hour) is inflated by any weekday effect on both; the
-      // partial form regresses BOTH out of z = weekday first, via the
-      // closed form (rxy − rxz·ryz)/√((1−rxz²)(1−ryz²)). ALL nine
-      // moments in ONE agg (q103 discipline): ints exact, y-moments
-      // pround→DECIMAL, cross moments double-first (the q275 decimal-
-      // product lesson); the close is a 1-row mirrored-double frame.
-      val e = Tables.events(s, dir).select(
-        col("value").as("y"), hour(col("ts")).cast("long").as("x"),
-        (datediff(to_date(col("ts")), lit("1970-01-01").cast("date")) % 7)
-          .cast("long").as("z"))
-      val st = e.agg(count(lit(1)).as("n"),
-        sum(col("x")).as("sx"), sum(col("z")).as("sz"),
-        sum(col("y").cast(DecimalType(18, 4))).cast("double").as("sy"),
-        sum(col("x") * col("x")).as("sxx"), sum(col("z") * col("z")).as("szz"),
-        sum(col("x") * col("z")).as("sxz"),
-        sum(pround(col("y") * col("y"), 6).cast(DecimalType(27, 8)))
-          .cast("double").as("syy"),
-        sum(pround(col("y") * col("x").cast("double"), 4).cast(DecimalType(38, 6)))
-          .cast("double").as("sxy"),
-        sum(pround(col("y") * col("z").cast("double"), 4).cast(DecimalType(38, 6)))
-          .cast("double").as("syz"))
-      val nd = col("n").cast("double")
-      def corr2(sab: Column, sa: Column, sb: Column, saa: Column, sbb: Column) =
-        (nd * sab - sa * sb) / sqrt((nd * saa - sa * sa) * (nd * sbb - sb * sb))
-      val rxy = corr2(col("sxy"), col("sx").cast("double"), col("sy"),
-        col("sxx").cast("double"), col("syy"))
-      val rxz = corr2(col("sxz").cast("double"), col("sx").cast("double"),
-        col("sz").cast("double"), col("sxx").cast("double"), col("szz").cast("double"))
-      val ryz = corr2(col("syz"), col("sz").cast("double"), col("sy"),
-        col("szz").cast("double"), col("syy"))
-      st.filter(col("n") > 2)
-        .withColumn("rxy", pround(rxy, 9))
-        .withColumn("rxz", pround(rxz, 9))
-        .withColumn("ryz", pround(ryz, 9))
-        .filter((lit(1.0) - col("rxz") * col("rxz")) > 0 &&
-          (lit(1.0) - col("ryz") * col("ryz")) > 0)
-        .select(col("n"), col("rxy"), col("rxz"), col("ryz"),
-          (floor((col("rxy") - col("rxz") * col("ryz"))
-            / sqrt((lit(1.0) - col("rxz") * col("rxz"))
-              * (lit(1.0) - col("ryz") * col("ryz"))) * 1e9 + 0.5) / 1e9)
-            .as("partial_r"))
-    }),
-
-    "q285_moods_median" -> ((s, dir) => {
-      // Mood's median test across event types [EXT] — the robust
-      // k-sample location test (q222's Mann–Whitney is two-sample;
-      // ANOVA assumes normal tails): split every value at the POOLED
-      // exact median and χ² the above/below counts per type. The
-      // pooled median rides the histogram-refinement selector (q165's
-      // three shared scans — no single-buffer percentile at corpus
-      // scale), broadcast back as a 1-row frame for the map-side
-      // split; χ² over the 2×|types| table reuses the q267 margin
-      // shape with expected counts as mirrored doubles.
-      val ev = Dedup.cacheScoped(Tables.events(s, dir)
-        .select(col("event_type"), col("value")))
-      val med = graft.operators.Selection
-        .exactGroupedMedian(ev.select(lit("all").as("g"), col("value")), "g", "value")
-        .select(col("median"))
-      val cells = ev.crossJoin(broadcast(med))
-        .select(col("event_type"), (col("value") > col("median")).cast("long").as("hi"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("rt"), sum(col("hi")).as("a"))
-      val tot = cells.agg(sum(col("rt")).as("n"), sum(col("a")).as("ta"),
-        count(lit(1)).as("k"))
-      cells.crossJoin(broadcast(tot))
-        .withColumn("ehi", col("rt").cast("double") * col("ta").cast("double")
-          / col("n").cast("double"))
-        .withColumn("elo", col("rt").cast("double")
-          * (col("n") - col("ta")).cast("double") / col("n").cast("double"))
-        .filter(col("ehi") > 0 && col("elo") > 0)
-        .withColumn("term", pround(
-          (col("a") - col("ehi")) * (col("a") - col("ehi")) / col("ehi")
-            + (col("rt") - col("a") - col("elo")) * (col("rt") - col("a") - col("elo"))
-              / col("elo"), 9))
-        .groupBy(col("n"), col("k"))
-        .agg(sum(col("term").cast(DecimalType(27, 10))).cast("double").as("chi2"))
-        .crossJoin(broadcast(med))
-        .select(col("n"), (col("k") - 1).as("dof"),
-          pround(col("median"), 9).as("pooled_median"),
-          pround(col("chi2"), 6).as("chi2"))
-    }),
-
-    "q286_welch_t" -> ((s, dir) => {
-      // Welch's unequal-variance t with Satterthwaite dof [EXT] — the
-      // correct two-sample mean test when variances differ (q247 tests
-      // proportions; q222 ranks; the pooled-variance t silently
-      // miscalibrates under heteroscedasticity — Welch is the default
-      // recommendation). Both groups' moments in ONE conditional agg
-      // (q276 cell shape); t and the dof close as mirrored doubles.
-      val D6 = DecimalType(27, 6)
-      val g = Tables.events(s, dir)
-        .filter(col("event_type").isin("click", "view"))
-        .select((col("event_type") === "click").cast("long").as("t"), col("value"))
-        .groupBy(col("t"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(18, 4))).cast("double").as("sv"),
-          sum(pround(col("value") * col("value"), 6).cast(D6)).cast("double").as("svv"))
-      def cell(t: Int, c: String) = max(when(col("t") === t, col(c))).as(s"${c}$t")
-      val wv = g.agg(cell(1, "n"), cell(1, "sv"), cell(1, "svv"),
-        cell(0, "n"), cell(0, "sv"), cell(0, "svv"))
-      def m(t: Int) = col(s"sv$t") / col(s"n$t")
-      def se2(t: Int) = (col(s"svv$t") - col(s"sv$t") * col(s"sv$t") / col(s"n$t")) /
-        (col(s"n$t") - 1) / col(s"n$t")
-      val dof = (se2(1) + se2(0)) * (se2(1) + se2(0)) /
-        (se2(1) * se2(1) / (col("n1") - 1) + se2(0) * se2(0) / (col("n0") - 1))
-      wv.filter(col("n1") > 1 && col("n0") > 1)
-        .select(col("n1").as("n_click"), col("n0").as("n_view"),
-          pround(m(1) - m(0), 9).as("diff"),
-          (floor((m(1) - m(0)) / sqrt(se2(1) + se2(0)) * 1e9 + 0.5) / 1e9).as("t_stat"),
-          (floor(dof * 1e6 + 0.5) / 1e6).as("dof"))
-    }),
-
-    "q287_energy_distance" -> ((s, dir) => {
-      // energy distance between click and view value distributions
-      // [EXT] — the ALL-moments two-sample metric (KS q198 sees the
-      // worst ECDF gap, W1 q194 the decile mass shift; energy distance
-      // 2E|X−Y| − E|X−X'| − E|Y−Y'| is zero iff the distributions are
-      // EQUAL — the metric behind energy statistics/MMD tests). The
-      // O(nm) pairwise sums collapse to prefix sums over the sorted
-      // distinct-value frame: values quantize exactly to centi-units
-      // (the generator's grid), so EVERY pairwise term is exact
-      // integer arithmetic until three final divisions; the global
-      // order rides ONE CumSum two-pass carrying all four weights.
-      val ev = Tables.events(s, dir)
-        .filter(col("event_type").isin("click", "view"))
-        .select(floor(col("value") * 100 + 0.5).as("v"),
-          (col("event_type") === "click").cast("long").as("isx"))
-      val byV = ev.groupBy(col("v")).agg(
-        sum(col("isx")).as("nx"), sum(lit(1L) - col("isx")).as("ny"))
-      val cum = graft.operators.CumSum.withRunningTotals(byV, Seq(col("v")),
-        Seq(col("nx") -> "cnx", col("ny") -> "cny",
-          (col("nx") * col("v")) -> "csx", (col("ny") * col("v")) -> "csy"))
-      val tot = byV.agg(sum(col("nx")).as("tnx"), sum(col("ny")).as("tny"),
-        sum(col("nx") * col("v")).as("tsx"), sum(col("ny") * col("v")).as("tsy"))
-      val terms = cum.crossJoin(broadcast(tot))
-        // Σ_i |x_i − v| from the inclusive cumulatives, exact longs
-        .withColumn("dx", (col("v") * col("cnx") - col("csx"))
-          + ((col("tsx") - col("csx")) - col("v") * (col("tnx") - col("cnx"))))
-        .withColumn("dy", (col("v") * col("cny") - col("csy"))
-          + ((col("tsy") - col("csy")) - col("v") * (col("tny") - col("cny"))))
-        // decimal-FIRST products: count·pairdist wraps long at corpus
-        // scale (DuckDB's HUGEINT wouldn't) — cast one factor before
-        // multiplying so the sum stays exact at any magnitude
-        .agg(sum(col("ny").cast(DecimalType(38, 0)) * col("dx")).as("sxy"),
-          sum(col("nx").cast(DecimalType(38, 0)) * col("dy")).as("syx"),
-          sum(col("nx").cast(DecimalType(38, 0)) * col("dx")).as("sxx"),
-          sum(col("ny").cast(DecimalType(38, 0)) * col("dy")).as("syy"))
-      terms.crossJoin(broadcast(tot))
-        .filter(col("tnx") > 0 && col("tny") > 0)
-        .withColumn("exy", (col("sxy").cast("double") + col("syx").cast("double"))
-          / (lit(2.0) * col("tnx").cast("double") * col("tny").cast("double")) / 100.0)
-        .withColumn("exx", col("sxx").cast("double")
-          / (col("tnx").cast("double") * col("tnx").cast("double")) / 100.0)
-        .withColumn("eyy", col("syy").cast("double")
-          / (col("tny").cast("double") * col("tny").cast("double")) / 100.0)
-        .select(col("tnx").as("n_click"), col("tny").as("n_view"),
-          pround(col("exy"), 9).as("e_xy"),
-          pround(col("exx"), 9).as("e_xx"),
-          pround(col("eyy"), 9).as("e_yy"),
-          (floor(sqrt(lit(2.0) * col("exy") - col("exx") - col("eyy"))
-            * 1e9 + 0.5) / 1e9).as("energy_d"))
-    }),
-
-    "q288_logrank" -> ((s, dir) => {
-      // log-rank test between the two arms' conversion survival [EXT]
-      // — the hypothesis-test companion to q234's KM curve ("ARE the
-      // two survival curves different", weighting every event time by
-      // its at-risk split; the standard A/B readout for time-to-event
-      // outcomes). Same delays frame as q234 with administrative
-      // censoring at 168 h — so nobody exits the risk set before the
-      // horizon and at-risk counts are pure cumulative-event
-      // subtractions: exact integers through the entire ≤168-row grid
-      // (tiny-frame window exception), O/E/V terms as mirrored doubles
-      // pround(12) into DECIMAL sums.
-      val ev = Tables.events(s, dir)
-      val v = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("ts")).as("v_ts"))
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("p_ts"))
-      val firstP = v.join(p, Seq("user_id"))
-        .filter(col("p_ts") >= col("v_ts"))
-        .groupBy(col("user_id"), col("v_ts")).agg(min(col("p_ts")).as("p_ts"))
-      val delays = v.join(firstP, Seq("user_id", "v_ts"), "left")
-        .select(col("user_id"), (col("user_id") % 2).as("arm"),
-          ((unix_timestamp(col("p_ts")) - unix_timestamp(col("v_ts"))) / 3600L)
-            .cast("long").as("delay_h"))
-        .withColumn("event", col("delay_h").isNotNull && col("delay_h") < 168)
-      val nTot = delays.agg(count(lit(1)).as("nn"),
-        sum(col("arm")).as("n1"))
-      val grid = delays.filter(col("event"))
-        .groupBy(col("delay_h").as("t"))
-        .agg(count(lit(1)).as("d"), sum(col("arm")).as("d1"))
-      val wCum = Window.orderBy(col("t"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val terms = grid.crossJoin(broadcast(nTot))
-        .withColumn("cumd", sum(col("d")).over(wCum))
-        .withColumn("cumd1", sum(col("d1")).over(wCum))
-        .withColumn("nr", col("nn") - col("cumd") + col("d"))
-        .withColumn("nr1", col("n1") - col("cumd1") + col("d1"))
-        .filter(col("nr") > 1)
-        .withColumn("frac", col("nr1").cast("double") / col("nr").cast("double"))
-        .withColumn("et", pround(col("d").cast("double") * col("frac"), 12))
-        .withColumn("vt", pround(col("d").cast("double") * col("frac")
-          * (lit(1.0) - col("frac"))
-          * (col("nr") - col("d")).cast("double")
-          / (col("nr") - 1).cast("double"), 12))
-      terms.agg(sum(col("d1")).as("o1"),
-          sum(col("et").cast(DecimalType(27, 14))).cast("double").as("e1"),
-          sum(col("vt").cast(DecimalType(27, 14))).cast("double").as("v1"))
-        .filter(col("v1") > 0)
-        .select(col("o1"), pround(col("e1"), 6).as("e1"),
-          (floor((col("o1") - col("e1")) / sqrt(col("v1")) * 1e9 + 0.5) / 1e9)
-            .as("z"))
-    }),
-
-    "q289_kruskal_wallis" -> ((s, dir) => {
-      // Kruskal–Wallis H across all event types [EXT] — the k-sample
-      // rank test (q222's Mann–Whitney is its two-sample case; q290's
-      // ANOVA assumes normal tails): midranks from the grouped value
-      // frame via 2R = 2·cumBefore + n_v + 1 (exact-integer doubling,
-      // q221/q222 discipline), per-type rank sums as decimal-first
-      // products, the H close and the tie correction Σ(t³−t) in
-      // DECIMAL/HUGEINT — everything exact until the final mirrored
-      // doubles.
-      val ev = Tables.events(s, dir).select(col("event_type"), col("value"))
-      val cells = Dedup.cacheScoped(ev.groupBy(col("value"), col("event_type"))
-        .agg(count(lit(1)).as("ng")))
-      val byV = cells.groupBy(col("value")).agg(sum(col("ng")).as("nv"))
-      val cum = graft.operators.CumSum.withRunningTotal(byV, Seq(col("value")),
-        col("nv"), "gcum")
-      val r2 = cells.join(cum.select(col("value"), col("nv"), col("gcum")),
-          Seq("value"))
-        .withColumn("r2row", col("ng").cast(DecimalType(38, 0))
-          * (lit(2) * (col("gcum") - col("nv")) + col("nv") + 1))
-        .groupBy(col("event_type"))
-        .agg(sum(col("ng")).as("n_g"), sum(col("r2row")).as("r2_g"))
-      val ties = byV.agg(sum(col("nv").cast(DecimalType(38, 0)) * col("nv") * col("nv")
-        - col("nv")).as("tie"), sum(col("nv")).as("nn"),
-        count(lit(1)).as("n_distinct"))
-      val h = r2.crossJoin(broadcast(ties))
-        .withColumn("rbar", col("r2_g").cast("double") / 2.0
-          / col("n_g").cast("double"))
-        .withColumn("dev", col("rbar")
-          - (col("nn").cast("double") + 1.0) / 2.0)
-        .withColumn("term", pround(col("n_g").cast("double")
-          * col("dev") * col("dev"), 6))
-        .groupBy(col("nn"), col("tie"))
-        .agg(count(lit(1)).as("k"),
-          sum(col("term").cast(DecimalType(27, 8))).cast("double").as("ssb"))
-      h.filter(col("nn") > 1)
-        .withColumn("hstat", lit(12.0) * col("ssb")
-          / (col("nn").cast("double") * (col("nn").cast("double") + 1.0)))
-        .withColumn("cf", lit(1.0) - col("tie").cast("double")
-          / (col("nn").cast("double") * col("nn").cast("double")
-            * col("nn").cast("double") - col("nn").cast("double")))
-        .filter(col("cf") > 0)
-        .select(col("nn").as("n"), (col("k") - 1).as("dof"),
-          pround(col("hstat"), 9).as("h"),
-          (floor(col("hstat") / col("cf") * 1e9 + 0.5) / 1e9).as("h_tie_corrected"))
-    }),
-
-    "q290_anova_f" -> ((s, dir) => {
-      // one-way ANOVA F of value across event types [EXT] — the
-      // classical k-sample mean test (q286 is its two-sample Welch
-      // case; q289 the rank form): SSB/SSW from per-group exact
-      // DECIMAL sums in ONE grouped agg + one 1-row close, F and η²
-      // as mirrored doubles — the canonical "does the group label
-      // explain variance" readout.
-      val D6 = DecimalType(27, 6)
-      val g = Tables.events(s, dir)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(18, 4))).cast("double").as("sv"),
-          sum(pround(col("value") * col("value"), 6).cast(D6)).cast("double").as("svv"))
-      val tot = g.agg(sum(col("n")).as("nn"), count(lit(1)).as("k"),
-        sum(col("sv").cast(DecimalType(27, 6))).cast("double").as("st"))
-      g.crossJoin(broadcast(tot))
-        .withColumn("ssb_t", pround(col("sv") * col("sv") / col("n").cast("double"), 6))
-        .withColumn("ssw_t", pround(col("svv")
-          - col("sv") * col("sv") / col("n").cast("double"), 6))
-        .groupBy(col("nn"), col("k"), col("st"))
-        .agg(sum(col("ssb_t").cast(DecimalType(27, 8))).cast("double").as("sb"),
-          sum(col("ssw_t").cast(DecimalType(27, 8))).cast("double").as("sw"))
-        .filter(col("k") > 1 && col("nn") > col("k"))
-        .withColumn("ssb", col("sb") - col("st") * col("st") / col("nn").cast("double"))
-        .withColumn("msb", col("ssb") / (col("k") - 1).cast("double"))
-        .withColumn("msw", col("sw") / (col("nn") - col("k")).cast("double"))
-        .filter(col("msw") > 0)
-        .select(col("nn").as("n"), (col("k") - 1).as("df_between"),
-          (col("nn") - col("k")).as("df_within"),
-          (floor(col("msb") / col("msw") * 1e9 + 0.5) / 1e9).as("f_stat"),
-          (floor(col("ssb") / (col("ssb") + col("sw")) * 1e9 + 0.5) / 1e9)
-            .as("eta_sq"))
-    }),
-
-    "q291_brown_forsythe" -> ((s, dir) => {
-      // Brown–Forsythe variance-homogeneity test [EXT] — "do the
-      // groups differ in SPREAD" (q290 tests means; variance QC is
-      // the precondition for pooled tests and a drift signal in its
-      // own right; the median-centered Levene variant is robust to
-      // heavy tails). Per-type exact medians ride the grouped
-      // histogram-refinement selector (q165's shared scans), broadcast
-      // back for the map-side |x − med_g| transform, then q290's
-      // ANOVA-F machinery on the transformed values with pround(4)
-      // quantization shared by BOTH engines.
-      val ev = Dedup.cacheScoped(Tables.events(s, dir)
-        .select(col("event_type"), col("value")))
-      val med = graft.operators.Selection
-        .exactGroupedMedian(ev, "event_type", "value")
-      val z = ev.join(broadcast(med), Seq("event_type"))
-        .select(col("event_type"), pround(abs(col("value") - col("median")), 4).as("z"))
-      val D6 = DecimalType(27, 6)
-      val g = z.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("z").cast(DecimalType(18, 4))).cast("double").as("sv"),
-          sum(pround(col("z") * col("z"), 6).cast(D6)).cast("double").as("svv"))
-      val tot = g.agg(sum(col("n")).as("nn"), count(lit(1)).as("k"),
-        sum(col("sv").cast(DecimalType(27, 6))).cast("double").as("st"))
-      g.crossJoin(broadcast(tot))
-        .withColumn("ssb_t", pround(col("sv") * col("sv") / col("n").cast("double"), 6))
-        .withColumn("ssw_t", pround(col("svv")
-          - col("sv") * col("sv") / col("n").cast("double"), 6))
-        .groupBy(col("nn"), col("k"), col("st"))
-        .agg(sum(col("ssb_t").cast(DecimalType(27, 8))).cast("double").as("sb"),
-          sum(col("ssw_t").cast(DecimalType(27, 8))).cast("double").as("sw"))
-        .filter(col("k") > 1 && col("nn") > col("k"))
-        .withColumn("ssb", col("sb") - col("st") * col("st") / col("nn").cast("double"))
-        .withColumn("msw", col("sw") / (col("nn") - col("k")).cast("double"))
-        .filter(col("msw") > 0)
-        .select(col("nn").as("n"), (col("k") - 1).as("df_between"),
-          (col("nn") - col("k")).as("df_within"),
-          (floor(col("ssb") / (col("k") - 1).cast("double") / col("msw")
-            * 1e9 + 0.5) / 1e9).as("f_stat"))
-    }),
-
-    "q292_cliffs_delta" -> ((s, dir) => {
-      // Cliff's delta effect size, click vs view values [EXT] — the
-      // DIRECTIONAL companion to q222's Mann–Whitney (U says whether
-      // the shift is significant; δ = P(X>Y) − P(X<Y) says how LARGE
-      // and is robust where Cohen's d assumes normality). Rides q287's
-      // grouped centi-unit value frame: #(x>y) = Σ_v nx_v·cny_{<v}
-      // from ONE CumSum pass, everything exact integers (decimal-first
-      // products) until the single final division.
-      val ev = Tables.events(s, dir)
-        .filter(col("event_type").isin("click", "view"))
-        .select(floor(col("value") * 100 + 0.5).as("v"),
-          (col("event_type") === "click").cast("long").as("isx"))
-      val byV = ev.groupBy(col("v")).agg(
-        sum(col("isx")).as("nx"), sum(lit(1L) - col("isx")).as("ny"))
-      val cum = graft.operators.CumSum.withRunningTotals(byV, Seq(col("v")),
-        Seq(col("nx") -> "cnx", col("ny") -> "cny"))
-      val tot = byV.agg(sum(col("nx")).as("tnx"), sum(col("ny")).as("tny"))
-      cum.crossJoin(broadcast(tot))
-        .withColumn("gt", col("nx").cast(DecimalType(38, 0))
-          * (col("cny") - col("ny")))
-        .withColumn("lt2", col("nx").cast(DecimalType(38, 0))
-          * (col("tny") - col("cny")))
-        .agg(sum(col("gt")).as("n_gt"), sum(col("lt2")).as("n_lt"),
-          max(col("tnx")).as("tnx"), max(col("tny")).as("tny"))
-        .filter(col("tnx") > 0 && col("tny") > 0)
-        .select(col("tnx").as("n_click"), col("tny").as("n_view"),
-          col("n_gt").cast("long").as("n_gt"),
-          col("n_lt").cast("long").as("n_lt"),
-          (floor((col("n_gt").cast("double") - col("n_lt").cast("double"))
-            / (col("tnx").cast("double") * col("tny").cast("double"))
-            * 1e9 + 0.5) / 1e9).as("delta"))
-    }),
-
-    "q293_centroid_drift" -> ((s, dir) => {
-      // per-label embedding-centroid drift [EXT] — the vector-space
-      // version of q240's distributional divergence: cosine between
-      // each label's centroid and the global centroid (a label whose
-      // centroid drifts from the corpus mean is a candidate for
-      // re-embedding or split). Centroids are per-dimension means from
-      // ONE posexplode pass (map-side partial aggs); the cosine closes
-      // on the |labels|×dim frame with per-dim products pround(12)
-      // into DECIMAL sums — the q117/q226 embedding-oracle idiom.
-      val e = Dedup.cacheScoped(Tables.embeddings(s, dir)
-        .select(col("label"), posexplode(col("embedding")).as(Seq("i", "x")))
-        .select(col("label"), col("i"), col("x").cast("double").as("x")))
-      val perL = e.groupBy(col("label"), col("i"))
-        .agg((floor(sum(col("x").cast(DecimalType(27, 12))).cast("double")
-          / count(lit(1)) * 1e9 + 0.5) / 1e9).as("cl"))
-      val glob = e.groupBy(col("i"))
-        .agg((floor(sum(col("x").cast(DecimalType(27, 12))).cast("double")
-          / count(lit(1)) * 1e9 + 0.5) / 1e9).as("cg"))
-      perL.join(broadcast(glob), Seq("i"))
-        .groupBy(col("label"))
-        .agg(
-          sum(pround(col("cl") * col("cg"), 12).cast(DecimalType(27, 14)))
-            .cast("double").as("dot"),
-          sum(pround(col("cl") * col("cl"), 12).cast(DecimalType(27, 14)))
-            .cast("double").as("nl"),
-          sum(pround(col("cg") * col("cg"), 12).cast(DecimalType(27, 14)))
-            .cast("double").as("ng"))
-        .filter(col("nl") > 0 && col("ng") > 0)
-        .select(col("label"),
-          (floor(col("dot") / (sqrt(col("nl")) * sqrt(col("ng")))
-            * 1e9 + 0.5) / 1e9).as("cos_to_global"))
-        .orderBy(col("label"))
-    }),
-
-    "q294_median_ci" -> ((s, dir) => {
-      // distribution-free binomial CI for the per-type median [EXT] —
-      // the uncertainty the point estimates (q55/q165) don't carry:
-      // order statistics x_(k), x_(n+1−k) with k = ⌊(n − 1.96√n)/2⌋
-      // bracket the median at ~95% by the sign-test argument — no
-      // normality, no bootstrap replicates (q235's B resamples cost
-      // B× this). Ranks from mirrored doubles on the |types|-row count
-      // frame (driver map — the selector's documented conformal-k
-      // tier); both bracket values from the histogram-refinement
-      // selector (two calls, shared machinery, no per-group buffer).
-      val ev = Dedup.cacheScoped(Tables.events(s, dir)
-        .select(col("event_type"), col("value")))
-      val ns = ev.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        .filter(_._2 >= 16)
-      val kLo: Map[Any, Long] = ns.map { case (g, n) =>
-        (g: Any) -> math.max(1L,
-          math.floor((n - 1.96 * math.sqrt(n.toDouble)) / 2.0).toLong)
-      }
-      val kHi: Map[Any, Long] = ns.map { case (g, n) => (g: Any) -> (n + 1 - kLo(g)) }
-      val lo = graft.operators.Selection
-        .exactGroupedOrderStat(ev, "event_type", "value", kLo)
-        .select(col("event_type"), col("k").as("k_lo"), col("value").as("ci_lo"))
-      val hi = graft.operators.Selection
-        .exactGroupedOrderStat(ev, "event_type", "value", kHi)
-        .select(col("event_type"), col("k").as("k_hi"), col("value").as("ci_hi"))
-      import s.implicits._
-      val nDf = ns.toSeq.map { case (g, n) => (g, n) }.toDF("event_type", "n")
-      nDf.join(lo, Seq("event_type")).join(hi, Seq("event_type"))
-        .select(col("event_type"), col("n"), col("k_lo"), col("k_hi"),
-          col("ci_lo"), col("ci_hi"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q295_brier_score" -> ((s, dir) => {
-      // Brier score + Murphy decomposition of the quality classifier
-      // [EXT] — the PROPER scoring rule the calibration family lacked
-      // (q150 shows the reliability table, q233 averages |gap|; the
-      // Brier score is what the model actually optimizes, and its
-      // reliability − resolution + uncertainty decomposition says
-      // WHERE the loss comes from). One scan for the scores, decile
-      // bins (q150's floor-bucketing), every cross-row reduction
-      // pround→DECIMAL; the three components close on the 10-row bin
-      // frame as mirrored doubles.
-      val score = TextAnalysis.classifierScore(col("text"),
-        wTokens = 1.2, wStop = 2.0, wAlpha = 1.5, wPunct = -3.0, bias = -1.0)
-      val d = Dedup.cacheScoped(Tables.documents(s, dir)
-        .select(score.as("p"), (col("lang") === "en").cast("long").as("y"))
-        .withColumn("bucket", least(floor(col("p") * 10), lit(9L)).cast("long")))
-      val t = d.agg(count(lit(1)).as("n"),
-        (sum(col("y")).cast("double") / count(lit(1))).as("ybar"),
-        sum(pround((col("p") - col("y")) * (col("p") - col("y")), 9)
-          .cast(DecimalType(27, 10))).cast("double").as("sq"))
-      val bins = d.groupBy(col("bucket"))
-        .agg(count(lit(1)).as("nb"),
-          (sum(col("p").cast(DecimalType(18, 9))).cast("double") / count(lit(1)))
-            .as("pbar"),
-          (sum(col("y")).cast("double") / count(lit(1))).as("ybarb"))
-      val comp = bins.crossJoin(broadcast(t))
-        .agg(
-          sum(pround(col("nb").cast("double") * (col("pbar") - col("ybarb"))
-            * (col("pbar") - col("ybarb")), 9).cast(DecimalType(27, 10)))
-            .cast("double").as("reln"),
-          sum(pround(col("nb").cast("double") * (col("ybarb") - col("ybar"))
-            * (col("ybarb") - col("ybar")), 9).cast(DecimalType(27, 10)))
-            .cast("double").as("resn"))
-      comp.crossJoin(broadcast(t))
-        .filter(col("n") > 0)
-        .select(col("n"),
-          pround(col("sq") / col("n"), 9).as("brier"),
-          pround(col("reln") / col("n"), 9).as("reliability"),
-          pround(col("resn") / col("n"), 9).as("resolution"),
-          pround(col("ybar") * (lit(1.0) - col("ybar")), 9).as("uncertainty"))
-    }),
-
-    "q296_gini_split" -> ((s, dir) => {
-      // CART decision-stump split finder on the quality score [EXT] —
-      // the supervised threshold chooser the gate family lacked (q108
-      // fixes 0.5; q75 uses hand rules): the split minimizing weighted
-      // Gini impurity is exactly one tree level of CART/XGBoost — the
-      // principled "where to cut a quality filter" answer. Candidate
-      // thresholds are the grouped distinct scores; left/right class
-      // counts come from ONE CumSum two-pass (never a global window);
-      // impurity closes as mirrored doubles, argmin total-ordered by
-      // (impurity, threshold).
-      val d = Tables.documents(s, dir).select(
-        pround(TextAnalysis.qualityScore(col("text")), 9).as("sc"),
-        (col("lang") === "en").cast("long").as("y"))
-      val byV = d.groupBy(col("sc")).agg(count(lit(1)).as("n"), sum(col("y")).as("p"))
-      val cum = graft.operators.CumSum.withRunningTotals(byV, Seq(col("sc")),
-        Seq(col("n") -> "cn", col("p") -> "cp"))
-      val tot = byV.agg(sum(col("n")).as("tn"), sum(col("p")).as("tp"))
-      cum.crossJoin(broadcast(tot))
-        .filter(col("cn") < col("tn") && col("tn") > 0)
-        .withColumn("nl", col("cn").cast("double"))
-        .withColumn("nr", (col("tn") - col("cn")).cast("double"))
-        .withColumn("pl", col("cp").cast("double") / col("nl"))
-        .withColumn("pr2", (col("tp") - col("cp")).cast("double") / col("nr"))
-        .withColumn("gl", lit(1.0) - col("pl") * col("pl")
-          - (lit(1.0) - col("pl")) * (lit(1.0) - col("pl")))
-        .withColumn("gr", lit(1.0) - col("pr2") * col("pr2")
-          - (lit(1.0) - col("pr2")) * (lit(1.0) - col("pr2")))
-        .withColumn("impRaw", (col("nl") * col("gl") + col("nr") * col("gr"))
-          / col("tn").cast("double"))
-        .withColumn("imp", pround(col("impRaw"), 9))
-        .withColumn("p0", col("tp").cast("double") / col("tn").cast("double"))
-        .withColumn("g0", lit(1.0) - col("p0") * col("p0")
-          - (lit(1.0) - col("p0")) * (lit(1.0) - col("p0")))
-        .orderBy(col("imp"), col("sc")).limit(1)
-        .select(col("sc").as("threshold"), col("cn").as("n_left"),
-          (col("tn") - col("cn")).as("n_right"), col("imp").as("impurity"),
-          pround(col("g0"), 9).as("gini_parent"),
-          pround(col("g0") - col("impRaw"), 9).as("gain"))
-    }),
-
-    "q297_page_hinkley" -> ((s, dir) => {
-      // Page–Hinkley drift alarm per type [EXT] — the sequential
-      // change detector between q207 (CUSUM vs a FIXED reference) and
-      // q269 (retrospective argmax): PH tracks m_t = Σ(x_i − x̄_i − δ)
-      // against its running minimum, where x̄_i is the RUNNING mean —
-      // self-calibrating, no reference window to choose. Every term
-      // depends only on prefix sums, so the whole statistic is
-      // per-type windowed cumulatives on the ≤|days| frame: terms
-      // pround(9) into DECIMAL running sums (exact), the excursion
-      // m − M closes in exact decimal; alarms compare against
-      // 5σ̂ (double-first moments), ROUNDED vs ROUNDED.
-      val wt = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      val wcum = wt.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val daily = Dedup.cacheScoped(Tables.events(s, dir)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("x")))
-      val sig = daily.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-          sum((col("x").cast(DecimalType(38, 0)) * col("x"))).as("sxx"))
-        .filter(col("n") > 1)
-        .withColumn("m", col("sx").cast("double") / col("n").cast("double"))
-        .select(col("event_type"), col("m"),
-          sqrt(col("sxx").cast("double") / col("n").cast("double")
-            - col("m") * col("m")).as("sig"))
-      val terms = daily
-        .withColumn("i", row_number().over(wt).cast("long"))
-        .withColumn("si", sum(col("x")).over(wcum))
-        .join(broadcast(sig), Seq("event_type"))
-        .withColumn("term", pround(col("x").cast("double")
-          - col("si").cast("double") / col("i").cast("double")
-          - lit(0.01) * col("m"), 9))
-        .withColumn("mt", sum(col("term").cast(DecimalType(27, 10))).over(wcum))
-        .withColumn("mmin", min(col("mt")).over(wcum))
-        .withColumn("exc", (col("mt") - col("mmin")).cast("double"))
-        .withColumn("h", pround(lit(5.0) * col("sig"), 9))
-      terms.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_days"),
-          sum(when(col("exc") > col("h"), 1L).otherwise(0L)).as("n_alarms"),
-          min(when(col("exc") > col("h"), col("day"))).as("first_alarm_day"),
-          (floor(max(col("exc")) * 1e9 + 0.5) / 1e9).as("max_excursion"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q298_tokenizer_fertility" -> ((s, dir) => {
-      // tokenizer fertility per source [EXT] — subword tokens per
-      // whitespace word, THE tokenizer-efficiency number for mixture
-      // design (a source at fertility 2.5 costs 2.5× the context
-      // budget per word; q27 counts tokens per doc, this rolls the
-      // ratio up to the curation unit and flags the heavy tail). One
-      // codegen scan; exact-long token sums; the doc-level tail flag
-      // compares exact integers (bpe > 2·ws — no float boundary at
-      // all).
-      val d = Tables.documents(s, dir).select(col("source"),
-        TextAnalysis.wsTokenCount(col("text")).cast("long").as("ws"),
-        TextAnalysis.bpeTokenCount(col("text")).cast("long").as("bpe"))
-        .filter(col("ws") > 0)
-      d.groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("ws")).as("ws_tokens"), sum(col("bpe")).as("bpe_tokens"),
-          sum(when(col("bpe") > lit(2) * col("ws"), 1L).otherwise(0L))
-            .as("n_high_fertility"))
-        .filter(col("ws_tokens") > 0)
-        .select(col("source"), col("n_docs"), col("ws_tokens"), col("bpe_tokens"),
-          (floor(col("bpe_tokens").cast("double") / col("ws_tokens").cast("double")
-            * 1e9 + 0.5) / 1e9).as("fertility"),
-          (floor(col("n_high_fertility").cast("double") / col("n_docs").cast("double")
-            * 1e9 + 0.5) / 1e9).as("high_fertility_frac"))
-        .orderBy(col("source"))
-    }),
-
-    "q299_burst_detection" -> ((s, dir) => {
-      // Kleinberg-style two-state burst detection on the daily volume
-      // [EXT] — the burst segmentation behind trending-topic and
-      // incident timelines: base state at the global rate λ, burst
-      // state at 2λ with an entry cost, minimum-cost state sequence
-      // via the forward DP (the FILTERED state argmin(c0,c1) — the
-      // online decision, no backtrack pass). Sequential by nature:
-      // the ≤|days| frame walks on the DRIVER (the q198 bounded-walk
-      // tier) with floor(12) after every accumulation, while the
-      // oracle replays the identical recursion as a RECURSIVE CTE —
-      // step-for-step mirrored doubles, the q112 PageRank discipline.
-      val daily = Tables.events(s, dir)
-        .groupBy(to_date(col("ts")).as("day")).agg(count(lit(1)).as("x"))
-        .orderBy(col("day"))
-      val rows = daily.collect().map(r => (r.getDate(0), r.getLong(1)))
-      val tT = rows.length
-      import s.implicits._
-      if (tT == 0 || rows.map(_._2).sum == 0) {
-        Seq.empty[(Long, Long, Double)].toDF("n_days", "n_burst_days", "min_cost")
-      } else {
-        val lam0 = rows.map(_._2).sum.toDouble / tT
-        def r12(v: Double): Double = math.floor(v * 1e12 + 0.5) / 1e12
-        def f0(x: Long): Double = lam0 - x * math.log(lam0)
-        def f1(x: Long): Double = 2.0 * lam0 - x * math.log(2.0 * lam0)
-        var c0 = r12(f0(rows.head._2))
-        var c1 = r12(f1(rows.head._2) + 1.0)
-        var burstDays = 0L
-        var firstBurst: Option[java.sql.Date] = None
-        if (c1 < c0) { burstDays += 1; firstBurst = Some(rows.head._1) }
-        rows.tail.foreach { case (day, x) =>
-          val n0 = r12(math.min(c0, c1) + f0(x))
-          val n1 = r12(math.min(c1, c0 + 1.0) + f1(x))
-          c0 = n0; c1 = n1
-          if (c1 < c0) { burstDays += 1; if (firstBurst.isEmpty) firstBurst = Some(day) }
-        }
-        val minCost = math.floor(math.min(c0, c1) * 1e9 + 0.5) / 1e9
-        Seq((tT.toLong, burstDays, minCost))
-          .toDF("n_days", "n_burst_days", "min_cost")
-          .withColumn("first_burst_day",
-            firstBurst.map(d => lit(d.toString).cast("date"))
-              .getOrElse(lit(null).cast("date")))
-      }
-    }),
-
-    "q300_ngram_novelty" -> ((s, dir) => {
-      // per-source n-gram novelty attribution [EXT] — for each doc,
-      // the fraction of its distinct 3-shingles whose corpus-FIRST
-      // occurrence (min doc_id) is this doc; rolled up to the source.
-      // The redundancy lens the dedup family lacks: q164 asks "is doc
-      // B contained in A", this asks "what does each SOURCE add that
-      // the corpus didn't already have" — the marginal-contribution
-      // number mixture design weighs against token cost (q298). Shape
-      // is the standard dedup bucketing: distinct shingles explode
-      // (codegen), one gram-keyed agg for first owners (a gram's first
-      // owner is unique, so novel-gram counts PARTITION the corpus
-      // vocabulary), one equi-join back — linear in total grams, never
-      // pairwise. Per-doc ratios pround(9) into exact DECIMAL sums;
-      // the mean-of-ratios closes with one double divide.
-      val docs = Tables.documents(s, dir)
-      val sh = Dedup.cacheScoped(docs.select(col("doc_id"), col("source"),
-        explode(array_distinct(
-          graft.functions.Shingles.shingles(col("text"), 3))).as("sh")))
-      val firstOwner = sh.groupBy(col("sh")).agg(min(col("doc_id")).as("first_doc"))
-      val perDoc = sh.join(firstOwner, Seq("sh"))
-        .groupBy(col("doc_id"), col("source"))
-        .agg(count(lit(1)).as("n_grams"),
-          sum(when(col("doc_id") === col("first_doc"), 1L).otherwise(0L))
-            .as("n_novel"))
-      perDoc.groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_grams")).as("total_grams"),
-          sum(col("n_novel")).as("novel_grams"),
-          sum(pround(col("n_novel").cast("double") / col("n_grams"), 9)
-            .cast(DecimalType(27, 10))).as("ratio_sum"))
-        .select(col("source"), col("n_docs"), col("total_grams"),
-          col("novel_grams"),
-          pround(col("novel_grams").cast("double")
-            / col("total_grams").cast("double"), 9).as("novelty"),
-          pround(col("ratio_sum").cast("double")
-            / col("n_docs").cast("double"), 9).as("mean_doc_novelty"))
-        .orderBy(col("source"))
-    }),
-
-    "q301_filter_funnel" -> ((s, dir) => {
-      // quality-filter cascade audit [EXT] — the per-STAGE funnel a
-      // curation pipeline publishes next to its output (q92 is the
-      // user-journey funnel; this is the data-yield one): how many
-      // docs survive length → alpha-word (Gopher 80%) → stopword →
-      // exact-dedup, where each gate sees only the previous gate's
-      // survivors. Every gate compares EXACT INTEGERS via cross-
-      // multiplication (alpha·5 ≥ ws·4, stop·100 ≥ ws·3) — zero float
-      // surface, so no engine boundary can flip a doc. One scan builds
-      // the flags; dedup-keep-first is the standard min-per-hash agg
-      // over stage-3 survivors; the four funnel rows unpivot from the
-      // single 1-row close (no second scan).
-      val flagged = Dedup.cacheScoped(Tables.documents(s, dir).select(
-          col("doc_id"), col("n_chars"), md5(col("text")).as("h"),
-          TextAnalysis.wsTokenCount(col("text")).cast("long").as("ws"),
-          size(regexp_extract_all(col("text"),
-            lit(TextAnalysis.alphaWordPattern), lit(0))).cast("long").as("aw"),
-          size(regexp_extract_all(lower(col("text")),
-            lit(TextAnalysis.stopwordAltPattern), lit(0))).cast("long").as("sw"))
-        .withColumn("s1", col("n_chars") >= 200)
-        .withColumn("s2", col("s1") && col("ws") > 0
-          && col("aw") * 5 >= col("ws") * 4)
-        .withColumn("s3", col("s2") && col("sw") * 100 >= col("ws") * 3))
-      val keepFirst = flagged.filter(col("s3"))
-        .groupBy(col("h")).agg(min(col("doc_id")).as("keep_id"))
-      val wide = flagged.join(keepFirst, Seq("h"), "left")
-        .withColumn("s4", col("s3") && col("doc_id") === col("keep_id"))
-        .agg(count(lit(1)).as("n0"),
-          sum(when(col("s1"), 1L).otherwise(0L)).as("n1"),
-          sum(when(col("s2"), 1L).otherwise(0L)).as("n2"),
-          sum(when(col("s3"), 1L).otherwise(0L)).as("n3"),
-          sum(when(col("s4"), 1L).otherwise(0L)).as("n4"))
-      wide.select(explode(array(
-          struct(lit(1).as("stage"), lit("min_length").as("gate"),
-            col("n0").as("n_in"), col("n1").as("n_out")),
-          struct(lit(2).as("stage"), lit("alpha_words").as("gate"),
-            col("n1").as("n_in"), col("n2").as("n_out")),
-          struct(lit(3).as("stage"), lit("stopwords").as("gate"),
-            col("n2").as("n_in"), col("n3").as("n_out")),
-          struct(lit(4).as("stage"), lit("exact_dedup").as("gate"),
-            col("n3").as("n_in"), col("n4").as("n_out")))).as("r"),
-          col("n0"))
-        .select(col("r.stage").as("stage"), col("r.gate").as("gate"),
-          col("r.n_in").as("n_in"), col("r.n_out").as("n_out"),
-          pround(lit(1.0) - col("r.n_out").cast("double")
-            / col("r.n_in").cast("double"), 9).as("drop_frac"),
-          pround(col("r.n_out").cast("double")
-            / col("n0").cast("double"), 9).as("cum_survival"))
-        .orderBy(col("stage"))
-    }),
-
-    "q302_context_overflow" -> ((s, dir) => {
-      // context-window overflow audit [EXT] — for candidate sequence
-      // lengths k ∈ {256 … 4096}, what fraction of docs exceed k
-      // whitespace tokens and what fraction of corpus TOKENS a
-      // truncate-at-k policy discards. The number that picks
-      // max_seq_len: packing efficiency (q124 family) says how full
-      // the windows are, this says what truncation THROWS AWAY. One
-      // codegen scan computes all five thresholds as conditional
-      // exact-long sums in a single agg (no doc×k join at any scale);
-      // the five rows unpivot from the 1-row close.
-      val ks = Seq(256, 512, 1024, 2048, 4096)
-      val d = Tables.documents(s, dir)
-        .select(TextAnalysis.wsTokenCount(col("text")).cast("long").as("ws"))
-      val aggs = Seq(count(lit(1)).as("n"), sum(col("ws")).as("tot")) ++
-        ks.flatMap(k => Seq(
-          sum(when(col("ws") > k, 1L).otherwise(0L)).as(s"o$k"),
-          sum(when(col("ws") > k, col("ws") - k).otherwise(0L)).as(s"l$k")))
-      val wide = d.agg(aggs.head, aggs.tail: _*)
-      wide.select(explode(array(ks.map(k =>
-          struct(lit(k).as("k"), col(s"o$k").as("n_over"),
-            col(s"l$k").as("tokens_lost"))): _*)).as("r"),
-          col("n"), col("tot"))
-        .select(col("r.k").as("k"), col("r.n_over").as("n_docs_over"),
-          pround(col("r.n_over").cast("double") / col("n").cast("double"), 9)
-            .as("frac_docs_over"),
-          col("r.tokens_lost").as("tokens_lost"),
-          pround(col("r.tokens_lost").cast("double")
-            / col("tot").cast("double"), 9).as("frac_tokens_lost"))
-        .orderBy(col("k"))
-    }),
-
-    "q303_cross_source_dups" -> ((s, dir) => {
-      // cross-source duplicate contamination matrix [EXT] — which
-      // sources copy from which: for every exact-dup group (md5 of
-      // the text), the source×source matrix of duplicated doc pairs.
-      // The provenance view the dedup family lacks (q30 counts dups,
-      // q300 credits first owners; this localizes WHERE redundancy
-      // comes from — the "CC dumps overlap with each other" audit).
-      // Scale-safe by construction: docs aggregate to (hash, source)
-      // COUNTS first, and only the count frames pair up — a dup group
-      // with 10⁴ members contributes |sources|² rows, never C(10⁴,2)
-      // pairs. Within-source pairs count C(n,2), cross-source n_a·n_b;
-      // all exact integers.
-      val hs = Dedup.cacheScoped(Tables.documents(s, dir)
-        .select(md5(col("text")).as("h"), col("source"))
-        .groupBy(col("h"), col("source")).agg(count(lit(1)).as("cnt")))
-      val dupH = hs.groupBy(col("h"))
-        .agg(sum(col("cnt")).as("tot"))
-        .filter(col("tot") > 1)
-        .select(col("h"))
-      val d = hs.join(dupH, Seq("h"))
-      val a = d.select(col("h"), col("source").as("src_a"), col("cnt").as("na"))
-      val b = d.select(col("h"), col("source").as("src_b"), col("cnt").as("nb"))
-      a.join(b, Seq("h"))
-        .filter(col("src_a") <= col("src_b"))
-        .select(col("h"), col("src_a"), col("src_b"),
-          when(col("src_a") === col("src_b"),
-              (col("na") * (col("na") - 1) / 2).cast("long"))
-            .otherwise(col("na") * col("nb")).as("pairs"))
-        .filter(col("pairs") > 0)
-        .groupBy(col("src_a"), col("src_b"))
-        .agg(countDistinct(col("h")).as("n_dup_groups"),
-          sum(col("pairs")).as("n_doc_pairs"))
-        .orderBy(col("src_a"), col("src_b"))
-    }),
-
-    "q304_ols_two_factor" -> ((s, dir) => {
-      // closed-form two-regressor OLS [EXT] — value ~ hour-of-day +
-      // day-of-week via the NORMAL EQUATIONS (Cramer on the centered
-      // moment matrix), the exact one-pass answer where Optim.linregGD
-      // (q103's family) iterates: one grouped-moment scan, a 1-row
-      // close. Moment sums are exact DECIMAL over centi-quantized y
-      // (q287's on-entry quantization — the only float in the inputs
-      // dies there); the centered combos n·Sxy − Sx·Sy and the Cramer
-      // solve run in pure IEEE double from those exact sums (both
-      // engines cast exact decimals identically), pround once per
-      // output. R² = (b1·S1y + b2·S2y)/SST on the same centered sums.
-      val D = DecimalType(38, 0)
-      val ev = Tables.events(s, dir).select(
-        hour(col("ts")).cast("long").as("x1"),
-        dayofweek(col("ts")).cast("long").as("x2"),
-        floor(col("value") * 100 + 0.5).cast("long").as("yc"))
-      val m = ev.agg(count(lit(1)).as("n"),
-        sum(col("x1").cast(D)).as("sx1"), sum(col("x2").cast(D)).as("sx2"),
-        sum(col("yc").cast(D)).as("sy"),
-        sum((col("x1") * col("x1")).cast(D)).as("sx1x1"),
-        sum((col("x1") * col("x2")).cast(D)).as("sx1x2"),
-        sum((col("x2") * col("x2")).cast(D)).as("sx2x2"),
-        sum((col("x1") * col("yc")).cast(D)).as("sx1y"),
-        sum((col("x2") * col("yc")).cast(D)).as("sx2y"),
-        sum((col("yc").cast(D) * col("yc")).cast(D)).as("syy"))
-      def dbl(name: String) = col(name).cast("double")
-      val nd = dbl("n")
-      val s11 = nd * dbl("sx1x1") - dbl("sx1") * dbl("sx1")
-      val s12 = nd * dbl("sx1x2") - dbl("sx1") * dbl("sx2")
-      val s22 = nd * dbl("sx2x2") - dbl("sx2") * dbl("sx2")
-      val s1y = nd * dbl("sx1y") - dbl("sx1") * dbl("sy")
-      val s2y = nd * dbl("sx2y") - dbl("sx2") * dbl("sy")
-      val sst = nd * dbl("syy") - dbl("sy") * dbl("sy")
-      val det = s11 * s22 - s12 * s12
-      val b1c = (s1y * s22 - s2y * s12) / det
-      val b2c = (s2y * s11 - s1y * s12) / det
-      m.select(col("n"),
-          pround((dbl("sy") - b1c * dbl("sx1") - b2c * dbl("sx2")) / nd / 100.0, 9)
-            .as("intercept"),
-          pround(b1c / 100.0, 9).as("beta_hour"),
-          pround(b2c / 100.0, 9).as("beta_dow"),
-          pround((b1c * s1y + b2c * s2y) / sst, 9).as("r2"))
-    }),
-
-    "q305_huber_mean" -> ((s, dir) => {
-      // Huber M-estimator of the per-type location, 3 unrolled IRLS
-      // rounds [EXT] — the robust mean between q184 (winsorize at
-      // fixed quantiles) and q284's family: downweight outliers by
-      // w = min(1, c/|x−μ|) with c = 1.345σ̂ and re-solve. Iterative-
-      // parity discipline (q112 PageRank): each round's weighted terms
-      // pround(9) into exact DECIMAL sums (order-free), μ re-rounds
-      // per round, the oracle unrolls the IDENTICAL three CTEs. Each
-      // round is one broadcast-join + grouped agg over events — no
-      // windows, no buffers.
-      val D = DecimalType(38, 0)
-      val ev = Dedup.cacheScoped(Tables.events(s, dir)
-        .select(col("event_type"), col("value")))
-      val base = ev.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(floor(col("value") * 1e6 + 0.5).cast(D)).as("s6"),
-          sum((floor(col("value") * 1e3 + 0.5).cast(D)
-            * floor(col("value") * 1e3 + 0.5).cast(D)).as("sq")).as("sqq"))
-        .withColumn("mu0", pround(col("s6").cast("double") / 1e6
-          / col("n").cast("double"), 9))
-        .withColumn("m3", col("s6").cast("double") / 1e6)
-        .withColumn("sig", pround(
-          sqrt(col("sqq").cast("double") / 1e6 / col("n").cast("double")
-            - (col("s6").cast("double") / 1e6 / col("n").cast("double"))
-              * (col("s6").cast("double") / 1e6 / col("n").cast("double"))), 9))
-        .withColumn("c", pround(lit(1.345) * col("sig"), 9))
-        .select(col("event_type"), col("n"), col("mu0"), col("sig"), col("c"))
-      def irls(prev: DataFrame, muCol: String, outCol: String): DataFrame = {
-        val joined = ev.join(broadcast(prev), Seq("event_type"))
-        val r = abs(col("value") - col(muCol))
-        val w = when(r <= col("c"), lit(1.0)).otherwise(col("c") / r)
-        joined
-          .withColumn("wx", pround(w * col("value"), 9).cast(DecimalType(27, 10)))
-          .withColumn("w9", pround(w, 9).cast(DecimalType(27, 10)))
-          .groupBy(col("event_type"), col("n"), col("mu0"), col("sig"), col("c"))
-          .agg(sum(col("wx")).as("swx"), sum(col("w9")).as("sw"),
-            sum(when(w < 1.0, 1L).otherwise(0L)).as("n_down"))
-          .withColumn(outCol, pround(col("swx").cast("double")
-            / col("sw").cast("double"), 9))
-          .select(col("event_type"), col("n"), col("mu0"), col("sig"), col("c"),
-            col(outCol), col("n_down"))
-      }
-      val it1 = irls(base, "mu0", "mu1")
-      val it2 = irls(it1.select(col("event_type"), col("n"), col("mu0"),
-        col("sig"), col("c"), col("mu1")), "mu1", "mu2")
-      val it3 = irls(it2.select(col("event_type"), col("n"), col("mu0"),
-        col("sig"), col("c"), col("mu2")), "mu2", "mu3")
-      it3.select(col("event_type"), col("n"), col("mu0").as("mean"),
-          col("sig").as("sigma"), col("mu3").as("huber_mean"),
-          col("n_down").as("n_downweighted"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q306_shard_balance" -> ((s, dir) => {
-      // epoch-shard balance audit [EXT] — assign every doc to one of
-      // 64 training shards by the q161 md5-prefix hash and ask the two
-      // questions a data-loading team asks before an epoch: are the
-      // shards TOKEN-balanced (max/mean ratio, coefficient of
-      // variation — stragglers = idle accelerators), and is each shard
-      // source-MIXED (mean within-shard source entropy — a shard that
-      // is all one source breaks shuffled-training assumptions). One
-      // scan to (shard, source) exact counts; everything downstream
-      // closes on the ≤ 64·|sources| frame. Entropy terms pround(9)
-      // into DECIMAL sums (order-free), shard moments exact DECIMAL.
-      val D = DecimalType(38, 0)
-      val d = Tables.documents(s, dir).select(
-        (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-          .cast("long") % 64).as("shard"),
-        col("source"), TextAnalysis.wsTokenCount(col("text")).cast("long").as("ws"))
-      val cell = Dedup.cacheScoped(d.groupBy(col("shard"), col("source"))
-        .agg(count(lit(1)).as("n"), sum(col("ws")).as("tok")))
-      val shard = cell.groupBy(col("shard"))
-        .agg(sum(col("n")).as("n"), sum(col("tok")).as("tok"))
-      val ent = cell.join(shard.select(col("shard"), col("n").as("ntot")),
-          Seq("shard"))
-        .withColumn("p", col("n").cast("double") / col("ntot").cast("double"))
-        .withColumn("term", pround(-col("p") * log(col("p")), 9)
-          .cast(DecimalType(27, 10)))
-        .groupBy(col("shard")).agg(sum(col("term")).as("h"))
-      val st = shard.agg(count(lit(1)).as("n_shards"),
-        min(col("tok")).as("min_tokens"), max(col("tok")).as("max_tokens"),
-        sum(col("tok").cast(D)).as("st"),
-        sum((col("tok").cast(D) * col("tok")).cast(D)).as("stt"))
-      val eAvg = ent.agg(sum(col("h")).as("hs"), count(lit(1)).as("hn"))
-      st.crossJoin(eAvg)
-        .withColumn("mean_tok", col("st").cast("double")
-          / col("n_shards").cast("double"))
-        .select(col("n_shards"), col("min_tokens"), col("max_tokens"),
-          pround(col("max_tokens").cast("double") / col("mean_tok"), 9)
-            .as("imbalance"),
-          pround(sqrt(col("stt").cast("double") / col("n_shards").cast("double")
-            - col("mean_tok") * col("mean_tok")) / col("mean_tok"), 9).as("cov"),
-          pround(col("hs").cast("double") / col("hn").cast("double"), 9)
-            .as("mean_source_entropy"))
-    }),
-
-    "q307_weighted_sample" -> ((s, dir) => {
-      // token-budget weighted sampling [EXT] — Efraimidis–Spirakis
-      // weighted sampling without replacement, the way training
-      // corpora are sampled PROPORTIONAL TO TOKEN COUNT rather than
-      // per-doc: each doc draws the deterministic md5-uniform
-      // u ∈ (0,1] (q53/q80's reproducible-sample idiom) and ranks by
-      // key = ln(u)/ws — the ES exponential trick, top-k of which IS
-      // a weight-proportional without-replacement draw. Fully
-      // distributed: one scan, TakeOrderedAndProject top-50 (no global
-      // sort); deterministic end-to-end, so the oracle replays it
-      // exactly. Keys pround(12) before ranking (the transcendental-
-      // parity discipline), doc_id breaks ties totally.
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("source"),
-          TextAnalysis.wsTokenCount(col("text")).cast("long").as("ws"))
-        .filter(col("ws") > 0)
-      val u = (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("double") + 1.0) / 4294967296.0
-      docs.withColumn("k", pround(log(u) / col("ws"), 12))
-        .orderBy(desc("k"), col("doc_id")).limit(50)
-        .select(col("doc_id"), col("source"), col("ws"), col("k").as("es_key"))
-    }),
-
-    "q308_dedup_savings" -> ((s, dir) => {
-      // exact-dedup savings by source [EXT] — the before/after yield
-      // table a curation run reports: per source, docs and tokens
-      // before exact dedup vs after GLOBAL keep-first (min doc_id per
-      // md5 — a cross-source duplicate survives only in the source
-      // that contributed it first, matching q303's provenance view).
-      // One scan to per-doc rows, one hash-agg for keepers, one
-      // aggregate — the q30 dedup shape rolled up to the curation
-      // unit. All counts exact integers; fractions close pround(9).
-      val d = Dedup.cacheScoped(Tables.documents(s, dir).select(
-        col("doc_id"), col("source"), md5(col("text")).as("h"),
-        TextAnalysis.wsTokenCount(col("text")).cast("long").as("ws")))
-      val keep = d.groupBy(col("h")).agg(min(col("doc_id")).as("keep_id"))
-      d.join(keep, Seq("h"))
-        .withColumn("kept", col("doc_id") === col("keep_id"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("ws")).as("tokens"),
-          sum(when(col("kept"), 1L).otherwise(0L)).as("kept_docs"),
-          sum(when(col("kept"), col("ws")).otherwise(0L)).as("kept_tokens"))
-        .select(col("source"), col("n_docs"), col("tokens"), col("kept_docs"),
-          col("kept_tokens"),
-          pround(lit(1.0) - col("kept_tokens").cast("double")
-            / col("tokens").cast("double"), 9).as("token_savings"))
-        .orderBy(col("source"))
-    }),
-
-    "q309_dtw" -> ((s, dir) => {
-      // dynamic time warping between the click and purchase daily
-      // series [EXT] — the elastic-alignment distance that q229's
-      // rolling Pearson can't give when one series LAGS the other by
-      // a varying amount (campaign → delayed purchases): full DTW on
-      // |a_i − b_j| costs. The DP is ALL-INTEGER (daily counts, abs
-      // diffs, mins — zero float surface until the final normalize),
-      // so engine parity is exact by construction. Sequential by
-      // nature: both series are CALENDAR-bounded (≤365·years rows —
-      // the q198/q299 driver-walk tier), the n·m cell walk runs on
-      // the driver, and the oracle replays the IDENTICAL row-major
-      // cell order as a recursive CTE carrying (prev_row, cur) lists.
-      val daily = Tables.events(s, dir)
-        .filter(col("event_type").isin("click", "purchase"))
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("x"))
-        .orderBy(col("day")).collect()
-      val a = daily.filter(_.getString(0) == "click").map(_.getLong(2))
-      val b = daily.filter(_.getString(0) == "purchase").map(_.getLong(2))
-      import s.implicits._
-      if (a.isEmpty || b.isEmpty) {
-        Seq.empty[(Long, Long, Long, Double)]
-          .toDF("n_days_a", "n_days_b", "dtw", "dtw_per_step")
-      } else {
-        val n = a.length; val m = b.length
-        val INF = Long.MaxValue / 4
-        var prev = Array.fill(m + 1)(INF); prev(0) = 0L
-        for (i <- 1 to n) {
-          val cur = Array.fill(m + 1)(INF)
-          for (j <- 1 to m) {
-            val cost = math.abs(a(i - 1) - b(j - 1))
-            cur(j) = cost + math.min(prev(j), math.min(cur(j - 1), prev(j - 1)))
-          }
-          prev = cur
-        }
-        val dtw = prev(m)
-        Seq((n.toLong, m.toLong, dtw,
-          math.floor(dtw.toDouble / (n + m) * 1e9 + 0.5) / 1e9))
-          .toDF("n_days_a", "n_days_b", "dtw", "dtw_per_step")
-      }
-    }),
-
-    "q310_stream_heavy_hitters" -> ((s, dir) => {
-      // STREAMING per-day heavy-hitter users [EXT] — q243's Misra–
-      // Gries sketch deployed INSIDE a real streaming aggregation
-      // (§2.7's tenth shape): the abuse-monitoring question "which
-      // users generate > n/512 of a day's traffic" answered with
-      // ≤511 counters of state per window instead of a per-user
-      // streaming state that grows with the user base. MG's candidate
-      // set SUPERSETS the true heavy hitters under ANY partial/merge
-      // order (the stream's nondeterministic micro-batch order is
-      // exactly the adversary the guarantee covers), so the batch
-      // recount of candidates + the exact n/512 filter yields the
-      // EXACT set — oracle-able even though the sketch inside the
-      // stream is approximate.
-      val k = 512
-      val staging = StreamingOps.defaultStagingDir(s, dir)
-      StreamingOps.stageEventsForStreaming(s, dir, staging)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val stream = StreamingOps.eventsStream(s, staging)
-          .select(window(col("ts"), "1 day").as("w"),
-            col("user_id").cast("string").as("u"))
-          .groupBy(col("w"))
-          .agg(graft.functions.Sketch.mgSummary(col("u"), k).as("m"),
-            count(lit(1)).as("n"))
-        val cand = StreamingOps.runToMemory(s, stream, "q310_stream_hh")
-          .select(col("w.start").cast("date").as("day"), col("n"),
-            explode(map_keys(col("m"))).as("u"))
-        val daily = Tables.events(s, dir)
-          .select(to_date(col("ts")).as("day"),
-            col("user_id").cast("string").as("u"))
-          .groupBy(col("day"), col("u")).agg(count(lit(1)).as("cnt"))
-        daily.join(cand, Seq("day", "u"))
-          .filter(col("cnt") * k > col("n"))
-          .select(col("day"), col("u").cast("long").as("user_id"), col("cnt"),
-            col("n").as("n_day"))
-          .orderBy(col("day"), desc("cnt"), col("user_id"))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }),
-
-    "q311_zonemap_skip" -> ((s, dir) => {
-      // zone-map skip-ratio audit [EXT] — the 100 TB pruning argument
-      // made measurable: partition events into 1000-row blocks under
-      // two layouts (ts-clustered vs deterministic hash-shuffle — the
-      // "what if you don't maintain clustering" counterfactual),
-      // compute per-block min/max ts zone maps, and report what
-      // fraction of blocks a 3-day range predicate can SKIP and how
-      // many rows survive to scan. The q120 Morton audit boxes two
-      // dimensions; this quantifies the single-dimension case every
-      // time-partitioned table lives or dies by. Block ids come from
-      // the two-pass dense-id idiom (DocPipeline.withDenseIds — no
-      // global window); block frames are |rows|/1000 and close tiny.
-      val lo = to_timestamp(lit("2024-01-10 00:00:00"))
-      val hi = to_timestamp(lit("2024-01-13 00:00:00"))
-      val ev = Tables.events(s, dir).select(col("event_id"), col("ts"))
-      def audit(df: DataFrame, layout: String): DataFrame = {
-        val blocks = df.withColumn("blk", floor(col("rid") / 1000))
-          .groupBy(col("blk"))
-          .agg(min(col("ts")).as("mn"), max(col("ts")).as("mx"),
-            count(lit(1)).as("n"))
-          .withColumn("skip", col("mx") < lo || col("mn") >= hi)
-        blocks.agg(count(lit(1)).as("n_blocks"),
-            sum(when(col("skip"), 1L).otherwise(0L)).as("n_skipped"),
-            sum(when(col("skip"), 0L).otherwise(col("n"))).as("rows_scanned"))
-          .select(lit(layout).as("layout"), col("n_blocks"), col("n_skipped"),
-            pround(col("n_skipped").cast("double")
-              / col("n_blocks").cast("double"), 9).as("skip_frac"),
-            col("rows_scanned"))
-      }
-      val sorted = graft.operators.DocPipeline.withDenseIds(
-        ev, struct(col("ts"), col("event_id")), "rid")
-      val shuffled = graft.operators.DocPipeline.withDenseIds(
-        ev, struct(md5(col("event_id").cast("string")), col("event_id")), "rid")
-      audit(sorted, "ts_clustered").unionAll(audit(shuffled, "hash_shuffled"))
-        .orderBy(col("layout"))
-    }),
-
-    "q312_pca_power" -> ((s, dir) => {
-      // top principal component of the embedding corpus via 3 power-
-      // iteration steps [EXT] — the direction-of-maximum-variance
-      // diagnostic behind whitening/anisotropy checks (embedding
-      // corpora are notoriously anisotropic; a dominant component
-      // eating most variance degrades cosine retrieval). Fully
-      // distributed: centering means and every C·v product are
-      // posexplode aggs (q293's idiom); the ONLY driver state is the
-      // 64-row v frame, cached per round. Iterative parity (q112):
-      // every reduction is pround(12) terms into exact DECIMAL sums,
-      // v re-normalizes through pround(9) per round, the oracle
-      // unrolls the IDENTICAL three CTEs. λ = ‖Σᵢ c·s‖/n, explained
-      // share vs the exact total variance. Machinery lives in
-      // operators.Pca (topComponent/varianceStats) so the synthetic
-      // known-direction spec can drive it off-fixture.
-      val emb = Tables.embeddings(s, dir)
-      val v3 = graft.operators.Pca.topComponent(emb, "embedding", "vec_id", 3)
-      val tv = graft.operators.Pca.varianceStats(emb, "embedding")
-      v3.crossJoin(broadcast(tv))
-        .select((col("i") + 1).as("dim"), col("v").as("loading"),
-          pround(col("nrm") / col("n"), 9).as("lambda"),
-          pround(col("nrm") / col("n") / col("totvar"), 9).as("explained_frac"))
-        .orderBy(col("dim"))
-    }),
-
-    "q313_query_likelihood" -> ((s, dir) => {
-      // Dirichlet-smoothed query-likelihood retrieval (μ=2000) [EXT]
-      // — the language-modeling scorer next to q169's BM25 (Zhai &
-      // Lafferty smoothing: score = Σ_t ln((tf + μ·p_c(t))/(|d|+μ)));
-      // unlike BM25 every doc scores every query term (absent terms
-      // contribute the smoothed background), so the score frame is
-      // docs×|q| built from the doc-length frame — the corpus
-      // tokenizes ONCE and only |q|=3 collection stats broadcast.
-      // Per-term lns pround(12) into exact DECIMAL sums (q91/q169
-      // discipline), close pround(9), top-20 TakeOrderedAndProject.
-      val terms = Seq("spark", "join", "scan")
-      val mu = 2000.0
-      val words = Dedup.cacheScoped(Tables.documents(s, dir)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        .filter(length(col("w")) > 0))
-      val dl = words.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-      val cTot = words.agg(count(lit(1)).as("c_tot"))
-      val cf = words.filter(col("w").isin(terms: _*))
-        .groupBy(col("w")).agg(count(lit(1)).as("cf"))
-      val tf = words.filter(col("w").isin(terms: _*))
-        .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
-      dl.crossJoin(broadcast(cf.crossJoin(cTot)
-          .select(col("w"), (col("cf").cast("double")
-            / col("c_tot").cast("double")).as("p"))))
-        .join(tf, Seq("doc_id", "w"), "left")
-        .withColumn("t", pround(log(
-          (coalesce(col("tf"), lit(0L)).cast("double") + lit(mu) * col("p"))
-            / (col("dl").cast("double") + lit(mu))), 12))
-        .groupBy(col("doc_id"))
-        .agg(pround(sum(col("t").cast(DecimalType(27, 14))).cast("double"), 9)
-          .as("ql_score"))
-        .orderBy(desc("ql_score"), col("doc_id")).limit(20)
-    }),
-
-    "q314_jw_linkage" -> ((s, dir) => {
-      // Jaro–Winkler fuzzy linkage over part names [EXT] — the
-      // prefix-weighted scorer record linkage prefers for NAMES where
-      // q158's levenshtein treats all positions equally (JW's Winkler
-      // boost rewards shared prefixes, the high-signal region of
-      // entity names). Powered by the new native codegen expression
-      // (Strings.jaroWinkler — Spark has no built-in; the O(|a|·w)
-      // loop compiles into the stage as one static call), verified
-      // term-for-term against DuckDB's jaro_winkler_similarity.
-      // Brand blocking bounds candidates to Σ|brand|² (q158's
-      // pigeonhole discipline — never all-pairs); key_a < key_b
-      // halves the frame; ROUNDED scores order the top-20 totally.
-      val p = Tables.part(s, dir)
-        .select(col("p_partkey"), col("p_name"), col("p_brand"))
-      // r20 (guide §2.6 stragglers / the documentsFanned discipline):
-      // part is one parquet row group, so the broadcast-join PROBE side
-      // was ONE scan task — the whole Σ|brand-block|² pair stream and
-      // every JW evaluation serialized on one core (solo 3.6 s at 32c
-      // with 31 cores idle). Fanning the probe rows round-robin costs
-      // one ~20k-row exchange of (brand, key, name) and runs the pair
-      // generation + JW at full width; per-row join work (|block| JW
-      // gates) dwarfs the shuffled bytes at ANY scale, and
-      // defaultParallelism tracks the session, not this box.
-      val a = p.select(col("p_brand"), col("p_partkey").as("key_a"),
-        col("p_name").as("name_a"))
-        .repartition(s.sparkContext.defaultParallelism)
-      val b = p.select(col("p_brand"), col("p_partkey").as("key_b"),
-        col("p_name").as("name_b"))
-      // length-ratio prune BEFORE the JW loop: m ≤ min(|a|,|b|) bounds
-      // jaro ≤ (2 + min/max)/3 and the Winkler boost is monotone
-      // (jw ≤ 0.6·j + 0.4), so jw ≥ 0.93 ⟹ min/max ≥ 0.65 — the
-      // conjunct short-circuits codegen past the O(|a|·w) match loop
-      // for length-mismatched pairs at zero recall loss (implied by
-      // the threshold, so the oracle needs no twin)
-      val lenOk = least(length(col("name_a")), length(col("name_b")))
-        .cast("double") * 3.0 >=
-        greatest(length(col("name_a")), length(col("name_b")))
-          .cast("double") * 1.95
-      // ONE filter with explicit conjunct order — And short-circuits
-      // left-to-right in codegen, so the O(1) key/length tests gate the
-      // O(|a|·w) JW loop; written as separate .filter calls the
-      // optimizer merged them JW-first (measured 2× slower). The round
-      // is the DIRECT floor form, not pround: jw ∈ [0,1] can never
-      // reach pround's 2^52 overflow branch, and the guard's CASE
-      // would inline the expensive JW call twice in the generated
-      // join-condition code (no CSE there — measured another 1.5×).
-      val jwCol = (floor(
-        graft.functions.Strings.jaroWinkler(col("name_a"), col("name_b"))
-          * 1e9 + 0.5).cast("double") / 1e9)
-      a.join(b, Seq("p_brand"))
-        .filter(col("key_a") < col("key_b") && lenOk && jwCol >= 0.93)
-        .withColumn("jw", jwCol)
-        .select(col("key_a"), col("key_b"), col("p_brand"), col("jw"))
-        .orderBy(desc("jw"), col("key_a"), col("key_b")).limit(20)
-    }),
-
-    "q315_grouped_weighted_sample" -> ((s, dir) => {
-      // per-source token-weighted sample (A-Res within groups) [EXT] —
-      // q307's Efraimidis–Spirakis draw stratified by the curation
-      // unit: 5 docs PER SOURCE, weight-proportional to token count —
-      // how a mixture spec ("N docs from each source, biased to the
-      // long tail of long docs") is actually materialized. Same
-      // deterministic md5-uniform key; the per-group top-k rides a
-      // WindowGroupLimit (rank pushed into the shuffle — each
-      // partition keeps ≤k rows per group before the exchange), never
-      // a global sort.
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("source"),
-          TextAnalysis.wsTokenCount(col("text")).cast("long").as("ws"))
-        .filter(col("ws") > 0)
-      val u = (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("double") + 1.0) / 4294967296.0
-      val w = Window.partitionBy(col("source"))
-        .orderBy(desc("k"), col("doc_id"))
-      docs.withColumn("k", pround(log(u) / col("ws"), 12))
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= 5)
-        .select(col("source"), col("rnk"), col("doc_id"), col("ws"),
-          col("k").as("es_key"))
-        .orderBy(col("source"), col("rnk"))
-    }),
-
-    "q316_decayed_popularity" -> ((s, dir) => {
-      // exponentially time-decayed popularity [EXT] — the feature-
-      // store freshness primitive: score(u) = Σ_events 2^(−age_days/7)
-      // (7-day half-life), the maintenance-free alternative to sliding
-      // windows (yesterday's score × decay + today's mass — never
-      // recomputed from history). One scan; per-event decay terms are
-      // pure IEEE (exp2 of an exact day difference — integer ages, so
-      // both engines evaluate the SAME dyadic power), pround(12) into
-      // exact DECIMAL sums per user; top-20 TakeOrderedAndProject.
-      val asOf = to_date(lit("2024-02-01"))
-      Tables.events(s, dir)
-        .select(col("user_id"),
-          datediff(asOf, to_date(col("ts"))).cast("double").as("age"))
-        .withColumn("t", pround(pow(lit(2.0), -col("age") / 7.0), 12))
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          pround(sum(col("t").cast(DecimalType(27, 14))).cast("double"), 9)
-            .as("decayed_score"))
-        .orderBy(desc("decayed_score"), col("user_id")).limit(20)
-    }),
-
-    "q317_cohort_retention" -> ((s, dir) => {
-      // signup-cohort retention triangle [EXT] — the product-analytics
-      // matrix between q92's funnel (one journey) and q234's
-      // Kaplan–Meier (time-to-ONE-event): of the users first seen in
-      // week W, what fraction was active in week W+k? Two aggs: first-
-      // seen week per user (min over one scan), distinct (user,
-      // activity-week) pairs; the matrix closes on the cohorts×offsets
-      // frame. Week offsets are EXACT integer day differences / 7
-      // (both engines truncate weeks to Monday, so the difference is
-      // always a multiple of 7 — no float, no calendar edge).
-      val ev = Dedup.cacheScoped(Tables.events(s, dir)
-        .select(col("user_id"),
-          date_trunc("week", col("ts")).cast("date").as("wk")).distinct())
-      val cohort = ev.groupBy(col("user_id")).agg(min(col("wk")).as("cw"))
-      val sizes = cohort.groupBy(col("cw")).agg(count(lit(1)).as("n_cohort"))
-      ev.join(cohort, Seq("user_id"))
-        .withColumn("week_offset", (datediff(col("wk"), col("cw")) / 7).cast("int"))
-        .groupBy(col("cw"), col("week_offset")).agg(count(lit(1)).as("n_active"))
-        .join(broadcast(sizes), Seq("cw"))
-        .select(col("cw").as("cohort_week"), col("week_offset"), col("n_active"),
-          col("n_cohort"),
-          pround(col("n_active").cast("double")
-            / col("n_cohort").cast("double"), 9).as("retention"))
-        .orderBy(col("cohort_week"), col("week_offset"))
-    }),
-
-    "q318_dup_cluster_sizes" -> ((s, dir) => {
-      // duplicate-cluster size profile [EXT] — where the duplicate
-      // MASS concentrates: exact-dup groups (md5) bucketed by size
-      // (1 / 2 / 3-5 / 6+), with doc and token mass per bucket — the
-      // "is duplication a long tail of pairs or a few megaclusters"
-      // diagnostic that picks between q308's keep-first (fine for
-      // pairs) and manual review (megaclusters are usually template
-      // text). Two hash-aggs; all exact integers until the one share
-      // division.
-      val d = Tables.documents(s, dir).select(md5(col("text")).as("h"),
-        TextAnalysis.wsTokenCount(col("text")).cast("long").as("ws"))
-      val g = d.groupBy(col("h"))
-        .agg(count(lit(1)).as("sz"), sum(col("ws")).as("tok"))
-      val tot = g.agg(sum(col("tok")).as("all_tok"))
-      g.withColumn("bucket",
-          when(col("sz") === 1, "1").when(col("sz") === 2, "2")
-            .when(col("sz") <= 5, "3-5").otherwise("6+"))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n_groups"), sum(col("sz")).as("n_docs"),
-          sum(col("tok")).as("tokens"))
-        .crossJoin(broadcast(tot))
-        .select(col("bucket"), col("n_groups"), col("n_docs"), col("tokens"),
-          pround(col("tokens").cast("double") / col("all_tok").cast("double"), 9)
-            .as("token_share"))
-        .orderBy(col("bucket"))
-    }),
-
-    "q319_lorenz_deciles" -> ((s, dir) => {
-      // Lorenz concentration deciles of per-user event mass [EXT] —
-      // the CURVE behind q213's Gini scalar: rank users by activity,
-      // cut into 10 equal-population slices, report each slice's share
-      // and the running share ("the top decile generates X%"). Ranks
-      // come from the two-pass dense-id idiom (never a global window
-      // over users); the 10-row close runs cumulative totals through
-      // CumSum. All exact integers until the two share divisions.
-      val cnt = Tables.events(s, dir)
-        .groupBy(col("user_id")).agg(count(lit(1)).as("cnt"))
-      val ranked = graft.operators.DocPipeline.withDenseIds(
-        cnt, struct(col("cnt"), col("user_id")), "rid")
-      val nU = ranked.agg(count(lit(1)).as("nu"), sum(col("cnt")).as("ne"))
-      val dec = ranked.crossJoin(broadcast(nU))
-        .withColumn("decile", (col("rid") * 10 / col("nu")).cast("int"))
-        .groupBy(col("decile"), col("nu"), col("ne"))
-        .agg(count(lit(1)).as("n_users"), sum(col("cnt")).as("n_events"))
-      // r19: the ≤10-row decile close runs on the DRIVER (one tiny
-      // collect) — the two-pass CumSum layout (range shuffle +
-      // checkpoint + counts collect + window) is built for corpus-sized
-      // orders, not a frame bounded at 10 rows by construction; the
-      // running sum is the same exact long addition.
-      val decRows = dec.orderBy(col("decile")).collect()
-      var cum = 0L
-      import s.implicits._
-      decRows.toSeq.map { r =>
-          val (decile, ne) = (r.getInt(0), r.getLong(2))
-          val (nUsers, nEvents) = (r.getLong(3), r.getLong(4))
-          cum += nEvents
-          (decile, nUsers, nEvents,
-            proundD(nEvents.toDouble / ne.toDouble, 9),
-            proundD(cum.toDouble / ne.toDouble, 9))
-        }
-        .toDF("decile", "n_users", "n_events", "share", "cum_share")
-        .orderBy(col("decile"))
-    }),
-
-    "q320_zipf_slope" -> ((s, dir) => {
-      // Zipf exponent of the vocabulary head [EXT] — the rank-
-      // frequency power law that pairs with q260's Heaps law (Heaps:
-      // how fast vocabulary GROWS; Zipf: how steeply frequency FALLS):
-      // OLS slope of ln(freq) on ln(rank) over the top-500 words. A
-      // natural corpus sits near −1; a flatter slope flags synthetic/
-      // boilerplate-heavy text. Head selection is one hash-agg +
-      // TakeOrderedAndProject (never a global sort); ranks are
-      // row_number on the 500-row frame (tiny-frame window exception,
-      // q110's argument); the regression closes via q304's exact-
-      // moment machinery with ln terms pround(12) into DECIMAL sums.
-      val head = Tables.documents(s, dir)
-        .select(explode(split(lower(col("text")), " ")).as("w"))
-        .filter(length(col("w")) > 0)
-        .groupBy(col("w")).agg(count(lit(1)).as("f"))
-        .orderBy(desc("f"), col("w")).limit(500)
-      val D = DecimalType(27, 14)
-      val xy = head
-        .withColumn("r", row_number().over(Window.orderBy(desc("f"), col("w"))))
-        .select(pround(log(col("r").cast("double")), 12).as("x"),
-          pround(log(col("f").cast("double")), 12).as("y"))
-      val m = xy.agg(count(lit(1)).as("n"),
-        sum(col("x").cast(D)).as("sx"), sum(col("y").cast(D)).as("sy"),
-        sum(pround(col("x") * col("x"), 12).cast(D)).as("sxx"),
-        sum(pround(col("x") * col("y"), 12).cast(D)).as("sxy"))
-      def dbl(c: String) = col(c).cast("double")
-      val nd = dbl("n")
-      val slope = (nd * dbl("sxy") - dbl("sx") * dbl("sy")) /
-        (nd * dbl("sxx") - dbl("sx") * dbl("sx"))
-      m.select(col("n").as("n_words"),
-        pround(slope, 9).as("zipf_slope"),
-        pround((dbl("sy") - slope * dbl("sx")) / nd, 9).as("intercept"))
-    }),
-
-    "q321_referential_audit" -> ((s, dir) => {
-      // referential-integrity audit across the order graph [EXT] —
-      // the data-quality gate an ingest pipeline runs before
-      // publishing a snapshot: orphan lineitems (FK → missing order),
-      // childless orders, FK coverage rates, and the revenue
-      // reconciliation (Σ o_totalprice vs Σ extendedprice·(1−disc)·
-      // (1+tax) — the classic "do the rollup columns still agree with
-      // the detail" check). Two anti-join counts + exact DECIMAL money
-      // sums; one row out. The anti-joins are the q06 shape — null-
-      // safe, shuffle on the FK only.
-      val li = Tables.lineitem(s, dir)
-      val o = Tables.orders(s, dir)
-      val orphan = li.join(o.select(col("o_orderkey")),
-        li("l_orderkey") === o("o_orderkey"), "left_anti")
-      val childless = o.join(li.select(col("l_orderkey")).distinct(),
-        o("o_orderkey") === li("l_orderkey"), "left_anti")
-      val D = DecimalType(38, 4)
-      val liSum = li.agg(count(lit(1)).as("n_lineitems"),
-        sum((floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-          * (lit(1.0) + col("l_tax")) * 100 + 0.5)).cast(D)).as("li_cents"))
-      val oSum = o.agg(count(lit(1)).as("n_orders"),
-        sum(floor(col("o_totalprice") * 100 + 0.5).cast(D)).as("o_cents"))
-      val orphanN = orphan.agg(count(lit(1)).as("n_orphan_lineitems"))
-      val childN = childless.agg(count(lit(1)).as("n_childless_orders"))
-      liSum.crossJoin(oSum).crossJoin(orphanN).crossJoin(childN)
-        .select(col("n_lineitems"), col("n_orders"),
-          col("n_orphan_lineitems"), col("n_childless_orders"),
-          pround(lit(1.0) - col("n_orphan_lineitems").cast("double")
-            / col("n_lineitems").cast("double"), 9).as("fk_coverage"),
-          (col("li_cents").cast("double") / 100.0).as("lineitem_revenue"),
-          (col("o_cents").cast("double") / 100.0).as("order_revenue"),
-          pround(col("li_cents").cast("double") / col("o_cents").cast("double"),
-            9).as("reconciliation_ratio"))
-    }),
-
-    "q322_gap_fill" -> ((s, dir) => {
-      // calendar gap-fill + forward-fill resampling [EXT] — the
-      // time-series scaffold every dashboard needs when a sparse slice
-      // (here the 1-in-397 audit sample of users) has empty (type,
-      // day) cells: a full types×calendar grid from sequence(), LEFT
-      // join of the observed daily means, last-observation-carried-
-      // forward for the holes (per-type calendar-bounded window — the
-      // q207 legitimate exception), leading holes stay null. Means are
-      // exact centi-quantized DECIMAL sums closed pround(9) so the
-      // carried values are engine-identical.
-      val ev = Tables.events(s, dir).filter(col("user_id") % 397 === 0)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n_obs"),
-          pround(sum(floor(col("value") * 100 + 0.5).cast(DecimalType(38, 0)))
-            .cast("double") / 100.0 / count(lit(1)), 9).as("mean_raw"))
-      val bounds = Tables.events(s, dir)
-        .agg(to_date(min(col("ts"))).as("lo"), to_date(max(col("ts"))).as("hi"))
-      val types = Tables.events(s, dir).select(col("event_type")).distinct()
-      val cal = types.crossJoin(broadcast(bounds))
-        .select(col("event_type"),
-          explode(sequence(col("lo"), col("hi"))).as("day"))
-      val wff = Window.partitionBy(col("event_type")).orderBy(col("day"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      cal.join(ev, Seq("event_type", "day"), "left")
-        .withColumn("mean_filled", last(col("mean_raw"), ignoreNulls = true)
-          .over(wff))
-        .select(col("event_type"), col("day"),
-          coalesce(col("n_obs"), lit(0L)).as("n_obs"), col("mean_raw"),
-          col("mean_filled"),
-          (col("mean_raw").isNull && col("mean_filled").isNotNull)
-            .as("is_filled"))
-        .orderBy(col("event_type"), col("day"))
-    }),
-
-    "q323_coverage_timeline" -> ((s, dir) => {
-      // global session-coverage timeline [EXT] — how much wall-clock
-      // was ANY session live, and in how many merged busy intervals:
-      // the uptime/idle split q266's peak cannot give. Interval union
-      // WITHOUT adjacency walks: on the boundary sweep (q266's order —
-      // starts before ends at the same instant, so touching sessions
-      // merge), a merged interval STARTS exactly where the running
-      // live count hits 1 from 0 (delta=+1 ∧ live=1) and ENDS where it
-      // returns to 0 (delta=−1 ∧ live=0); covered time = Σ end-ts −
-      // Σ start-ts — two filtered exact-long sums, no lead/lag over
-      // the global order anywhere.
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val sess = Tables.events(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"))
-        .withColumn("gap", (unix_timestamp(col("ts")) -
-          unix_timestamp(lag(col("ts"), 1).over(w))) >= 1800)
-        .withColumn("brk", when(col("gap").isNull || !col("gap"), 0L).otherwise(1L))
-        .withColumn("sid", sum(col("brk")).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy(col("user_id"), col("sid"))
-        .agg(min(col("ts")).as("st"), max(col("ts")).as("en"))
-      val bounds = sess.select(col("st").as("ts"), lit(1L).as("delta"),
-          col("user_id"), col("sid"))
-        .unionAll(sess.select(col("en").as("ts"), lit(-1L).as("delta"),
-          col("user_id"), col("sid")))
-      val cum = graft.operators.CumSum.withRunningTotal(bounds,
-        Seq(col("ts"), col("delta") * lit(-1L), col("user_id"), col("sid")),
-        col("delta"), "live")
-      val D = DecimalType(38, 0)
-      val agg = cum.agg(
-        sum(when(col("delta") === 1L && col("live") === 1L, 1L).otherwise(0L))
-          .as("n_merged"),
-        sum(when(col("delta") === 1L && col("live") === 1L,
-          unix_timestamp(col("ts"))).otherwise(0L).cast(D)).as("s_start"),
-        sum(when(col("delta") === -1L && col("live") === 0L,
-          unix_timestamp(col("ts"))).otherwise(0L).cast(D)).as("s_end"),
-        count(lit(1)).as("n_bounds"),
-        min(unix_timestamp(col("ts"))).as("t_lo"),
-        max(unix_timestamp(col("ts"))).as("t_hi"))
-      agg.select((col("n_bounds") / 2).cast("long").as("n_sessions"), col("n_merged"),
-        (col("s_end") - col("s_start")).cast("long").as("covered_seconds"),
-        pround((col("s_end") - col("s_start")).cast("double")
-          / (col("t_hi") - col("t_lo")).cast("double"), 9).as("coverage_frac"))
-    }),
-
-    "q324_snapshot_diff" -> ((s, dir) => {
-      // snapshot diff (data-diff operator) [EXT] — the table-to-table
-      // reconciliation an ingest pipeline runs between yesterday's and
-      // today's snapshot: keys added / removed / value-changed /
-      // unchanged, from ONE full-outer join on the key (the q51 shape;
-      // both sides shuffle once on event_id, counts close in a 1-row
-      // agg). Snapshots are deterministic slices of the fixture
-      // (A drops id%100=7, B drops id%100=13 and perturbs value on
-      // id%50=3) — the OPERATOR is the deliverable, the slices make
-      // every diff class non-empty at every SF.
-      val ev = Tables.events(s, dir).select(col("event_id"), col("value"))
-      val a = ev.filter(col("event_id") % 100 =!= 7)
-        .select(col("event_id").as("k"), col("value").as("va"))
-      val b = ev.filter(col("event_id") % 100 =!= 13)
-        .select(col("event_id").as("k"),
-          when(col("event_id") % 50 === 3, col("value") + 1.0)
-            .otherwise(col("value")).as("vb"))
-      a.join(b, Seq("k"), "full_outer")
-        .agg(
-          sum(when(col("va").isNotNull, 1L).otherwise(0L)).as("n_a"),
-          sum(when(col("vb").isNotNull, 1L).otherwise(0L)).as("n_b"),
-          sum(when(col("va").isNull && col("vb").isNotNull, 1L).otherwise(0L))
-            .as("added"),
-          sum(when(col("va").isNotNull && col("vb").isNull, 1L).otherwise(0L))
-            .as("removed"),
-          sum(when(col("va").isNotNull && col("vb").isNotNull
-            && col("va") =!= col("vb"), 1L).otherwise(0L)).as("changed"),
-          sum(when(col("va").isNotNull && col("vb").isNotNull
-            && col("va") === col("vb"), 1L).otherwise(0L)).as("unchanged"))
-    }),
-
-    "q325_linear_interp" -> ((s, dir) => {
-      // linear interpolation of sparse-series holes [EXT] — the other
-      // resampling policy next to q322's carry-forward: a hole lerps
-      // between the PREVIOUS and NEXT observed daily means, weighted
-      // by exact integer day distances (edges with no neighbor stay
-      // null). Four calendar-bounded per-type windows (two directions
-      // × value/day — the q207 exception), means already pround(9) so
-      // the lerp is pure IEEE from engine-identical inputs, re-rounded
-      // once.
-      val ev = Tables.events(s, dir).filter(col("user_id") % 397 === 0)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(pround(sum(floor(col("value") * 100 + 0.5).cast(DecimalType(38, 0)))
-          .cast("double") / 100.0 / count(lit(1)), 9).as("mean_raw"))
-      val bounds = Tables.events(s, dir)
-        .agg(to_date(min(col("ts"))).as("lo"), to_date(max(col("ts"))).as("hi"))
-      val types = Tables.events(s, dir).select(col("event_type")).distinct()
-      val cal = types.crossJoin(broadcast(bounds))
-        .select(col("event_type"),
-          explode(sequence(col("lo"), col("hi"))).as("day"))
-      val wB = Window.partitionBy(col("event_type")).orderBy(col("day"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wF = Window.partitionBy(col("event_type")).orderBy(col("day"))
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      val obsDay = when(col("mean_raw").isNotNull, col("day"))
-      val g = cal.join(ev, Seq("event_type", "day"), "left")
-        .withColumn("pv", last(col("mean_raw"), ignoreNulls = true).over(wB))
-        .withColumn("pd", last(obsDay, ignoreNulls = true).over(wB))
-        .withColumn("nv", first(col("mean_raw"), ignoreNulls = true).over(wF))
-        .withColumn("nd", first(obsDay, ignoreNulls = true).over(wF))
-      g.select(col("event_type"), col("day"), col("mean_raw"),
-          when(col("mean_raw").isNotNull, col("mean_raw"))
-            .otherwise(when(col("pv").isNotNull && col("nv").isNotNull,
-              pround(col("pv") + (col("nv") - col("pv"))
-                * datediff(col("day"), col("pd")).cast("double")
-                / datediff(col("nd"), col("pd")).cast("double"), 9)))
-            .as("mean_interp"),
-          (col("mean_raw").isNull && col("pv").isNotNull && col("nv").isNotNull)
-            .as("is_interpolated"))
-        .orderBy(col("event_type"), col("day"))
-    }),
-
-    "q326_mad_outliers" -> ((s, dir) => {
-      // MAD-based robust outliers — q102's SCALE-SAFE twin (the q55 →
-      // q165 pattern): q102 anchors the semantics on Spark's single-
-      // buffer `percentile` (O(group) memory in one task); this runs
-      // BOTH medians (value, then |x−med|) through the histogram-
-      // refinement selector — no per-group buffer at any scale — and
-      // rolls up to the per-type outlier REPORT (counts + max modified
-      // z) instead of per-row flags. The flag compares ROUNDED |mz| to
-      // 3.5 so the boundary is engine-exact.
-      val ev = Dedup.cacheScoped(Tables.events(s, dir)
-        .select(col("event_type"), col("value")))
-      val med = graft.operators.Selection.exactGroupedMedian(
-          ev, "event_type", "value")
-        .select(col("event_type"), pround(col("median"), 9).as("med"))
-      val res = Dedup.cacheScoped(ev.join(broadcast(med), Seq("event_type"))
-        .withColumn("r", abs(col("value") - col("med"))))
-      val mad = graft.operators.Selection.exactGroupedMedian(
-          res.select(col("event_type"), col("r").as("value")),
-          "event_type", "value")
-        .select(col("event_type"), pround(col("median"), 9).as("mad"))
-      res.join(broadcast(mad), Seq("event_type"))
-        .withColumn("mz", pround(lit(0.6745) * (col("value") - col("med"))
-          / col("mad"), 9))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), max(col("med")).as("median"),
-          max(col("mad")).as("mad"),
-          sum(when(abs(col("mz")) > 3.5, 1L).otherwise(0L)).as("n_outliers"),
-          max(abs(col("mz"))).as("max_abs_mz"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q327_incremental_rollup" -> ((s, dir) => {
-      // incremental rollup maintenance (IVM merge) [EXT] — the "never
-      // recompute history" pattern at 100 TB: yesterday's materialized
-      // per-(type, day) rollup MERGES with today's delta pre-agg
-      // (counts add, exact DECIMAL sums add — the same mergeable-state
-      // law partial aggregation rides), provably ≡ the full recompute
-      // the oracle performs. The cutoff splits the fixture into
-      // base/delta; provenance columns show the merge actually mixed
-      // (the cutoff day carries mass from BOTH sides). Each half
-      // pre-aggregates before the union — the merge input is rollup-
-      // sized, never row-sized.
-      val cut = to_timestamp(lit("2024-01-20 12:00:00"))
-      val D = DecimalType(38, 0)
-      def roll(df: DataFrame, tag: String) = df
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as(s"n_$tag"),
-          sum(floor(col("value") * 100 + 0.5).cast(D)).as(s"c_$tag"))
-      val ev = Tables.events(s, dir)
-      val base = roll(ev.filter(col("ts") < cut), "base")
-      val delta = roll(ev.filter(col("ts") >= cut), "delta")
-      base.join(delta, Seq("event_type", "day"), "full_outer")
-        .select(col("event_type"), col("day"),
-          (coalesce(col("n_base"), lit(0L))
-            + coalesce(col("n_delta"), lit(0L))).as("n"),
-          ((coalesce(col("c_base"), lit(0L).cast(D))
-            + coalesce(col("c_delta"), lit(0L).cast(D))).cast("double") / 100.0)
-            .as("total_value"),
-          coalesce(col("n_base"), lit(0L)).as("n_from_base"),
-          coalesce(col("n_delta"), lit(0L)).as("n_from_delta"))
-        .orderBy(col("event_type"), col("day"))
-    }),
-
-    "q328_growth_accounting" -> ((s, dir) => {
-      // weekly growth accounting [EXT] — the new / retained /
-      // resurrected / churned decomposition every growth dashboard
-      // leads with (q317 slices by COHORT; this slices by WEEK):
-      // active = seen this week, retained = also active last week,
-      // new = first week, resurrected = active now, inactive last
-      // week, seen before; churned = active last week, not this.
-      // Shapes: distinct (user, week) frame, first-seen agg, one
-      // self-join shifted a week — all equi-joins on (user, week).
-      val uw = Dedup.cacheScoped(Tables.events(s, dir)
-        .select(col("user_id"),
-          date_trunc("week", col("ts")).cast("date").as("wk")).distinct())
-      val first = uw.groupBy(col("user_id")).agg(min(col("wk")).as("fw"))
-      val prev = uw.select(col("user_id"), date_add(col("wk"), 7).as("wk"),
-        lit(1L).as("was_prev"))
-      val cur = uw.join(first, Seq("user_id"))
-        .join(prev, Seq("user_id", "wk"), "left")
-        .select(col("wk"),
-          when(col("wk") === col("fw"), 1L).otherwise(0L).as("is_new"),
-          when(col("was_prev").isNotNull, 1L).otherwise(0L).as("is_ret"),
-          when(col("wk") =!= col("fw") && col("was_prev").isNull, 1L)
-            .otherwise(0L).as("is_res"))
-      val churn = uw.select(col("user_id"), date_add(col("wk"), 7).as("wk"))
-        .join(uw.select(col("user_id"), col("wk"), lit(1L).as("still")),
-          Seq("user_id", "wk"), "left")
-        .groupBy(col("wk"))
-        .agg(sum(when(col("still").isNull, 1L).otherwise(0L)).as("n_churned"))
-      cur.groupBy(col("wk"))
-        .agg(count(lit(1)).as("n_active"), sum(col("is_new")).as("n_new"),
-          sum(col("is_ret")).as("n_retained"),
-          sum(col("is_res")).as("n_resurrected"))
-        .join(churn, Seq("wk"), "left")
-        .select(col("wk").as("week"), col("n_active"), col("n_new"),
-          col("n_retained"), col("n_resurrected"),
-          coalesce(col("n_churned"), lit(0L)).as("n_churned"))
-        .orderBy(col("week"))
-    }),
-
-    "q329_conversion_delay" -> ((s, dir) => {
-      // click→purchase conversion-delay percentiles [EXT] — the exact
-      // delay distribution of CONVERTERS (q234's Kaplan–Meier handles
-      // the censored rest): per user, first click then first
-      // subsequent purchase; delay P50/P90 from the histogram-
-      // refinement selector over exact integer seconds — no per-group
-      // buffer, and the two-sided funnel stays two tiny aggs + one
-      // equi-join on user.
-      val ev = Tables.events(s, dir)
-      val click = ev.filter(col("event_type") === "click")
-        .groupBy(col("user_id"))
-        .agg(min(unix_timestamp(col("ts"))).as("t_click"))
-      val purch = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), unix_timestamp(col("ts")).as("t_p"))
-      val delays = Dedup.cacheScoped(click.join(purch, Seq("user_id"))
-        .filter(col("t_p") >= col("t_click"))
-        .groupBy(col("user_id"), col("t_click"))
-        .agg(min(col("t_p")).as("t_purchase"))
-        .select(lit("all").as("g"),
-          (col("t_purchase") - col("t_click")).cast("double").as("delay")))
-      val qs = graft.operators.Selection.exactGroupedQuantiles(
-        delays, "g", "delay", Seq(0.5, 0.9))
-      val n = delays.agg(count(lit(1)).as("n_converters"))
-      qs.groupBy(col("g"))
-        .agg(
-          pround(max(when(col("q") === 0.5, col("value"))), 9).as("p50_delay_s"),
-          pround(max(when(col("q") === 0.9, col("value"))), 9).as("p90_delay_s"))
-        .crossJoin(broadcast(n))
-        .select(col("n_converters"), col("p50_delay_s"), col("p90_delay_s"))
-    }),
-
-    "q330_ordered_funnel" -> ((s, dir) => {
-      // ordered 3-step funnel (signup → click → purchase) [EXT] — the
-      // general sequential-pattern funnel q92's single hop can't
-      // express: each step must happen strictly AFTER the user's
-      // matched previous step (first-match semantics, the standard
-      // funnel definition). Three chained per-user min-aggs, each
-      // joined to the previous step's timestamp — all equi-joins on
-      // user, never a sequence window; counts + conversion fractions
-      // close on 1 row.
-      val ev = Dedup.cacheScoped(Tables.events(s, dir)
-        .select(col("event_type"), col("user_id"),
-          unix_timestamp(col("ts")).as("t")))
-      val s1 = ev.filter(col("event_type") === "signup")
-        .groupBy(col("user_id")).agg(min(col("t")).as("t1"))
-      val s2 = ev.filter(col("event_type") === "click")
-        .join(s1, Seq("user_id")).filter(col("t") > col("t1"))
-        .groupBy(col("user_id"), col("t1")).agg(min(col("t")).as("t2"))
-      val s3 = ev.filter(col("event_type") === "purchase")
-        .join(s2.select(col("user_id"), col("t2")), Seq("user_id"))
-        .filter(col("t") > col("t2"))
-        .groupBy(col("user_id")).agg(min(col("t")).as("t3"))
-      val c1 = s1.agg(count(lit(1)).as("n_signup"))
-      val c2 = s2.agg(count(lit(1)).as("n_then_click"))
-      val c3 = s3.agg(count(lit(1)).as("n_then_purchase"))
-      c1.crossJoin(c2).crossJoin(c3)
-        .select(col("n_signup"), col("n_then_click"), col("n_then_purchase"),
-          pround(col("n_then_click").cast("double")
-            / col("n_signup").cast("double"), 9).as("step2_rate"),
-          pround(col("n_then_purchase").cast("double")
-            / col("n_then_click").cast("double"), 9).as("step3_rate"))
-    }),
-
-    "q331_weighted_median" -> ((s, dir) => {
-      // token-weighted median document length [EXT] — "half the
-      // CORPUS TOKENS live in docs longer than X": the curation
-      // number the per-doc median hides (a few long docs carry most
-      // of the mass). q104 computes a weighted median per GROUP with
-      // a partitioned cumulative window; this is the GLOBAL tier that
-      // q104's shape can't take (one group = one partition funnel):
-      // per-length token sums (one partial agg), CumSum running
-      // totals over the length-ordered frame (never a global window),
-      // first length whose cumulative weight reaches half the total —
-      // exact integers end to end.
-      val d = Tables.documents(s, dir)
-        .select(TextAnalysis.wsTokenCount(col("text")).cast("long").as("ws"))
-        .filter(col("ws") > 0)
-      val byLen = d.groupBy(col("ws"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("ws")).as("tok"))
-      val cum = graft.operators.CumSum.withRunningTotals(byLen,
-        Seq(col("ws")), Seq(col("tok") -> "cum_tok"))
-      val tot = byLen.agg(sum(col("tok")).as("t"), sum(col("n_docs")).as("nd"))
-      cum.crossJoin(broadcast(tot))
-        .filter(col("cum_tok") * 2 >= col("t"))
-        .orderBy(col("ws")).limit(1)
-        .select(col("nd").as("n_docs"), col("t").as("total_tokens"),
-          col("ws").as("weighted_median_len"),
-          pround(col("cum_tok").cast("double") / col("t").cast("double"), 9)
-            .as("cum_token_frac"))
-    }),
-
-    "q332_template_ngrams" -> ((s, dir) => {
-      // per-source template detector [EXT] — the most REUSED 3-shingle
-      // per source and the fraction of that source's docs carrying it:
-      // coverage near 1.0 means a boilerplate template (q107 removes
-      // corpus-common LINES; this localizes which SOURCE is template-
-      // heavy and shows the offending fragment). Distinct shingles
-      // explode once (codegen), one (source, gram) doc-count agg, the
-      // per-source argmax rides a max-struct partial agg — never a
-      // rank window over the vocabulary. Ties break to the
-      // lexicographically LAST gram (max-struct order), mirrored in
-      // the oracle's (n_with, sh) DESC rank.
-      val docs = Tables.documents(s, dir)
-      val nSrc = docs.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
-      val sh = docs.select(col("doc_id"), col("source"),
-        explode(array_distinct(
-          graft.functions.Shingles.shingles(col("text"), 3))).as("sh"))
-      val gramDocs = sh.groupBy(col("source"), col("sh"))
-        .agg(count(lit(1)).as("n_with"))
-      gramDocs
-        .groupBy(col("source"))
-        .agg(max(struct(col("n_with"), col("sh"))).as("top"))
-        .join(broadcast(nSrc), Seq("source"))
-        .select(col("source"), col("top.sh").as("top_gram"),
-          col("top.n_with").as("n_docs_with"), col("n_docs"),
-          pround(col("top.n_with").cast("double")
-            / col("n_docs").cast("double"), 9).as("coverage"))
-        .orderBy(col("source"))
-    }),
-
-    "q333_threshold_curve" -> ((s, dir) => {
-      // dedup threshold sensitivity curve [EXT] — how many near-dup
-      // pairs each Jaccard cutoff would flag: the curve an operator
-      // reads BEFORE committing to a threshold (a cliff between 0.5
-      // and 0.7 means the corpus has a natural dup/distinct gap; a
-      // smooth slope means any cutoff is arbitrary). One pass of the
-      // q34 gram-blocked pair machinery at the LOWEST cutoff, then
-      // all five counts as conditional sums in ONE 1-row agg (q302's
-      // unpivot shape) — the pair frame is computed once, never per
-      // threshold.
-      val ts = Seq(0.1, 0.3, 0.5, 0.7, 0.9)
-      val pairs = Dedup.ngramJaccardPairs(
-        Tables.documents(s, dir).filter(col("doc_id") < 200),
-        col("text"), col("doc_id"), k = 2, minJaccard = 0.1)
-      val aggs = ts.map(t =>
-        sum(when(col("jaccard") >= t, 1L).otherwise(0L))
-          .as(s"c${(t * 10).toInt}"))
-      val wide = pairs.agg(aggs.head, aggs.tail: _*)
-      wide.select(explode(array(ts.map(t =>
-          struct(lit(t).as("threshold"),
-            coalesce(col(s"c${(t * 10).toInt}"), lit(0L))
-              .as("n_pairs"))): _*)).as("r"))
-        .select(col("r.threshold").as("threshold"), col("r.n_pairs").as("n_pairs"))
-        .orderBy(col("threshold"))
-    }),
-
-    "q334_fd_histogram" -> ((s, dir) => {
-      // Freedman–Diaconis auto-binned histogram per type [EXT] — the
-      // binning RULE (width = 2·IQR/n^⅓) instead of q166's fixed bin
-      // count: the statistically-sized histogram that adapts to spread
-      // and sample size. IQR from the histogram-refinement selector;
-      // width pround(9) so the bin edges are engine-identical; the
-      // mode bin closes via max-struct argmax (count, then LOWEST bin
-      // on ties), never a rank window.
-      val ev = Dedup.cacheScoped(Tables.events(s, dir)
-        .select(col("event_type"), col("value")))
-      val iqr = graft.operators.Selection.exactGroupedQuantiles(
-          ev, "event_type", "value", Seq(0.25, 0.75))
-        .groupBy(col("event_type"))
-        .agg((max(when(col("q") === 0.75, col("value")))
-          - max(when(col("q") === 0.25, col("value")))).as("iqr"))
-      val st = ev.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), min(col("value")).as("mn"),
-          max(col("value")).as("mx"))
-        .join(iqr, Seq("event_type"))
-        .withColumn("h", pround(lit(2.0) * col("iqr")
-          / pow(col("n").cast("double"), 1.0 / 3.0), 9))
-        .filter(col("h") > 0)
-      val binned = ev.join(broadcast(st), Seq("event_type"))
-        .withColumn("bin", least(floor((col("value") - col("mn")) / col("h")),
-          floor((col("mx") - col("mn")) / col("h"))).cast("long"))
-        .groupBy(col("event_type"), col("n"), col("iqr"), col("h"), col("bin"))
-        .agg(count(lit(1)).as("cnt"))
-      binned.groupBy(col("event_type"), col("n"), col("iqr"), col("h"))
-        .agg(count(lit(1)).as("n_bins"),
-          max(struct(col("cnt").as("c"), (-col("bin")).as("nb"))).as("top"))
-        .select(col("event_type"), col("n"), pround(col("iqr"), 9).as("iqr"),
-          col("h").as("bin_width"), col("n_bins"),
-          col("top.c").as("mode_count"), (-col("top.nb")).as("mode_bin"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q335_oov_rate" -> ((s, dir) => {
-      // out-of-vocabulary rate per source [EXT] — tokenizer coverage
-      // against the corpus head vocabulary (top-1000 words): a source
-      // whose OOV rate is high either needs its own vocab budget or
-      // is noise (q298 prices tokens; this prices COVERAGE). The
-      // vocab head is a hash-agg + TakeOrderedAndProject broadcast;
-      // the per-source rate is one left-anti-flavored join (broadcast
-      // hash, null ⇒ OOV) over the exploded token frame.
-      val words = Dedup.cacheScoped(Tables.documents(s, dir)
-        .select(col("source"), explode(split(lower(col("text")), " ")).as("w"))
-        .filter(length(col("w")) > 0))
-      val vocab = words.groupBy(col("w")).agg(count(lit(1)).as("f"))
-        .orderBy(desc("f"), col("w")).limit(1000)
-        .select(col("w"), lit(1L).as("in_vocab"))
-      words.join(broadcast(vocab), Seq("w"), "left")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_tokens"),
-          sum(when(col("in_vocab").isNull, 1L).otherwise(0L)).as("n_oov"))
-        .select(col("source"), col("n_tokens"), col("n_oov"),
-          pround(col("n_oov").cast("double") / col("n_tokens").cast("double"), 9)
-            .as("oov_rate"))
-        .orderBy(col("source"))
-    }),
-
-    "q336_fanout_audit" -> ((s, dir) => {
-      // join-fanout audit (orders ⋈ lineitem) [EXT] — the pre-flight
-      // that predicts whether a join EXPLODES: per-key match counts
-      // (childless keys included at 0 via the left join), max / mean /
-      // exact P99 fanout (selector — no per-group buffer), and the
-      // count of keys fanning out past 2× the mean (the skew tail a
-      // salted join would target). One grouped count + tiny closes.
-      val o = Tables.orders(s, dir).select(col("o_orderkey"))
-      val li = Tables.lineitem(s, dir).select(col("l_orderkey"))
-      // r19 (guide §2.3, aggregate before you shuffle): lineitem rolls
-      // up to per-key counts BEFORE the join, so the exchange carries
-      // one row per key instead of every lineitem row; summing the
-      // pre-counts per o_orderkey group reproduces the old per-row
-      // conditional count exactly (childless keys coalesce to 0).
-      val cnt = li.groupBy(col("l_orderkey")).agg(count(lit(1)).as("c"))
-      val fan = Dedup.cacheScoped(o.join(cnt,
-          o("o_orderkey") === cnt("l_orderkey"), "left")
-        .groupBy(col("o_orderkey"))
-        .agg(sum(coalesce(col("c"), lit(0L))).as("fanout"))
-        .select(lit("all").as("g"), col("fanout")))
-      val p99 = graft.operators.Selection.exactGroupedQuantiles(
-          fan, "g", "fanout", Seq(0.99))
-        .select(col("value").as("p99"))
-      val st = fan.agg(count(lit(1)).as("n_keys"),
-        sum(col("fanout")).as("n_rows"), max(col("fanout")).as("max_fanout"))
-      val mean = col("n_rows").cast("double") / col("n_keys").cast("double")
-      val over = fan.crossJoin(broadcast(st))
-        .filter(col("fanout").cast("double") > lit(2.0) * mean)
-        .agg(count(lit(1)).as("n_keys_over_2x"))
-      st.crossJoin(broadcast(p99)).crossJoin(broadcast(over))
-        .select(col("n_keys"), col("n_rows"), col("max_fanout"),
-          pround(mean, 9).as("mean_fanout"),
-          pround(col("p99"), 9).as("p99_fanout"), col("n_keys_over_2x"))
-    }),
-
-    "q337_phash_dedup" -> ((s, dir) => {
-      // perceptual-hash near-dup over REAL pixels (r15 promotion of the
-      // stub hash input — the last honest stub in the multimodal row):
-      // per doc a real 8×8 black/white PNG is ENCODED whose cell
-      // pattern encodes p = (doc_id/4) % 64 in a 10×-repetition code
-      // (cells 0–59; 60–61 forced bright and 62–63 forced dark keep
-      // the aHash mean strictly interior) and whose variant
-      // v = doc_id % 4 flips a fixed cell set (∅/{7}/{13,47}/
-      // {5,23,58}). JdkImageCodec.averagePHash64 recovers the 64-bit
-      // average hash from ACTUAL decoded pixels. TWO TIERS, the
-      // production image-dedup structure: identical hashes collapse in
-      // an exact self-equi-join FIRST (hamming-0 pairs, one shuffle on
-      // the hash), and the 4×16-bit Hamming band join (pigeonhole: ≤3
-      // flips leave ≥1 band intact, so it provably finds EVERY pair at
-      // hamming ≤ 3) runs over DISTINCT hashes only — on a real crawl
-      // the dominant collision mass (blank pages, logos, tracking
-      // pixels: byte-identical renders) never enters the candidate
-      // join, whose size becomes Σ|distinct-hash band bucket|², not
-      // Σ|doc band bucket|². Distinct p's differ in ≥10 cells, minus
-      // ≤6 variant flips still > 3 — so ONLY same-p pairs with variant
-      // symmetric-difference ≤ 3 survive, which is exactly the
-      // arithmetic the oracle replays. A decode slip, wrong grid mean,
-      // bit-order bug, or banding break changes the pair set and the
-      // hash.
-      val gen = udf((id: Long) => {
-        val p = ((id / 4) % 64).toInt
-        val flips: Set[Int] = (id % 4).toInt match {
-          case 0 => Set.empty
-          case 1 => Set(7)
-          case 2 => Set(13, 47)
-          case _ => Set(5, 23, 58)
-        }
-        val img = new java.awt.image.BufferedImage(8, 8,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        for (i <- 0 until 64) {
-          val base = if (i < 60) ((p >> (i / 10)) & 1) == 1 else i < 62
-          val bright = base ^ flips.contains(i)
-          img.setRGB(i % 8, i / 8, if (bright) 0xFFFFFF else 0x000000)
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        bos.toByteArray
-      })
-      val ph64 = udf((b: Array[Byte]) =>
-        graft.operators.Multimodal.JdkImageCodec.averagePHash64(b)
-          .map(java.lang.Long.valueOf).orNull)
-      Dedup.phashNearDups(Tables.documentsFanned(s, dir)
-          .select(col("doc_id"), ph64(gen(col("doc_id"))).as("phash")))
-        .orderBy(col("hamming"), col("key_a"), col("key_b")).limit(50)
-    }),
-
-    "q338_quality_yield" -> ((s, dir) => {
-      // quality-threshold yield matrix per source [EXT] — how many
-      // docs and tokens survive each quality bar, per source: the
-      // mixture designer's trade-off table (q301 fixes ONE cascade;
-      // this sweeps the quality knob — a source whose token yield
-      // collapses at 0.4 can't fund its mixture weight at that bar).
-      // One codegen scan; all 4 thresholds × 2 measures as conditional
-      // exact-long sums in ONE grouped agg (q302's unpivot shape) —
-      // never a docs×thresholds join. Gates compare the pround(9)
-      // score to the literal bar — engine-exact boundaries.
-      val ts = Seq(0.2, 0.4, 0.6, 0.8)
-      val d = Tables.documents(s, dir).select(col("source"),
-        pround(TextAnalysis.qualityScore(col("text")), 9).as("q"),
-        TextAnalysis.wsTokenCount(col("text")).cast("long").as("ws"))
-      val aggs = Seq(count(lit(1)).as("n"), sum(col("ws")).as("tok")) ++
-        ts.flatMap(t => Seq(
-          sum(when(col("q") >= t, 1L).otherwise(0L)).as(s"d${(t * 10).toInt}"),
-          sum(when(col("q") >= t, col("ws")).otherwise(0L))
-            .as(s"t${(t * 10).toInt}")))
-      val wide = d.groupBy(col("source")).agg(aggs.head, aggs.tail: _*)
-      wide.select(col("source"), col("n"), col("tok"),
-          explode(array(ts.map(t => struct(lit(t).as("threshold"),
-            col(s"d${(t * 10).toInt}").as("n_docs_kept"),
-            col(s"t${(t * 10).toInt}").as("tokens_kept"))): _*)).as("r"))
-        .select(col("source"), col("r.threshold").as("threshold"),
-          col("r.n_docs_kept").as("n_docs_kept"),
-          col("r.tokens_kept").as("tokens_kept"),
-          pround(col("r.tokens_kept").cast("double")
-            / col("tok").cast("double"), 9).as("token_yield"))
-        .orderBy(col("source"), col("threshold"))
-    }),
-
-    "q339_sla_trend" -> ((s, dir) => {
-      // daily P95 SLA trend per type [EXT] — the exact per-(type, day)
-      // P95 of value and the days breaching 1.2× the type's OVERALL
-      // P95: the latency-SLA report shape, and the selector exercised
-      // at COMPOSITE-group scale (types×days groups through one
-      // histogram-refinement pass — the regime where q55's per-group
-      // buffer would hold a day of values per task). Breach compares
-      // ROUNDED P95s, engine-exact.
-      val ev = Dedup.cacheScoped(Tables.events(s, dir)
-        .select(col("event_type"), to_date(col("ts")).as("day"), col("value")))
-      val byDay = graft.operators.Selection.exactGroupedQuantiles(
-          ev.select(concat_ws("|", col("event_type"), col("day")).as("g"),
-            col("value")), "g", "value", Seq(0.95))
-        .select(split(col("g"), "\\|").getItem(0).as("event_type"),
-          split(col("g"), "\\|").getItem(1).cast("date").as("day"),
-          pround(col("value"), 9).as("p95"))
-      val overall = graft.operators.Selection.exactGroupedQuantiles(
-          ev.select(col("event_type").as("g"), col("value")), "g", "value",
-          Seq(0.95))
-        .select(col("g").as("event_type"), pround(col("value"), 9).as("p95_all"))
-      byDay.join(broadcast(overall), Seq("event_type"))
-        .groupBy(col("event_type"), col("p95_all"))
-        .agg(count(lit(1)).as("n_days"),
-          sum(when(col("p95") > pround(lit(1.2) * col("p95_all"), 9), 1L)
-            .otherwise(0L)).as("n_breach_days"),
-          pround(max(col("p95")), 9).as("max_daily_p95"))
-        .select(col("event_type"), col("n_days"), col("n_breach_days"),
-          col("p95_all").as("overall_p95"), col("max_daily_p95"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q340_effective_tokens" -> ((s, dir) => {
-      // effective training tokens [EXT] — the capstone yield scalar a
-      // curation run reports: of the raw corpus tokens, what survives
-      // exact dedup (q308's keep-first), then the quality bar (q338's
-      // 0.4 gate), then context truncation at 1024 (q302's policy) —
-      // the number that actually funds a token budget. One scan
-      // builds per-doc (hash, quality, ws); one min-per-hash agg; the
-      // cascade closes as conditional exact-long sums in a 1-row agg.
-      val d = Dedup.cacheScoped(Tables.documents(s, dir).select(
-        col("doc_id"), md5(col("text")).as("h"),
-        pround(TextAnalysis.qualityScore(col("text")), 9).as("q"),
-        TextAnalysis.wsTokenCount(col("text")).cast("long").as("ws")))
-      val keep = d.groupBy(col("h")).agg(min(col("doc_id")).as("keep_id"))
-      d.join(keep, Seq("h"))
-        .withColumn("kept", col("doc_id") === col("keep_id"))
-        .withColumn("qual", col("kept") && col("q") >= 0.4)
-        .agg(sum(col("ws")).as("raw_tokens"),
-          sum(when(col("kept"), col("ws")).otherwise(0L)).as("after_dedup"),
-          sum(when(col("qual"), col("ws")).otherwise(0L)).as("after_quality"),
-          sum(when(col("qual"), least(col("ws"), lit(1024L))).otherwise(0L))
-            .as("effective_tokens"))
-        .select(col("raw_tokens"), col("after_dedup"), col("after_quality"),
-          col("effective_tokens"),
-          pround(col("effective_tokens").cast("double")
-            / col("raw_tokens").cast("double"), 9).as("overall_yield"))
-    }),
-
-    "q341_bpe_merges" -> ((s, dir) => {
-      // BPE merge learning, 5 steps [EXT] — the ACTUAL tokenizer-
-      // training inner loop (Sennrich et al.) run distributed: start
-      // from characters, repeatedly count adjacent-token pairs across
-      // the corpus and merge the most frequent one (ties: lexicographic
-      // min pair — fully deterministic). Each round is ONE corpus-wide
-      // pair-count agg + a 1-ROW driver collect (the argmax — the
-      // q198 bounded tier, 5 rows total) + a map-side token-boundary
-      // replace (' a b '→' ab ' on the space-sentinel string — the
-      // left-to-right non-overlapping semantics Java, DuckDB and
-      // Python's str.replace share, verified by a three-way parity
-      // prototype). The oracle unrolls the IDENTICAL five rounds as
-      // generated CTEs. q298 PRICES a fixed tokenizer; this LEARNS
-      // one. Oracle-tier doc_id < 100 / 200-char bound (q164's
-      // discipline — the shape is linear in corpus size).
-      var corpus = Dedup.cacheScoped(Tables.documents(s, dir)
-        .filter(col("doc_id") < 100)
-        .select(col("doc_id"), array_join(regexp_extract_all(
-          lower(substring(col("text"), 1, 200)), lit("[a-z]"), lit(0)), " ")
-          .as("s")))
-      val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-      for (r <- 1 to 5) {
-        val top = corpus
-          .withColumn("t", split(col("s"), " "))
-          .filter(size(col("t")) >= 2)
-          .select(explode(expr(
-            "transform(sequence(0, size(t)-2), i -> concat(t[i], ' ', t[i+1]))"))
-            .as("pair"))
-          .groupBy(col("pair")).agg(count(lit(1)).as("cnt"))
-          .orderBy(desc("cnt"), col("pair")).limit(1)
-          .collect()(0)
-        val pair = top.getString(0); val cnt = top.getLong(1)
-        val merged = pair.replace(" ", "")
-        merges += ((r, pair, merged, cnt))
-        corpus = Dedup.cacheScoped(corpus.select(col("doc_id"),
-          trim(expr(s"replace(concat(' ', s, ' '), ' $pair ', ' $merged ')"))
-            .as("s")))
-      }
-      import s.implicits._
-      merges.toSeq.toDF("merge_rank", "pair", "merged", "cnt")
-        .select(col("merge_rank").cast("int").as("merge_rank"), col("pair"),
-          col("merged"), col("cnt"))
-        .orderBy(col("merge_rank"))
-    }),
-
-    "q342_haar_energy" -> ((s, dir) => {
-      // Haar wavelet energy profile of the daily series [EXT] — which
-      // TIMESCALE carries the volume signal: 5 levels of the
-      // unnormalized Haar transform (pairwise sums/differences —
-      // ALL-INTEGER, so engine parity is exact by construction, the
-      // q309 discipline), zero-padded to 32 days; per level the
-      // detail-coefficient energy Σd² and the largest |d| with its
-      // position (a spike at level 1 = day-to-day noise; at level 4 =
-      // a two-week regime shift — the multiresolution complement to
-      // q238's ACF). Each level is one groupBy(i/2) agg on a
-      // ≤32-row frame; the SHAPE (pairwise reduction) is the log-depth
-      // scan that works at any series length.
-      // r19: the 5-level walk runs on the DRIVER over the collected
-      // ≤32-long padded series (the q345/q198 calendar-bounded driver
-      // tier — one tiny collect instead of 5 per-level collect+persist
-      // round-trips on a ≤32-row frame; all arithmetic stays the same
-      // exact longs, so parity is unchanged by construction).
-      val daily = Tables.events(s, dir)
-        .groupBy(to_date(col("ts")).as("day")).agg(count(lit(1)).as("x"))
-      val lo = daily.agg(min(col("day")).as("lo"))
-      val idx = daily.crossJoin(broadcast(lo))
-        .select(datediff(col("day"), col("lo")).cast("long").as("i"), col("x"))
-        // ≤ |calendar days| rows by construction (one per distinct day,
-        // ≤365·years — the q309 calendar bound), never corpus-sized
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      var cur = Array.tabulate(32)(i => idx.getOrElse(i.toLong, 0L))
-      val out = scala.collection.mutable.ArrayBuffer[(Int, Long, Long, Long, Long)]()
-      for (level <- 1 to 5) {
-        val n = cur.length / 2
-        val sums = Array.tabulate(n)(j => cur(2 * j) + cur(2 * j + 1))
-        val dets = Array.tabulate(n)(j => cur(2 * j) - cur(2 * j + 1))
-        var energy = 0L; var maxAbs = Long.MinValue; var arg = 0L
-        for (j <- 0 until n) {
-          val d = dets(j); val ad = math.abs(d)
-          energy += d * d
-          // max(struct(abs(d), -j)): larger |d| wins, ties to smaller j
-          if (ad > maxAbs) { maxAbs = ad; arg = j.toLong }
-        }
-        out += ((level, n.toLong, energy, maxAbs, arg))
-        cur = sums
-      }
-      import s.implicits._
-      out.toSeq
-        .toDF("level", "n_coeffs", "energy", "max_abs_detail", "argmax_idx")
-        .orderBy(col("level"))
-    }),
-
-    "q343_rolling_wau" -> ((s, dir) => {
-      // rolling 7-day active users (WAU), daily [EXT] — THE product
-      // dashboard headline, and a distinct-count that does NOT
-      // decompose over windows (you can't sum daily distincts): each
-      // calendar day joins the distinct (user, day) frame over a
-      // 7-day offset explode — the window materializes as 7 equi-join
-      // rows per active pair, never a per-day rescan; the distinct
-      // close is one hash-agg. Exact integers throughout.
-      val ud = Dedup.cacheScoped(Tables.events(s, dir)
-        .select(col("user_id"), to_date(col("ts")).as("day")).distinct())
-      val days = ud.select(col("day")).distinct()
-      val window7 = ud.select(col("user_id"),
-          explode(sequence(lit(0), lit(6))).as("off"), col("day"))
-        .select(col("user_id"), date_add(col("day"), col("off")).as("asof"))
-        .distinct()
-      days.join(window7, days("day") === window7("asof"))
-        .groupBy(col("day")).agg(count(lit(1)).as("wau"))
-        .join(ud.groupBy(col("day")).agg(countDistinct(col("user_id")).as("dau")),
-          Seq("day"))
-        .select(col("day"), col("dau"), col("wau"),
-          pround(col("wau").cast("double") / col("dau").cast("double"), 9)
-            .as("wau_dau_ratio"))
-        .orderBy(col("day"))
-    }),
-
-    "q344_rfm" -> ((s, dir) => {
-      // RFM segmentation [EXT] — the classic churn/value feature
-      // triple: per user Recency (days since last event), Frequency
-      // (event count), Monetary (exact centi-sum of value), each cut
-      // into terciles by the two-pass dense-id rank (never an ntile
-      // global window — q319's discipline), composed into the 27
-      // R·F·M segments with counts and per-segment means. Output is
-      // the segment SUMMARY (≤27 rows); the per-user frame never
-      // leaves the executors.
-      val D = DecimalType(38, 0)
-      val asOf = to_date(lit("2024-02-01"))
-      val u = Tables.events(s, dir).groupBy(col("user_id"))
-        .agg(max(col("ts")).as("last_ts"), count(lit(1)).as("freq"),
-          sum(floor(col("value") * 100 + 0.5).cast(D)).as("mon"))
-        .withColumn("rec", datediff(asOf, to_date(col("last_ts"))).cast("long"))
-        .drop("last_ts")
-      def tercile(df: DataFrame, c: String, asc: Boolean): DataFrame = {
-        val ord = if (asc) struct(col(c), col("user_id"))
-          else struct(-col(c), col("user_id"))
-        // r19: the user count rides out of the dense-id counts pass for
-        // free — the former ranked.agg(count) job (one full re-scan of
-        // the checkpointed frame per tercile, ×3) is gone
-        val (ranked, nu) = graft.operators.DocPipeline
-          .withDenseIdsAndCount(df, ord, "rid")
-        ranked
-          .withColumn(s"${c}_score",
-            (col("rid") * 3 / lit(nu)).cast("int") + 1)
-          .drop("rid")
-      }
-      // recency: LOWER is better → asc rank gives score 1 = most recent
-      // (score 3 = stale); freq/monetary: HIGHER is better → desc rank
-      val scored = tercile(tercile(tercile(u, "rec", asc = true),
-        "freq", asc = false), "mon", asc = false)
-      scored.groupBy(col("rec_score"), col("freq_score"), col("mon_score"))
-        .agg(count(lit(1)).as("n_users"), sum(col("rec")).as("sr"),
-          sum(col("freq")).as("sf"), sum(col("mon")).as("sm"))
-        .select(col("rec_score"), col("freq_score"), col("mon_score"),
-          col("n_users"),
-          pround(col("sr").cast("double") / col("n_users").cast("double"), 9)
-            .as("avg_recency_days"),
-          pround(col("sf").cast("double") / col("n_users").cast("double"), 9)
-            .as("avg_frequency"),
-          pround(col("sm").cast("double") / 100.0
-            / col("n_users").cast("double"), 9).as("avg_monetary"))
-        .orderBy(col("rec_score"), col("freq_score"), col("mon_score"))
-    }),
-
-    "q345_holt_forecast" -> ((s, dir) => {
-      // Holt double-exponential smoothing (α=0.3, β=0.1) on the daily
-      // volume [EXT] — the trend-aware forecaster between q282's EWMA
-      // (level only) and q248's MASE (which EVALUATES forecasts):
-      // level/trend recurrences over the calendar-bounded series, so
-      // the walk runs on the DRIVER (q198/q299 tier) with floor(12)
-      // after every accumulation while the oracle replays the
-      // IDENTICAL recursion as a recursive CTE — mirrored doubles
-      // step for step. One-step-ahead SSE is the in-sample fit;
-      // forecast_next7 = Σ_{h=1..7}(l + h·b) = 7l + 28b projects the
-      // next week's volume.
-      val rows = Tables.events(s, dir)
-        .groupBy(to_date(col("ts")).as("day")).agg(count(lit(1)).as("x"))
-        .orderBy(col("day")).collect().map(_.getLong(1).toDouble)
-      import s.implicits._
-      if (rows.length < 2) {
-        Seq.empty[(Long, Double, Double, Double, Double)]
-          .toDF("n_days", "level", "trend", "sse", "forecast_next7")
-      } else {
-        def r12(v: Double) = math.floor(v * 1e12 + 0.5) / 1e12
-        def r9(v: Double) = math.floor(v * 1e9 + 0.5) / 1e9
-        var l = rows(0); var b = rows(1) - rows(0); var sse = 0.0
-        for (t <- 1 until rows.length) {
-          val p = l + b
-          val e = rows(t) - p
-          val l2 = r12(0.3 * rows(t) + 0.7 * (l + b))
-          b = r12(0.1 * (l2 - l) + 0.9 * b)
-          l = l2
-          sse = r12(sse + e * e)
-        }
-        Seq((rows.length.toLong, r9(l), r9(b), r9(sse), r9(7 * l + 28 * b)))
-          .toDF("n_days", "level", "trend", "sse", "forecast_next7")
-      }
-    }),
-
-    "q346_ipf_raking" -> ((s, dir) => {
-      // iterative proportional fitting (raking), 3 half-steps [EXT] —
-      // the survey-calibration workhorse q245's post-stratification
-      // can't replace when TWO margins must hold at once: reweight the
-      // event_type × weekday cell counts so weekdays become UNIFORM
-      // (the "what if traffic were day-balanced" counterfactual) while
-      // type totals stay fixed. Column-fit → row-fit → column-fit;
-      // each half-step is one margin agg (r12'd cells sum in exact
-      // DECIMAL — order-free) + a broadcast factor join. The oracle
-      // unrolls the identical three CTE rounds. Output: the ≤7·|types|
-      // cell frame with final weights and the residual column error.
-      // r19: the 3 half-steps run on the DRIVER over the collected
-      // ≤7·|types| cell frame (the q342/q345 bounded-frame driver tier —
-      // one agg job + one tiny collect instead of 3 margin aggs, 4
-      // broadcast joins and their stages). Arithmetic mirrors the old
-      // distributed plan EXACTLY: msum's double→DECIMAL(27,14) cast is
-      // BigDecimal.valueOf(m).setScale(14, HALF_UP) (the Graph
-      // localPageRank mirror), sums are exact decimal (order-free),
-      // pround's floor form is replicated with its 2^52 passthrough
-      // branch — so every fitted weight is bit-identical.
-      import java.math.{BigDecimal => JBD, RoundingMode}
-      def msumD(vs: Iterable[Double]): Double =
-        vs.foldLeft(JBD.ZERO)((a, v) =>
-          a.add(JBD.valueOf(v).setScale(14, RoundingMode.HALF_UP)))
-          .doubleValue()
-      def prD(x: Double, scale: Int): Double = proundD(x, scale)
-      val cells = Tables.events(s, dir)
-        .groupBy(col("event_type"),
-          dayofweek(col("ts")).cast("long").as("dow"))
-        .agg(count(lit(1)).as("n"))
-        // ≤ 7·|event_types| rows by construction — dow has 7 values and
-        // event_type is a closed small enum in this schema (the bound
-        // holds as long as that stays true; a high-cardinality type
-        // column would need the distributed half-steps back)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      val nn = cells.map(_._3).sum
-      val rowT = cells.groupBy(_._1).map { case (t, g) => t -> g.map(_._3).sum }
-      val colT = nn.toDouble / 7.0
-      var m: Map[(String, Long), Double] =
-        cells.map { case (t, d, n) => (t, d) -> n.toDouble }.toMap
-      def colFitD(): Unit = {
-        val cs = m.groupBy(_._1._2).map { case (d, g) => d -> msumD(g.values) }
-        m = m.map { case (k, v) => k -> prD(v * colT / cs(k._2), 12) }
-      }
-      def rowFitD(): Unit = {
-        val rs = m.groupBy(_._1._1).map { case (t, g) => t -> msumD(g.values) }
-        m = m.map { case (k, v) =>
-          k -> prD(v * rowT(k._1).toDouble / rs(k._1), 12) }
-      }
-      colFitD(); rowFitD(); colFitD()
-      import s.implicits._
-      cells.toSeq.map { case (t, d, n) =>
-          val mv = m((t, d))
-          (t, d, n, prD(mv, 9), prD(mv / n.toDouble, 9))
-        }
-        .toDF("event_type", "dow", "n", "fitted", "weight")
-        .orderBy(col("event_type"), col("dow"))
-    }),
-
-    "q347_capture_recapture" -> ((s, dir) => {
-      // Chapman capture–recapture population estimate [EXT] — "how
-      // many users EXIST given two overlapping activity samples":
-      // N̂ = (n₁+1)(n₂+1)/(m+1) − 1 from the week-1 and week-2 active
-      // sets — the ecology estimator that doubles as a coverage check
-      // for observability pipelines (does a week of logs see the whole
-      // population?). Three distinct-count aggs + one semi-join
-      // overlap — exact integers until the single division; compared
-      // against the OBSERVED distinct total.
-      val ev = Dedup.cacheScoped(Tables.events(s, dir)
-        .select(col("user_id"), to_date(col("ts")).as("day")))
-      val w1 = ev.filter(col("day").between(lit("2024-01-02"), lit("2024-01-08")))
-        .select(col("user_id")).distinct()
-      val w2 = ev.filter(col("day").between(lit("2024-01-09"), lit("2024-01-15")))
-        .select(col("user_id")).distinct()
-      val n1 = w1.agg(count(lit(1)).as("n1"))
-      val n2 = w2.agg(count(lit(1)).as("n2"))
-      val m = w1.join(w2, Seq("user_id"), "left_semi")
-        .agg(count(lit(1)).as("m"))
-      val truth = ev.select(col("user_id")).distinct()
-        .agg(count(lit(1)).as("n_observed"))
-      n1.crossJoin(n2).crossJoin(m).crossJoin(truth)
-        .select(col("n1"), col("n2"), col("m"), col("n_observed"),
-          pround((col("n1") + 1).cast("double") * (col("n2") + 1).cast("double")
-            / (col("m") + 1).cast("double") - 1.0, 9).as("chapman_estimate"))
-    }),
-
-    "q348_bm25f" -> ((s, dir) => {
-      // BM25F two-field retrieval [EXT] — the fielded extension of
-      // q169 (Robertson–Zaragoza simplified form): a hit in the TITLE
-      // (first 100 chars — the fixture's stand-in for a structured
-      // title field) weighs 2× a body hit, each field length-
-      // normalized against its own corpus average BEFORE the k1
-      // saturation — the shape every product search engine runs.
-      // Same posting-list economics as q169: one tokenize pass per
-      // field, only the 3 query terms' postings reach the scoring
-      // join, field stats ride a scalar broadcast. Per-term scores
-      // pround(12) → exact DECIMAL sum, top-20 TakeOrderedAndProject.
-      val terms = Seq("spark", "join", "scan")
-      def toks(c: Column) = explode(split(c, " "))
-      val docs = Dedup.cacheScoped(Tables.documents(s, dir)
-        .select(col("doc_id"), substring(col("text"), 1, 100).as("title"),
-          substring(col("text"), 101, 1000000).as("body")))
-      def field(c: String) = Dedup.cacheScoped(docs
-        .select(col("doc_id"), toks(col(c)).as("w"))
-        .filter(length(col("w")) > 0))
-      val tw = field("title"); val bw = field("body")
-      def dl(df: DataFrame) = df.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-      val tdl = dl(tw); val bdl = dl(bw)
-      val st = tdl.agg(sum(col("dl")).as("t_tot"), count(lit(1)).as("t_n"))
-        .crossJoin(bdl.agg(sum(col("dl")).as("b_tot"), count(lit(1)).as("b_n")))
-      def tf(df: DataFrame) = df.filter(col("w").isin(terms: _*))
-        .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
-      val joined = tf(tw).withColumnRenamed("tf", "tf_t")
-        .join(tf(bw).withColumnRenamed("tf", "tf_b"), Seq("doc_id", "w"),
-          "full_outer")
-        .join(tdl.withColumnRenamed("dl", "dl_t"), Seq("doc_id"), "left")
-        .join(bdl.withColumnRenamed("dl", "dl_b"), Seq("doc_id"), "left")
-        .crossJoin(broadcast(st))
-      val nDocs = col("t_n").cast("double")
-      val avT = col("t_tot").cast("double") / col("t_n")
-      val avB = col("b_tot").cast("double") / col("b_n")
-      val normT = coalesce(col("tf_t"), lit(0L)).cast("double") /
-        (lit(0.25) + lit(0.75) * coalesce(col("dl_t"), lit(0L)) / avT)
-      val normB = coalesce(col("tf_b"), lit(0L)).cast("double") /
-        (lit(0.25) + lit(0.75) * coalesce(col("dl_b"), lit(0L)) / avB)
-      val tfc = lit(2.0) * normT + normB
-      val dfq = joined.groupBy(col("w")).agg(count(lit(1)).as("df"))
-      joined.join(broadcast(dfq), Seq("w"))
-        .withColumn("sterm", pround(
-          log((nDocs - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-            * tfc / (lit(1.2) + tfc), 12))
-        .groupBy(col("doc_id"))
-        .agg(pround(sum(col("sterm").cast(DecimalType(27, 14))).cast("double"), 9)
-          .as("bm25f"))
-        .orderBy(desc("bm25f"), col("doc_id")).limit(20)
-    }),
-
-    "q349_ccf_lag" -> ((s, dir) => {
-      // cross-correlation lag finder [EXT] — at what LAG does the
-      // click series best predict purchases: Pearson r of
-      // (clicks(d), purchases(d+τ)) for τ ∈ [−7, 7] — the LINEAR
-      // complement to q309's DTW (which warps; this finds the single
-      // best shift, the marketing "conversion delay" scalar). Each
-      // lag is an equi-join on the shifted day (the q238 ACF shape
-      // generalized to two series); moments are exact DECIMAL sums of
-      // integer counts, r closes in pure IEEE (q103's closed form),
-      // argmax total-ordered by (|r| desc, τ).
-      val D = DecimalType(38, 0)
-      val daily = Dedup.cacheScoped(Tables.events(s, dir)
-        .filter(col("event_type").isin("click", "purchase"))
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("x")))
-      val a = daily.filter(col("event_type") === "click")
-        .select(col("day"), col("x").as("xa"))
-      val b = daily.filter(col("event_type") === "purchase")
-        .select(col("day"), col("x").as("xb"))
-      val lags = a.crossJoin(broadcast(
-          s.range(-7, 8).toDF("lag").select(col("lag").cast("int").as("lag"))))
-        .select(col("lag"), date_add(col("day"), col("lag")).as("day"),
-          col("xa"))
-        .join(b, Seq("day"))
-      def esum(c: Column) = sum(c.cast(D)).cast("double")
-      val st = lags.groupBy(col("lag"))
-        .agg(count(lit(1)).as("n"), esum(col("xa")).as("sa"),
-          esum(col("xb")).as("sb"), esum(col("xa") * col("xb")).as("sab"),
-          esum(col("xa") * col("xa")).as("saa"),
-          esum(col("xb") * col("xb")).as("sbb"))
-        .filter(col("n") > 2)
-      val nd = col("n").cast("double")
-      val r = (nd * col("sab") - col("sa") * col("sb")) /
-        sqrt((nd * col("saa") - col("sa") * col("sa"))
-          * (nd * col("sbb") - col("sb") * col("sb")))
-      st.select(col("lag"), col("n").as("n_days"), pround(r, 9).as("ccf"))
-        .orderBy(col("lag"))
-    }),
-
-    "q350_datasheet" -> ((s, dir) => {
-      // corpus datasheet [EXT] — the Datasheets-for-Datasets one-pager
-      // a published corpus ships with, assembled in two scans + tiny
-      // closes: size (docs/tokens), vocabulary, language composition
-      // (top language + its share), exact-dup rate, mean quality
-      // (pround'd terms in exact DECIMAL — order-free), and the
-      // dominant source with its token share. Every number is a
-      // composition of family primitives (q30 dup rate, q244
-      // concentration, q338 quality) — the report is ONE row a release
-      // pipeline can diff against the previous snapshot (q324).
-      val d = Dedup.cacheScoped(Tables.documents(s, dir).select(
-        col("doc_id"), col("lang"), col("source"), md5(col("text")).as("h"),
-        TextAnalysis.wsTokenCount(col("text")).cast("long").as("ws"),
-        pround(TextAnalysis.qualityScore(col("text")), 9).as("q")))
-      val base = d.agg(count(lit(1)).as("n_docs"), sum(col("ws")).as("n_tokens"),
-        countDistinct(col("h")).as("n_unique_docs"),
-        sum(col("q").cast(DecimalType(27, 10))).as("qsum"))
-      val vocabN = Tables.documents(s, dir)
-        .select(explode(split(lower(col("text")), " ")).as("w"))
-        .filter(length(col("w")) > 0)
-        .agg(countDistinct(col("w")).as("vocab_size"))
-      val topLang = d.groupBy(col("lang")).agg(count(lit(1)).as("nl"))
-        .orderBy(desc("nl"), col("lang")).limit(1)
-        .select(col("lang").as("top_lang"), col("nl"))
-      val topSrc = d.groupBy(col("source")).agg(sum(col("ws")).as("st"))
-        .orderBy(desc("st"), col("source")).limit(1)
-        .select(col("source").as("top_source"), col("st"))
-      base.crossJoin(broadcast(vocabN)).crossJoin(broadcast(topLang))
-        .crossJoin(broadcast(topSrc))
-        .select(col("n_docs"), col("n_tokens"), col("vocab_size"),
-          pround(lit(1.0) - col("n_unique_docs").cast("double")
-            / col("n_docs").cast("double"), 9).as("dup_rate"),
-          pround(col("qsum").cast("double") / col("n_docs").cast("double"), 9)
-            .as("mean_quality"),
-          col("top_lang"),
-          pround(col("nl").cast("double") / col("n_docs").cast("double"), 9)
-            .as("top_lang_share"),
-          col("top_source"),
-          pround(col("st").cast("double") / col("n_tokens").cast("double"), 9)
-            .as("top_source_token_share"))
-    }),
-
-    "q351_negbin_fit" -> ((s, dir) => {
-      // negative-binomial fit of daily counts per type [EXT] — q246's
-      // Fano factor SAYS the counts are overdispersed; this gives the
-      // PARAMETERS (method of moments: p = m/v, r = m²/(v−m)) that a
-      // capacity planner or synthetic-data generator actually uses.
-      // Exact integer moments over the calendar-bounded daily frame,
-      // Poisson fallback flagged when v ≤ m (NB undefined). One
-      // grouped agg + a |types|-row close.
-      val D = DecimalType(38, 0)
-      val daily = Tables.events(s, dir)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("x"))
-      val st = daily.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("x").cast(D)).as("sx"),
-          sum((col("x").cast(D) * col("x")).cast(D)).as("sxx"))
-        .filter(col("n") > 1)
-      val m = col("sx").cast("double") / col("n").cast("double")
-      val v = ((col("n").cast("double") * col("sxx").cast("double")
-        - col("sx").cast("double") * col("sx").cast("double"))
-        / (col("n").cast("double") * (col("n").cast("double") - 1.0)))
-      st.select(col("event_type"), col("n").as("n_days"),
-          pround(m, 9).as("mean"), pround(v, 9).as("variance"),
-          (v > m).as("overdispersed"),
-          when(v > m, pround(m / v, 9)).as("p_hat"),
-          when(v > m, pround(m * m / (v - m), 9)).as("r_hat"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q352_good_turing" -> ((s, dir) => {
-      // Good–Turing unseen-mass estimate per source [EXT] — the
-      // probability the NEXT token is a word never seen in this
-      // source: P₀ = n₁/N (singleton count over token count), the
-      // famous missing-mass estimator that tells a vocab designer how
-      // OPEN each source's vocabulary still is (q260 fits growth;
-      // q335 measures coverage of a FIXED head; this bounds what any
-      // finite vocab must miss). One tokenize pass, one (source,
-      // word) agg, exact integers to one division.
-      val words = Tables.documents(s, dir)
-        .select(col("source"), explode(split(lower(col("text")), " ")).as("w"))
-        .filter(length(col("w")) > 0)
-      words.groupBy(col("source"), col("w")).agg(count(lit(1)).as("f"))
-        .groupBy(col("source"))
-        .agg(sum(col("f")).as("n_tokens"), count(lit(1)).as("vocab"),
-          sum(when(col("f") === 1, 1L).otherwise(0L)).as("n_singletons"))
-        .select(col("source"), col("n_tokens"), col("vocab"),
-          col("n_singletons"),
-          pround(col("n_singletons").cast("double")
-            / col("n_tokens").cast("double"), 9).as("unseen_mass"))
-        .orderBy(col("source"))
-    }),
-
-    "q353_hash_collisions" -> ((s, dir) => {
-      // birthday audit of the 32-bit hash prefix [EXT] — the engine's
-      // md5-prefix idioms (q161 KMV, q306 shards, q307 sampling) rely
-      // on a 32-bit uniform; this VALIDATES that on live keys:
-      // observed colliding pairs Σ C(cnt,2) over 32-bit buckets vs
-      // the birthday expectation n(n−1)/2³³ — an observed/expected
-      // ratio far from 1 means the hash (or the keyspace) is not
-      // behaving. One hash-agg over the key frame, exact integers to
-      // the final ratio.
-      val h = Tables.lineitem(s, dir)
-        .select(conv(substring(md5(concat_ws("_", col("l_orderkey"),
-          col("l_linenumber"))), 1, 8), 16, 10).cast("long").as("b"))
-      val buckets = h.groupBy(col("b")).agg(count(lit(1)).as("cnt"))
-      buckets.agg(sum(col("cnt")).as("n"),
-          count(lit(1)).as("n_buckets"),
-          sum((col("cnt") * (col("cnt") - 1) / 2).cast("long")).as("observed"))
-        .select(col("n"), col("n_buckets"), col("observed"),
-          pround(col("n").cast("double") * (col("n").cast("double") - 1.0)
-            / 8589934592.0, 9).as("expected"),
-          when(col("observed") > 0,
-            pround(col("observed").cast("double")
-              / (col("n").cast("double") * (col("n").cast("double") - 1.0)
-                / 8589934592.0), 9)).as("obs_over_exp"))
-    }),
-
-    "q354_ivf_recall_curve" -> ((s, dir) => {
-      // IVF recall-vs-nprobe curve [EXT] — the tuning table an ANN
-      // deployment reads before fixing nprobe: exact recall@5 of the
-      // q188 trained-codebook IVF against the q36 brute-force truth at
-      // nprobe ∈ {1, 2, 3}. Every stage is deterministic (Lloyd's
-      // engine-exact trajectory, total-ordered ranks), so the whole
-      // CURVE is one oracle row set — approximate-search QUALITY
-      // measured inside the correctness gate, not just spec'd. The
-      // corpus assigns once; the three probe depths reuse the same
-      // lists (probe fan-out only re-filters).
-      val emb = Tables.embeddings(s, dir)
-      val (state, _) = Cluster.lloyd(emb, col("vec_id"), col("embedding"),
-        k = 8, iters = 2)
-      val q = emb.filter(col("vec_id") < 10)
-      val brute = Dedup.cacheScoped(Similarity.bruteForceTopK(
-          emb, col("vec_id"), col("embedding"),
-          q, col("vec_id"), col("embedding"), k = 5)
-        .select(col("query_id"), col("neighbor_id")))
-      val nTrue = brute.agg(count(lit(1)).as("n_true"))
-      val rows = Seq(1, 2, 3).map { np =>
-        val ivf = Cluster.ivfTopK(emb, col("vec_id"), col("embedding"),
-            q, col("vec_id"), col("embedding"), state, k = 5, nprobe = np)
-          .select(col("query_id"), col("neighbor_id"))
-        ivf.join(brute, Seq("query_id", "neighbor_id"), "left_semi")
-          .agg(count(lit(1)).as("n_hits"))
-          .select(lit(np).as("nprobe"), col("n_hits"))
-      }
-      rows.reduce(_ unionAll _)
-        .crossJoin(broadcast(nTrue))
-        .select(col("nprobe"), col("n_hits"), col("n_true"),
-          pround(col("n_hits").cast("double") / col("n_true").cast("double"), 9)
-            .as("recall_at_5"))
-        .orderBy(col("nprobe"))
-    }),
-
-    "q355_tail_dependence" -> ((s, dir) => {
-      // extremal tail dependence between click and purchase days [EXT]
-      // — q349's CCF measures AVERAGE linear coupling; capacity
-      // planning cares about the TAILS: when clicks spike past their
-      // P75, how often do purchases spike past theirs the SAME day
-      // (the empirical χ co-exceedance, and its independence baseline
-      // 1−q)? Day-level thresholds from the selector (exact),
-      // exceedance flags compare exact counts to ROUNDED thresholds,
-      // the 2×2 close is integer counts.
-      val daily = Dedup.cacheScoped(Tables.events(s, dir)
-        .filter(col("event_type").isin("click", "purchase"))
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("x")))
-      val thr = graft.operators.Selection.exactGroupedQuantiles(
-          daily.select(col("event_type").as("g"), col("x").cast("double")
-            .as("x")), "g", "x", Seq(0.75))
-        .select(col("g").as("event_type"), pround(col("value"), 9).as("q75"))
-      val flagged = daily.join(broadcast(thr), Seq("event_type"))
-        .select(col("day"), col("event_type"),
-          (col("x").cast("double") > col("q75")).cast("long").as("exc"))
-      val a = flagged.filter(col("event_type") === "click")
-        .select(col("day"), col("exc").as("ea"))
-      val b = flagged.filter(col("event_type") === "purchase")
-        .select(col("day"), col("exc").as("eb"))
-      a.join(b, Seq("day"))
-        .agg(count(lit(1)).as("n_days"), sum(col("ea")).as("n_click_exc"),
-          sum(col("eb")).as("n_purch_exc"),
-          sum(col("ea") * col("eb")).as("n_joint"))
-        .select(col("n_days"), col("n_click_exc"), col("n_purch_exc"),
-          col("n_joint"),
-          when(col("n_click_exc") > 0,
-            pround(col("n_joint").cast("double")
-              / col("n_click_exc").cast("double"), 9)).as("chi_hat"),
-          pround(col("n_purch_exc").cast("double")
-            / col("n_days").cast("double"), 9).as("independence_baseline"))
-    }),
-
-    "q356_runs_test" -> ((s, dir) => {
-      // Wald–Wolfowitz runs test on daily up/down moves [EXT] — is
-      // the volume series RANDOM or regime-y: too few runs = sticky
-      // regimes (momentum), too many = oscillation; the classic
-      // nonparametric randomness check the drift family (q207/q297)
-      // assumes but never tests. Signs from exact integer day-over-day
-      // diffs (zeros dropped, the standard treatment) on the
-      // calendar-bounded day frame (tiny-frame window exception);
-      // R, n₊, n₋ exact; z closes in IEEE with pround.
-      val daily = Tables.events(s, dir)
-        .groupBy(to_date(col("ts")).as("day")).agg(count(lit(1)).as("x"))
-      val w = Window.orderBy(col("day"))
-      val sgn = daily
-        .withColumn("d", col("x") - lag(col("x"), 1).over(w))
-        .filter(col("d").isNotNull && col("d") =!= 0)
-        .withColumn("s", when(col("d") > 0, 1L).otherwise(-1L))
-        .withColumn("prev", lag(col("s"), 1).over(w))
-      val st = sgn.agg(count(lit(1)).as("n"),
-        sum(when(col("s") === 1L, 1L).otherwise(0L)).as("np"),
-        sum(when(col("s") === -1L, 1L).otherwise(0L)).as("nm"),
-        (sum(when(col("prev").isNull || col("prev") =!= col("s"), 1L)
-          .otherwise(0L))).as("runs"))
-      val npd = col("np").cast("double"); val nmd = col("nm").cast("double")
-      val nd = col("n").cast("double")
-      val mu = lit(1.0) + lit(2.0) * npd * nmd / nd
-      val sg = sqrt((mu - 1.0) * (mu - 2.0) / (nd - 1.0))
-      st.filter(col("np") > 0 && col("nm") > 0 && col("n") > 2)
-        .select(col("n").as("n_moves"), col("np").as("n_up"),
-          col("nm").as("n_down"), col("runs"),
-          pround(mu, 9).as("expected_runs"),
-          pround((col("runs").cast("double") - mu) / sg, 9).as("z"))
-    }),
-
-    "q357_theil_decomposition" -> ((s, dir) => {
-      // Theil-T inequality decomposition of token mass [EXT] — the
-      // question q213's Gini and q319's Lorenz can't answer: is token
-      // inequality BETWEEN sources or WITHIN them (Theil decomposes
-      // ADDITIVELY: T = T_between + Σ share_g·T_g — Gini doesn't)?
-      // Within-source terms (x/μ_g)ln(x/μ_g) are pround(12)'d into
-      // exact DECIMAL sums against broadcast per-source means; the
-      // between term closes on the |sources| frame. Mixture design
-      // reads this as "rebalancing sources fixes T_between only".
-      val D = DecimalType(27, 14)
-      val d = Dedup.cacheScoped(Tables.documents(s, dir)
-        .select(col("source"),
-          TextAnalysis.wsTokenCount(col("text")).cast("long").as("ws"))
-        .filter(col("ws") > 0))
-      val g = Dedup.cacheScoped(d.groupBy(col("source"))
-        .agg(count(lit(1)).as("ng"), sum(col("ws")).as("tg"))
-        .withColumn("mug", col("tg").cast("double") / col("ng").cast("double")))
-      val tot = g.agg(sum(col("ng")).as("n"), sum(col("tg")).as("t"))
-        .withColumn("mu", col("t").cast("double") / col("n").cast("double"))
-      val within = d.join(broadcast(g), Seq("source"))
-        .withColumn("term", pround(col("ws").cast("double") / col("mug")
-          * log(col("ws").cast("double") / col("mug")), 12).cast(D))
-        .groupBy(col("source"), col("ng"), col("mug"))
-        .agg((sum(col("term")).cast("double")).as("tsum"))
-        .withColumn("tg_within", pround(col("tsum")
-          / col("ng").cast("double"), 12))
-      val parts = within.crossJoin(broadcast(tot))
-        .select(col("source"), col("ng"), col("mug"), col("tg_within"),
-          pround(col("ng").cast("double") * col("mug") / col("t").cast("double")
-            * col("tg_within"), 12).as("w_contrib"),
-          pround(col("ng").cast("double") * col("mug") / col("t").cast("double")
-            * log(col("mug") / col("mu")), 12).as("b_contrib"))
-      parts.agg(
-          sum(col("w_contrib").cast(D)).cast("double").as("t_within"),
-          sum(col("b_contrib").cast(D)).cast("double").as("t_between"))
-        .select(pround(col("t_within"), 9).as("theil_within"),
-          pround(col("t_between"), 9).as("theil_between"),
-          pround(col("t_within") + col("t_between"), 9).as("theil_total"),
-          pround(col("t_between") / (col("t_within") + col("t_between")), 9)
-            .as("between_share"))
-    }),
-
-    "q358_bowley_skew" -> ((s, dir) => {
-      // Bowley quartile skewness per type [EXT] — the ROBUST skew
-      // (Q3+Q1−2·Q2)/(Q3−Q1) that q184's winsorized moments and q87's
-      // z-family never report: outlier-immune asymmetry in [−1, 1],
-      // the right "is this distribution lopsided" number for heavy
-      // tails. All three quartiles from ONE histogram-refinement
-      // selector pass; the close is pure IEEE on pround'd quartiles.
-      val ev = Tables.events(s, dir).select(col("event_type"), col("value"))
-      val qs = graft.operators.Selection.exactGroupedQuantiles(
-          ev, "event_type", "value", Seq(0.25, 0.5, 0.75))
-        .groupBy(col("event_type"))
-        .agg(pround(max(when(col("q") === 0.25, col("value"))), 9).as("q1"),
-          pround(max(when(col("q") === 0.5, col("value"))), 9).as("q2"),
-          pround(max(when(col("q") === 0.75, col("value"))), 9).as("q3"))
-      qs.filter(col("q3") > col("q1"))
-        .select(col("event_type"), col("q1"), col("q2"), col("q3"),
-          pround((col("q3") + col("q1") - lit(2.0) * col("q2"))
-            / (col("q3") - col("q1")), 9).as("bowley_skew"))
-        .orderBy(col("event_type"))
-    }),
-
-    "q359_mcnemar" -> ((s, dir) => {
-      // McNemar's paired test between two quality gates [EXT] — do
-      // the Gopher alpha-words rule and the stopword rule disagree
-      // SYSTEMATICALLY on the same docs (the paired question an
-      // unpaired χ² (q100) gets wrong): only the discordant cells
-      // matter, χ² = (b−c)²/(b+c) with the continuity correction
-      // (|b−c|−1)²/(b+c). One codegen scan, exact-integer 2×2, two
-      // IEEE closes.
-      val d = Tables.documents(s, dir).select(
-        TextAnalysis.wsTokenCount(col("text")).cast("long").as("ws"),
-        size(regexp_extract_all(col("text"),
-          lit(TextAnalysis.alphaWordPattern), lit(0))).cast("long").as("aw"),
-        size(regexp_extract_all(lower(col("text")),
-          lit(TextAnalysis.stopwordAltPattern), lit(0))).cast("long").as("sw"))
-        .filter(col("ws") > 0)
-        .select((col("aw") * 5 >= col("ws") * 4).as("ga"),
-          (col("sw") * 100 >= col("ws") * 3).as("gs"))
-      d.agg(count(lit(1)).as("n"),
-          sum(when(col("ga") && col("gs"), 1L).otherwise(0L)).as("n_both"),
-          sum(when(col("ga") && !col("gs"), 1L).otherwise(0L)).as("only_a"),
-          sum(when(!col("ga") && col("gs"), 1L).otherwise(0L)).as("only_s"),
-          sum(when(!col("ga") && !col("gs"), 1L).otherwise(0L)).as("neither"))
-        .filter(col("only_a") + col("only_s") > 0)
-        .select(col("n"), col("n_both"), col("only_a"), col("only_s"),
-          col("neither"),
-          pround((col("only_a") - col("only_s")).cast("double")
-            * (col("only_a") - col("only_s")).cast("double")
-            / (col("only_a") + col("only_s")).cast("double"), 9)
-            .as("mcnemar_chi2"),
-          pround((abs(col("only_a") - col("only_s")) - 1).cast("double")
-            * (abs(col("only_a") - col("only_s")) - 1).cast("double")
-            / (col("only_a") + col("only_s")).cast("double"), 9)
-            .as("mcnemar_cc"))
-    }),
-
-    "q360_lift_chart" -> ((s, dir) => {
-      // decile lift/gain chart of the quality classifier [EXT] — the
-      // model-eval table next to ROC (q221) and calibration (q233):
-      // rank docs by the q295 classifier score, cut into 10 equal
-      // slices by the two-pass dense-id (q319's discipline), and per
-      // decile report the en-rate, lift vs base rate, and cumulative
-      // gain — "the top decile captures X% of positives". Exact
-      // integers through the CumSum running totals; three divisions
-      // close each row.
-      val scored = Tables.documents(s, dir).select(col("doc_id"),
-        pround(TextAnalysis.classifierScore(col("text"),
-          1.2, 2.0, 1.5, -3.0, -1.0), 9).as("p"),
-        when(col("lang") === "en", 1L).otherwise(0L).as("y"))
-      val ranked = graft.operators.DocPipeline.withDenseIds(
-        scored, struct(-col("p"), col("doc_id")), "rid")
-      val nTot = ranked.agg(count(lit(1)).as("n"), sum(col("y")).as("pos"))
-      val dec = ranked.crossJoin(broadcast(nTot))
-        .withColumn("decile", (col("rid") * 10 / col("n")).cast("int"))
-        .groupBy(col("decile"), col("n"), col("pos"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("y")).as("n_pos"))
-      // r19: same ≤10-row driver close as q319 — the corpus-sized
-      // CumSum layout pass is overkill for a by-construction decile
-      // frame; identical exact-long running sum and pround mirrors.
-      val decRows = dec.orderBy(col("decile")).collect()
-      var cum = 0L
-      import s.implicits._
-      decRows.toSeq.map { r =>
-          val (decile, n, pos) = (r.getInt(0), r.getLong(1), r.getLong(2))
-          val (nDocs, nPos) = (r.getLong(3), r.getLong(4))
-          cum += nPos
-          (decile, nDocs, nPos,
-            proundD(nPos.toDouble / nDocs.toDouble, 9),
-            proundD(nPos.toDouble / nDocs.toDouble
-              / (pos.toDouble / n.toDouble), 9),
-            proundD(cum.toDouble / pos.toDouble, 9))
-        }
-        .toDF("decile", "n_docs", "n_pos", "response_rate", "lift", "cum_gain")
-        .orderBy(col("decile"))
-    }),
-
-    "q361_image_decode" -> ((s, dir) => {
-      // REAL image decode through the JDK codec (round-11 item-5
-      // promotion of the multimodal decode row, not breadth): per doc a
-      // real PNG is ENCODED (dimensions and fill color arithmetic in
-      // doc_id/n_chars), then DECODED back — actual ImageIO pixel
-      // access, not the stub — and the recovered dimensions + mean
-      // luminance aggregate per size bucket. The oracle recomputes the
-      // same arithmetic directly on `documents`, so any decode error
-      // (wrong dims, wrong pixels, lossy roundtrip) breaks the hash.
-      // Luminance: a uniform-fill PNG roundtrips losslessly, so
-      // mean-lum == 0.299R+0.587G+0.114B up to ~1e-11 summation noise;
-      // floored at 1e6 (quantum 8 orders above the noise) and summed as
-      // exact integers. Image encode is a justified UDF (no built-in).
-      val gen = udf((id: Long, n: Long) => {
-        val w = 8 + (n % 48).toInt; val h = 8 + (id % 24).toInt
-        val rgb = (((id % 256) << 16) | (((id * 7) % 256) << 8) | ((id * 13) % 256)).toInt
-        val img = new java.awt.image.BufferedImage(w, h,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val g = img.createGraphics()
-        try { g.setColor(new java.awt.Color(rgb)); g.fillRect(0, 0, w, h) }
-        finally g.dispose()
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        bos.toByteArray
-      })
-      val media = Tables.documents(s, dir)
-        .select(col("doc_id"), gen(col("doc_id"), col("n_chars")).as("media"))
-      graft.operators.Multimodal.extractImageFeatures(media)
-        .groupBy(col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"))
-        .agg(count(lit(1)).as("n_images"),
-          sum(floor(col("lum") * 1e6 + 0.5).cast("long")).as("lum_sum_u6"))
-        .orderBy(col("width"), col("height"))
-    }),
-
-    "q362_pdf_planted_dims" -> ((s, dir) => {
-      // REAL-PDF image parity (round-13 item-1): per doc a genuine PDF
-      // is assembled whose page paints one image XObject (dims planted
-      // as arithmetic in doc_id/n_chars) plus, on even doc_ids, one
-      // inline BI..ID..EI image. MiniPdf decodes it for REAL — XObject
-      // dict /Width //Height resolution, inline-dict /W //H, binary
-      // skip — and emits reference-shaped <img> tags that
-      // Extraction.imgDim parses back (ref `extractor.py:38-44`,
-      // `downloader.py:254-255`). The oracle recomputes the planted
-      // arithmetic straight from `documents`: a wrong dict parse, a
-      // miscounted image, or a torn inline-binary skip breaks the hash.
-      val gen = udf(PdfFixtures.plantedDimsDoc _)
-      val dec = udf((p: Array[Byte]) =>
-        graft.sources.AutoPdfDecoder().decode(p).toOption.map(_.head).orNull)
-      Tables.documents(s, dir)
-        .select(col("doc_id"), dec(gen(col("doc_id"), col("n_chars"))).as("page"))
-        .withColumn("imgs", Extraction.imgTags(col("page")))
-        .select(col("doc_id"),
-          size(col("imgs")).cast("long").as("n_imgs"),
-          Extraction.imgDim(try_element_at(col("imgs"), lit(1)), "width").cast("long").as("xo_w"),
-          Extraction.imgDim(try_element_at(col("imgs"), lit(1)), "height").cast("long").as("xo_h"),
-          Extraction.imgDim(try_element_at(col("imgs"), lit(2)), "width").cast("long").as("in_w"),
-          Extraction.imgDim(try_element_at(col("imgs"), lit(2)), "height").cast("long").as("in_h"))
-    }),
-
-    "q363_pdf_channels" -> ((s, dir) => {
-      // q40-family channel counts driven through REAL PDFs (round-13
-      // item-1 "done" gate): multi-page documents with planted per-page
-      // word counts and image paint counts, decoded by MiniPdf via the
-      // production AutoPdfDecoder router inside DocPipeline, then the
-      // standard explode + min-words + max-images tagging. The oracle
-      // replays the planted arithmetic; a page-order bug, a lost image
-      // occurrence, or a broken filter precedence flips the counts.
-      val gen = udf(PdfFixtures.channelsDoc _)
-      val cfg = PipelineConfig(minWordsPerPage = 5, maxImagesPerPage = Some(1),
-        saveFigures = true)
-      val docs = Tables.documentsFanned(s, dir)
-        .select(col("doc_id"), gen(col("doc_id")).as("payload"))
-      val keyed = DocPipeline.withKeys(docs, col("doc_id"), cfg)
-      val decoded = DocPipeline.decodePages(keyed, graft.sources.AutoPdfDecoder(), "payload")
-      val tagged = DocPipeline.explodePages(decoded.drop("payload"), cfg)
-      DocPipeline.channels(tagged)._2
-    }),
-
-    "q364_pdf_encrypted" -> ((s, dir) => {
-      // ENCRYPTED-PDF pipeline parity (round-14 item-1 "done" gate): per
-      // doc a genuine encrypted PDF is assembled and ENCRYPTED by an
-      // inline, from-scratch ISO 32000 implementation (Algorithms
-      // 1/1.A/2/3/5, and 2.B for R6 — independent of PdfCrypt, which
-      // only ever decrypts), with planted per-page word counts. Cipher
-      // class by doc_id % 3: 0 → RC4-128 (V2/R3), 1 → **AES-128-CBC
-      // /AESV2** (V4/R4, r15), 2 → **AES-256-CBC /AESV3** (V5/R6, r16 —
-      // the modern-default class: hardened Algorithm 2.B password
-      // hash, /UE-wrapped 256-bit file key, /Perms record, per-object
-      // IVs with the file key used directly).
-      // Docs with doc_id % 5 == 0 carry a REAL user password (in all
-      // cipher classes; for R6 both password records derive from it):
-      // their /U check must fail and the decoder
-      // surfaces the reference's `cannot open document` channel (ref
-      // `downloader.py:385` — PyMuPDF opens empty-user-password files
-      // transparently, password-protected ones error). The oracle
-      // replays the planted arithmetic; a wrong key derivation, object
-      // key, CBC/IV handling, or RC4 state machine turns pages into
-      // garbage and breaks the word-count hash.
-      val gen = udf(PdfFixtures.encryptedDoc _)
-      val docs = Tables.documentsFanned(s, dir)
-        .select(col("doc_id"), gen(col("doc_id")).as("payload"))
-      val decoded = DocPipeline.decodePages(docs, graft.sources.AutoPdfDecoder(), "payload")
-      decoded.select(col("doc_id"),
-        when(col("decode_error").isNull, lit(1L)).otherwise(lit(0L)).as("ok"),
-        when(col("decode_error").isNull, size(col("pages")).cast("long")).as("n_pages"),
-        when(col("decode_error").isNull,
-          expr("aggregate(pages, 0L, (acc, p) -> acc + size(split(regexp_replace(p, '<[^>]+>', ''), ' ')))"))
-          .as("total_words"))
-    }),
-
-    "q365_charset_detect" -> ((s, dir) => {
-      // charset detection before DOM parse (round-14 item-4; ref
-      // `extractor.py:138-139` — resiliparse detect_encoding +
-      // parse_from_bytes): per doc a raw HTML byte payload in one of
-      // four encodings, NONE carrying a <meta charset>, so detection
-      // must run the BOM / strict-UTF-8 / density-heuristic cascade.
-      // The oracle replays the planted charset names and word counts; a
-      // mis-detection garbles the text and flips the counts.
-      val gen = udf((id: Long) => ((id % 4).toInt: @unchecked) match {
-        case 0 => "<html><body>plain english page with seven words here</body></html>"
-          .getBytes("UTF-8")
-        case 1 => "<html><body>Это просто русский текст без объявления кодировки совсем</body></html>"
-          .getBytes("windows-1251")
-        case 2 => "<html><body>こんにちは世界のページへようこそ皆さん どうぞ よろしく</body></html>"
-          .getBytes("Shift_JIS")
-        case 3 => "<html><body>café résumé naïve déjà vu encore</body></html>"
-          .getBytes("windows-1252")
-      })
-      Tables.documentsFanned(s, dir)
-        .select(col("doc_id"), gen(col("doc_id")).as("payload"))
-        .select(col("doc_id"),
-          graft.functions.Dom.detectedCharset(col("payload")).as("cs"),
-          size(split(graft.functions.Dom.domTextBytes(col("payload")), " "))
-            .cast("long").as("n_words"))
-    }),
-
-    "q366_warc_revisit_dedup" -> ((s, dir) => {
-      // WARC revisit records + crawl-level digest dedup (round-14
-      // item-7; ISO 28500 §6.7 — Common Crawl marks re-crawled
-      // unchanged pages as `WARC-Type: revisit` pointing at an earlier
-      // capture's payload digest): per doc a genuine WARC byte stream
-      // with planted response/revisit records and colliding digests is
-      // parsed by the REAL Warc.parseStream, then crawl-dedup keeps one
-      // fetch per digest (min target_uri) with revisits dropped — the
-      // dedup-before-decode step every 100 TB crawl ingest needs. The
-      // oracle replays the planted digest arithmetic; a parser that
-      // surfaces the wrong type/digest or a dedup that keeps the wrong
-      // row breaks the hash.
-      val gen = udf((id: Long) => {
-        val bos = new java.io.ByteArrayOutputStream()
-        def rec(wtype: String, uri: String, digest: String, body: String): Unit = {
-          val b = body.getBytes("ISO-8859-1")
-          bos.write((s"WARC/1.0\r\nWARC-Type: $wtype\r\nWARC-Target-URI: $uri\r\n" +
-            s"WARC-Payload-Digest: $digest\r\nContent-Length: ${b.length}\r\n\r\n")
-            .getBytes("ISO-8859-1"))
-          bos.write(b)
-          bos.write("\r\n\r\n".getBytes("ISO-8859-1"))
-        }
-        val n = 1 + (id % 3).toInt
-        for (k <- 0 until n) {
-          val dig = s"sha1:D${(id * 7 + k * 13) % 50}"
-          val wtype = if (k % 2 == 1) "revisit" else "response"
-          rec(wtype, s"http://ex.com/$id/$k", dig, s"body $id $k")
-        }
-        bos.toByteArray
-      })
-      val parse = udf((bytes: Array[Byte]) =>
-        graft.sources.Warc.parseStream(new java.io.ByteArrayInputStream(bytes))
-          .map { case (t, uri, _, _, dig) => (t, uri, dig) }.toSeq)
-      val recs = Tables.documentsFanned(s, dir)
-        .select(explode(parse(gen(col("doc_id")))).as("r"))
-        .select(col("r._1").as("warc_type"), col("r._2").as("target_uri"),
-          col("r._3").as("payload_digest"), lit("").as("content_type"),
-          lit(Array.emptyByteArray).as("payload"))
-      graft.sources.Warc.dedupByPayloadDigest(recs)
-        .groupBy(col("payload_digest"))
-        .agg(count(lit(1)).as("n_kept"), min(col("target_uri")).as("keep_uri"))
-        .orderBy(col("payload_digest"))
-    }),
-
-    "q367_warc_pdf_e2e" -> ((s, dir) => {
-      // the COMPOSED crawl-ingest path as one oracle row (round-14: the
-      // binary pipeline VERDICT r13 item 8 names): per doc a genuine
-      // PDF with planted per-page word/image counts is wrapped in a
-      // real HTTP response (gzip Content-Encoding on odd ids — the
-      // content-decode leg), wrapped in a WARC response record, then
-      // driven through the PRODUCTION path: Warc.parseStream →
-      // responseDocuments (header split + gunzip) → AutoPdfDecoder
-      // page decode. A fault anywhere — WARC framing, HTTP unwrap,
-      // gzip, PDF object scan, image-paint dispatch — flips the
-      // planted counts and breaks the hash.
-      val gen = udf(PdfFixtures.warcPdfDoc _)
-      val parse = udf((bytes: Array[Byte]) =>
-        graft.sources.Warc.parseStream(new java.io.ByteArrayInputStream(bytes)).toSeq)
-      val recs = Tables.documentsFanned(s, dir)
-        .select(explode(parse(gen(col("doc_id")))).as("r"))
-        .select(col("r._1").as("warc_type"), col("r._2").as("target_uri"),
-          col("r._3").as("content_type"), col("r._4").as("payload"),
-          col("r._5").as("payload_digest"))
-      val docs = graft.sources.Warc.responseDocuments(recs)
-      val decoded = DocPipeline.decodePages(docs, graft.sources.AutoPdfDecoder(), "body")
-      decoded.select(
-        regexp_extract(col("target_uri"), "/(\\d+)$", 1).cast("long").as("doc_id"),
-        col("http_status").cast("long").as("http_status"),
-        col("mime"),
-        size(col("pages")).cast("long").as("n_pages"),
-        expr("aggregate(pages, 0L, (acc, p) -> acc + size(split(trim(regexp_replace(p, '<[^>]+>', ' ')), ' +')))")
-          .as("total_words"),
-        expr("aggregate(pages, 0L, (acc, p) -> acc + size(split(p, '<img')) - 1)")
-          .as("total_imgs"))
-    }),
-
-    "q368_meta_robots" -> ((s, dir) => {
-      // in-document robots policy (round-14): the HTML twin of the
-      // X-Robots-Tag opt-out the reference honors (`downloader.py:
-      // 20-34`) — a compliant crawler must drop `<meta name=robots
-      // content=noindex/none>` pages before extraction. Planted per
-      // doc: doc_id%3==0 noindex (attribute order varies by doc_id%2),
-      // %3==1 nofollow-only (NOT an indexing opt-out), %3==2 no meta;
-      // windows-1251 bytes on %5==0 exercise detection-before-policy.
-      val gen = udf((id: Long) => {
-        val meta = (id % 3) match {
-          case 0 => if (id % 2 == 0) "<meta name=\"robots\" content=\"noindex, follow\">"
-                    else "<meta content='none' name='robots'>"
-          case 1 => "<meta name=\"robots\" content=\"nofollow\">"
-          case _ => ""
-        }
-        val cs = if (id % 5 == 0) "windows-1251" else "UTF-8"
-        val body = if (id % 5 == 0) "Привет" else "hello"
-        s"<html><head>$meta</head><body><p>$body</p></body></html>".getBytes(cs)
-      })
-      Tables.documentsFanned(s, dir)
-        .select(col("doc_id"), gen(col("doc_id")).as("payload"))
-        .select(col("doc_id"),
-          graft.functions.Dom.metaRobotsNoindex(col("payload"))
-            .cast("long").as("blocked"))
-    }),
-
-    "q369_pdf_embedded_font" -> ((s, dir) => {
-      // EMBEDDED-FONT text decode parity (round-15 item-1 "done" gate;
-      // ref `extractor.py:136` — PyMuPDF reads the font PROGRAM when a
-      // font carries no /ToUnicode and no standard /Encoding): per doc
-      // a genuine PDF whose only font maps byte codes through one of
-      // SIX embedded programs — (a) subset TrueType with a symbolic
-      // (3,0) cmap and `post` glyph names, (b) subset TrueType with a
-      // symbolic cmap resolved through the INVERTED (3,1) Unicode cmap
-      // (no post table), (c) Type 1 cleartext /Encoding `dup … put`
-      // array, (d) CFF/Type1C (/FontFile3: INDEX structures, charset
-      // SIDs through the standard strings, custom format-0 encoding),
-      // (e) Type0/Identity-H whose 2-byte CIDs resolve through the
-      // DESCENDANT font's inverted Unicode cmap, (f — r16) Type0/
-      // Identity-H whose descendant is an OTTO-wrapped CID-KEYED CFF:
-      // CID → gid through the INVERTED CFF charset, gid → Unicode
-      // through the wrapper cmap — with letter/word-shape arithmetic
-      // planted in doc_id. The glyph codes are NOT the character
-      // values, so a cmap binary-search bug, a post-name misread, an
-      // inversion slip, or a CFF offset error turns every word into
-      // garbage and breaks the hash.
-      val gen = udf(PdfFixtures.fontClassDoc _)
-      val docs = Tables.documentsFanned(s, dir)
-        .select(col("doc_id"), gen(col("doc_id")).as("payload"))
-      val decoded = DocPipeline.decodePages(docs, graft.sources.AutoPdfDecoder(), "payload")
-      val txt = trim(regexp_replace(array_join(col("pages"), " "),
-        lit("<[^>]+>"), lit("")))
-      decoded.select(col("doc_id"),
-        size(split(txt, " +")).cast("long").as("n_words"),
-        length(regexp_replace(txt, lit("[^a-z]"), lit(""))).cast("long").as("n_letters"),
-        substring(txt, 1, 1).as("first_char"))
-    }),
-
-    "q370_pdf_image_payload" -> ((s, dir) => {
-      // IN-PDF IMAGE PAYLOAD extraction (round-15 item-3 "done" gate;
-      // ref `extractor.py:136` — PyMuPDF's XHTML embeds page images as
-      // base64, and `save_figures` writes them out): per doc a genuine
-      // PDF paints one image XObject — even doc_ids carry RAW
-      // Flate-compressed DeviceRGB samples (re-wrapped losslessly as
-      // PNG by MiniPdf.imagePayload), odd doc_ids carry a REAL JDK-
-      // encoded JPEG behind /DCTDecode (surfaced verbatim). The
-      // payloads flow through decodeWithImages into the production
-      // multimodal codec (extractImageFeatures), which must recover the
-      // planted dims from actual pixels — and, on the lossless PNG leg,
-      // the exact planted luminance (JPEG is lossy by design, so its
-      // luminance is not oracle-pinned). A torn filter chain, botched
-      // raster wrap, or passthrough slip breaks the hash.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.imagePayloadDoc _),
-        features = Seq(when(col("doc_id") % 2 === 0,
-          floor(col("lum") * 1e6 + 0.5).cast("long")).as("lum_u6")))
-    }),
-
-    "q371_pdf_datauri_roundtrip" -> ((s, dir) => {
-      // base64 data-URI XHTML parity, END TO END (r15; ref
-      // `extractor.py:136` — PyMuPDF's XHTML carries page images as
-      // base64): per doc a PDF painting a raw-Flate DeviceRGB XObject
-      // (planted dims/uniform color) is decoded with embedImages=true;
-      // the data URI is parsed back OUT of the emitted <img> tag
-      // (regexp + unbase64 — built-ins, no UDF on the extraction side)
-      // and the recovered PNG flows through the production codec. Dims
-      // AND the exact uniform-fill luminance must survive the
-      // raster→PNG→base64→XHTML→bytes loop; the oracle replays the
-      // planted arithmetic.
-      val gen = udf(PdfFixtures.dataUriDoc _)
-      val dec = udf((p: Array[Byte]) =>
-        graft.sources.MiniPdfDecoder(embedImages = true).decode(p)
-          .toOption.map(_.head).orNull)
-      val media = Tables.documentsFanned(s, dir)
-        .select(col("doc_id"), dec(gen(col("doc_id"))).as("page"))
-        .select(col("doc_id"), unbase64(regexp_extract(col("page"),
-          "base64,([A-Za-z0-9+/=]+)", 1)).as("media"))
-      graft.operators.Multimodal.extractImageFeatures(media)
-        .select(col("doc_id"), col("width").cast("long").as("w"),
-          col("height").cast("long").as("h"),
-          floor(col("lum") * 1e6 + 0.5).cast("long").as("lum_u6"))
-    }),
-
-    "q372_arrow_shard_roundtrip" -> ((s, dir) => {
-      // ARROW-SHARD round-trip e2e (r15; ref `reader.py:139-146` writes
-      // feather shards, `downloader.py:229-231` reads them back): a
-      // typed projection of `documents` (with planted nulls) is WRITTEN
-      // as one IPC shard per partition through the arrow-vector wire
-      // format and read BACK via ArrowIpc — the reference-interchange
-      // loop, executor-side on both legs — then aggregated per lang. A
-      // type-mapping slip, null-validity bug, record-batch boundary
-      // tear, or lost shard breaks the hash against the
-      // direct-on-documents oracle.
-      // Scratch location: the write and read legs run on executors, so
-      // the dir must be on a filesystem EVERY executor can reach.
-      // java.io.tmpdir satisfies that only in local mode (this test
-      // harness); a distributed run must point SPARK_GRAFT_SCRATCH at a
-      // shared scheme (hdfs://, s3a://, nfs) — ArrowIpc itself is
-      // scheme-agnostic via the Hadoop FileSystem API.
-      val out = new java.io.File(
-        sys.env.getOrElse("SPARK_GRAFT_SCRATCH", sys.props("java.io.tmpdir")),
-        s"graft_q372_${dir.replaceAll("[^A-Za-z0-9]", "_")}").getPath
-      val fs = new org.apache.hadoop.fs.Path(out)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(out), true)
-      val src = Tables.documents(s, dir).select(col("doc_id"),
-          col("lang"), col("n_chars").cast("long").as("n_chars"),
-          when(col("doc_id") % 7 === 0, lit(null).cast("double"))
-            .otherwise(col("doc_id").cast("double") / 4).as("score"))
-        .repartition(4, col("doc_id"))
-      graft.sources.ArrowIpc.write(src, out)
-      graft.sources.ArrowIpc.read(s, out + "/*.feather")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("n_chars")).as("chars"),
-          sum(when(col("score").isNull, 1L).otherwise(0L)).as("n_null"),
-          sum(floor(col("score") * 4).cast("long")).as("score4"))
-        .orderBy(col("lang"))
-    }),
-
-    "q373_phash_band_probe" -> ((s, dir) => {
-      // BAND-TIER pHash dedup at REALISTIC distinct-hash cardinality
-      // (r16 — VERDICT r15 "What's wrong" #3: q337's planted corpus has
-      // only 256 distinct images, so its ×30 probe would measure
-      // fixture pathology; THIS query gives the band join a corpus
-      // where every doc carries a unique pseudo-random 64-bit hash —
-      // md5(doc_id), full avalanche, so band values are uniform — and
-      // every 10th doc instead carries its predecessor's hash with 1–3
-      // planted bit flips). phashNearDups must recover EXACTLY the
-      // planted neighbor pairs (the pigeonhole recall guarantee) plus
-      // whatever hamming-≤3 coincidences the md5 stream contains (none
-      // at these scales: P(pair ≤ 3 apart) ≈ 4·10⁴/2⁶⁴ — but the
-      // oracle replays the same band join, so a coincidence would
-      // match, not break). Under ScaleProbe replication doc_ids shift
-      // by 10⁷ per replica, so distinct-hash cardinality grows ×30 —
-      // the realistic-cardinality measurement the fixture-pathology
-      // rule kept q337 from providing. A banding break, star-edge
-      // slip, or xor/bit_count bug changes the counts and the hash.
-      def h64(idCol: Column): Column = {
-        val m = md5(idCol.cast("string"))
-        shiftleft(conv(substring(m, 1, 8), 16, 10).cast("long"), 32)
-          .bitwiseOR(conv(substring(m, 9, 8), 16, 10).cast("long"))
-      }
-      val mask = when(expr("doc_id div 10") % 3 === 0, lit(0x80L))
-        .when(expr("doc_id div 10") % 3 === 1, lit((1L << 7) | (1L << 33)))
-        .otherwise(lit((1L << 7) | (1L << 33) | (1L << 55)))
-      val hashes = Tables.documents(s, dir).select(col("doc_id"),
-        when(col("doc_id") % 10 === 9,
-          h64(col("doc_id") - 1).bitwiseXOR(mask))
-          .otherwise(h64(col("doc_id"))).as("phash"))
-      Dedup.phashNearDups(hashes)
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(when(col("hamming") === 1, 1L).otherwise(0L)).as("n_h1"),
-          sum(when(col("hamming") === 2, 1L).otherwise(0L)).as("n_h2"),
-          sum(when(col("hamming") === 3, 1L).otherwise(0L)).as("n_h3"),
-          sum(when(col("key_b") === col("key_a") + 1 &&
-            col("key_b") % 10 === 9, 1L).otherwise(0L)).as("n_planted"),
-          sum(col("key_a") + col("key_b")).as("key_sum"))
-    }),
-
-    "q374_pdf_ccitt_g4" -> ((s, dir) => {
-      // SCANNED-DOCUMENT image payloads (r16 — VERDICT r15 Missing #1:
-      // CCITT G4 is the dominant scan encoding; ref `extractor.py:136`
-      // rides PyMuPDF, which surfaces every raster): per doc a genuine
-      // PDF paints one /CCITTFaxDecode K -1 (pure T.6 2D) image — a
-      // black run of planted length drifting ±1 px per row. The G4
-      // stream is HAND-CODED here from the public spec, independent of
-      // the production decoder: row 0 = horizontal mode (white/black
-      // run codewords transcribed from T.4 Table 2/3), later rows =
-      // vertical modes only (V0/VR1/VL1 — fixed bit patterns), EOFB
-      // terminated. Odd docs set /BlackIs1 true (CCITT-black → sample
-      // 1 → WHITE under DeviceGray), so a sense inversion flips the
-      // luminance and breaks the hash; a mode-decode slip, reference-
-      // line bug, or run-table typo in the four codeword families
-      // used shears the pixels and breaks dims/luminance.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.ccittG4Doc _))
-    }),
-
-    "q375_pdf_colorspaces" -> ((s, dir) => {
-      // NON-DEVICE COLOR SPACES in the raster re-wrap (r16 — VERDICT
-      // r15 Missing #2: /Indexed palettes and ICCBased rasters are the
-      // print-origin class PyMuPDF surfaces): per doc one image XObject
-      // cycling THREE colorspace shapes — (0) /Indexed over /DeviceRGB
-      // with a hex-string palette and raw index samples, (1) /Indexed
-      // over an [/ICCBased N=3] base with Flate index samples, (2) a
-      // direct [/ICCBased N=3] RGB raster behind Flate. The palette
-      // entry / fill color is planted per doc, so a palette-expansion
-      // slip, wrong hival bound, nested-bracket parse bug, or /N
-      // misread changes the decoded luminance and breaks the hash.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.colorspaceDoc _))
-    }),
-
-    "q376_pdf_ccitt_g3" -> ((s, dir) => {
-      // G3 (K ≥ 0) CCITT legs + /Decode-array inversion (r16 depth
-      // extension of q374's scanned class; old fax-origin PDFs are K=0
-      // MH or K>0 mixed): even docs carry PURE 1D MH rows with NO EOLs
-      // (PDF's /EndOfLine false default), odd docs carry K=4 mixed
-      // streams where every row is announced by EOL + tag. All
-      // codewords are HAND-TRANSCRIBED from T.4 Table 2/3 here,
-      // independent of the production decoder; docs with id%3==0 add
-      // /Decode [1 0], which must flip the sample→color mapping or the
-      // luminance breaks.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.ccittG3Doc _))
-    }),
-
-    "q377_pdf_lowbpc" -> ((s, dir) => {
-      // 1/2/4-bpc rasters (r16 depth extension of q375 — bitmap masks,
-      // dithered scans, small-palette print graphics): (0) 1-bpc
-      // DeviceGray split-column bitmap, /Decode [1 0] on odd docs; (1)
-      // 2-bpc DeviceGray uniform level; (2) 4-bpc /Indexed over a
-      // 16-entry palette. Rows pack high-bit-first and pad to BYTE
-      // boundaries (§8.9.3) — w is chosen non-multiple-of-8, so a
-      // padding slip shears every row and breaks the hash.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.lowBpcDoc _))
-    }),
-
-    "q378_pdf_cmyk" -> ((s, dir) => {
-      // DeviceCMYK / ICC-N=4 rasters (r16 — the print-origin half of
-      // VERDICT r15 Missing #2 that q375 left fail-closed): per doc
-      // one uniform CMYK image in two container shapes — even docs a
-      // direct /DeviceCMYK raster with raw samples, odd docs an
-      // [/ICCBased N=4] stream behind Flate. The planted (c,m,y,k)
-      // overflows c+k past 255 on many ids, so a wrong conversion
-      // formula, a missed §8.6.4.4 clamp, a component-order slip, or
-      // an /N misread shifts the decoded luminance and breaks the hash.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.cmykDoc _))
-    }),
-
-    "q379_pdf_jbig2" -> ((s, dir) => {
-      // JBIG2 GENERIC-REGION image payloads (r16 — the remaining
-      // scanned-document encoding after q374/q376's CCITT work; ref
-      // `extractor.py:136` rides PyMuPDF, which surfaces every
-      // raster): per doc one /JBIG2Decode XObject painting a planted
-      // vertical split, cycling FOUR region shapes — (0) MQ-coded
-      // template 0, (1) MQ template 2 with TPGDON (identical rows ride
-      // the LTP duplicate path), (2) MMR (T.6 inside a JBIG2 region —
-      // §6.2.6), (3) an arithmetic SYMBOL DICTIONARY + TEXT REGION
-      // composing the same split from one or two glyph rectangles
-      // (§6.5/§6.4 — IADH/IADW/IAEX/IADS/IAID through the Annex A
-      // integer decoders), (4) the same symbol composition through a
-      // TRANSPOSED text region (column strips, axis-swapped placement).
-      // Odd docs add /Decode [1 0], which must swap the fixed JBIG2
-      // 1=black convention or the luminance breaks; an MQ state-table
-      // slip, context-layout bug, segment-walker offset error, or LTP
-      // desync shears pixels and breaks dims/luminance. All five legs
-      // paint IDENTICAL geometry, so one oracle covers them.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.jbig2Doc _))
-    }),
-
-    "q380_pdf_smask" -> ((s, dir) => {
-      // /SMask TRANSPARENCY in the raster re-wrap (r16 — PyMuPDF
-      // surfaces soft masks; the lossless-PNG container carries alpha
-      // natively): per doc one image in three shapes — (0) RGB base +
-      // 8-bpc gray mask painting a vertical alpha split, (1) gray base
-      // + uniform mask with /Decode [1 0] (the mask's OWN inversion,
-      // which must flip alpha), (2) no mask → opaque. The mean-alpha
-      // feature column pins the merged channel: a mask-resolution
-      // slip, inversion bug, or silent opaque fallback on a valid
-      // mask shifts alpha_u6 and breaks the hash.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.smaskDoc _),
-        features = Seq(
-          floor(col("lum") * 1e6 + 0.5).cast("long").as("lum_u6"),
-          floor(col("alpha") * 1e6 + 0.5).cast("long").as("alpha_u6")))
-    }),
-
-    "q381_pdf_separation" -> ((s, dir) => {
-      // /Separation SPOT-COLOR rasters through the PDF function engine
-      // (r16 — §7.10 + §8.6.6.4, the print-origin spot-ink class): per
-      // doc one uniform-tint image cycling the three function types —
-      // (0) Type 2 exponential (N=1) over a DeviceRGB alternate with
-      // planted k/256 C1 components (exact binary decimals, so Spark
-      // and DuckDB parse identical doubles), (1) Type 0 sampled LUT
-      // over DeviceGray (4 planted samples, e = 3t interpolation),
-      // (2) Type 3 stitching of two Type 2 pieces over DeviceGray
-      // (bound 0.5 — the piece choice flips per doc). A Domain-clamp
-      // slip, interpolation bug, sample bit-unpack error, or stitch
-      // boundary off-by-one shifts the luminance and breaks the hash.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.separationDoc _))
-    }),
-
-    "q382_pdf_type4" -> ((s, dir) => {
-      // TYPE 4 (PostScript calculator) tint transforms (r16 — §7.10.5,
-      // the MOST COMMON tint type in real print PDFs, previously
-      // fail-closed): per doc one uniform-tint /Separation image whose
-      // transform cycles three planted programs — (0) `{ 1 exch sub }`
-      // (the classic ink inversion; exercises exch/sub), (1)
-      // `{ dup mul }` (t²; dup + mul), (2) a three-output dup/mul
-      // chain over a DeviceRGB alternate. A tokenizer slip, stack-
-      // order bug, or output-arity leak shifts the luminance and
-      // breaks the hash.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.type4Doc _))
-    }),
-
-    "q383_pdf_devicen" -> ((s, dir) => {
-      // /DeviceN MULTI-INK rasters (r16 — §8.6.6.5): per doc one
-      // two-ink image whose Type 4 tint transform takes BOTH ink
-      // fractions — (0) `{ add 0.5 mul 1 exch sub }` (average-ink
-      // inversion over a gray alternate), (1) `{ exch dup }` over a
-      // DeviceRGB alternate (r = ink2, g = b = ink1 — the output
-      // order pins the first-input-deepest stack convention). A
-      // component-interleave slip, input-order bug, or Domain-arity
-      // leak shifts the luminance and breaks the hash.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.devicenDoc _))
-    }),
-
-    "q384_pdf_jpx" -> ((s, dir) => {
-      // /JPXDecode PAYLOAD SURFACING (r17 -- VERDICT r16 Missing #1,
-      // the digitized-archive class: JSTOR/newspaper/national-library
-      // corpora; ref `extractor.py:136` rides PyMuPDF, which surfaces
-      // every raster): per doc one JPX image XObject -- a full JP2
-      // container on even ids (LBox=0 jp2c on id%4==2), a raw J2K
-      // codestream on odd ids. The engine surfaces the payload
-      // VERBATIM (like DCT) and feature extraction reports dims parsed
-      // from the public SIZ marker segment (ISO/IEC 15444-1 A.5.1)
-      // with luminance ABSENT -- the oracle pins lum_u6 NULL, so a
-      // fabricated luminance, a dropped payload, a box-walk tear, or
-      // an Xsiz-XOsiz slip all break the hash/row count tri-scale.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.jpxDoc _))
-    }),
-
-    "q385_pdf_cmyk_jpeg" -> ((s, dir) => {
-      // CMYK /DCTDecode JPEGs in FEATURE EXTRACTION (r17 -- VERDICT
-      // r16 Missing #3: the payload class q378 surfaces verbatim but
-      // whose features dropped; ImageIO's BufferedImage path either
-      // rejects 4-comp JPEGs or converts through SimpleCMYKColorSpace,
-      // which disagrees with the engine's un-color-managed clamp):
-      // per doc one 4-component JPEG -- plain stored samples on even
-      // ids, the Adobe shape (APP14 transform 0, samples stored
-      // INVERTED) on odd ids. extractImageFeatures must route through
-      // ImageReader.readRaster, un-invert the Adobe class, and apply
-      // the same SS 8.6.4.4 additive clamp as the raster re-wrap; the
-      // oracle replays the planted clamp arithmetic, so a missed
-      // inversion, a colorspace-managed conversion, or a dropped
-      // payload breaks the hash tri-scale.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.cmykJpegDoc _))
-    }),
-
-    "q386_pdf_jbig2_huffman" -> ((s, dir) => {
-      // JBIG2 HUFFMAN symbol/text class (r17 -- VERDICT r16 Missing
-      // #2: fax-origin and older-scanner streams use SDHUFF=SBHUFF=1;
-      // the standard Annex B tables are public constants like Table
-      // E.1 was): per doc one /JBIG2Decode XObject painting q379's
-      // planted vertical split through THREE Huffman legs --
-      // (0) uncompressed height-class collective bitmaps (SS 6.5.9
-      // byte-aligned rows), (1) MMR/T.6 collective bitmaps, (2) a
-      // TRANSPOSED SBHUFF text region; odd ids add /Decode [1 0].
-      // The symbol-ID table rides the SS 7.4.4.1.1 runcode machinery;
-      // a canonical-assignment slip, wrong table line, collective
-      // split bug, or byte-alignment miss shears pixels and breaks
-      // the hash tri-scale.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.jbig2HuffmanDoc _))
-    }),
-
-    "q387_pdf_cie_color" -> ((s, dir) => {
-      // CIE COLOR SPACES in the raster re-wrap (r17 -- the /Lab leg
-      // VERDICT r16 listed as the last fail-closed color family, plus
-      // /CalRGB and /CalGray as documented un-color-managed device
-      // aliases per the engine-wide policy): per doc one raster
-      // cycling (0) /Lab with a planted uniform L*a*b* triple --
-      // SS 8.6.5.4 Lab->XYZ with the dict whitepoint then the linear
-      // sRGB matrix, every step plain IEEE arithmetic the oracle
-      // mirrors term by term -- (1) /CalRGB, (2) /CalGray. A g(t)
-      // branch slip, whitepoint misread, decode-default error, or a
-      // color-managed detour breaks the hash tri-scale.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.labDoc _))
-    }),
-
-    "q388_pdf_jbig2_halftone" -> ((s, dir) => {
-      // JBIG2 HALFTONE regions (r17 -- the last JBIG2 segment family
-      // besides refinement: T.88 SS 6.6/6.7, dithered-grayscale
-      // scans): per doc one /JBIG2Decode XObject whose pattern
-      // dictionary holds density patterns (pattern k = k black
-      // pixels, decoded from ONE collective generic bitmap with the
-      // SS 6.7.5 AT1=(-HDPW,0) pixels) and whose halftone region
-      // carries a planted two-value grid through Annex C Gray-coded
-      // bitplanes (one shared arithmetic coder/context across
-      // planes). The page black count is closed-form in doc_id, so a
-      // Gray-chain slip, pattern-split bug, grid-vector error, or
-      // plane-order mistake breaks the hash tri-scale.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.jbig2HalftoneDoc _))
-    }),
-
-    "q389_audio_compressed_meta" -> ((s, dir) => {
-      // COMPRESSED-AUDIO metadata (r17 -- the audio twin of the JPX
-      // discipline: the container ships no FLAC/MP3 codec, and a
-      // 100 TB metadata pass must not decompress audio anyway): per
-      // doc one payload cycling (0) a FLAC STREAMINFO header (public
-      // xiph layout -- 20-bit rate, 3-bit channels, 36-bit total
-      // samples), (1) an MPEG1 Layer III CBR stream behind an ID3v2
-      // tag, frames WALKED by their header-derived sizes, (2) a real
-      // PCM WAV through javax.sound, (3 r18) an Ogg page chain
-      // carrying OpusHead (channels/pre-skip/input-rate; samples from
-      // the EOS granule minus pre-skip) or, on id%10==8, a Vorbis
-      // identification header (raw-PCM granules), (4 r18) an AAC ADTS
-      // frame walk (public frequency-index table, 1024 samples per
-      // raw data block; id%10==9 leads with the common ID3v2 tag the
-      // walk must skip). All legs land in one typed AudioRow
-      // shape; the oracle replays the planted values, so a bit-offset
-      // slip, wrong bitrate table, ID3 skip error, lacing-walk slip,
-      // or a fabricated duration breaks the hash tri-scale.
-      Multimodal.decodeAudioMetadata(
-        Tables.documents(s, dir)
-          .select(col("doc_id"),
-            udf(PdfFixtures.audioDoc _).apply(col("doc_id")).as("media")))
-        .toDF()
-    }),
-
-    "q390_video_container_meta" -> ((s, dir) => {
-      // ISO-BMFF VIDEO metadata (r17 -- the video leg of the
-      // multimodal contract made REAL: the public ISO/IEC 14496-12
-      // box layout needs no codec for a metadata pass, exactly like
-      // the JP2 walk): per doc one minimal MP4 -- ftyp + moov with
-      // planted mvhd timescale/duration (v0 on even ids, 64-bit v1 on
-      // odd) and trak/tkhd 16.16 fixed-point dims; id%3==2 adds an
-      // audio-only 0x0 track that must not displace the video dims.
-      // The oracle replays the planted values, so a box-walk tear,
-      // version-offset slip, fixed-point misread, or ms conversion
-      // error breaks the hash tri-scale.
-      Multimodal.decodeVideoMetadata(
-        Tables.documents(s, dir)
-          .select(col("doc_id"),
-            udf(PdfFixtures.mp4Doc _).apply(col("doc_id")).as("media")))
-        .toDF()
-    }),
-
-    "q391_webp_meta" -> ((s, dir) => {
-      // WebP HEADER dims (r17 -- the highest-volume web-crawl image
-      // format the JDK ships no codec for; same discipline as JPX:
-      // dims surface through extractImageFeatures with luminance
-      // ABSENT, never fabricated): per doc one WebP cycling the three
-      // public chunk shapes -- VP8 lossy key-frame header, VP8L
-      // lossless bitstream header, VP8X extended canvas. The oracle
-      // replays planted dims and pins lum_u6 NULL, so a bit-offset
-      // slip, minus-one error, wrong chunk dispatch, or fabricated
-      // luminance breaks the hash tri-scale.
-      val gen = udf(PdfFixtures.webpDoc _)
-      val media = Tables.documents(s, dir)
-        .select(col("doc_id"), gen(col("doc_id")).as("media"))
-      graft.operators.Multimodal.extractImageFeatures(media)
-        .select(col("doc_id"), col("width").cast("long").as("w"),
-          col("height").cast("long").as("h"),
-          floor(col("lum") * 1e6 + 0.5).cast("long").as("lum_u6"))
-    }),
-
-    "q392_avif_heic_meta" -> ((s, dir) => {
-      // AVIF/HEIC dims (r17 -- the modern-crawl still-image class,
-      // ISO-BMFF based: meta(FullBox) -> iprp -> ipco -> ispe per
-      // ISO/IEC 23008-12; no JDK codec exists, so dims surface
-      // header-only with luminance ABSENT like JPX/WebP): per doc one
-      // container cycling the avif/heic/mif1 brands; id%3==2 plants a
-      // SECOND smaller thumbnail ispe the parser must not prefer. The
-      // oracle replays planted dims and pins lum_u6 NULL tri-scale.
-      val gen = udf(PdfFixtures.avifDoc _)
-      val media = Tables.documents(s, dir)
-        .select(col("doc_id"), gen(col("doc_id")).as("media"))
-      graft.operators.Multimodal.extractImageFeatures(media)
-        .select(col("doc_id"), col("width").cast("long").as("w"),
-          col("height").cast("long").as("h"),
-          floor(col("lum") * 1e6 + 0.5).cast("long").as("lum_u6"))
-    }),
-
-    "q393_epub_decode" -> ((s, dir) => {
-      // EPUB decode (r17 -- reference parity beyond PDF: PyMuPDF opens
-      // EPUB, ref `downloader.py:385` hands fitz any payload): per doc
-      // a REAL EPUB (JDK-zipped OCF container.xml -> OPF manifest +
-      // spine -> XHTML chapters, planted per-chapter word counts)
-      // routed through the production AutoPdfDecoder, which now
-      // dispatches ZIP containers to EpubDecoder. One page per spine
-      // item; the oracle replays the planted counts, so an OPF parse
-      // slip, spine-order bug, or zip tear breaks the hash tri-scale.
-      val gen = udf(PdfFixtures.epubDoc _)
-      val docs = Tables.documentsFanned(s, dir)
-        .select(col("doc_id"), gen(col("doc_id")).as("payload"))
-      val decoded = DocPipeline.decodePages(docs,
-        graft.sources.AutoPdfDecoder(), "payload")
-      decoded.select(col("doc_id"),
-          posexplode(col("pages")).as(Seq("g", "page")))
-        .select(col("doc_id"), col("g").cast("long").as("g"),
-          size(split(trim(regexp_replace(col("page"),
-            lit("<[^>]+>"), lit(" "))), " +")).cast("long").as("n_words"))
-    }),
-
-    "q394_cbz_images" -> ((s, dir) => {
-      // CBZ decode (r17 -- the comic-archive class PyMuPDF opens):
-      // per doc a ZIP of real PNGs (planted dims/colors); the router
-      // surfaces one page per image with the raw bytes flowing into
-      // the production multimodal codec -- the same decodeWithImages
-      // contract as painted PDF rasters. The oracle replays the
-      // planted dims and exact uniform-fill luminance.
-      val gen = udf(PdfFixtures.cbzDoc _)
-      val ext = udf((p: Array[Byte]) =>
-        graft.sources.AutoPdfDecoder().decodeWithImages(p)
-          .toOption.map(_.flatMap(_._2)).getOrElse(Seq.empty[Array[Byte]]))
-      val media = Tables.documentsFanned(s, dir)
-        .select(col("doc_id"), explode(ext(gen(col("doc_id")))).as("media"))
-      graft.operators.Multimodal.extractImageFeatures(media)
-        .select(col("doc_id"), col("width").cast("long").as("w"),
-          col("height").cast("long").as("h"),
-          floor(col("lum") * 1e6 + 0.5).cast("long").as("lum_u6"))
-    }),
-
-    "q398_pdf_jbig2_refinement" -> ((s, dir) => {
-      // JBIG2 generic REFINEMENT regions (r18 -- VERDICT r17 Missing
-      // #2, the final JBIG2 segment family: T.88 SS 6.3, the
-      // high-compression-scanner second pass): per doc one
-      // /JBIG2Decode XObject whose striped base enters as an
-      // INTERMEDIATE (type 36, the SS 8.2 retained-result path) or
-      // painted (type 38) region, refined by a type 42 segment that
-      // inverts a planted rectangle -- cycling GRTEMPLATE 0/1, TPGRON
-      // typical-row prediction, and the referred-bitmap vs
-      // page-content reference shapes. The page black count is
-      // closed-form (stripes XOR rectangle), so a context-layout
-      // slip, SLTP misread, reference-offset bug, or intermediate
-      // plumbing error breaks the hash tri-scale.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.jbig2RefinementDoc _))
-    }),
-
-    "q402_doc_embedded_images" -> ((s, dir) => {
-      // In-document images across the NON-PDF classes (r18 -- the
-      // decodeWithImages parity PyMuPDF has: EPUB chapter <img>
-      // entries, FB2 base64 <binary> illustrations, XPS ImageBrush
-      // parts, MOBI recindex image records; r19 adds SVG data-URI
-      // <image> elements): per doc one planted-color PNG embedded per
-      // the cycling container (five legs), surfaced through the
-      // production router's
-      // decodeWithImages into the real multimodal codec -- the same
-      // contract as painted PDF rasters (q394). The oracle replays
-      // planted dims and exact uniform luminance, so a path-resolve
-      // slip, base64 tear, or part-reference bug breaks the hash
-      // tri-scale.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.docImagesDoc _),
-        decoder = graft.sources.AutoPdfDecoder())
-    }),
-
-    "q401_pdf_jbig2_custom_table" -> ((s, dir) => {
-      // JBIG2 CUSTOM Huffman tables (r18 -- T.88 SS B.2 / segment
-      // type 53, entirely structural: per-line prefix/range lengths
-      // from the stream, canonical B.3 assignment, Kraft-validated):
-      // per doc a Huffman text region whose DT deltas ride a custom
-      // table selected by SBHUFFDT=3 from the referred table segment,
-      // placing two solid k-square glyphs with a cycling second-strip
-      // T delta. Black count is closed-form, so a line-walk slip,
-      // select-order bug, or lower/upper-escape error breaks the hash
-      // tri-scale.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.jbig2CustomTableDoc _))
-    }),
-
-    "q409_avi_meta" -> ((s, dir) => {
-      // AVI VIDEO metadata (r19 -- beyond the ask: the legacy RIFF
-      // container, the last codec-less video family alongside
-      // ISO-BMFF (q390) and Matroska (q400)): per doc a RIFF AVI with
-      // a planted AVIMAINHEADER -- µs/frame a multiple of 1000 so
-      // duration-ms is exact, odd ids carrying an odd-sized JUNK
-      // chunk before the header list (word-alignment exercise), every
-      // container a LIST movi decoy after it. The oracle replays the
-      // planted values incl. the format column, so a chunk-walk slip,
-      // an alignment bug, or a field-offset error breaks the hash
-      // tri-scale.
-      Multimodal.decodeVideoMetadataTagged(
-        Tables.documents(s, dir)
-          .select(col("doc_id"),
-            udf(PdfFixtures.aviDoc _).apply(col("doc_id")).as("media")))
-        .toDF()
-    }),
-
-    "q400_mkv_meta" -> ((s, dir) => {
-      // Matroska/WebM VIDEO metadata (r18 -- the remaining video
-      // container class, same codec-less discipline as the q390
-      // ISO-BMFF walk: RFC 8794 EBML varint elements, public Matroska
-      // IDs): per doc one container cycling the matroska/webm
-      // DocTypes, with the TimestampScale OMITTED on id%3==0 (the 1e6
-      // default must hold) or planted 500k/250k, the Duration an
-      // 8-byte float of ticks (exact integer values), planted video
-      // dims, and on odd ids an extra AUDIO TrackEntry that must
-      // count but not displace the dims. The oracle replays planted
-      // values incl. the format column, so a varint-width slip,
-      // default-scale bug, float misread, or track-walk error breaks
-      // the hash tri-scale.
-      Multimodal.decodeVideoMetadataTagged(
-        Tables.documents(s, dir)
-          .select(col("doc_id"),
-            udf(PdfFixtures.mkvDoc _).apply(col("doc_id")).as("media")))
-        .toDF()
-    }),
-
-    "q399_pdf_jbig2_refined_symbols" -> ((s, dir) => {
-      // JBIG2 refinement-coded SYMBOLS (r18 -- past the verdict ask,
-      // which covered region refinement: T.88 SS 6.4.11 SBREFINE
-      // per-instance refinement and SS 6.5.8.2 SDREFAGG
-      // dictionary-level refinement, the per-glyph second pass real
-      // scanner output uses): even docs refine a text instance's
-      // solid glyph into a larger hollow border; odd docs derive a
-      // hollow symbol from an IMPORTED dictionary's solid one
-      // (single-instance aggregate). Black counts are closed-form, so
-      // an IARI/IAAI misread, RD-offset slip, aggregate symCodeLen
-      // error, or cross-dictionary pool bug breaks the hash
-      // tri-scale.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.jbig2RefinedSymbolsDoc _))
-    }),
-
-    "q395_xps_decode" -> ((s, dir) => {
-      // XPS decode (r18 -- VERDICT r17 Missing #1: PyMuPDF opens XPS,
-      // ref `downloader.py:385`): per doc a REAL OPC package
-      // (_rels/.rels fixedrepresentation rel -> .fdseq -> .fdoc ->
-      // FixedPage Glyphs UnicodeString, planted per-page word counts;
-      // odd ids split words across two Glyphs runs and use the
-      // OpenXPS namespace) routed through the production
-      // AutoPdfDecoder's ZIP classifier. The oracle replays the
-      // planted counts, so an OPC walk slip, page-order bug, or
-      // Glyphs-join slip breaks the hash tri-scale.
-      val gen = udf(PdfFixtures.xpsDoc _)
-      val docs = Tables.documentsFanned(s, dir)
-        .select(col("doc_id"), gen(col("doc_id")).as("payload"))
-      val decoded = DocPipeline.decodePages(docs,
-        graft.sources.AutoPdfDecoder(), "payload")
-      decoded.select(col("doc_id"),
-          posexplode(col("pages")).as(Seq("g", "page")))
-        .select(col("doc_id"), col("g").cast("long").as("g"),
-          size(split(trim(regexp_replace(col("page"),
-            lit("<[^>]+>"), lit(" "))), " +")).cast("long").as("n_words"))
-    }),
-
-    "q396_fb2_decode" -> ((s, dir) => {
-      // FB2 decode (r18 -- the FictionBook XML ebook class PyMuPDF
-      // opens): per doc an FB2 with planted per-section word counts
-      // (odd ids nest a subsection whose words must stay on the
-      // parent page -- the depth scan, not a regex, owns the split),
-      // routed through the production AutoPdfDecoder. One page per
-      // top-level body section.
-      val gen = udf(PdfFixtures.fb2Doc _)
-      val docs = Tables.documentsFanned(s, dir)
-        .select(col("doc_id"), gen(col("doc_id")).as("payload"))
-      val decoded = DocPipeline.decodePages(docs,
-        graft.sources.AutoPdfDecoder(), "payload")
-      decoded.select(col("doc_id"),
-          posexplode(col("pages")).as(Seq("g", "page")))
-        .select(col("doc_id"), col("g").cast("long").as("g"),
-          size(split(trim(regexp_replace(col("page"),
-            lit("<[^>]+>"), lit(" "))), " +")).cast("long").as("n_words"))
-    }),
-
-    "q407_pdf_ycck_jpeg" -> ((s, dir) => {
-      // YCCK /DCTDecode JPEGs (r19 -- VERDICT r18 Missing #4): the
-      // Adobe transform=2 class q385 left fail-closed. The decoder
-      // reads the APP14 transform byte and inverts the stored YCbCr
-      // back to the inverted-CMY channels (JFIF SS 7 inverse,
-      // round-half-up, [0,255] clamp) before the Adobe un-invert and
-      // the SS 8.6.4.4 additive clamp. The oracle replays the planted
-      // stored samples through the same IEEE expression term by term,
-      // so a missed inverse, a wrong matrix constant, or a rounding
-      // slip breaks the hash tri-scale.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.ycckJpegDoc _))
-    }),
-
-    "q406_pdf_jbig2_multi_agg" -> ((s, dir) => {
-      // MULTI-instance SDREFAGG (r19 -- VERDICT r18 Missing #3, T.88
-      // SS 6.5.8.2.1): an aggregate dictionary symbol composed by a
-      // NESTED text region of TWO instances (one refined via the
-      // shared GR state, one plain) against an imported dictionary,
-      // then placed by a final region. The nested region's IADT/IAFS/
-      // IADS/IARI/IARDW/IARDH statistics are dictionary-level -- a
-      // fresh-stats misread desynchronizes the arithmetic stream and
-      // shears every later pixel. Closed-form black counts, tri-scale.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.jbig2MultiAggDoc _))
-    }),
-
-    "q405_pdf_jbig2_huffman_refinement" -> ((s, dir) => {
-      // JBIG2 HUFFMAN-coded refinement (r19 -- VERDICT r18 Missing
-      // #2, the last JBIG2 text-region class; fax-origin second-pass
-      // streams): the q399 even-leg geometry driven through an SBHUFF
-      // text region -- raw RI bits, RDW/RDH via the standard B.14
-      // table, RDX/RDY via B.15 (transcription validated by the
-      // Kraft-completeness + contiguous-coverage invariants the spec
-      // tables satisfy by design, asserted in Round19Spec), BMSIZE-
-      // framed byte-aligned arithmetic refinement blocks with fresh
-      // GR state per instance. Closed-form black counts break the
-      // hash on any table or framing slip, tri-scale.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.jbig2HuffmanRefineDoc _))
-    }),
-
-    "q410_pnm_decode" -> ((s, dir) => {
-      // binary Netpbm documents (r19 -- beyond the ask: the Netpbm
-      // family fitz opens, decoded FROM SCRATCH with real luminance
-      // because the raster is raw samples -- no codec needed, unlike
-      // the header-only WebP/JPX/PSD boundary): legs cycle P4
-      // (bilevel, first row black, non-byte-aligned width so row
-      // padding is exercised), P5 (uniform gray), P6 (uniform RGB,
-      // q402 color law), with #-comments in odd headers. Routed as
-      // image documents through the production AutoPdfDecoder; the
-      // oracle replays dims and exact per-leg luminance, so a token
-      // -walk slip, a bit-order error, a padding leak, or a maxval
-      // -scale bug breaks the hash tri-scale. The ASCII P1-P3 twins
-      // stay in the TXT class by design (printable text).
-      pdfImageFeatures(s, dir, udf(PdfFixtures.pnmDoc _),
-        decoder = graft.sources.AutoPdfDecoder())
-    }),
-
-    "q411_psd_meta" -> ((s, dir) => {
-      // PSD documents (r19 -- beyond the ask: fitz opens Photoshop
-      // files; the JDK ships no PSD codec, so this is the q384/JPX
-      // discipline -- validated-header dims surface, luminance
-      // ABSENT, never fabricated): per doc a minimal PSD (v1 header,
-      // reserved-zeros check, planar RGB data) routed as an image
-      // document. The oracle replays planted dims and pins lum_u6
-      // NULL, so a header-offset slip, a fabricated luminance, or a
-      // dropped payload breaks the hash/row count tri-scale.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.psdDoc _),
-        decoder = graft.sources.AutoPdfDecoder())
-    }),
-
-    "q408_image_as_document" -> ((s, dir) => {
-      // Bare-raster documents (r19 -- beyond the verdict ask, the
-      // last fitz document-open family: `Document(stream=...)` on a
-      // raw image yields a one-page document embedding the raster;
-      // ref `downloader.py:385` hands fitz any payload): per doc one
-      // uniform planted-color raster whose CONTAINER cycles the four
-      // JDK-lossless formats (png/bmp/gif/tiff -- uniform color
-      // survives each exactly), routed through the production
-      // AutoPdfDecoder image route (payload surfaced VERBATIM, no
-      // re-encode -- the /DCTDecode discipline) into the real codec.
-      // The oracle replays planted dims and exact uniform luminance,
-      // so a magic-sniff slip, a lossy re-encode, or a dropped
-      // container class breaks the hash tri-scale. Page shape (one
-      // page, zero words) is pinned in Round19Spec.
-      pdfImageFeatures(s, dir, udf(PdfFixtures.imageDoc _),
-        decoder = graft.sources.AutoPdfDecoder())
-    }),
-
-    "q403_svg_decode" -> ((s, dir) => {
-      // SVG decode (r19 -- VERDICT r18 Missing #1: PyMuPDF opens .svg
-      // as a one-page vector document whose text is its <text>
-      // elements; ref `downloader.py:385`): per doc an SVG with a
-      // planted word count routed through the production
-      // AutoPdfDecoder -- odd ids carry an XML prologue (decl +
-      // comment decoy + DOCTYPE), a namespace-prefixed root, words
-      // split across two <text> elements with a nested <tspan> and an
-      // entity escape. The oracle replays the planted count, so a
-      // root-element misdetect, comment leak, tspan strip slip, or
-      // unescape bug breaks the hash tri-scale.
-      val gen = udf(PdfFixtures.svgDoc _)
-      val docs = Tables.documentsFanned(s, dir)
-        .select(col("doc_id"), gen(col("doc_id")).as("payload"))
-      val decoded = DocPipeline.decodePages(docs,
-        graft.sources.AutoPdfDecoder(), "payload")
-      decoded.select(col("doc_id"),
-          posexplode(col("pages")).as(Seq("g", "page")))
-        .select(col("doc_id"), col("g").cast("long").as("g"),
-          size(split(trim(regexp_replace(col("page"),
-            lit("<[^>]+>"), lit(" "))), " +")).cast("long").as("n_words"))
-    }),
-
-    "q404_txt_decode" -> ((s, dir) => {
-      // plain-TXT decode (r19 -- the last PyMuPDF document class:
-      // fitz paginates bare text): per doc a text payload with
-      // planted per-page word counts under the DETERMINISTIC
-      // 66-lines-per-page contract (PlainDocs.LinesPerPage -- a
-      // documented engine contract like FB2 sections and MOBI
-      // pagebreaks, since PyMuPDF's layout reflow is not reproducible
-      // engine output); odd ids use CRLF endings and a trailing
-      // terminator. The oracle replays the planted counts, so a
-      // pagination slip, a CRLF split bug, or a trailing-line
-      // off-by-one breaks the hash tri-scale.
-      val gen = udf(PdfFixtures.txtDoc _)
-      val docs = Tables.documentsFanned(s, dir)
-        .select(col("doc_id"), gen(col("doc_id")).as("payload"))
-      val decoded = DocPipeline.decodePages(docs,
-        graft.sources.AutoPdfDecoder(), "payload")
-      decoded.select(col("doc_id"),
-          posexplode(col("pages")).as(Seq("g", "page")))
-        .select(col("doc_id"), col("g").cast("long").as("g"),
-          size(split(trim(regexp_replace(col("page"),
-            lit("<[^>]+>"), lit(" "))), " +")).cast("long").as("n_words"))
-    }),
-
-    "q397_mobi_decode" -> ((s, dir) => {
-      // MOBI/PalmDOC decode (r18 -- the ebook-crawl long tail PyMuPDF
-      // opens): per doc a PDB book with planted per-page word counts
-      // behind the REAL PalmDOC LZ77 inflater -- cycling stored vs
-      // compressed records, plain MOBI vs extra-data trailers
-      // (varint + multibyte, stripped per record) vs bare TEXt/REAd
-      // PalmDOC, multi-record concatenation at every id. Pages split
-      // on the format's own mbp:pagebreak marker.
-      val gen = udf(PdfFixtures.mobiDoc _)
-      val docs = Tables.documentsFanned(s, dir)
-        .select(col("doc_id"), gen(col("doc_id")).as("payload"))
-      val decoded = DocPipeline.decodePages(docs,
-        graft.sources.AutoPdfDecoder(), "payload")
-      decoded.select(col("doc_id"),
-          posexplode(col("pages")).as(Seq("g", "page")))
-        .select(col("doc_id"), col("g").cast("long").as("g"),
-          size(split(trim(regexp_replace(col("page"),
-            lit("<[^>]+>"), lit(" "))), " +")).cast("long").as("n_words"))
-    }),
-  )
+  /** Every catalog query with its oracle, built once; names are unique. */
+  lazy val catalog: Seq[QuerySpec] = {
+    val all = RelationalQueries.specs ++ TemporalQueries.specs ++
+      EventQueries.specs ++ TimeSeriesQueries.specs ++ ExtractionQueries.specs ++
+      TextQueries.specs ++ DedupQueries.specs ++ SimilarityQueries.specs ++
+      DescriptiveQueries.specs ++ InferenceQueries.specs ++ GraphQueries.specs ++
+      CurationQueries.specs ++ DecodeQueries.specs
+    val dups = all.groupBy(_.name).collect { case (n, v) if v.size > 1 => n }
+    require(dups.isEmpty, s"duplicate catalog query names: ${dups.mkString(", ")}")
+    all
+  }
+
+  /** Every query by name. Iteration follows the hash order of the name
+    * set, so [[selected]] runs the catalog in one fixed order. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    catalog.map(q => q.name -> q.build).toMap
 
   /** Oracle SQL with every `round()` rewritten to the portable floor
-    * form — see pround/portableSqlRounds. Keep authoring new oracles
-    * with plain `round(x, n)`; the rewrite keeps both engines exact. */
-  def oracleSql: Map[String, String] =
-    oracleSqlRaw.map { case (k, v) => k -> portableSqlRounds(v) }
-
-  private def oracleSqlRaw: Map[String, String] = Map(
-    "q01_pruned_scan" ->
-      """SELECT l_orderkey, l_partkey, l_extendedprice FROM lineitem
-        |WHERE l_shipdate < TIMESTAMP '1996-01-01'""".stripMargin,
-
-    "q02_agg_pricing" ->
-      s"""SELECT l_returnflag, l_linestatus,
-         |  CAST(SUM(CAST(l_quantity AS $D)) AS DOUBLE) AS sum_qty,
-         |  CAST(SUM(CAST(l_extendedprice AS $D)) AS DOUBLE) AS sum_base_price,
-         |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS $D)) AS DOUBLE) AS sum_disc_price,
-         |  COUNT(*) AS count_order,
-         |  CAST(SUM(CAST(l_quantity AS $D)) AS DOUBLE) / COUNT(*) AS avg_qty
-         |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q03_join_broadcast" ->
-      s"""SELECT r_name, n_name, COUNT(*) AS n_cust,
-         |  CAST(SUM(CAST(c_acctbal AS $D)) AS DOUBLE) AS total_acctbal
-         |FROM customer
-         |JOIN nation ON c_nationkey = n_nationkey
-         |JOIN region ON n_regionkey = r_regionkey
-         |GROUP BY r_name, n_name""".stripMargin,
-
-    "q04_join_agg" ->
-      s"""SELECT o_orderpriority,
-         |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS $D)) AS DOUBLE) AS revenue,
-         |  COUNT(DISTINCT o_orderkey) AS n_orders
-         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-         |GROUP BY o_orderpriority""".stripMargin,
-
-    "q05_semi_join" ->
-      """SELECT o_orderstatus, COUNT(*) AS n FROM orders
-        |WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem WHERE l_quantity >= 49)
-        |GROUP BY o_orderstatus""".stripMargin,
-
-    "q06_anti_join" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin,
-
-    "q07_window_topn" ->
-      """SELECT o_orderpriority, o_orderkey, o_totalprice, rn FROM (
-        |  SELECT o_orderpriority, o_orderkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_orderpriority
-        |                       ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |  FROM orders) t WHERE rn <= 3""".stripMargin,
-
-    "q08_window_running" ->
-      s"""SELECT l_suppkey, l_orderkey, l_linenumber,
-         |  CAST(SUM(CAST(l_quantity AS $D)) OVER (
-         |    PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber, l_quantity, l_extendedprice
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_qty,
-         |  lag(l_quantity, 1) OVER (
-         |    PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber, l_quantity, l_extendedprice) AS prev_qty
-         |FROM lineitem""".stripMargin,
-
-    "q09_except" ->
-      """SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-        |EXCEPT
-        |SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'""".stripMargin,
-
-    "q10_intersect" ->
-      """SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-        |INTERSECT
-        |SELECT o_custkey FROM orders WHERE o_orderstatus = 'P'""".stripMargin,
-
-    "q11_rollup" ->
-      s"""SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-         |  CAST(SUM(CAST(l_quantity AS $D)) AS DOUBLE) AS sum_qty
-         |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-
-    "q12_cube" ->
-      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
-        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""".stripMargin,
-
-    "q13_topk" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "q14_theta_join" ->
-      """SELECT n1.n_regionkey, n1.n_name AS nation_a, n2.n_name AS nation_b
-        |FROM nation n1 JOIN nation n2
-        |  ON n1.n_regionkey = n2.n_regionkey AND n1.n_nationkey < n2.n_nationkey""".stripMargin,
-
-    "q15_asof_join" ->
-      s"""$evCte,
-         |clicks AS (SELECT event_id, user_id, ts FROM ev WHERE event_type = 'click'),
-         |purchases AS (
-         |  SELECT user_id, ts, MAX(event_id) AS purchase_id,
-         |         max_by(value, event_id) AS purchase_value
-         |  FROM ev WHERE event_type = 'purchase' GROUP BY user_id, ts)
-         |SELECT l.event_id, l.user_id, l.ts,
-         |       r.purchase_id AS prev_purchase_id,
-         |       r.purchase_value AS prev_purchase_value
-         |FROM clicks l ASOF LEFT JOIN purchases r
-         |  ON l.user_id = r.user_id AND l.ts >= r.ts""".stripMargin,
-
-    "q16_date_agg" ->
-      s"""$evCte
-         |SELECT date_trunc('day', ts) AS day, event_type, COUNT(*) AS n,
-         |  CAST(SUM(CAST(value AS $D)) AS DOUBLE) AS total_value
-         |FROM ev GROUP BY 1, 2""".stripMargin,
-
-    "q17_json_extract" ->
-      """SELECT event_type,
-        |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-        |  MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k,
-        |  COUNT(*) AS n
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    "q18_window_10min" ->
-      s"""$evCte
-         |SELECT time_bucket(INTERVAL '10 minutes', ts) AS window_start, event_type,
-         |  COUNT(*) AS n, CAST(SUM(CAST(value AS $D)) AS DOUBLE) AS total_value
-         |FROM ev GROUP BY 1, 2""".stripMargin,
-
-    "q19_session_window" -> sessionOracle,
-
-    "q78_stream_session" -> sessionOracle,
-
-    "q101_custom_session" -> sessionOracle,
-
-    "q106_semdedup" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        |c AS (SELECT vec_id AS cluster, emb AS cv FROM e WHERE vec_id < 8),
-        |d AS (SELECT e.vec_id, c.cluster, list_distance(e.emb, c.cv) AS dist FROM e, c),
-        |a AS (SELECT vec_id, cluster FROM (
-        |        SELECT vec_id, cluster,
-        |          row_number() OVER (PARTITION BY vec_id ORDER BY dist, cluster) AS rk
-        |        FROM d) WHERE rk = 1),
-        |p AS (SELECT x.cluster, x.vec_id AS key_a, y.vec_id AS key_b
-        |      FROM a x JOIN a y ON x.cluster = y.cluster AND x.vec_id < y.vec_id)
-        |SELECT CAST(p.cluster AS BIGINT) AS cluster, key_a, key_b,
-        |  list_cosine_similarity(ea.emb, eb.emb) AS cosine
-        |FROM p JOIN e ea ON p.key_a = ea.vec_id JOIN e eb ON p.key_b = eb.vec_id
-        |WHERE list_cosine_similarity(ea.emb, eb.emb) >= 0.4""".stripMargin,
-
-    "q107_boilerplate_lines" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |p AS (SELECT doc_id, ws, CAST(ceil(len(ws)/5.0) AS INTEGER) AS np FROM t),
-        |l AS (SELECT p.doc_id, CAST(g.i AS BIGINT) AS line_no,
-        |        array_to_string(ws[g.i*5+1 : least((g.i+1)*5, len(ws))], ' ') AS line
-        |      FROM p, LATERAL (SELECT unnest(generate_series(0, np-1)) AS i) g),
-        |common AS (SELECT line FROM l GROUP BY line HAVING COUNT(DISTINCT doc_id) >= 3),
-        |k AS (SELECT doc_id, line_no, line FROM l
-        |      WHERE line NOT IN (SELECT line FROM common))
-        |SELECT doc_id, string_agg(line, ' ' ORDER BY line_no) AS text,
-        |       COUNT(*) AS n_lines_kept
-        |FROM k GROUP BY doc_id""".stripMargin,
-
-    "q108_quality_classifier" ->
-      """WITH f AS (SELECT doc_id,
-        |  least(CAST(len(regexp_extract_all(text, '\S+')) AS DOUBLE) / 100.0, 1.0) AS f_tok,
-        |  CASE WHEN len(regexp_extract_all(text, '\S+')) = 0 THEN 0.0
-        |       ELSE CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|to|a|in|is|that|it|for)\b')) AS DOUBLE)
-        |            / len(regexp_extract_all(text, '\S+')) END AS f_stop,
-        |  CASE WHEN length(text) = 0 THEN 0.0
-        |       ELSE CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / length(text) END AS f_alpha,
-        |  CASE WHEN length(text) = 0 THEN 0.0
-        |       ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE) / length(text) END AS f_punct
-        |FROM documents),
-        |z AS (SELECT doc_id,
-        |        f_tok * 1.2 + f_stop * 2.0 + f_alpha * 1.5 + f_punct * (-3.0) + (-1.0) AS z
-        |      FROM f)
-        |SELECT doc_id, round(1.0 / (1.0 + exp(-z)), 9) AS score,
-        |  round(1.0 / (1.0 + exp(-z)), 9) >= 0.5 AS keep
-        |FROM z""".stripMargin,
-
-    "q109_split_assign" ->
-      """SELECT doc_id,
-        |  CASE WHEN (CAST(((doc_id % 2147483647) * 48271 % 2147483647) * 48271 % 2147483647 * 48271 % 2147483647 AS DOUBLE) + 0.5) / 2147483647.0 < 0.8 THEN 'train'
-        |       WHEN (CAST(((doc_id % 2147483647) * 48271 % 2147483647) * 48271 % 2147483647 * 48271 % 2147483647 AS DOUBLE) + 0.5) / 2147483647.0 < 0.9 THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM documents""".stripMargin,
-
-    "q110_nucleus_select" ->
-      """WITH d AS (SELECT doc_id, source,
-        |  CAST(least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-        |    * (CASE WHEN length(text) = 0 THEN 0.0
-        |            ELSE CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / length(text) END)
-        |    * (1.0 - least((CASE WHEN length(text) = 0 THEN 0.0
-        |            ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE) / length(text) END) * 5.0, 1.0))
-        |   AS DECIMAL(27,12)) AS q
-        |FROM documents),
-        |w AS (SELECT doc_id, source, q,
-        |  SUM(q) OVER (PARTITION BY source ORDER BY q DESC, doc_id ROWS UNBOUNDED PRECEDING) AS cq,
-        |  SUM(q) OVER (PARTITION BY source) AS tq
-        |FROM d)
-        |SELECT doc_id, source, CAST(q AS DOUBLE) AS quality
-        |FROM w WHERE cq - q < tq * 0.5""".stripMargin,
-
-    "q111_markov" ->
-      s"""$evCte,
-         |t AS (SELECT user_id, event_type AS src,
-         |        lead(event_type, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-         |      FROM ev),
-         |c AS (SELECT src, dst, COUNT(*) AS c FROM t WHERE dst IS NOT NULL GROUP BY src, dst),
-         |tot AS (SELECT src, SUM(c) AS total FROM c GROUP BY src)
-         |SELECT c.src, c.dst, c.c, round(CAST(c.c AS DOUBLE) / tot.total, 9) AS p
-         |FROM c JOIN tot USING (src)""".stripMargin,
-
-    "q112_pagerank" ->
-      s"""$evCte,
-         |pg AS (SELECT user_id, ts, event_id,
-         |         CAST(json_extract_string(props, '$$.k') AS BIGINT) AS page FROM ev),
-         |tr AS (SELECT user_id, page AS src,
-         |         lead(page, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst FROM pg),
-         |e AS (SELECT src, dst, COUNT(*) AS w FROM tr WHERE dst IS NOT NULL GROUP BY src, dst),
-         |wo AS (SELECT src, SUM(w) AS wout FROM e GROUP BY src),
-         |f AS (SELECT e.src, e.dst, CAST(e.w AS DOUBLE) / CAST(wo.wout AS DOUBLE) AS frac
-         |      FROM e JOIN wo USING (src)),
-         |nodes AS (SELECT DISTINCT node FROM
-         |            (SELECT src AS node FROM e UNION SELECT dst FROM e)),
-         |nn AS (SELECT COUNT(*) AS n_nodes FROM nodes),
-         |r0 AS (SELECT node, n_nodes, round(CAST(1.0 AS DOUBLE) / n_nodes, 9) AS rank
-         |       FROM nodes, nn),
-         |c1 AS (SELECT f.dst, SUM(CAST(r.rank * f.frac AS DECIMAL(27,12))) AS s
-         |       FROM r0 r JOIN f ON r.node = f.src GROUP BY f.dst),
-         |r1 AS (SELECT r.node, r.n_nodes,
-         |         round((CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / r.n_nodes
-         |               + CAST(0.85 AS DOUBLE) * coalesce(CAST(c1.s AS DOUBLE), 0.0), 9) AS rank
-         |       FROM r0 r LEFT JOIN c1 ON r.node = c1.dst),
-         |c2 AS (SELECT f.dst, SUM(CAST(r.rank * f.frac AS DECIMAL(27,12))) AS s
-         |       FROM r1 r JOIN f ON r.node = f.src GROUP BY f.dst),
-         |r2 AS (SELECT r.node, r.n_nodes,
-         |         round((CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / r.n_nodes
-         |               + CAST(0.85 AS DOUBLE) * coalesce(CAST(c2.s AS DOUBLE), 0.0), 9) AS rank
-         |       FROM r1 r LEFT JOIN c2 ON r.node = c2.dst),
-         |c3 AS (SELECT f.dst, SUM(CAST(r.rank * f.frac AS DECIMAL(27,12))) AS s
-         |       FROM r2 r JOIN f ON r.node = f.src GROUP BY f.dst),
-         |r3 AS (SELECT r.node, r.n_nodes,
-         |         round((CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / r.n_nodes
-         |               + CAST(0.85 AS DOUBLE) * coalesce(CAST(c3.s AS DOUBLE), 0.0), 9) AS rank
-         |       FROM r2 r LEFT JOIN c3 ON r.node = c3.dst)
-         |SELECT node, rank FROM r3""".stripMargin,
-
-    "q113_retention" ->
-      s"""$evCte,
-         |d AS (SELECT user_id, CAST(ts AS DATE) AS d FROM ev),
-         |c AS (SELECT user_id, CAST(date_trunc('week', MIN(d)) AS DATE) AS cohort_week
-         |      FROM d GROUP BY user_id)
-         |SELECT cohort_week, CAST((d.d - c.cohort_week) // 7 AS BIGINT) AS week_offset,
-         |  COUNT(DISTINCT d.user_id) AS n_users
-         |FROM d JOIN c USING (user_id)
-         |GROUP BY cohort_week, week_offset""".stripMargin,
-
-    "q114_stream_enrich" ->
-      s"""$evCte
-         |SELECT n_name, COUNT(*) AS n,
-         |  CAST(SUM(CAST(value AS $D)) AS DOUBLE) AS total_value
-         |FROM ev JOIN customer ON ev.user_id = c_custkey
-         |JOIN nation ON c_nationkey = n_nationkey
-         |GROUP BY n_name""".stripMargin,
-
-    "q156_pareto_frontier" ->
-      """WITH d AS (SELECT doc_id,
-        |    len(regexp_extract_all(text, '\S+')) AS wc,
-        |    least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-        |      * (CASE WHEN length(text) = 0 THEN 0.0
-        |              ELSE CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / length(text) END)
-        |      * (1.0 - least((CASE WHEN length(text) = 0 THEN 0.0
-        |              ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE) / length(text) END) * 5.0, 1.0)) AS q
-        |  FROM documents)
-        |SELECT a.doc_id, round(a.q, 9) AS quality, CAST(a.wc AS INTEGER) AS wc
-        |FROM d a
-        |WHERE NOT EXISTS (SELECT 1 FROM d b WHERE b.q > a.q AND b.wc > a.wc)""".stripMargin,
-
-    "q154_dedup_provenance" ->
-      """WITH RECURSIVE docs AS (SELECT doc_id, text FROM documents WHERE doc_id < 100),
-        |w AS (SELECT doc_id,
-        |        list_filter(string_split_regex(
-        |          regexp_replace(lower(text), '[^\p{L}\p{N}\s]', '', 'g'), '\s+'),
-        |          x -> len(x) > 0) AS words
-        |      FROM docs),
-        |sh AS (SELECT doc_id,
-        |         list_distinct([array_to_string(words[i:i+1], ' ')
-        |                        FOR i IN generate_series(1, greatest(len(words) - 1, 1))]) AS sh
-        |       FROM w WHERE len(words) > 0),
-        |pairs AS (
-        |  SELECT a.doc_id AS key_a, b.doc_id AS key_b
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |      / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.08),
-        |edges AS (SELECT key_a AS src, key_b AS dst FROM pairs
-        |          UNION SELECT key_b, key_a FROM pairs),
-        |reach(node, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT e.src, reach.r FROM reach JOIN edges e ON e.dst = reach.node),
-        |comp AS (SELECT node AS k, MIN(r) AS component FROM reach GROUP BY node)
-        |SELECT k AS absorbed, component AS survivor FROM comp WHERE k != component""".stripMargin,
-
-    "q155_quantile_bands" ->
-      s"""$evCte
-         |SELECT CAST(date_trunc('week', ts) AS DATE) AS week, event_type,
-         |  COUNT(*) AS n,
-         |  round(quantile_cont(value, 0.5), 9) AS p50,
-         |  round(quantile_cont(value, 0.95), 9) AS p95
-         |FROM ev GROUP BY 1, 2""".stripMargin,
-
-    "q153_skew_report" ->
-      """WITH c AS (SELECT l_partkey, COUNT(*) AS c FROM lineitem GROUP BY l_partkey),
-        |t AS (SELECT SUM(c) AS total, COUNT(*) AS n_keys, MAX(c) AS max_c FROM c)
-        |SELECT l_partkey, CAST(c AS BIGINT) AS c,
-        |  round(CAST(c AS DOUBLE) / total, 9) AS share,
-        |  round(CAST(max_c AS DOUBLE) * CAST(n_keys AS DOUBLE) / CAST(total AS DOUBLE), 9) AS skew_factor
-        |FROM c, t ORDER BY c DESC, l_partkey LIMIT 10""".stripMargin,
-
-    "q151_stream_topk" ->
-      s"""$evCte,
-         |c AS (SELECT CAST(json_extract_string(props, '$$.k') AS BIGINT) AS page,
-         |        COUNT(*) AS n
-         |      FROM ev GROUP BY 1)
-         |SELECT page, n FROM c ORDER BY n DESC, page LIMIT 10""".stripMargin,
-
-    "q152_rate_spikes" ->
-      s"""$evCte,
-         |h AS (SELECT date_trunc('hour', ts) AS hour, COUNT(*) AS n FROM ev GROUP BY 1),
-         |st AS (SELECT CAST(SUM(CAST(n AS DECIMAL(27,12))) AS DOUBLE) AS s1,
-         |         CAST(SUM(CAST(n * n AS DECIMAL(27,12))) AS DOUBLE) AS s2,
-         |         COUNT(*) AS k FROM h)
-         |SELECT hour, n, round((n - s1 / k) / sqrt((s2 - s1 * s1 / k) / (k - 1)), 9) AS z
-         |FROM h, st
-         |WHERE abs(round((n - s1 / k) / sqrt((s2 - s1 * s1 / k) / (k - 1)), 9)) > 2.5""".stripMargin,
-
-    "q148_covisitation" ->
-      s"""$sessionPagesCte,
-         |p AS (SELECT a.page AS page_a, b.page AS page_b, COUNT(*) AS n_sessions
-         |      FROM d a JOIN d b ON a.user_id = b.user_id AND a.sid = b.sid AND a.page < b.page
-         |      GROUP BY a.page, b.page)
-         |SELECT page_a, page_b, CAST(n_sessions AS BIGINT) AS n_sessions FROM p
-         |ORDER BY n_sessions DESC, page_a, page_b LIMIT 30""".stripMargin,
-
-    "q149_time_decay" ->
-      s"""$evCte,
-         |e2 AS (SELECT user_id, CAST(epoch_us(ts) // 1000000 AS BIGINT) AS sec FROM ev),
-         |mx AS (SELECT MAX(sec) AS mx FROM e2)
-         |SELECT user_id, COUNT(*) AS n_events,
-         |  round(CAST(SUM(CAST(round(exp(CAST(sec - mx AS DOUBLE) / (30.0 * 86400.0)), 9)
-         |    AS DECIMAL(18,9))) AS DOUBLE), 9) AS decayed_score
-         |FROM e2, mx GROUP BY user_id""".stripMargin,
-
-    "q150_calibration" ->
-      """WITH f AS (SELECT doc_id, lang,
-        |  least(CAST(len(regexp_extract_all(text, '\S+')) AS DOUBLE) / 100.0, 1.0) AS f_tok,
-        |  CASE WHEN len(regexp_extract_all(text, '\S+')) = 0 THEN 0.0
-        |       ELSE CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|to|a|in|is|that|it|for)\b')) AS DOUBLE)
-        |            / len(regexp_extract_all(text, '\S+')) END AS f_stop,
-        |  CASE WHEN length(text) = 0 THEN 0.0
-        |       ELSE CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / length(text) END AS f_alpha,
-        |  CASE WHEN length(text) = 0 THEN 0.0
-        |       ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE) / length(text) END AS f_punct
-        |FROM documents),
-        |z AS (SELECT doc_id, lang,
-        |        round(1.0 / (1.0 + exp(-(f_tok * 1.2 + f_stop * 2.0 + f_alpha * 1.5 + f_punct * (-3.0) + (-1.0)))), 9) AS score
-        |      FROM f),
-        |b AS (SELECT CAST(least(floor(score * 10), 9) AS BIGINT) AS bucket, score,
-        |        CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-        |      FROM z)
-        |SELECT bucket, COUNT(*) AS n,
-        |  round(CAST(SUM(CAST(score AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*), 9) AS mean_score,
-        |  round(CAST(SUM(y) AS DOUBLE) / COUNT(*), 9) AS pos_rate
-        |FROM b GROUP BY bucket""".stripMargin,
-
-    "q146_skipgram_pmi" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |tok AS (SELECT doc_id, CAST(g.i - 1 AS BIGINT) AS pos, ws[g.i] AS word
-        |        FROM t, LATERAL (SELECT unnest(generate_series(1, len(ws))) AS i) g
-        |        WHERE length(ws[g.i]) > 0),
-        |led AS (SELECT doc_id, word,
-        |          lead(word, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS n1,
-        |          lead(word, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS n2,
-        |          lead(word, 3) OVER (PARTITION BY doc_id ORDER BY pos) AS n3
-        |        FROM tok),
-        |pairs AS (SELECT word, n1 AS ctx FROM led WHERE n1 IS NOT NULL
-        |          UNION ALL SELECT word, n2 FROM led WHERE n2 IS NOT NULL
-        |          UNION ALL SELECT word, n3 FROM led WHERE n3 IS NOT NULL),
-        |ab AS (SELECT word, ctx, COUNT(*) AS c_ab FROM pairs GROUP BY word, ctx),
-        |a AS (SELECT word, SUM(c_ab) AS c_a FROM ab GROUP BY word),
-        |b AS (SELECT ctx AS cw, SUM(c_ab) AS c_b FROM ab GROUP BY ctx),
-        |n AS (SELECT SUM(c_ab) AS n_pairs FROM ab)
-        |SELECT ab.word, ab.ctx, ab.c_ab,
-        |  round(ln(CAST(ab.c_ab * n.n_pairs AS DOUBLE) / (a.c_a * b.c_b)), 9) AS pmi
-        |FROM ab JOIN a USING (word) JOIN b ON ab.ctx = b.cw, n
-        |WHERE ab.c_ab >= 8
-        |ORDER BY pmi DESC, ab.word, ab.ctx
-        |LIMIT 50""".stripMargin,
-
-    "q147_tfidf_pairs" ->
-      """WITH wd AS (SELECT doc_id,
-        |        list_filter(string_split_regex(
-        |          regexp_replace(lower(text), '[^\p{L}\p{N}\s]', '', 'g'), '\s+'),
-        |          x -> len(x) > 0) AS words
-        |      FROM documents),
-        |tok AS (SELECT doc_id, unnest(
-        |          [array_to_string(words[i:i+2], ' ')
-        |           FOR i IN generate_series(1, greatest(len(words) - 2, 1))]) AS w
-        |        FROM wd WHERE len(words) > 0),
-        |tf0 AS (SELECT doc_id, w, COUNT(*) AS tf FROM tok GROUP BY doc_id, w),
-        |dfp AS (SELECT w, COUNT(*) AS dfc FROM tf0 GROUP BY w),
-        |ndp AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM documents),
-        |tf AS (SELECT doc_id, tf0.w, tf FROM tf0 JOIN dfp ON tf0.w = dfp.w, ndp
-        |       WHERE dfc <= least(n_docs * 0.05, 250)),
-        |df AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY w),
-        |nd AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM documents),
-        |ti AS (SELECT doc_id, tf.w,
-        |         round(tf * ln(CAST(n_docs AS DOUBLE) / df.df), 9) AS wt
-        |       FROM tf JOIN df ON tf.w = df.w, nd),
-        |nm AS (SELECT doc_id,
-        |         sqrt(CAST(SUM(CAST(wt * wt AS DECIMAL(27,12))) AS DOUBLE)) AS norm
-        |       FROM ti GROUP BY doc_id),
-        |dots AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |           CAST(SUM(CAST(a.wt * b.wt AS DECIMAL(27,12))) AS DOUBLE) AS dot
-        |         FROM ti a JOIN ti b ON a.w = b.w AND a.doc_id < b.doc_id
-        |         GROUP BY a.doc_id, b.doc_id)
-        |SELECT doc_a, doc_b,
-        |  round(dot / (na.norm * nb.norm), 9) AS cosine
-        |FROM dots JOIN nm na ON doc_a = na.doc_id JOIN nm nb ON doc_b = nb.doc_id
-        |ORDER BY cosine DESC, doc_a, doc_b
-        |LIMIT 20""".stripMargin,
-
-    "q144_domain_coherence" ->
-      """WITH e AS (SELECT em.vec_id, CAST(em.embedding AS DOUBLE[]) AS emb, d.source
-        |           FROM embeddings em JOIN documents d ON em.vec_id = d.doc_id),
-        |x AS (SELECT source, vec_id, CAST(g.i - 1 AS BIGINT) AS dim,
-        |        emb[g.i] AS v, len(emb) AS nd
-        |      FROM e, LATERAL (SELECT unnest(generate_series(1, len(emb))) AS i) g),
-        |c AS (SELECT source, dim,
-        |        round(CAST(SUM(CAST(v AS DECIMAL(27,12))) AS DOUBLE) / COUNT(*), 9) AS cv
-        |      FROM x GROUP BY source, dim),
-        |cent AS (SELECT source,
-        |           list(CAST(cv AS REAL) ORDER BY dim) AS centroid
-        |         FROM c GROUP BY source),
-        |s AS (SELECT e.source, e.vec_id,
-        |        list_cosine_similarity(e.emb, CAST(cent.centroid AS DOUBLE[])) AS cos
-        |      FROM e JOIN cent USING (source)),
-        |r AS (SELECT source, vec_id, cos,
-        |        row_number() OVER (PARTITION BY source ORDER BY cos, vec_id) AS rank
-        |      FROM s)
-        |SELECT source, vec_id, cos, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 3""".stripMargin,
-
-    "q145_dataset_card" ->
-      """WITH d AS (SELECT doc_id, lang, text,
-        |    len(regexp_extract_all(text, '\S+')) AS wc,
-        |    least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-        |      * (CASE WHEN length(text) = 0 THEN 0.0
-        |              ELSE CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / length(text) END)
-        |      * (1.0 - least((CASE WHEN length(text) = 0 THEN 0.0
-        |              ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE) / length(text) END) * 5.0, 1.0)) AS q,
-        |    md5(text) AS h
-        |  FROM documents),
-        |dup AS (SELECT CAST(SUM(c - 1) AS BIGINT) AS n_exact_dups
-        |        FROM (SELECT COUNT(*) AS c FROM d GROUP BY h)),
-        |agg AS (SELECT COUNT(*) AS n_docs,
-        |    CAST(SUM(wc) AS BIGINT) AS n_tokens,
-        |    CAST(SUM(length(text)) AS BIGINT) AS n_chars,
-        |    COUNT(DISTINCT lang) AS n_langs,
-        |    CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_en,
-        |    round(quantile_cont(q, 0.5), 9) AS q_median,
-        |    round(MIN(q), 9) AS q_min, round(MAX(q), 9) AS q_max
-        |  FROM d)
-        |SELECT * FROM agg, dup""".stripMargin,
-
-    "q143_linreg_gd" ->
-      """WITH f AS (SELECT
-        |    least(CAST(len(regexp_extract_all(text, '\S+')) AS DOUBLE) / 100.0, 1.0) AS x0,
-        |    CASE WHEN length(text) = 0 THEN 0.0
-        |         ELSE CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / length(text) END AS x1,
-        |    least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-        |      * (CASE WHEN length(text) = 0 THEN 0.0
-        |              ELSE CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / length(text) END)
-        |      * (1.0 - least((CASE WHEN length(text) = 0 THEN 0.0
-        |              ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE) / length(text) END) * 5.0, 1.0)) AS y
-        |  FROM documents),
-        |p0 AS (SELECT CAST(0.0 AS DOUBLE) AS cw0, CAST(0.0 AS DOUBLE) AS cw1, CAST(0.0 AS DOUBLE) AS cb),
-        |g1 AS (SELECT
-        |    CAST(SUM(CAST((cb + x0 * cw0 + x1 * cw1 - y) * x0 AS DECIMAL(27,12))) AS DOUBLE) AS s0,
-        |    CAST(SUM(CAST((cb + x0 * cw0 + x1 * cw1 - y) * x1 AS DECIMAL(27,12))) AS DOUBLE) AS s1,
-        |    CAST(SUM(CAST((cb + x0 * cw0 + x1 * cw1 - y) AS DECIMAL(27,12))) AS DOUBLE) AS sb,
-        |    COUNT(*) AS n
-        |  FROM f, p0),
-        |p1 AS (SELECT round(cw0 - 0.5 * (s0 / n), 9) AS cw0,
-        |              round(cw1 - 0.5 * (s1 / n), 9) AS cw1,
-        |              round(cb - 0.5 * (sb / n), 9) AS cb FROM g1, p0),
-        |g2 AS (SELECT
-        |    CAST(SUM(CAST((cb + x0 * cw0 + x1 * cw1 - y) * x0 AS DECIMAL(27,12))) AS DOUBLE) AS s0,
-        |    CAST(SUM(CAST((cb + x0 * cw0 + x1 * cw1 - y) * x1 AS DECIMAL(27,12))) AS DOUBLE) AS s1,
-        |    CAST(SUM(CAST((cb + x0 * cw0 + x1 * cw1 - y) AS DECIMAL(27,12))) AS DOUBLE) AS sb,
-        |    COUNT(*) AS n
-        |  FROM f, p1),
-        |p2 AS (SELECT round(p1.cw0 - 0.5 * (s0 / n), 9) AS cw0,
-        |              round(p1.cw1 - 0.5 * (s1 / n), 9) AS cw1,
-        |              round(p1.cb - 0.5 * (sb / n), 9) AS cb FROM g2, p1),
-        |g3 AS (SELECT
-        |    CAST(SUM(CAST((cb + x0 * cw0 + x1 * cw1 - y) * x0 AS DECIMAL(27,12))) AS DOUBLE) AS s0,
-        |    CAST(SUM(CAST((cb + x0 * cw0 + x1 * cw1 - y) * x1 AS DECIMAL(27,12))) AS DOUBLE) AS s1,
-        |    CAST(SUM(CAST((cb + x0 * cw0 + x1 * cw1 - y) AS DECIMAL(27,12))) AS DOUBLE) AS sb,
-        |    COUNT(*) AS n
-        |  FROM f, p2),
-        |p3 AS (SELECT round(p2.cw0 - 0.5 * (s0 / n), 9) AS cw0,
-        |              round(p2.cw1 - 0.5 * (s1 / n), 9) AS cw1,
-        |              round(p2.cb - 0.5 * (sb / n), 9) AS cb FROM g3, p2)
-        |SELECT COUNT(*) AS n, cw0 AS w0, cw1 AS w1, cb AS b,
-        |  round(CAST(SUM(CAST((cb + x0 * cw0 + x1 * cw1 - y) * (cb + x0 * cw0 + x1 * cw1 - y)
-        |    AS DECIMAL(27,12))) AS DOUBLE) / COUNT(*), 6) AS mse
-        |FROM f, p3 GROUP BY cw0, cw1, cb""".stripMargin,
-
-    "q141_lexicon_rate" ->
-      """WITH tok AS (SELECT doc_id, w FROM (
-        |        SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w FROM documents)
-        |      WHERE length(w) > 0),
-        |tot AS (SELECT doc_id, COUNT(*) AS n_tokens FROM tok GROUP BY doc_id),
-        |fl AS (SELECT doc_id, COUNT(*) AS n_flagged FROM tok
-        |       WHERE w IN ('the', 'of', 'and', 'data') GROUP BY doc_id)
-        |SELECT tot.doc_id, n_tokens,
-        |  CAST(coalesce(n_flagged, 0) AS BIGINT) AS n_flagged,
-        |  round(CAST(coalesce(n_flagged, 0) AS DOUBLE) / n_tokens, 9) AS flag_rate,
-        |  round(CAST(coalesce(n_flagged, 0) AS DOUBLE) / n_tokens, 9) < 0.2 AS keep
-        |FROM tot LEFT JOIN fl ON tot.doc_id = fl.doc_id""".stripMargin,
-
-    "q142_snapshot_diff" ->
-      """WITH t AS (SELECT doc_id, md5(text) AS h_t FROM documents),
-        |y AS (SELECT doc_id,
-        |        md5(CASE WHEN doc_id % 100 = 50 THEN text || ' edited' ELSE text END) AS h_y
-        |      FROM documents WHERE doc_id < 400)
-        |SELECT CASE WHEN h_y IS NULL THEN 'added'
-        |            WHEN h_t IS NULL THEN 'removed'
-        |            WHEN h_t != h_y THEN 'changed'
-        |            ELSE 'unchanged' END AS status, COUNT(*) AS n
-        |FROM t FULL OUTER JOIN y USING (doc_id)
-        |GROUP BY 1""".stripMargin,
-
-    "q139_bigram_ppl" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |tok AS (SELECT doc_id, CAST(g.i - 1 AS BIGINT) AS pos, ws[g.i] AS word
-        |        FROM t, LATERAL (SELECT unnest(generate_series(1, len(ws))) AS i) g
-        |        WHERE length(ws[g.i]) > 0),
-        |bi AS (SELECT doc_id, word,
-        |         lead(word, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS next
-        |       FROM tok QUALIFY next IS NOT NULL),
-        |ab AS (SELECT word, next, COUNT(*) AS c_ab FROM bi GROUP BY word, next),
-        |a AS (SELECT word, SUM(c_ab) AS c_a FROM ab GROUP BY word),
-        |v AS (SELECT COUNT(DISTINCT next) AS vocab FROM ab),
-        |m AS (SELECT ab.word, ab.next,
-        |        round(ln((ab.c_ab + 0.5) / (CAST(a.c_a AS DOUBLE) + 0.5 * v.vocab)), 9) AS lp
-        |      FROM ab JOIN a USING (word), v)
-        |SELECT bi.doc_id, COUNT(*) AS n_bigrams,
-        |  round(CAST(SUM(CAST(lp AS DECIMAL(27,12))) AS DOUBLE) / COUNT(*), 6) AS mean_logprob
-        |FROM bi JOIN m ON bi.word = m.word AND bi.next = m.next
-        |GROUP BY bi.doc_id""".stripMargin,
-
-    "q140_readability" ->
-      """SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_words,
-        |  CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS BIGINT) AS n_sentences,
-        |  CAST(greatest(len(regexp_extract_all(lower(text), '[aeiouy]+')), 1) AS BIGINT) AS n_syllables,
-        |  round(206.835
-        |    - 1.015 * (CAST(len(regexp_extract_all(text, '\S+')) AS DOUBLE)
-        |               / greatest(len(regexp_extract_all(text, '[.!?]+')), 1))
-        |    - 84.6 * (CAST(greatest(len(regexp_extract_all(lower(text), '[aeiouy]+')), 1) AS DOUBLE)
-        |              / len(regexp_extract_all(text, '\S+'))), 9) AS flesch
-        |FROM documents
-        |WHERE len(regexp_extract_all(text, '\S+')) > 0""".stripMargin,
-
-    "q138_audio_windows" ->
-      """SELECT doc_id, CAST(g.i AS BIGINT) AS window_no,
-        |  CAST(g.i * 160 AS BIGINT) AS start_sample,
-        |  CAST(g.i * 160 + 400 AS BIGINT) AS end_sample
-        |FROM documents,
-        |  LATERAL unnest(generate_series(0, (octet_length(encode(text)) // 2 - 400) // 160)) AS g(i)
-        |WHERE octet_length(encode(text)) // 2 >= 400""".stripMargin,
-
-    "q136_sql_shingles" ->
-      """WITH w AS (SELECT doc_id,
-        |        list_filter(string_split_regex(
-        |          regexp_replace(lower(text), '[^\p{L}\p{N}\s]', '', 'g'), '\s+'),
-        |          x -> len(x) > 0) AS words
-        |      FROM documents),
-        |s AS (SELECT doc_id,
-        |        CASE WHEN len(words) = 0 THEN []
-        |             ELSE [array_to_string(words[i:i+2], ' ')
-        |                   FOR i IN generate_series(1, greatest(len(words) - 2, 1))] END AS sh
-        |      FROM w)
-        |SELECT doc_id, CAST(len(list_distinct(sh)) AS INTEGER) AS n_shingles,
-        |  CAST(len(sh) AS INTEGER) AS n_positions
-        |FROM s""".stripMargin,
-
-    "q132_source_overlap" ->
-      """WITH w AS (SELECT source,
-        |        list_filter(string_split_regex(
-        |          regexp_replace(lower(text), '[^\p{L}\p{N}\s]', '', 'g'), '\s+'),
-        |          x -> len(x) > 0) AS words
-        |      FROM documents),
-        |sh AS (SELECT source,
-        |         [array_to_string(words[i:i+2], ' ')
-        |          FOR i IN generate_series(1, greatest(len(words) - 2, 1))] AS sh
-        |       FROM w WHERE len(words) > 0),
-        |sg AS (SELECT DISTINCT source, unnest(sh) AS g FROM sh),
-        |tot AS (SELECT source, COUNT(*) AS n_a FROM sg GROUP BY source),
-        |p AS (SELECT a.source AS src_a, b.source AS src_b, COUNT(*) AS n_shared
-        |      FROM sg a JOIN sg b ON a.g = b.g AND a.source < b.source
-        |      GROUP BY a.source, b.source)
-        |SELECT src_a, src_b, CAST(n_shared AS BIGINT) AS n_shared,
-        |  CAST(n_a AS BIGINT) AS n_a,
-        |  round(CAST(n_shared AS DOUBLE) / n_a, 9) AS overlap_ratio
-        |FROM p JOIN tot ON tot.source = p.src_a
-        |WHERE n_shared >= 10""".stripMargin,
-
-    "q133_kwic" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |x AS (SELECT doc_id, ws, CAST(g.i - 1 AS BIGINT) AS pos
-        |      FROM t, LATERAL (SELECT unnest(generate_series(1, len(ws))) AS i) g
-        |      WHERE ws[g.i] = 'data')
-        |SELECT doc_id, pos,
-        |  array_to_string(ws[greatest(pos - 2, 1) : least(pos + 4, len(ws))], ' ') AS context
-        |FROM x""".stripMargin,
-
-    "q135_ttr" ->
-      """WITH w AS (SELECT source, unnest(string_split(text, ' ')) AS w FROM documents),
-        |f AS (SELECT source, w FROM w WHERE length(w) > 0)
-        |SELECT source, COUNT(DISTINCT w) AS n_types, COUNT(*) AS n_tokens,
-        |  round(CAST(COUNT(DISTINCT w) AS DOUBLE) / COUNT(*), 9) AS ttr
-        |FROM f GROUP BY source""".stripMargin,
-
-    "q131_stream_outer_join" ->
-      s"""$evCte,
-         |c AS (SELECT event_id AS click_id, user_id, ts AS click_ts FROM ev
-         |      WHERE event_type = 'click'),
-         |p AS (SELECT event_id AS purchase_id, user_id AS p_user, ts AS purchase_ts,
-         |        value AS purchase_value FROM ev WHERE event_type = 'purchase'),
-         |m AS (SELECT MAX(ts) - INTERVAL 480 MINUTE AS closed_ts FROM ev)
-         |SELECT click_id, c.user_id, click_ts, purchase_id, purchase_ts, purchase_value
-         |FROM c LEFT JOIN p
-         |  ON c.user_id = p.p_user
-         |  AND p.purchase_ts >= c.click_ts - INTERVAL 240 MINUTE
-         |  AND p.purchase_ts <= c.click_ts, m
-         |WHERE click_ts < m.closed_ts""".stripMargin,
-
-    "q129_profile_drift" ->
-      """WITH t AS (SELECT COUNT(*) AS rows_t,
-        |  SUM(CASE WHEN source IS NULL THEN 1 ELSE 0 END) AS nl1, COUNT(DISTINCT source) AS nd1,
-        |  SUM(CASE WHEN lang IS NULL THEN 1 ELSE 0 END) AS nl2, COUNT(DISTINCT lang) AS nd2,
-        |  SUM(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END) AS nl3, COUNT(DISTINCT n_chars) AS nd3
-        |FROM documents),
-        |y AS (SELECT COUNT(*) AS rows_y,
-        |  SUM(CASE WHEN source IS NULL THEN 1 ELSE 0 END) AS nl1, COUNT(DISTINCT source) AS nd1,
-        |  SUM(CASE WHEN lang IS NULL THEN 1 ELSE 0 END) AS nl2, COUNT(DISTINCT lang) AS nd2,
-        |  SUM(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END) AS nl3, COUNT(DISTINCT n_chars) AS nd3
-        |FROM documents WHERE doc_id < 250),
-        |u AS (
-        |  SELECT 'source' AS col_name, t.nd1 AS distinct_t, y.nd1 AS distinct_y,
-        |    CAST(t.nl1 AS BIGINT) AS nt, CAST(y.nl1 AS BIGINT) AS ny, rows_t, rows_y FROM t, y
-        |  UNION ALL
-        |  SELECT 'lang', t.nd2, y.nd2, CAST(t.nl2 AS BIGINT), CAST(y.nl2 AS BIGINT), rows_t, rows_y FROM t, y
-        |  UNION ALL
-        |  SELECT 'n_chars', t.nd3, y.nd3, CAST(t.nl3 AS BIGINT), CAST(y.nl3 AS BIGINT), rows_t, rows_y FROM t, y)
-        |SELECT col_name, distinct_t, distinct_y,
-        |  distinct_t - distinct_y AS distinct_delta,
-        |  round(CAST(nt AS DOUBLE) / rows_t - CAST(ny AS DOUBLE) / rows_y, 9) AS null_rate_delta
-        |FROM u""".stripMargin,
-
-    "q130_data_contracts" ->
-      """WITH r AS (SELECT
-        |  SUM(CASE WHEN l_quantity < 1 OR l_quantity > 50 THEN 1 ELSE 0 END) AS qty_range,
-        |  SUM(CASE WHEN l_extendedprice <= 0 THEN 1 ELSE 0 END) AS price_positive,
-        |  SUM(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END) AS shipdate_null
-        |FROM lineitem),
-        |fk AS (SELECT COUNT(*) AS fk_orphans FROM lineitem l
-        |       WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey))
-        |SELECT 'lineitem_qty_1_50' AS rule, CAST(qty_range AS BIGINT) AS violations FROM r
-        |UNION ALL
-        |SELECT 'lineitem_price_gt0', CAST(price_positive AS BIGINT) FROM r
-        |UNION ALL
-        |SELECT 'lineitem_shipdate_not_null', CAST(shipdate_null AS BIGINT) FROM r
-        |UNION ALL
-        |SELECT 'lineitem_orderkey_fk', CAST(fk_orphans AS BIGINT) FROM fk""".stripMargin,
-
-    "q127_semantic_search" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, emb AS qv FROM e WHERE vec_id < 5),
-        |s AS (SELECT q.query_id, e.vec_id AS doc_id,
-        |        list_cosine_similarity(q.qv, e.emb) AS cosine
-        |      FROM q, e WHERE e.vec_id != q.query_id),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-        |        ORDER BY cosine DESC, doc_id) AS rank FROM s)
-        |SELECT query_id, r.doc_id, cosine, CAST(rank AS BIGINT) AS rank,
-        |  d.source, d.lang, d.n_chars,
-        |  round(least(CAST(length(d.text) AS DOUBLE) / 500.0, 1.0)
-        |    * (CASE WHEN length(d.text) = 0 THEN 0.0
-        |            ELSE CAST(length(regexp_replace(d.text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / length(d.text) END)
-        |    * (1.0 - least((CASE WHEN length(d.text) = 0 THEN 0.0
-        |            ELSE CAST(length(regexp_replace(d.text, '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE) / length(d.text) END) * 5.0, 1.0)), 9) AS quality
-        |FROM r JOIN documents d ON r.doc_id = d.doc_id
-        |WHERE rank <= 5""".stripMargin,
-
-    "q128_curation_e2e" ->
-      """WITH f AS (SELECT doc_id, source, text,
-        |    len(regexp_extract_all(text, '\S+')) AS wc,
-        |    least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-        |      * (CASE WHEN length(text) = 0 THEN 0.0
-        |              ELSE CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / length(text) END)
-        |      * (1.0 - least((CASE WHEN length(text) = 0 THEN 0.0
-        |              ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE) / length(text) END) * 5.0, 1.0)) AS quality
-        |  FROM documents),
-        |g AS (SELECT * FROM f WHERE wc >= 20 AND quality >= 0.05),
-        |n AS (SELECT *, md5(trim(regexp_replace(regexp_replace(lower(text), '[^\p{L}\p{N}\s]', '', 'g'), '\s+', ' ', 'g'))) AS fp FROM g),
-        |k AS (SELECT fp, MIN(doc_id) AS doc_id FROM n GROUP BY fp)
-        |SELECT source, COUNT(*) AS n_docs,
-        |  CAST(SUM(wc) AS BIGINT) AS n_tokens,
-        |  round(CAST(SUM(CAST(quality AS DECIMAL(18,9))) AS DOUBLE), 9) AS quality_mass
-        |FROM n JOIN k USING (fp, doc_id)
-        |GROUP BY source""".stripMargin,
-
-    "q124_temperature_mix" ->
-      """WITH c AS (SELECT lang, COUNT(*) AS cnt FROM documents GROUP BY lang),
-        |t AS (SELECT SUM(cnt) AS total FROM c),
-        |s AS (SELECT lang, cnt, total,
-        |        round(pow(CAST(cnt AS DOUBLE) / total, 0.5), 9) AS s9
-        |      FROM c, t),
-        |z AS (SELECT CAST(SUM(CAST(s9 AS DECIMAL(18,9))) AS DOUBLE) AS z FROM s),
-        |r AS (SELECT lang,
-        |        round(least(1.0, s9 / z.z * 0.6 * total / cnt), 9) AS rate
-        |      FROM s, z)
-        |SELECT d.doc_id, d.lang FROM documents d JOIN r USING (lang)
-        |WHERE (CAST(((d.doc_id % 2147483647) * 48271 % 2147483647) * 48271 % 2147483647 * 48271 % 2147483647 AS DOUBLE) + 0.5) / 2147483647.0 < r.rate""".stripMargin,
-
-    "q125_rare_suppress" ->
-      """WITH c AS (SELECT source, lang, COUNT(*) AS n_combo FROM documents
-        |           GROUP BY source, lang HAVING COUNT(*) >= 5)
-        |SELECT doc_id, d.source, d.lang, n_combo
-        |FROM documents d JOIN c ON d.source = c.source AND d.lang = c.lang""".stripMargin,
-
-    "q126_trending" ->
-      s"""$evCte,
-         |t AS (SELECT CAST(date_trunc('week', ts) AS DATE) AS week,
-         |        CAST(json_extract_string(props, '$$.k') AS BIGINT) AS page
-         |      FROM ev),
-         |g AS (SELECT week, page, COUNT(*) AS n FROM t GROUP BY week, page),
-         |r AS (SELECT week, page, n,
-         |        row_number() OVER (PARTITION BY week ORDER BY n DESC, page) AS rank
-         |      FROM g)
-         |SELECT week, page, n, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 3""".stripMargin,
-
-    "q122_sequence_pack" ->
-      """WITH d AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS tok
-        |           FROM documents),
-        |c AS (SELECT doc_id, tok,
-        |        SUM(tok) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum
-        |      FROM d)
-        |SELECT CAST((cum - tok) // 512 AS BIGINT) AS bin, COUNT(*) AS n_docs,
-        |  CAST(SUM(tok) AS BIGINT) AS n_tokens,
-        |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
-        |FROM c GROUP BY bin""".stripMargin,
-
-    "q123_hard_negatives" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb, label FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, emb AS qv, label AS q_label FROM e WHERE vec_id < 10),
-        |s AS (SELECT q.query_id, e.vec_id AS neighbor_id, q.q_label, e.label AS n_label,
-        |        list_cosine_similarity(q.qv, e.emb) AS cosine
-        |      FROM q, e WHERE q.q_label != e.label),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-        |        ORDER BY cosine DESC, neighbor_id) AS rank FROM s)
-        |SELECT query_id, neighbor_id, q_label, n_label, cosine, rank
-        |FROM r WHERE rank <= 3""".stripMargin,
-
-    "q120_zorder_layout" -> {
-      // the Morton interleave, generated term-by-term (bit ops are
-      // identical integer arithmetic in any engine)
-      val z = (0 until 8).map(i =>
-        s"(((user_id >> $i) & 1) << ${2 * i}) + (((k >> $i) & 1) << ${2 * i + 1})")
-        .mkString(" + ")
-      s"""$evCte,
-         |t AS (SELECT user_id, CAST(json_extract_string(props, '$$.k') AS BIGINT) AS k FROM ev),
-         |zz AS (SELECT user_id, k, $z AS z FROM t)
-         |SELECT CAST(z >> 10 AS BIGINT) AS bucket, COUNT(*) AS n,
-         |  MIN(user_id) AS u_min, MAX(user_id) AS u_max,
-         |  MIN(k) AS k_min, MAX(k) AS k_max
-         |FROM zz GROUP BY bucket""".stripMargin
-    },
-
-    "q118_dup_ngram_fraction" ->
-      """WITH w AS (SELECT doc_id,
-        |        list_filter(string_split_regex(
-        |          regexp_replace(lower(text), '[^\p{L}\p{N}\s]', '', 'g'), '\s+'),
-        |          x -> len(x) > 0) AS words
-        |      FROM documents),
-        |sh AS (SELECT doc_id,
-        |         [array_to_string(words[i:i+2], ' ')
-        |          FOR i IN generate_series(1, greatest(len(words) - 2, 1))] AS sh
-        |       FROM w WHERE len(words) > 0),
-        |pos AS (SELECT doc_id, unnest(sh) AS g FROM sh),
-        |pc AS (SELECT doc_id, g, COUNT(*) AS c FROM pos GROUP BY doc_id, g)
-        |SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_pos,
-        |  CAST(SUM(CASE WHEN c >= 2 THEN c ELSE 0 END) AS BIGINT) AS n_dup_pos,
-        |  round(CAST(SUM(CASE WHEN c >= 2 THEN c ELSE 0 END) AS DOUBLE) / SUM(c), 9) AS dup_frac
-        |FROM pc GROUP BY doc_id""".stripMargin,
-
-    "q119_curation_funnel" ->
-      """WITH f AS (SELECT doc_id, source,
-        |  CASE WHEN doc_id % 10 = 0
-        |       THEN text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com'
-        |       ELSE text END AS ft
-        |FROM documents),
-        |g AS (SELECT source,
-        |  len(regexp_extract_all(ft, '\S+')) AS wc,
-        |  least(CAST(length(ft) AS DOUBLE) / 500.0, 1.0)
-        |    * (CASE WHEN length(ft) = 0 THEN 0.0
-        |            ELSE CAST(length(regexp_replace(ft, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / length(ft) END)
-        |    * (1.0 - least((CASE WHEN length(ft) = 0 THEN 0.0
-        |            ELSE CAST(length(regexp_replace(ft, '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE) / length(ft) END) * 5.0, 1.0)) AS q,
-        |  len(regexp_extract_all(ft, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-        |    + len(regexp_extract_all(ft, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS pii,
-        |  CASE WHEN len(regexp_extract_all(ft, '\S+')) = 0 THEN 0.0
-        |       ELSE CAST(len(regexp_extract_all(ft, '\S*[A-Za-z]\S*')) AS DOUBLE)
-        |            / len(regexp_extract_all(ft, '\S+')) END AS alpha
-        |FROM f)
-        |SELECT source, COUNT(*) AS n_total,
-        |  CAST(SUM(CASE WHEN wc >= 10 THEN 1 ELSE 0 END) AS BIGINT) AS n_len,
-        |  CAST(SUM(CASE WHEN wc >= 10 AND q >= 0.05 THEN 1 ELSE 0 END) AS BIGINT) AS n_quality,
-        |  CAST(SUM(CASE WHEN wc >= 10 AND q >= 0.05 AND pii = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_pii_free,
-        |  CAST(SUM(CASE WHEN wc >= 10 AND q >= 0.05 AND pii = 0 AND alpha >= 0.8 THEN 1 ELSE 0 END) AS BIGINT) AS n_final
-        |FROM g GROUP BY source""".stripMargin,
-
-    // exact heavy hitters (the CMS prefilter is transparent to results:
-    // est ≥ true means no true hitter is dropped, the HAVING removes
-    // false candidates). FLOOR mirrors Spark's double→long truncation.
-    "q115_cms_heavy_hitters" ->
-      """WITH w AS (
-        |  SELECT unnest(string_split(text, ' ')) AS word FROM documents),
-        |w2 AS (SELECT word FROM w WHERE length(word) > 0),
-        |t AS (SELECT CAST(FLOOR(COUNT(*) * 0.002) AS BIGINT) AS thresh FROM w2)
-        |SELECT word, COUNT(*) AS n FROM w2, t
-        |GROUP BY word, thresh HAVING COUNT(*) >= thresh
-        |ORDER BY n DESC, word""".stripMargin,
-
-    "q116_embed_quantize" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |  CAST(list_min(embedding) AS DOUBLE) AS mn,
-        |  CAST(list_max(embedding) AS DOUBLE) AS mx
-        |FROM embeddings),
-        |s AS (SELECT vec_id, v, mn, mx, (mx - mn) / 255.0 AS sc FROM e WHERE mx > mn)
-        |SELECT vec_id, mn, mx, round(sc, 9) AS scale,
-        |  CAST(list_sum(list_transform(v, x -> CAST(round((x - mn) / sc, 0) AS BIGINT))) AS BIGINT) AS code_sum,
-        |  round(list_max(list_transform(v, x -> abs(round((x - mn) / sc, 0) * sc + mn - x))), 9) AS max_err
-        |FROM s""".stripMargin,
-
-    "q117_url_dedup" ->
-      """WITH u AS (SELECT doc_id,
-        |  'HTTPS://WWW.Site' || CAST(doc_id % 7 AS VARCHAR) || '.COM:443/Path/'
-        |    || CAST(doc_id % 40 AS VARCHAR) || '/?utm_source=feed&id='
-        |    || CAST(doc_id AS VARCHAR) || '#frag' AS raw
-        |FROM documents),
-        |c AS (SELECT doc_id,
-        |  regexp_replace(
-        |    regexp_replace(
-        |      regexp_replace(
-        |        regexp_replace(lower(raw), '[?#].*$', '', 'g'),
-        |        '://www\.', '://', 'g'),
-        |      ':443/', '/', 'g'),
-        |    '/$', '', 'g') AS canonical_url
-        |FROM u)
-        |SELECT canonical_url, MIN(doc_id) AS keep_doc, COUNT(*) AS n_dups
-        |FROM c GROUP BY canonical_url""".stripMargin,
-
-    "q104_weighted_median" ->
-      """WITH t AS (SELECT l_returnflag, l_extendedprice,
-        |  SUM(CAST(l_quantity AS DECIMAL(18,4))) OVER (
-        |    PARTITION BY l_returnflag
-        |    ORDER BY l_extendedprice, l_orderkey, l_linenumber
-        |    ROWS UNBOUNDED PRECEDING) AS cw,
-        |  SUM(CAST(l_quantity AS DECIMAL(18,4))) OVER (
-        |    PARTITION BY l_returnflag) AS tw
-        |FROM lineitem)
-        |SELECT l_returnflag, MIN(l_extendedprice) AS weighted_median
-        |FROM t WHERE cw >= tw * 0.5 GROUP BY l_returnflag""".stripMargin,
-
-    "q103_linreg" ->
-      """WITH s AS (SELECT l_returnflag, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(30,8))) AS DOUBLE) AS sx,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,8))) AS DOUBLE) AS sy,
-        |  CAST(SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(30,8))) AS DOUBLE) AS sxy,
-        |  CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(30,8))) AS DOUBLE) AS sxx,
-        |  CAST(SUM(CAST(l_extendedprice * l_extendedprice AS DECIMAL(30,8))) AS DOUBLE) AS syy
-        |FROM lineitem GROUP BY l_returnflag)
-        |SELECT l_returnflag, n,
-        |  round((CAST(n AS DOUBLE) * sxy - sx * sy) / (CAST(n AS DOUBLE) * sxx - sx * sx), 9) AS slope,
-        |  round((sy - (CAST(n AS DOUBLE) * sxy - sx * sy) / (CAST(n AS DOUBLE) * sxx - sx * sx) * sx)
-        |        / CAST(n AS DOUBLE), 9) AS intercept,
-        |  round((CAST(n AS DOUBLE) * sxy - sx * sy)
-        |        / sqrt((CAST(n AS DOUBLE) * sxx - sx * sx) * (CAST(n AS DOUBLE) * syy - sy * sy)), 9) AS pearson_r
-        |FROM s""".stripMargin,
-
-    "q102_mad" ->
-      s"""$evCte,
-         |m AS (SELECT event_type, quantile_cont(value, 0.5) AS med
-         |      FROM ev GROUP BY event_type),
-         |d AS (SELECT ev.event_type, med, quantile_cont(abs(value - med), 0.5) AS mad
-         |      FROM ev JOIN m ON ev.event_type = m.event_type
-         |      GROUP BY ev.event_type, med)
-         |SELECT event_id, ev.event_type, value,
-         |  round(0.6745 * (value - med) / mad, 9) AS robust_z
-         |FROM ev JOIN d ON ev.event_type = d.event_type
-         |WHERE mad > 0 AND abs(round(0.6745 * (value - med) / mad, 9)) > 3.0""".stripMargin,
-
-    "q20_strip_tags" ->
-      """SELECT doc_id,
-        |  regexp_replace('<div><p>' || text || '</p></div>', '(?s)<.*?>', chr(10), 'g') AS stripped
-        |FROM documents""".stripMargin,
-
-    "q21_word_count" ->
-      """SELECT doc_id, len(regexp_extract_all(text, '[^\]\[\s,<>]+')) AS total_words
-        |FROM documents""".stripMargin,
-
-    "q22_remove_digits" ->
-      """SELECT doc_id,
-        |  regexp_replace(text || ' pages 34-89 v34.67', '[.\d]+', '', 'g') AS no_digits
-        |FROM documents""".stripMargin,
-
-    "q23_hashes" ->
-      """SELECT doc_id, md5(text) AS md5_hash, sha256(text) AS sha256_hash
-        |FROM documents""".stripMargin,
-
-    "q24_min_words_filter" ->
-      """SELECT doc_id, len(regexp_extract_all(text, '[^\]\[\s,<>]+')) AS total_words
-        |FROM documents
-        |WHERE len(regexp_extract_all(text, '[^\]\[\s,<>]+')) >= 30""".stripMargin,
-
-    "q25_page_explode" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |p AS (SELECT doc_id, ws, CAST(ceil(len(ws)/40.0) AS INTEGER) AS np FROM t),
-        |x AS (
-        |  SELECT p.doc_id, CAST(g.i AS INTEGER) AS page_no,
-        |         array_to_string(ws[g.i*40+1 : least((g.i+1)*40, len(ws))], ' ') AS page_text
-        |  FROM p, LATERAL (SELECT unnest(generate_series(0, np-1)) AS i) g)
-        |SELECT doc_id, page_no, page_text,
-        |       len(string_split(page_text, ' ')) AS page_words,
-        |       printf('%06d', doc_id) || CAST(page_no AS VARCHAR) AS page_key
-        |FROM x WHERE len(string_split(page_text, ' ')) >= 5""".stripMargin,
-
-    "q26_quality" ->
-      """SELECT doc_id,
-        |  len(regexp_extract_all(text, '\S+')) AS ws_tokens,
-        |  CASE WHEN len(regexp_extract_all(text, '\S+')) = 0 THEN 0.0
-        |       ELSE CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|to|a|in|is|that|it|for)\b')) AS DOUBLE)
-        |            / len(regexp_extract_all(text, '\S+')) END AS stopword_ratio,
-        |  CASE WHEN len(regexp_extract_all(text, '\S+')) = 0 THEN 0.0
-        |       ELSE CAST(length(regexp_replace(text, '\s+', '', 'g')) AS DOUBLE)
-        |            / len(regexp_extract_all(text, '\S+')) END AS mean_word_len,
-        |  least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-        |    * (CASE WHEN length(text) = 0 THEN 0.0
-        |            ELSE CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / length(text) END)
-        |    * (1.0 - least((CASE WHEN length(text) = 0 THEN 0.0
-        |            ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE) / length(text) END) * 5.0, 1.0))
-        |    AS quality
-        |FROM documents""".stripMargin,
-
-    "q27_tokens" ->
-      """SELECT doc_id,
-        |  len(regexp_extract_all(text, '\S+')) AS ws_tokens,
-        |  len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]|[^a-zA-Z0-9\s]')) AS bpe_tokens
-        |FROM documents""".stripMargin,
-
-    "q28_fingerprint" ->
-      """SELECT doc_id,
-        |  md5(trim(regexp_replace(regexp_replace(lower(text), '[^\p{L}\p{N}\s]', '', 'g'), '\s+', ' ', 'g'))) AS fp
-        |FROM documents""".stripMargin,
-
-    "q30_dedup_exact" ->
-      """SELECT d.doc_id, d.n_chars FROM documents d
-        |JOIN (SELECT md5(text) AS h, MIN(doc_id) AS keep FROM documents GROUP BY md5(text)) s
-        |  ON md5(d.text) = s.h AND d.doc_id = s.keep""".stripMargin,
-
-    "q31_dedup_norm_groups" ->
-      """WITH n AS (SELECT doc_id,
-        |  md5(trim(regexp_replace(regexp_replace(lower(text), '[^\p{L}\p{N}\s]', '', 'g'), '\s+', ' ', 'g'))) AS fp
-        |FROM documents)
-        |SELECT fp, COUNT(*) AS n_dups, MIN(doc_id) AS first_key
-        |FROM n GROUP BY fp HAVING COUNT(*) > 1""".stripMargin,
-
-    // shared CTE: the q34/q52 shingle normalization (lowercase, strip
-    // non-letter/digit, split on whitespace, k=2 word shingles, distinct)
-    // — the exact list-algebra twin of Dedup.shingleStrings
-    "q34_ngram_jaccard" ->
-      """WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id < 100),
-        |w AS (SELECT doc_id,
-        |        list_filter(string_split_regex(
-        |          regexp_replace(lower(text), '[^\p{L}\p{N}\s]', '', 'g'), '\s+'),
-        |          x -> len(x) > 0) AS words
-        |      FROM docs),
-        |sh AS (SELECT doc_id,
-        |         list_distinct([array_to_string(words[i:i+1], ' ')
-        |                        FOR i IN generate_series(1, greatest(len(words) - 1, 1))]) AS sh
-        |       FROM w WHERE len(words) > 0)
-        |SELECT a.doc_id AS key_a, b.doc_id AS key_b,
-        |  CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
-        |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.08""".stripMargin,
-
-    "q52_dedup_groups" ->
-      """WITH RECURSIVE docs AS (SELECT doc_id, text FROM documents WHERE doc_id < 100),
-        |w AS (SELECT doc_id,
-        |        list_filter(string_split_regex(
-        |          regexp_replace(lower(text), '[^\p{L}\p{N}\s]', '', 'g'), '\s+'),
-        |          x -> len(x) > 0) AS words
-        |      FROM docs),
-        |sh AS (SELECT doc_id,
-        |         list_distinct([array_to_string(words[i:i+1], ' ')
-        |                        FOR i IN generate_series(1, greatest(len(words) - 1, 1))]) AS sh
-        |       FROM w WHERE len(words) > 0),
-        |pairs AS (
-        |  SELECT a.doc_id AS key_a, b.doc_id AS key_b
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |      / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.08),
-        |edges AS (SELECT key_a AS src, key_b AS dst FROM pairs
-        |          UNION SELECT key_b, key_a FROM pairs),
-        |reach(node, r) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT e.src, reach.r FROM reach JOIN edges e ON e.dst = reach.node),
-        |comp AS (SELECT node AS k, MIN(r) AS component FROM reach GROUP BY node)
-        |SELECT component, COUNT(*) AS group_size, MAX(k) AS max_key
-        |FROM comp GROUP BY component""".stripMargin,
-
-    "q35_embedding_dups" ->
-      """SELECT a.vec_id AS key_a, b.vec_id AS key_b,
-        |  list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) AS cosine
-        |FROM embeddings a, embeddings b
-        |WHERE a.vec_id < b.vec_id
-        |  AND list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) >= 0.4""".stripMargin,
-
-    "q36_knn_brute" ->
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS e
-        |           FROM embeddings WHERE vec_id < 10),
-        |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        |s AS (SELECT query_id, neighbor_id, list_cosine_similarity(q.e, c.e) AS cosine
-        |      FROM q, c WHERE neighbor_id != query_id),
-        |r AS (SELECT query_id, neighbor_id, cosine,
-        |        row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-        |      FROM s)
-        |SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= 5""".stripMargin,
-
-    "q66_l2_knn" ->
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS e
-        |           FROM embeddings WHERE vec_id < 10),
-        |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        |s AS (SELECT query_id, neighbor_id, list_distance(q.e, c.e) AS dist
-        |      FROM q, c WHERE neighbor_id != query_id),
-        |r AS (SELECT query_id, neighbor_id, dist,
-        |        row_number() OVER (PARTITION BY query_id ORDER BY dist, neighbor_id) AS rank
-        |      FROM s)
-        |SELECT query_id, neighbor_id, dist, rank FROM r WHERE rank <= 5""".stripMargin,
-
-    "q38_multimodal_meta" ->
-      """SELECT doc_id,
-        |  CAST(64 + octet_length(encode(text)) % 512 AS INTEGER) AS width,
-        |  CAST(64 + (CASE WHEN length(text) = 0 THEN 0 ELSE ascii(substr(text, 1, 1)) END) * 4 AS INTEGER) AS height,
-        |  3 AS channels,
-        |  CASE WHEN octet_length(encode(text)) % 2 = 0 THEN 'png' ELSE 'jpeg' END AS format,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
-        |FROM documents""".stripMargin,
-
-    "q69_frame_sample" ->
-      """SELECT doc_id, CAST(s.i // 100 AS BIGINT) AS frame_no, CAST(s.i AS BIGINT) AS offset
-        |FROM documents, LATERAL unnest(generate_series(0, octet_length(encode(text)) - 1, 100)) AS s(i)""".stripMargin,
-
-    "q39_stream_tumbling" ->
-      s"""$evCte
-         |SELECT time_bucket(INTERVAL '10 minutes', ts) AS window_start, event_type,
-         |  COUNT(*) AS n, CAST(SUM(CAST(value AS $D)) AS DOUBLE) AS total_value
-         |FROM ev GROUP BY 1, 2""".stripMargin,
-
-    // the stub decoder's arithmetic is a pure function of the text column
-    // (W = \S+ runs, pages = 40-word groups capped at maxPages=8, per-page
-    // word count = the reference word regex over the page's word slice), so
-    // the full pipeline status channel is SQL-expressible — the same
-    // argument that oracle-ized q38/q69. Quirk parity: all-whitespace text
-    // decodes to ZERO pages, and the outer explode's null page row tags
-    // success/null (no branch of the status chain fires on null text).
-    "q40_doc_pipeline_stats" ->
-      """WITH meta AS (
-        |  SELECT doc_id, text, regexp_extract_all(text, '\S+') AS ws,
-        |    len(regexp_extract_all(text, '\S+')) AS w,
-        |    CAST(ceil(len(regexp_extract_all(text, '\S+')) / 40.0) AS BIGINT) AS p
-        |  FROM documents
-        |), pages AS (
-        |  SELECT m.doc_id, i.g AS page_no,
-        |    len(regexp_extract_all(
-        |      array_to_string(m.ws[i.g*40+1 : least((i.g+1)*40, m.w)], ' '),
-        |      '[^\]\[\s,<>]+')) AS wc
-        |  FROM meta m, LATERAL unnest(generate_series(0, least(m.p, 8) - 1)) AS i(g)
-        |  WHERE m.text IS NOT NULL AND m.text <> '' AND m.w > 0
-        |), tagged AS (
-        |  SELECT 'failed_to_extract' AS status,
-        |         'cannot open document: null payload' AS error_message
-        |  FROM meta WHERE text IS NULL
-        |  UNION ALL
-        |  SELECT 'failed_to_extract', 'cannot open document: empty payload'
-        |  FROM meta WHERE text = ''
-        |  UNION ALL
-        |  SELECT 'success', NULL FROM meta
-        |  WHERE text IS NOT NULL AND text <> '' AND w = 0
-        |  UNION ALL
-        |  SELECT CASE WHEN wc < 5 THEN 'failed_to_extract' ELSE 'success' END,
-        |         CASE WHEN wc < 5 THEN 'too few words' ELSE NULL END
-        |  FROM pages
-        |)
-        |SELECT status, error_message, COUNT(*) AS count
-        |FROM tagged GROUP BY 1, 2""".stripMargin,
-
-    "q42_grouping_sets" ->
-      s"""SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-         |  CAST(SUM(CAST(l_quantity AS $D)) AS DOUBLE) AS sum_qty
-         |FROM lineitem
-         |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""".stripMargin,
-
-    "q43_window_frames" ->
-      s"""SELECT o_orderkey, o_orderstatus, o_totalprice,
-         |  CAST(SUM(CAST(o_totalprice AS $D)) OVER (
-         |    PARTITION BY o_orderstatus ORDER BY o_totalprice
-         |    RANGE BETWEEN 100 PRECEDING AND CURRENT ROW) AS DOUBLE) AS range_sum,
-         |  lead(o_orderkey, 1) OVER w AS next_key,
-         |  first_value(o_orderkey) OVER w AS first_key
-         |FROM orders
-         |WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey)""".stripMargin,
-
-    "q44_pivot" ->
-      s"""$evCte
-         |SELECT date_trunc('day', ts) AS day,
-         |  COUNT(*) FILTER (event_type = 'click') AS click,
-         |  COUNT(*) FILTER (event_type = 'view') AS view,
-         |  COUNT(*) FILTER (event_type = 'purchase') AS purchase,
-         |  COUNT(*) FILTER (event_type = 'signup') AS signup,
-         |  COUNT(*) FILTER (event_type = 'error') AS error
-         |FROM ev GROUP BY 1""".stripMargin,
-
-    "q45_correlated_subquery" ->
-      """SELECT c_custkey, c_name,
-        |  CAST(coalesce((SELECT COUNT(*) FROM orders WHERE o_custkey = c_custkey), 0) AS BIGINT) AS n_orders,
-        |  (SELECT MAX(o_totalprice) FROM orders WHERE o_custkey = c_custkey) AS max_price
-        |FROM customer""".stripMargin,
-
-    "q46_wordcount_topk" ->
-      """WITH w AS (
-        |  SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        |SELECT word, COUNT(*) AS n FROM w WHERE length(word) > 0
-        |GROUP BY word ORDER BY n DESC, word LIMIT 20""".stripMargin,
-
-    "q55_percentiles" ->
-      """SELECT l_returnflag,
-        |  quantile_cont(l_extendedprice, 0.5) AS p50,
-        |  quantile_cont(l_extendedprice, 0.9) AS p90,
-        |  quantile_cont(l_quantity, 0.25) AS q25
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "q53_hash_sample" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |WHERE substr(md5(CAST(l_orderkey AS VARCHAR) || '_' || CAST(l_linenumber AS VARCHAR)), 1, 2) < '10'""".stripMargin,
-
-    "q54_text_stats" ->
-      """SELECT doc_id,
-        |  len(string_split(text, ' ')) AS n_words,
-        |  len(list_distinct(string_split(text, ' '))) AS n_distinct,
-        |  CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-        |    / len(string_split(text, ' ')) AS ttr
-        |FROM documents""".stripMargin,
-
-    "q50_right_outer" ->
-      """SELECT n_nationkey, n_name, CAST(coalesce(cnt, 0) AS BIGINT) AS n_suppliers
-        |FROM (SELECT s_nationkey, COUNT(*) AS cnt FROM supplier GROUP BY s_nationkey) sup
-        |RIGHT OUTER JOIN nation ON s_nationkey = n_nationkey""".stripMargin,
-
-    "q51_full_outer" ->
-      """WITH f AS (SELECT o_custkey AS ck_f, COUNT(*) AS n_f FROM orders
-        |           WHERE o_orderstatus = 'F' GROUP BY o_custkey),
-        |p AS (SELECT o_custkey AS ck_p, COUNT(*) AS n_p FROM orders
-        |      WHERE o_orderstatus = 'P' GROUP BY o_custkey)
-        |SELECT coalesce(ck_f, ck_p) AS custkey,
-        |       CAST(coalesce(n_f, 0) AS BIGINT) AS n_f,
-        |       CAST(coalesce(n_p, 0) AS BIGINT) AS n_p
-        |FROM f FULL OUTER JOIN p ON ck_f = ck_p""".stripMargin,
-
-    "q49_time_funcs" ->
-      s"""$evCte
-         |SELECT event_id,
-         |  CAST(floor(epoch(ts)) AS BIGINT) AS epoch_s,
-         |  ts + INTERVAL 90 MINUTE AS ts_plus,
-         |  CAST(hour(ts) AS BIGINT) AS hr,
-         |  CAST(dayofweek(ts) + 1 AS BIGINT) AS dow,
-         |  date_trunc('second', ts) AS ts_floor_s
-         |FROM ev""".stripMargin,
-
-    "q47_map_funcs" ->
-      """WITH kv AS (
-        |  SELECT unnest(json_keys(props)) AS k,
-        |         CAST(json_extract_string(props, '$.' || unnest(json_keys(props))) AS BIGINT) AS v
-        |  FROM events)
-        |SELECT k, COUNT(*) AS n, CAST(SUM(v) AS BIGINT) AS sum_v
-        |FROM kv GROUP BY k""".stripMargin,
-
-    "q65_stream_join" ->
-      s"""$evCte,
-         |c AS (SELECT event_id AS click_id, user_id, ts AS click_ts
-         |      FROM ev WHERE event_type = 'click'),
-         |p AS (SELECT event_id AS purchase_id, user_id, ts AS purchase_ts,
-         |             value AS purchase_value
-         |      FROM ev WHERE event_type = 'purchase')
-         |SELECT c.click_id, c.user_id, c.click_ts,
-         |       p.purchase_id, p.purchase_ts, p.purchase_value
-         |FROM c JOIN p ON c.user_id = p.user_id
-         | AND p.purchase_ts >= c.click_ts - INTERVAL 240 MINUTE
-         | AND p.purchase_ts <= c.click_ts""".stripMargin,
-
-    "q58_window_dist" ->
-      """SELECT o_orderkey, o_orderstatus,
-        |  CAST(ntile(4) OVER w AS BIGINT) AS bucket,
-        |  percent_rank() OVER w AS pr,
-        |  cume_dist() OVER w AS cd
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey)""".stripMargin,
-
-    "q59_edit_distance" ->
-      """WITH d AS (SELECT doc_id, lower(text) AS t FROM documents)
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |  CAST(levenshtein(substr(a.t, 1, 80), substr(b.t, 1, 80)) AS BIGINT) AS dist
-        |FROM d a JOIN d b ON substr(a.t, 1, 12) = substr(b.t, 1, 12) AND a.doc_id < b.doc_id
-        |WHERE levenshtein(substr(a.t, 1, 80), substr(b.t, 1, 80)) <= 20""".stripMargin,
-
-    "q61_chunking" ->
-      """SELECT doc_id,
-        |  CAST(s.i // 150 AS BIGINT) AS chunk_no,
-        |  substr(text, CAST(s.i AS INT) + 1, 200) AS chunk
-        |FROM documents, LATERAL unnest(generate_series(0, length(text) - 1, 150)) AS s(i)""".stripMargin,
-
-    "q62_domain_cap" ->
-      """SELECT doc_id, source, n_chars, CAST(rk AS BIGINT) AS rk FROM (
-        |  SELECT doc_id, source, n_chars,
-        |    row_number() OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id) AS rk
-        |  FROM documents)
-        |WHERE rk <= 10""".stripMargin,
-
-    "q67_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, name, CAST(value AS DOUBLE) AS value
-        |FROM (SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_discount, l_tax
-        |      FROM lineitem WHERE l_orderkey < 100)
-        |UNPIVOT (value FOR name IN (l_quantity, l_extendedprice, l_discount, l_tax))""".stripMargin,
-
-    "q71_doc_reassembly" ->
-      """WITH c AS (
-        |  SELECT doc_id, CAST(s.i // 200 AS BIGINT) AS chunk_no,
-        |    substr(text, CAST(s.i AS INT) + 1, 200) AS chunk
-        |  FROM documents, LATERAL unnest(generate_series(0, length(text) - 1, 200)) AS s(i))
-        |SELECT doc_id, string_agg(chunk, '' ORDER BY chunk_no) AS text
-        |FROM c GROUP BY doc_id""".stripMargin,
-
-    "q70_dedup_keep_best" ->
-      """SELECT doc_id, h, n_chars FROM (
-        |  SELECT doc_id, md5(text) AS h, n_chars,
-        |    row_number() OVER (PARTITION BY md5(text) ORDER BY n_chars DESC, doc_id) AS rk
-        |  FROM documents)
-        |WHERE rk = 1""".stripMargin,
-
-    "q68_token_budget" ->
-      """WITH d AS (SELECT doc_id, n_chars, len(string_split(text, ' ')) AS tok FROM documents)
-        |SELECT doc_id, n_chars, CAST(tok AS BIGINT) AS tok,
-        |  CAST(SUM(tok) OVER (ORDER BY n_chars DESC, doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-        |FROM d QUALIFY cum_tokens <= 20000""".stripMargin,
-
-    "q63_repetition" ->
-      """WITH b AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, len(string_split(text, ' '))),
-        |      i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i + 1])) AS bigram
-        |  FROM documents),
-        |c AS (SELECT doc_id, bigram, COUNT(*) AS c FROM b GROUP BY doc_id, bigram)
-        |SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_bigrams,
-        |  CAST(MAX(c) AS DOUBLE) / SUM(c) AS top_bigram_ratio
-        |FROM c GROUP BY doc_id""".stripMargin,
-
-    "q64_tfidf" ->
-      """WITH tokens AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
-        |tok AS (SELECT doc_id, word FROM tokens WHERE length(word) > 0),
-        |tf AS (SELECT doc_id, word, COUNT(*) AS tf FROM tok GROUP BY doc_id, word),
-        |df AS (SELECT word, COUNT(*) AS df FROM (SELECT DISTINCT doc_id, word FROM tok) GROUP BY word),
-        |scored AS (
-        |  SELECT tf.doc_id, tf.word,
-        |    round(CAST(tf.tf AS DOUBLE) * ln(CAST((SELECT COUNT(*) FROM documents) AS DOUBLE) / df.df), 9) AS score
-        |  FROM tf JOIN df USING (word))
-        |SELECT doc_id, word, score, CAST(rk AS BIGINT) AS rk FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, word) AS rk FROM scored)
-        |WHERE rk <= 5""".stripMargin,
-
-    "q72_line_dedup" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |p AS (SELECT doc_id, ws, CAST(ceil(len(ws)/5.0) AS INTEGER) AS np FROM t),
-        |l AS (SELECT p.doc_id, CAST(g.i AS BIGINT) AS line_no,
-        |        array_to_string(ws[g.i*5+1 : least((g.i+1)*5, len(ws))], ' ') AS line
-        |      FROM p, LATERAL (SELECT unnest(generate_series(0, np-1)) AS i) g),
-        |k AS (SELECT doc_id, line_no, line,
-        |        row_number() OVER (PARTITION BY line ORDER BY doc_id, line_no) AS rk
-        |      FROM l)
-        |SELECT doc_id, string_agg(line, ' ' ORDER BY line_no) AS text,
-        |       COUNT(*) AS n_lines_kept
-        |FROM k WHERE rk = 1 GROUP BY doc_id""".stripMargin,
-
-    "q73_decontam" ->
-      """WITH w AS (SELECT doc_id,
-        |        list_filter(string_split_regex(
-        |          regexp_replace(lower(text), '[^\p{L}\p{N}\s]', '', 'g'), '\s+'),
-        |          x -> len(x) > 0) AS words
-        |      FROM documents),
-        |sh AS (SELECT doc_id,
-        |         list_distinct([array_to_string(words[i:i+2], ' ')
-        |                        FOR i IN generate_series(1, greatest(len(words) - 2, 1))]) AS sh
-        |       FROM w WHERE len(words) > 0),
-        |bench AS (SELECT DISTINCT unnest(sh) AS g FROM sh WHERE doc_id % 50 = 0 AND doc_id < 10000),
-        |doc AS (SELECT doc_id, len(sh) AS n_shingles, unnest(sh) AS g
-        |        FROM sh WHERE NOT (doc_id % 50 = 0 AND doc_id < 10000)),
-        |ov AS (SELECT doc_id, n_shingles, COUNT(*) AS n_overlap
-        |       FROM doc JOIN bench USING (g) GROUP BY doc_id, n_shingles)
-        |SELECT doc_id, CAST(n_overlap AS BIGINT) AS n_overlap,
-        |       CAST(n_shingles AS BIGINT) AS n_shingles,
-        |       CAST(n_overlap AS DOUBLE) / n_shingles AS overlap_ratio
-        |FROM ov WHERE CAST(n_overlap AS DOUBLE) / n_shingles >= 0.2""".stripMargin,
-
-    "q74_pii_redact" ->
-      """WITH f AS (SELECT doc_id,
-        |  text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com from 10.0.'
-        |       || CAST(doc_id % 256 AS VARCHAR) || '.7 call 555-' || printf('%04d', doc_id % 10000) AS ft
-        |FROM documents)
-        |SELECT doc_id,
-        |  regexp_replace(regexp_replace(regexp_replace(ft,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-        |    '\b\d{3}[- ]\d{4}\b', '<PHONE>', 'g') AS redacted,
-        |  len(regexp_extract_all(ft, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
-        |  len(regexp_extract_all(ft, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS n_ips,
-        |  len(regexp_extract_all(ft, '\b\d{3}[- ]\d{4}\b')) AS n_phones
-        |FROM f""".stripMargin,
-
-    "q75_gopher_filter" ->
-      """WITH m AS (SELECT doc_id,
-        |  len(regexp_extract_all(text, '\S+')) AS n_words,
-        |  CASE WHEN len(regexp_extract_all(text, '\S+')) = 0 THEN 0.0
-        |       ELSE CAST(length(regexp_replace(text, '\s+', '', 'g')) AS DOUBLE)
-        |            / len(regexp_extract_all(text, '\S+')) END AS mean_word_len,
-        |  CASE WHEN len(regexp_extract_all(text, '\S+')) = 0 THEN 0.0
-        |       ELSE CAST(len(regexp_extract_all(text, '\S*[A-Za-z]\S*')) AS DOUBLE)
-        |            / len(regexp_extract_all(text, '\S+')) END AS alpha_word_ratio,
-        |  len(regexp_extract_all(lower(text), '\b(the|and|of|to|a|in|is|that|it|for)\b')) AS n_stopwords
-        |FROM documents)
-        |SELECT doc_id, n_words, mean_word_len, alpha_word_ratio, n_stopwords,
-        |  n_words BETWEEN 50 AND 100000 AS ok_words,
-        |  mean_word_len >= 3.0 AND mean_word_len <= 10.0 AS ok_word_len,
-        |  alpha_word_ratio >= 0.8 AS ok_alpha,
-        |  n_stopwords >= 2 AS ok_stopwords,
-        |  (n_words BETWEEN 50 AND 100000) AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
-        |    AND alpha_word_ratio >= 0.8 AND n_stopwords >= 2 AS pass
-        |FROM m""".stripMargin,
-
-    "q76_range_join" ->
-      s"""$evCte,
-         |c AS (SELECT event_id AS click_id, ts AS click_ts
-         |      FROM ev WHERE event_type = 'click'),
-         |w AS (SELECT event_id AS win_id, ts AS win_start,
-         |             ts + INTERVAL 30 MINUTE AS win_end
-         |      FROM ev WHERE event_type = 'purchase' AND event_id % 97 = 0)
-         |SELECT click_id, win_id, click_ts
-         |FROM c JOIN w ON click_ts >= win_start AND click_ts <= win_end""".stripMargin,
-
-    "q79_mixture_sample" ->
-      """WITH c AS (SELECT source, COUNT(*) AS cnt FROM documents GROUP BY source),
-        |w AS (SELECT source, cnt,
-        |        CAST(CAST(regexp_replace(source, 'src', '') AS BIGINT) % 3 + 1 AS DOUBLE) AS w
-        |      FROM c),
-        |g AS (SELECT SUM(w) AS sumw, SUM(cnt) AS total FROM w),
-        |r AS (SELECT source,
-        |        least(CAST(1.0 AS DOUBLE), (w / sumw) * (CAST(total AS DOUBLE) / cnt)) AS rate
-        |      FROM w, g)
-        |SELECT d.doc_id, d.source FROM documents d JOIN r USING (source)
-        |WHERE (CAST(((d.doc_id % 2147483647) * 48271 % 2147483647) * 48271 % 2147483647 * 48271 % 2147483647 AS DOUBLE) + 0.5) / 2147483647.0 < r.rate""".stripMargin,
-
-    "q80_weighted_sample" ->
-      """SELECT doc_id, n_chars,
-        |  round(ln((CAST(((doc_id % 2147483647) * 48271 % 2147483647) * 48271 % 2147483647 * 48271 % 2147483647 AS DOUBLE) + 0.5) / 2147483647.0)
-        |        / n_chars, 9) AS priority
-        |FROM documents
-        |ORDER BY priority DESC, doc_id LIMIT 100""".stripMargin,
-
-    "q82_centroids" ->
-      """WITH e AS (SELECT CAST(label AS BIGINT) AS label, embedding FROM embeddings),
-        |x AS (SELECT label, CAST(g.i - 1 AS BIGINT) AS dim,
-        |        CAST(embedding[g.i] AS DOUBLE) AS v
-        |      FROM e, LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) g)
-        |SELECT label, dim,
-        |  round(CAST(SUM(CAST(v AS DECIMAL(27,12))) AS DOUBLE) / COUNT(*), 9) AS centroid
-        |FROM x GROUP BY label, dim""".stripMargin,
-
-    "q83_histogram" ->
-      s"""SELECT CAST(floor(l_extendedprice / 1000) AS BIGINT) AS bin,
-         |  COUNT(*) AS n,
-         |  CAST(SUM(CAST(l_extendedprice AS $D)) AS DOUBLE) AS sum_price
-         |FROM lineitem GROUP BY 1""".stripMargin,
-
-    "q84_profile" ->
-      """WITH a AS (SELECT COUNT(*) AS n_rows,
-        |  SUM(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS nl1,
-        |  COUNT(DISTINCT o_orderstatus) AS nd1,
-        |  CAST(MIN(o_orderstatus) AS VARCHAR) AS mn1, CAST(MAX(o_orderstatus) AS VARCHAR) AS mx1,
-        |  SUM(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS nl2,
-        |  COUNT(DISTINCT o_orderpriority) AS nd2,
-        |  CAST(MIN(o_orderpriority) AS VARCHAR) AS mn2, CAST(MAX(o_orderpriority) AS VARCHAR) AS mx2,
-        |  SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS nl3,
-        |  COUNT(DISTINCT o_custkey) AS nd3,
-        |  CAST(MIN(o_custkey) AS VARCHAR) AS mn3, CAST(MAX(o_custkey) AS VARCHAR) AS mx3
-        |FROM orders)
-        |SELECT 'o_orderstatus' AS col_name, n_rows, CAST(nl1 AS BIGINT) AS n_null,
-        |       nd1 AS n_distinct, mn1 AS min_val, mx1 AS max_val FROM a
-        |UNION ALL
-        |SELECT 'o_orderpriority', n_rows, CAST(nl2 AS BIGINT), nd2, mn2, mx2 FROM a
-        |UNION ALL
-        |SELECT 'o_custkey', n_rows, CAST(nl3 AS BIGINT), nd3, mn3, mx3 FROM a""".stripMargin,
-
-    "q85_kmeans_iter" ->
-      """WITH e AS (SELECT vec_id, embedding, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        |c AS (SELECT vec_id AS centroid_id, emb AS cvec FROM e WHERE vec_id < 8),
-        |d AS (SELECT e.vec_id, c.centroid_id, list_distance(e.emb, c.cvec) AS dist FROM e, c),
-        |a AS (SELECT vec_id, centroid_id FROM (
-        |        SELECT vec_id, centroid_id,
-        |          row_number() OVER (PARTITION BY vec_id ORDER BY dist, centroid_id) AS rk
-        |        FROM d) WHERE rk = 1),
-        |x AS (SELECT CAST(a.centroid_id AS BIGINT) AS centroid_id,
-        |        CAST(g.i - 1 AS BIGINT) AS dim, CAST(e2.embedding[g.i] AS DOUBLE) AS v
-        |      FROM a JOIN embeddings e2 ON a.vec_id = e2.vec_id,
-        |      LATERAL (SELECT unnest(generate_series(1, len(e2.embedding))) AS i) g)
-        |SELECT centroid_id, dim,
-        |  round(CAST(SUM(CAST(v AS DECIMAL(27,12))) AS DOUBLE) / COUNT(*), 9) AS new_val,
-        |  COUNT(*) AS n_members
-        |FROM x GROUP BY centroid_id, dim""".stripMargin,
-
-    "q86_pmi" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |tok AS (SELECT doc_id, CAST(g.i - 1 AS BIGINT) AS pos, ws[g.i] AS word
-        |        FROM t, LATERAL (SELECT unnest(generate_series(1, len(ws))) AS i) g
-        |        WHERE length(ws[g.i]) > 0),
-        |bi AS (SELECT doc_id, word,
-        |         lead(word, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS next
-        |       FROM tok QUALIFY next IS NOT NULL),
-        |ab AS (SELECT word, next, COUNT(*) AS c_ab FROM bi GROUP BY word, next),
-        |a AS (SELECT word, COUNT(*) AS c_a FROM bi GROUP BY word),
-        |b AS (SELECT next AS nw, COUNT(*) AS c_b FROM bi GROUP BY next),
-        |n AS (SELECT COUNT(*) AS n_bi FROM bi)
-        |SELECT ab.word, ab.next, ab.c_ab,
-        |  round(ln(CAST(ab.c_ab * n.n_bi AS DOUBLE) / (a.c_a * b.c_b)), 9) AS pmi
-        |FROM ab JOIN a USING (word) JOIN b ON ab.next = b.nw, n
-        |WHERE ab.c_ab >= 5
-        |ORDER BY pmi DESC, ab.word, ab.next LIMIT 50""".stripMargin,
-
-    "q87_zscore" ->
-      s"""$evCte,
-         |st AS (SELECT event_type,
-         |         CAST(SUM(CAST(value AS DECIMAL(27,12))) AS DOUBLE) AS s1,
-         |         CAST(SUM(CAST(value * value AS DECIMAL(27,12))) AS DOUBLE) AS s2,
-         |         COUNT(*) AS n
-         |       FROM ev GROUP BY event_type)
-         |SELECT event_id, ev.event_type, value,
-         |  round((value - s1 / n) / sqrt((s2 - s1 * s1 / n) / (n - 1)), 9) AS z
-         |FROM ev JOIN st ON ev.event_type = st.event_type
-         |WHERE abs(round((value - s1 / n) / sqrt((s2 - s1 * s1 / n) / (n - 1)), 9)) > 2.5""".stripMargin,
-
-    "q88_salted_join" ->
-      s"""SELECT CAST(p_size AS BIGINT) AS p_size, COUNT(*) AS n,
-         |  CAST(SUM(CAST(l_extendedprice AS $D)) AS DOUBLE) AS revenue
-         |FROM lineitem JOIN part ON l_partkey = p_partkey
-         |GROUP BY p_size""".stripMargin,
-
-    "q89_resample_ffill" ->
-      s"""$evCte,
-         |p AS (SELECT user_id, date_trunc('hour', ts) AS h, ts, event_id, value
-         |      FROM ev WHERE event_type = 'purchase'),
-         |hourly AS (SELECT user_id, h, value AS v FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY user_id, h
-         |                                 ORDER BY ts DESC, event_id DESC) AS rk
-         |    FROM p) WHERE rk = 1),
-         |span AS (SELECT user_id, MIN(h) AS h0, MAX(h) AS h1 FROM hourly GROUP BY user_id),
-         |grid AS (SELECT user_id, g.h AS h
-         |         FROM span, LATERAL (SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h) g)
-         |SELECT grid.user_id, grid.h,
-         |  last_value(hourly.v IGNORE NULLS) OVER (
-         |    PARTITION BY grid.user_id ORDER BY grid.h
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v_ffill,
-         |  hourly.v IS NULL AS gap
-         |FROM grid LEFT JOIN hourly ON grid.user_id = hourly.user_id AND grid.h = hourly.h""".stripMargin,
-
-    "q90_impute" ->
-      s"""$evCte,
-         |b AS (SELECT event_id, event_type,
-         |        CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END AS v
-         |      FROM ev),
-         |st AS (SELECT event_type,
-         |         CAST(SUM(CAST(v AS DECIMAL(27,12))) AS DOUBLE) / COUNT(v) AS mean_v
-         |       FROM b GROUP BY event_type)
-         |SELECT event_id, b.event_type,
-         |       coalesce(v, mean_v) AS value_imputed,
-         |       v IS NULL AS was_imputed
-         |FROM b JOIN st ON b.event_type = st.event_type""".stripMargin,
-
-    "q91_entropy" ->
-      """WITH w AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
-        |tok AS (SELECT doc_id, word FROM w WHERE length(word) > 0),
-        |wc AS (SELECT doc_id, word, COUNT(*) AS c FROM tok GROUP BY doc_id, word),
-        |tot AS (SELECT doc_id, SUM(c) AS n FROM wc GROUP BY doc_id),
-        |terms AS (SELECT wc.doc_id,
-        |            round((CAST(c AS DOUBLE) / n) * ln(CAST(c AS DOUBLE) / n), 9) AS term
-        |          FROM wc JOIN tot ON wc.doc_id = tot.doc_id)
-        |SELECT doc_id,
-        |  CAST(-SUM(CAST(term AS DECIMAL(27,12))) AS DOUBLE) AS entropy,
-        |  COUNT(*) AS n_distinct_words
-        |FROM terms GROUP BY doc_id""".stripMargin,
-
-    "q92_funnel" ->
-      s"""$evCte,
-         |fc AS (SELECT user_id, MIN(ts) AS first_click
-         |       FROM ev WHERE event_type = 'click' GROUP BY user_id),
-         |cv AS (SELECT p.user_id, MIN(p.ts) AS conv_ts
-         |       FROM ev p JOIN fc ON p.user_id = fc.user_id
-         |       WHERE p.event_type = 'purchase'
-         |         AND p.ts >= fc.first_click
-         |         AND p.ts <= fc.first_click + INTERVAL 60 MINUTE
-         |       GROUP BY p.user_id)
-         |SELECT date_trunc('day', first_click) AS day,
-         |  COUNT(*) AS n_users,
-         |  COUNT(conv_ts) AS n_converted,
-         |  round(CAST(COUNT(conv_ts) AS DOUBLE) / COUNT(*), 9) AS conv_rate
-         |FROM fc LEFT JOIN cv ON fc.user_id = cv.user_id
-         |GROUP BY 1""".stripMargin,
-
-    "q93_sql_text" ->
-      """SELECT a.vec_id AS key_a, b.vec_id AS key_b,
-        |  list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) AS cosine
-        |FROM embeddings a JOIN embeddings b
-        |  ON a.label = b.label AND a.vec_id < b.vec_id
-        |WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) >= 0.5""".stripMargin,
-
-    "q94_stream_dedup" ->
-      s"""$evCte
-         |SELECT event_id, event_type, value FROM ev""".stripMargin,
-
-    "q95_winsorize" ->
-      s"""$evCte,
-         |b AS (SELECT event_type,
-         |        quantile_cont(value, 0.05) AS lo,
-         |        quantile_cont(value, 0.95) AS hi
-         |      FROM ev GROUP BY event_type)
-         |SELECT event_id, ev.event_type,
-         |  greatest(lo, least(hi, value)) AS value_capped,
-         |  (value < lo OR value > hi) AS was_clipped
-         |FROM ev JOIN b ON ev.event_type = b.event_type""".stripMargin,
-
-    "q96_minmax_scale" ->
-      """WITH x AS (SELECT vec_id, CAST(g.i - 1 AS BIGINT) AS dim,
-        |             CAST(embedding[g.i] AS DOUBLE) AS v
-        |           FROM embeddings,
-        |           LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS i) g),
-        |b AS (SELECT dim, MIN(v) AS mn, MAX(v) AS mx FROM x GROUP BY dim)
-        |SELECT vec_id, x.dim, (v - mn) / (mx - mn) AS scaled
-        |FROM x JOIN b ON x.dim = b.dim
-        |WHERE x.dim < 8""".stripMargin,
-
-    "q97_trailing_window" ->
-      s"""$evCte
-         |SELECT event_id, user_id, ts,
-         |  CAST(SUM(CAST(value AS $D)) OVER w AS DOUBLE) AS trail_sum,
-         |  COUNT(*) OVER w AS trail_n
-         |FROM ev WHERE event_type = 'purchase'
-         |WINDOW w AS (PARTITION BY user_id ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-         |             RANGE BETWEEN 3599 PRECEDING AND CURRENT ROW)""".stripMargin,
-
-    "q98_gaps" ->
-      s"""$evCte,
-         |c AS (SELECT event_id FROM ev WHERE event_type = 'click'),
-         |n AS (SELECT event_id, lead(event_id) OVER (ORDER BY event_id) AS nxt FROM c)
-         |SELECT event_id AS gap_start_after, nxt - event_id - 1 AS gap_len
-         |FROM n WHERE nxt - event_id > 1""".stripMargin,
-
-    "q99_group_sample" ->
-      """SELECT doc_id, source, CAST(rk AS BIGINT) AS rk FROM (
-        |  SELECT doc_id, source,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY ((doc_id % 2147483647) * 48271 % 2147483647) * 48271 % 2147483647 * 48271 % 2147483647, doc_id) AS rk
-        |  FROM documents)
-        |WHERE rk <= 3""".stripMargin,
-
-    "q100_chisq" ->
-      s"""$evCte,
-         |x AS (SELECT event_type, CAST(hour(ts) AS BIGINT) AS hr FROM ev),
-         |obs AS (SELECT event_type, hr, COUNT(*) AS o FROM x GROUP BY event_type, hr),
-         |rt AS (SELECT event_type, COUNT(*) AS rt FROM x GROUP BY event_type),
-         |ct AS (SELECT hr, COUNT(*) AS ct FROM x GROUP BY hr),
-         |n AS (SELECT COUNT(*) AS n FROM x),
-         |terms AS (
-         |  SELECT round((o - CAST(rt * ct AS DOUBLE) / n) * (o - CAST(rt * ct AS DOUBLE) / n)
-         |               / (CAST(rt * ct AS DOUBLE) / n), 9) AS term
-         |  FROM obs JOIN rt USING (event_type) JOIN ct USING (hr), n)
-         |SELECT CAST(SUM(CAST(term AS DECIMAL(27,12))) AS DOUBLE) AS chi2,
-         |       COUNT(*) AS n_cells
-         |FROM terms""".stripMargin,
-
-    "q81_vocab_encode" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |tok AS (SELECT doc_id, CAST(g.i - 1 AS BIGINT) AS pos, ws[g.i] AS word
-        |        FROM t, LATERAL (SELECT unnest(generate_series(1, len(ws))) AS i) g
-        |        WHERE length(ws[g.i]) > 0),
-        |c AS (SELECT word, COUNT(*) AS cnt FROM tok GROUP BY word),
-        |v AS (SELECT word, row_number() OVER (ORDER BY cnt DESC, word) - 1 AS word_id FROM c)
-        |SELECT tok.doc_id, tok.pos, v.word_id FROM tok JOIN v USING (word)""".stripMargin,
-
-    "q60_stratified_sample" ->
-      """SELECT l_orderkey, l_linenumber, l_returnflag, l_quantity FROM lineitem
-        |WHERE CASE
-        |  WHEN l_returnflag = 'A' THEN substr(md5(CAST(l_orderkey AS VARCHAR) || '_' || CAST(l_linenumber AS VARCHAR)), 1, 2) < '10'
-        |  WHEN l_returnflag = 'N' THEN substr(md5(CAST(l_orderkey AS VARCHAR) || '_' || CAST(l_linenumber AS VARCHAR)), 1, 2) < '40'
-        |  ELSE substr(md5(CAST(l_orderkey AS VARCHAR) || '_' || CAST(l_linenumber AS VARCHAR)), 1, 2) < '20'
-        |END""".stripMargin,
-
-    // --------------------------------------------------- round 7 oracles
-    "q157_substr_fingerprints" ->
-      """WITH g0 AS (
-        |  SELECT doc_id, substr(text, i, 40) AS gram
-        |  FROM documents,
-        |    LATERAL (SELECT unnest(generate_series(1, greatest(length(text) - 39, 1))) AS i) t
-        |), g AS (
-        |  SELECT DISTINCT doc_id, gram FROM g0
-        |  WHERE length(gram) = 40 AND substr(md5(gram), 1, 1) IN ('0','1','2','3')
-        |), keep AS (SELECT gram FROM g GROUP BY gram HAVING COUNT(*) <= 20),
-        |g2 AS (SELECT g.doc_id, g.gram FROM g JOIN keep USING (gram))
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-        |FROM g2 a JOIN g2 b USING (gram) WHERE a.doc_id < b.doc_id
-        |GROUP BY 1, 2 ORDER BY n_shared DESC, doc_a, doc_b LIMIT 20""".stripMargin,
-
-    "q158_record_linkage" ->
-      """WITH p AS (SELECT p_partkey, p_name, p_brand,
-        |             string_split(p_name, ' ')[-1] AS blk FROM part),
-        |cand AS (
-        |  SELECT a.p_partkey AS key_a, a.p_name AS name_a, b.p_partkey AS key_b,
-        |         CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS dist
-        |  FROM p a JOIN p b
-        |    ON a.p_brand = b.p_brand AND a.blk = b.blk AND a.p_partkey <> b.p_partkey)
-        |SELECT key_a, name_a, key_b AS best_match, dist
-        |FROM cand QUALIFY row_number() OVER (PARTITION BY key_a ORDER BY dist, key_b) = 1
-        |ORDER BY key_a LIMIT 100""".stripMargin,
-
-    "q159_retention_cohorts" ->
-      s"""$evCte,
-         |e AS (SELECT DISTINCT user_id, CAST(date_trunc('week', ts) AS DATE) AS wk FROM ev),
-         |f AS (SELECT user_id, MIN(wk) AS cohort FROM e GROUP BY user_id)
-         |SELECT cohort, CAST((wk - cohort) / 7 AS BIGINT) AS week_offset,
-         |  COUNT(*) AS n_users
-         |FROM e JOIN f USING (user_id)
-         |GROUP BY 1, 2 ORDER BY cohort, week_offset""".stripMargin,
-
-    "q160_attribution" ->
-      s"""$evCte,
-         |c AS (SELECT user_id, ts,
-         |        max_by(CAST(json_extract_string(props, '$$.k') AS BIGINT), event_id) AS page
-         |      FROM ev WHERE event_type = 'click' GROUP BY user_id, ts),
-         |p AS (SELECT user_id, ts, event_id AS purchase_id, value
-         |      FROM ev WHERE event_type = 'purchase'),
-         |j AS (SELECT p.purchase_id, p.value,
-         |        CASE WHEN c.ts >= p.ts - INTERVAL 7 DAY THEN c.page END AS page
-         |      FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts)
-         |SELECT page, COUNT(*) AS n_purchases,
-         |  CAST(SUM(CAST(value AS $D)) AS DOUBLE) AS revenue
-         |FROM j GROUP BY page""".stripMargin,
-
-    "q161_kmv_distinct" ->
-      """WITH w AS (SELECT DISTINCT l_partkey AS key FROM lineitem),
-        |h AS (SELECT key,
-        |        CAST(concat('0x', substr(md5(CAST(key AS VARCHAR)), 1, 8)) AS UINT64) AS h
-        |      FROM w),
-        |b AS (SELECT h FROM h ORDER BY h, key LIMIT 256),
-        |t AS (SELECT MAX(h) AS kth, COUNT(*) AS k_actual FROM b),
-        |x AS (SELECT COUNT(*) AS n_exact FROM w)
-        |SELECT n_exact, k_actual,
-        |  CASE WHEN k_actual < 256 THEN CAST(k_actual AS DOUBLE)
-        |       ELSE round(255.0 / (CAST(kth AS DOUBLE) / 4294967296.0), 3) END AS kmv_est
-        |FROM t, x""".stripMargin,
-
-    "q162_triangles" ->
-      s"""$sessionPagesCte,
-         |e AS (SELECT a.page AS u, b.page AS v
-         |      FROM d a JOIN d b
-         |        ON a.user_id = b.user_id AND a.sid = b.sid AND a.page < b.page
-         |      GROUP BY 1, 2)
-         |SELECT page, COUNT(*) AS n_triangles FROM (
-         |  SELECT unnest([e1.u, e1.v, e2.v]) AS page
-         |  FROM e e1 JOIN e e2 ON e1.v = e2.u
-         |            JOIN e e3 ON e1.u = e3.u AND e2.v = e3.v)
-         |GROUP BY page ORDER BY n_triangles DESC, page LIMIT 10""".stripMargin,
-
-    "q163_logodds_terms" ->
-      """WITH w AS (
-        |  SELECT CASE WHEN CAST(substr(source, 4) AS INT) < 10 THEN 'a' ELSE 'b' END AS grp,
-        |         unnest(string_split(text, ' ')) AS word
-        |  FROM documents),
-        |w2 AS (SELECT grp, word FROM w WHERE length(word) > 0),
-        |c AS (SELECT word, COUNT(*) FILTER (grp = 'a') AS a,
-        |             COUNT(*) FILTER (grp = 'b') AS b FROM w2 GROUP BY word),
-        |t AS (SELECT SUM(a) AS ta, SUM(b) AS tb FROM c)
-        |SELECT word, CAST(a AS BIGINT) AS n_a, CAST(b AS BIGINT) AS n_b,
-        |  round((ln((a + 0.5) / (ta - a + 0.5)) - ln((b + 0.5) / (tb - b + 0.5)))
-        |    / sqrt(1.0 / (a + 0.5) + 1.0 / (b + 0.5)), 9) AS z
-        |FROM c, t ORDER BY z DESC, word LIMIT 20""".stripMargin,
-
-    "q164_containment" ->
-      """WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id < 200),
-        |w AS (SELECT doc_id, list_filter(string_split_regex(
-        |        regexp_replace(lower(text), '[^\p{L}\p{N}\s]', '', 'g'), '\s+'),
-        |        x -> len(x) > 0) AS words FROM docs),
-        |sh0 AS (SELECT doc_id, unnest(list_distinct(
-        |         CASE WHEN len(words) = 0 THEN []
-        |              ELSE [array_to_string(words[i:i+2], ' ')
-        |                    FOR i IN generate_series(1, greatest(len(words) - 2, 1))] END)) AS sh
-        |        FROM w),
-        |sz AS (SELECT doc_id, COUNT(*) AS sz FROM sh0 GROUP BY doc_id),
-        |shared AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-        |  FROM sh0 a JOIN sh0 b USING (sh) WHERE a.doc_id <> b.doc_id GROUP BY 1, 2)
-        |SELECT doc_a, doc_b, round(CAST(n_shared AS DOUBLE) / sz.sz, 9) AS containment
-        |FROM shared JOIN sz ON sz.doc_id = doc_a
-        |WHERE CAST(n_shared AS DOUBLE) / sz.sz >= 0.6
-        |ORDER BY containment DESC, doc_a, doc_b""".stripMargin,
-
-    // exact selection — the refinement operator must reproduce the
-    // single-buffer quantile bit-for-bit (same interpolation form)
-    "q165_median_refine" ->
-      """SELECT l_returnflag, round(quantile_cont(l_extendedprice, 0.5), 9) AS median
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q168_quantiles_refine" ->
-      """SELECT l_returnflag,
-        |  round(quantile_cont(l_extendedprice, 0.5), 9) AS p50,
-        |  round(quantile_cont(l_extendedprice, 0.95), 9) AS p95,
-        |  round(quantile_cont(l_extendedprice, 0.99), 9) AS p99
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q175_kmv_grouped" ->
-      """WITH keys AS (SELECT DISTINCT l_returnflag AS g, l_partkey AS key FROM lineitem),
-        |h AS (SELECT g, key,
-        |        CAST(concat('0x', substr(md5(CAST(key AS VARCHAR)), 1, 8)) AS UINT64) AS h
-        |      FROM keys),
-        |b AS (SELECT g, h FROM h
-        |      QUALIFY row_number() OVER (PARTITION BY g ORDER BY h, key) <= 64),
-        |t AS (SELECT g, MAX(h) AS kth, COUNT(*) AS k_actual FROM b GROUP BY g),
-        |x AS (SELECT g, COUNT(*) AS n_exact FROM keys GROUP BY g)
-        |SELECT t.g, n_exact, k_actual,
-        |  CASE WHEN k_actual < 64 THEN CAST(k_actual AS DOUBLE)
-        |       ELSE round(63.0 / (CAST(kth AS DOUBLE) / 4294967296.0), 3) END AS kmv_est
-        |FROM t JOIN x USING (g) ORDER BY g""".stripMargin,
-
-    "q176_equidepth_hist" ->
-      """WITH qs AS (SELECT l_returnflag,
-        |  quantile_cont(l_extendedprice,
-        |    [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS q
-        |FROM lineitem GROUP BY l_returnflag)
-        |SELECT l_returnflag, CAST(i AS BIGINT) AS decile, round(q[i], 9) AS edge
-        |FROM qs, LATERAL (SELECT unnest(generate_series(1, 9)) AS i) t
-        |ORDER BY l_returnflag, decile""".stripMargin,
-
-    "q174_cuped" ->
-      s"""$evCte,
-         |u AS (
-         |  SELECT user_id % 2 AS t,
-         |    CAST(SUM(CAST(CASE WHEN ts < TIMESTAMP '2024-01-15 00:00:00'
-         |      THEN value ELSE 0 END AS DECIMAL(18,4))) AS DOUBLE) AS x,
-         |    CAST(SUM(CAST(CASE WHEN ts >= TIMESTAMP '2024-01-15 00:00:00'
-         |      THEN value ELSE 0 END AS DECIMAL(18,4))) AS DOUBLE) AS y
-         |  FROM ev GROUP BY user_id),
-         |m AS (SELECT COUNT(*) AS n,
-         |  CAST(SUM(CAST(x AS DECIMAL(27,6))) AS DOUBLE) AS sx,
-         |  CAST(SUM(CAST(y AS DECIMAL(27,6))) AS DOUBLE) AS sy,
-         |  CAST(SUM(CAST(round(x * y, 6) AS DECIMAL(27,6))) AS DOUBLE) AS sxy,
-         |  CAST(SUM(CAST(round(x * x, 6) AS DECIMAL(27,6))) AS DOUBLE) AS sxx
-         |  FROM u),
-         |th AS (SELECT n, sx / n AS mx,
-         |  (sxy - sx * sy / n) / (sxx - sx * sx / n) AS theta FROM m),
-         |adj AS (SELECT t, y, round(y - theta * (x - mx), 6) AS ya FROM u, th),
-         |arm AS (SELECT t, COUNT(*) AS n_users,
-         |  CAST(SUM(CAST(y AS DECIMAL(27,6))) AS DOUBLE) / COUNT(*) AS my,
-         |  CAST(SUM(CAST(ya AS DECIMAL(27,6))) AS DOUBLE) / COUNT(*) AS mya,
-         |  CAST(SUM(CAST(round(ya * ya, 6) AS DECIMAL(33,6))) AS DOUBLE) / COUNT(*) AS myy2,
-         |  CAST(SUM(CAST(round(y * y, 6) AS DECIMAL(33,6))) AS DOUBLE) / COUNT(*) AS my2
-         |  FROM adj GROUP BY t)
-         |SELECT t, n_users, round(my, 6) AS mean_y, round(mya, 6) AS mean_adj,
-         |  round((myy2 - mya * mya) / (my2 - my * my), 6) AS var_ratio
-         |FROM arm ORDER BY t""".stripMargin,
-
-    "q173_bloom_anti_join" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey FROM lineitem
-        |WHERE l_partkey NOT IN (SELECT p_partkey FROM part WHERE p_size > 40)""".stripMargin,
-
-    "q171_upsert_latest" ->
-      """WITH old AS (SELECT doc_id, n_chars, 1 AS version FROM documents),
-        |fresh AS (SELECT doc_id, n_chars + 1 AS n_chars, 2 AS version
-        |          FROM documents WHERE doc_id % 5 = 0),
-        |u AS (SELECT * FROM old UNION ALL SELECT * FROM fresh)
-        |SELECT doc_id, CAST(MAX(version) AS BIGINT) AS version,
-        |  CAST(max_by(n_chars, version) AS BIGINT) AS n_chars
-        |FROM u GROUP BY doc_id""".stripMargin,
-
-    "q172_interval_overlap" ->
-      s"""$evCte,
-         |a AS (SELECT event_id AS win_a, ts AS a_start, ts + INTERVAL 30 MINUTE AS a_end
-         |      FROM ev WHERE event_type = 'purchase' AND event_id % 97 = 0),
-         |b AS (SELECT event_id AS win_b, ts AS b_start, ts + INTERVAL 10 MINUTE AS b_end
-         |      FROM ev WHERE event_type = 'click' AND event_id % 53 = 0)
-         |SELECT win_a, win_b,
-         |  CAST(epoch_us(least(a_end, b_end)) // 1000000
-         |    - epoch_us(greatest(a_start, b_start)) // 1000000 AS BIGINT) AS overlap_sec
-         |FROM a JOIN b ON a_start <= b_end AND b_start <= a_end""".stripMargin,
-
-    "q170_quantized_ann" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |  CAST(list_min(embedding) AS DOUBLE) AS mn,
-        |  CAST(list_max(embedding) AS DOUBLE) AS mx
-        |FROM embeddings),
-        |s2 AS (SELECT vec_id, v, mn, mx, (mx - mn) / 255.0 AS sc FROM e WHERE mx > mn),
-        |coded AS (SELECT vec_id, v,
-        |  list_transform(v, x -> CAST(round((x - mn) / sc, 0) AS BIGINT)) AS code
-        |FROM s2),
-        |q AS (SELECT vec_id AS query_id, code AS qcode, v AS qe FROM coded WHERE vec_id < 5),
-        |c AS (SELECT vec_id AS neighbor_id, code AS ccode, v AS ce FROM coded),
-        |coarse AS (SELECT query_id, neighbor_id, qe, ce,
-        |    CAST(list_sum([(qcode[i] - ccode[i]) * (qcode[i] - ccode[i])
-        |                   FOR i IN generate_series(1, len(qcode))]) AS BIGINT) AS qdist
-        |  FROM q, c WHERE neighbor_id <> query_id),
-        |top100 AS (SELECT * FROM coarse
-        |  QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY qdist, neighbor_id) <= 100),
-        |rer AS (SELECT query_id, neighbor_id,
-        |          list_cosine_similarity(qe, ce) AS cosine FROM top100)
-        |SELECT query_id, neighbor_id, cosine, CAST(rank AS BIGINT) AS rank FROM (
-        |  SELECT query_id, neighbor_id, cosine,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-        |  FROM rer) WHERE rank <= 10""".stripMargin,
-
-    "q169_bm25" ->
-      """WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-        |w2 AS (SELECT doc_id, w FROM w WHERE length(w) > 0),
-        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM w2 GROUP BY doc_id),
-        |st AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS total_dl FROM dl),
-        |tf AS (SELECT doc_id, w, COUNT(*) AS tf FROM w2
-        |       WHERE w IN ('spark','join','scan') GROUP BY doc_id, w),
-        |dfq AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY w),
-        |sc AS (SELECT tf.doc_id,
-        |         round(ln((n_docs - df + 0.5) / (df + 0.5) + 1.0) * tf * 2.2
-        |           / (tf + 1.2 * (0.25 + 0.75 * dl / (CAST(total_dl AS DOUBLE) / n_docs))), 12) AS s
-        |       FROM tf JOIN dl USING (doc_id) JOIN dfq USING (w), st)
-        |SELECT doc_id, round(CAST(SUM(CAST(s AS DECIMAL(27,14))) AS DOUBLE), 9) AS bm25
-        |FROM sc GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT 20""".stripMargin,
-
-    "q166_psi_drift" ->
-      s"""$evCte,
-         |e2 AS (SELECT event_type, value,
-         |         CASE WHEN ts < TIMESTAMP '2024-01-15 00:00:00' THEN 'ref' ELSE 'cur' END AS win
-         |       FROM ev),
-         |bounds AS (SELECT event_type, MIN(value) AS lo, MAX(value) AS hi
-         |           FROM e2 GROUP BY event_type),
-         |binned AS (SELECT e2.event_type, win,
-         |             CASE WHEN hi <= lo THEN 0
-         |                  ELSE least(9, CAST(floor((value - lo) / (hi - lo) * 10) AS INT)) END AS b
-         |           FROM e2 JOIN bounds USING (event_type)),
-         |cells0 AS (SELECT event_type, b,
-         |            COUNT(*) FILTER (win = 'ref') AS cr,
-         |            COUNT(*) FILTER (win = 'cur') AS cc
-         |          FROM binned GROUP BY event_type, b),
-         |grid AS (SELECT event_type, unnest(generate_series(0, 9)) AS b FROM bounds),
-         |cells AS (SELECT g.event_type, g.b,
-         |            COALESCE(cr, 0) AS cr, COALESCE(cc, 0) AS cc
-         |          FROM grid g LEFT JOIN cells0 USING (event_type, b)),
-         |tot AS (SELECT event_type, SUM(cr) AS nr, SUM(cc) AS nc
-         |        FROM cells GROUP BY event_type)
-         |SELECT event_type, CAST(nr AS BIGINT) AS n_ref, CAST(nc AS BIGINT) AS n_cur,
-         |  FLOOR(CAST(SUM(CAST(FLOOR(
-         |    (((cr + 0.5) / (nr + 5.0)) - ((cc + 0.5) / (nc + 5.0)))
-         |      * ln(((cr + 0.5) / (nr + 5.0)) / ((cc + 0.5) / (nc + 5.0))) * 1e12 + 0.5) / 1e12
-         |    AS DECIMAL(27,14))) AS DOUBLE) * 1e9 + 0.5) / 1e9 AS psi
-         |FROM cells JOIN tot USING (event_type)
-         |GROUP BY event_type, nr, nc ORDER BY event_type""".stripMargin,
-
-    "q167_split_leakage" ->
-      """WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id < 100),
-        |w AS (SELECT doc_id,
-        |        list_filter(string_split_regex(
-        |          regexp_replace(lower(text), '[^\p{L}\p{N}\s]', '', 'g'), '\s+'),
-        |          x -> len(x) > 0) AS words
-        |      FROM docs),
-        |sh AS (SELECT doc_id,
-        |         list_distinct([array_to_string(words[i:i+1], ' ')
-        |                        FOR i IN generate_series(1, greatest(len(words) - 1, 1))]) AS sh
-        |       FROM w WHERE len(words) > 0),
-        |pairs AS (
-        |  SELECT a.doc_id AS key_a, b.doc_id AS key_b,
-        |    CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |      / len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |      / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.08),
-        |sp AS (SELECT doc_id,
-        |  CASE WHEN (CAST(((doc_id % 2147483647) * 48271 % 2147483647) * 48271 % 2147483647 * 48271 % 2147483647 AS DOUBLE) + 0.5) / 2147483647.0 < 0.8 THEN 'train'
-        |       WHEN (CAST(((doc_id % 2147483647) * 48271 % 2147483647) * 48271 % 2147483647 * 48271 % 2147483647 AS DOUBLE) + 0.5) / 2147483647.0 < 0.9 THEN 'val'
-        |       ELSE 'test' END AS split
-        |  FROM documents),
-        |j AS (SELECT key_a, key_b, sa.split AS split_a, sb.split AS split_b,
-        |        round(jaccard, 9) AS jaccard
-        |      FROM pairs JOIN sp sa ON sa.doc_id = key_a
-        |                 JOIN sp sb ON sb.doc_id = key_b)
-        |SELECT key_a, key_b, split_a, split_b, jaccard FROM j
-        |WHERE split_a <> split_b ORDER BY key_a, key_b""".stripMargin,
-
-    "q177_kmeans_lloyd" ->
-      s"""$kmeansBaseCte,
-         |${kmeansIterCte(1)},
-         |${kmeansIterCte(2)},
-         |${kmeansIterCte(3)}
-         |SELECT cid AS centroid_id, dim, cv AS new_val, n_members FROM m3""".stripMargin,
-
-    "q178_semdedup" ->
-      s"""$kmeansBaseCte,
-         |${kmeansIterCte(1)},
-         |a2 AS (SELECT vec_id, cid FROM (
-         |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY list_distance(e.emb, c.cvec), c.cid) AS rk
-         |    FROM e, cent1 c) WHERE rk = 1),
-         |r AS (SELECT DISTINCT a.vec_id FROM a2 a JOIN a2 b ON a.cid = b.cid AND b.vec_id < a.vec_id
-         |      JOIN e ea ON ea.vec_id = a.vec_id JOIN e eb ON eb.vec_id = b.vec_id
-         |      WHERE list_cosine_similarity(ea.emb, eb.emb) >= 0.4)
-         |SELECT a2.vec_id, CAST(a2.cid AS BIGINT) AS cluster, COALESCE(rr.removed, FALSE) AS removed
-         |FROM a2 LEFT JOIN (SELECT vec_id, TRUE AS removed FROM r) rr USING (vec_id)""".stripMargin,
-
-    "q179_gopher_repetition" ->
-      """WITH t AS (SELECT doc_id, length(text) AS nc, string_split(text, ' ') AS ws FROM documents),
-        |tok AS (SELECT doc_id, nc, CAST(g.i AS BIGINT) AS pos, ws[g.i] AS w
-        |        FROM t, LATERAL (SELECT unnest(generate_series(1, len(ws))) AS i) g
-        |        WHERE length(ws[g.i]) > 0),
-        |l AS (SELECT doc_id, nc, w,
-        |        lead(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS l1,
-        |        lead(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS l2 FROM tok),
-        |c2 AS (SELECT doc_id, MAX(nc) AS nc, w || ' ' || l1 AS g, COUNT(*) AS c
-        |       FROM l WHERE l1 IS NOT NULL GROUP BY doc_id, g),
-        |t2 AS (SELECT doc_id, MAX(c * length(g)) AS tc, MAX(nc) AS nc FROM c2 GROUP BY doc_id),
-        |c3 AS (SELECT doc_id, w || ' ' || l1 || ' ' || l2 AS g, COUNT(*) AS c
-        |       FROM l WHERE l2 IS NOT NULL GROUP BY doc_id, g),
-        |t3 AS (SELECT doc_id, SUM(CASE WHEN c >= 2 THEN c * length(g) ELSE 0 END) AS dc FROM c3 GROUP BY doc_id),
-        |dw AS (SELECT doc_id, COUNT(*) AS nw, COUNT(DISTINCT w) AS ndw FROM l GROUP BY doc_id)
-        |SELECT t2.doc_id,
-        |  round(CAST(tc AS DOUBLE) / t2.nc, 9) AS top2_frac,
-        |  round(least(CAST(dc AS DOUBLE) / t2.nc, 1.0), 9) AS dup3_frac,
-        |  round(1.0 - CAST(ndw AS DOUBLE) / nw, 9) AS dup_word_frac,
-        |  (CAST(tc AS DOUBLE) / t2.nc > 0.15 OR CAST(dc AS DOUBLE) / t2.nc > 0.10) AS flagged
-        |FROM t2 JOIN t3 USING (doc_id) JOIN dw USING (doc_id)""".stripMargin,
-
-    "q180_dsir" ->
-      """WITH tok AS (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w FROM documents),
-        |tok2 AS (SELECT doc_id, lang, w FROM tok WHERE length(w) > 0),
-        |dc AS (SELECT doc_id, lang, w, COUNT(*) AS c FROM tok2 GROUP BY 1, 2, 3),
-        |wc AS (SELECT w, SUM(c) AS cr, SUM(CASE WHEN lang = 'en' THEN c ELSE 0 END) AS ct
-        |       FROM dc GROUP BY w),
-        |tot AS (SELECT SUM(cr) AS nr, SUM(ct) AS nt, COUNT(*) AS v FROM wc),
-        |lr AS (SELECT w, round(ln(((ct + 0.5) / (nt + 0.5 * v))
-        |                        / ((cr + 0.5) / (nr + 0.5 * v))), 12) AS lr FROM wc, tot)
-        |SELECT doc_id, lang,
-        |  round(CAST(SUM(CAST(round(c * lr, 9) AS DECIMAL(27,9))) AS DOUBLE), 6) AS dsir_weight
-        |FROM dc JOIN lr USING (w) WHERE lang <> 'en'
-        |GROUP BY doc_id, lang ORDER BY dsir_weight DESC, doc_id LIMIT 20""".stripMargin,
-
-    "q181_decontamination" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |tok AS (SELECT doc_id, CAST(g.i AS BIGINT) AS pos, ws[g.i] AS w
-        |        FROM t, LATERAL (SELECT unnest(generate_series(1, len(ws))) AS i) g
-        |        WHERE length(ws[g.i]) > 0),
-        |l AS (SELECT doc_id, w,
-        |        lead(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS l1,
-        |        lead(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS l2 FROM tok),
-        |g AS (SELECT DISTINCT doc_id, w || ' ' || l1 || ' ' || l2 AS gram FROM l WHERE l2 IS NOT NULL),
-        |bench AS (SELECT doc_id AS bench_id, gram FROM g WHERE doc_id % 97 = 0 AND doc_id < 10000),
-        |corp AS (SELECT doc_id, gram FROM g WHERE NOT (doc_id % 97 = 0 AND doc_id < 10000)),
-        |p AS (SELECT doc_id, bench_id, COUNT(*) AS n_shared FROM corp JOIN bench USING (gram) GROUP BY 1, 2)
-        |SELECT doc_id, bench_id, CAST(n_shared AS BIGINT) AS n_shared FROM p
-        |WHERE n_shared >= 2 ORDER BY doc_id, bench_id""".stripMargin,
-
-    "q182_funnel_3stage" ->
-      s"""$evCte,
-         |e2 AS (SELECT user_id, event_type, CAST(epoch_us(ts) // 1000000 AS BIGINT) AS sec FROM ev),
-         |v AS (SELECT user_id, MIN(sec) AS t1 FROM e2 WHERE event_type = 'view' GROUP BY user_id),
-         |c AS (SELECT e2.user_id, MIN(sec) AS t2, MAX(t1) AS t1 FROM e2 JOIN v USING (user_id)
-         |      WHERE event_type = 'click' AND sec > t1 GROUP BY e2.user_id),
-         |p AS (SELECT e2.user_id, MIN(sec) AS t3, MAX(c.t1) AS t1 FROM e2 JOIN c USING (user_id)
-         |      WHERE event_type = 'purchase' AND sec > t2 GROUP BY e2.user_id)
-         |SELECT (SELECT COUNT(*) FROM v) AS n_view,
-         |       (SELECT COUNT(*) FROM c) AS n_click,
-         |       (SELECT COUNT(*) FROM p) AS n_purchase,
-         |       (SELECT round(CAST(SUM(t3 - t1) AS DOUBLE) / COUNT(*) / 3600.0, 9) FROM p) AS avg_hours_to_convert""".stripMargin,
-
-    "q183_assoc_rules" ->
-      s"""$sessionPagesCte,
-         |n AS (SELECT COUNT(*) AS n_sess FROM (SELECT DISTINCT user_id, sid FROM d)),
-         |pn AS (SELECT page, COUNT(*) AS np FROM d GROUP BY page),
-         |pr AS (SELECT a.page AS pa, b.page AS pb, COUNT(*) AS nab
-         |       FROM d a JOIN d b ON a.user_id = b.user_id AND a.sid = b.sid AND a.page < b.page
-         |       GROUP BY 1, 2),
-         |bo AS (SELECT pa AS ante, pb AS cons, nab FROM pr
-         |       UNION ALL SELECT pb, pa, nab FROM pr),
-         |j AS (SELECT ante, cons, nab, na.np AS na, nb.np AS nb, n_sess
-         |      FROM bo JOIN pn na ON na.page = ante JOIN pn nb ON nb.page = cons, n
-         |      WHERE nab >= 10)
-         |SELECT ante, cons, CAST(nab AS BIGINT) AS n_ab,
-         |  round(CAST(nab AS DOUBLE) / n_sess, 9) AS support,
-         |  round(CAST(nab AS DOUBLE) / na, 9) AS confidence,
-         |  round(CAST(nab * n_sess AS DOUBLE) / (na * nb), 9) AS lift
-         |FROM j ORDER BY lift DESC, ante, cons LIMIT 30""".stripMargin,
-
-    "q184_winsorized_mean" ->
-      """WITH b AS (SELECT l_returnflag, round(quantile_cont(l_extendedprice, 0.05), 9) AS lo,
-        |                  round(quantile_cont(l_extendedprice, 0.95), 9) AS hi
-        |           FROM lineitem GROUP BY l_returnflag)
-        |SELECT l.l_returnflag, COUNT(*) AS n,
-        |  round(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*), 9) AS raw_mean,
-        |  round(CAST(SUM(CAST(round(least(greatest(l_extendedprice, lo), hi), 9) AS DECIMAL(27,9))) AS DOUBLE) / COUNT(*), 9) AS wins_mean,
-        |  MAX(lo) AS lo, MAX(hi) AS hi
-        |FROM lineitem l JOIN b USING (l_returnflag)
-        |GROUP BY l.l_returnflag ORDER BY l.l_returnflag""".stripMargin,
-
-    "q185_stratified_sample" ->
-      """SELECT lang, stratum_n, doc_id, rn FROM (
-        |  SELECT lang, doc_id, COUNT(*) OVER (PARTITION BY lang) AS stratum_n,
-        |    row_number() OVER (PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-        |  FROM documents) WHERE rn <= ceil(stratum_n / 10.0)""".stripMargin,
-
-    "q186_vocab_coverage" ->
-      """WITH w0 AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
-        |wc AS (SELECT w, COUNT(*) AS c FROM w0 WHERE length(w) > 0 GROUP BY w),
-        |tot AS (SELECT SUM(c) AS n_tok FROM wc),
-        |r AS (SELECT w, c, row_number() OVER (ORDER BY c DESC, w) AS rank,
-        |        SUM(c) OVER (ORDER BY c DESC, w ROWS UNBOUNDED PRECEDING) AS cum FROM wc),
-        |x AS (SELECT pct, rank, cum, n_tok
-        |      FROM r, tot, (SELECT unnest([50, 90, 99]) AS pct) taus
-        |      WHERE cum * 100 >= pct * n_tok),
-        |m AS (SELECT pct, MIN(rank) AS vocab_size FROM x GROUP BY pct)
-        |SELECT CAST(m.pct AS BIGINT) AS pct, CAST(m.vocab_size AS BIGINT) AS vocab_size,
-        |  round(CAST(x.cum AS DOUBLE) / x.n_tok, 9) AS coverage
-        |FROM m JOIN x ON m.pct = x.pct AND x.rank = m.vocab_size ORDER BY pct""".stripMargin,
-
-    "q187_sequence_packing" ->
-      """WITH d AS (SELECT doc_id, CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS wc
-        |           FROM documents),
-        |d2 AS (SELECT doc_id, wc FROM d WHERE wc > 0),
-        |t AS (SELECT doc_id, wc, SUM(wc) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum FROM d2),
-        |x AS (SELECT doc_id, wc, cum, (cum - wc) // 256 AS fc, (cum - 1) // 256 AS lc FROM t)
-        |SELECT COUNT(*) AS n_docs, CAST(SUM(wc) AS BIGINT) AS total_tokens,
-        |  CAST(MAX(lc) + 1 AS BIGINT) AS n_chunks,
-        |  CAST(SUM(CASE WHEN lc > fc THEN 1 ELSE 0 END) AS BIGINT) AS n_boundary_docs,
-        |  CAST(MAX(lc - fc + 1) AS BIGINT) AS max_span
-        |FROM x""".stripMargin,
-
-    "q188_ivf_trained" ->
-      s"""$kmeansBaseCte,
-         |${kmeansIterCte(1)},
-         |ac AS (SELECT vec_id, cid FROM (
-         |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY list_distance(e.emb, c.cvec), c.cid) AS rk
-         |    FROM e, cent1 c) WHERE rk = 1),
-         |pq AS (SELECT vec_id AS query_id, cid FROM (
-         |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY list_distance(e.emb, c.cvec), c.cid) AS rk
-         |    FROM e, cent1 c WHERE e.vec_id < 10) WHERE rk <= 3),
-         |cand AS (SELECT p.query_id, a.vec_id AS neighbor_id,
-         |           list_cosine_similarity(eq.emb, ea.emb) AS cosine
-         |         FROM pq p JOIN ac a USING (cid)
-         |         JOIN e eq ON eq.vec_id = p.query_id
-         |         JOIN e ea ON ea.vec_id = a.vec_id
-         |         WHERE a.vec_id <> p.query_id)
-         |SELECT query_id, neighbor_id, cosine, CAST(rank AS BIGINT) AS rank FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank FROM cand)
-         |WHERE rank <= 5""".stripMargin,
-
-    "q189_mixture_weights" ->
-      """WITH src AS (SELECT source, CAST(SUM(len(regexp_extract_all(text, '\S+'))) AS BIGINT) AS n_tokens
-        |             FROM documents GROUP BY source),
-        |tot AS (SELECT SUM(n_tokens) AS n_total FROM src),
-        |t AS (SELECT source, n_tokens, CAST(n_tokens AS DOUBLE) / n_total AS share,
-        |        round(exp(ln(CAST(n_tokens AS DOUBLE) / n_total) * 0.7), 12) AS t
-        |      FROM src, tot),
-        |tt AS (SELECT CAST(SUM(CAST(t AS DECIMAL(27,12))) AS DOUBLE) AS t_sum FROM t)
-        |SELECT source, n_tokens, round(share, 9) AS share,
-        |  round(t / t_sum, 9) AS weight,
-        |  round(t / t_sum * 100000.0, 3) AS expected_tokens
-        |FROM t, tt ORDER BY source""".stripMargin,
-
-
-    "q190_rrf_fusion" ->
-      """WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-        |w2 AS (SELECT doc_id, w FROM w WHERE length(w) > 0),
-        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM w2 GROUP BY doc_id),
-        |st AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS total_dl FROM dl),
-        |tf AS (SELECT doc_id, w, COUNT(*) AS tf FROM w2
-        |       WHERE w IN ('spark','join','scan') GROUP BY doc_id, w),
-        |dfq AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY w),
-        |sc AS (SELECT tf.doc_id,
-        |         round(ln((n_docs - df + 0.5) / (df + 0.5) + 1.0) * tf * 2.2
-        |           / (tf + 1.2 * (0.25 + 0.75 * dl / (CAST(total_dl AS DOUBLE) / n_docs))), 12) AS s
-        |       FROM tf JOIN dl USING (doc_id) JOIN dfq USING (w), st),
-        |bm AS (SELECT doc_id, round(CAST(SUM(CAST(s AS DECIMAL(27,14))) AS DOUBLE), 9) AS bm25
-        |       FROM sc GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT 50),
-        |bmr AS (SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS rb FROM bm),
-        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        |qv AS (SELECT emb AS qv FROM e WHERE vec_id = 0),
-        |co AS (SELECT vec_id AS doc_id, list_cosine_similarity(emb, qv) AS cos
-        |       FROM e, qv WHERE vec_id <> 0 ORDER BY cos DESC, doc_id LIMIT 50),
-        |cor AS (SELECT doc_id, row_number() OVER (ORDER BY cos DESC, doc_id) AS rc FROM co),
-        |f AS (SELECT COALESCE(bmr.doc_id, cor.doc_id) AS doc_id, rb, rc
-        |      FROM bmr FULL OUTER JOIN cor ON bmr.doc_id = cor.doc_id)
-        |SELECT doc_id, CAST(rb AS BIGINT) AS bm25_rank, CAST(rc AS BIGINT) AS cos_rank,
-        |  round(COALESCE(1.0 / (rb + 60), 0.0) + COALESCE(1.0 / (rc + 60), 0.0), 12) AS rrf
-        |FROM f ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin,
-
-    "q191_scd2_history" ->
-      s"""$evCte,
-         |c AS (SELECT user_id, ts, event_id, event_type,
-         |        lag(event_type, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-         |      FROM ev),
-         |r AS (SELECT user_id, ts, event_id, event_type FROM c
-         |      WHERE prev IS NULL OR prev <> event_type)
-         |SELECT user_id, event_type, ts AS valid_from,
-         |  lead(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to,
-         |  (lead(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL) AS is_current
-         |FROM r""".stripMargin,
-
-    "q192_cluster_labels" ->
-      s"""$kmeansBaseCte,
-         |${kmeansIterCte(1)},
-         |a2 AS (SELECT vec_id, cid FROM (
-         |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY list_distance(e.emb, c.cvec), c.cid) AS rk
-         |    FROM e, cent1 c) WHERE rk = 1),
-         |w0 AS (SELECT d.doc_id, unnest(string_split(d.text, ' ')) AS word FROM documents d),
-         |w1 AS (SELECT a.cid AS cluster, word FROM w0 JOIN a2 a ON a.vec_id = w0.doc_id
-         |       WHERE length(word) > 0),
-         |cw AS (SELECT cluster, word, COUNT(*) AS cw FROM w1 GROUP BY cluster, word),
-         |wt AS (SELECT word, SUM(cw) AS w_all FROM cw GROUP BY word),
-         |ct AS (SELECT cluster, SUM(cw) AS n_c FROM cw GROUP BY cluster),
-         |n AS (SELECT SUM(n_c) AS n_all FROM ct),
-         |z AS (SELECT cw.cluster, cw.word, cw.cw,
-         |        round((ln((cw.cw + 0.5) / (ct.n_c - cw.cw + 0.5))
-         |             - ln(((wt.w_all - cw.cw) + 0.5) / ((n.n_all - ct.n_c) - (wt.w_all - cw.cw) + 0.5)))
-         |          / sqrt(1.0 / (cw.cw + 0.5) + 1.0 / ((wt.w_all - cw.cw) + 0.5)), 9) AS z
-         |      FROM cw JOIN wt USING (word) JOIN ct USING (cluster), n)
-         |SELECT CAST(cluster AS BIGINT) AS cluster, word, cw, z, CAST(rank AS BIGINT) AS rank FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY cluster ORDER BY z DESC, word) AS rank FROM z)
-         |WHERE rank <= 3""".stripMargin,
-
-    "q193_cohens_kappa" ->
-      """WITH f AS (SELECT lang,
-        |  least(CAST(len(regexp_extract_all(text, '\S+')) AS DOUBLE) / 100.0, 1.0) AS f_tok,
-        |  CASE WHEN len(regexp_extract_all(text, '\S+')) = 0 THEN 0.0
-        |       ELSE CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|to|a|in|is|that|it|for)\b')) AS DOUBLE)
-        |            / len(regexp_extract_all(text, '\S+')) END AS f_stop,
-        |  CASE WHEN length(text) = 0 THEN 0.0
-        |       ELSE CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / length(text) END AS f_alpha,
-        |  CASE WHEN length(text) = 0 THEN 0.0
-        |       ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE) / length(text) END AS f_punct
-        |FROM documents),
-        |d AS (SELECT
-        |  CASE WHEN round(1.0 / (1.0 + exp(-(f_tok * 1.2 + f_stop * 2.0 + f_alpha * 1.5 + f_punct * (-3.0) + (-1.0)))), 9) >= 0.5
-        |       THEN 1 ELSE 0 END AS a,
-        |  CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS b FROM f),
-        |t AS (SELECT COUNT(*) AS n, SUM(a * b) AS n11, SUM((1 - a) * (1 - b)) AS n00,
-        |             SUM(a) AS na, SUM(b) AS nb FROM d)
-        |SELECT n, CAST(n11 AS BIGINT) AS n11, CAST(n00 AS BIGINT) AS n00,
-        |  CAST(na AS BIGINT) AS na, CAST(nb AS BIGINT) AS nb,
-        |  round((CAST(n11 + n00 AS DOUBLE) / CAST(n AS DOUBLE)
-        |       - (CAST(na AS DOUBLE) * nb + (CAST(n AS DOUBLE) - na) * (n - nb)) / (CAST(n AS DOUBLE) * n))
-        |      / (1.0 - (CAST(na AS DOUBLE) * nb + (CAST(n AS DOUBLE) - na) * (n - nb)) / (CAST(n AS DOUBLE) * n)), 9) AS kappa
-        |FROM t""".stripMargin,
-
-    "q194_wasserstein_drift" ->
-      s"""$evCte,
-         |e2 AS (SELECT event_type,
-         |         CASE WHEN ts < TIMESTAMP '2024-01-15 00:00:00' THEN 'ref' ELSE 'cur' END AS win,
-         |         value FROM ev),
-         |qs AS (SELECT event_type, win,
-         |         quantile_cont(value, [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS qv
-         |       FROM e2 GROUP BY event_type, win),
-         |x AS (SELECT event_type, win, g.i AS qi, qv[g.i] AS v
-         |      FROM qs, LATERAL (SELECT unnest(generate_series(1, 9)) AS i) g),
-         |a AS (SELECT event_type, qi, v AS qr FROM x WHERE win = 'ref'),
-         |b AS (SELECT event_type, qi, v AS qc FROM x WHERE win = 'cur')
-         |SELECT event_type,
-         |  round(CAST(SUM(CAST(round(abs(qr - qc), 9) AS DECIMAL(27,9))) AS DOUBLE) / 9.0, 9) AS w1
-         |FROM a JOIN b USING (event_type, qi) GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q195_ecdf_transform" ->
-      """WITH e AS (SELECT doc_id, n_chars, cume_dist() OVER (ORDER BY n_chars) AS cd
-        |           FROM documents)
-        |SELECT doc_id, n_chars, round(cd, 9) AS ecdf FROM e WHERE doc_id < 100""".stripMargin,
-
-    "q196_unicode_nfc" ->
-      """SELECT doc_id,
-        |  CAST(length(text || 'e' || chr(769)) AS BIGINT) AS len_raw,
-        |  CAST(length(nfc_normalize(text || 'e' || chr(769))) AS BIGINT) AS len_nfc,
-        |  (nfc_normalize(text || 'e' || chr(769)) = (text || 'e' || chr(769))) AS unchanged
-        |FROM documents WHERE doc_id < 100""".stripMargin,
-
-    "q197_nfc_dedup" ->
-      """WITH planted AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
-        |corpus AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 0
-        |  UNION ALL SELECT doc_id, text || 'e' || chr(769) FROM planted
-        |  UNION ALL SELECT doc_id + 1000000, text || chr(233) FROM planted),
-        |g AS (SELECT md5(nfc_normalize(text)) AS h, MIN(doc_id) AS survivor,
-        |             COUNT(*) AS n_copies
-        |      FROM corpus GROUP BY h)
-        |SELECT survivor, CAST(n_copies AS BIGINT) AS n_copies FROM g
-        |WHERE n_copies >= 2""".stripMargin,
-
-    "q198_ks_drift" ->
-      s"""$evCte,
-         |w AS (SELECT event_type, value,
-         |        CASE WHEN ts < TIMESTAMP '2024-01-15 00:00:00' THEN 'ref' ELSE 'cur' END AS win
-         |      FROM ev),
-         |c AS (SELECT event_type, value,
-         |        SUM(CASE WHEN win = 'ref' THEN 1 ELSE 0 END) AS cr,
-         |        SUM(CASE WHEN win = 'cur' THEN 1 ELSE 0 END) AS cc
-         |      FROM w GROUP BY 1, 2),
-         |m AS (SELECT event_type,
-         |        SUM(cr) OVER (PARTITION BY event_type ORDER BY value) AS wcr,
-         |        SUM(cc) OVER (PARTITION BY event_type ORDER BY value) AS wcc,
-         |        SUM(cr) OVER (PARTITION BY event_type) AS tr,
-         |        SUM(cc) OVER (PARTITION BY event_type) AS tc
-         |      FROM c)
-         |SELECT event_type,
-         |  FLOOR(MAX(ABS(CAST(wcr AS DOUBLE) / tr - CAST(wcc AS DOUBLE) / tc)) * 1e9 + 0.5) / 1e9 AS ks
-         |FROM m WHERE tr > 0 AND tc > 0 GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q199_embedding_dim_profile" ->
-      """WITH x AS (SELECT CAST(g.i - 1 AS BIGINT) AS dim, CAST(e.embedding[g.i] AS DOUBLE) AS v
-        |           FROM embeddings e, LATERAL (SELECT unnest(generate_series(1, len(e.embedding))) AS i) g),
-        |st AS (SELECT dim, COUNT(*) AS n,
-        |         CAST(SUM(CAST(v AS DECIMAL(27,12))) AS DOUBLE) AS sv,
-        |         CAST(SUM(CAST(v * v AS DECIMAL(27,12))) AS DOUBLE) AS svv,
-        |         MIN(v) AS vmin, MAX(v) AS vmax
-        |       FROM x GROUP BY dim)
-        |SELECT dim, n,
-        |  FLOOR(sv / n * 1e9 + 0.5) / 1e9 AS mean,
-        |  FLOOR(SQRT(GREATEST((svv - sv * sv / n) / n, 0.0)) * 1e9 + 0.5) / 1e9 AS std,
-        |  vmin, vmax,
-        |  (SQRT(GREATEST((svv - sv * sv / n) / n, 0.0)) < 1e-6) AS dead
-        |FROM st ORDER BY dim""".stripMargin,
-
-    "q200_zipf_fit" ->
-      """WITH t AS (SELECT string_split(text, ' ') AS ws FROM documents),
-        |tok AS (SELECT ws[g.i] AS word
-        |        FROM t, LATERAL (SELECT unnest(generate_series(1, len(ws))) AS i) g
-        |        WHERE length(ws[g.i]) > 0),
-        |c AS (SELECT word, COUNT(*) AS cnt FROM tok GROUP BY word),
-        |r AS (SELECT row_number() OVER (ORDER BY cnt DESC, word) AS rn, cnt FROM c),
-        |xy AS (SELECT FLOOR(LN(CAST(rn AS DOUBLE)) * 1e9 + 0.5) / 1e9 AS x,
-        |              FLOOR(LN(CAST(cnt AS DOUBLE)) * 1e9 + 0.5) / 1e9 AS y
-        |       FROM r WHERE rn <= 1000),
-        |st AS (SELECT COUNT(*) AS n,
-        |         CAST(SUM(CAST(x AS DECIMAL(30,12))) AS DOUBLE) AS sx,
-        |         CAST(SUM(CAST(y AS DECIMAL(30,12))) AS DOUBLE) AS sy,
-        |         CAST(SUM(CAST(x * y AS DECIMAL(30,12))) AS DOUBLE) AS sxy,
-        |         CAST(SUM(CAST(x * x AS DECIMAL(30,12))) AS DOUBLE) AS sxx
-        |       FROM xy)
-        |SELECT n AS n_terms,
-        |  FLOOR((n * sxy - sx * sy) / (n * sxx - sx * sx) * 1e9 + 0.5) / 1e9 AS slope,
-        |  FLOOR((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n * 1e9 + 0.5) / 1e9 AS intercept
-        |FROM st""".stripMargin,
-
-    "q201_url_canonical" ->
-      """WITH u AS (SELECT doc_id,
-        |    'HTTPS://WWW.Example.COM:443/p/' || CAST(doc_id % 100 AS VARCHAR)
-        |      || '?utm_campaign=c' || CAST(doc_id AS VARCHAR)
-        |      || '&x=' || CAST(doc_id % 3 AS VARCHAR)
-        |      || '#s' || CAST(doc_id AS VARCHAR) AS url
-        |  FROM documents),
-        |nf AS (SELECT doc_id, regexp_replace(url, '#.*$', '') AS u FROM u),
-        |c AS (SELECT doc_id,
-        |    regexp_replace(lower(regexp_extract(u, '^[^/]*//[^/]*')), ':443$', '')
-        |    || regexp_replace(regexp_replace(regexp_replace(u, '^[^/]*//[^/]*', ''),
-        |         '\?utm_[^&]*&', '?'), '[?&]utm_[^&]*', '') AS canon_url
-        |  FROM nf)
-        |SELECT canon_url, MIN(doc_id) AS survivor, COUNT(*) AS n_copies
-        |FROM c GROUP BY canon_url HAVING COUNT(*) >= 2 ORDER BY canon_url""".stripMargin,
-
-    "q202_phrase_search" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |tok AS (SELECT doc_id, CAST(g.i - 1 AS BIGINT) AS pos, ws[g.i] AS word
-        |        FROM t, LATERAL (SELECT unnest(generate_series(1, len(ws))) AS i) g
-        |        WHERE length(ws[g.i]) > 0),
-        |bg AS (SELECT word AS w1,
-        |         lead(word, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
-        |       FROM tok),
-        |top AS (SELECT w1, w2, COUNT(*) AS cnt FROM bg WHERE w2 IS NOT NULL
-        |        GROUP BY 1, 2 ORDER BY cnt DESC, w1, w2 LIMIT 1),
-        |a AS (SELECT doc_id, pos FROM tok JOIN top ON tok.word = top.w1),
-        |b AS (SELECT doc_id, pos FROM tok JOIN top ON tok.word = top.w2),
-        |m AS (SELECT a.doc_id FROM a JOIN b
-        |      ON a.doc_id = b.doc_id AND b.pos = a.pos + 1)
-        |SELECT top.w1, top.w2, s.n_docs, s.n_occurrences
-        |FROM (SELECT COUNT(DISTINCT doc_id) AS n_docs, COUNT(*) AS n_occurrences FROM m) s, top""".stripMargin,
-
-    "q203_clustering_coeff" ->
-      s"""$sessionPagesCte,
-         |e AS (SELECT a.page AS u, b.page AS v
-         |      FROM d a JOIN d b
-         |        ON a.user_id = b.user_id AND a.sid = b.sid AND a.page < b.page
-         |      GROUP BY 1, 2),
-         |deg AS (SELECT page, COUNT(*) AS degree FROM (
-         |          SELECT u AS page FROM e UNION ALL SELECT v FROM e)
-         |        GROUP BY page),
-         |tri AS (SELECT page, COUNT(*) AS n_triangles FROM (
-         |          SELECT unnest([e1.u, e1.v, e2.v]) AS page
-         |          FROM e e1 JOIN e e2 ON e1.v = e2.u
-         |                    JOIN e e3 ON e1.u = e3.u AND e2.v = e3.v)
-         |        GROUP BY page)
-         |SELECT deg.page, deg.degree,
-         |  COALESCE(tri.n_triangles, 0) AS n_triangles,
-         |  FLOOR(2.0 * COALESCE(tri.n_triangles, 0)
-         |        / (deg.degree * (deg.degree - 1)) * 1e9 + 0.5) / 1e9 AS coeff
-         |FROM deg LEFT JOIN tri USING (page)
-         |WHERE deg.degree >= 2
-         |ORDER BY coeff DESC, deg.page LIMIT 10""".stripMargin,
-
-    "q204_kcore" -> {
-      // 12 unrolled peel rounds: each keeps nodes with degree >= 3 and
-      // the edges between them; rounds past the fixpoint are no-ops.
-      // MATERIALIZED is load-bearing: each round references the
-      // previous frame three times, and DuckDB's default CTE inlining
-      // would re-expand the chain ~3^12 times (observed as a
-      // too-many-open-files explosion on the base parquet).
-      val rounds = (1 to 12).map { i =>
-        s"""n$i AS MATERIALIZED (SELECT src AS node FROM e${i - 1} GROUP BY src HAVING COUNT(*) >= 3),
-           |e$i AS MATERIALIZED (SELECT e.src, e.dst FROM e${i - 1} e
-           |        JOIN n$i a ON e.src = a.node JOIN n$i b ON e.dst = b.node)""".stripMargin
-      }.mkString(",\n")
-      s"""$sessionPagesCte,
-         |eu AS MATERIALIZED (SELECT a.page AS u, b.page AS v
-         |       FROM d a JOIN d b
-         |         ON a.user_id = b.user_id AND a.sid = b.sid AND a.page < b.page
-         |       GROUP BY 1, 2),
-         |e0 AS MATERIALIZED (SELECT u AS src, v AS dst FROM eu UNION SELECT v, u FROM eu),
-         |$rounds
-         |SELECT src AS page, COUNT(*) AS core_degree FROM e12
-         |GROUP BY src ORDER BY page""".stripMargin
-    },
-
-    "q205_assortativity" ->
-      s"""$sessionPagesCte,
-         |eu AS MATERIALIZED (SELECT a.page AS u, b.page AS v
-         |       FROM d a JOIN d b
-         |         ON a.user_id = b.user_id AND a.sid = b.sid AND a.page < b.page
-         |       GROUP BY 1, 2),
-         |sym AS MATERIALIZED (SELECT u AS src, v AS dst FROM eu UNION ALL SELECT v, u FROM eu),
-         |deg AS MATERIALIZED (SELECT src, COUNT(*) AS dg FROM sym GROUP BY src),
-         |e AS (SELECT x.dg AS dx, y.dg AS dy FROM sym
-         |      JOIN deg x ON sym.src = x.src JOIN deg y ON sym.dst = y.src),
-         |st AS (SELECT COUNT(*) AS m,
-         |         CAST(SUM(CAST(dx AS DECIMAL(38,0))) AS DOUBLE) AS sx,
-         |         CAST(SUM(CAST(dy AS DECIMAL(38,0))) AS DOUBLE) AS sy,
-         |         CAST(SUM(CAST(dx * dy AS DECIMAL(38,0))) AS DOUBLE) AS sxy,
-         |         CAST(SUM(CAST(dx * dx AS DECIMAL(38,0))) AS DOUBLE) AS sxx,
-         |         CAST(SUM(CAST(dy * dy AS DECIMAL(38,0))) AS DOUBLE) AS syy
-         |       FROM e)
-         |SELECT m AS n_directed_edges,
-         |  FLOOR((m * sxy - sx * sy)
-         |        / SQRT((m * sxx - sx * sx) * (m * syy - sy * sy)) * 1e9 + 0.5) / 1e9
-         |    AS assortativity
-         |FROM st""".stripMargin,
-
-    "q206_adamic_adar" ->
-      s"""$sessionPagesCte,
-         |eu AS MATERIALIZED (SELECT a.page AS u, b.page AS v
-         |       FROM d a JOIN d b
-         |         ON a.user_id = b.user_id AND a.sid = b.sid AND a.page < b.page
-         |       GROUP BY 1, 2),
-         |sym AS MATERIALIZED (SELECT u AS src, v AS dst FROM eu UNION ALL SELECT v, u FROM eu),
-         |deg AS MATERIALIZED (SELECT src, COUNT(*) AS dg FROM sym GROUP BY src),
-         |cap AS MATERIALIZED (SELECT src, dst FROM (
-         |        SELECT src, dst,
-         |          row_number() OVER (PARTITION BY src ORDER BY dst) AS rn
-         |        FROM sym) WHERE rn <= 64),
-         |w AS (SELECT w1.src AS w, w1.dst AS u, w2.dst AS v
-         |      FROM cap w1 JOIN cap w2 ON w1.src = w2.src
-         |      WHERE w1.dst < w2.dst),
-         |sc AS (SELECT u, v,
-         |         CAST(FLOOR(1.0 / LN(deg.dg) * 1e9 + 0.5) / 1e9 AS DECIMAL(27,9)) AS t
-         |       FROM w JOIN deg ON w.w = deg.src),
-         |p AS (SELECT u, v, CAST(SUM(t) AS DOUBLE) AS aa_score,
-         |        COUNT(*) AS common_neighbors
-         |      FROM sc GROUP BY 1, 2),
-         |np AS (SELECT p.* FROM p LEFT JOIN eu ON p.u = eu.u AND p.v = eu.v
-         |       WHERE eu.u IS NULL)
-         |SELECT u, v, aa_score, common_neighbors FROM np
-         |ORDER BY aa_score DESC, u, v LIMIT 10""".stripMargin,
-
-    "q207_cusum_changepoint" ->
-      s"""$evCte,
-         |daily AS (SELECT event_type, date_trunc('day', ts) AS day, COUNT(*) AS x
-         |          FROM ev GROUP BY 1, 2),
-         |m AS (SELECT event_type, day, x,
-         |        COUNT(*) OVER (PARTITION BY event_type) AS dcnt,
-         |        SUM(x) OVER (PARTITION BY event_type) AS tot
-         |      FROM daily),
-         |c AS (SELECT event_type, day, dcnt,
-         |        SUM(x * dcnt - tot) OVER
-         |          (PARTITION BY event_type ORDER BY day
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cs
-         |      FROM m),
-         |sc AS (SELECT event_type, day, dcnt,
-         |         cs - MIN(cs) OVER
-         |           (PARTITION BY event_type ORDER BY day
-         |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s
-         |       FROM c)
-         |SELECT event_type, day,
-         |  FLOOR(CAST(s AS DOUBLE) / dcnt * 1e9 + 0.5) / 1e9 AS cusum
-         |FROM sc ORDER BY cusum DESC, event_type, day LIMIT 10""".stripMargin,
-
-    "q209_textrank" -> {
-      // q112's unrolled damped-decimal iteration on the word graph
-      val iters = (1 to 3).map { i =>
-        s"""c$i AS (SELECT f.dst, SUM(CAST(r.rank * f.frac AS DECIMAL(27,12))) AS s
-           |       FROM r${i - 1} r JOIN f ON r.node = f.src GROUP BY f.dst),
-           |r$i AS MATERIALIZED (SELECT r.node, r.n_nodes,
-           |         round((CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / r.n_nodes
-           |               + CAST(0.85 AS DOUBLE) * coalesce(CAST(c$i.s AS DOUBLE), 0.0), 9) AS rank
-           |       FROM r${i - 1} r LEFT JOIN c$i ON r.node = c$i.dst)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         |tok AS (SELECT doc_id, CAST(g.i AS BIGINT) AS pos, ws[g.i] AS word
-         |        FROM t, LATERAL (SELECT unnest(generate_series(1, len(ws))) AS i) g
-         |        WHERE length(ws[g.i]) > 0),
-         |adj AS (SELECT word AS u,
-         |          lead(word, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS v
-         |        FROM tok),
-         |und AS (SELECT least(u, v) AS a, greatest(u, v) AS b, COUNT(*) AS w
-         |        FROM adj WHERE v IS NOT NULL AND u <> v GROUP BY 1, 2),
-         |e AS MATERIALIZED (SELECT a AS src, b AS dst, w FROM und
-         |     UNION ALL SELECT b, a, w FROM und),
-         |wo AS (SELECT src, SUM(w) AS wout FROM e GROUP BY src),
-         |f AS MATERIALIZED (SELECT e.src, e.dst,
-         |       CAST(e.w AS DOUBLE) / CAST(wo.wout AS DOUBLE) AS frac
-         |     FROM e JOIN wo USING (src)),
-         |nodes AS (SELECT DISTINCT node FROM
-         |            (SELECT src AS node FROM e UNION SELECT dst FROM e)),
-         |nn AS (SELECT COUNT(*) AS n_nodes FROM nodes),
-         |r0 AS MATERIALIZED (SELECT node, n_nodes,
-         |       round(CAST(1.0 AS DOUBLE) / n_nodes, 9) AS rank FROM nodes, nn),
-         |$iters
-         |SELECT node AS word, rank FROM r3 ORDER BY rank DESC, node LIMIT 20""".stripMargin
-    },
-
-    "q210_stream_psi" ->
-      s"""$evCte,
-         |ref AS (SELECT value FROM ev WHERE ts < TIMESTAMP '2024-01-15 00:00:00'),
-         |bounds AS (SELECT MIN(value) AS lo, MAX(value) AS hi FROM ref),
-         |rb AS (SELECT CASE WHEN hi <= lo THEN 0
-         |         ELSE least(9, CAST(FLOOR((value - lo) / (hi - lo) * 10) AS INT)) END AS b,
-         |         COUNT(*) AS cr
-         |       FROM ref, bounds GROUP BY 1),
-         |cur AS (SELECT time_bucket(INTERVAL '1 day', ts) AS day, value
-         |        FROM ev WHERE ts >= TIMESTAMP '2024-01-15 00:00:00'),
-         |cb AS (SELECT day, CASE WHEN hi <= lo THEN 0
-         |         ELSE least(9, CAST(FLOOR((value - lo) / (hi - lo) * 10) AS INT)) END AS b,
-         |         COUNT(*) AS cc
-         |       FROM cur, bounds GROUP BY 1, 2),
-         |grid AS (SELECT d.day, g.b,
-         |           COALESCE(cb.cc, 0) AS cc, COALESCE(rb.cr, 0) AS cr
-         |         FROM (SELECT DISTINCT day FROM cb) d
-         |         CROSS JOIN (SELECT unnest(generate_series(0, 9)) AS b) g
-         |         LEFT JOIN cb ON cb.day = d.day AND cb.b = g.b
-         |         LEFT JOIN rb ON rb.b = g.b),
-         |nr AS (SELECT SUM(cr) AS nr FROM rb),
-         |nc AS (SELECT day, CAST(SUM(cc) AS BIGINT) AS nc FROM grid GROUP BY day),
-         |t AS (SELECT grid.day, nc.nc,
-         |        (CAST(grid.cr AS DOUBLE) + 0.5) / (nr.nr + 5.0) AS pr,
-         |        (CAST(grid.cc AS DOUBLE) + 0.5) / (nc.nc + 5.0) AS pc
-         |      FROM grid JOIN nc USING (day), nr)
-         |SELECT day, nc AS n_cur,
-         |  FLOOR(CAST(SUM(CAST(FLOOR((pr - pc) * ln(pr / pc) * 1e12 + 0.5) / 1e12
-         |    AS DECIMAL(27,14))) AS DOUBLE) * 1e9 + 0.5) / 1e9 AS psi
-         |FROM t GROUP BY 1, 2 ORDER BY day""".stripMargin,
-
-    "q211_scd2_lookup" ->
-      s"""$evCte,
-         |v AS (SELECT user_id, ts, event_id, CAST(FLOOR(value / 25) AS BIGINT) AS tier
-         |      FROM ev WHERE event_type = 'view'),
-         |r AS (SELECT user_id, ts, event_id, tier,
-         |        lag(tier) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-         |      FROM v),
-         |ch AS (SELECT user_id, tier, ts AS valid_from,
-         |         lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to
-         |       FROM r WHERE prev IS NULL OR prev <> tier),
-         |p AS (SELECT user_id, ts, value FROM ev WHERE event_type = 'purchase')
-         |SELECT tier, COUNT(*) AS n_purchases,
-         |  CAST(SUM(CAST(value AS $D)) AS DOUBLE) AS total_value
-         |FROM p JOIN ch ON p.user_id = ch.user_id AND p.ts >= ch.valid_from
-         |  AND (ch.valid_to IS NULL OR p.ts < ch.valid_to)
-         |GROUP BY tier ORDER BY tier""".stripMargin,
-
-    "q212_benford" ->
-      s"""$evCte,
-         |kk AS (SELECT event_type, FLOOR(value * 100 + 0.5) AS k
-         |       FROM ev WHERE value > 0),
-         |v AS (SELECT event_type, CAST(
-         |        CASE WHEN k >= 1e12 THEN FLOOR(k / 1e12)
-         |             WHEN k >= 1e11 THEN FLOOR(k / 1e11)
-         |             WHEN k >= 1e10 THEN FLOOR(k / 1e10)
-         |             WHEN k >= 1e9 THEN FLOOR(k / 1e9)
-         |             WHEN k >= 1e8 THEN FLOOR(k / 1e8)
-         |             WHEN k >= 1e7 THEN FLOOR(k / 1e7)
-         |             WHEN k >= 1e6 THEN FLOOR(k / 1e6)
-         |             WHEN k >= 1e5 THEN FLOOR(k / 1e5)
-         |             WHEN k >= 1e4 THEN FLOOR(k / 1e4)
-         |             WHEN k >= 1e3 THEN FLOOR(k / 1e3)
-         |             WHEN k >= 100 THEN FLOOR(k / 100)
-         |             WHEN k >= 10 THEN FLOOR(k / 10)
-         |             ELSE k END AS INT) AS d
-         |      FROM kk WHERE k >= 1),
-         |obs AS (SELECT event_type, d, COUNT(*) AS o FROM v GROUP BY 1, 2),
-         |grid AS (SELECT t.event_type, g.d, COALESCE(obs.o, 0) AS o
-         |         FROM (SELECT DISTINCT event_type FROM obs) t
-         |         CROSS JOIN (SELECT unnest(generate_series(1, 9)) AS d) g
-         |         LEFT JOIN obs ON obs.event_type = t.event_type AND obs.d = g.d),
-         |tot AS (SELECT event_type, CAST(SUM(o) AS BIGINT) AS n FROM grid GROUP BY 1),
-         |x AS (SELECT grid.event_type, tot.n, grid.o,
-         |        tot.n * CASE grid.d
-         |          WHEN 1 THEN CAST(0.3010299956639812 AS DOUBLE)
-         |          WHEN 2 THEN CAST(0.17609125905568124 AS DOUBLE)
-         |          WHEN 3 THEN CAST(0.12493873660829992 AS DOUBLE)
-         |          WHEN 4 THEN CAST(0.09691001300805642 AS DOUBLE)
-         |          WHEN 5 THEN CAST(0.07918124604762482 AS DOUBLE)
-         |          WHEN 6 THEN CAST(0.06694678963061322 AS DOUBLE)
-         |          WHEN 7 THEN CAST(0.05799194697768673 AS DOUBLE)
-         |          WHEN 8 THEN CAST(0.05115252244738129 AS DOUBLE)
-         |          ELSE CAST(0.04575749056067514 AS DOUBLE) END AS e
-         |      FROM grid JOIN tot USING (event_type))
-         |SELECT event_type, n AS n_values,
-         |  FLOOR(CAST(SUM(CAST(FLOOR((o - e) * (o - e) / e * 1e9 + 0.5) / 1e9
-         |    AS DECIMAL(27,9))) AS DOUBLE) * 1e9 + 0.5) / 1e9 AS chi2
-         |FROM x GROUP BY 1, 2 ORDER BY event_type""".stripMargin,
-
-    "q213_gini" ->
-      s"""$evCte,
-         |c AS (SELECT event_type, value, COUNT(*) AS cnt
-         |      FROM ev WHERE value >= 0 GROUP BY 1, 2),
-         |m AS (SELECT event_type, value, cnt,
-         |        SUM(cnt) OVER (PARTITION BY event_type ORDER BY value
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumw,
-         |        CAST(SUM(cnt) OVER (PARTITION BY event_type) AS BIGINT) AS n
-         |      FROM c),
-         |t AS (SELECT event_type, n,
-         |        CAST(FLOOR(value * 100 + 0.5) AS HUGEINT) * cnt * (2 * cumw - cnt - n) AS nt,
-         |        CAST(FLOOR(value * 100 + 0.5) AS HUGEINT) * cnt AS dt
-         |      FROM m)
-         |SELECT event_type, n AS n_values,
-         |  FLOOR(CAST(SUM(nt) AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(SUM(dt) AS DOUBLE)) * 1e9 + 0.5) / 1e9 AS gini
-         |FROM t GROUP BY 1, 2 ORDER BY event_type""".stripMargin,
-
-    "q214_attribution" ->
-      s"""$evCte,
-         |p AS (SELECT user_id, ts AS pts FROM ev WHERE event_type = 'purchase'),
-         |tch AS (SELECT user_id, ts AS tts, event_id, event_type AS channel
-         |        FROM ev WHERE event_type IN ('view', 'click')),
-         |j AS (SELECT p.user_id, p.pts, tch.tts, tch.event_id, tch.channel
-         |      FROM p JOIN tch ON p.user_id = tch.user_id
-         |        AND tch.tts < p.pts AND tch.tts >= p.pts - INTERVAL 7 DAY),
-         |r AS (SELECT channel,
-         |        row_number() OVER (PARTITION BY user_id, pts ORDER BY tts, event_id) AS rk,
-         |        COUNT(*) OVER (PARTITION BY user_id, pts) AS n
-         |      FROM j),
-         |c AS (SELECT channel,
-         |        CASE WHEN n = 1 THEN 1.0
-         |             WHEN n = 2 THEN 0.5
-         |             WHEN rk = 1 OR rk = n THEN 0.4
-         |             ELSE 0.2 / (n - 2) END AS credit
-         |      FROM r)
-         |SELECT channel,
-         |  CAST(SUM(CAST(FLOOR(credit * 1e9 + 0.5) / 1e9 AS DECIMAL(27,9))) AS DOUBLE) AS credit,
-         |  COUNT(*) AS n_touches
-         |FROM c GROUP BY channel ORDER BY channel""".stripMargin,
-
-    "q215_peak_concurrency" ->
-      s"""$evCte,
-         |brk AS (
-         |  SELECT user_id, ts, event_id,
-         |    CASE WHEN lag(ts) OVER w IS NULL
-         |           OR ts - lag(ts) OVER w >= INTERVAL '5 minutes'
-         |         THEN 1 ELSE 0 END AS is_break
-         |  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         |sess AS (
-         |  SELECT user_id, ts,
-         |    SUM(is_break) OVER (PARTITION BY user_id ORDER BY ts, event_id
-         |                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-         |  FROM brk),
-         |sp AS (SELECT MIN(ts) AS s, MAX(ts) + INTERVAL '5 minutes' AS e
-         |       FROM sess GROUP BY user_id, sid),
-         |dl AS (SELECT s AS ts, 1 AS delta FROM sp UNION ALL SELECT e, -1 FROM sp),
-         |net AS (SELECT ts, SUM(delta) AS delta FROM dl GROUP BY ts),
-         |c AS (SELECT ts, SUM(delta) OVER (ORDER BY ts
-         |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS concurrency
-         |      FROM net)
-         |SELECT ts, CAST(concurrency AS BIGINT) AS concurrency FROM c
-         |ORDER BY concurrency DESC, ts LIMIT 10""".stripMargin,
-
-    "q216_time_to_convert" ->
-      s"""$evCte,
-         |e2 AS (SELECT user_id, event_type,
-         |         CAST(epoch_us(ts) // 1000000 AS BIGINT) AS sec FROM ev),
-         |v AS (SELECT user_id, MIN(sec) AS t1 FROM e2 WHERE event_type = 'view'
-         |      GROUP BY user_id),
-         |p AS (SELECT e2.user_id, MIN(sec - t1) AS delay
-         |      FROM e2 JOIN v USING (user_id)
-         |      WHERE event_type = 'purchase' AND sec > t1 GROUP BY e2.user_id),
-         |qs AS (SELECT quantile_cont(CAST(delay AS DOUBLE), [0.5, 0.9, 0.99]) AS qv FROM p)
-         |SELECT [0.5, 0.9, 0.99][g.i] AS q, qv[g.i] AS delay_sec
-         |FROM qs, LATERAL (SELECT unnest(generate_series(1, 3)) AS i) g
-         |ORDER BY q""".stripMargin,
-
-    "q217_trailing_wau" ->
-      s"""$evCte,
-         |daily AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM ev),
-         |days AS (SELECT DISTINCT day FROM daily),
-         |contrib AS (SELECT DISTINCT daily.day + CAST(g.i AS INTEGER) AS day, user_id
-         |            FROM daily, LATERAL (SELECT unnest(generate_series(0, 6)) AS i) g),
-         |clipped AS (SELECT contrib.day, user_id FROM contrib
-         |            JOIN days ON contrib.day = days.day)
-         |SELECT day, COUNT(DISTINCT user_id) AS wau
-         |FROM clipped GROUP BY day ORDER BY day""".stripMargin,
-
-    "q218_dedup_yield" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text, n_chars FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text, n_chars FROM documents WHERE doc_id % 10 = 0),
-        |g AS (SELECT md5(text) AS h, COUNT(*) AS sz, SUM(n_chars) AS chars,
-        |        MAX(n_chars) AS keep_chars
-        |      FROM corpus GROUP BY h)
-        |SELECT sz, COUNT(*) AS n_groups,
-        |  CAST(SUM(sz - 1) AS BIGINT) AS docs_removed,
-        |  CAST(SUM(chars - keep_chars) AS BIGINT) AS chars_removed
-        |FROM g GROUP BY sz ORDER BY sz""".stripMargin,
-
-    "q219_cross_source_dups" ->
-      """WITH planted AS (
-        |  SELECT text, 'src' || CAST((CAST(substr(source, 4) AS INT) + 1) % 20 AS VARCHAR) AS source
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |hs AS (SELECT DISTINCT md5(text) AS h, source AS src FROM (
-        |         SELECT text, source FROM documents UNION ALL SELECT text, source FROM planted)),
-        |p AS (SELECT a.src AS src_a, b.src AS src_b
-        |      FROM hs a JOIN hs b ON a.h = b.h AND a.src < b.src)
-        |SELECT src_a, src_b, COUNT(*) AS n_shared
-        |FROM p GROUP BY 1, 2 ORDER BY n_shared DESC, src_a, src_b LIMIT 10""".stripMargin,
-
-    "q220_mann_kendall" ->
-      s"""$evCte,
-         |daily AS (SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS x
-         |          FROM ev GROUP BY 1, 2),
-         |p AS (SELECT a.event_type,
-         |        CAST(SUM(CASE WHEN b.x > a.x THEN 1 WHEN b.x < a.x THEN -1 ELSE 0 END) AS BIGINT) AS s_stat
-         |      FROM daily a JOIN daily b
-         |        ON a.event_type = b.event_type AND a.day < b.day
-         |      GROUP BY 1),
-         |n AS (SELECT event_type, COUNT(*) AS n FROM daily GROUP BY 1),
-         |tg AS (SELECT event_type, x, COUNT(*) AS t FROM daily GROUP BY 1, 2),
-         |ts2 AS (SELECT event_type, SUM(t * (t - 1) * (2 * t + 5)) AS tsum FROM tg GROUP BY 1),
-         |j AS (SELECT p.event_type, n.n, p.s_stat,
-         |        CAST(n.n * (n.n - 1) * (2 * n.n + 5) - ts2.tsum AS DOUBLE) / 18.0 AS v
-         |      FROM p JOIN n USING (event_type) JOIN ts2 USING (event_type))
-         |SELECT event_type, n AS n_days, s_stat,
-         |  FLOOR(CASE WHEN s_stat > 0 THEN CAST(s_stat - 1 AS DOUBLE) / SQRT(v)
-         |             WHEN s_stat < 0 THEN CAST(s_stat + 1 AS DOUBLE) / SQRT(v)
-         |             ELSE 0.0 END * 1e9 + 0.5) / 1e9 AS z
-         |FROM j ORDER BY event_type""".stripMargin,
-
-    "q221_roc_auc" ->
-      """WITH d AS (SELECT source, lang,
-        |    least(CAST(length(text) AS DOUBLE) / 500.0, 1.0)
-        |    * (CASE WHEN length(text) = 0 THEN 0.0
-        |            ELSE CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / length(text) END)
-        |    * (1.0 - least((CASE WHEN length(text) = 0 THEN 0.0
-        |            ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE) / length(text) END) * 5.0, 1.0))
-        |    AS score FROM documents),
-        |c AS (SELECT source, score, COUNT(*) AS n,
-        |        SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS np
-        |      FROM d GROUP BY 1, 2),
-        |cum AS (SELECT source, score, n, np,
-        |        SUM(n) OVER (PARTITION BY source ORDER BY score) AS scum FROM c),
-        |r AS (SELECT source, SUM(np * (2 * (scum - n) + n + 1)) AS rp2 FROM cum GROUP BY 1),
-        |t AS (SELECT source, SUM(n) AS tn, SUM(np) AS tp FROM c GROUP BY 1)
-        |SELECT source, CAST(tp AS BIGINT) AS n_pos, CAST(tn - tp AS BIGINT) AS n_neg,
-        |  CAST(rp2 - tp * (tp + 1) AS DOUBLE) / CAST(2 * tp * (tn - tp) AS DOUBLE) AS auc
-        |FROM r JOIN t USING (source)
-        |WHERE tp > 0 AND tn - tp > 0 ORDER BY source""".stripMargin,
-
-    "q222_mann_whitney" ->
-      s"""$evCte,
-         |g AS (SELECT value, CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS g1
-         |      FROM ev WHERE event_type IN ('click', 'purchase')),
-         |c AS (SELECT value, COUNT(*) AS n, SUM(g1) AS n1v FROM g GROUP BY 1),
-         |cum AS (SELECT value, n, n1v, SUM(n) OVER (ORDER BY value) AS gcum FROM c),
-         |r AS (SELECT SUM(n1v * (2 * (gcum - n) + n + 1)) AS r1x2 FROM cum),
-         |t AS (SELECT SUM(n) AS nn, SUM(n1v) AS n1,
-         |        SUM(CAST(n AS HUGEINT) * n * n - n) AS tie FROM c),
-         |j AS (SELECT nn, n1, nn - n1 AS n2, tie, r1x2,
-         |        r1x2 - n1 * (n1 + 1) AS u1x2,
-         |        r1x2 - n1 * (n1 + 1) - n1 * (nn - n1) AS num2,
-         |        SQRT(CAST(n1 AS DOUBLE) * CAST(nn - n1 AS DOUBLE) / 12.0
-         |          * (CAST(nn AS DOUBLE) + 1.0
-         |             - CAST(tie AS DOUBLE) / (CAST(nn AS DOUBLE) * (CAST(nn AS DOUBLE) - 1.0)))) AS sig
-         |      FROM r CROSS JOIN t)
-         |SELECT CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
-         |  CAST(u1x2 AS DOUBLE) / 2.0 AS u1,
-         |  FLOOR(CASE WHEN num2 > 0 THEN CAST(num2 - 1 AS DOUBLE) / (2.0 * sig)
-         |             WHEN num2 < 0 THEN CAST(num2 + 1 AS DOUBLE) / (2.0 * sig)
-         |             ELSE 0.0 END * 1e9 + 0.5) / 1e9 AS z
-         |FROM j""".stripMargin,
-
-    "q223_seasonal_decompose" ->
-      s"""$evCte,
-         |daily AS (SELECT event_type, date_trunc('day', ts) AS day, COUNT(*) AS x
-         |          FROM ev GROUP BY 1, 2),
-         |m AS (SELECT event_type, day, x,
-         |        SUM(x) OVER w7 AS s7, COUNT(*) OVER w7 AS c7,
-         |        isodow(day) AS dow
-         |      FROM daily
-         |      WINDOW w7 AS (PARTITION BY event_type ORDER BY day
-         |                    ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-         |t2 AS (SELECT event_type, day, x, dow,
-         |         CASE WHEN c7 = 7 THEN CAST(s7 AS DOUBLE) / 7.0 END AS trend,
-         |         x - (CASE WHEN c7 = 7 THEN CAST(s7 AS DOUBLE) / 7.0 END) AS detr
-         |       FROM m),
-         |seas AS (SELECT event_type, dow,
-         |           CAST(SUM(CAST(round(detr, 9) AS DECIMAL(27,9))) AS DOUBLE)
-         |             / COUNT(*) AS s0
-         |         FROM t2 WHERE detr IS NOT NULL GROUP BY 1, 2)
-         |SELECT t2.event_type, t2.day, t2.x,
-         |  round(trend, 9) AS trend, round(s0, 9) AS seasonal,
-         |  round(detr - s0, 9) AS residual
-         |FROM t2 LEFT JOIN seas ON t2.event_type = seas.event_type AND t2.dow = seas.dow
-         |ORDER BY t2.event_type, t2.day""".stripMargin,
-
-    "q224_sorted_neighborhood" ->
-      """WITH docs AS (SELECT doc_id,
-        |        substring(regexp_replace(lower(text), '[^a-z0-9]', '', 'g'), 1, 32) AS nk,
-        |        list_distinct(list_filter(string_split_regex(
-        |          regexp_replace(lower(text), '[^\p{L}\p{N}\s]', '', 'g'), '\s+'),
-        |          x -> len(x) > 0)) AS ws
-        |      FROM documents),
-        |r AS (SELECT doc_id, ws, row_number() OVER (ORDER BY nk, doc_id) - 1 AS rid
-        |      FROM docs),
-        |cand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.ws AS wa, b.ws AS wb
-        |         FROM r a JOIN r b ON b.rid - a.rid BETWEEN 1 AND 4),
-        |j AS (SELECT id_a, id_b,
-        |        CAST(len(list_intersect(wa, wb)) AS DOUBLE)
-        |          / len(list_distinct(list_concat(wa, wb))) AS jaccard
-        |      FROM cand WHERE len(list_distinct(list_concat(wa, wb))) > 0)
-        |SELECT id_a, id_b, round(jaccard, 9) AS jaccard
-        |FROM j WHERE jaccard > 0
-        |ORDER BY jaccard DESC, id_a, id_b LIMIT 20""".stripMargin,
-
-    "q225_theil_sen" ->
-      s"""$evCte,
-         |daily AS (SELECT event_type, date_trunc('day', ts) AS day, COUNT(*) AS x
-         |          FROM ev GROUP BY 1, 2),
-         |d2 AS (SELECT event_type,
-         |         date_diff('day', TIMESTAMP '2024-01-01', day) AS di, x FROM daily),
-         |p AS (SELECT a.event_type,
-         |        CAST(b.x - a.x AS DOUBLE) / (b.di - a.di) AS slope
-         |      FROM d2 a JOIN d2 b ON a.event_type = b.event_type AND b.di > a.di)
-         |SELECT event_type, COUNT(*) AS n_pairs,
-         |  round(quantile_cont(slope, 0.5), 9) AS sen_slope
-         |FROM p GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q226_embedding_covariance" ->
-      """WITH g AS (SELECT a.i, b.j
-        |           FROM (SELECT unnest(generate_series(1, 16)) AS i) a,
-        |                (SELECT unnest(generate_series(1, 16)) AS j) b
-        |           WHERE b.j >= a.i),
-        |tri AS (SELECT CAST(e.label AS BIGINT) AS label, g.i, g.j,
-        |          CAST(e.embedding[g.i] AS DOUBLE) * CAST(e.embedding[g.j] AS DOUBLE) AS xy
-        |        FROM embeddings e, g),
-        |sxy AS (SELECT label, i, j,
-        |          CAST(SUM(CAST(xy AS DECIMAL(27,12))) AS DOUBLE) AS sxy,
-        |          COUNT(*) AS n
-        |        FROM tri GROUP BY 1, 2, 3),
-        |mx AS (SELECT CAST(e.label AS BIGINT) AS label, d.i,
-        |         CAST(SUM(CAST(CAST(e.embedding[d.i] AS DOUBLE) AS DECIMAL(27,12))) AS DOUBLE) AS sx
-        |       FROM embeddings e, (SELECT unnest(generate_series(1, 16)) AS i) d
-        |       GROUP BY 1, 2)
-        |SELECT s.label, s.i, s.j,
-        |  round(s.sxy / s.n - (a.sx / s.n) * (b.sx / s.n), 9) AS cov
-        |FROM sxy s
-        |JOIN mx a ON a.label = s.label AND a.i = s.i
-        |JOIN mx b ON b.label = s.label AND b.i = s.j
-        |ORDER BY s.label, s.i, s.j""".stripMargin,
-
-    "q227_stream_hourly_anomaly" ->
-      s"""$evCte,
-         |rh AS (SELECT date_trunc('hour', ts) AS h, COUNT(*) AS c
-         |       FROM ev WHERE ts < TIMESTAMP '2024-01-15 00:00:00' GROUP BY 1),
-         |base AS (SELECT hour(h) AS hod, COUNT(*) AS nh,
-         |           CAST(SUM(CAST(c AS DECIMAL(27,0))) AS DOUBLE) AS sc,
-         |           CAST(SUM(CAST(c * c AS DECIMAL(27,0))) AS DOUBLE) AS sc2
-         |         FROM rh GROUP BY 1),
-         |b2 AS (SELECT hod, sc / nh AS mu,
-         |         sqrt(greatest(sc2 / nh - (sc / nh) * (sc / nh), 0.0)) AS sd
-         |       FROM base),
-         |cur AS (SELECT date_trunc('hour', ts) AS hs, COUNT(*) AS n
-         |        FROM ev WHERE ts >= TIMESTAMP '2024-01-15 00:00:00' GROUP BY 1)
-         |SELECT hs, n, round((n - mu) / sd, 9) AS z
-         |FROM cur JOIN b2 ON hour(hs) = b2.hod
-         |WHERE sd > 0
-         |ORDER BY z DESC, hs LIMIT 20""".stripMargin,
-
-    "q228_harmonic_centrality" -> {
-      s"""$sessionPagesCte,
-         |eu AS MATERIALIZED (SELECT a.page AS u, b.page AS v
-         |       FROM d a JOIN d b
-         |         ON a.user_id = b.user_id AND a.sid = b.sid AND a.page < b.page
-         |       GROUP BY 1, 2),
-         |r1 AS MATERIALIZED (SELECT u AS src, v AS dst FROM eu UNION ALL SELECT v, u FROM eu),
-         |p2 AS (SELECT DISTINCT a.src, b.dst FROM r1 a JOIN r1 b ON a.dst = b.src
-         |       WHERE a.src <> b.dst),
-         |r2 AS MATERIALIZED (SELECT p2.src, p2.dst FROM p2
-         |       LEFT JOIN r1 ON r1.src = p2.src AND r1.dst = p2.dst
-         |       WHERE r1.src IS NULL),
-         |p3 AS (SELECT DISTINCT a.src, b.dst FROM r2 a JOIN r1 b ON a.dst = b.src
-         |       WHERE a.src <> b.dst),
-         |r3 AS (SELECT p3.src, p3.dst FROM p3
-         |       LEFT JOIN r1 ON r1.src = p3.src AND r1.dst = p3.dst
-         |       LEFT JOIN r2 ON r2.src = p3.src AND r2.dst = p3.dst
-         |       WHERE r1.src IS NULL AND r2.src IS NULL),
-         |n1 AS (SELECT src, COUNT(*) AS n1 FROM r1 GROUP BY 1),
-         |n2 AS (SELECT src, COUNT(*) AS n2 FROM r2 GROUP BY 1),
-         |n3 AS (SELECT src, COUNT(*) AS n3 FROM r3 GROUP BY 1)
-         |SELECT n1.src AS page,
-         |  round(n1.n1 + COALESCE(n2.n2, 0) / 2.0 + COALESCE(n3.n3, 0) / 3.0, 9) AS harmonic
-         |FROM n1 LEFT JOIN n2 ON n1.src = n2.src LEFT JOIN n3 ON n1.src = n3.src
-         |ORDER BY harmonic DESC, page LIMIT 20""".stripMargin
-    },
-
-    "q229_rolling_correlation" ->
-      s"""$evCte,
-         |daily AS (SELECT date_trunc('day', ts) AS day,
-         |            SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS x,
-         |            SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS y
-         |          FROM ev WHERE event_type IN ('click', 'purchase') GROUP BY 1),
-         |m AS (SELECT day,
-         |        COUNT(*) OVER w AS cnt, SUM(x) OVER w AS sx, SUM(y) OVER w AS sy,
-         |        SUM(x * y) OVER w AS sxy, SUM(x * x) OVER w AS sxx,
-         |        SUM(y * y) OVER w AS syy
-         |      FROM daily
-         |      WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))
-         |SELECT day, round(CAST(cnt * sxy - sx * sy AS DOUBLE)
-         |  / sqrt(CAST(cnt * sxx - sx * sx AS DOUBLE)
-         |         * CAST(cnt * syy - sy * sy AS DOUBLE)), 9) AS r
-         |FROM m
-         |WHERE cnt = 7 AND cnt * sxx - sx * sx > 0 AND cnt * syy - sy * sy > 0
-         |ORDER BY day""".stripMargin,
-
-    "q230_aspect_bucketing" ->
-      """WITH meta AS (SELECT doc_id,
-        |        CAST(64 + octet_length(encode(text)) % 512 AS BIGINT) AS w,
-        |        CAST(64 + (CASE WHEN length(text) = 0 THEN 0
-        |                        ELSE ascii(substr(text, 1, 1)) END) * 4 AS BIGINT) AS h
-        |      FROM documents),
-        |ladder AS (SELECT * FROM (VALUES (1, 256, 1024), (2, 384, 768),
-        |             (3, 448, 576), (4, 512, 512), (5, 576, 448),
-        |             (6, 768, 384), (7, 1024, 256)) AS t(bucket, bw, bh)),
-        |costed AS (SELECT doc_id, bucket, bw, bh,
-        |             abs(w * bh - h * bw) AS cost,
-        |             row_number() OVER (PARTITION BY doc_id
-        |               ORDER BY abs(w * bh - h * bw), bucket) AS rn
-        |           FROM meta CROSS JOIN ladder),
-        |best AS (SELECT doc_id, bucket, bw, bh FROM costed WHERE rn = 1)
-        |SELECT bucket, CAST(bw AS BIGINT) AS bw, CAST(bh AS BIGINT) AS bh,
-        |  COUNT(*) AS n_docs,
-        |  CAST(ceil(COUNT(*) / 8.0) AS BIGINT) AS n_batches,
-        |  COUNT(*) % 8 AS leftover
-        |FROM best GROUP BY 1, 2, 3 ORDER BY bucket""".stripMargin,
-
-    "q231_neyman_allocation" ->
-      """WITH st AS (SELECT source, COUNT(*) AS nh,
-        |        CAST(SUM(CAST(n_chars AS DECIMAL(27,0))) AS DOUBLE) AS sx,
-        |        CAST(SUM(CAST(n_chars * n_chars AS DECIMAL(27,0))) AS DOUBLE) AS sx2
-        |      FROM documents GROUP BY 1),
-        |s2 AS (SELECT source, nh,
-        |         sqrt(greatest(sx2 / nh - (sx / nh) * (sx / nh), 0.0)) AS sigma
-        |       FROM st),
-        |t AS (SELECT SUM(nh * sigma) AS wsum, SUM(nh) AS ntot FROM s2),
-        |sh AS (SELECT source, nh, sigma,
-        |         CASE WHEN wsum > 0 THEN 1000.0 * nh * sigma / wsum
-        |              ELSE 1000.0 * nh / ntot END AS share
-        |       FROM s2, t),
-        |fb AS (SELECT *, FLOOR(share) AS base, share - FLOOR(share) AS frac FROM sh),
-        |rk AS (SELECT *, row_number() OVER (ORDER BY frac DESC, source) AS rn,
-        |         SUM(base) OVER () AS sb FROM fb)
-        |SELECT source, nh AS n_docs, round(sigma, 9) AS sigma,
-        |  CAST(base + (CASE WHEN rn <= 1000 - sb THEN 1 ELSE 0 END) AS BIGINT) AS alloc
-        |FROM rk ORDER BY source""".stripMargin,
-
-    "q232_kendall_tau" ->
-      s"""$evCte,
-         |daily AS (SELECT date_trunc('day', ts) AS day,
-         |            SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS x,
-         |            SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS y
-         |          FROM ev WHERE event_type IN ('click', 'purchase') GROUP BY 1),
-         |p AS (SELECT a.x AS x1, a.y AS y1, b.x AS x2, b.y AS y2
-         |      FROM daily a JOIN daily b ON a.day < b.day),
-         |cd AS (SELECT COUNT(*) AS n0,
-         |         SUM(CASE WHEN (x2 - x1) * (y2 - y1) > 0 THEN 1 ELSE 0 END) AS c,
-         |         SUM(CASE WHEN (x2 - x1) * (y2 - y1) < 0 THEN 1 ELSE 0 END) AS d,
-         |         SUM(CASE WHEN x1 = x2 THEN 1 ELSE 0 END) AS n1,
-         |         SUM(CASE WHEN y1 = y2 THEN 1 ELSE 0 END) AS n2
-         |       FROM p),
-         |n AS (SELECT COUNT(*) AS n_days FROM daily)
-         |SELECT n_days, CAST(c AS BIGINT) AS concordant, CAST(d AS BIGINT) AS discordant,
-         |  FLOOR(CAST(c - d AS DOUBLE)
-         |    / sqrt(CAST(n0 - n1 AS DOUBLE) * CAST(n0 - n2 AS DOUBLE)) * 1e9 + 0.5) / 1e9 AS tau_b
-         |FROM cd, n WHERE n0 - n1 > 0 AND n0 - n2 > 0""".stripMargin,
-
-    "q233_calibration_error" ->
-      """WITH f AS (SELECT doc_id, lang,
-        |  least(CAST(len(regexp_extract_all(text, '\S+')) AS DOUBLE) / 100.0, 1.0) AS f_tok,
-        |  CASE WHEN len(regexp_extract_all(text, '\S+')) = 0 THEN 0.0
-        |       ELSE CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|to|a|in|is|that|it|for)\b')) AS DOUBLE)
-        |            / len(regexp_extract_all(text, '\S+')) END AS f_stop,
-        |  CASE WHEN length(text) = 0 THEN 0.0
-        |       ELSE CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / length(text) END AS f_alpha,
-        |  CASE WHEN length(text) = 0 THEN 0.0
-        |       ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE) / length(text) END AS f_punct
-        |FROM documents),
-        |z AS (SELECT doc_id, lang,
-        |        round(1.0 / (1.0 + exp(-(f_tok * 1.2 + f_stop * 2.0 + f_alpha * 1.5 + f_punct * (-3.0) + (-1.0)))), 9) AS p
-        |      FROM f),
-        |b AS (SELECT CAST(least(floor(p * 10), 9) AS BIGINT) AS b, p,
-        |        CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-        |      FROM z),
-        |bk AS (SELECT b, COUNT(*) AS nb,
-        |         CAST(SUM(CAST(p AS DECIMAL(27,9))) AS DOUBLE) AS sp,
-        |         SUM(y) AS sy
-        |       FROM b GROUP BY 1),
-        |t AS (SELECT CAST(SUM(nb) AS BIGINT) AS nn FROM bk),
-        |w AS (SELECT CAST(FLOOR(abs(CAST(sy AS DOUBLE) / nb - sp / nb) * 1e9 + 0.5) / 1e9
-        |          AS DECIMAL(27,9)) * CAST(nb AS DECIMAL(27,0)) AS w, nn
-        |      FROM bk, t)
-        |SELECT nn AS n_docs,
-        |  FLOOR(CAST(SUM(w) AS DOUBLE) / CAST(nn AS DOUBLE) * 1e9 + 0.5) / 1e9 AS ece
-        |FROM w GROUP BY nn""".stripMargin,
-
-    "q234_km_survival" ->
-      s"""$evCte,
-         |v AS (SELECT user_id, MIN(ts) AS v_ts FROM ev
-         |      WHERE event_type = 'view' GROUP BY 1),
-         |fp AS (SELECT v.user_id, v.v_ts, MIN(p.ts) AS p_ts
-         |       FROM v JOIN ev p ON p.user_id = v.user_id
-         |         AND p.event_type = 'purchase' AND p.ts >= v.v_ts
-         |       GROUP BY 1, 2),
-         |del AS (SELECT v.user_id,
-         |          CAST((epoch_us(fp.p_ts) // 1000000 - epoch_us(v.v_ts) // 1000000)
-         |            // 3600 AS BIGINT) AS delay_h
-         |        FROM v LEFT JOIN fp ON fp.user_id = v.user_id),
-         |nt AS (SELECT COUNT(*) AS n_users FROM del),
-         |grid AS (SELECT delay_h AS t, COUNT(*) AS d FROM del
-         |         WHERE delay_h IS NOT NULL AND delay_h < 168 GROUP BY 1),
-         |m0 AS (SELECT t, d, n_users,
-         |         SUM(d) OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING
-         |                      AND CURRENT ROW) AS cumd
-         |       FROM grid, nt),
-         |m AS (SELECT t, d, n_users - cumd + d AS n_at_risk,
-         |        MAX(CASE WHEN n_users - cumd = 0 THEN 1 ELSE 0 END)
-         |          OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING
-         |                AND CURRENT ROW) AS hit0
-         |      FROM m0),
-         |l AS (SELECT t, d, n_at_risk, hit0,
-         |        CASE WHEN n_at_risk > d THEN FLOOR(
-         |          ln(CAST(n_at_risk - d AS DOUBLE) / n_at_risk) * 1e12 + 0.5) / 1e12
-         |        ELSE 0.0 END AS lt
-         |      FROM m),
-         |c AS (SELECT t, d, n_at_risk, hit0,
-         |        SUM(CAST(lt AS DECIMAL(27,14))) OVER
-         |          (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ls
-         |      FROM l)
-         |SELECT t AS t_hours, d AS n_events, CAST(n_at_risk AS BIGINT) AS n_at_risk,
-         |  CASE WHEN hit0 = 1 THEN 0.0
-         |       ELSE FLOOR(exp(CAST(ls AS DOUBLE)) * 1e9 + 0.5) / 1e9 END AS survival
-         |FROM c ORDER BY t_hours""".stripMargin,
-
-    "q235_bootstrap_ci" ->
-      s"""$evCte,
-         |x AS (SELECT event_type, event_id, value, b.b
-         |      FROM ev CROSS JOIN (SELECT unnest(generate_series(1, 100)) AS b) b),
-         |uu AS (SELECT event_type, value,
-         |         (CAST((event_id * 101 + b) % 2147483647 * 48271 % 2147483647
-         |            * 48271 % 2147483647 * 48271 % 2147483647 AS DOUBLE) + 0.5)
-         |           / 2147483647.0 AS u, b
-         |       FROM x),
-         |ww AS (SELECT event_type, value, b,
-         |         CASE WHEN u < 0.36787944117144233 THEN 0
-         |              WHEN u < 0.7357588823428847 THEN 1
-         |              WHEN u < 0.9196986029286058 THEN 2
-         |              WHEN u < 0.9810118431238463 THEN 3
-         |              WHEN u < 0.9963401531726563 THEN 4
-         |              WHEN u < 0.9994058151824183 THEN 5
-         |              WHEN u < 0.999916758850712 THEN 6
-         |              ELSE 7 END AS w
-         |       FROM uu),
-         |reps AS (SELECT event_type, b,
-         |           CAST(SUM(CAST(FLOOR(w * value * 10000 + 0.5) AS BIGINT))
-         |                AS DOUBLE) / 10000.0 / CAST(SUM(w) AS DOUBLE) AS m
-         |         FROM ww GROUP BY 1, 2 HAVING SUM(w) > 0),
-         |band AS (SELECT event_type,
-         |           quantile_cont(m, 0.025) AS lo95,
-         |           quantile_cont(m, 0.975) AS hi95
-         |         FROM reps GROUP BY 1),
-         |mn AS (SELECT event_type,
-         |         CAST(SUM(CAST(value AS $D)) AS DOUBLE) / COUNT(*) AS mean_value
-         |       FROM ev GROUP BY 1)
-         |SELECT mn.event_type, round(mean_value, 9) AS mean_value,
-         |  round(lo95, 9) AS lo95, round(hi95, 9) AS hi95
-         |FROM mn JOIN band ON mn.event_type = band.event_type
-         |ORDER BY mn.event_type""".stripMargin,
-
-    "q236_spearman" ->
-      s"""$evCte,
-         |daily AS (SELECT date_trunc('day', ts) AS day,
-         |            SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS x,
-         |            SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS y
-         |          FROM ev WHERE event_type IN ('click', 'purchase') GROUP BY 1),
-         |rx AS (SELECT v AS x, 2 * (cum - cnt) + cnt + 1 AS r2x FROM (
-         |         SELECT x AS v, COUNT(*) AS cnt,
-         |           SUM(COUNT(*)) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING
-         |                               AND CURRENT ROW) AS cum
-         |         FROM daily GROUP BY x)),
-         |ry AS (SELECT v AS y, 2 * (cum - cnt) + cnt + 1 AS r2y FROM (
-         |         SELECT y AS v, COUNT(*) AS cnt,
-         |           SUM(COUNT(*)) OVER (ORDER BY y ROWS BETWEEN UNBOUNDED PRECEDING
-         |                               AND CURRENT ROW) AS cum
-         |         FROM daily GROUP BY y)),
-         |a AS (SELECT COUNT(*) AS n, SUM(r2x) AS sx, SUM(r2y) AS sy,
-         |        SUM(r2x * r2x) AS sxx, SUM(r2y * r2y) AS syy,
-         |        SUM(r2x * r2y) AS sxy
-         |      FROM daily JOIN rx USING (x) JOIN ry USING (y))
-         |SELECT n AS n_days,
-         |  FLOOR(CAST(n * sxy - sx * sy AS DOUBLE)
-         |    / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-         |      * sqrt(CAST(n * syy - sy * sy AS DOUBLE))) * 1e9 + 0.5) / 1e9 AS rho
-         |FROM a WHERE n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0""".stripMargin,
-
-    "q237_path_trigrams" ->
-      s"""$evCte,
-         |sq AS (SELECT user_id, event_type AS e1,
-         |         LEAD(event_type, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS e2,
-         |         LEAD(event_type, 2) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS e3
-         |       FROM ev),
-         |tri AS (SELECT e1, e2, e3, COUNT(*) AS n_paths FROM sq
-         |        WHERE e3 IS NOT NULL GROUP BY 1, 2, 3),
-         |t AS (SELECT SUM(n_paths) AS n_tot FROM tri)
-         |SELECT e1, e2, e3, CAST(n_paths AS BIGINT) AS n_paths,
-         |  FLOOR(CAST(n_paths AS DOUBLE) / n_tot * 1e9 + 0.5) / 1e9 AS support
-         |FROM tri, t ORDER BY n_paths DESC, e1, e2, e3 LIMIT 20""".stripMargin,
-
-    "q238_acf" ->
-      s"""${acfCte(7)}
-         |SELECT event_type, CAST(lag AS BIGINT) AS lag, n_pairs, acf
-         |FROM acfv ORDER BY event_type, lag""".stripMargin,
-
-    "q239_hill_tail" ->
-      s"""$evCte,
-         |rk AS (SELECT event_type, value,
-         |         row_number() OVER (PARTITION BY event_type
-         |                            ORDER BY value DESC, event_id) AS rk
-         |       FROM ev WHERE value > 0),
-         |xk AS (SELECT event_type, value AS xk FROM rk WHERE rk = 101),
-         |s AS (SELECT r.event_type, x.xk,
-         |        CAST(SUM(CAST(FLOOR(ln(r.value / x.xk) * 1e12 + 0.5) / 1e12
-         |          AS DECIMAL(27,14))) AS DOUBLE) AS sl
-         |      FROM rk r JOIN xk x USING (event_type)
-         |      WHERE r.rk <= 100 GROUP BY 1, 2)
-         |SELECT event_type, xk AS x_kplus1,
-         |  FLOOR(CAST(100 AS DOUBLE) / sl * 1e9 + 0.5) / 1e9 AS alpha
-         |FROM s WHERE sl > 0 ORDER BY event_type""".stripMargin,
-
-    "q240_jsd_sources" ->
-      """WITH toks AS (SELECT source, unnest(string_split(lower(text), ' ')) AS w
-        |              FROM documents),
-        |wc AS (SELECT source, w, COUNT(*) AS c FROM toks
-        |       WHERE length(w) > 0 GROUP BY 1, 2),
-        |tot AS (SELECT source, SUM(c) AS n FROM wc GROUP BY 1),
-        |wn AS (SELECT wc.source, wc.w, wc.c, tot.n
-        |       FROM wc JOIN tot USING (source)),
-        |j AS (SELECT a.source AS s1, b.source AS s2, a.n AS n1, b.n AS n2,
-        |        a.c AS c1, b.c AS c2,
-        |        CAST(a.c AS DOUBLE) / a.n AS p, CAST(b.c AS DOUBLE) / b.n AS q
-        |      FROM wn a JOIN wn b ON a.w = b.w AND a.source < b.source),
-        |ag AS (SELECT s1, s2, n1, n2, COUNT(*) AS n_shared,
-        |         CAST(SUM(CAST(FLOOR((p * ln(2 * p / (p + q))
-        |           + q * ln(2 * q / (p + q))) * 1e12 + 0.5) / 1e12
-        |           AS DECIMAL(27,14))) AS DOUBLE) AS ts,
-        |         SUM(c1) AS m1, SUM(c2) AS m2
-        |       FROM j GROUP BY 1, 2, 3, 4)
-        |SELECT s1, s2, n_shared,
-        |  FLOOR((ts + 0.6931471805599453 * (2 - CAST(m1 AS DOUBLE) / n1
-        |    - CAST(m2 AS DOUBLE) / n2)) / 2 * 1e9 + 0.5) / 1e9 AS jsd
-        |FROM ag ORDER BY s1, s2""".stripMargin,
-
-    "q241_mutual_info" ->
-      s"""$evCte,
-         |binned AS (SELECT event_type AS t,
-         |             CAST(FLOOR(value / 25) AS BIGINT) AS b FROM ev),
-         |cells AS (SELECT t, b, COUNT(*) AS nxy FROM binned GROUP BY 1, 2),
-         |nx AS (SELECT t, SUM(nxy) AS nx FROM cells GROUP BY 1),
-         |ny AS (SELECT b, SUM(nxy) AS ny FROM cells GROUP BY 1),
-         |nt AS (SELECT SUM(nxy) AS n FROM cells),
-         |tm AS (SELECT n,
-         |         FLOOR(CAST(nxy AS DOUBLE)
-         |           * (FLOOR(ln(CAST(nxy * n AS DOUBLE) / CAST(nx.nx * ny.ny AS DOUBLE))
-         |              * 1e12 + 0.5) / 1e12) * 1e12 + 0.5) / 1e12 AS wt
-         |       FROM cells JOIN nx USING (t) JOIN ny USING (b), nt)
-         |SELECT CAST(n AS BIGINT) AS n_events, COUNT(*) AS n_cells,
-         |  FLOOR(CAST(SUM(CAST(wt AS DECIMAL(27,14))) AS DOUBLE) / n * 1e9 + 0.5) / 1e9
-         |    AS mi_nats
-         |FROM tm GROUP BY n""".stripMargin,
-
-    // MMR greedy rerank, 10 materialized unrolled steps over a pool×pool
-    // cosine CTE; list_cosine_similarity is bit-equal to mmrSelect's
-    // dot/(√na·√nb) in array order (the q36 precedent)
-    "q242_mmr_rerank" ->
-      s"""WITH q AS MATERIALIZED (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-         |           FROM embeddings ORDER BY vec_id LIMIT 1),
-         |sall AS MATERIALIZED (SELECT c.vec_id,
-         |           list_cosine_similarity(q.qv, CAST(c.embedding AS DOUBLE[])) AS rel
-         |         FROM embeddings c, q WHERE c.vec_id != q.qid),
-         |pool AS MATERIALIZED (SELECT vec_id, rel FROM (
-         |           SELECT vec_id, rel,
-         |             row_number() OVER (ORDER BY rel DESC, vec_id) AS rk
-         |           FROM sall) WHERE rk <= 50),
-         |pe AS MATERIALIZED (SELECT e.vec_id, CAST(e.embedding AS DOUBLE[]) AS v
-         |       FROM embeddings e
-         |       WHERE e.vec_id IN (SELECT vec_id FROM pool)),
-         |pc AS MATERIALIZED (SELECT a.vec_id AS u, b.vec_id AS w,
-         |         list_cosine_similarity(a.v, b.v) AS c
-         |       FROM pe a, pe b WHERE a.vec_id != b.vec_id),
-         |p1 AS MATERIALIZED (SELECT vec_id, 0.7 * rel - (1.0 - 0.7) * 0.0 AS mmr, 1 AS rank
-         |       FROM pool ORDER BY mmr DESC, vec_id LIMIT 1),
-         |k1 AS MATERIALIZED (SELECT vec_id, mmr, rank FROM p1),
-         |${mmrStepCtes(10)}
-         |SELECT CAST(rank AS BIGINT) AS rank, vec_id, round(mmr, 9) AS mmr_score
-         |FROM k10 ORDER BY rank""".stripMargin,
-
-    "q243_mg_heavy_hitters" ->
-      """WITH toks AS (SELECT unnest(string_split(lower(text), ' ')) AS w
-        |              FROM documents),
-        |t AS (SELECT w FROM toks WHERE length(w) > 0),
-        |n AS (SELECT COUNT(*) AS n FROM t),
-        |c AS (SELECT w, COUNT(*) AS cnt FROM t GROUP BY 1)
-        |SELECT w AS word, cnt FROM c, n
-        |WHERE cnt * 20 > n ORDER BY cnt DESC, word""".stripMargin,
-
-    "q244_source_concentration" ->
-      """WITH mass AS (SELECT source,
-        |                SUM(len(regexp_extract_all(text, '\S+'))) AS m
-        |              FROM documents GROUP BY 1),
-        |tot AS (SELECT SUM(m) AS n FROM mass),
-        |t AS (SELECT n,
-        |        FLOOR((CAST(m AS DOUBLE) / n) * (CAST(m AS DOUBLE) / n)
-        |          * 1e12 + 0.5) / 1e12 AS s2,
-        |        FLOOR((CAST(m AS DOUBLE) / n) * ln(CAST(m AS DOUBLE) / n)
-        |          * 1e12 + 0.5) / 1e12 AS slns
-        |      FROM mass, tot),
-        |ag AS (SELECT COUNT(*) AS n_sources,
-        |         CAST(SUM(CAST(s2 AS DECIMAL(27,14))) AS DOUBLE) AS hhi,
-        |         CAST(SUM(CAST(slns AS DECIMAL(27,14))) AS DOUBLE) AS sh
-        |       FROM t GROUP BY n)
-        |SELECT n_sources, round(hhi, 9) AS hhi,
-        |  FLOOR(1.0 / hhi * 1e9 + 0.5) / 1e9 AS eff_sources,
-        |  FLOOR(exp(-sh) * 1e9 + 0.5) / 1e9 AS shannon_diversity
-        |FROM ag""".stripMargin,
-
-    "q245_poststrat_mean" ->
-      s"""$evCte,
-         |pop AS (SELECT CAST(hour(ts) AS BIGINT) AS h, COUNT(*) AS nh
-         |        FROM ev GROUP BY 1),
-         |clk AS (SELECT CAST(hour(ts) AS BIGINT) AS h, COUNT(*) AS ch,
-         |          CAST(SUM(CAST(value AS $D)) AS DOUBLE) AS sh
-         |        FROM ev WHERE event_type = 'click' GROUP BY 1),
-         |nt AS (SELECT COUNT(*) AS n FROM ev),
-         |nv AS (SELECT CAST(SUM(CAST(value AS $D)) AS DOUBLE) / COUNT(*) AS naive
-         |       FROM ev WHERE event_type = 'click'),
-         |t AS (SELECT FLOOR(CAST(nh AS DOUBLE) / n * (sh / ch) * 1e12 + 0.5) / 1e12
-         |        AS t
-         |      FROM pop JOIN clk USING (h), nt),
-         |ag AS (SELECT COUNT(*) AS n_strata,
-         |         CAST(SUM(CAST(t AS DECIMAL(27,14))) AS DOUBLE) AS adj
-         |       FROM t)
-         |SELECT n_strata, round(naive, 9) AS naive_mean,
-         |  round(adj, 9) AS poststrat_mean
-         |FROM ag, nv""".stripMargin,
-
-    "q246_burstiness" ->
-      s"""$evCte,
-         |daily AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
-         |            COUNT(*) AS x
-         |          FROM ev GROUP BY 1, 2),
-         |m AS (SELECT event_type, COUNT(*) AS n, SUM(x) AS sx,
-         |        SUM(CAST(x AS HUGEINT) * x) AS sxx
-         |      FROM daily GROUP BY 1),
-         |v AS (SELECT event_type, n,
-         |        CAST(n * sxx - sx * sx AS DOUBLE)
-         |          / CAST(n * (n - 1) AS DOUBLE) AS var,
-         |        CAST(sx AS DOUBLE) / n AS mu
-         |      FROM m WHERE n > 1 AND sx > 0)
-         |SELECT event_type, CAST(n AS BIGINT) AS n_days,
-         |  FLOOR(var / mu * 1e9 + 0.5) / 1e9 AS fano,
-         |  FLOOR((sqrt(var) - mu) / (sqrt(var) + mu) * 1e9 + 0.5) / 1e9 AS b_coef
-         |FROM v ORDER BY event_type""".stripMargin,
-
-    "q247_two_proportion_z" ->
-      s"""$evCte,
-         |ft AS (SELECT user_id, MIN(ts) AS f_ts FROM ev GROUP BY 1),
-         |conv AS (SELECT user_id,
-         |           MIN(CASE WHEN event_type = 'view' THEN ts END) AS v_ts,
-         |           MAX(CASE WHEN event_type = 'click' THEN ts END) AS c_ts
-         |         FROM ev WHERE event_type IN ('view', 'click') GROUP BY 1),
-         |cu AS (SELECT c.user_id,
-         |         CASE WHEN c.c_ts IS NOT NULL AND c.c_ts >= c.v_ts
-         |              THEN 1 ELSE 0 END AS cv,
-         |         CASE WHEN isodow(f.f_ts) >= 6 THEN 1 ELSE 0 END AS wknd
-         |       FROM conv c JOIN ft f USING (user_id)
-         |       WHERE c.v_ts IS NOT NULL),
-         |g AS (SELECT wknd, COUNT(*) AS n, SUM(cv) AS x FROM cu GROUP BY 1),
-         |w AS (SELECT MAX(CASE WHEN wknd = 1 THEN n END) AS n1,
-         |        MAX(CASE WHEN wknd = 1 THEN x END) AS x1,
-         |        MAX(CASE WHEN wknd = 0 THEN n END) AS n2,
-         |        MAX(CASE WHEN wknd = 0 THEN x END) AS x2
-         |      FROM g)
-         |SELECT CAST(n1 AS BIGINT) AS n1, CAST(x1 AS BIGINT) AS x1,
-         |  CAST(n2 AS BIGINT) AS n2, CAST(x2 AS BIGINT) AS x2,
-         |  FLOOR((CAST(x1 AS DOUBLE) / n1 - CAST(x2 AS DOUBLE) / n2)
-         |    / sqrt((CAST(x1 + x2 AS DOUBLE) / (n1 + n2))
-         |      * (1.0 - CAST(x1 + x2 AS DOUBLE) / (n1 + n2))
-         |      * (1.0 / n1 + 1.0 / n2)) * 1e9 + 0.5) / 1e9 AS z
-         |FROM w WHERE n1 > 0 AND n2 > 0""".stripMargin,
-
-    "q248_mase" ->
-      s"""$evCte,
-         |daily AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
-         |            COUNT(*) AS x
-         |          FROM ev GROUP BY 1, 2),
-         |p7 AS (SELECT a.event_type, COUNT(*) AS n7, SUM(abs(b.x - a.x)) AS s7
-         |       FROM daily a JOIN daily b
-         |         ON b.event_type = a.event_type AND b.day = a.day + 7
-         |       GROUP BY 1),
-         |p1 AS (SELECT a.event_type, COUNT(*) AS n1, SUM(abs(b.x - a.x)) AS s1
-         |       FROM daily a JOIN daily b
-         |         ON b.event_type = a.event_type AND b.day = a.day + 1
-         |       GROUP BY 1)
-         |SELECT p7.event_type, CAST(n7 AS BIGINT) AS n_pairs7,
-         |  CAST(n1 AS BIGINT) AS n_pairs1,
-         |  FLOOR(CAST(s7 * n1 AS DOUBLE) / CAST(n7 * s1 AS DOUBLE)
-         |    * 1e9 + 0.5) / 1e9 AS mase
-         |FROM p7 JOIN p1 USING (event_type)
-         |WHERE s1 > 0 ORDER BY event_type""".stripMargin,
-
-    "q249_rbo_sources" -> {
-      // the same literal weight ladder the Spark side embeds — the
-      // IDENTICAL Scala expression, so both engines parse identical
-      // shortest-repr doubles (q235 pattern; note (1 − 0.9) ≠ 0.1 in
-      // IEEE — the expression text must match, not just the math)
-      val ws = (1 to 20).map(d => (1 - 0.9) * math.pow(0.9, d - 1)).mkString(", ")
-      s"""WITH toks AS (SELECT source, unnest(string_split(lower(text), ' ')) AS w
-         |              FROM documents),
-         |tc AS (SELECT source, w, COUNT(*) AS cnt FROM toks
-         |       WHERE length(w) > 0 GROUP BY 1, 2),
-         |top AS (SELECT source, w, r FROM (
-         |          SELECT source, w,
-         |            row_number() OVER (PARTITION BY source
-         |                               ORDER BY cnt DESC, w) AS r
-         |          FROM tc) WHERE r <= 20),
-         |pairs AS (SELECT a.source AS s1, b.source AS s2, a.r AS ra, b.r AS rb
-         |          FROM top a JOIN top b ON a.w = b.w AND a.source < b.source),
-         |dep AS (SELECT s1, s2, d.d, COUNT(*) AS xd
-         |        FROM pairs, (SELECT unnest(generate_series(1, 20)) AS d) d
-         |        WHERE d.d >= greatest(ra, rb)
-         |        GROUP BY 1, 2, 3),
-         |tm AS (SELECT s1, s2,
-         |         FLOOR([$ws][CAST(d AS INTEGER)] * xd / d * 1e12 + 0.5) / 1e12 AS t
-         |       FROM dep)
-         |SELECT s1, s2,
-         |  FLOOR(CAST(SUM(CAST(t AS DECIMAL(27,14))) AS DOUBLE) * 1e9 + 0.5) / 1e9
-         |    AS rbo
-         |FROM tm GROUP BY 1, 2 ORDER BY s1, s2""".stripMargin
-    },
-
-    "q250_k_anonymity" ->
-      """WITH g AS (SELECT source,
-        |             CAST(FLOOR(CAST(n_chars AS DOUBLE) / 100) AS BIGINT) AS size_bucket,
-        |             COUNT(*) AS n_docs, COUNT(DISTINCT lang) AS n_langs
-        |           FROM documents GROUP BY 1, 2)
-        |SELECT source, size_bucket, n_docs, n_langs,
-        |  CAST(CASE WHEN n_docs < 10 THEN 1 ELSE 0 END AS BIGINT) AS k_violation,
-        |  CAST(CASE WHEN n_langs < 2 THEN 1 ELSE 0 END AS BIGINT) AS l_violation
-        |FROM g WHERE n_docs < 10 OR n_langs < 2
-        |ORDER BY source, size_bucket""".stripMargin,
-
-    "q251_smd_balance" -> {
-      def arm(cn: String, label: String) =
-        s"""a_$cn AS (SELECT t, COUNT(*) AS n,
-           |         CAST(SUM(CAST($cn AS DECIMAL(27,6))) AS DOUBLE) AS s,
-           |         CAST(SUM(CAST(round($cn * $cn, 6) AS DECIMAL(27,6))) AS DOUBLE) AS ss
-           |       FROM u GROUP BY 1),
-           |w_$cn AS (SELECT MAX(CASE WHEN t = 1 THEN n END) AS n1,
-           |        MAX(CASE WHEN t = 1 THEN s END) AS s1,
-           |        MAX(CASE WHEN t = 1 THEN ss END) AS ss1,
-           |        MAX(CASE WHEN t = 0 THEN n END) AS n2,
-           |        MAX(CASE WHEN t = 0 THEN s END) AS s2,
-           |        MAX(CASE WHEN t = 0 THEN ss END) AS ss2
-           |      FROM a_$cn),
-           |r_$cn AS (SELECT '$label' AS covariate, CAST(n1 AS BIGINT) AS n1,
-           |        CAST(n2 AS BIGINT) AS n2,
-           |        round(s1 / n1, 9) AS mean_t, round(s2 / n2, 9) AS mean_c,
-           |        CASE WHEN (ss1 - s1 * s1 / n1) / (n1 - 1)
-           |                  + (ss2 - s2 * s2 / n2) / (n2 - 1) > 0
-           |             THEN FLOOR((s1 / n1 - s2 / n2)
-           |               / sqrt(((ss1 - s1 * s1 / n1) / (n1 - 1)
-           |                 + (ss2 - s2 * s2 / n2) / (n2 - 1)) / 2)
-           |               * 1e9 + 0.5) / 1e9 END AS smd
-           |      FROM w_$cn WHERE n1 > 1 AND n2 > 1)""".stripMargin
-      s"""$evCte,
-         |u AS (SELECT user_id % 2 AS t,
-         |        CAST(SUM(CAST(CASE WHEN ts < TIMESTAMP '2024-01-15 00:00:00'
-         |          THEN value ELSE 0.0 END AS DECIMAL(18,4))) AS DOUBLE) AS x,
-         |        CAST(SUM(CASE WHEN ts < TIMESTAMP '2024-01-15 00:00:00'
-         |          THEN 1 ELSE 0 END) AS DOUBLE) AS c
-         |      FROM ev GROUP BY user_id),
-         |${arm("x", "pre_value_sum")},
-         |${arm("c", "pre_event_count")}
-         |SELECT * FROM r_x UNION ALL SELECT * FROM r_c ORDER BY covariate""".stripMargin
-    },
-
-    "q252_power_analysis" ->
-      s"""$evCte,
-         |m AS (SELECT event_type, COUNT(*) AS n,
-         |        CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS s,
-         |        CAST(SUM(CAST(round(value * value, 6) AS DECIMAL(27,6))) AS DOUBLE) AS ss
-         |      FROM ev GROUP BY 1)
-         |SELECT event_type, CAST(n AS BIGINT) AS n_obs,
-         |  round(s / n, 9) AS mean_value,
-         |  round(sqrt((ss - s * s / n) / (n - 1)), 9) AS sd,
-         |  round(0.05 * (s / n), 9) AS mde_abs,
-         |  CAST(ceil(2.0 * ((ss - s * s / n) / (n - 1))
-         |    * (1.959963984540054 + 0.8416212335729143)
-         |    * (1.959963984540054 + 0.8416212335729143)
-         |    / ((0.05 * (s / n)) * (0.05 * (s / n)))) AS BIGINT) AS n_per_arm
-         |FROM m WHERE n > 1 ORDER BY event_type""".stripMargin,
-
-    "q253_silhouette" ->
-      s"""$kmeansBaseCte,
-         |${kmeansIterCte(1)},
-         |${kmeansIterCte(2)},
-         |cd AS (SELECT c.cid, CAST(g.i - 1 AS BIGINT) AS dim, c.cvec[g.i] AS cv
-         |       FROM cent2 c,
-         |       LATERAL (SELECT unnest(generate_series(1, len(c.cvec))) AS i) g),
-         |xd AS (SELECT e.vec_id, CAST(g.i - 1 AS BIGINT) AS dim,
-         |         CAST(e.embedding[g.i] AS DOUBLE) AS x
-         |       FROM e,
-         |       LATERAL (SELECT unnest(generate_series(1, len(e.embedding))) AS i) g),
-         |d2 AS (SELECT x.vec_id, c.cid,
-         |         CAST(SUM(CAST(FLOOR((x.x - c.cv) * (x.x - c.cv) * 1e12 + 0.5) / 1e12
-         |           AS DECIMAL(27,14))) AS DOUBLE) AS d2
-         |       FROM xd x JOIN cd c USING (dim) GROUP BY 1, 2),
-         |r AS (SELECT vec_id, cid, d2,
-         |        row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rk
-         |      FROM d2),
-         |ab AS (SELECT vec_id, MAX(CASE WHEN rk = 1 THEN cid END) AS cid,
-         |         sqrt(MAX(CASE WHEN rk = 1 THEN d2 END)) AS a,
-         |         sqrt(MAX(CASE WHEN rk = 2 THEN d2 END)) AS b
-         |       FROM r WHERE rk <= 2 GROUP BY 1),
-         |si AS (SELECT cid,
-         |         CASE WHEN greatest(a, b) > 0
-         |              THEN FLOOR((b - a) / greatest(a, b) * 1e12 + 0.5) / 1e12
-         |              ELSE 0.0 END AS s
-         |       FROM ab)
-         |SELECT CAST(cid AS BIGINT) AS cluster, COUNT(*) AS n_vecs,
-         |  FLOOR(CAST(SUM(CAST(s AS DECIMAL(27,14))) AS DOUBLE) / COUNT(*)
-         |    * 1e9 + 0.5) / 1e9 AS silhouette
-         |FROM si GROUP BY 1 ORDER BY cluster""".stripMargin,
-
-    // isotonic fit by the MINIMAX identity fit_i = max_{j<=i} min_{k>=i}
-    // wavg(acc_j..acc_k) — segment means reduce as exact integers
-    // (nb * acc9) until ONE double division, so both engines compare
-    // identical doubles and select identical extrema (see Optim
-    // .isotonicMinimax, whose Scala loops mirror these CTEs 1:1)
-    "q254_isotonic_calibration" ->
-      """WITH f AS (SELECT doc_id, lang,
-        |  least(CAST(len(regexp_extract_all(text, '\S+')) AS DOUBLE) / 100.0, 1.0) AS f_tok,
-        |  CASE WHEN len(regexp_extract_all(text, '\S+')) = 0 THEN 0.0
-        |       ELSE CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|to|a|in|is|that|it|for)\b')) AS DOUBLE)
-        |            / len(regexp_extract_all(text, '\S+')) END AS f_stop,
-        |  CASE WHEN length(text) = 0 THEN 0.0
-        |       ELSE CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / length(text) END AS f_alpha,
-        |  CASE WHEN length(text) = 0 THEN 0.0
-        |       ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE) / length(text) END AS f_punct
-        |FROM documents),
-        |z AS (SELECT doc_id, lang,
-        |        round(1.0 / (1.0 + exp(-(f_tok * 1.2 + f_stop * 2.0 + f_alpha * 1.5 + f_punct * (-3.0) + (-1.0)))), 9) AS score
-        |      FROM f),
-        |raw AS (SELECT CAST(least(floor(score * 10), 9) AS BIGINT) AS bucket, score,
-        |          CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-        |        FROM z),
-        |bins AS (SELECT bucket, COUNT(*) AS n,
-        |           round(CAST(SUM(CAST(score AS DECIMAL(27,9))) AS DOUBLE) / COUNT(*), 9) AS conf,
-        |           round(CAST(SUM(y) AS DOUBLE) / COUNT(*), 9) AS acc
-        |         FROM raw GROUP BY bucket),
-        |b9 AS (SELECT bucket, n, conf, acc,
-        |         CAST(FLOOR(acc * 1000000000.0 + 0.5) AS BIGINT) AS acc9
-        |       FROM bins),
-        |seg AS (SELECT j.bucket AS j, k.bucket AS k,
-        |          CAST(SUM(t.n * t.acc9) AS BIGINT) AS num,
-        |          CAST(SUM(t.n) AS BIGINT) AS den
-        |        FROM b9 j, b9 k, b9 t
-        |        WHERE j.bucket <= k.bucket
-        |          AND t.bucket BETWEEN j.bucket AND k.bucket
-        |        GROUP BY 1, 2),
-        |mn AS (SELECT i.bucket, s.j,
-        |         MIN(CAST(s.num AS DOUBLE) / CAST(s.den AS DOUBLE)
-        |             / 1000000000.0) AS v
-        |       FROM b9 i JOIN seg s ON s.j <= i.bucket AND s.k >= i.bucket
-        |       GROUP BY 1, 2),
-        |iso AS (SELECT bucket, MAX(v) AS fit FROM mn GROUP BY bucket)
-        |SELECT b9.bucket, b9.n, b9.conf, b9.acc, round(iso.fit, 9) AS iso_acc
-        |FROM b9 JOIN iso ON b9.bucket = iso.bucket
-        |ORDER BY b9.bucket""".stripMargin,
-
-    "q255_entropy_rate" ->
-      s"""$evCte,
-         |sq AS (SELECT user_id, event_type AS src,
-         |         LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-         |       FROM ev),
-         |p AS (SELECT src, dst, COUNT(*) AS c FROM sq
-         |      WHERE dst IS NOT NULL GROUP BY 1, 2),
-         |t AS (SELECT src, SUM(c) AS ns FROM p GROUP BY 1),
-         |nt AS (SELECT SUM(c) AS n FROM p),
-         |hs AS (SELECT p.src, t.ns,
-         |         CAST(SUM(CAST(-(FLOOR((CAST(c AS DOUBLE) / ns)
-         |           * ln(CAST(c AS DOUBLE) / ns) * 1e12 + 0.5) / 1e12)
-         |           AS DECIMAL(27,14))) AS DOUBLE) AS h
-         |       FROM p JOIN t USING (src) GROUP BY 1, 2),
-         |wt AS (SELECT n,
-         |         FLOOR(CAST(ns AS DOUBLE) / n * h * 1e12 + 0.5) / 1e12 AS wt
-         |       FROM hs, nt)
-         |SELECT CAST(n AS BIGINT) AS n_transitions, COUNT(*) AS n_states,
-         |  FLOOR(CAST(SUM(CAST(wt AS DECIMAL(27,14))) AS DOUBLE) * 1e9 + 0.5) / 1e9
-         |    AS entropy_rate
-         |FROM wt GROUP BY n""".stripMargin,
-
-    "q256_conformal_interval" ->
-      s"""$evCte,
-         |h AS (SELECT event_type, event_id, value,
-         |        event_id % 2147483647 * 48271 % 2147483647 * 48271 % 2147483647
-         |          * 48271 % 2147483647 % 2 AS half
-         |      FROM ev),
-         |mu AS (SELECT event_type,
-         |         CAST(SUM(CAST(value AS $D)) AS DOUBLE) / COUNT(*) AS mu
-         |       FROM h WHERE half = 0 GROUP BY 1),
-         |cal AS (SELECT h.event_type, h.event_id, abs(h.value - mu.mu) AS res
-         |        FROM h JOIN mu USING (event_type) WHERE half = 1),
-         |k AS (SELECT event_type, COUNT(*) AS n,
-         |        LEAST(CAST(ceil(CAST(COUNT(*) + 1 AS DOUBLE) * 0.9) AS BIGINT),
-         |          COUNT(*)) AS k
-         |      FROM cal GROUP BY 1),
-         |r AS (SELECT event_type, event_id, res,
-         |        row_number() OVER (PARTITION BY event_type
-         |                           ORDER BY res, event_id) AS rk
-         |      FROM cal),
-         |q AS (SELECT r.event_type, k.k, r.res AS qhat
-         |      FROM r JOIN k USING (event_type) WHERE r.rk = k.k)
-         |SELECT q.event_type, CAST(q.k AS BIGINT) AS k_rank,
-         |  round(mu.mu, 9) AS mu, round(q.qhat, 9) AS qhat,
-         |  round(mu.mu - q.qhat, 9) AS lo, round(mu.mu + q.qhat, 9) AS hi
-         |FROM q JOIN mu USING (event_type) ORDER BY event_type""".stripMargin,
-
-    "q257_eb_shrinkage" ->
-      """WITH f AS (SELECT source,
-        |  least(CAST(len(regexp_extract_all(text, '\S+')) AS DOUBLE) / 100.0, 1.0) AS f_tok,
-        |  CASE WHEN len(regexp_extract_all(text, '\S+')) = 0 THEN 0.0
-        |       ELSE CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|to|a|in|is|that|it|for)\b')) AS DOUBLE)
-        |            / len(regexp_extract_all(text, '\S+')) END AS f_stop,
-        |  CASE WHEN length(text) = 0 THEN 0.0
-        |       ELSE CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / length(text) END AS f_alpha,
-        |  CASE WHEN length(text) = 0 THEN 0.0
-        |       ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE) / length(text) END AS f_punct
-        |FROM documents),
-        |z AS (SELECT source,
-        |        round(1.0 / (1.0 + exp(-(f_tok * 1.2 + f_stop * 2.0
-        |          + f_alpha * 1.5 + f_punct * (-3.0) + (-1.0)))), 9) AS p
-        |      FROM f),
-        |ps AS (SELECT source, COUNT(*) AS n,
-        |         CAST(SUM(CAST(p AS DECIMAL(27,9))) AS DOUBLE) AS s,
-        |         CAST(SUM(CAST(round(p * p, 6) AS DECIMAL(27,6))) AS DOUBLE) AS ss
-        |       FROM z GROUP BY 1),
-        |g AS (SELECT SUM(n) AS nn, COUNT(*) AS kk,
-        |        CAST(SUM(CAST(s AS DECIMAL(27,9))) AS DOUBLE) AS stot,
-        |        CAST(SUM(CAST(ss AS DECIMAL(27,6))) AS DOUBLE) AS sstot,
-        |        CAST(SUM(CAST(round((s / n) * (s / n), 9) AS DECIMAL(27,9))) AS DOUBLE) AS sm2,
-        |        CAST(SUM(CAST(round(s / n, 9) AS DECIMAL(27,9))) AS DOUBLE) AS smraw,
-        |        CAST(SUM(CAST(round(CAST(1 AS DOUBLE) / n, 12) AS DECIMAL(27,14))) AS DOUBLE) AS sinv
-        |      FROM ps),
-        |gg AS (SELECT nn, kk, stot,
-        |         (sstot - stot * stot / nn) / (nn - 1) AS sig2,
-        |         greatest((sm2 - smraw * smraw / kk) / (kk - 1)
-        |           - ((sstot - stot * stot / nn) / (nn - 1)) * (sinv / kk),
-        |           0.0) AS tau2
-        |       FROM g WHERE kk > 1 AND nn > kk)
-        |SELECT ps.source, CAST(ps.n AS BIGINT) AS n,
-        |  round(ps.s / ps.n, 9) AS raw_mean,
-        |  FLOOR(tau2 / (tau2 + sig2 / ps.n) * 1e9 + 0.5) / 1e9 AS shrink_b,
-        |  round(stot / nn + tau2 / (tau2 + sig2 / ps.n)
-        |    * (ps.s / ps.n - stot / nn), 9) AS shrunk_mean
-        |FROM ps, gg ORDER BY ps.source""".stripMargin,
-
-    "q258_topic_coherence" ->
-      """WITH pres AS (SELECT DISTINCT source, doc_id, w FROM (
-        |                SELECT source, doc_id,
-        |                  unnest(string_split(lower(text), ' ')) AS w
-        |                FROM documents) WHERE length(w) > 0),
-        |ds AS (SELECT source, COUNT(DISTINCT doc_id) AS d FROM pres GROUP BY 1),
-        |dfc AS (SELECT source, w, COUNT(*) AS df FROM pres GROUP BY 1, 2),
-        |top AS (SELECT source, w, df FROM (
-        |          SELECT source, w, df,
-        |            row_number() OVER (PARTITION BY source
-        |                               ORDER BY df DESC, w) AS r
-        |          FROM dfc) WHERE r <= 10),
-        |hits AS (SELECT p.source, p.doc_id, p.w, t.df
-        |         FROM pres p JOIN top t ON p.source = t.source AND p.w = t.w),
-        |pairs AS (SELECT a.source, a.w AS w1, b.w AS w2, a.df AS df1,
-        |            b.df AS df2, COUNT(*) AS df12
-        |          FROM hits a JOIN hits b
-        |            ON a.source = b.source AND a.doc_id = b.doc_id AND a.w < b.w
-        |          GROUP BY 1, 2, 3, 4, 5),
-        |tm AS (SELECT p.source,
-        |         FLOOR(ln(CAST(df12 * d AS DOUBLE) / CAST(df1 * df2 AS DOUBLE))
-        |           / -ln(CAST(df12 AS DOUBLE) / d) * 1e12 + 0.5) / 1e12 AS t
-        |       FROM pairs p JOIN ds USING (source) WHERE df12 < d)
-        |SELECT source, COUNT(*) AS n_pairs,
-        |  FLOOR(CAST(SUM(CAST(t AS DECIMAL(27,14))) AS DOUBLE) / COUNT(*)
-        |    * 1e9 + 0.5) / 1e9 AS coherence
-        |FROM tm GROUP BY 1 ORDER BY source""".stripMargin,
-
-    "q259_sample_selectivity" -> {
-      val ts = Seq(50, 100, 200, 300)
-      val cells = ts.map(t =>
-        s"""SUM(CASE WHEN value > $t THEN 1 ELSE 0 END) AS a_$t,
-           |        SUM(CASE WHEN in_sample AND value > $t THEN 1 ELSE 0 END) AS s_$t"""
-          .stripMargin).mkString(",\n        ")
-      val selects = ts.map(t =>
-        s"""SELECT CAST($t AS BIGINT) AS threshold, CAST(a_$t AS BIGINT) AS actual,
-           |  CAST(s_$t AS BIGINT) AS n_sample_hits,
-           |  FLOOR(CAST(s_$t AS DOUBLE) / n_samp * n * 1e9 + 0.5) / 1e9 AS estimate,
-           |  CASE WHEN a_$t > 0 THEN
-           |    FLOOR((CAST(s_$t AS DOUBLE) / n_samp * n - a_$t) / a_$t
-           |      * 1e9 + 0.5) / 1e9 END AS rel_err
-           |FROM a WHERE a_$t > 0""".stripMargin).mkString("\nUNION ALL\n")
-      s"""$evCte,
-         |h AS (SELECT value,
-         |        (event_id % 2147483647 * 48271 % 2147483647 * 48271 % 2147483647
-         |          * 48271 % 2147483647) % 10 = 0 AS in_sample
-         |      FROM ev),
-         |a AS (SELECT COUNT(*) AS n,
-         |        SUM(CASE WHEN in_sample THEN 1 ELSE 0 END) AS n_samp,
-         |        $cells
-         |      FROM h)
-         |$selects
-         |ORDER BY threshold""".stripMargin
-    },
-
-    "q260_heaps_law" ->
-      """WITH dr AS (SELECT doc_id, text,
-        |              row_number() OVER (ORDER BY doc_id) AS r
-        |            FROM documents),
-        |fr AS (SELECT w, MIN(r) AS fr FROM (
-        |         SELECT r, unnest(string_split(lower(text), ' ')) AS w FROM dr)
-        |       WHERE length(w) > 0 GROUP BY 1),
-        |d AS (SELECT COUNT(*) AS d FROM documents),
-        |cuts AS (SELECT CAST(g.m AS BIGINT) AS m, (g.m * d.d + 9) // 10 AS cutoff
-        |         FROM d, (SELECT unnest(generate_series(1, 10)) AS m) g),
-        |pts AS (SELECT c.m, c.cutoff, COUNT(*) AS v
-        |        FROM fr f JOIN cuts c ON f.fr <= c.cutoff
-        |        GROUP BY 1, 2),
-        |xy AS (SELECT x, y,
-        |         FLOOR(x * y * 1e12 + 0.5) / 1e12 AS xy,
-        |         FLOOR(x * x * 1e12 + 0.5) / 1e12 AS xx
-        |       FROM (SELECT FLOOR(ln(CAST(cutoff AS DOUBLE)) * 1e12 + 0.5) / 1e12 AS x,
-        |               FLOOR(ln(CAST(v AS DOUBLE)) * 1e12 + 0.5) / 1e12 AS y
-        |             FROM pts)),
-        |f AS (SELECT COUNT(*) AS np,
-        |        CAST(SUM(CAST(x AS DECIMAL(27,14))) AS DOUBLE) AS sx,
-        |        CAST(SUM(CAST(y AS DECIMAL(27,14))) AS DOUBLE) AS sy,
-        |        CAST(SUM(CAST(xy AS DECIMAL(27,14))) AS DOUBLE) AS sxy,
-        |        CAST(SUM(CAST(xx AS DECIMAL(27,14))) AS DOUBLE) AS sxx
-        |      FROM xy)
-        |SELECT np AS n_points,
-        |  FLOOR((np * sxy - sx * sy) / (np * sxx - sx * sx) * 1e9 + 0.5) / 1e9 AS beta,
-        |  FLOOR(exp(sy / np - (np * sxy - sx * sy) / (np * sxx - sx * sx)
-        |    * (sx / np)) * 1e9 + 0.5) / 1e9 AS k_coef
-        |FROM f WHERE np * sxx - sx * sx > 0""".stripMargin,
-
-    "q261_stream_conformal" ->
-      s"""$evCte,
-         |pre AS (SELECT event_type, event_id, value FROM ev
-         |        WHERE ts < TIMESTAMP '2024-01-15 00:00:00'),
-         |h AS (SELECT event_type, event_id, value,
-         |        event_id % 2147483647 * 48271 % 2147483647 * 48271 % 2147483647
-         |          * 48271 % 2147483647 % 2 AS half
-         |      FROM pre),
-         |mu AS (SELECT event_type,
-         |         CAST(SUM(CAST(value AS $D)) AS DOUBLE) / COUNT(*) AS mu
-         |       FROM h WHERE half = 0 GROUP BY 1),
-         |cal AS (SELECT h.event_type, h.event_id, abs(h.value - mu.mu) AS res
-         |        FROM h JOIN mu USING (event_type) WHERE half = 1),
-         |k AS (SELECT event_type, COUNT(*) AS n,
-         |        LEAST(CAST(ceil(CAST(COUNT(*) + 1 AS DOUBLE) * 0.9) AS BIGINT),
-         |          COUNT(*)) AS k
-         |      FROM cal GROUP BY 1),
-         |r AS (SELECT event_type, event_id, res,
-         |        row_number() OVER (PARTITION BY event_type
-         |                           ORDER BY res, event_id) AS rk
-         |      FROM cal),
-         |q AS (SELECT r.event_type, r.res AS qhat
-         |      FROM r JOIN k USING (event_type) WHERE r.rk = k.k),
-         |cur AS (SELECT event_type, date_trunc('day', ts) AS day, value FROM ev
-         |        WHERE ts >= TIMESTAMP '2024-01-15 00:00:00'),
-         |fl AS (SELECT c.event_type, c.day,
-         |         CASE WHEN abs(c.value - mu.mu) > q.qhat THEN 1 ELSE 0 END AS o
-         |       FROM cur c JOIN mu USING (event_type) JOIN q USING (event_type))
-         |SELECT day, event_type, COUNT(*) AS n, CAST(SUM(o) AS BIGINT) AS n_out,
-         |  FLOOR(CAST(SUM(o) AS DOUBLE) / COUNT(*) * 1e9 + 0.5) / 1e9 AS out_rate
-         |FROM fl GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin,
-
-    "q262_did" -> {
-      def cell(t: Int, p: Int, c: String) =
-        s"MAX(CASE WHEN t = $t AND post = $p THEN $c END) AS ${c}_$t$p"
-      def m(t: Int, p: Int) = s"(s_$t$p / n_$t$p)"
-      def v(t: Int, p: Int) =
-        s"((ss_$t$p - s_$t$p * s_$t$p / n_$t$p) / (n_$t$p - 1) / n_$t$p)"
-      s"""$evCte,
-         |cells AS (SELECT user_id % 2 AS t,
-         |            CASE WHEN ts >= TIMESTAMP '2024-01-15 00:00:00'
-         |                 THEN 1 ELSE 0 END AS post,
-         |            COUNT(*) AS n,
-         |            CAST(SUM(CAST(value AS $D)) AS DOUBLE) AS s,
-         |            CAST(SUM(CAST(round(value * value, 6) AS DECIMAL(27,6)))
-         |              AS DOUBLE) AS ss
-         |          FROM ev GROUP BY 1, 2),
-         |w AS (SELECT ${cell(1, 0, "n")}, ${cell(1, 0, "s")}, ${cell(1, 0, "ss")},
-         |        ${cell(1, 1, "n")}, ${cell(1, 1, "s")}, ${cell(1, 1, "ss")},
-         |        ${cell(0, 0, "n")}, ${cell(0, 0, "s")}, ${cell(0, 0, "ss")},
-         |        ${cell(0, 1, "n")}, ${cell(0, 1, "s")}, ${cell(0, 1, "ss")}
-         |      FROM cells)
-         |SELECT CAST(n_10 AS BIGINT) AS n_treat_pre,
-         |  CAST(n_11 AS BIGINT) AS n_treat_post,
-         |  CAST(n_00 AS BIGINT) AS n_ctrl_pre,
-         |  CAST(n_01 AS BIGINT) AS n_ctrl_post,
-         |  round(${m(1, 1)} - ${m(1, 0)} - (${m(0, 1)} - ${m(0, 0)}), 9) AS did,
-         |  FLOOR(sqrt(${v(1, 1)} + ${v(1, 0)} + ${v(0, 1)} + ${v(0, 0)})
-         |    * 1e9 + 0.5) / 1e9 AS se
-         |FROM w WHERE n_10 > 1 AND n_11 > 1 AND n_00 > 1 AND n_01 > 1""".stripMargin
-    },
-
-    "q263_ndcg" -> {
-      // the identical Scala discount ladder the Spark side embeds
-      val ds = (1 to 10).map(i => 1.0 / (math.log(i + 1.0) / math.log(2.0)))
-        .mkString(", ")
-      s"""$bm25Cte,
-         |rel AS (SELECT doc_id, least(COUNT(*), 3) AS rel FROM w2
-         |        WHERE w = 'spark' GROUP BY doc_id),
-         |rk AS (SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS i
-         |       FROM bm ORDER BY bm25 DESC, doc_id LIMIT 10),
-         |dcg AS (SELECT CAST(SUM(CAST(
-         |          FLOOR((CASE COALESCE(rel.rel, 0) WHEN 1 THEN 1 WHEN 2 THEN 3
-         |                 WHEN 3 THEN 7 ELSE 0 END)
-         |            * [$ds][CAST(rk.i AS INTEGER)] * 1e12 + 0.5) / 1e12
-         |          AS DECIMAL(27,14))) AS DOUBLE) AS dcg
-         |        FROM rk LEFT JOIN rel USING (doc_id)),
-         |irk AS (SELECT rel, row_number() OVER (ORDER BY rel DESC, doc_id) AS i
-         |        FROM rel ORDER BY rel DESC, doc_id LIMIT 10),
-         |idcg AS (SELECT CAST(SUM(CAST(
-         |           FLOOR((CASE rel WHEN 1 THEN 1 WHEN 2 THEN 3
-         |                  WHEN 3 THEN 7 ELSE 0 END)
-         |             * [$ds][CAST(i AS INTEGER)] * 1e12 + 0.5) / 1e12
-         |           AS DECIMAL(27,14))) AS DOUBLE) AS idcg
-         |         FROM irk)
-         |SELECT round(dcg, 9) AS dcg, round(idcg, 9) AS idcg,
-         |  FLOOR(dcg / idcg * 1e9 + 0.5) / 1e9 AS ndcg
-         |FROM dcg, idcg WHERE idcg > 0""".stripMargin
-    },
-
-    "q208_label_prop" -> {
-      // 3 unrolled synchronous LPA rounds; per round the most frequent
-      // neighbor label wins, ties to the smaller label (row_number)
-      val rounds = (1 to 3).map { i =>
-        s"""c$i AS MATERIALIZED (SELECT sym.dst AS node, l.lbl, COUNT(*) AS cnt
-           |      FROM sym JOIN l${i - 1} l ON sym.src = l.node GROUP BY 1, 2),
-           |l$i AS MATERIALIZED (SELECT node, lbl FROM (
-           |        SELECT node, lbl,
-           |          row_number() OVER (PARTITION BY node ORDER BY cnt DESC, lbl) AS rn
-           |        FROM c$i) WHERE rn = 1)""".stripMargin
-      }.mkString(",\n")
-      s"""$sessionPagesCte,
-         |eu AS MATERIALIZED (SELECT a.page AS u, b.page AS v
-         |       FROM d a JOIN d b
-         |         ON a.user_id = b.user_id AND a.sid = b.sid AND a.page < b.page
-         |       GROUP BY 1, 2),
-         |sym AS MATERIALIZED (SELECT u AS src, v AS dst FROM eu UNION ALL SELECT v, u FROM eu),
-         |l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS lbl FROM sym),
-         |$rounds
-         |SELECT node AS page, lbl AS community FROM l3 ORDER BY page""".stripMargin
-    },
-
-    "q264_map_at_k" ->
-      s"""$bm25Cte,
-         |rel AS (SELECT DISTINCT doc_id FROM w2 WHERE w = 'spark'),
-         |rk AS (SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS i
-         |       FROM bm ORDER BY bm25 DESC, doc_id LIMIT 10),
-         |h AS (SELECT rk.i, CASE WHEN rel.doc_id IS NULL THEN 0 ELSE 1 END AS hit
-         |      FROM rk LEFT JOIN rel USING (doc_id)),
-         |ch AS (SELECT i, hit, SUM(hit) OVER (ORDER BY i) AS cumhit FROM h),
-         |a AS (SELECT COALESCE(SUM(CASE WHEN hit = 1
-         |          THEN CAST(round(CAST(cumhit AS DOUBLE) / i, 12) AS DECIMAL(27,14))
-         |          ELSE CAST(0 AS DECIMAL(27,14)) END), 0) AS apnum,
-         |        COALESCE(SUM(hit), 0) AS hits FROM ch),
-         |nr AS (SELECT COUNT(*) AS n_rel FROM rel)
-         |SELECT CAST(n_rel AS BIGINT) AS n_rel, CAST(hits AS BIGINT) AS hits_at_10,
-         |  FLOOR(CAST(apnum AS DOUBLE) / CAST(least(n_rel, 10) AS DOUBLE)
-         |    * 1e9 + 0.5) / 1e9 AS ap_at_10
-         |FROM a, nr WHERE n_rel > 0""".stripMargin,
-
-    "q265_pr_auc" ->
-      s"""$qualityDocCte,
-         |c AS (SELECT source, score, COUNT(*) AS n,
-         |        SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS np
-         |      FROM d GROUP BY 1, 2),
-         |cum AS (SELECT source, score, n, np,
-         |        SUM(n) OVER (PARTITION BY source ORDER BY score DESC) AS cn,
-         |        SUM(np) OVER (PARTITION BY source ORDER BY score DESC) AS ctp
-         |        FROM c),
-         |t AS (SELECT source, SUM(n) AS tn, SUM(np) AS tp FROM c GROUP BY 1),
-         |r AS (SELECT cum.source,
-         |        SUM(CAST(round((CAST(np AS DOUBLE) * CAST(ctp AS DOUBLE))
-         |            / (CAST(tp AS DOUBLE) * CAST(cn AS DOUBLE)), 12)
-         |          AS DECIMAL(27,14))) AS apd
-         |      FROM cum JOIN t USING (source)
-         |      WHERE tp > 0 AND tn - tp > 0 GROUP BY 1)
-         |SELECT r.source AS source, CAST(tp AS BIGINT) AS n_pos,
-         |  FLOOR(CAST(apd AS DOUBLE) * 1e9 + 0.5) / 1e9 AS ap
-         |FROM r JOIN t USING (source) ORDER BY source""".stripMargin,
-
-    "q266_max_concurrency" ->
-      s"""$evCte,
-         |brk AS (
-         |  SELECT user_id, ts, event_id,
-         |    CASE WHEN lag(ts) OVER w IS NULL
-         |           OR ts - lag(ts) OVER w >= INTERVAL '30 minutes'
-         |         THEN 1 ELSE 0 END AS is_break
-         |  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         |sx AS (SELECT user_id, ts,
-         |         SUM(is_break) OVER (PARTITION BY user_id ORDER BY ts, event_id
-         |                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-         |       FROM brk),
-         |sess AS (SELECT user_id, sid, MIN(ts) AS st, MAX(ts) AS en FROM sx GROUP BY 1, 2),
-         |b AS (SELECT st AS ts, 1 AS delta, user_id, sid FROM sess
-         |      UNION ALL SELECT en, -1, user_id, sid FROM sess),
-         |c AS (SELECT ts, SUM(delta) OVER (ORDER BY ts, delta DESC, user_id, sid
-         |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS live
-         |      FROM b),
-         |p AS (SELECT MAX(live) AS peak FROM c)
-         |SELECT CAST(peak AS BIGINT) AS peak, MIN(ts) AS peak_ts,
-         |  CAST(COUNT(*) AS BIGINT) AS n_at_peak
-         |FROM c, p WHERE live = peak GROUP BY peak""".stripMargin,
-
-    "q267_cramers_v" ->
-      s"""$evCte,
-         |x AS (SELECT event_type, (CAST(ts AS DATE) - DATE '1970-01-01') % 7 AS dow FROM ev),
-         |cells AS (SELECT event_type, dow, COUNT(*) AS o FROM x GROUP BY 1, 2),
-         |rt AS (SELECT event_type, SUM(o) AS rt FROM cells GROUP BY 1),
-         |ctt AS (SELECT dow, SUM(o) AS ct FROM cells GROUP BY 1),
-         |nt AS (SELECT SUM(o) AS n, COUNT(DISTINCT event_type) AS r,
-         |         COUNT(DISTINCT dow) AS c FROM cells),
-         |s AS (SELECT n, r, c,
-         |        CAST(SUM(CAST(round(
-         |          (o - CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE))
-         |          * (o - CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE))
-         |          / (CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE)), 9)
-         |          AS DECIMAL(27,10))) AS DOUBLE) AS chi2
-         |      FROM cells JOIN rt USING (event_type) JOIN ctt USING (dow), nt
-         |      GROUP BY 1, 2, 3)
-         |SELECT CAST(n AS BIGINT) AS n, CAST((r - 1) * (c - 1) AS BIGINT) AS dof,
-         |  round(chi2, 6) AS chi2,
-         |  FLOOR(sqrt(chi2 / CAST(n * least(r - 1, c - 1) AS DOUBLE)) * 1e9 + 0.5) / 1e9 AS v
-         |FROM s""".stripMargin,
-
-    "q268_cohens_kappa" ->
-      s"""$qualityDocCte,
-         |lab AS (SELECT CASE WHEN score >= 0.5 THEN 1 ELSE 0 END AS a,
-         |          CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS b FROM d),
-         |t AS (SELECT COUNT(*) AS n, SUM(a) AS na, SUM(b) AS nb,
-         |        SUM(CASE WHEN a = b THEN 1 ELSE 0 END) AS agree FROM lab),
-         |k AS (SELECT n, na, nb, agree,
-         |        CAST(agree AS DOUBLE) / CAST(n AS DOUBLE) AS po,
-         |        (CAST(na AS DOUBLE) / CAST(n AS DOUBLE))
-         |          * (CAST(nb AS DOUBLE) / CAST(n AS DOUBLE))
-         |        + (CAST(n - na AS DOUBLE) / CAST(n AS DOUBLE))
-         |          * (CAST(n - nb AS DOUBLE) / CAST(n AS DOUBLE)) AS pe
-         |      FROM t)
-         |SELECT CAST(n AS BIGINT) AS n, CAST(na AS BIGINT) AS n_a_pos,
-         |  CAST(nb AS BIGINT) AS n_b_pos,
-         |  round(po, 9) AS po, round(pe, 9) AS pe,
-         |  FLOOR((po - pe) / (1.0 - pe) * 1e9 + 0.5) / 1e9 AS kappa
-         |FROM k WHERE n > 0 AND pe <> 1.0""".stripMargin,
-
-    "q269_changepoint" ->
-      s"""$evCte,
-         |daily AS (SELECT CAST(ts AS DATE) AS day,
-         |            SUM(CAST(value AS DECIMAL(18,4))) AS y FROM ev GROUP BY 1),
-         |cum AS (SELECT day, row_number() OVER (ORDER BY day) AS t,
-         |          SUM(y) OVER (ORDER BY day
-         |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS st
-         |        FROM daily),
-         |tot AS (SELECT COUNT(*) AS tt, SUM(y) AS stt FROM daily),
-         |g AS (SELECT day, t, tt, CAST(st AS DOUBLE) AS std, CAST(stt AS DOUBLE) AS sttd,
-         |        round((CAST(st AS DOUBLE)
-         |            - CAST(t AS DOUBLE) * CAST(stt AS DOUBLE) / CAST(tt AS DOUBLE))
-         |          * (CAST(st AS DOUBLE)
-         |            - CAST(t AS DOUBLE) * CAST(stt AS DOUBLE) / CAST(tt AS DOUBLE))
-         |          * CAST(tt AS DOUBLE)
-         |          / (CAST(t AS DOUBLE) * CAST(tt - t AS DOUBLE)), 6) AS gain
-         |      FROM cum, tot WHERE t < tt)
-         |SELECT day AS split_day, CAST(t AS BIGINT) AS n_left,
-         |  CAST(tt - t AS BIGINT) AS n_right, gain,
-         |  round(std / CAST(t AS DOUBLE), 6) AS mean_left,
-         |  round((sttd - std) / CAST(tt - t AS DOUBLE), 6) AS mean_right
-         |FROM g ORDER BY gain DESC, day LIMIT 1""".stripMargin,
-
-    "q270_lognormal_tail" ->
-      """WITH d AS (SELECT source, ln(CAST(n_chars AS DOUBLE)) AS lx
-        |           FROM documents WHERE n_chars > 0),
-        |st AS (SELECT source, COUNT(*) AS n,
-        |         CAST(SUM(CAST(round(lx, 9) AS DECIMAL(27,10))) AS DOUBLE) AS s1,
-        |         CAST(SUM(CAST(round(lx * lx, 9) AS DECIMAL(27,10))) AS DOUBLE) AS s2,
-        |         CAST(SUM(CAST(round(lx * lx * lx, 9) AS DECIMAL(27,10))) AS DOUBLE) AS s3
-        |       FROM d GROUP BY 1),
-        |f AS (SELECT source, n, s1 / n AS mu, s2 / n - (s1 / n) * (s1 / n) AS m2,
-        |        s3 / n - 3.0 * (s1 / n) * (s2 / n)
-        |          + 2.0 * (s1 / n) * (s1 / n) * (s1 / n) AS m3
-        |      FROM st WHERE n > 2),
-        |f2 AS (SELECT source, n, mu, m2, m3, sqrt(m2) AS sigma,
-        |         round(mu + 2.0 * sqrt(m2), 9) AS thr
-        |       FROM f WHERE m2 > 0),
-        |tl AS (SELECT d.source, SUM(CASE WHEN round(lx, 9) > thr THEN 1 ELSE 0 END) AS n_tail
-        |       FROM d JOIN f2 USING (source) GROUP BY 1)
-        |SELECT f2.source AS source, CAST(n AS BIGINT) AS n,
-        |  round(mu, 9) AS mu_log,
-        |  FLOOR(sigma * 1e9 + 0.5) / 1e9 AS sigma_log,
-        |  FLOOR(m3 / (sigma * m2) * 1e9 + 0.5) / 1e9 AS skew_log,
-        |  round(CAST(n_tail AS DOUBLE) / n, 9) AS tail_frac,
-        |  round(CAST(n_tail AS DOUBLE) / n - 0.02275, 9) AS tail_excess
-        |FROM f2 JOIN tl ON f2.source = tl.source ORDER BY source""".stripMargin,
-
-    "q271_gumbel_fit" -> {
-      val sqrt6OverPi = math.sqrt(6.0) / math.Pi
-      val gamma = 0.5772156649015329
-      val c99 = math.log(-math.log(0.99))
-      s"""$evCte,
-         |daily AS (SELECT CAST(ts AS DATE) AS day, MAX(value) AS mx FROM ev GROUP BY 1),
-         |st AS (SELECT COUNT(*) AS n,
-         |         CAST(SUM(CAST(round(mx, 6) AS DECIMAL(27,8))) AS DOUBLE) AS s1,
-         |         CAST(SUM(CAST(round(mx * mx, 6) AS DECIMAL(27,8))) AS DOUBLE) AS s2
-         |       FROM daily),
-         |f AS (SELECT n, s1 / n AS m, (s2 - s1 * s1 / n) / (n - 1) AS v
-         |      FROM st WHERE n > 1),
-         |g AS (SELECT n, m, sqrt(v) * $sqrt6OverPi AS beta FROM f WHERE v > 0),
-         |h AS (SELECT n, m, beta, m - $gamma * beta AS mu FROM g)
-         |SELECT CAST(n AS BIGINT) AS n_blocks, round(m, 9) AS mean_max,
-         |  round(mu, 9) AS mu,
-         |  FLOOR(beta * 1e9 + 0.5) / 1e9 AS beta,
-         |  FLOOR((mu - beta * $c99) * 1e9 + 0.5) / 1e9 AS return_99
-         |FROM h""".stripMargin
-    },
-
-    "q272_spell_variants" ->
-      """WITH w0 AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
-        |wd AS (SELECT w, COUNT(*) AS df FROM w0
-        |       WHERE regexp_full_match(w, '[a-z]{4,12}') GROUP BY 1),
-        |v AS (SELECT w, df, substr(w, 1, 2) AS blk FROM wd)
-        |SELECT a.w AS w1, b.w AS w2, a.df AS df1, b.df AS df2
-        |FROM v a JOIN v b
-        |  ON a.blk = b.blk AND a.w < b.w AND abs(length(a.w) - length(b.w)) <= 1
-        |WHERE levenshtein(a.w, b.w) = 1
-        |ORDER BY a.df + b.df DESC, w1, w2 LIMIT 20""".stripMargin,
-
-    "q273_sax_motifs" ->
-      s"""$evCte,
-         |daily AS (SELECT CAST(ts AS DATE) AS day, COUNT(*) AS x FROM ev GROUP BY 1),
-         |st AS (SELECT COUNT(*) AS n, SUM(x) AS sx,
-         |         SUM(CAST(x AS HUGEINT) * x) AS sxx FROM daily),
-         |z AS (SELECT day,
-         |        round((CAST(x AS DOUBLE) - CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-         |          / sqrt(CAST(sxx AS DOUBLE) / CAST(n AS DOUBLE)
-         |            - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-         |              * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))), 9) AS zz
-         |      FROM daily, st
-         |      WHERE n > 1 AND CAST(sxx AS DOUBLE) / CAST(n AS DOUBLE)
-         |        - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-         |          * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)) > 0),
-         |lettered AS (SELECT day,
-         |        CASE WHEN zz < -0.6745 THEN 'a' WHEN zz < 0.0 THEN 'b'
-         |             WHEN zz < 0.6745 THEN 'c' ELSE 'd' END AS l
-         |      FROM z)
-         |SELECT d0.l || d1.l || d2.l AS motif, COUNT(*) AS cnt
-         |FROM lettered d0
-         |JOIN lettered d1 ON d0.day + 1 = d1.day
-         |JOIN lettered d2 ON d0.day + 2 = d2.day
-         |GROUP BY 1 ORDER BY cnt DESC, motif LIMIT 5""".stripMargin,
-
-    "q274_cv_accuracy" ->
-      s"""$qualityDocCte,
-         |dd AS (SELECT doc_id % 5 AS fold,
-         |         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-         |         round(score, 9) AS sc FROM d),
-         |cell AS (SELECT fold, y, COUNT(*) AS nf,
-         |           SUM(CAST(sc AS DECIMAL(27,10))) AS sf
-         |         FROM dd GROUP BY 1, 2),
-         |tot AS (SELECT y, SUM(nf) AS nt, SUM(sf) AS stot FROM cell GROUP BY 1),
-         |tr AS (SELECT fold, y,
-         |         round(CAST(stot - sf AS DOUBLE) / CAST(nt - nf AS DOUBLE), 9) AS m
-         |       FROM cell JOIN tot USING (y) WHERE nt - nf > 0),
-         |means AS (SELECT fold, MAX(CASE WHEN y = 1 THEN m END) AS m1,
-         |            MAX(CASE WHEN y = 0 THEN m END) AS m0
-         |          FROM tr GROUP BY 1),
-         |p AS (SELECT dd.fold, y,
-         |        CASE WHEN abs(sc - m1) < abs(sc - m0) THEN 1 ELSE 0 END AS pred
-         |      FROM dd JOIN means USING (fold)
-         |      WHERE m1 IS NOT NULL AND m0 IS NOT NULL)
-         |SELECT fold, CAST(COUNT(*) AS BIGINT) AS n,
-         |  CAST(SUM(CASE WHEN pred = y THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
-         |  round(CAST(SUM(CASE WHEN pred = y THEN 1 ELSE 0 END) AS DOUBLE)
-         |    / COUNT(*), 9) AS accuracy
-         |FROM p GROUP BY 1 ORDER BY fold""".stripMargin,
-
-    "q275_durbin_watson" ->
-      s"""$evCte,
-         |daily AS (SELECT CAST(ts AS DATE) AS day,
-         |            SUM(CAST(value AS DECIMAL(18,4))) AS y FROM ev GROUP BY 1),
-         |idx AS (SELECT day, y, CAST(y AS DOUBLE) AS yd,
-         |          row_number() OVER (ORDER BY day) AS t FROM daily),
-         |st AS (SELECT COUNT(*) AS n, SUM(t) AS st1, SUM(y) AS sy,
-         |         SUM(CAST(round(yd * t, 4) AS DECIMAL(38,6))) AS sty,
-         |         SUM(t * t) AS st2 FROM idx),
-         |fit AS (SELECT (CAST(n AS DOUBLE) * CAST(sty AS DOUBLE)
-         |            - CAST(st1 AS DOUBLE) * CAST(sy AS DOUBLE))
-         |          / (CAST(n AS DOUBLE) * CAST(st2 AS DOUBLE)
-         |            - CAST(st1 AS DOUBLE) * CAST(st1 AS DOUBLE)) AS b,
-         |          CAST(sy AS DOUBLE) AS syd, CAST(st1 AS DOUBLE) AS st1d,
-         |          CAST(n AS DOUBLE) AS nd
-         |        FROM st WHERE n > 2),
-         |fit2 AS (SELECT b, (syd - b * st1d) / nd AS a FROM fit),
-         |e AS (SELECT t, round(yd - (a + b * CAST(t AS DOUBLE)), 9) AS e
-         |      FROM idx, fit2),
-         |den AS (SELECT CAST(SUM(CAST(round(e * e, 6) AS DECIMAL(27,8))) AS DOUBLE)
-         |          AS den, COUNT(*) AS n FROM e),
-         |num AS (SELECT CAST(SUM(CAST(round((e1.e - e0.e) * (e1.e - e0.e), 6)
-         |            AS DECIMAL(27,8))) AS DOUBLE) AS num
-         |        FROM e e0 JOIN e e1 ON e0.t + 1 = e1.t)
-         |SELECT CAST(n AS BIGINT) AS n,
-         |  FLOOR(num / den * 1e9 + 0.5) / 1e9 AS dw,
-         |  FLOOR((1.0 - num / den / 2.0) * 1e9 + 0.5) / 1e9 AS rho1
-         |FROM num, den WHERE den > 0""".stripMargin,
-
-    "q276_tost_equivalence" -> {
-      def m(t: Int) = s"(sv$t / n$t)"
-      def v(t: Int) = s"((svv$t - sv$t * sv$t / n$t) / (n$t - 1) / n$t)"
-      s"""$evCte,
-         |g AS (SELECT CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS t,
-         |        COUNT(*) AS n,
-         |        CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sv,
-         |        CAST(SUM(CAST(round(value * value, 6) AS DECIMAL(27,6))) AS DOUBLE) AS svv
-         |      FROM ev WHERE event_type IN ('click', 'view') GROUP BY 1),
-         |w AS (SELECT MAX(CASE WHEN t = 1 THEN n END) AS n1,
-         |        MAX(CASE WHEN t = 1 THEN sv END) AS sv1,
-         |        MAX(CASE WHEN t = 1 THEN svv END) AS svv1,
-         |        MAX(CASE WHEN t = 0 THEN n END) AS n0,
-         |        MAX(CASE WHEN t = 0 THEN sv END) AS sv0,
-         |        MAX(CASE WHEN t = 0 THEN svv END) AS svv0
-         |      FROM g),
-         |k AS (SELECT n1, n0,
-         |        ${m(1)} - ${m(0)} AS diff,
-         |        0.05 * ${m(0)} AS delta,
-         |        sqrt(${v(1)} + ${v(0)}) AS se
-         |      FROM w WHERE n1 > 1 AND n0 > 1),
-         |k2 AS (SELECT n1, n0, diff, delta,
-         |         round((diff + delta) / se, 9) AS tl,
-         |         round((diff - delta) / se, 9) AS tu
-         |       FROM k)
-         |SELECT CAST(n1 AS BIGINT) AS n_click, CAST(n0 AS BIGINT) AS n_view,
-         |  round(diff, 9) AS diff,
-         |  FLOOR(delta * 1e9 + 0.5) / 1e9 AS margin,
-         |  tl AS t_lower, tu AS t_upper,
-         |  CAST(CASE WHEN tl > 1.645 AND tu < -1.645 THEN 1 ELSE 0 END AS BIGINT)
-         |    AS equivalent
-         |FROM k2""".stripMargin
-    },
-
-    "q277_hapax_profile" ->
-      """WITH w0 AS (SELECT source, unnest(string_split(text, ' ')) AS w FROM documents),
-        |wc AS (SELECT source, w, COUNT(*) AS c FROM w0
-        |       WHERE length(w) > 0 GROUP BY 1, 2),
-        |sp AS (SELECT source, COUNT(*) AS v, SUM(c) AS n_tokens,
-        |         SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS v1,
-        |         SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS v2
-        |       FROM wc GROUP BY 1)
-        |SELECT source, CAST(n_tokens AS BIGINT) AS n_tokens, CAST(v AS BIGINT) AS v,
-        |  CAST(v1 AS BIGINT) AS v1, CAST(v2 AS BIGINT) AS v2,
-        |  round(CAST(v1 AS DOUBLE) / v, 9) AS hapax_frac,
-        |  round(CAST(v2 AS DOUBLE) / v, 9) AS sichel_s,
-        |  FLOOR(100.0 * ln(CAST(n_tokens AS DOUBLE))
-        |    / (1.0 - CAST(v1 AS DOUBLE) / v) * 1e9 + 0.5) / 1e9 AS honore_r
-        |FROM sp WHERE v > 0 AND v1 < v ORDER BY source""".stripMargin,
-
-    "q278_seasonal_mk" ->
-      s"""$evCte,
-         |daily AS (SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS x,
-         |            (CAST(ts AS DATE) - DATE '1970-01-01') % 7 AS dow
-         |          FROM ev GROUP BY event_type, CAST(ts AS DATE)),
-         |sp AS (SELECT a.event_type,
-         |         CAST(SUM(CASE WHEN b.x > a.x THEN 1 WHEN b.x < a.x THEN -1
-         |                       ELSE 0 END) AS BIGINT) AS s_stat
-         |       FROM daily a JOIN daily b
-         |         ON a.event_type = b.event_type AND a.dow = b.dow AND a.day < b.day
-         |       GROUP BY 1),
-         |nw AS (SELECT event_type, dow, COUNT(*) AS nw FROM daily GROUP BY 1, 2),
-         |tsum AS (SELECT event_type, dow,
-         |           SUM(t * (t - 1) * (2 * t + 5)) AS tsum
-         |         FROM (SELECT event_type, dow, x, COUNT(*) AS t
-         |               FROM daily GROUP BY 1, 2, 3) GROUP BY 1, 2),
-         |vv AS (SELECT n.event_type,
-         |         SUM(n.nw * (n.nw - 1) * (2 * n.nw + 5) - t.tsum) AS vsum,
-         |         SUM(n.nw) AS n_days
-         |       FROM nw n JOIN tsum t ON n.event_type = t.event_type AND n.dow = t.dow
-         |       GROUP BY 1)
-         |SELECT s.event_type, CAST(n_days AS BIGINT) AS n_days,
-         |  CAST(s_stat AS BIGINT) AS s_stat,
-         |  FLOOR((CASE WHEN s_stat > 0
-         |           THEN CAST(s_stat - 1 AS DOUBLE) / sqrt(CAST(vsum AS DOUBLE) / 18.0)
-         |         WHEN s_stat < 0
-         |           THEN CAST(s_stat + 1 AS DOUBLE) / sqrt(CAST(vsum AS DOUBLE) / 18.0)
-         |         ELSE 0.0 END) * 1e9 + 0.5) / 1e9 AS z
-         |FROM sp s JOIN vv USING (event_type)
-         |WHERE vsum > 0 ORDER BY event_type""".stripMargin,
-
-    "q279_pacf" ->
-      s"""${acfCte(3)},
-         |piv AS (SELECT event_type,
-         |          MAX(CASE WHEN lag = 1 THEN acf END) AS r1,
-         |          MAX(CASE WHEN lag = 2 THEN acf END) AS r2,
-         |          MAX(CASE WHEN lag = 3 THEN acf END) AS r3
-         |        FROM acfv GROUP BY 1),
-         |f AS (SELECT event_type, r1, r2, r3,
-         |        (r2 - r1 * r1) / (1.0 - r1 * r1) AS phi22
-         |      FROM piv
-         |      WHERE r1 IS NOT NULL AND r2 IS NOT NULL AND r3 IS NOT NULL
-         |        AND 1.0 - r1 * r1 <> 0.0),
-         |g AS (SELECT event_type, r1, r2, r3, phi22,
-         |        r1 - phi22 * r1 AS phi21 FROM f)
-         |SELECT event_type, r1 AS pacf1,
-         |  FLOOR(phi22 * 1e9 + 0.5) / 1e9 AS pacf2,
-         |  FLOOR((r3 - phi21 * r2 - phi22 * r1)
-         |    / (1.0 - phi21 * r1 - phi22 * r2) * 1e9 + 0.5) / 1e9 AS pacf3
-         |FROM g WHERE 1.0 - phi21 * r1 - phi22 * r2 <> 0.0
-         |ORDER BY event_type""".stripMargin,
-
-    "q280_shapley_attribution" -> {
-      val rows = shapleySkeleton
-        .map { case (c, m0, m1, w) => s"('$c', $m0, $m1, $w)" }.mkString(", ")
-      s"""$evCte,
-         |users AS (SELECT user_id,
-         |    MAX(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-         |    + 2 * MAX(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-         |    + 4 * MAX(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END)
-         |    + 8 * MAX(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS mask,
-         |    MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
-         |  FROM ev GROUP BY 1),
-         |rates AS (SELECT mask, round(CAST(SUM(conv) AS DOUBLE) / COUNT(*), 12) AS r
-         |          FROM users GROUP BY 1),
-         |sk AS (SELECT * FROM (VALUES $rows) AS t(channel, m0, m1, w))
-         |SELECT channel,
-         |  FLOOR(CAST(SUM(CAST(round(w * (COALESCE(r1.r, 0.0) - COALESCE(r0.r, 0.0)), 12)
-         |    AS DECIMAL(27,14))) AS DOUBLE) * 1e9 + 0.5) / 1e9 AS phi
-         |FROM sk LEFT JOIN rates r0 ON sk.m0 = r0.mask
-         |        LEFT JOIN rates r1 ON sk.m1 = r1.mask
-         |GROUP BY 1 ORDER BY channel""".stripMargin
-    },
-
-    "q281_caliper_matching" ->
-      s"""$evCte,
-         |users AS (SELECT user_id,
-         |    SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS x,
-         |    COALESCE(CAST(SUM(CASE WHEN event_type = 'purchase'
-         |      THEN CAST(value AS DECIMAL(18,4)) END) AS DOUBLE), 0.0) AS y,
-         |    user_id % 2 AS t
-         |  FROM ev GROUP BY 1),
-         |cand AS (SELECT tr.user_id AS tid, tr.y AS yt, c.y AS yc,
-         |           abs(tr.x - c.x) AS adist, c.x AS xc, c.user_id AS cid
-         |         FROM users tr JOIN users c
-         |           ON tr.t = 1 AND c.t = 0 AND abs(tr.x - c.x) <= 5),
-         |m AS (SELECT tid, yt, yc,
-         |        row_number() OVER (PARTITION BY tid ORDER BY adist, xc, cid) AS rn
-         |      FROM cand),
-         |d AS (SELECT yt - yc AS d FROM m WHERE rn = 1),
-         |ag AS (SELECT COUNT(*) AS n_matched,
-         |         CAST(SUM(CAST(d AS DECIMAL(18,4))) AS DOUBLE) AS sd,
-         |         CAST(SUM(CAST(round(d * d, 6) AS DECIMAL(27,8))) AS DOUBLE) AS sdd
-         |       FROM d),
-         |nt AS (SELECT COUNT(*) AS n_treated FROM users WHERE t = 1)
-         |SELECT CAST(n_treated AS BIGINT) AS n_treated,
-         |  CAST(n_matched AS BIGINT) AS n_matched,
-         |  round(sd / n_matched, 9) AS att,
-         |  FLOOR(sqrt((sdd - sd * sd / n_matched) / (n_matched - 1) / n_matched)
-         |    * 1e9 + 0.5) / 1e9 AS se
-         |FROM ag, nt WHERE n_matched > 1""".stripMargin,
-
-    "q282_ewma_chart" -> {
-      val lam = 0.2
-      val weights = (0 until 20).map(j => lam * math.pow(1 - lam, j))
-      val norm = weights.sum
-      val sfac = math.sqrt(lam / (2 - lam))
-      val ws = weights.mkString(", ")
-      s"""$evCte,
-         |daily AS (SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS x
-         |          FROM ev GROUP BY 1, 2),
-         |idx AS (SELECT event_type, day, x,
-         |          row_number() OVER (PARTITION BY event_type ORDER BY day) AS t
-         |        FROM daily),
-         |sig AS (SELECT event_type,
-         |          sqrt(CAST(SUM(CAST(x AS HUGEINT) * x) AS DOUBLE) / COUNT(*)
-         |            - (CAST(SUM(x) AS DOUBLE) / COUNT(*))
-         |              * (CAST(SUM(x) AS DOUBLE) / COUNT(*))) AS sig
-         |        FROM daily GROUP BY 1 HAVING COUNT(*) > 1),
-         |lagged AS (SELECT i.event_type, i.t, i.t - g.j AS tj,
-         |             [$ws][CAST(g.j + 1 AS INTEGER)] AS wj
-         |           FROM idx i, (SELECT unnest(generate_series(0, 19)) AS j) g
-         |           WHERE i.t >= 20),
-         |ew AS (SELECT l.event_type, l.t,
-         |         FLOOR(CAST(SUM(CAST(round(l.wj * i2.x, 9) AS DECIMAL(27,10)))
-         |             AS DOUBLE) / $norm * 1e9 + 0.5) / 1e9 AS ewma
-         |       FROM lagged l JOIN idx i2
-         |         ON i2.event_type = l.event_type AND i2.t = l.tj
-         |       GROUP BY 1, 2)
-         |SELECT e.event_type AS event_type, CAST(COUNT(*) AS BIGINT) AS n_scored,
-         |  CAST(SUM(CASE WHEN round(abs(i3.x - e.ewma), 9)
-         |         > round(3.0 * s.sig * $sfac, 9) THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_flagged,
-         |  MAX(round(abs(i3.x - e.ewma), 9)) AS max_dev
-         |FROM ew e JOIN idx i3 ON i3.event_type = e.event_type AND i3.t = e.t
-         |          JOIN sig s ON s.event_type = e.event_type
-         |GROUP BY 1 ORDER BY event_type""".stripMargin
-    },
-
-    "q283_bh_fdr" -> {
-      def mmm(p: Int) = s"(CAST(sx$p AS DOUBLE) / CAST(n$p AS DOUBLE))"
-      def vvv(p: Int) =
-        s"((CAST(sxx$p AS DOUBLE) / CAST(n$p AS DOUBLE) - ${mmm(p)} * ${mmm(p)})" +
-          s" / (CAST(n$p AS DOUBLE) - 1.0))"
-      s"""$evCte,
-         |daily AS (SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS x
-         |          FROM ev GROUP BY 1, 2),
-         |g AS (SELECT event_type,
-         |        CASE WHEN day >= DATE '2024-01-15' THEN 1 ELSE 0 END AS post,
-         |        COUNT(*) AS n, SUM(x) AS sx, SUM(CAST(x AS HUGEINT) * x) AS sxx
-         |      FROM daily GROUP BY 1, 2),
-         |wv AS (SELECT event_type,
-         |         MAX(CASE WHEN post = 0 THEN n END) AS n0,
-         |         MAX(CASE WHEN post = 0 THEN sx END) AS sx0,
-         |         MAX(CASE WHEN post = 0 THEN sxx END) AS sxx0,
-         |         MAX(CASE WHEN post = 1 THEN n END) AS n1,
-         |         MAX(CASE WHEN post = 1 THEN sx END) AS sx1,
-         |         MAX(CASE WHEN post = 1 THEN sxx END) AS sxx1
-         |       FROM g GROUP BY 1),
-         |f AS (SELECT event_type,
-         |        round((${mmm(1)} - ${mmm(0)}) / sqrt(${vvv(1)} + ${vvv(0)}), 9) AS z
-         |      FROM wv WHERE n0 > 1 AND n1 > 1),
-         |p2 AS (SELECT event_type, z,
-         |         1.0 / (1.0 + 0.2316419 * abs(z)) AS ta FROM f),
-         |p3 AS (SELECT event_type, z,
-         |         round(2.0 * (exp(abs(z) * abs(z) * -0.5) * 0.3989422804014327)
-         |           * (ta * (0.319381530 + ta * (-0.356563782 + ta * (1.781477937
-         |              + ta * (-1.821255978 + ta * 1.330274429))))), 12) AS p
-         |       FROM p2),
-         |r AS (SELECT event_type, z, p,
-         |        row_number() OVER (ORDER BY p, event_type) AS rank FROM p3),
-         |mm2 AS (SELECT COUNT(*) AS m FROM p3),
-         |ok AS (SELECT r.event_type, r.z, r.p, r.rank,
-         |         CASE WHEN p <= 0.1 * CAST(rank AS DOUBLE) / CAST(m AS DOUBLE)
-         |              THEN 1 ELSE 0 END AS ok
-         |       FROM r, mm2),
-         |km AS (SELECT MAX(CASE WHEN ok = 1 THEN rank ELSE 0 END) AS kmax FROM ok)
-         |SELECT event_type, z, p, CAST(rank AS BIGINT) AS rank,
-         |  CAST(CASE WHEN rank <= kmax THEN 1 ELSE 0 END AS BIGINT) AS rejected
-         |FROM ok, km ORDER BY event_type""".stripMargin
-    },
-
-    "q284_partial_correlation" -> {
-      def corr2(sab: String, sa: String, sb: String, saa: String, sbb: String) =
-        s"(nd * $sab - $sa * $sb) / sqrt((nd * $saa - $sa * $sa)" +
-          s" * (nd * $sbb - $sb * $sb))"
-      s"""$evCte,
-         |e2 AS (SELECT value AS y, CAST(EXTRACT(hour FROM ts) AS BIGINT) AS x,
-         |         (CAST(ts AS DATE) - DATE '1970-01-01') % 7 AS z FROM ev),
-         |st AS (SELECT COUNT(*) AS n, SUM(x) AS sx, SUM(z) AS sz,
-         |         CAST(SUM(CAST(y AS DECIMAL(18,4))) AS DOUBLE) AS sy,
-         |         SUM(x * x) AS sxx, SUM(z * z) AS szz, SUM(x * z) AS sxz,
-         |         CAST(SUM(CAST(round(y * y, 6) AS DECIMAL(27,8))) AS DOUBLE) AS syy,
-         |         CAST(SUM(CAST(round(y * x, 4) AS DECIMAL(38,6))) AS DOUBLE) AS sxy,
-         |         CAST(SUM(CAST(round(y * z, 4) AS DECIMAL(38,6))) AS DOUBLE) AS syz
-         |       FROM e2),
-         |d2 AS (SELECT n, CAST(n AS DOUBLE) AS nd, sy, syy, sxy, syz,
-         |         CAST(sx AS DOUBLE) AS sxd, CAST(sz AS DOUBLE) AS szd,
-         |         CAST(sxx AS DOUBLE) AS sxxd, CAST(szz AS DOUBLE) AS szzd,
-         |         CAST(sxz AS DOUBLE) AS sxzd
-         |       FROM st WHERE n > 2),
-         |r AS (SELECT n,
-         |        round(${corr2("sxy", "sxd", "sy", "sxxd", "syy")}, 9) AS rxy,
-         |        round(${corr2("sxzd", "sxd", "szd", "sxxd", "szzd")}, 9) AS rxz,
-         |        round(${corr2("syz", "szd", "sy", "szzd", "syy")}, 9) AS ryz
-         |      FROM d2)
-         |SELECT CAST(n AS BIGINT) AS n, rxy, rxz, ryz,
-         |  FLOOR((rxy - rxz * ryz)
-         |    / sqrt((1.0 - rxz * rxz) * (1.0 - ryz * ryz)) * 1e9 + 0.5) / 1e9
-         |    AS partial_r
-         |FROM r WHERE (1.0 - rxz * rxz) > 0 AND (1.0 - ryz * ryz) > 0""".stripMargin
-    },
-
-    "q285_moods_median" ->
-      s"""$evCte,
-         |med AS (SELECT quantile_cont(value, 0.5) AS median FROM ev),
-         |cells AS (SELECT event_type, COUNT(*) AS rt,
-         |            SUM(CASE WHEN value > median THEN 1 ELSE 0 END) AS a
-         |          FROM ev, med GROUP BY 1),
-         |tot AS (SELECT SUM(rt) AS n, SUM(a) AS ta, COUNT(*) AS k FROM cells),
-         |t2 AS (SELECT rt, a, n, k,
-         |         CAST(rt AS DOUBLE) * CAST(ta AS DOUBLE) / CAST(n AS DOUBLE) AS ehi,
-         |         CAST(rt AS DOUBLE) * CAST(n - ta AS DOUBLE) / CAST(n AS DOUBLE) AS elo
-         |       FROM cells, tot),
-         |s2 AS (SELECT n, k,
-         |         CAST(SUM(CAST(round((a - ehi) * (a - ehi) / ehi
-         |           + (rt - a - elo) * (rt - a - elo) / elo, 9)
-         |           AS DECIMAL(27,10))) AS DOUBLE) AS chi2
-         |       FROM t2 WHERE ehi > 0 AND elo > 0 GROUP BY 1, 2)
-         |SELECT CAST(n AS BIGINT) AS n, CAST(k - 1 AS BIGINT) AS dof,
-         |  round(median, 9) AS pooled_median, round(chi2, 6) AS chi2
-         |FROM s2, med""".stripMargin,
-
-    "q286_welch_t" -> {
-      def m(t: Int) = s"(sv$t / n$t)"
-      def v(t: Int) = s"((svv$t - sv$t * sv$t / n$t) / (n$t - 1) / n$t)"
-      s"""$evCte,
-         |g AS (SELECT CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS t,
-         |        COUNT(*) AS n,
-         |        CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sv,
-         |        CAST(SUM(CAST(round(value * value, 6) AS DECIMAL(27,6))) AS DOUBLE) AS svv
-         |      FROM ev WHERE event_type IN ('click', 'view') GROUP BY 1),
-         |w AS (SELECT MAX(CASE WHEN t = 1 THEN n END) AS n1,
-         |        MAX(CASE WHEN t = 1 THEN sv END) AS sv1,
-         |        MAX(CASE WHEN t = 1 THEN svv END) AS svv1,
-         |        MAX(CASE WHEN t = 0 THEN n END) AS n0,
-         |        MAX(CASE WHEN t = 0 THEN sv END) AS sv0,
-         |        MAX(CASE WHEN t = 0 THEN svv END) AS svv0
-         |      FROM g)
-         |SELECT CAST(n1 AS BIGINT) AS n_click, CAST(n0 AS BIGINT) AS n_view,
-         |  round(${m(1)} - ${m(0)}, 9) AS diff,
-         |  FLOOR((${m(1)} - ${m(0)}) / sqrt(${v(1)} + ${v(0)}) * 1e9 + 0.5) / 1e9
-         |    AS t_stat,
-         |  FLOOR((${v(1)} + ${v(0)}) * (${v(1)} + ${v(0)})
-         |    / (${v(1)} * ${v(1)} / (n1 - 1) + ${v(0)} * ${v(0)} / (n0 - 1))
-         |    * 1e6 + 0.5) / 1e6 AS dof
-         |FROM w WHERE n1 > 1 AND n0 > 1""".stripMargin
-    },
-
-    "q287_energy_distance" ->
-      s"""$evCte,
-         |e2 AS (SELECT CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS v,
-         |         CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS isx
-         |       FROM ev WHERE event_type IN ('click', 'view')),
-         |byv AS (SELECT v, SUM(isx) AS nx, SUM(1 - isx) AS ny FROM e2 GROUP BY 1),
-         |cum AS (SELECT v, nx, ny,
-         |          SUM(nx) OVER win AS cnx, SUM(ny) OVER win AS cny,
-         |          SUM(nx * v) OVER win AS csx, SUM(ny * v) OVER win AS csy
-         |        FROM byv WINDOW win AS (ORDER BY v)),
-         |tot AS (SELECT SUM(nx) AS tnx, SUM(ny) AS tny,
-         |          SUM(nx * v) AS tsx, SUM(ny * v) AS tsy FROM byv),
-         |t2 AS (SELECT nx, ny,
-         |         (v * cnx - csx) + ((tsx - csx) - v * (tnx - cnx)) AS dx,
-         |         (v * cny - csy) + ((tsy - csy) - v * (tny - cny)) AS dy
-         |       FROM cum, tot),
-         |ag AS (SELECT SUM(ny * dx) AS sxy, SUM(nx * dy) AS syx,
-         |         SUM(nx * dx) AS sxx, SUM(ny * dy) AS syy FROM t2)
-         |SELECT CAST(tnx AS BIGINT) AS n_click, CAST(tny AS BIGINT) AS n_view,
-         |  round((CAST(sxy AS DOUBLE) + CAST(syx AS DOUBLE))
-         |    / (2.0 * CAST(tnx AS DOUBLE) * CAST(tny AS DOUBLE)) / 100.0, 9) AS e_xy,
-         |  round(CAST(sxx AS DOUBLE)
-         |    / (CAST(tnx AS DOUBLE) * CAST(tnx AS DOUBLE)) / 100.0, 9) AS e_xx,
-         |  round(CAST(syy AS DOUBLE)
-         |    / (CAST(tny AS DOUBLE) * CAST(tny AS DOUBLE)) / 100.0, 9) AS e_yy,
-         |  FLOOR(sqrt(2.0 * (CAST(sxy AS DOUBLE) + CAST(syx AS DOUBLE))
-         |      / (2.0 * CAST(tnx AS DOUBLE) * CAST(tny AS DOUBLE)) / 100.0
-         |    - CAST(sxx AS DOUBLE) / (CAST(tnx AS DOUBLE) * CAST(tnx AS DOUBLE)) / 100.0
-         |    - CAST(syy AS DOUBLE) / (CAST(tny AS DOUBLE) * CAST(tny AS DOUBLE)) / 100.0)
-         |    * 1e9 + 0.5) / 1e9 AS energy_d
-         |FROM ag, tot WHERE tnx > 0 AND tny > 0""".stripMargin,
-
-    "q288_logrank" ->
-      s"""$evCte,
-         |v AS (SELECT user_id, MIN(ts) AS v_ts FROM ev
-         |      WHERE event_type = 'view' GROUP BY 1),
-         |p AS (SELECT user_id, ts AS p_ts FROM ev WHERE event_type = 'purchase'),
-         |fp AS (SELECT v.user_id, v.v_ts, MIN(p.p_ts) AS p_ts
-         |       FROM v JOIN p ON v.user_id = p.user_id AND p.p_ts >= v.v_ts
-         |       GROUP BY 1, 2),
-         |delays AS (SELECT v.user_id, v.user_id % 2 AS arm,
-         |             CAST((epoch_us(fp.p_ts) // 1000000
-         |               - epoch_us(v.v_ts) // 1000000) // 3600 AS BIGINT) AS delay_h
-         |           FROM v LEFT JOIN fp ON v.user_id = fp.user_id
-         |             AND v.v_ts = fp.v_ts),
-         |nt AS (SELECT COUNT(*) AS nn, SUM(arm) AS n1 FROM delays),
-         |grid AS (SELECT delay_h AS t, COUNT(*) AS d, SUM(arm) AS d1
-         |         FROM delays WHERE delay_h IS NOT NULL AND delay_h < 168
-         |         GROUP BY 1),
-         |cum AS (SELECT t, d, d1, nn, n1,
-         |          SUM(d) OVER w AS cumd, SUM(d1) OVER w AS cumd1
-         |        FROM grid, nt
-         |        WINDOW w AS (ORDER BY t
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-         |terms AS (SELECT d, d1,
-         |            nn - cumd + d AS nr, n1 - cumd1 + d1 AS nr1,
-         |            CAST(n1 - cumd1 + d1 AS DOUBLE) / CAST(nn - cumd + d AS DOUBLE)
-         |              AS frac
-         |          FROM cum WHERE nn - cumd + d > 1),
-         |t2 AS (SELECT d1,
-         |         round(CAST(d AS DOUBLE) * frac, 12) AS et,
-         |         round(CAST(d AS DOUBLE) * frac * (1.0 - frac)
-         |           * CAST(nr - d AS DOUBLE) / CAST(nr - 1 AS DOUBLE), 12) AS vt
-         |       FROM terms),
-         |ag AS (SELECT CAST(SUM(d1) AS BIGINT) AS o1,
-         |         CAST(SUM(CAST(et AS DECIMAL(27,14))) AS DOUBLE) AS e1,
-         |         CAST(SUM(CAST(vt AS DECIMAL(27,14))) AS DOUBLE) AS v1
-         |       FROM t2)
-         |SELECT o1, round(e1, 6) AS e1,
-         |  FLOOR((o1 - e1) / sqrt(v1) * 1e9 + 0.5) / 1e9 AS z
-         |FROM ag WHERE v1 > 0""".stripMargin,
-
-    "q289_kruskal_wallis" ->
-      s"""$evCte,
-         |cells AS (SELECT value, event_type, COUNT(*) AS ng
-         |          FROM ev GROUP BY 1, 2),
-         |byv AS (SELECT value, SUM(ng) AS nv FROM cells GROUP BY 1),
-         |cum AS (SELECT value, nv, SUM(nv) OVER (ORDER BY value) AS gcum FROM byv),
-         |r2 AS (SELECT c.event_type, SUM(c.ng) AS n_g,
-         |         SUM(CAST(c.ng AS HUGEINT)
-         |           * (2 * (m.gcum - m.nv) + m.nv + 1)) AS r2_g
-         |       FROM cells c JOIN cum m ON c.value = m.value GROUP BY 1),
-         |tie AS (SELECT SUM(CAST(nv AS HUGEINT) * nv * nv - nv) AS tie,
-         |          SUM(nv) AS nn, COUNT(*) AS n_distinct FROM byv),
-         |h AS (SELECT nn, tie, COUNT(*) AS k,
-         |        CAST(SUM(CAST(round(CAST(n_g AS DOUBLE)
-         |          * (CAST(r2_g AS DOUBLE) / 2.0 / CAST(n_g AS DOUBLE)
-         |             - (CAST(nn AS DOUBLE) + 1.0) / 2.0)
-         |          * (CAST(r2_g AS DOUBLE) / 2.0 / CAST(n_g AS DOUBLE)
-         |             - (CAST(nn AS DOUBLE) + 1.0) / 2.0), 6)
-         |          AS DECIMAL(27,8))) AS DOUBLE) AS ssb
-         |      FROM r2, tie GROUP BY 1, 2),
-         |f AS (SELECT nn, tie, k,
-         |        12.0 * ssb / (CAST(nn AS DOUBLE) * (CAST(nn AS DOUBLE) + 1.0)) AS hstat,
-         |        1.0 - CAST(tie AS DOUBLE)
-         |          / (CAST(nn AS DOUBLE) * CAST(nn AS DOUBLE) * CAST(nn AS DOUBLE)
-         |             - CAST(nn AS DOUBLE)) AS cf
-         |      FROM h WHERE nn > 1)
-         |SELECT CAST(nn AS BIGINT) AS n, CAST(k - 1 AS BIGINT) AS dof,
-         |  round(hstat, 9) AS h,
-         |  FLOOR(hstat / cf * 1e9 + 0.5) / 1e9 AS h_tie_corrected
-         |FROM f WHERE cf > 0""".stripMargin,
-
-    "q290_anova_f" ->
-      s"""$evCte,
-         |g AS (SELECT event_type, COUNT(*) AS n,
-         |        CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sv,
-         |        CAST(SUM(CAST(round(value * value, 6) AS DECIMAL(27,6))) AS DOUBLE)
-         |          AS svv
-         |      FROM ev GROUP BY 1),
-         |tot AS (SELECT SUM(n) AS nn, COUNT(*) AS k,
-         |          CAST(SUM(CAST(sv AS DECIMAL(27,6))) AS DOUBLE) AS st FROM g),
-         |t2 AS (SELECT nn, k, st,
-         |         CAST(SUM(CAST(round(sv * sv / CAST(n AS DOUBLE), 6)
-         |           AS DECIMAL(27,8))) AS DOUBLE) AS sb,
-         |         CAST(SUM(CAST(round(svv - sv * sv / CAST(n AS DOUBLE), 6)
-         |           AS DECIMAL(27,8))) AS DOUBLE) AS sw
-         |       FROM g, tot GROUP BY 1, 2, 3),
-         |f AS (SELECT nn, k, sw,
-         |        sb - st * st / CAST(nn AS DOUBLE) AS ssb
-         |      FROM t2 WHERE k > 1 AND nn > k),
-         |f2 AS (SELECT nn, k, sw, ssb,
-         |         ssb / CAST(k - 1 AS DOUBLE) AS msb,
-         |         sw / CAST(nn - k AS DOUBLE) AS msw
-         |       FROM f)
-         |SELECT CAST(nn AS BIGINT) AS n, CAST(k - 1 AS BIGINT) AS df_between,
-         |  CAST(nn - k AS BIGINT) AS df_within,
-         |  FLOOR(msb / msw * 1e9 + 0.5) / 1e9 AS f_stat,
-         |  FLOOR(ssb / (ssb + sw) * 1e9 + 0.5) / 1e9 AS eta_sq
-         |FROM f2 WHERE msw > 0""".stripMargin,
-
-    "q291_brown_forsythe" ->
-      s"""$evCte,
-         |med AS (SELECT event_type, quantile_cont(value, 0.5) AS median
-         |        FROM ev GROUP BY 1),
-         |z AS (SELECT ev.event_type,
-         |        round(abs(value - median), 4) AS z
-         |      FROM ev JOIN med ON ev.event_type = med.event_type),
-         |g AS (SELECT event_type, COUNT(*) AS n,
-         |        CAST(SUM(CAST(z AS DECIMAL(18,4))) AS DOUBLE) AS sv,
-         |        CAST(SUM(CAST(round(z * z, 6) AS DECIMAL(27,6))) AS DOUBLE) AS svv
-         |      FROM z GROUP BY 1),
-         |tot AS (SELECT SUM(n) AS nn, COUNT(*) AS k,
-         |          CAST(SUM(CAST(sv AS DECIMAL(27,6))) AS DOUBLE) AS st FROM g),
-         |t2 AS (SELECT nn, k, st,
-         |         CAST(SUM(CAST(round(sv * sv / CAST(n AS DOUBLE), 6)
-         |           AS DECIMAL(27,8))) AS DOUBLE) AS sb,
-         |         CAST(SUM(CAST(round(svv - sv * sv / CAST(n AS DOUBLE), 6)
-         |           AS DECIMAL(27,8))) AS DOUBLE) AS sw
-         |       FROM g, tot GROUP BY 1, 2, 3),
-         |f AS (SELECT nn, k, sw,
-         |        sb - st * st / CAST(nn AS DOUBLE) AS ssb
-         |      FROM t2 WHERE k > 1 AND nn > k),
-         |f2 AS (SELECT nn, k, ssb,
-         |         sw / CAST(nn - k AS DOUBLE) AS msw FROM f)
-         |SELECT CAST(nn AS BIGINT) AS n, CAST(k - 1 AS BIGINT) AS df_between,
-         |  CAST(nn - k AS BIGINT) AS df_within,
-         |  FLOOR(ssb / CAST(k - 1 AS DOUBLE) / msw * 1e9 + 0.5) / 1e9 AS f_stat
-         |FROM f2 WHERE msw > 0""".stripMargin,
-
-    "q292_cliffs_delta" ->
-      s"""$evCte,
-         |e2 AS (SELECT CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS v,
-         |         CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS isx
-         |       FROM ev WHERE event_type IN ('click', 'view')),
-         |byv AS (SELECT v, SUM(isx) AS nx, SUM(1 - isx) AS ny FROM e2 GROUP BY 1),
-         |cum AS (SELECT v, nx, ny,
-         |          SUM(nx) OVER win AS cnx, SUM(ny) OVER win AS cny
-         |        FROM byv WINDOW win AS (ORDER BY v)),
-         |tot AS (SELECT SUM(nx) AS tnx, SUM(ny) AS tny FROM byv),
-         |ag AS (SELECT SUM(nx * (cny - ny)) AS n_gt,
-         |         SUM(nx * (tny - cny)) AS n_lt,
-         |         MAX(tnx) AS tnx, MAX(tny) AS tny
-         |       FROM cum, tot)
-         |SELECT CAST(tnx AS BIGINT) AS n_click, CAST(tny AS BIGINT) AS n_view,
-         |  CAST(n_gt AS BIGINT) AS n_gt, CAST(n_lt AS BIGINT) AS n_lt,
-         |  FLOOR((CAST(n_gt AS DOUBLE) - CAST(n_lt AS DOUBLE))
-         |    / (CAST(tnx AS DOUBLE) * CAST(tny AS DOUBLE)) * 1e9 + 0.5) / 1e9 AS delta
-         |FROM ag WHERE tnx > 0 AND tny > 0""".stripMargin,
-
-    "q293_centroid_drift" ->
-      """WITH e AS (SELECT label, g.i AS i, CAST(e2.embedding[g.i] AS DOUBLE) AS x
-        |           FROM embeddings e2,
-        |           LATERAL (SELECT unnest(generate_series(1, len(e2.embedding))) AS i) g),
-        |perl AS (SELECT label, i,
-        |           floor(CAST(SUM(CAST(x AS DECIMAL(27,12))) AS DOUBLE) / COUNT(*)
-        |             * 1e9 + 0.5) / 1e9 AS cl
-        |         FROM e GROUP BY 1, 2),
-        |gcent AS (SELECT i,
-        |           floor(CAST(SUM(CAST(x AS DECIMAL(27,12))) AS DOUBLE) / COUNT(*)
-        |             * 1e9 + 0.5) / 1e9 AS cg
-        |         FROM e GROUP BY 1),
-        |ag AS (SELECT label,
-        |         CAST(SUM(CAST(round(cl * cg, 12) AS DECIMAL(27,14))) AS DOUBLE) AS dot,
-        |         CAST(SUM(CAST(round(cl * cl, 12) AS DECIMAL(27,14))) AS DOUBLE) AS nl,
-        |         CAST(SUM(CAST(round(cg * cg, 12) AS DECIMAL(27,14))) AS DOUBLE) AS ng
-        |       FROM perl JOIN gcent USING (i) GROUP BY 1)
-        |SELECT label, FLOOR(dot / (sqrt(nl) * sqrt(ng)) * 1e9 + 0.5) / 1e9
-        |  AS cos_to_global
-        |FROM ag WHERE nl > 0 AND ng > 0 ORDER BY label""".stripMargin,
-
-    "q294_median_ci" ->
-      s"""$evCte,
-         |ns AS (SELECT event_type, COUNT(*) AS n FROM ev GROUP BY 1
-         |       HAVING COUNT(*) >= 16),
-         |ks AS (SELECT event_type, n,
-         |         GREATEST(1, CAST(FLOOR((CAST(n AS DOUBLE)
-         |           - 1.96 * sqrt(CAST(n AS DOUBLE))) / 2.0) AS BIGINT)) AS k_lo
-         |       FROM ns),
-         |ks2 AS (SELECT event_type, n, k_lo, n + 1 - k_lo AS k_hi FROM ks),
-         |rk AS (SELECT event_type, value,
-         |         row_number() OVER (PARTITION BY event_type ORDER BY value) AS r
-         |       FROM ev)
-         |SELECT k.event_type, CAST(k.n AS BIGINT) AS n,
-         |  CAST(k.k_lo AS BIGINT) AS k_lo, CAST(k.k_hi AS BIGINT) AS k_hi,
-         |  lo.value AS ci_lo, hi.value AS ci_hi
-         |FROM ks2 k
-         |JOIN rk lo ON lo.event_type = k.event_type AND lo.r = k.k_lo
-         |JOIN rk hi ON hi.event_type = k.event_type AND hi.r = k.k_hi
-         |ORDER BY k.event_type""".stripMargin,
-
-    "q295_brier_score" ->
-      """WITH f AS (SELECT doc_id, lang,
-        |  least(CAST(len(regexp_extract_all(text, '\S+')) AS DOUBLE) / 100.0, 1.0) AS f_tok,
-        |  CASE WHEN len(regexp_extract_all(text, '\S+')) = 0 THEN 0.0
-        |       ELSE CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|to|a|in|is|that|it|for)\b')) AS DOUBLE)
-        |            / len(regexp_extract_all(text, '\S+')) END AS f_stop,
-        |  CASE WHEN length(text) = 0 THEN 0.0
-        |       ELSE CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / length(text) END AS f_alpha,
-        |  CASE WHEN length(text) = 0 THEN 0.0
-        |       ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE) / length(text) END AS f_punct
-        |FROM documents),
-        |z AS (SELECT doc_id, lang,
-        |        round(1.0 / (1.0 + exp(-(f_tok * 1.2 + f_stop * 2.0 + f_alpha * 1.5 + f_punct * (-3.0) + (-1.0)))), 9) AS p
-        |      FROM f),
-        |b AS (SELECT p, CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
-        |        CAST(least(floor(p * 10), 9) AS BIGINT) AS bucket FROM z),
-        |t AS (SELECT COUNT(*) AS n, CAST(SUM(y) AS DOUBLE) / COUNT(*) AS ybar,
-        |        CAST(SUM(CAST(round((p - y) * (p - y), 9) AS DECIMAL(27,10)))
-        |          AS DOUBLE) AS sq
-        |      FROM b),
-        |bb AS (SELECT bucket, COUNT(*) AS nb,
-        |         CAST(SUM(CAST(p AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*) AS pbar,
-        |         CAST(SUM(y) AS DOUBLE) / COUNT(*) AS ybarb
-        |       FROM b GROUP BY 1),
-        |comp AS (SELECT
-        |           CAST(SUM(CAST(round(CAST(nb AS DOUBLE) * (pbar - ybarb)
-        |             * (pbar - ybarb), 9) AS DECIMAL(27,10))) AS DOUBLE) AS reln,
-        |           CAST(SUM(CAST(round(CAST(nb AS DOUBLE) * (ybarb - ybar)
-        |             * (ybarb - ybar), 9) AS DECIMAL(27,10))) AS DOUBLE) AS resn
-        |         FROM bb, t)
-        |SELECT CAST(n AS BIGINT) AS n,
-        |  round(sq / n, 9) AS brier,
-        |  round(reln / n, 9) AS reliability,
-        |  round(resn / n, 9) AS resolution,
-        |  round(ybar * (1.0 - ybar), 9) AS uncertainty
-        |FROM comp, t WHERE n > 0""".stripMargin,
-
-    "q296_gini_split" ->
-      s"""$qualityDocCte,
-         |d2 AS (SELECT round(score, 9) AS sc,
-         |         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y FROM d),
-         |byv AS (SELECT sc, COUNT(*) AS n, SUM(y) AS p FROM d2 GROUP BY 1),
-         |cum AS (SELECT sc, n, p,
-         |          SUM(n) OVER win AS cn, SUM(p) OVER win AS cp
-         |        FROM byv WINDOW win AS (ORDER BY sc)),
-         |tot AS (SELECT SUM(n) AS tn, SUM(p) AS tp FROM byv),
-         |g AS (SELECT sc, cn, tn,
-         |        CAST(cn AS DOUBLE) AS nl, CAST(tn - cn AS DOUBLE) AS nr,
-         |        CAST(cp AS DOUBLE) / CAST(cn AS DOUBLE) AS pl,
-         |        CAST(tp - cp AS DOUBLE) / CAST(tn - cn AS DOUBLE) AS pr2,
-         |        CAST(tp AS DOUBLE) / CAST(tn AS DOUBLE) AS p0
-         |      FROM cum, tot WHERE cn < tn AND tn > 0),
-         |h AS (SELECT sc, cn, tn, p0,
-         |        (nl * (1.0 - pl * pl - (1.0 - pl) * (1.0 - pl))
-         |         + nr * (1.0 - pr2 * pr2 - (1.0 - pr2) * (1.0 - pr2)))
-         |          / CAST(tn AS DOUBLE) AS imp_raw
-         |      FROM g),
-         |h2 AS (SELECT sc, cn, tn, p0, imp_raw, round(imp_raw, 9) AS imp FROM h)
-         |SELECT sc AS threshold, CAST(cn AS BIGINT) AS n_left,
-         |  CAST(tn - cn AS BIGINT) AS n_right, imp AS impurity,
-         |  round(1.0 - p0 * p0 - (1.0 - p0) * (1.0 - p0), 9) AS gini_parent,
-         |  round((1.0 - p0 * p0 - (1.0 - p0) * (1.0 - p0)) - imp_raw, 9) AS gain
-         |FROM h2 ORDER BY imp, sc LIMIT 1""".stripMargin,
-
-    "q297_page_hinkley" ->
-      s"""$evCte,
-         |daily AS (SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS x
-         |          FROM ev GROUP BY 1, 2),
-         |sig AS (SELECT event_type, CAST(SUM(x) AS DOUBLE) / COUNT(*) AS m,
-         |          sqrt(CAST(SUM(CAST(x AS HUGEINT) * x) AS DOUBLE) / COUNT(*)
-         |            - (CAST(SUM(x) AS DOUBLE) / COUNT(*))
-         |              * (CAST(SUM(x) AS DOUBLE) / COUNT(*))) AS sig
-         |        FROM daily GROUP BY 1 HAVING COUNT(*) > 1),
-         |t1 AS (SELECT d.event_type, d.day, d.x, s.m, s.sig,
-         |         row_number() OVER wpt AS i, SUM(d.x) OVER wcum AS si
-         |       FROM daily d JOIN sig s USING (event_type)
-         |       WINDOW wpt AS (PARTITION BY d.event_type ORDER BY d.day),
-         |         wcum AS (PARTITION BY d.event_type ORDER BY d.day
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-         |t2 AS (SELECT event_type, day, sig,
-         |         round(CAST(x AS DOUBLE) - CAST(si AS DOUBLE) / CAST(i AS DOUBLE)
-         |           - 0.01 * m, 9) AS term
-         |       FROM t1),
-         |t3 AS (SELECT event_type, day, sig,
-         |         SUM(CAST(term AS DECIMAL(27,10))) OVER wcum AS mt
-         |       FROM t2 WINDOW wcum AS (PARTITION BY event_type ORDER BY day
-         |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-         |t4 AS (SELECT event_type, day, sig,
-         |         CAST(mt - MIN(mt) OVER wcum AS DOUBLE) AS exc
-         |       FROM t3 WINDOW wcum AS (PARTITION BY event_type ORDER BY day
-         |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-         |t5 AS (SELECT event_type, day, exc, round(5.0 * sig, 9) AS h FROM t4)
-         |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_days,
-         |  CAST(SUM(CASE WHEN exc > h THEN 1 ELSE 0 END) AS BIGINT) AS n_alarms,
-         |  MIN(CASE WHEN exc > h THEN day END) AS first_alarm_day,
-         |  FLOOR(MAX(exc) * 1e9 + 0.5) / 1e9 AS max_excursion
-         |FROM t5 GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    "q298_tokenizer_fertility" ->
-      """WITH d AS (SELECT source,
-        |    len(regexp_extract_all(text, '\S+')) AS ws,
-        |    len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]|[^a-zA-Z0-9\s]')) AS bpe
-        |  FROM documents),
-        |g AS (SELECT source, COUNT(*) AS n_docs, SUM(ws) AS ws_tokens,
-        |        SUM(bpe) AS bpe_tokens,
-        |        SUM(CASE WHEN bpe > 2 * ws THEN 1 ELSE 0 END) AS nh
-        |      FROM d WHERE ws > 0 GROUP BY 1)
-        |SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
-        |  CAST(ws_tokens AS BIGINT) AS ws_tokens,
-        |  CAST(bpe_tokens AS BIGINT) AS bpe_tokens,
-        |  FLOOR(CAST(bpe_tokens AS DOUBLE) / CAST(ws_tokens AS DOUBLE)
-        |    * 1e9 + 0.5) / 1e9 AS fertility,
-        |  FLOOR(CAST(nh AS DOUBLE) / CAST(n_docs AS DOUBLE) * 1e9 + 0.5) / 1e9
-        |    AS high_fertility_frac
-        |FROM g WHERE ws_tokens > 0 ORDER BY source""".stripMargin,
-
-    "q299_burst_detection" ->
-      """WITH RECURSIVE ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |daily AS (SELECT CAST(ts AS DATE) AS day, COUNT(*) AS x FROM ev GROUP BY 1),
-        |idx AS (SELECT day, x, row_number() OVER (ORDER BY day) AS t FROM daily),
-        |st AS (SELECT COUNT(*) AS tt, CAST(SUM(x) AS DOUBLE) / COUNT(*) AS lam0
-        |       FROM daily),
-        |dp AS (
-        |  SELECT i.t, i.day,
-        |    FLOOR((s.lam0 - i.x * ln(s.lam0)) * 1e12 + 0.5) / 1e12 AS c0,
-        |    FLOOR((2.0 * s.lam0 - i.x * ln(2.0 * s.lam0) + 1.0) * 1e12 + 0.5) / 1e12
-        |      AS c1
-        |  FROM idx i, st s WHERE i.t = 1
-        |  UNION ALL
-        |  SELECT i.t, i.day,
-        |    FLOOR((least(d.c0, d.c1) + (s.lam0 - i.x * ln(s.lam0)))
-        |      * 1e12 + 0.5) / 1e12,
-        |    FLOOR((least(d.c1, d.c0 + 1.0)
-        |      + (2.0 * s.lam0 - i.x * ln(2.0 * s.lam0))) * 1e12 + 0.5) / 1e12
-        |  FROM dp d JOIN idx i ON i.t = d.t + 1, st s
-        |)
-        |SELECT CAST((SELECT COUNT(*) FROM dp) AS BIGINT) AS n_days,
-        |  CAST((SELECT SUM(CASE WHEN c1 < c0 THEN 1 ELSE 0 END) FROM dp)
-        |    AS BIGINT) AS n_burst_days,
-        |  (SELECT FLOOR(least(c0, c1) * 1e9 + 0.5) / 1e9 FROM dp
-        |   WHERE t = (SELECT MAX(t) FROM dp)) AS min_cost,
-        |  (SELECT MIN(day) FROM dp WHERE c1 < c0) AS first_burst_day""".stripMargin,
-
-    "q300_ngram_novelty" ->
-      """WITH w AS (SELECT doc_id, source, list_filter(string_split_regex(
-        |        regexp_replace(lower(text), '[^\p{L}\p{N}\s]', '', 'g'), '\s+'),
-        |        x -> len(x) > 0) AS words FROM documents),
-        |sh0 AS (SELECT doc_id, source, unnest(list_distinct(
-        |         CASE WHEN len(words) = 0 THEN []
-        |              ELSE [array_to_string(words[i:i+2], ' ')
-        |                    FOR i IN generate_series(1, greatest(len(words) - 2, 1))] END)) AS sh
-        |        FROM w),
-        |fo AS (SELECT sh, MIN(doc_id) AS first_doc FROM sh0 GROUP BY 1),
-        |pd AS (SELECT s.doc_id, s.source, COUNT(*) AS n_grams,
-        |         SUM(CASE WHEN s.doc_id = f.first_doc THEN 1 ELSE 0 END) AS n_novel
-        |       FROM sh0 s JOIN fo f USING (sh) GROUP BY 1, 2)
-        |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(n_grams) AS BIGINT) AS total_grams,
-        |  CAST(SUM(n_novel) AS BIGINT) AS novel_grams,
-        |  round(CAST(SUM(n_novel) AS DOUBLE) / CAST(SUM(n_grams) AS DOUBLE), 9)
-        |    AS novelty,
-        |  round(CAST(SUM(CAST(round(CAST(n_novel AS DOUBLE) / n_grams, 9)
-        |      AS DECIMAL(27,10))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 9)
-        |    AS mean_doc_novelty
-        |FROM pd GROUP BY 1 ORDER BY source""".stripMargin,
-
-    "q301_filter_funnel" ->
-      """WITH f AS (SELECT doc_id, n_chars, md5(text) AS h,
-        |    len(regexp_extract_all(text, '\S+')) AS ws,
-        |    len(regexp_extract_all(text, '\S*[A-Za-z]\S*')) AS aw,
-        |    len(regexp_extract_all(lower(text),
-        |        '\b(the|and|of|to|a|in|is|that|it|for)\b')) AS sw
-        |  FROM documents),
-        |g AS (SELECT doc_id, h,
-        |        (n_chars >= 200) AS s1,
-        |        (n_chars >= 200 AND ws > 0 AND aw * 5 >= ws * 4) AS s2,
-        |        (n_chars >= 200 AND ws > 0 AND aw * 5 >= ws * 4
-        |          AND sw * 100 >= ws * 3) AS s3
-        |      FROM f),
-        |kf AS (SELECT h, MIN(doc_id) AS keep_id FROM g WHERE s3 GROUP BY 1),
-        |wd AS (SELECT COUNT(*) AS n0,
-        |         SUM(CASE WHEN s1 THEN 1 ELSE 0 END) AS n1,
-        |         SUM(CASE WHEN s2 THEN 1 ELSE 0 END) AS n2,
-        |         SUM(CASE WHEN s3 THEN 1 ELSE 0 END) AS n3,
-        |         SUM(CASE WHEN s3 AND g.doc_id = kf.keep_id THEN 1 ELSE 0 END) AS n4
-        |       FROM g LEFT JOIN kf ON g.h = kf.h),
-        |st AS (SELECT 1 AS stage, 'min_length' AS gate, n0 AS n_in, n1 AS n_out, n0 FROM wd
-        |       UNION ALL SELECT 2, 'alpha_words', n1, n2, n0 FROM wd
-        |       UNION ALL SELECT 3, 'stopwords', n2, n3, n0 FROM wd
-        |       UNION ALL SELECT 4, 'exact_dedup', n3, n4, n0 FROM wd)
-        |SELECT CAST(stage AS INT) AS stage, gate,
-        |  CAST(n_in AS BIGINT) AS n_in, CAST(n_out AS BIGINT) AS n_out,
-        |  round(1.0 - CAST(n_out AS DOUBLE) / CAST(n_in AS DOUBLE), 9) AS drop_frac,
-        |  round(CAST(n_out AS DOUBLE) / CAST(n0 AS DOUBLE), 9) AS cum_survival
-        |FROM st ORDER BY stage""".stripMargin,
-
-    "q302_context_overflow" ->
-      """WITH d AS (SELECT len(regexp_extract_all(text, '\S+')) AS ws
-        |  FROM documents),
-        |t AS (SELECT COUNT(*) AS n, SUM(ws) AS tot FROM d),
-        |k AS (SELECT unnest([256, 512, 1024, 2048, 4096]) AS k)
-        |SELECT CAST(k.k AS INT) AS k,
-        |  CAST(SUM(CASE WHEN d.ws > k.k THEN 1 ELSE 0 END) AS BIGINT) AS n_docs_over,
-        |  round(CAST(SUM(CASE WHEN d.ws > k.k THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / CAST(t.n AS DOUBLE), 9) AS frac_docs_over,
-        |  CAST(SUM(CASE WHEN d.ws > k.k THEN d.ws - k.k ELSE 0 END) AS BIGINT)
-        |    AS tokens_lost,
-        |  round(CAST(SUM(CASE WHEN d.ws > k.k THEN d.ws - k.k ELSE 0 END) AS DOUBLE)
-        |    / CAST(t.tot AS DOUBLE), 9) AS frac_tokens_lost
-        |FROM d CROSS JOIN k CROSS JOIN t
-        |GROUP BY k.k, t.n, t.tot ORDER BY k""".stripMargin,
-
-    "q303_cross_source_dups" ->
-      """WITH hs AS (SELECT md5(text) AS h, source, COUNT(*) AS cnt
-        |  FROM documents GROUP BY 1, 2),
-        |dup AS (SELECT h FROM hs GROUP BY h HAVING SUM(cnt) > 1),
-        |d AS (SELECT hs.* FROM hs JOIN dup USING (h)),
-        |p AS (SELECT a.h, a.source AS src_a, b.source AS src_b,
-        |        CASE WHEN a.source = b.source THEN a.cnt * (a.cnt - 1) // 2
-        |             ELSE a.cnt * b.cnt END AS pairs
-        |      FROM d a JOIN d b ON a.h = b.h AND a.source <= b.source)
-        |SELECT src_a, src_b, CAST(COUNT(DISTINCT h) AS BIGINT) AS n_dup_groups,
-        |  CAST(SUM(pairs) AS BIGINT) AS n_doc_pairs
-        |FROM p WHERE pairs > 0 GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q304_ols_two_factor" ->
-      """WITH ev AS (SELECT
-        |    CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) AS x1,
-        |    CAST(dayofweek(CAST(ts AS TIMESTAMP)) + 1 AS BIGINT) AS x2,
-        |    CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS yc
-        |  FROM events),
-        |m AS (SELECT COUNT(*) AS n,
-        |    SUM(CAST(x1 AS HUGEINT)) AS sx1, SUM(CAST(x2 AS HUGEINT)) AS sx2,
-        |    SUM(CAST(yc AS HUGEINT)) AS sy,
-        |    SUM(CAST(x1 * x1 AS HUGEINT)) AS sx1x1,
-        |    SUM(CAST(x1 * x2 AS HUGEINT)) AS sx1x2,
-        |    SUM(CAST(x2 * x2 AS HUGEINT)) AS sx2x2,
-        |    SUM(CAST(x1 * yc AS HUGEINT)) AS sx1y,
-        |    SUM(CAST(x2 * yc AS HUGEINT)) AS sx2y,
-        |    SUM(CAST(yc AS HUGEINT) * CAST(yc AS HUGEINT)) AS syy
-        |  FROM ev),
-        |c AS (SELECT n,
-        |    CAST(n AS DOUBLE) AS nd,
-        |    CAST(sx1 AS DOUBLE) AS dx1, CAST(sx2 AS DOUBLE) AS dx2,
-        |    CAST(sy AS DOUBLE) AS dy,
-        |    CAST(n AS DOUBLE) * CAST(sx1x1 AS DOUBLE)
-        |      - CAST(sx1 AS DOUBLE) * CAST(sx1 AS DOUBLE) AS s11,
-        |    CAST(n AS DOUBLE) * CAST(sx1x2 AS DOUBLE)
-        |      - CAST(sx1 AS DOUBLE) * CAST(sx2 AS DOUBLE) AS s12,
-        |    CAST(n AS DOUBLE) * CAST(sx2x2 AS DOUBLE)
-        |      - CAST(sx2 AS DOUBLE) * CAST(sx2 AS DOUBLE) AS s22,
-        |    CAST(n AS DOUBLE) * CAST(sx1y AS DOUBLE)
-        |      - CAST(sx1 AS DOUBLE) * CAST(sy AS DOUBLE) AS s1y,
-        |    CAST(n AS DOUBLE) * CAST(sx2y AS DOUBLE)
-        |      - CAST(sx2 AS DOUBLE) * CAST(sy AS DOUBLE) AS s2y,
-        |    CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS sst
-        |  FROM m),
-        |sol AS (SELECT n, nd, dx1, dx2, dy, s1y, s2y, sst,
-        |    (s1y * s22 - s2y * s12) / (s11 * s22 - s12 * s12) AS b1c,
-        |    (s2y * s11 - s1y * s12) / (s11 * s22 - s12 * s12) AS b2c
-        |  FROM c)
-        |SELECT CAST(n AS BIGINT) AS n,
-        |  round((dy - b1c * dx1 - b2c * dx2) / nd / 100.0, 9) AS intercept,
-        |  round(b1c / 100.0, 9) AS beta_hour,
-        |  round(b2c / 100.0, 9) AS beta_dow,
-        |  round((b1c * s1y + b2c * s2y) / sst, 9) AS r2
-        |FROM sol""".stripMargin,
-
-    "q305_huber_mean" ->
-      """WITH ev AS (SELECT event_type, value FROM events),
-        |b0 AS (SELECT event_type, COUNT(*) AS n,
-        |         SUM(CAST(FLOOR(value * 1e6 + 0.5) AS HUGEINT)) AS s6,
-        |         SUM(CAST(FLOOR(value * 1e3 + 0.5) AS HUGEINT)
-        |           * CAST(FLOOR(value * 1e3 + 0.5) AS HUGEINT)) AS sqq
-        |       FROM ev GROUP BY 1),
-        |b AS (SELECT event_type, n,
-        |        round(CAST(s6 AS DOUBLE) / 1e6 / n, 9) AS mu0,
-        |        round(sqrt(CAST(sqq AS DOUBLE) / 1e6 / n
-        |          - (CAST(s6 AS DOUBLE) / 1e6 / n)
-        |            * (CAST(s6 AS DOUBLE) / 1e6 / n)), 9) AS sig
-        |      FROM b0),
-        |bc AS (SELECT *, round(1.345 * sig, 9) AS cc FROM b),
-        |i1 AS (SELECT e.event_type,
-        |         SUM(CAST(round((CASE WHEN abs(e.value - c.mu0) <= c.cc THEN 1.0
-        |               ELSE c.cc / abs(e.value - c.mu0) END) * e.value, 9)
-        |           AS DECIMAL(27,10))) AS swx,
-        |         SUM(CAST(round(CASE WHEN abs(e.value - c.mu0) <= c.cc THEN 1.0
-        |               ELSE c.cc / abs(e.value - c.mu0) END, 9)
-        |           AS DECIMAL(27,10))) AS sw
-        |       FROM ev e JOIN bc c USING (event_type) GROUP BY 1),
-        |m1 AS (SELECT c.*, round(CAST(swx AS DOUBLE) / CAST(sw AS DOUBLE), 9) AS mu1
-        |       FROM bc c JOIN i1 USING (event_type)),
-        |i2 AS (SELECT e.event_type,
-        |         SUM(CAST(round((CASE WHEN abs(e.value - c.mu1) <= c.cc THEN 1.0
-        |               ELSE c.cc / abs(e.value - c.mu1) END) * e.value, 9)
-        |           AS DECIMAL(27,10))) AS swx,
-        |         SUM(CAST(round(CASE WHEN abs(e.value - c.mu1) <= c.cc THEN 1.0
-        |               ELSE c.cc / abs(e.value - c.mu1) END, 9)
-        |           AS DECIMAL(27,10))) AS sw
-        |       FROM ev e JOIN m1 c USING (event_type) GROUP BY 1),
-        |m2 AS (SELECT c.*, round(CAST(swx AS DOUBLE) / CAST(sw AS DOUBLE), 9) AS mu2
-        |       FROM m1 c JOIN i2 USING (event_type)),
-        |i3 AS (SELECT e.event_type,
-        |         SUM(CAST(round((CASE WHEN abs(e.value - c.mu2) <= c.cc THEN 1.0
-        |               ELSE c.cc / abs(e.value - c.mu2) END) * e.value, 9)
-        |           AS DECIMAL(27,10))) AS swx,
-        |         SUM(CAST(round(CASE WHEN abs(e.value - c.mu2) <= c.cc THEN 1.0
-        |               ELSE c.cc / abs(e.value - c.mu2) END, 9)
-        |           AS DECIMAL(27,10))) AS sw,
-        |         SUM(CASE WHEN (CASE WHEN abs(e.value - c.mu2) <= c.cc THEN 1.0
-        |               ELSE c.cc / abs(e.value - c.mu2) END) < 1.0
-        |             THEN 1 ELSE 0 END) AS n_down
-        |       FROM ev e JOIN m2 c USING (event_type) GROUP BY 1),
-        |m3 AS (SELECT c.*, round(CAST(swx AS DOUBLE) / CAST(sw AS DOUBLE), 9) AS mu3,
-        |         n_down
-        |       FROM m2 c JOIN i3 USING (event_type))
-        |SELECT event_type, CAST(n AS BIGINT) AS n, mu0 AS mean, sig AS sigma,
-        |  mu3 AS huber_mean, CAST(n_down AS BIGINT) AS n_downweighted
-        |FROM m3 ORDER BY event_type""".stripMargin,
-
-    "q306_shard_balance" ->
-      """WITH d AS (SELECT
-        |    CAST(CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-        |      AS UINT64) % 64 AS BIGINT) AS shard,
-        |    source, len(regexp_extract_all(text, '\S+')) AS ws
-        |  FROM documents),
-        |cell AS (SELECT shard, source, COUNT(*) AS n, SUM(ws) AS tok
-        |         FROM d GROUP BY 1, 2),
-        |sh AS (SELECT shard, SUM(n) AS n, SUM(tok) AS tok FROM cell GROUP BY 1),
-        |ent AS (SELECT c.shard,
-        |          SUM(CAST(round(-(CAST(c.n AS DOUBLE) / CAST(s.n AS DOUBLE))
-        |            * ln(CAST(c.n AS DOUBLE) / CAST(s.n AS DOUBLE)), 9)
-        |            AS DECIMAL(27,10))) AS h
-        |        FROM cell c JOIN sh s USING (shard) GROUP BY 1),
-        |st AS (SELECT COUNT(*) AS n_shards, MIN(tok) AS min_tokens,
-        |         MAX(tok) AS max_tokens, SUM(CAST(tok AS HUGEINT)) AS stt1,
-        |         SUM(CAST(tok AS HUGEINT) * CAST(tok AS HUGEINT)) AS stt2
-        |       FROM sh),
-        |ea AS (SELECT SUM(h) AS hs, COUNT(*) AS hn FROM ent)
-        |SELECT CAST(n_shards AS BIGINT) AS n_shards,
-        |  CAST(min_tokens AS BIGINT) AS min_tokens,
-        |  CAST(max_tokens AS BIGINT) AS max_tokens,
-        |  round(CAST(max_tokens AS DOUBLE)
-        |    / (CAST(stt1 AS DOUBLE) / CAST(n_shards AS DOUBLE)), 9) AS imbalance,
-        |  round(sqrt(CAST(stt2 AS DOUBLE) / CAST(n_shards AS DOUBLE)
-        |      - (CAST(stt1 AS DOUBLE) / CAST(n_shards AS DOUBLE))
-        |        * (CAST(stt1 AS DOUBLE) / CAST(n_shards AS DOUBLE)))
-        |    / (CAST(stt1 AS DOUBLE) / CAST(n_shards AS DOUBLE)), 9) AS cov,
-        |  round(CAST(hs AS DOUBLE) / CAST(hn AS DOUBLE), 9) AS mean_source_entropy
-        |FROM st CROSS JOIN ea""".stripMargin,
-
-    "q307_weighted_sample" ->
-      """WITH d AS (SELECT doc_id, source,
-        |    len(regexp_extract_all(text, '\S+')) AS ws FROM documents),
-        |f AS (SELECT doc_id, source, ws,
-        |        (CAST(CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-        |          AS UINT64) AS DOUBLE) + 1.0) / 4294967296.0 AS u
-        |      FROM d WHERE ws > 0)
-        |SELECT doc_id, source, CAST(ws AS BIGINT) AS ws,
-        |  round(ln(u) / ws, 12) AS es_key
-        |FROM f ORDER BY es_key DESC, doc_id LIMIT 50""".stripMargin,
-
-    "q308_dedup_savings" ->
-      """WITH d AS (SELECT doc_id, source, md5(text) AS h,
-        |    len(regexp_extract_all(text, '\S+')) AS ws FROM documents),
-        |keep AS (SELECT h, MIN(doc_id) AS keep_id FROM d GROUP BY 1)
-        |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(ws) AS BIGINT) AS tokens,
-        |  CAST(SUM(CASE WHEN d.doc_id = keep.keep_id THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS kept_docs,
-        |  CAST(SUM(CASE WHEN d.doc_id = keep.keep_id THEN ws ELSE 0 END) AS BIGINT)
-        |    AS kept_tokens,
-        |  round(1.0 - CAST(SUM(CASE WHEN d.doc_id = keep.keep_id THEN ws ELSE 0 END)
-        |      AS DOUBLE) / CAST(SUM(ws) AS DOUBLE), 9) AS token_savings
-        |FROM d JOIN keep USING (h) GROUP BY 1 ORDER BY source""".stripMargin,
-
-    "q309_dtw" ->
-      """WITH RECURSIVE ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_type
-        |  FROM events),
-        |a AS (SELECT CAST(ts AS DATE) AS day, COUNT(*) AS x FROM ev
-        |      WHERE event_type = 'click' GROUP BY 1),
-        |b AS (SELECT CAST(ts AS DATE) AS day, COUNT(*) AS x FROM ev
-        |      WHERE event_type = 'purchase' GROUP BY 1),
-        |al AS (SELECT list(x ORDER BY day) AS s FROM a),
-        |bl AS (SELECT list(x ORDER BY day) AS s FROM b),
-        |dp AS (
-        |  SELECT 1 AS i, 1 AS j, CAST([] AS BIGINT[]) AS prev_row,
-        |    CAST([abs(al.s[1] - bl.s[1])] AS BIGINT[]) AS cur,
-        |    al.s AS sa, bl.s AS sb, len(al.s) AS n, len(bl.s) AS m
-        |  FROM al, bl WHERE len(al.s) > 0 AND len(bl.s) > 0
-        |  UNION ALL
-        |  SELECT CASE WHEN j = m THEN i + 1 ELSE i END,
-        |         CASE WHEN j = m THEN 1 ELSE j + 1 END,
-        |         CASE WHEN j = m THEN cur ELSE prev_row END,
-        |         CASE WHEN j = m
-        |           THEN [abs(sa[i + 1] - sb[1]) + cur[1]]
-        |           ELSE list_append(cur, abs(sa[i] - sb[j + 1])
-        |             + least(
-        |                 CASE WHEN i = 1 THEN 1152921504606846975
-        |                      ELSE prev_row[j + 1] END,
-        |                 CASE WHEN i = 1 THEN 1152921504606846975
-        |                      ELSE prev_row[j] END,
-        |                 cur[j]))
-        |         END,
-        |         sa, sb, n, m
-        |  FROM dp WHERE NOT (i = n AND j = m)
-        |)
-        |SELECT CAST(n AS BIGINT) AS n_days_a, CAST(m AS BIGINT) AS n_days_b,
-        |  CAST(cur[m] AS BIGINT) AS dtw,
-        |  round(CAST(cur[m] AS DOUBLE) / (n + m), 9) AS dtw_per_step
-        |FROM dp WHERE i = n AND j = m""".stripMargin,
-
-    "q310_stream_heavy_hitters" ->
-      """WITH ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts, user_id FROM events),
-        |d AS (SELECT CAST(ts AS DATE) AS day, user_id, COUNT(*) AS cnt
-        |      FROM ev GROUP BY 1, 2),
-        |n AS (SELECT day, SUM(cnt) AS n_day FROM d GROUP BY 1)
-        |SELECT d.day, CAST(d.user_id AS BIGINT) AS user_id,
-        |  CAST(d.cnt AS BIGINT) AS cnt, CAST(n.n_day AS BIGINT) AS n_day
-        |FROM d JOIN n USING (day) WHERE d.cnt * 512 > n.n_day
-        |ORDER BY d.day, d.cnt DESC, d.user_id""".stripMargin,
-
-    "q311_zonemap_skip" ->
-      """WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |srt AS (SELECT ts,
-        |          (row_number() OVER (ORDER BY ts, event_id) - 1) // 1000 AS blk
-        |        FROM ev),
-        |shf AS (SELECT ts,
-        |          (row_number() OVER (ORDER BY md5(CAST(event_id AS VARCHAR)),
-        |            event_id) - 1) // 1000 AS blk
-        |        FROM ev),
-        |b1 AS (SELECT blk, MIN(ts) AS mn, MAX(ts) AS mx, COUNT(*) AS n
-        |       FROM srt GROUP BY 1),
-        |b2 AS (SELECT blk, MIN(ts) AS mn, MAX(ts) AS mx, COUNT(*) AS n
-        |       FROM shf GROUP BY 1),
-        |s1 AS (SELECT 'ts_clustered' AS layout, COUNT(*) AS n_blocks,
-        |         SUM(CASE WHEN mx < TIMESTAMP '2024-01-10 00:00:00'
-        |               OR mn >= TIMESTAMP '2024-01-13 00:00:00'
-        |             THEN 1 ELSE 0 END) AS n_skipped,
-        |         SUM(CASE WHEN mx < TIMESTAMP '2024-01-10 00:00:00'
-        |               OR mn >= TIMESTAMP '2024-01-13 00:00:00'
-        |             THEN 0 ELSE n END) AS rows_scanned
-        |       FROM b1),
-        |s2 AS (SELECT 'hash_shuffled' AS layout, COUNT(*) AS n_blocks,
-        |         SUM(CASE WHEN mx < TIMESTAMP '2024-01-10 00:00:00'
-        |               OR mn >= TIMESTAMP '2024-01-13 00:00:00'
-        |             THEN 1 ELSE 0 END) AS n_skipped,
-        |         SUM(CASE WHEN mx < TIMESTAMP '2024-01-10 00:00:00'
-        |               OR mn >= TIMESTAMP '2024-01-13 00:00:00'
-        |             THEN 0 ELSE n END) AS rows_scanned
-        |       FROM b2),
-        |u AS (SELECT * FROM s1 UNION ALL SELECT * FROM s2)
-        |SELECT layout, CAST(n_blocks AS BIGINT) AS n_blocks,
-        |  CAST(n_skipped AS BIGINT) AS n_skipped,
-        |  round(CAST(n_skipped AS DOUBLE) / CAST(n_blocks AS DOUBLE), 9)
-        |    AS skip_frac,
-        |  CAST(rows_scanned AS BIGINT) AS rows_scanned
-        |FROM u ORDER BY layout""".stripMargin,
-
-    "q312_pca_power" ->
-      """WITH e AS (SELECT e2.vec_id, g.i AS i, CAST(e2.embedding[g.i] AS DOUBLE) AS x
-        |           FROM embeddings e2,
-        |           LATERAL (SELECT unnest(generate_series(1, len(e2.embedding))) AS i) g),
-        |st AS (SELECT i, COUNT(*) AS n,
-        |         floor(CAST(SUM(CAST(x AS DECIMAL(27,12))) AS DOUBLE) / COUNT(*)
-        |           * 1e9 + 0.5) / 1e9 AS m,
-        |         CAST(SUM(CAST(round(x * x, 12) AS DECIMAL(27,14))) AS DOUBLE) AS sxx
-        |       FROM e GROUP BY 1),
-        |c AS (SELECT e.vec_id, e.i, e.x - st.m AS c FROM e JOIN st USING (i)),
-        |v0 AS (SELECT i, CASE WHEN i = 1 THEN 1.0 ELSE 0.0 END AS v FROM st),
-        |sa AS (SELECT vec_id, CAST(SUM(CAST(round(c.c * v0.v, 12)
-        |         AS DECIMAL(27,14))) AS DOUBLE) AS s
-        |       FROM c JOIN v0 USING (i) GROUP BY 1),
-        |ua AS (SELECT i, CAST(SUM(CAST(round(c.c * sa.s, 12)
-        |         AS DECIMAL(27,14))) AS DOUBLE) AS u
-        |       FROM c JOIN sa USING (vec_id) GROUP BY 1),
-        |na AS (SELECT sqrt(CAST(SUM(CAST(round(u * u, 12) AS DECIMAL(27,14)))
-        |         AS DOUBLE)) AS nrm FROM ua),
-        |va AS (SELECT i, round(u / nrm, 9) AS v FROM ua, na),
-        |sb AS (SELECT vec_id, CAST(SUM(CAST(round(c.c * va.v, 12)
-        |         AS DECIMAL(27,14))) AS DOUBLE) AS s
-        |       FROM c JOIN va USING (i) GROUP BY 1),
-        |ub AS (SELECT i, CAST(SUM(CAST(round(c.c * sb.s, 12)
-        |         AS DECIMAL(27,14))) AS DOUBLE) AS u
-        |       FROM c JOIN sb USING (vec_id) GROUP BY 1),
-        |nb AS (SELECT sqrt(CAST(SUM(CAST(round(u * u, 12) AS DECIMAL(27,14)))
-        |         AS DOUBLE)) AS nrm FROM ub),
-        |vb AS (SELECT i, round(u / nrm, 9) AS v FROM ub, nb),
-        |sc AS (SELECT vec_id, CAST(SUM(CAST(round(c.c * vb.v, 12)
-        |         AS DECIMAL(27,14))) AS DOUBLE) AS s
-        |       FROM c JOIN vb USING (i) GROUP BY 1),
-        |uc AS (SELECT i, CAST(SUM(CAST(round(c.c * sc.s, 12)
-        |         AS DECIMAL(27,14))) AS DOUBLE) AS u
-        |       FROM c JOIN sc USING (vec_id) GROUP BY 1),
-        |nc AS (SELECT sqrt(CAST(SUM(CAST(round(u * u, 12) AS DECIMAL(27,14)))
-        |         AS DOUBLE)) AS nrm FROM uc),
-        |vc AS (SELECT i, round(u / nrm, 9) AS v FROM uc, nc),
-        |tv AS (SELECT MAX(n) AS n,
-        |         CAST(SUM(CAST(round(sxx / n - m * m, 9) AS DECIMAL(27,10)))
-        |           AS DOUBLE) AS totvar
-        |       FROM st)
-        |SELECT CAST(vc.i AS INT) AS dim, vc.v AS loading,
-        |  round(nc.nrm / tv.n, 9) AS lambda,
-        |  round(nc.nrm / tv.n / tv.totvar, 9) AS explained_frac
-        |FROM vc, nc, tv ORDER BY dim""".stripMargin,
-
-    "q313_query_likelihood" ->
-      """WITH w0 AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-        |  FROM documents),
-        |ww AS (SELECT doc_id, w FROM w0 WHERE len(w) > 0),
-        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM ww GROUP BY 1),
-        |ct AS (SELECT COUNT(*) AS c_tot FROM ww),
-        |cf AS (SELECT w, COUNT(*) AS cf FROM ww
-        |       WHERE w IN ('spark', 'join', 'scan') GROUP BY 1),
-        |tf AS (SELECT doc_id, w, COUNT(*) AS tf FROM ww
-        |       WHERE w IN ('spark', 'join', 'scan') GROUP BY 1, 2),
-        |p AS (SELECT w, CAST(cf AS DOUBLE) / c_tot AS p FROM cf, ct),
-        |sc AS (SELECT dl.doc_id,
-        |         round(ln((COALESCE(tf.tf, 0) + 2000.0 * p.p)
-        |           / (dl.dl + 2000.0)), 12) AS t
-        |       FROM dl CROSS JOIN p
-        |       LEFT JOIN tf ON tf.doc_id = dl.doc_id AND tf.w = p.w)
-        |SELECT doc_id,
-        |  round(CAST(SUM(CAST(t AS DECIMAL(27,14))) AS DOUBLE), 9) AS ql_score
-        |FROM sc GROUP BY 1 ORDER BY ql_score DESC, doc_id LIMIT 20""".stripMargin,
-
-    "q314_jw_linkage" ->
-      """SELECT a.p_partkey AS key_a, b.p_partkey AS key_b,
-        |  a.p_brand AS p_brand,
-        |  round(jaro_winkler_similarity(a.p_name, b.p_name), 9) AS jw
-        |FROM part a JOIN part b
-        |  ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
-        |WHERE round(jaro_winkler_similarity(a.p_name, b.p_name), 9) >= 0.93
-        |ORDER BY jw DESC, key_a, key_b LIMIT 20""".stripMargin,
-
-    "q315_grouped_weighted_sample" ->
-      """WITH d AS (SELECT doc_id, source,
-        |    len(regexp_extract_all(text, '\S+')) AS ws FROM documents),
-        |f AS (SELECT doc_id, source, ws,
-        |        (CAST(CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-        |          AS UINT64) AS DOUBLE) + 1.0) / 4294967296.0 AS u
-        |      FROM d WHERE ws > 0),
-        |k AS (SELECT doc_id, source, ws, round(ln(u) / ws, 12) AS es_key FROM f),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY source
-        |        ORDER BY es_key DESC, doc_id) AS rnk FROM k)
-        |SELECT source, CAST(rnk AS INT) AS rnk, doc_id, CAST(ws AS BIGINT) AS ws,
-        |  es_key
-        |FROM r WHERE rnk <= 5 ORDER BY source, rnk""".stripMargin,
-
-    "q316_decayed_popularity" ->
-      """WITH ev AS (SELECT user_id,
-        |    CAST(datediff('day', CAST(CAST(ts AS TIMESTAMP) AS DATE),
-        |      DATE '2024-02-01') AS DOUBLE) AS age
-        |  FROM events),
-        |t AS (SELECT user_id, round(pow(2.0, -age / 7.0), 12) AS t FROM ev)
-        |SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-        |  round(CAST(SUM(CAST(t AS DECIMAL(27,14))) AS DOUBLE), 9)
-        |    AS decayed_score
-        |FROM t GROUP BY 1 ORDER BY decayed_score DESC, user_id LIMIT 20""".stripMargin,
-
-    "q317_cohort_retention" ->
-      """WITH ev AS (SELECT DISTINCT user_id,
-        |    CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS DATE) AS wk
-        |  FROM events),
-        |cohort AS (SELECT user_id, MIN(wk) AS cw FROM ev GROUP BY 1),
-        |sizes AS (SELECT cw, COUNT(*) AS n_cohort FROM cohort GROUP BY 1),
-        |act AS (SELECT c.cw, datediff('day', c.cw, e.wk) // 7 AS wko,
-        |          COUNT(*) AS n_active
-        |        FROM ev e JOIN cohort c USING (user_id) GROUP BY 1, 2)
-        |SELECT a.cw AS cohort_week, CAST(a.wko AS INT) AS week_offset,
-        |  CAST(a.n_active AS BIGINT) AS n_active,
-        |  CAST(s.n_cohort AS BIGINT) AS n_cohort,
-        |  round(CAST(a.n_active AS DOUBLE) / CAST(s.n_cohort AS DOUBLE), 9)
-        |    AS retention
-        |FROM act a JOIN sizes s USING (cw)
-        |ORDER BY cohort_week, week_offset""".stripMargin,
-
-    "q318_dup_cluster_sizes" ->
-      """WITH d AS (SELECT md5(text) AS h,
-        |    len(regexp_extract_all(text, '\S+')) AS ws FROM documents),
-        |g AS (SELECT h, COUNT(*) AS sz, SUM(ws) AS tok FROM d GROUP BY 1),
-        |tot AS (SELECT SUM(tok) AS all_tok FROM g),
-        |b AS (SELECT CASE WHEN sz = 1 THEN '1' WHEN sz = 2 THEN '2'
-        |             WHEN sz <= 5 THEN '3-5' ELSE '6+' END AS bucket,
-        |        sz, tok FROM g)
-        |SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_groups,
-        |  CAST(SUM(sz) AS BIGINT) AS n_docs, CAST(SUM(tok) AS BIGINT) AS tokens,
-        |  round(CAST(SUM(tok) AS DOUBLE) / CAST(tot.all_tok AS DOUBLE), 9)
-        |    AS token_share
-        |FROM b CROSS JOIN tot GROUP BY bucket, tot.all_tok
-        |ORDER BY bucket""".stripMargin,
-
-    "q319_lorenz_deciles" ->
-      """WITH cnt AS (SELECT user_id, COUNT(*) AS cnt FROM events GROUP BY 1),
-        |rk AS (SELECT cnt, row_number() OVER (ORDER BY cnt, user_id) - 1 AS rid
-        |       FROM cnt),
-        |nu AS (SELECT COUNT(*) AS nu, SUM(cnt) AS ne FROM cnt),
-        |dec AS (SELECT (rid * 10) // nu.nu AS decile, COUNT(*) AS n_users,
-        |          SUM(cnt) AS n_events, MAX(nu.ne) AS ne
-        |        FROM rk CROSS JOIN nu GROUP BY 1),
-        |cum AS (SELECT *, SUM(n_events) OVER (ORDER BY decile
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_events
-        |        FROM dec)
-        |SELECT CAST(decile AS INT) AS decile, CAST(n_users AS BIGINT) AS n_users,
-        |  CAST(n_events AS BIGINT) AS n_events,
-        |  round(CAST(n_events AS DOUBLE) / CAST(ne AS DOUBLE), 9) AS share,
-        |  round(CAST(cum_events AS DOUBLE) / CAST(ne AS DOUBLE), 9) AS cum_share
-        |FROM cum ORDER BY decile""".stripMargin,
-
-    "q320_zipf_slope" ->
-      """WITH w0 AS (SELECT unnest(string_split(lower(text), ' ')) AS w
-        |  FROM documents),
-        |f AS (SELECT w, COUNT(*) AS f FROM w0 WHERE len(w) > 0 GROUP BY 1
-        |      ORDER BY f DESC, w LIMIT 500),
-        |xy AS (SELECT round(ln(CAST(row_number() OVER (ORDER BY f DESC, w)
-        |           AS DOUBLE)), 12) AS x,
-        |         round(ln(CAST(f AS DOUBLE)), 12) AS y
-        |       FROM f),
-        |m AS (SELECT COUNT(*) AS n,
-        |        SUM(CAST(x AS DECIMAL(27,14))) AS sx,
-        |        SUM(CAST(y AS DECIMAL(27,14))) AS sy,
-        |        SUM(CAST(round(x * x, 12) AS DECIMAL(27,14))) AS sxx,
-        |        SUM(CAST(round(x * y, 12) AS DECIMAL(27,14))) AS sxy
-        |      FROM xy)
-        |SELECT CAST(n AS BIGINT) AS n_words,
-        |  round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |    / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 9) AS zipf_slope,
-        |  round((CAST(sy AS DOUBLE) - (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |    / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |    * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE), 9) AS intercept
-        |FROM m""".stripMargin,
-
-    "q321_referential_audit" ->
-      """WITH ls AS (SELECT COUNT(*) AS n_lineitems,
-        |    SUM(CAST(FLOOR(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)
-        |      * 100 + 0.5) AS HUGEINT)) AS li_cents
-        |  FROM lineitem),
-        |os AS (SELECT COUNT(*) AS n_orders,
-        |    SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS HUGEINT)) AS o_cents
-        |  FROM orders),
-        |orp AS (SELECT COUNT(*) AS n_orphan FROM lineitem
-        |        WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders)),
-        |chl AS (SELECT COUNT(*) AS n_childless FROM orders
-        |        WHERE o_orderkey NOT IN (SELECT l_orderkey FROM lineitem))
-        |SELECT CAST(n_lineitems AS BIGINT) AS n_lineitems,
-        |  CAST(n_orders AS BIGINT) AS n_orders,
-        |  CAST(n_orphan AS BIGINT) AS n_orphan_lineitems,
-        |  CAST(n_childless AS BIGINT) AS n_childless_orders,
-        |  round(1.0 - CAST(n_orphan AS DOUBLE) / CAST(n_lineitems AS DOUBLE), 9)
-        |    AS fk_coverage,
-        |  CAST(li_cents AS DOUBLE) / 100.0 AS lineitem_revenue,
-        |  CAST(o_cents AS DOUBLE) / 100.0 AS order_revenue,
-        |  round(CAST(li_cents AS DOUBLE) / CAST(o_cents AS DOUBLE), 9)
-        |    AS reconciliation_ratio
-        |FROM ls CROSS JOIN os CROSS JOIN orp CROSS JOIN chl""".stripMargin,
-
-    "q322_gap_fill" ->
-      """WITH ev0 AS (SELECT event_type, CAST(ts AS TIMESTAMP) AS ts, user_id,
-        |    value FROM events),
-        |obs AS (SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS n_obs,
-        |          round(CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS HUGEINT))
-        |            AS DOUBLE) / 100.0 / COUNT(*), 9) AS mean_raw
-        |        FROM ev0 WHERE user_id % 397 = 0 GROUP BY 1, 2),
-        |b AS (SELECT CAST(MIN(ts) AS DATE) AS lo, CAST(MAX(ts) AS DATE) AS hi
-        |      FROM ev0),
-        |cal AS (SELECT t.event_type, CAST(g.d AS DATE) AS day
-        |        FROM (SELECT DISTINCT event_type FROM ev0) t, b,
-        |        LATERAL (SELECT unnest(generate_series(CAST(b.lo AS TIMESTAMP),
-        |          CAST(b.hi AS TIMESTAMP), INTERVAL 1 DAY)) AS d) g),
-        |j AS (SELECT c.event_type, c.day, COALESCE(o.n_obs, 0) AS n_obs,
-        |        o.mean_raw
-        |      FROM cal c LEFT JOIN obs o USING (event_type, day)),
-        |f AS (SELECT *, last_value(mean_raw IGNORE NULLS) OVER (
-        |        PARTITION BY event_type ORDER BY day
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mean_filled
-        |      FROM j)
-        |SELECT event_type, day, CAST(n_obs AS BIGINT) AS n_obs, mean_raw,
-        |  mean_filled,
-        |  (mean_raw IS NULL AND mean_filled IS NOT NULL) AS is_filled
-        |FROM f ORDER BY event_type, day""".stripMargin,
-
-    "q323_coverage_timeline" ->
-      s"""$evCte,
-         |brk AS (
-         |  -- second-TRUNCATED gap compare mirrors Spark's unix_timestamp
-         |  -- (a 1799.6 s raw gap can truncate to 1800): full-precision
-         |  -- intervals here cost one session at sf0.1
-         |  SELECT user_id, ts, event_id,
-         |    CASE WHEN lag(ts) OVER w IS NULL
-         |           OR CAST(floor(epoch(ts)) AS BIGINT)
-         |              - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) >= 1800
-         |         THEN 1 ELSE 0 END AS is_break
-         |  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         |sx AS (SELECT user_id, ts,
-         |         SUM(is_break) OVER (PARTITION BY user_id ORDER BY ts, event_id
-         |                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-         |       FROM brk),
-         |sess AS (SELECT user_id, sid, MIN(ts) AS st, MAX(ts) AS en FROM sx GROUP BY 1, 2),
-         |bnd AS (SELECT st AS ts, 1 AS delta, user_id, sid FROM sess
-         |        UNION ALL SELECT en, -1, user_id, sid FROM sess),
-         |c AS (SELECT ts, delta,
-         |        SUM(delta) OVER (ORDER BY ts, delta DESC, user_id, sid
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS live
-         |      FROM bnd),
-         |a AS (SELECT
-         |        SUM(CASE WHEN delta = 1 AND live = 1 THEN 1 ELSE 0 END) AS n_merged,
-         |        SUM(CASE WHEN delta = 1 AND live = 1
-         |            THEN CAST(CAST(floor(epoch(ts)) AS BIGINT) AS HUGEINT)
-         |            ELSE 0 END) AS s_start,
-         |        SUM(CASE WHEN delta = -1 AND live = 0
-         |            THEN CAST(CAST(floor(epoch(ts)) AS BIGINT) AS HUGEINT)
-         |            ELSE 0 END) AS s_end,
-         |        COUNT(*) AS n_bounds,
-         |        MIN(CAST(floor(epoch(ts)) AS BIGINT)) AS t_lo,
-         |        MAX(CAST(floor(epoch(ts)) AS BIGINT)) AS t_hi
-         |      FROM c)
-         |SELECT CAST(n_bounds // 2 AS BIGINT) AS n_sessions,
-         |  CAST(n_merged AS BIGINT) AS n_merged,
-         |  CAST(s_end - s_start AS BIGINT) AS covered_seconds,
-         |  round(CAST(s_end - s_start AS DOUBLE)
-         |    / CAST(t_hi - t_lo AS DOUBLE), 9) AS coverage_frac
-         |FROM a""".stripMargin,
-
-    "q324_snapshot_diff" ->
-      """WITH ev AS (SELECT event_id, value FROM events),
-        |a AS (SELECT event_id AS k, value AS va FROM ev
-        |      WHERE event_id % 100 <> 7),
-        |b AS (SELECT event_id AS k,
-        |        CASE WHEN event_id % 50 = 3 THEN value + 1.0 ELSE value END AS vb
-        |      FROM ev WHERE event_id % 100 <> 13)
-        |SELECT
-        |  CAST(SUM(CASE WHEN va IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-        |  CAST(SUM(CASE WHEN vb IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-        |  CAST(SUM(CASE WHEN va IS NULL AND vb IS NOT NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS added,
-        |  CAST(SUM(CASE WHEN va IS NOT NULL AND vb IS NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS removed,
-        |  CAST(SUM(CASE WHEN va IS NOT NULL AND vb IS NOT NULL AND va <> vb
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS changed,
-        |  CAST(SUM(CASE WHEN va IS NOT NULL AND vb IS NOT NULL AND va = vb
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS unchanged
-        |FROM a FULL OUTER JOIN b USING (k)""".stripMargin,
-
-    "q325_linear_interp" ->
-      """WITH ev0 AS (SELECT event_type, CAST(ts AS TIMESTAMP) AS ts, user_id,
-        |    value FROM events),
-        |obs AS (SELECT event_type, CAST(ts AS DATE) AS day,
-        |          round(CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS HUGEINT))
-        |            AS DOUBLE) / 100.0 / COUNT(*), 9) AS mean_raw
-        |        FROM ev0 WHERE user_id % 397 = 0 GROUP BY 1, 2),
-        |b AS (SELECT CAST(MIN(ts) AS DATE) AS lo, CAST(MAX(ts) AS DATE) AS hi
-        |      FROM ev0),
-        |cal AS (SELECT t.event_type, CAST(g.d AS DATE) AS day
-        |        FROM (SELECT DISTINCT event_type FROM ev0) t, b,
-        |        LATERAL (SELECT unnest(generate_series(CAST(b.lo AS TIMESTAMP),
-        |          CAST(b.hi AS TIMESTAMP), INTERVAL 1 DAY)) AS d) g),
-        |j AS (SELECT c.event_type, c.day, o.mean_raw
-        |      FROM cal c LEFT JOIN obs o USING (event_type, day)),
-        |f AS (SELECT *,
-        |        last_value(mean_raw IGNORE NULLS) OVER wb AS pv,
-        |        last_value(CASE WHEN mean_raw IS NOT NULL THEN day END
-        |          IGNORE NULLS) OVER wb AS pd,
-        |        first_value(mean_raw IGNORE NULLS) OVER wf AS nv,
-        |        first_value(CASE WHEN mean_raw IS NOT NULL THEN day END
-        |          IGNORE NULLS) OVER wf AS nd
-        |      FROM j WINDOW
-        |        wb AS (PARTITION BY event_type ORDER BY day
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |        wf AS (PARTITION BY event_type ORDER BY day
-        |               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-        |SELECT event_type, day, mean_raw,
-        |  CASE WHEN mean_raw IS NOT NULL THEN mean_raw
-        |       WHEN pv IS NOT NULL AND nv IS NOT NULL THEN
-        |         round(pv + (nv - pv) * CAST(datediff('day', pd, day) AS DOUBLE)
-        |           / CAST(datediff('day', pd, nd) AS DOUBLE), 9)
-        |       END AS mean_interp,
-        |  (mean_raw IS NULL AND pv IS NOT NULL AND nv IS NOT NULL)
-        |    AS is_interpolated
-        |FROM f ORDER BY event_type, day""".stripMargin,
-
-    "q326_mad_outliers" ->
-      """WITH ev AS (SELECT event_type, value FROM events),
-        |med AS (SELECT event_type, round(quantile_cont(value, 0.5), 9) AS med
-        |        FROM ev GROUP BY 1),
-        |res AS (SELECT e.event_type, e.value, m.med, abs(e.value - m.med) AS r
-        |        FROM ev e JOIN med m USING (event_type)),
-        |mad AS (SELECT event_type, round(quantile_cont(r, 0.5), 9) AS mad
-        |        FROM res GROUP BY 1)
-        |SELECT r.event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |  MAX(r.med) AS median, MAX(d.mad) AS mad,
-        |  CAST(SUM(CASE WHEN abs(round(0.6745 * (r.value - r.med) / d.mad, 9))
-        |    > 3.5 THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-        |  MAX(abs(round(0.6745 * (r.value - r.med) / d.mad, 9))) AS max_abs_mz
-        |FROM res r JOIN mad d USING (event_type)
-        |GROUP BY 1 ORDER BY r.event_type""".stripMargin,
-
-    "q327_incremental_rollup" ->
-      """WITH ev AS (SELECT event_type, CAST(ts AS TIMESTAMP) AS ts, value
-        |  FROM events),
-        |base AS (SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS nb,
-        |           SUM(CAST(FLOOR(value * 100 + 0.5) AS HUGEINT)) AS cb
-        |         FROM ev WHERE ts < TIMESTAMP '2024-01-20 12:00:00'
-        |         GROUP BY 1, 2),
-        |delta AS (SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS nd,
-        |            SUM(CAST(FLOOR(value * 100 + 0.5) AS HUGEINT)) AS cd
-        |          FROM ev WHERE ts >= TIMESTAMP '2024-01-20 12:00:00'
-        |          GROUP BY 1, 2)
-        |SELECT event_type, day,
-        |  CAST(COALESCE(nb, 0) + COALESCE(nd, 0) AS BIGINT) AS n,
-        |  CAST(COALESCE(cb, 0) + COALESCE(cd, 0) AS DOUBLE) / 100.0
-        |    AS total_value,
-        |  CAST(COALESCE(nb, 0) AS BIGINT) AS n_from_base,
-        |  CAST(COALESCE(nd, 0) AS BIGINT) AS n_from_delta
-        |FROM base FULL OUTER JOIN delta USING (event_type, day)
-        |ORDER BY event_type, day""".stripMargin,
-
-    "q328_growth_accounting" ->
-      """WITH uw AS (SELECT DISTINCT user_id,
-        |    CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS DATE) AS wk
-        |  FROM events),
-        |fw AS (SELECT user_id, MIN(wk) AS fw FROM uw GROUP BY 1),
-        |cur AS (SELECT u.wk,
-        |          CASE WHEN u.wk = f.fw THEN 1 ELSE 0 END AS is_new,
-        |          CASE WHEN p.user_id IS NOT NULL THEN 1 ELSE 0 END AS is_ret,
-        |          CASE WHEN u.wk <> f.fw AND p.user_id IS NULL THEN 1 ELSE 0 END
-        |            AS is_res
-        |        FROM uw u JOIN fw f USING (user_id)
-        |        LEFT JOIN (SELECT user_id, wk + 7 AS wk FROM uw) p
-        |          ON p.user_id = u.user_id AND p.wk = u.wk),
-        |ca AS (SELECT wk, COUNT(*) AS n_active, SUM(is_new) AS n_new,
-        |         SUM(is_ret) AS n_retained, SUM(is_res) AS n_resurrected
-        |       FROM cur GROUP BY 1),
-        |chn AS (SELECT a.wk + 7 AS wk,
-        |          SUM(CASE WHEN b.user_id IS NULL THEN 1 ELSE 0 END) AS n_churned
-        |        FROM uw a LEFT JOIN uw b
-        |          ON b.user_id = a.user_id AND b.wk = a.wk + 7
-        |        GROUP BY 1)
-        |SELECT ca.wk AS week, CAST(n_active AS BIGINT) AS n_active,
-        |  CAST(n_new AS BIGINT) AS n_new,
-        |  CAST(n_retained AS BIGINT) AS n_retained,
-        |  CAST(n_resurrected AS BIGINT) AS n_resurrected,
-        |  CAST(COALESCE(chn.n_churned, 0) AS BIGINT) AS n_churned
-        |FROM ca LEFT JOIN chn USING (wk) ORDER BY week""".stripMargin,
-
-    "q329_conversion_delay" ->
-      """WITH ev AS (SELECT event_type, CAST(ts AS TIMESTAMP) AS ts, user_id
-        |  FROM events),
-        |c AS (SELECT user_id, MIN(CAST(floor(epoch(ts)) AS BIGINT)) AS t_click
-        |      FROM ev WHERE event_type = 'click' GROUP BY 1),
-        |p AS (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS t_p
-        |      FROM ev WHERE event_type = 'purchase'),
-        |d AS (SELECT c.user_id, c.t_click, MIN(p.t_p) AS t_purchase
-        |      FROM c JOIN p USING (user_id) WHERE p.t_p >= c.t_click
-        |      GROUP BY 1, 2),
-        |dl AS (SELECT CAST(t_purchase - t_click AS DOUBLE) AS delay FROM d)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_converters,
-        |  round(quantile_cont(delay, 0.5), 9) AS p50_delay_s,
-        |  round(quantile_cont(delay, 0.9), 9) AS p90_delay_s
-        |FROM dl""".stripMargin,
-
-    "q330_ordered_funnel" ->
-      """WITH ev AS (SELECT event_type, user_id,
-        |    CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) AS t
-        |  FROM events),
-        |s1 AS (SELECT user_id, MIN(t) AS t1 FROM ev
-        |       WHERE event_type = 'signup' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, s1.t1, MIN(e.t) AS t2
-        |       FROM ev e JOIN s1 USING (user_id)
-        |       WHERE e.event_type = 'click' AND e.t > s1.t1 GROUP BY 1, 2),
-        |s3 AS (SELECT e.user_id, MIN(e.t) AS t3
-        |       FROM ev e JOIN s2 USING (user_id)
-        |       WHERE e.event_type = 'purchase' AND e.t > s2.t2 GROUP BY 1)
-        |SELECT
-        |  CAST((SELECT COUNT(*) FROM s1) AS BIGINT) AS n_signup,
-        |  CAST((SELECT COUNT(*) FROM s2) AS BIGINT) AS n_then_click,
-        |  CAST((SELECT COUNT(*) FROM s3) AS BIGINT) AS n_then_purchase,
-        |  round(CAST((SELECT COUNT(*) FROM s2) AS DOUBLE)
-        |    / CAST((SELECT COUNT(*) FROM s1) AS DOUBLE), 9) AS step2_rate,
-        |  round(CAST((SELECT COUNT(*) FROM s3) AS DOUBLE)
-        |    / CAST((SELECT COUNT(*) FROM s2) AS DOUBLE), 9) AS step3_rate""".stripMargin,
-
-    "q331_weighted_median" ->
-      """WITH d AS (SELECT len(regexp_extract_all(text, '\S+')) AS ws
-        |  FROM documents),
-        |f AS (SELECT ws FROM d WHERE ws > 0),
-        |bl AS (SELECT ws, COUNT(*) AS n_docs, SUM(ws) AS tok FROM f GROUP BY 1),
-        |cum AS (SELECT *, SUM(tok) OVER (ORDER BY ws
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tok
-        |        FROM bl),
-        |tot AS (SELECT SUM(tok) AS t, SUM(n_docs) AS nd FROM bl)
-        |SELECT CAST(nd AS BIGINT) AS n_docs, CAST(t AS BIGINT) AS total_tokens,
-        |  CAST(ws AS BIGINT) AS weighted_median_len,
-        |  round(CAST(cum_tok AS DOUBLE) / CAST(t AS DOUBLE), 9) AS cum_token_frac
-        |FROM cum, tot WHERE cum_tok * 2 >= t ORDER BY ws LIMIT 1""".stripMargin,
-
-    "q332_template_ngrams" ->
-      """WITH w AS (SELECT doc_id, source, list_filter(string_split_regex(
-        |        regexp_replace(lower(text), '[^\p{L}\p{N}\s]', '', 'g'), '\s+'),
-        |        x -> len(x) > 0) AS words FROM documents),
-        |sh0 AS (SELECT doc_id, source, unnest(list_distinct(
-        |         CASE WHEN len(words) = 0 THEN []
-        |              ELSE [array_to_string(words[i:i+2], ' ')
-        |                    FOR i IN generate_series(1, greatest(len(words) - 2, 1))] END)) AS sh
-        |        FROM w),
-        |gd AS (SELECT source, sh, COUNT(*) AS n_with FROM sh0 GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY source
-        |        ORDER BY n_with DESC, sh DESC) AS rk FROM gd),
-        |ns AS (SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY 1)
-        |SELECT r.source, r.sh AS top_gram, CAST(r.n_with AS BIGINT) AS n_docs_with,
-        |  CAST(ns.n_docs AS BIGINT) AS n_docs,
-        |  round(CAST(r.n_with AS DOUBLE) / CAST(ns.n_docs AS DOUBLE), 9)
-        |    AS coverage
-        |FROM r JOIN ns USING (source) WHERE rk = 1 ORDER BY r.source""".stripMargin,
-
-    "q333_threshold_curve" ->
-      """WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id < 200),
-        |w AS (SELECT doc_id,
-        |        list_filter(string_split_regex(
-        |          regexp_replace(lower(text), '[^\p{L}\p{N}\s]', '', 'g'), '\s+'),
-        |          x -> len(x) > 0) AS words
-        |      FROM docs),
-        |sh AS (SELECT doc_id,
-        |         list_distinct([array_to_string(words[i:i+1], ' ')
-        |                        FOR i IN generate_series(1, greatest(len(words) - 1, 1))]) AS sh
-        |       FROM w WHERE len(words) > 0),
-        |f AS (SELECT CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |        / len(list_distinct(list_concat(a.sh, b.sh))) AS j
-        |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |      WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |        / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.1),
-        |t AS (SELECT unnest([0.1, 0.3, 0.5, 0.7, 0.9]) AS threshold)
-        |SELECT t.threshold, CAST(COUNT(f.j) AS BIGINT) AS n_pairs
-        |FROM t LEFT JOIN f ON f.j >= t.threshold
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q334_fd_histogram" ->
-      s"""$evCte,
-         |iqr AS (SELECT event_type,
-         |          quantile_cont(value, 0.75) - quantile_cont(value, 0.25) AS iqr
-         |        FROM ev GROUP BY 1),
-         |st AS (SELECT event_type, COUNT(*) AS n, MIN(value) AS mn,
-         |         MAX(value) AS mx FROM ev GROUP BY 1),
-         |j AS (SELECT s.event_type, s.n, i.iqr,
-         |        round(2.0 * i.iqr / pow(CAST(s.n AS DOUBLE), 1.0 / 3), 9) AS h,
-         |        s.mn, s.mx
-         |      FROM st s JOIN iqr i USING (event_type)
-         |      WHERE round(2.0 * i.iqr / pow(CAST(s.n AS DOUBLE), 1.0 / 3), 9) > 0),
-         |b AS (SELECT j.event_type, j.n, j.iqr, j.h,
-         |        CAST(least(floor((e.value - j.mn) / j.h),
-         |          floor((j.mx - j.mn) / j.h)) AS BIGINT) AS bin,
-         |        COUNT(*) AS cnt
-         |      FROM ev e JOIN j USING (event_type) GROUP BY 1, 2, 3, 4, 5),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY event_type
-         |        ORDER BY cnt DESC, bin) AS rk,
-         |        COUNT(*) OVER (PARTITION BY event_type) AS n_bins
-         |      FROM b)
-         |SELECT event_type, CAST(n AS BIGINT) AS n, round(iqr, 9) AS iqr,
-         |  h AS bin_width, CAST(n_bins AS BIGINT) AS n_bins,
-         |  CAST(cnt AS BIGINT) AS mode_count, CAST(bin AS BIGINT) AS mode_bin
-         |FROM r WHERE rk = 1 ORDER BY event_type""".stripMargin,
-
-    "q335_oov_rate" ->
-      """WITH w0 AS (SELECT source, unnest(string_split(lower(text), ' ')) AS w
-        |  FROM documents),
-        |ww AS (SELECT source, w FROM w0 WHERE len(w) > 0),
-        |v AS (SELECT w FROM (SELECT w, COUNT(*) AS f FROM ww GROUP BY 1
-        |      ORDER BY f DESC, w LIMIT 1000))
-        |SELECT ww.source, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-        |  CAST(SUM(CASE WHEN v.w IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
-        |  round(CAST(SUM(CASE WHEN v.w IS NULL THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / CAST(COUNT(*) AS DOUBLE), 9) AS oov_rate
-        |FROM ww LEFT JOIN v ON ww.w = v.w GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q336_fanout_audit" ->
-      """WITH f AS (SELECT o.o_orderkey, COUNT(l.l_orderkey) AS fanout
-        |           FROM orders o LEFT JOIN lineitem l
-        |             ON l.l_orderkey = o.o_orderkey GROUP BY 1),
-        |st AS (SELECT COUNT(*) AS n_keys, SUM(fanout) AS n_rows,
-        |         MAX(fanout) AS max_fanout FROM f),
-        |p AS (SELECT quantile_cont(CAST(fanout AS DOUBLE), 0.99) AS p99 FROM f),
-        |ov AS (SELECT COUNT(*) AS n_keys_over FROM f, st
-        |       WHERE CAST(fanout AS DOUBLE)
-        |         > 2.0 * (CAST(n_rows AS DOUBLE) / CAST(n_keys AS DOUBLE)))
-        |SELECT CAST(n_keys AS BIGINT) AS n_keys, CAST(n_rows AS BIGINT) AS n_rows,
-        |  CAST(max_fanout AS BIGINT) AS max_fanout,
-        |  round(CAST(n_rows AS DOUBLE) / CAST(n_keys AS DOUBLE), 9) AS mean_fanout,
-        |  round(p99, 9) AS p99_fanout,
-        |  CAST(n_keys_over AS BIGINT) AS n_keys_over_2x
-        |FROM st, p, ov""".stripMargin,
-
-    // q337: real-pixel aHash near-dup — the image pattern encodes
-    // p=(doc_id/4)%64 in a 10×-repetition code (cross-p Hamming ≥ 10-6
-    // > 3) and variant v=doc_id%4 flips the fixed cell sets
-    // ∅/{7}/{13,47}/{5,23,58}; surviving pairs are exactly same-p with
-    // |S_va Δ S_vb| ≤ 3, which this oracle replays
-    // r16 star-edge semantics: identical-hash groups (= same (p, v))
-    // emit (group-min, member) stars; near hash pairs emit ONE edge
-    // between the two groups' min doc_ids. Variant flip sets are
-    // disjoint with |set| = v, so hamming(a, b) = v_a + v_b for a ≠ b.
-    "q337_phash_dedup" ->
-      """WITH d AS (SELECT doc_id, (doc_id // 4) % 64 AS p, doc_id % 4 AS v
-        |           FROM documents),
-        |g AS (SELECT p, v, MIN(doc_id) AS m FROM d GROUP BY 1, 2),
-        |ex AS (SELECT g.m AS key_a, d.doc_id AS key_b, 0 AS hamming
-        |       FROM d JOIN g USING (p, v) WHERE d.doc_id <> g.m),
-        |nr AS (SELECT least(a.m, b.m) AS key_a, greatest(a.m, b.m) AS key_b,
-        |         a.v + b.v AS hamming
-        |       FROM g a JOIN g b ON a.p = b.p AND a.v < b.v
-        |       WHERE a.v + b.v <= 3)
-        |SELECT key_a, key_b, CAST(hamming AS BIGINT) AS hamming
-        |FROM (SELECT * FROM ex UNION ALL SELECT * FROM nr)
-        |ORDER BY hamming, key_a, key_b LIMIT 50""".stripMargin,
-
-    "q338_quality_yield" ->
-      s"""$qualityDocCte,
-         |d2 AS (SELECT d.source, round(d.score, 9) AS q,
-         |         len(regexp_extract_all(doc.text, '\\S+')) AS ws
-         |       FROM d JOIN documents doc USING (doc_id)),
-         |g AS (SELECT source, COUNT(*) AS n, SUM(ws) AS tok,
-         |        SUM(CASE WHEN q >= 0.2 THEN 1 ELSE 0 END) AS d2c,
-         |        SUM(CASE WHEN q >= 0.2 THEN ws ELSE 0 END) AS t2,
-         |        SUM(CASE WHEN q >= 0.4 THEN 1 ELSE 0 END) AS d4,
-         |        SUM(CASE WHEN q >= 0.4 THEN ws ELSE 0 END) AS t4,
-         |        SUM(CASE WHEN q >= 0.6 THEN 1 ELSE 0 END) AS d6,
-         |        SUM(CASE WHEN q >= 0.6 THEN ws ELSE 0 END) AS t6,
-         |        SUM(CASE WHEN q >= 0.8 THEN 1 ELSE 0 END) AS d8,
-         |        SUM(CASE WHEN q >= 0.8 THEN ws ELSE 0 END) AS t8
-         |      FROM d2 GROUP BY 1),
-         |u AS (SELECT source, tok, 0.2 AS threshold, d2c AS nk, t2 AS tk FROM g
-         |      UNION ALL SELECT source, tok, 0.4, d4, t4 FROM g
-         |      UNION ALL SELECT source, tok, 0.6, d6, t6 FROM g
-         |      UNION ALL SELECT source, tok, 0.8, d8, t8 FROM g)
-         |SELECT source, threshold, CAST(nk AS BIGINT) AS n_docs_kept,
-         |  CAST(tk AS BIGINT) AS tokens_kept,
-         |  round(CAST(tk AS DOUBLE) / CAST(tok AS DOUBLE), 9) AS token_yield
-         |FROM u ORDER BY source, threshold""".stripMargin,
-
-    "q339_sla_trend" ->
-      s"""$evCte,
-         |byday AS (SELECT event_type, CAST(ts AS DATE) AS day,
-         |            round(quantile_cont(value, 0.95), 9) AS p95
-         |          FROM ev GROUP BY 1, 2),
-         |ov AS (SELECT event_type, round(quantile_cont(value, 0.95), 9) AS p95_all
-         |       FROM ev GROUP BY 1)
-         |SELECT b.event_type, CAST(COUNT(*) AS BIGINT) AS n_days,
-         |  CAST(SUM(CASE WHEN b.p95 > round(1.2 * o.p95_all, 9)
-         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_breach_days,
-         |  o.p95_all AS overall_p95,
-         |  round(MAX(b.p95), 9) AS max_daily_p95
-         |FROM byday b JOIN ov o USING (event_type)
-         |GROUP BY 1, 4 ORDER BY b.event_type""".stripMargin,
-
-    "q340_effective_tokens" ->
-      s"""$qualityDocCte,
-         |f AS (SELECT d.doc_id, md5(doc.text) AS h, round(d.score, 9) AS q,
-         |        len(regexp_extract_all(doc.text, '\\S+')) AS ws
-         |      FROM d JOIN documents doc USING (doc_id)),
-         |keep AS (SELECT h, MIN(doc_id) AS keep_id FROM f GROUP BY 1),
-         |j AS (SELECT f.ws, f.q, (f.doc_id = keep.keep_id) AS kept
-         |      FROM f JOIN keep USING (h))
-         |SELECT CAST(SUM(ws) AS BIGINT) AS raw_tokens,
-         |  CAST(SUM(CASE WHEN kept THEN ws ELSE 0 END) AS BIGINT) AS after_dedup,
-         |  CAST(SUM(CASE WHEN kept AND q >= 0.4 THEN ws ELSE 0 END) AS BIGINT)
-         |    AS after_quality,
-         |  CAST(SUM(CASE WHEN kept AND q >= 0.4 THEN least(ws, 1024)
-         |    ELSE 0 END) AS BIGINT) AS effective_tokens,
-         |  round(CAST(SUM(CASE WHEN kept AND q >= 0.4 THEN least(ws, 1024)
-         |      ELSE 0 END) AS DOUBLE) / CAST(SUM(ws) AS DOUBLE), 9)
-         |    AS overall_yield
-         |FROM j""".stripMargin,
-
-    // generated 5-round unroll — the q263 programmatic-oracle pattern
-    "q341_bpe_merges" -> {
-      val sb = new StringBuilder(
-        """WITH r0 AS (SELECT doc_id,
-          |  array_to_string(regexp_extract_all(lower(substr(text, 1, 200)),
-          |    '[a-z]'), ' ') AS s
-          |  FROM documents WHERE doc_id < 100)""".stripMargin)
-      val outs = scala.collection.mutable.ArrayBuffer[String]()
-      var prev = "r0"
-      for (r <- 1 to 5) {
-        sb ++= s""",
-          |b$r AS (SELECT unnest([t[i] || ' ' || t[i+1]
-          |          FOR i IN generate_series(1, len(t) - 1)]) AS pair
-          |        FROM (SELECT string_split(s, ' ') AS t FROM $prev)
-          |        WHERE len(t) >= 2),
-          |c$r AS (SELECT pair, COUNT(*) AS cnt FROM b$r GROUP BY 1
-          |        ORDER BY cnt DESC, pair LIMIT 1),
-          |r$r AS (SELECT d.doc_id, trim(replace(' ' || d.s || ' ',
-          |          ' ' || c.pair || ' ', ' ' || replace(c.pair, ' ', '') || ' '),
-          |          ' ') AS s
-          |        FROM $prev d, c$r c)""".stripMargin
-        outs += s"""SELECT $r AS merge_rank, pair,
-          | replace(pair, ' ', '') AS merged, CAST(cnt AS BIGINT) AS cnt
-          | FROM c$r""".stripMargin
-        prev = s"r$r"
-      }
-      sb ++= "\nSELECT CAST(merge_rank AS INT) AS merge_rank, pair, merged, cnt FROM ("
-      sb ++= outs.mkString(" UNION ALL ")
-      sb ++= ") ORDER BY merge_rank"
-      sb.toString
-    },
-
-    // generated 5-level unroll, same pattern
-    "q342_haar_energy" -> {
-      val sb = new StringBuilder(
-        s"""$evCte,
-           |daily AS (SELECT CAST(ts AS DATE) AS day, COUNT(*) AS x
-           |          FROM ev GROUP BY 1),
-           |lo AS (SELECT MIN(day) AS lo FROM daily),
-           |idx AS (SELECT datediff('day', lo.lo, d.day) AS i, d.x
-           |        FROM daily d, lo),
-           |pad AS (SELECT unnest(generate_series(0, 31)) AS i),
-           |l0 AS (SELECT p.i, COALESCE(x, 0) AS v
-           |       FROM pad p LEFT JOIN idx ON idx.i = p.i)""".stripMargin)
-      val outs = scala.collection.mutable.ArrayBuffer[String]()
-      var prev = "l0"
-      for (l <- 1 to 5) {
-        sb ++= s""",
-          |p$l AS (SELECT i // 2 AS j,
-          |          SUM(CASE WHEN i % 2 = 0 THEN v ELSE 0 END) AS a,
-          |          SUM(CASE WHEN i % 2 = 1 THEN v ELSE 0 END) AS b
-          |        FROM $prev GROUP BY 1),
-          |s$l AS (SELECT j AS i, a + b AS v, a - b AS d FROM p$l)""".stripMargin
-        outs += s"""SELECT $l AS level,
-          | (SELECT CAST(COUNT(*) AS BIGINT) FROM s$l) AS n_coeffs,
-          | (SELECT CAST(SUM(d * d) AS BIGINT) FROM s$l) AS energy,
-          | CAST(abs(d) AS BIGINT) AS max_abs_detail,
-          | CAST(i AS BIGINT) AS argmax_idx
-          | FROM s$l ORDER BY abs(d) DESC, i LIMIT 1""".stripMargin
-        prev = s"s$l"
-      }
-      sb ++= "\nSELECT CAST(level AS INT) AS level, n_coeffs, energy,"
-      sb ++= " max_abs_detail, argmax_idx FROM ("
-      sb ++= outs.map(o => s"($o)").mkString(" UNION ALL ")
-      sb ++= ") ORDER BY level"
-      sb.toString
-    },
-
-    "q343_rolling_wau" ->
-      s"""$evCte,
-         |ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM ev),
-         |days AS (SELECT DISTINCT day FROM ud),
-         |w7 AS (SELECT DISTINCT user_id, day + CAST(o.off AS INT) AS asof FROM ud,
-         |       (SELECT unnest(generate_series(0, 6)) AS off) o),
-         |wau AS (SELECT d.day, COUNT(*) AS wau FROM days d
-         |        JOIN w7 ON w7.asof = d.day GROUP BY 1),
-         |dau AS (SELECT day, COUNT(DISTINCT user_id) AS dau FROM ud GROUP BY 1)
-         |SELECT w.day, CAST(dau AS BIGINT) AS dau, CAST(w.wau AS BIGINT) AS wau,
-         |  round(CAST(w.wau AS DOUBLE) / CAST(dau AS DOUBLE), 9)
-         |    AS wau_dau_ratio
-         |FROM wau w JOIN dau USING (day) ORDER BY day""".stripMargin,
-
-    "q344_rfm" ->
-      s"""$evCte,
-         |u AS (SELECT user_id, MAX(ts) AS last_ts, COUNT(*) AS freq,
-         |        SUM(CAST(FLOOR(value * 100 + 0.5) AS HUGEINT)) AS mon
-         |      FROM ev GROUP BY 1),
-         |u2 AS (SELECT user_id,
-         |         datediff('day', CAST(last_ts AS DATE), DATE '2024-02-01') AS rec,
-         |         freq, mon FROM u),
-         |nu AS (SELECT COUNT(*) AS nu FROM u2),
-         |r AS (SELECT u2.*,
-         |        CAST(((row_number() OVER (ORDER BY rec, user_id) - 1) * 3)
-         |          // nu.nu AS INT) + 1 AS rec_score,
-         |        CAST(((row_number() OVER (ORDER BY freq DESC, user_id) - 1) * 3)
-         |          // nu.nu AS INT) + 1 AS freq_score,
-         |        CAST(((row_number() OVER (ORDER BY mon DESC, user_id) - 1) * 3)
-         |          // nu.nu AS INT) + 1 AS mon_score
-         |      FROM u2, nu)
-         |SELECT rec_score, freq_score, mon_score,
-         |  CAST(COUNT(*) AS BIGINT) AS n_users,
-         |  round(CAST(SUM(rec) AS DOUBLE) / COUNT(*), 9) AS avg_recency_days,
-         |  round(CAST(SUM(freq) AS DOUBLE) / COUNT(*), 9) AS avg_frequency,
-         |  round(CAST(SUM(mon) AS DOUBLE) / 100.0 / COUNT(*), 9) AS avg_monetary
-         |FROM r GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-
-    "q345_holt_forecast" ->
-      s"""WITH RECURSIVE ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts FROM events),
-         |daily AS (SELECT CAST(ts AS DATE) AS day, COUNT(*) AS x
-         |          FROM ev GROUP BY 1),
-         |idx AS (SELECT CAST(x AS DOUBLE) AS x,
-         |          row_number() OVER (ORDER BY day) AS t FROM daily),
-         |n AS (SELECT COUNT(*) AS n FROM idx),
-         |dp AS (
-         |  SELECT 1 AS t, i1.x AS l, i2.x - i1.x AS b, CAST(0.0 AS DOUBLE) AS sse
-         |  FROM idx i1, idx i2, n
-         |  WHERE i1.t = 1 AND i2.t = 2 AND n.n >= 2
-         |  UNION ALL
-         |  SELECT d.t + 1,
-         |    round(0.3 * i.x + 0.7 * (d.l + d.b), 12),
-         |    round(0.1 * (round(0.3 * i.x + 0.7 * (d.l + d.b), 12) - d.l)
-         |      + 0.9 * d.b, 12),
-         |    round(d.sse + (i.x - (d.l + d.b)) * (i.x - (d.l + d.b)), 12)
-         |  FROM dp d JOIN idx i ON i.t = d.t + 1
-         |)
-         |SELECT CAST(n.n AS BIGINT) AS n_days, round(d.l, 9) AS level,
-         |  round(d.b, 9) AS trend, round(d.sse, 9) AS sse,
-         |  round(7 * d.l + 28 * d.b, 9) AS forecast_next7
-         |FROM dp d, n WHERE d.t = n.n""".stripMargin,
-
-    "q346_ipf_raking" ->
-      s"""$evCte,
-         |cells AS (SELECT event_type, CAST(dayofweek(ts) + 1 AS BIGINT) AS dow,
-         |            COUNT(*) AS n FROM ev GROUP BY 1, 2),
-         |tot AS (SELECT SUM(n) AS nn FROM cells),
-         |rowt AS (SELECT event_type, SUM(n) AS rt FROM cells GROUP BY 1),
-         |m0 AS (SELECT event_type, dow, n, CAST(n AS DOUBLE) AS m,
-         |         CAST(nn AS DOUBLE) / 7.0 AS colt FROM cells, tot),
-         |c1s AS (SELECT dow, CAST(SUM(CAST(m AS DECIMAL(27,14))) AS DOUBLE) AS cs
-         |        FROM m0 GROUP BY 1),
-         |m1 AS (SELECT m0.event_type, m0.dow, m0.n,
-         |         round(m0.m * m0.colt / c1s.cs, 12) AS m, m0.colt
-         |       FROM m0 JOIN c1s USING (dow)),
-         |r1s AS (SELECT event_type,
-         |          CAST(SUM(CAST(m AS DECIMAL(27,14))) AS DOUBLE) AS rs
-         |        FROM m1 GROUP BY 1),
-         |m2 AS (SELECT m1.event_type, m1.dow, m1.n,
-         |         round(m1.m * CAST(r.rt AS DOUBLE) / r1s.rs, 12) AS m, m1.colt
-         |       FROM m1 JOIN r1s USING (event_type) JOIN rowt r USING (event_type)),
-         |c2s AS (SELECT dow, CAST(SUM(CAST(m AS DECIMAL(27,14))) AS DOUBLE) AS cs
-         |        FROM m2 GROUP BY 1),
-         |m3 AS (SELECT m2.event_type, m2.dow, m2.n,
-         |         round(m2.m * m2.colt / c2s.cs, 12) AS m
-         |       FROM m2 JOIN c2s USING (dow))
-         |SELECT event_type, dow, CAST(n AS BIGINT) AS n,
-         |  round(m, 9) AS fitted, round(m / CAST(n AS DOUBLE), 9) AS weight
-         |FROM m3 ORDER BY event_type, dow""".stripMargin,
-
-    "q347_capture_recapture" ->
-      s"""$evCte,
-         |ud AS (SELECT user_id, CAST(ts AS DATE) AS day FROM ev),
-         |w1 AS (SELECT DISTINCT user_id FROM ud
-         |       WHERE day BETWEEN DATE '2024-01-02' AND DATE '2024-01-08'),
-         |w2 AS (SELECT DISTINCT user_id FROM ud
-         |       WHERE day BETWEEN DATE '2024-01-09' AND DATE '2024-01-15'),
-         |n1 AS (SELECT COUNT(*) AS n1 FROM w1),
-         |n2 AS (SELECT COUNT(*) AS n2 FROM w2),
-         |m AS (SELECT COUNT(*) AS m FROM w1 WHERE user_id IN
-         |      (SELECT user_id FROM w2)),
-         |tr AS (SELECT COUNT(DISTINCT user_id) AS n_observed FROM ud)
-         |SELECT CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
-         |  CAST(m AS BIGINT) AS m, CAST(n_observed AS BIGINT) AS n_observed,
-         |  round(CAST(n1 + 1 AS DOUBLE) * CAST(n2 + 1 AS DOUBLE)
-         |    / CAST(m + 1 AS DOUBLE) - 1.0, 9) AS chapman_estimate
-         |FROM n1, n2, m, tr""".stripMargin,
-
-    "q348_bm25f" ->
-      """WITH docs AS (SELECT doc_id, substr(text, 1, 100) AS title,
-        |    substr(text, 101) AS body FROM documents),
-        |tw AS (SELECT doc_id, w FROM (SELECT doc_id,
-        |         unnest(string_split(title, ' ')) AS w FROM docs)
-        |       WHERE len(w) > 0),
-        |bw AS (SELECT doc_id, w FROM (SELECT doc_id,
-        |         unnest(string_split(body, ' ')) AS w FROM docs)
-        |       WHERE len(w) > 0),
-        |tdl AS (SELECT doc_id, COUNT(*) AS dl FROM tw GROUP BY 1),
-        |bdl AS (SELECT doc_id, COUNT(*) AS dl FROM bw GROUP BY 1),
-        |st AS (SELECT t.t_tot, t.t_n, b.b_tot, b.b_n FROM
-        |       (SELECT SUM(dl) AS t_tot, COUNT(*) AS t_n FROM tdl) t,
-        |       (SELECT SUM(dl) AS b_tot, COUNT(*) AS b_n FROM bdl) b),
-        |tft AS (SELECT doc_id, w, COUNT(*) AS tf_t FROM tw
-        |        WHERE w IN ('spark', 'join', 'scan') GROUP BY 1, 2),
-        |tfb AS (SELECT doc_id, w, COUNT(*) AS tf_b FROM bw
-        |        WHERE w IN ('spark', 'join', 'scan') GROUP BY 1, 2),
-        |j AS (SELECT f.doc_id, f.w, f.tf_t, f.tf_b,
-        |        td.dl AS dl_t, bd.dl AS dl_b, st.*
-        |      FROM (SELECT doc_id, w, tf_t, tf_b
-        |            FROM tft FULL OUTER JOIN tfb USING (doc_id, w)) f
-        |      LEFT JOIN tdl td ON td.doc_id = f.doc_id
-        |      LEFT JOIN bdl bd ON bd.doc_id = f.doc_id
-        |      CROSS JOIN st),
-        |dfq AS (SELECT w, COUNT(*) AS df FROM j GROUP BY 1),
-        |sc AS (SELECT j.doc_id,
-        |         round(ln((CAST(j.t_n AS DOUBLE) - d.df + 0.5) / (d.df + 0.5)
-        |             + 1.0)
-        |           * ((2.0 * (CAST(COALESCE(j.tf_t, 0) AS DOUBLE)
-        |               / (0.25 + 0.75 * COALESCE(j.dl_t, 0)
-        |                  / (CAST(j.t_tot AS DOUBLE) / j.t_n)))
-        |             + (CAST(COALESCE(j.tf_b, 0) AS DOUBLE)
-        |               / (0.25 + 0.75 * COALESCE(j.dl_b, 0)
-        |                  / (CAST(j.b_tot AS DOUBLE) / j.b_n))))
-        |           / (1.2 + (2.0 * (CAST(COALESCE(j.tf_t, 0) AS DOUBLE)
-        |               / (0.25 + 0.75 * COALESCE(j.dl_t, 0)
-        |                  / (CAST(j.t_tot AS DOUBLE) / j.t_n)))
-        |             + (CAST(COALESCE(j.tf_b, 0) AS DOUBLE)
-        |               / (0.25 + 0.75 * COALESCE(j.dl_b, 0)
-        |                  / (CAST(j.b_tot AS DOUBLE) / j.b_n)))))), 12)
-        |           AS sterm
-        |       FROM j JOIN dfq d USING (w))
-        |SELECT doc_id,
-        |  round(CAST(SUM(CAST(sterm AS DECIMAL(27,14))) AS DOUBLE), 9) AS bm25f
-        |FROM sc GROUP BY 1 ORDER BY bm25f DESC, doc_id LIMIT 20""".stripMargin,
-
-    "q349_ccf_lag" ->
-      s"""$evCte,
-         |daily AS (SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS x
-         |          FROM ev WHERE event_type IN ('click', 'purchase')
-         |          GROUP BY 1, 2),
-         |a AS (SELECT day, x AS xa FROM daily WHERE event_type = 'click'),
-         |b AS (SELECT day, x AS xb FROM daily WHERE event_type = 'purchase'),
-         |lg AS (SELECT unnest(generate_series(-7, 7)) AS lag),
-         |p AS (SELECT lg.lag, a.xa, b.xb
-         |      FROM a CROSS JOIN lg
-         |      JOIN b ON b.day = a.day + CAST(lg.lag AS INT)),
-         |st AS (SELECT lag, COUNT(*) AS n,
-         |         CAST(SUM(CAST(xa AS DECIMAL(38,0))) AS DOUBLE) AS sa,
-         |         CAST(SUM(CAST(xb AS DECIMAL(38,0))) AS DOUBLE) AS sb,
-         |         CAST(SUM(CAST(xa * xb AS DECIMAL(38,0))) AS DOUBLE) AS sab,
-         |         CAST(SUM(CAST(xa * xa AS DECIMAL(38,0))) AS DOUBLE) AS saa,
-         |         CAST(SUM(CAST(xb * xb AS DECIMAL(38,0))) AS DOUBLE) AS sbb
-         |       FROM p GROUP BY 1 HAVING COUNT(*) > 2)
-         |SELECT CAST(lag AS INT) AS lag, CAST(n AS BIGINT) AS n_days,
-         |  round((CAST(n AS DOUBLE) * sab - sa * sb)
-         |    / sqrt((CAST(n AS DOUBLE) * saa - sa * sa)
-         |      * (CAST(n AS DOUBLE) * sbb - sb * sb)), 9) AS ccf
-         |FROM st ORDER BY lag""".stripMargin,
-
-    "q350_datasheet" ->
-      s"""$qualityDocCte,
-         |f AS (SELECT d.doc_id, d.lang, d.source, md5(doc.text) AS h,
-         |        len(regexp_extract_all(doc.text, '\\S+')) AS ws,
-         |        round(d.score, 9) AS q
-         |      FROM d JOIN documents doc USING (doc_id)),
-         |base AS (SELECT COUNT(*) AS n_docs, SUM(ws) AS n_tokens,
-         |           COUNT(DISTINCT h) AS n_unique,
-         |           SUM(CAST(q AS DECIMAL(27,10))) AS qsum FROM f),
-         |vn AS (SELECT COUNT(DISTINCT w) AS vocab_size FROM
-         |       (SELECT unnest(string_split(lower(text), ' ')) AS w
-         |        FROM documents) WHERE len(w) > 0),
-         |tl AS (SELECT lang AS top_lang, COUNT(*) AS nl FROM f GROUP BY 1
-         |       ORDER BY nl DESC, lang LIMIT 1),
-         |tsrc AS (SELECT source AS top_source, SUM(ws) AS st FROM f GROUP BY 1
-         |         ORDER BY st DESC, source LIMIT 1)
-         |SELECT CAST(n_docs AS BIGINT) AS n_docs,
-         |  CAST(n_tokens AS BIGINT) AS n_tokens,
-         |  CAST(vocab_size AS BIGINT) AS vocab_size,
-         |  round(1.0 - CAST(n_unique AS DOUBLE) / CAST(n_docs AS DOUBLE), 9)
-         |    AS dup_rate,
-         |  round(CAST(qsum AS DOUBLE) / CAST(n_docs AS DOUBLE), 9)
-         |    AS mean_quality,
-         |  top_lang,
-         |  round(CAST(nl AS DOUBLE) / CAST(n_docs AS DOUBLE), 9)
-         |    AS top_lang_share,
-         |  top_source,
-         |  round(CAST(st AS DOUBLE) / CAST(n_tokens AS DOUBLE), 9)
-         |    AS top_source_token_share
-         |FROM base, vn, tl, tsrc""".stripMargin,
-
-    "q351_negbin_fit" ->
-      s"""$evCte,
-         |daily AS (SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS x
-         |          FROM ev GROUP BY 1, 2),
-         |st AS (SELECT event_type, COUNT(*) AS n,
-         |         SUM(CAST(x AS HUGEINT)) AS sx,
-         |         SUM(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx
-         |       FROM daily GROUP BY 1 HAVING COUNT(*) > 1),
-         |c AS (SELECT event_type, n,
-         |        CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) AS m,
-         |        (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-         |          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-         |          / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) AS v
-         |      FROM st)
-         |SELECT event_type, CAST(n AS BIGINT) AS n_days, round(m, 9) AS mean,
-         |  round(v, 9) AS variance, (v > m) AS overdispersed,
-         |  CASE WHEN v > m THEN round(m / v, 9) END AS p_hat,
-         |  CASE WHEN v > m THEN round(m * m / (v - m), 9) END AS r_hat
-         |FROM c ORDER BY event_type""".stripMargin,
-
-    "q352_good_turing" ->
-      """WITH w0 AS (SELECT source, unnest(string_split(lower(text), ' ')) AS w
-        |  FROM documents),
-        |ww AS (SELECT source, w FROM w0 WHERE len(w) > 0),
-        |f AS (SELECT source, w, COUNT(*) AS f FROM ww GROUP BY 1, 2)
-        |SELECT source, CAST(SUM(f) AS BIGINT) AS n_tokens,
-        |  CAST(COUNT(*) AS BIGINT) AS vocab,
-        |  CAST(SUM(CASE WHEN f = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_singletons,
-        |  round(CAST(SUM(CASE WHEN f = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / CAST(SUM(f) AS DOUBLE), 9) AS unseen_mass
-        |FROM f GROUP BY 1 ORDER BY source""".stripMargin,
-
-    "q353_hash_collisions" ->
-      """WITH h AS (SELECT CAST(CAST(concat('0x', substr(md5(
-        |    CAST(l_orderkey AS VARCHAR) || '_' || CAST(l_linenumber AS VARCHAR)),
-        |    1, 8)) AS UINT64) AS BIGINT) AS b FROM lineitem),
-        |buckets AS (SELECT b, COUNT(*) AS cnt FROM h GROUP BY 1),
-        |a AS (SELECT SUM(cnt) AS n, COUNT(*) AS n_buckets,
-        |        SUM(cnt * (cnt - 1) // 2) AS observed FROM buckets)
-        |SELECT CAST(n AS BIGINT) AS n, CAST(n_buckets AS BIGINT) AS n_buckets,
-        |  CAST(observed AS BIGINT) AS observed,
-        |  round(CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)
-        |    / 8589934592.0, 9) AS expected,
-        |  CASE WHEN observed > 0 THEN
-        |    round(CAST(observed AS DOUBLE) / (CAST(n AS DOUBLE)
-        |      * (CAST(n AS DOUBLE) - 1.0) / 8589934592.0), 9) END AS obs_over_exp
-        |FROM a""".stripMargin,
-
-    "q354_ivf_recall_curve" ->
-      s"""$kmeansBaseCte,
-         |${kmeansIterCte(1)},
-         |ac AS (SELECT vec_id, cid FROM (
-         |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY list_distance(e.emb, c.cvec), c.cid) AS rk
-         |    FROM e, cent1 c) WHERE rk = 1),
-         |pq AS (SELECT vec_id AS query_id, cid, rk AS probe_rk FROM (
-         |    SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY list_distance(e.emb, c.cvec), c.cid) AS rk
-         |    FROM e, cent1 c WHERE e.vec_id < 10) WHERE rk <= 3),
-         |cand AS (SELECT p.query_id, p.probe_rk, a.vec_id AS neighbor_id,
-         |           list_cosine_similarity(eq.emb, ea.emb) AS cosine
-         |         FROM pq p JOIN ac a USING (cid)
-         |         JOIN e eq ON eq.vec_id = p.query_id
-         |         JOIN e ea ON ea.vec_id = a.vec_id
-         |         WHERE a.vec_id <> p.query_id),
-         |brute AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT eq.vec_id AS query_id, ea.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY eq.vec_id
-         |        ORDER BY list_cosine_similarity(eq.emb, ea.emb) DESC,
-         |          ea.vec_id) AS rank
-         |    FROM e eq, e ea WHERE eq.vec_id < 10 AND ea.vec_id <> eq.vec_id)
-         |  WHERE rank <= 5),
-         |bt AS (SELECT COUNT(*) AS n_true FROM brute),
-         |t1 AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id, row_number() OVER (
-         |      PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-         |    FROM cand WHERE probe_rk <= 1) WHERE rank <= 5),
-         |t2 AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id, row_number() OVER (
-         |      PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-         |    FROM cand WHERE probe_rk <= 2) WHERE rank <= 5),
-         |t3 AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id, row_number() OVER (
-         |      PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-         |    FROM cand WHERE probe_rk <= 3) WHERE rank <= 5),
-         |h1 AS (SELECT COUNT(*) AS n_hits FROM t1 JOIN brute
-         |       USING (query_id, neighbor_id)),
-         |h2 AS (SELECT COUNT(*) AS n_hits FROM t2 JOIN brute
-         |       USING (query_id, neighbor_id)),
-         |h3 AS (SELECT COUNT(*) AS n_hits FROM t3 JOIN brute
-         |       USING (query_id, neighbor_id))
-         |SELECT CAST(nprobe AS INT) AS nprobe, CAST(n_hits AS BIGINT) AS n_hits,
-         |  CAST(n_true AS BIGINT) AS n_true,
-         |  round(CAST(n_hits AS DOUBLE) / CAST(n_true AS DOUBLE), 9)
-         |    AS recall_at_5
-         |FROM (SELECT 1 AS nprobe, n_hits FROM h1
-         |      UNION ALL SELECT 2, n_hits FROM h2
-         |      UNION ALL SELECT 3, n_hits FROM h3), bt
-         |ORDER BY nprobe""".stripMargin,
-
-    "q355_tail_dependence" ->
-      s"""$evCte,
-         |daily AS (SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS x
-         |          FROM ev WHERE event_type IN ('click', 'purchase')
-         |          GROUP BY 1, 2),
-         |thr AS (SELECT event_type,
-         |          round(quantile_cont(CAST(x AS DOUBLE), 0.75), 9) AS q75
-         |        FROM daily GROUP BY 1),
-         |fl AS (SELECT d.day, d.event_type,
-         |         CASE WHEN CAST(d.x AS DOUBLE) > t.q75 THEN 1 ELSE 0 END AS exc
-         |       FROM daily d JOIN thr t USING (event_type)),
-         |a AS (SELECT day, exc AS ea FROM fl WHERE event_type = 'click'),
-         |b AS (SELECT day, exc AS eb FROM fl WHERE event_type = 'purchase'),
-         |j AS (SELECT a.ea, b.eb FROM a JOIN b USING (day)),
-         |st AS (SELECT COUNT(*) AS n_days, SUM(ea) AS nce, SUM(eb) AS npe,
-         |         SUM(ea * eb) AS nj FROM j)
-         |SELECT CAST(n_days AS BIGINT) AS n_days, CAST(nce AS BIGINT)
-         |    AS n_click_exc,
-         |  CAST(npe AS BIGINT) AS n_purch_exc, CAST(nj AS BIGINT) AS n_joint,
-         |  CASE WHEN nce > 0 THEN
-         |    round(CAST(nj AS DOUBLE) / CAST(nce AS DOUBLE), 9) END AS chi_hat,
-         |  round(CAST(npe AS DOUBLE) / CAST(n_days AS DOUBLE), 9)
-         |    AS independence_baseline
-         |FROM st""".stripMargin,
-
-    "q356_runs_test" ->
-      s"""$evCte,
-         |daily AS (SELECT CAST(ts AS DATE) AS day, COUNT(*) AS x
-         |          FROM ev GROUP BY 1),
-         |l AS (SELECT day, x, x - lag(x) OVER (ORDER BY day) AS d FROM daily),
-         |sg AS (SELECT day, CASE WHEN d > 0 THEN 1 ELSE -1 END AS s
-         |       FROM l WHERE d IS NOT NULL AND d <> 0),
-         |p AS (SELECT s, lag(s) OVER (ORDER BY day) AS prev FROM sg),
-         |st AS (SELECT COUNT(*) AS n,
-         |         SUM(CASE WHEN s = 1 THEN 1 ELSE 0 END) AS np,
-         |         SUM(CASE WHEN s = -1 THEN 1 ELSE 0 END) AS nm,
-         |         SUM(CASE WHEN prev IS NULL OR prev <> s THEN 1 ELSE 0 END)
-         |           AS runs
-         |       FROM p)
-         |SELECT CAST(n AS BIGINT) AS n_moves, CAST(np AS BIGINT) AS n_up,
-         |  CAST(nm AS BIGINT) AS n_down, CAST(runs AS BIGINT) AS runs,
-         |  round(1.0 + 2.0 * CAST(np AS DOUBLE) * CAST(nm AS DOUBLE)
-         |    / CAST(n AS DOUBLE), 9) AS expected_runs,
-         |  round((CAST(runs AS DOUBLE)
-         |      - (1.0 + 2.0 * CAST(np AS DOUBLE) * CAST(nm AS DOUBLE)
-         |         / CAST(n AS DOUBLE)))
-         |    / sqrt(((1.0 + 2.0 * CAST(np AS DOUBLE) * CAST(nm AS DOUBLE)
-         |         / CAST(n AS DOUBLE)) - 1.0)
-         |      * ((1.0 + 2.0 * CAST(np AS DOUBLE) * CAST(nm AS DOUBLE)
-         |         / CAST(n AS DOUBLE)) - 2.0) / (CAST(n AS DOUBLE) - 1.0)), 9)
-         |    AS z
-         |FROM st WHERE np > 0 AND nm > 0 AND n > 2""".stripMargin,
-
-    "q357_theil_decomposition" ->
-      """WITH d AS (SELECT source, len(regexp_extract_all(text, '\S+')) AS ws
-        |  FROM documents),
-        |f AS (SELECT source, ws FROM d WHERE ws > 0),
-        |g AS (SELECT source, COUNT(*) AS ng, SUM(ws) AS tg,
-        |        CAST(SUM(ws) AS DOUBLE) / COUNT(*) AS mug FROM f GROUP BY 1),
-        |tot AS (SELECT SUM(ng) AS n, SUM(tg) AS t,
-        |          CAST(SUM(tg) AS DOUBLE) / SUM(ng) AS mu FROM g),
-        |w AS (SELECT f.source, g.ng, g.mug,
-        |        SUM(CAST(round(CAST(f.ws AS DOUBLE) / g.mug
-        |          * ln(CAST(f.ws AS DOUBLE) / g.mug), 12) AS DECIMAL(27,14)))
-        |          AS tsum
-        |      FROM f JOIN g USING (source) GROUP BY 1, 2, 3),
-        |w2 AS (SELECT source, ng, mug,
-        |         round(CAST(tsum AS DOUBLE) / CAST(ng AS DOUBLE), 12)
-        |           AS tg_within FROM w),
-        |parts AS (SELECT w2.source,
-        |            round(CAST(w2.ng AS DOUBLE) * w2.mug / CAST(tot.t AS DOUBLE)
-        |              * w2.tg_within, 12) AS w_contrib,
-        |            round(CAST(w2.ng AS DOUBLE) * w2.mug / CAST(tot.t AS DOUBLE)
-        |              * ln(w2.mug / tot.mu), 12) AS b_contrib
-        |          FROM w2, tot),
-        |agg AS (SELECT
-        |          CAST(SUM(CAST(w_contrib AS DECIMAL(27,14))) AS DOUBLE) AS tw,
-        |          CAST(SUM(CAST(b_contrib AS DECIMAL(27,14))) AS DOUBLE) AS tb
-        |        FROM parts)
-        |SELECT round(tw, 9) AS theil_within, round(tb, 9) AS theil_between,
-        |  round(tw + tb, 9) AS theil_total,
-        |  round(tb / (tw + tb), 9) AS between_share
-        |FROM agg""".stripMargin,
-
-    "q358_bowley_skew" ->
-      s"""$evCte,
-         |q AS (SELECT event_type,
-         |        round(quantile_cont(value, 0.25), 9) AS q1,
-         |        round(quantile_cont(value, 0.5), 9) AS q2,
-         |        round(quantile_cont(value, 0.75), 9) AS q3
-         |      FROM ev GROUP BY 1)
-         |SELECT event_type, q1, q2, q3,
-         |  round((q3 + q1 - 2.0 * q2) / (q3 - q1), 9) AS bowley_skew
-         |FROM q WHERE q3 > q1 ORDER BY event_type""".stripMargin,
-
-    "q359_mcnemar" ->
-      """WITH f AS (SELECT len(regexp_extract_all(text, '\S+')) AS ws,
-        |    len(regexp_extract_all(text, '\S*[A-Za-z]\S*')) AS aw,
-        |    len(regexp_extract_all(lower(text),
-        |        '\b(the|and|of|to|a|in|is|that|it|for)\b')) AS sw
-        |  FROM documents),
-        |g AS (SELECT (aw * 5 >= ws * 4) AS ga, (sw * 100 >= ws * 3) AS gs
-        |      FROM f WHERE ws > 0),
-        |a AS (SELECT COUNT(*) AS n,
-        |        SUM(CASE WHEN ga AND gs THEN 1 ELSE 0 END) AS nb,
-        |        SUM(CASE WHEN ga AND NOT gs THEN 1 ELSE 0 END) AS only_a,
-        |        SUM(CASE WHEN NOT ga AND gs THEN 1 ELSE 0 END) AS only_s,
-        |        SUM(CASE WHEN NOT ga AND NOT gs THEN 1 ELSE 0 END) AS neither
-        |      FROM g)
-        |SELECT CAST(n AS BIGINT) AS n, CAST(nb AS BIGINT) AS n_both,
-        |  CAST(only_a AS BIGINT) AS only_a, CAST(only_s AS BIGINT) AS only_s,
-        |  CAST(neither AS BIGINT) AS neither,
-        |  round(CAST(only_a - only_s AS DOUBLE) * CAST(only_a - only_s AS DOUBLE)
-        |    / CAST(only_a + only_s AS DOUBLE), 9) AS mcnemar_chi2,
-        |  round(CAST(abs(only_a - only_s) - 1 AS DOUBLE)
-        |    * CAST(abs(only_a - only_s) - 1 AS DOUBLE)
-        |    / CAST(only_a + only_s AS DOUBLE), 9) AS mcnemar_cc
-        |FROM a WHERE only_a + only_s > 0""".stripMargin,
-
-    "q360_lift_chart" ->
-      """WITH f AS (SELECT doc_id, lang,
-        |  least(CAST(len(regexp_extract_all(text, '\S+')) AS DOUBLE) / 100.0, 1.0) AS f_tok,
-        |  CASE WHEN len(regexp_extract_all(text, '\S+')) = 0 THEN 0.0
-        |       ELSE CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|to|a|in|is|that|it|for)\b')) AS DOUBLE)
-        |            / len(regexp_extract_all(text, '\S+')) END AS f_stop,
-        |  CASE WHEN length(text) = 0 THEN 0.0
-        |       ELSE CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / length(text) END AS f_alpha,
-        |  CASE WHEN length(text) = 0 THEN 0.0
-        |       ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g')) AS DOUBLE) / length(text) END AS f_punct
-        |FROM documents),
-        |z AS (SELECT doc_id,
-        |        round(1.0 / (1.0 + exp(-(f_tok * 1.2 + f_stop * 2.0
-        |          + f_alpha * 1.5 + f_punct * (-3.0) + (-1.0)))), 9) AS p,
-        |        CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-        |      FROM f),
-        |rk AS (SELECT p, y,
-        |         row_number() OVER (ORDER BY p DESC, doc_id) - 1 AS rid
-        |       FROM z),
-        |nt AS (SELECT COUNT(*) AS n, SUM(y) AS pos FROM z),
-        |dec AS (SELECT (rid * 10) // nt.n AS decile, COUNT(*) AS n_docs,
-        |          SUM(y) AS n_pos, MAX(nt.n) AS n, MAX(nt.pos) AS pos
-        |        FROM rk CROSS JOIN nt GROUP BY 1),
-        |cum AS (SELECT *, SUM(n_pos) OVER (ORDER BY decile
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_pos
-        |        FROM dec)
-        |SELECT CAST(decile AS INT) AS decile, CAST(n_docs AS BIGINT) AS n_docs,
-        |  CAST(n_pos AS BIGINT) AS n_pos,
-        |  round(CAST(n_pos AS DOUBLE) / CAST(n_docs AS DOUBLE), 9)
-        |    AS response_rate,
-        |  round(CAST(n_pos AS DOUBLE) / CAST(n_docs AS DOUBLE)
-        |    / (CAST(pos AS DOUBLE) / CAST(n AS DOUBLE)), 9) AS lift,
-        |  round(CAST(cum_pos AS DOUBLE) / CAST(pos AS DOUBLE), 9) AS cum_gain
-        |FROM cum ORDER BY decile""".stripMargin,
-
-    // the oracle recomputes q361's image arithmetic directly: the Spark
-    // side must recover EXACTLY these dims and (to 1e-6) this luminance
-    // from real decoded pixels, or the hash breaks
-    "q361_image_decode" ->
-      """WITH f AS (SELECT
-        |    CAST(8 + (n_chars % 48) AS BIGINT) AS width,
-        |    CAST(8 + (doc_id % 24) AS BIGINT) AS height,
-        |    CAST(FLOOR((0.299 * (doc_id % 256) + 0.587 * ((doc_id * 7) % 256)
-        |      + 0.114 * ((doc_id * 13) % 256)) * 1e6 + 0.5) AS BIGINT) AS lum_u6
-        |  FROM documents)
-        |SELECT width, height, COUNT(*) AS n_images,
-        |  CAST(SUM(lum_u6) AS BIGINT) AS lum_sum_u6
-        |FROM f GROUP BY 1, 2 ORDER BY width, height""".stripMargin,
-
-    // the oracle replays q362's planted dims: the Spark side must
-    // recover exactly these from REAL XObject/inline-image dict parsing
-    "q362_pdf_planted_dims" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 2 = 0 THEN 2 ELSE 1 END AS BIGINT) AS n_imgs,
-        |  CAST(100 + doc_id % 200 AS BIGINT) AS xo_w,
-        |  CAST(50 + n_chars % 150 AS BIGINT) AS xo_h,
-        |  CAST(CASE WHEN doc_id % 2 = 0 THEN 10 + doc_id % 90 ELSE 0 END AS BIGINT) AS in_w,
-        |  CAST(CASE WHEN doc_id % 2 = 0 THEN 20 + doc_id % 70 ELSE 0 END AS BIGINT) AS in_h
-        |FROM documents""".stripMargin,
-
-    // q363: planted per-page word/image counts through real PDFs; the
-    // oracle replays the arithmetic + the tagging precedence
-    // (min-words before max-images, explodePages order)
-    "q363_pdf_channels" ->
-      """WITH pages AS (
-        |  SELECT d.doc_id, i.g AS g,
-        |    1 + ((d.doc_id + i.g) % 8) AS wc,
-        |    (d.doc_id + i.g) % 3 AS m
-        |  FROM documents d, LATERAL unnest(generate_series(0, d.doc_id % 3)) AS i(g)
-        |)
-        |SELECT status, error_message, COUNT(*) AS count FROM (
-        |  SELECT CASE WHEN wc < 5 OR m > 1 THEN 'failed_to_extract'
-        |              ELSE 'success' END AS status,
-        |         CASE WHEN wc < 5 THEN 'too few words'
-        |              WHEN m > 1 THEN 'too many images' END AS error_message
-        |  FROM pages) t GROUP BY 1, 2""".stripMargin,
-
-    // q364: encrypted PDFs — empty-user-password docs decode to the
-    // planted per-page word counts; password-locked docs (doc_id%5=0)
-    // fail CLOSED. The oracle replays the planted arithmetic.
-    "q364_pdf_encrypted" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 5 = 0 THEN 0 ELSE 1 END AS BIGINT) AS ok,
-        |  CAST(CASE WHEN doc_id % 5 = 0 THEN NULL
-        |            ELSE 1 + doc_id % 3 END AS BIGINT) AS n_pages,
-        |  CAST(CASE WHEN doc_id % 5 = 0 THEN NULL ELSE
-        |    (1 + doc_id % 8)
-        |    + CASE WHEN doc_id % 3 >= 1 THEN 1 + (doc_id + 1) % 8 ELSE 0 END
-        |    + CASE WHEN doc_id % 3 >= 2 THEN 1 + (doc_id + 2) % 8 ELSE 0 END
-        |  END AS BIGINT) AS total_words
-        |FROM documents""".stripMargin,
-
-    // q365: charset detection — the oracle replays the planted charset
-    // names and per-class word counts
-    "q365_charset_detect" ->
-      """SELECT doc_id,
-        |  CASE doc_id % 4 WHEN 0 THEN 'UTF-8' WHEN 1 THEN 'windows-1251'
-        |       WHEN 2 THEN 'Shift_JIS' ELSE 'windows-1252' END AS cs,
-        |  CAST(CASE doc_id % 4 WHEN 0 THEN 7 WHEN 1 THEN 8
-        |       WHEN 2 THEN 3 ELSE 6 END AS BIGINT) AS n_words
-        |FROM documents""".stripMargin,
-
-    // q366: WARC revisit + digest dedup — the oracle replays the
-    // planted record layout (k-th record of doc d: revisit when k odd,
-    // digest (d*7+k*13)%50) and keeps min uri per digest over the
-    // response records only
-    "q366_warc_revisit_dedup" ->
-      """WITH recs AS (
-        |  SELECT 'sha1:D' || CAST((d.doc_id * 7 + i.g * 13) % 50 AS VARCHAR) AS payload_digest,
-        |         'http://ex.com/' || CAST(d.doc_id AS VARCHAR) || '/' || CAST(i.g AS VARCHAR) AS target_uri,
-        |         i.g % 2 AS is_revisit
-        |  FROM documents d, LATERAL unnest(generate_series(0, d.doc_id % 3)) AS i(g)
-        |)
-        |SELECT payload_digest, CAST(1 AS BIGINT) AS n_kept,
-        |       MIN(target_uri) AS keep_uri
-        |FROM recs WHERE is_revisit = 0
-        |GROUP BY payload_digest ORDER BY payload_digest""".stripMargin,
-
-    // q367: the composed WARC -> HTTP -> PDF -> pages path; the oracle
-    // replays the planted per-page word/image arithmetic
-    "q367_warc_pdf_e2e" ->
-      """SELECT doc_id,
-        |  CAST(200 AS BIGINT) AS http_status,
-        |  'application/pdf' AS mime,
-        |  CAST(1 + doc_id % 2 AS BIGINT) AS n_pages,
-        |  CAST((2 + doc_id % 6)
-        |    + CASE WHEN doc_id % 2 = 1 THEN 2 + (doc_id + 1) % 6 ELSE 0 END
-        |    AS BIGINT) AS total_words,
-        |  CAST(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END AS BIGINT) AS total_imgs
-        |FROM documents""".stripMargin,
-
-    // q368: meta-robots policy — only noindex/none blocks (nofollow
-    // alone and meta-less pages pass)
-    "q368_meta_robots" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END AS BIGINT) AS blocked
-        |FROM documents""".stripMargin,
-
-    // q369: embedded-font decode — codes map through TrueType cmap/post
-    // (or Type 1 dup-encoding) programs; the oracle replays the planted
-    // letter/word-shape arithmetic
-    "q369_pdf_embedded_font" ->
-      """SELECT doc_id,
-        |  CAST(1 + doc_id % 7 AS BIGINT) AS n_words,
-        |  CAST((1 + doc_id % 7) * (3 + doc_id % 4) AS BIGINT) AS n_letters,
-        |  chr(97 + CAST(doc_id % 26 AS INTEGER)) AS first_char
-        |FROM documents""".stripMargin,
-
-    // q370: in-PDF image payloads — the oracle replays the planted
-    // dims (both legs) and, on the lossless raw-Flate→PNG leg only,
-    // the exact uniform-fill luminance (JPEG is lossy by design)
-    "q370_pdf_image_payload" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 2 = 0 THEN 8 + doc_id % 16
-        |            ELSE 16 + doc_id % 20 END AS BIGINT) AS w,
-        |  CAST(CASE WHEN doc_id % 2 = 0 THEN 8 + doc_id % 8
-        |            ELSE 16 + doc_id % 12 END AS BIGINT) AS h,
-        |  CAST(CASE WHEN doc_id % 2 = 0 THEN
-        |    FLOOR((0.299 * (doc_id % 256) + 0.587 * ((doc_id * 7) % 256)
-        |      + 0.114 * ((doc_id * 13) % 256)) * 1e6 + 0.5)
-        |  END AS BIGINT) AS lum_u6
-        |FROM documents""".stripMargin,
-
-    // q371: base64 data-URI round-trip — the oracle replays the
-    // planted dims + exact uniform-fill luminance
-    "q371_pdf_datauri_roundtrip" ->
-      """SELECT doc_id,
-        |  CAST(8 + doc_id % 10 AS BIGINT) AS w,
-        |  CAST(8 + doc_id % 6 AS BIGINT) AS h,
-        |  CAST(FLOOR((0.299 * ((doc_id * 3) % 256)
-        |    + 0.587 * ((doc_id * 11) % 256)
-        |    + 0.114 * ((doc_id * 17) % 256)) * 1e6 + 0.5) AS BIGINT) AS lum_u6
-        |FROM documents""".stripMargin,
-
-    // q373: synthetic-hash band-tier probe — the oracle rebuilds the
-    // same 64-bit md5-derived hashes (hex → UBIGINT → two's-complement
-    // BIGINT), replays the 4×16-bit band join over distinct hashes and
-    // the star/representative edge emission, and aggregates identically
-    "q373_phash_band_probe" ->
-      """WITH d0 AS (SELECT doc_id,
-        |    md5(CAST(doc_id AS VARCHAR)) AS m,
-        |    md5(CAST(doc_id - 1 AS VARCHAR)) AS mp FROM documents),
-        |i64 AS (SELECT doc_id,
-        |    CAST(CASE WHEN vb >= 9223372036854775808::HUGEINT
-        |      THEN vb - 18446744073709551616::HUGEINT ELSE vb END AS BIGINT) AS hb,
-        |    CAST(CASE WHEN vp >= 9223372036854775808::HUGEINT
-        |      THEN vp - 18446744073709551616::HUGEINT ELSE vp END AS BIGINT) AS hp
-        |  FROM (SELECT doc_id,
-        |    CAST(CAST('0x' || substring(m, 1, 16) AS UBIGINT) AS HUGEINT) AS vb,
-        |    CAST(CAST('0x' || substring(mp, 1, 16) AS UBIGINT) AS HUGEINT) AS vp
-        |    FROM d0)),
-        |hh AS (SELECT doc_id, CASE WHEN doc_id % 10 = 9
-        |    THEN xor(hp, CASE (doc_id // 10) % 3
-        |      WHEN 0 THEN 128 WHEN 1 THEN 8589934720
-        |      ELSE 36028805608898688 END)
-        |    ELSE hb END AS h FROM i64),
-        |reps AS (SELECT h, MIN(doc_id) AS rep FROM hh GROUP BY 1),
-        |ex AS (SELECT r.rep AS key_a, t.doc_id AS key_b, 0 AS ham
-        |       FROM hh t JOIN reps r USING (h) WHERE t.doc_id <> r.rep),
-        |bands AS (SELECT h, t.b AS b, ((h >> (16 * t.b)) & 65535) AS v
-        |          FROM reps, range(4) t(b)),
-        |cand AS (SELECT DISTINCT a.h AS ha, c.h AS hc
-        |         FROM bands a JOIN bands c USING (b, v) WHERE a.h < c.h),
-        |np AS (SELECT ha, hc, bit_count(xor(ha, hc)) AS ham FROM cand
-        |       WHERE bit_count(xor(ha, hc)) BETWEEN 1 AND 3),
-        |nr AS (SELECT least(ra.rep, rc.rep) AS key_a,
-        |         greatest(ra.rep, rc.rep) AS key_b, np.ham
-        |       FROM np JOIN reps ra ON np.ha = ra.h
-        |       JOIN reps rc ON np.hc = rc.h),
-        |alle AS (SELECT * FROM ex UNION ALL SELECT * FROM nr)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
-        |  CAST(SUM(CASE WHEN ham = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_h1,
-        |  CAST(SUM(CASE WHEN ham = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_h2,
-        |  CAST(SUM(CASE WHEN ham = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_h3,
-        |  CAST(SUM(CASE WHEN key_b = key_a + 1 AND key_b % 10 = 9
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_planted,
-        |  CAST(SUM(key_a + key_b) AS BIGINT) AS key_sum
-        |FROM alle""".stripMargin,
-
-    // q374: CCITT G4 scanned-image payloads — the oracle replays the
-    // planted dims and the bilevel mean luminance: 255·nwhite/(w·h),
-    // where /BlackIs1 swaps which planted run class renders white
-    // (CCITT-black → sample 1 → white under DeviceGray)
-    "q374_pdf_ccitt_g4" ->
-      """WITH p AS (SELECT doc_id,
-        |    24 + doc_id % 8 AS w, 10 + doc_id % 5 AS h,
-        |    2 + (doc_id // 4) % 4 AS len0, doc_id % 2 = 1 AS b1
-        |  FROM documents)
-        |SELECT doc_id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |  CAST(FLOOR((255.0 * (CASE WHEN b1 THEN len0 * h
-        |    ELSE (w - len0) * h END)) / (w * h) * 1e6 + 0.5) AS BIGINT)
-        |    AS lum_u6
-        |FROM p""".stripMargin,
-
-    // q375: Indexed / ICCBased color spaces — the oracle replays the
-    // planted palette entry (variants 0/1) or direct fill (variant 2)
-    "q375_pdf_colorspaces" ->
-      """WITH p AS (SELECT doc_id,
-        |    8 + doc_id % 8 AS w, 6 + doc_id % 6 AS h,
-        |    CASE WHEN doc_id % 3 = 2 THEN (doc_id * 5) % 256
-        |         ELSE (doc_id * (3 + doc_id % 4)) % 256 END AS r,
-        |    CASE WHEN doc_id % 3 = 2 THEN (doc_id * 9) % 256
-        |         ELSE (doc_id * (7 + doc_id % 4)) % 256 END AS g,
-        |    CASE WHEN doc_id % 3 = 2 THEN (doc_id * 13) % 256
-        |         ELSE (doc_id * (11 + doc_id % 4)) % 256 END AS b
-        |  FROM documents)
-        |SELECT doc_id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |  CAST(FLOOR((0.299 * r + 0.587 * g + 0.114 * b) * 1e6 + 0.5)
-        |    AS BIGINT) AS lum_u6
-        |FROM p""".stripMargin,
-
-    // q376: G3 CCITT legs — oracle replays planted run arithmetic with
-    // the /Decode [1 0] inversion flipping the bright count
-    "q376_pdf_ccitt_g3" ->
-      """WITH p AS (SELECT doc_id,
-        |    4 + doc_id % 4 AS p0, 2 + (doc_id // 4) % 4 AS len0,
-        |    8 + doc_id % 8 AS rest, 6 + doc_id % 5 AS h,
-        |    doc_id % 3 = 0 AS dec10
-        |  FROM documents),
-        |q AS (SELECT doc_id, p0 + len0 + rest AS w, h, len0, dec10 FROM p)
-        |SELECT doc_id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |  CAST(FLOOR((255.0 * (CASE WHEN dec10 THEN len0 * h
-        |    ELSE (w - len0) * h END)) / (w * h) * 1e6 + 0.5) AS BIGINT)
-        |    AS lum_u6
-        |FROM q""".stripMargin,
-
-    // q377: 1/2/4-bpc rasters — oracle replays the planted split-
-    // column bitmap, uniform 2-bpc level, and 4-bpc palette color
-    "q377_pdf_lowbpc" ->
-      """WITH p AS (SELECT doc_id, 10 + doc_id % 7 AS w, 5 + doc_id % 6 AS h
-        |           FROM documents),
-        |v AS (SELECT doc_id, w, h,
-        |    CASE
-        |      WHEN doc_id % 3 = 0 THEN
-        |        (255.0 * (CASE WHEN doc_id % 2 = 1
-        |          THEN (w - (1 + doc_id % (w - 1))) * h
-        |          ELSE (1 + doc_id % (w - 1)) * h END)) / (w * h)
-        |      WHEN doc_id % 3 = 1 THEN CAST(85 * (doc_id % 4) AS DOUBLE)
-        |      ELSE 0.299 * ((doc_id * (3 + doc_id % 16)) % 256)
-        |         + 0.587 * ((doc_id * (7 + doc_id % 16)) % 256)
-        |         + 0.114 * ((doc_id * (11 + doc_id % 16)) % 256)
-        |    END AS lum FROM p)
-        |SELECT doc_id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |  CAST(FLOOR(lum * 1e6 + 0.5) AS BIGINT) AS lum_u6
-        |FROM v""".stripMargin,
-
-    // q378: CMYK rasters — oracle replays the §8.6.4.4 additive clamp
-    // on the planted per-doc (c,m,y,k)
-    "q378_pdf_cmyk" ->
-      """WITH p AS (SELECT doc_id,
-        |    7 + doc_id % 9 AS w, 5 + doc_id % 7 AS h,
-        |    (doc_id * 3) % 256 AS c, (doc_id * 7) % 256 AS m,
-        |    (doc_id * 11) % 256 AS y, (doc_id * 5) % 256 AS k
-        |  FROM documents),
-        |v AS (SELECT doc_id, w, h,
-        |    255 - LEAST(255, c + k) AS r, 255 - LEAST(255, m + k) AS g,
-        |    255 - LEAST(255, y + k) AS b FROM p)
-        |SELECT doc_id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |  CAST(FLOOR((0.299 * r + 0.587 * g + 0.114 * b) * 1e6 + 0.5)
-        |    AS BIGINT) AS lum_u6
-        |FROM v""".stripMargin,
-
-    // q379: JBIG2 generic regions — oracle replays the planted split
-    // geometry with /Decode [1 0] flipping the bright fraction
-    "q379_pdf_jbig2" ->
-      """WITH p AS (SELECT doc_id,
-        |    18 + doc_id % 8 AS w, 8 + doc_id % 6 AS h,
-        |    2 + doc_id % (14 + doc_id % 8) AS xsplit,
-        |    doc_id % 2 = 1 AS dec10
-        |  FROM documents)
-        |SELECT doc_id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |  CAST(FLOOR(255.0 * (CASE WHEN dec10 THEN w - xsplit
-        |    ELSE xsplit END) / w * 1e6 + 0.5) AS BIGINT) AS lum_u6
-        |FROM p""".stripMargin,
-
-    // q380: /SMask transparency — oracle replays the planted alpha
-    // geometry (split mask, inverted uniform mask, opaque) and the
-    // per-leg luminance
-    "q380_pdf_smask" ->
-      """WITH p AS (SELECT doc_id,
-        |    6 + doc_id % 6 AS w, 4 + doc_id % 5 AS h,
-        |    1 + doc_id % (5 + doc_id % 6) AS xs,
-        |    (doc_id * 3) % 256 AS r, (doc_id * 7) % 256 AS g,
-        |    (doc_id * 11) % 256 AS b, 1 + (doc_id * 5) % 255 AS a,
-        |    doc_id % 3 AS leg
-        |  FROM documents),
-        |v AS (SELECT doc_id, w, h,
-        |    CASE WHEN leg = 1 THEN 0.299 * g + 0.587 * g + 0.114 * g
-        |         ELSE 0.299 * r + 0.587 * g + 0.114 * b END AS lum,
-        |    CASE WHEN leg = 0 THEN (w - xs) * a / (255.0 * w)
-        |         WHEN leg = 1 THEN (255 - a) / 255.0
-        |         ELSE 1.0 END AS alpha
-        |  FROM p)
-        |SELECT doc_id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |  CAST(FLOOR(lum * 1e6 + 0.5) AS BIGINT) AS lum_u6,
-        |  CAST(FLOOR(alpha * 1e6 + 0.5) AS BIGINT) AS alpha_u6
-        |FROM v""".stripMargin,
-
-    // q381: /Separation spot color — oracle replays the function
-    // evaluation chain (Type 2 product, Type 0 interpolation, Type 3
-    // stitch) with the same double arithmetic order as the engine
-    "q381_pdf_separation" ->
-      """WITH p AS (SELECT doc_id,
-        |    5 + doc_id % 7 AS w, 4 + doc_id % 5 AS h,
-        |    ((doc_id * 7) % 256) / 255.0 AS t,
-        |    (doc_id * 3) % 257 AS kr, (doc_id * 5) % 257 AS kg,
-        |    (doc_id * 11) % 257 AS kb,
-        |    (doc_id * 13) % 256 AS g0, (doc_id * 17) % 256 AS g1,
-        |    (doc_id * 19) % 256 AS g2, (doc_id * 23) % 256 AS g3,
-        |    (doc_id * 29) % 257 AS ka, (doc_id * 31) % 257 AS kb2,
-        |    (doc_id * 37) % 257 AS kc,
-        |    doc_id % 3 AS leg
-        |  FROM documents),
-        |e1 AS (SELECT *, (t * 3.0) / 1.0 AS e FROM p),
-        |i1 AS (SELECT *, LEAST(CAST(FLOOR(e) AS BIGINT), 3) AS i0 FROM e1),
-        |s1 AS (SELECT *,
-        |    CASE i0 WHEN 0 THEN g0 WHEN 1 THEN g1 WHEN 2 THEN g2
-        |      ELSE g3 END AS gi0,
-        |    CASE LEAST(i0 + 1, 3) WHEN 0 THEN g0 WHEN 1 THEN g1
-        |      WHEN 2 THEN g2 ELSE g3 END AS gi1
-        |  FROM i1),
-        |v AS (SELECT doc_id, w, h, leg,
-        |    FLOOR(255 * (t * (kr / 256.0)) + 0.5) AS r0,
-        |    FLOOR(255 * (t * (kg / 256.0)) + 0.5) AS gg0,
-        |    FLOOR(255 * (t * (kb / 256.0)) + 0.5) AS b0,
-        |    FLOOR(255 * (((gi0 + (e - i0) * (gi1 - gi0)) * 1.0) / 255.0)
-        |      + 0.5) AS gray1,
-        |    FLOOR(255 * (CASE WHEN t >= 0.5
-        |        THEN kb2 / 256.0 + ((t - 0.5) * 1.0) / 0.5
-        |          * (kc / 256.0 - kb2 / 256.0)
-        |        ELSE (t * 1.0) / 0.5 * (ka / 256.0) END) + 0.5) AS gray2
-        |  FROM s1),
-        |l AS (SELECT doc_id, w, h,
-        |    CASE leg WHEN 0 THEN 0.299 * r0 + 0.587 * gg0 + 0.114 * b0
-        |      WHEN 1 THEN 0.299 * gray1 + 0.587 * gray1 + 0.114 * gray1
-        |      ELSE 0.299 * gray2 + 0.587 * gray2 + 0.114 * gray2 END AS lum
-        |  FROM v)
-        |SELECT doc_id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |  CAST(FLOOR(lum * 1e6 + 0.5) AS BIGINT) AS lum_u6
-        |FROM l""".stripMargin,
-
-    // q382: Type 4 PostScript tints — oracle replays each planted
-    // program's arithmetic (1−t, t², dup/mul chain) byte-for-byte
-    "q382_pdf_type4" ->
-      """WITH p AS (SELECT doc_id,
-        |    5 + doc_id % 8 AS w, 4 + doc_id % 6 AS h,
-        |    ((doc_id * 9) % 256) / 255.0 AS t,
-        |    doc_id % 3 AS leg
-        |  FROM documents),
-        |v AS (SELECT doc_id, w, h, leg,
-        |    FLOOR(255 * (1 - t) + 0.5) AS g0,
-        |    FLOOR(255 * (t * t) + 0.5) AS g1,
-        |    FLOOR(255 * t + 0.5) AS r2,
-        |    FLOOR(255 * (t * 0.5) + 0.5) AS gg2,
-        |    FLOOR(255 * ((t * 0.5) * 0.5) + 0.5) AS b2
-        |  FROM p),
-        |l AS (SELECT doc_id, w, h,
-        |    CASE leg WHEN 0 THEN 0.299 * g0 + 0.587 * g0 + 0.114 * g0
-        |      WHEN 1 THEN 0.299 * g1 + 0.587 * g1 + 0.114 * g1
-        |      ELSE 0.299 * r2 + 0.587 * gg2 + 0.114 * b2 END AS lum
-        |  FROM v)
-        |SELECT doc_id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |  CAST(FLOOR(lum * 1e6 + 0.5) AS BIGINT) AS lum_u6
-        |FROM l""".stripMargin,
-
-    // q383: DeviceN multi-ink tints — oracle replays both planted
-    // programs with the inks' double arithmetic
-    "q383_pdf_devicen" ->
-      """WITH p AS (SELECT doc_id,
-        |    5 + doc_id % 7 AS w, 4 + doc_id % 5 AS h,
-        |    ((doc_id * 7) % 256) / 255.0 AS t1,
-        |    ((doc_id * 11) % 256) / 255.0 AS t2,
-        |    doc_id % 2 AS leg
-        |  FROM documents),
-        |v AS (SELECT doc_id, w, h, leg,
-        |    FLOOR(255 * (1 - ((t1 + t2) * 0.5)) + 0.5) AS g0,
-        |    FLOOR(255 * t2 + 0.5) AS r1,
-        |    FLOOR(255 * t1 + 0.5) AS g1
-        |  FROM p),
-        |l AS (SELECT doc_id, w, h,
-        |    CASE leg WHEN 0 THEN 0.299 * g0 + 0.587 * g0 + 0.114 * g0
-        |      ELSE 0.299 * r1 + 0.587 * g1 + 0.114 * g1 END AS lum
-        |  FROM v)
-        |SELECT doc_id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |  CAST(FLOOR(lum * 1e6 + 0.5) AS BIGINT) AS lum_u6
-        |FROM l""".stripMargin,
-
-    // q384: JPX payloads -- dims from the SIZ segment, luminance absent
-    "q384_pdf_jpx" ->
-      """SELECT doc_id, CAST(20 + doc_id % 16 AS BIGINT) AS w,
-        |  CAST(12 + doc_id % 10 AS BIGINT) AS h,
-        |  CAST(NULL AS BIGINT) AS lum_u6
-        |FROM documents""".stripMargin,
-
-    // q385: CMYK JPEG features -- the oracle replays the planted
-    // (c,m,y,k) through the additive clamp; the Adobe inversion is a
-    // fixture-side storage detail the decoder must undo exactly
-    "q385_pdf_cmyk_jpeg" ->
-      """WITH p AS (SELECT doc_id,
-        |    7 + doc_id % 9 AS w, 5 + doc_id % 7 AS h,
-        |    (doc_id * 3) % 256 AS c, (doc_id * 7) % 256 AS m,
-        |    (doc_id * 11) % 256 AS y, (doc_id * 5) % 256 AS k
-        |  FROM documents)
-        |SELECT doc_id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |  CAST(FLOOR((
-        |    0.299 * (255 - LEAST(255, c + k)) +
-        |    0.587 * (255 - LEAST(255, m + k)) +
-        |    0.114 * (255 - LEAST(255, y + k))) * 1e6 + 0.5) AS BIGINT)
-        |    AS lum_u6
-        |FROM p""".stripMargin,
-
-    // q386: Huffman JBIG2 -- identical painted geometry to q379
-    "q386_pdf_jbig2_huffman" ->
-      """WITH p AS (SELECT doc_id,
-        |    18 + doc_id % 8 AS w, 8 + doc_id % 6 AS h,
-        |    2 + doc_id % (14 + doc_id % 8) AS xsplit,
-        |    doc_id % 2 = 1 AS dec10
-        |  FROM documents)
-        |SELECT doc_id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |  CAST(FLOOR(255.0 * (CASE WHEN dec10 THEN w - xsplit
-        |    ELSE xsplit END) / w * 1e6 + 0.5) AS BIGINT) AS lum_u6
-        |FROM p""".stripMargin,
-
-    // q387: the Lab leg replays SS 8.6.5.4 term by term (same IEEE
-    // association order as the Scala converter); CalRGB/CalGray are
-    // device aliases
-    "q387_pdf_cie_color" ->
-      """WITH p AS (SELECT doc_id,
-        |    6 + doc_id % 8 AS w, 5 + doc_id % 6 AS h,
-        |    (doc_id * 3) % 256 AS ls, (doc_id * 7) % 256 AS sa,
-        |    (doc_id * 11) % 256 AS sb,
-        |    (doc_id * 5) % 256 AS cr, (doc_id * 9) % 256 AS cg,
-        |    (doc_id * 13) % 256 AS cb, (doc_id * 17) % 256 AS gg,
-        |    doc_id % 3 AS leg
-        |  FROM documents),
-        |lab AS (SELECT doc_id,
-        |    (ls * 100.0) / 255.0 AS lL,
-        |    -100 + (sa * 200.0) / 255.0 AS la,
-        |    -100 + (sb * 200.0) / 255.0 AS lb
-        |  FROM p WHERE leg = 0),
-        |f AS (SELECT doc_id,
-        |    (lL + 16.0) / 116.0 AS fy,
-        |    (lL + 16.0) / 116.0 + la / 500.0 AS fx,
-        |    (lL + 16.0) / 116.0 - lb / 200.0 AS fz
-        |  FROM lab),
-        |xyz AS (SELECT doc_id,
-        |    0.9642 * (CASE WHEN fx >= 6.0/29.0 THEN fx*fx*fx
-        |      ELSE (108.0/841.0) * (fx - 4.0/29.0) END) AS x,
-        |    1.0 * (CASE WHEN fy >= 6.0/29.0 THEN fy*fy*fy
-        |      ELSE (108.0/841.0) * (fy - 4.0/29.0) END) AS y,
-        |    0.8249 * (CASE WHEN fz >= 6.0/29.0 THEN fz*fz*fz
-        |      ELSE (108.0/841.0) * (fz - 4.0/29.0) END) AS z
-        |  FROM f),
-        |bytes AS (SELECT doc_id,
-        |    FLOOR(255.0 * LEAST(1.0, GREATEST(0.0,
-        |      3.2406 * x - 1.5372 * y - 0.4986 * z)) + 0.5) AS r,
-        |    FLOOR(255.0 * LEAST(1.0, GREATEST(0.0,
-        |      -0.9689 * x + 1.8758 * y + 0.0415 * z)) + 0.5) AS g,
-        |    FLOOR(255.0 * LEAST(1.0, GREATEST(0.0,
-        |      0.0557 * x - 0.2040 * y + 1.0570 * z)) + 0.5) AS b
-        |  FROM xyz)
-        |SELECT p.doc_id, CAST(p.w AS BIGINT) AS w, CAST(p.h AS BIGINT) AS h,
-        |  CAST(FLOOR((CASE p.leg
-        |    WHEN 0 THEN 0.299 * bytes.r + 0.587 * bytes.g + 0.114 * bytes.b
-        |    WHEN 1 THEN 0.299 * p.cr + 0.587 * p.cg + 0.114 * p.cb
-        |    ELSE 0.299 * p.gg + 0.587 * p.gg + 0.114 * p.gg END) * 1e6 + 0.5)
-        |    AS BIGINT) AS lum_u6
-        |FROM p LEFT JOIN bytes ON p.doc_id = bytes.doc_id""".stripMargin,
-
-    // q388: halftone black count is closed-form — hgh rows of
-    // (nLeft*vA + (hgw-nLeft)*vB) black pixels over a w*h page
-    "q388_pdf_jbig2_halftone" ->
-      """WITH d AS (SELECT doc_id, 2 + doc_id % 3 AS ps,
-        |    3 + doc_id % 4 AS hgw, 2 + doc_id % 3 AS hgh
-        |  FROM documents),
-        |p AS (SELECT doc_id, ps, hgw, hgh,
-        |    ps * ps + 1 AS cnt, hgw // 2 AS nl FROM d),
-        |v AS (SELECT doc_id, ps, hgw, hgh, nl,
-        |    (doc_id * 3) % cnt AS va, (doc_id * 5) % cnt AS vb FROM p)
-        |SELECT doc_id, CAST(hgw * ps AS BIGINT) AS w,
-        |  CAST(hgh * ps AS BIGINT) AS h,
-        |  CAST(FLOOR((255.0 * (hgw * ps * hgh * ps -
-        |    hgh * (nl * va + (hgw - nl) * vb))) / (hgw * ps * hgh * ps)
-        |    * 1e6 + 0.5) AS BIGINT) AS lum_u6
-        |FROM v""".stripMargin,
-
-    // q389: all five audio legs replay planted header values
-    // (r18 added Ogg/Opus at %5=3 and AAC-ADTS at %5=4)
-    "q389_audio_compressed_meta" ->
-      """SELECT doc_id,
-        |  CAST(CASE doc_id % 5
-        |    WHEN 0 THEN CASE doc_id % 4 WHEN 0 THEN 44100 WHEN 1 THEN 48000
-        |      WHEN 2 THEN 32000 ELSE 22050 END
-        |    WHEN 1 THEN CASE doc_id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000
-        |      ELSE 32000 END
-        |    WHEN 2 THEN 8000 + (doc_id % 4) * 4000
-        |    WHEN 3 THEN CASE doc_id % 4 WHEN 0 THEN 48000 WHEN 1 THEN 44100
-        |      WHEN 2 THEN 16000 ELSE 24000 END
-        |    ELSE CASE doc_id % 3 WHEN 0 THEN 48000 WHEN 1 THEN 44100
-        |      ELSE 32000 END END AS INT) AS sample_rate,
-        |  CAST(CASE doc_id % 5
-        |    WHEN 0 THEN 1 + doc_id % 2
-        |    WHEN 1 THEN CASE WHEN doc_id % 2 = 0 THEN 2 ELSE 1 END
-        |    WHEN 2 THEN 1
-        |    ELSE 1 + doc_id % 2 END AS INT) AS channels,
-        |  CAST(CASE doc_id % 5
-        |    WHEN 0 THEN 1000 + doc_id % 5000
-        |    WHEN 1 THEN (2 + doc_id % 6) * 1152
-        |    WHEN 2 THEN 500 + doc_id % 100
-        |    WHEN 3 THEN 3000 + doc_id % 4000
-        |    ELSE (2 + doc_id % 5) * 1024 END AS BIGINT) AS frames,
-        |  CASE doc_id % 5 WHEN 0 THEN 'flac' WHEN 1 THEN 'mp3'
-        |    WHEN 2 THEN 'wav'
-        |    WHEN 3 THEN CASE WHEN doc_id % 10 = 8 THEN 'vorbis'
-        |      ELSE 'opus' END
-        |    ELSE 'aac' END AS format
-        |FROM documents""".stripMargin,
-
-    // q390: planted ISO-BMFF header values; duration ticks are chosen
-    // so ms = ticks * 1000 / timescale is exact integer arithmetic
-    "q390_video_container_meta" ->
-      """SELECT doc_id,
-        |  CAST(((2000 + doc_id % 9000) * (1000 + (doc_id % 3) * 500)
-        |    // 1000) * 1000 // (1000 + (doc_id % 3) * 500) AS BIGINT)
-        |    AS duration_ms,
-        |  CAST(320 + (doc_id % 16) * 8 AS INT) AS width,
-        |  CAST(180 + (doc_id % 9) * 20 AS INT) AS height,
-        |  CAST(CASE WHEN doc_id % 3 = 2 THEN 2 ELSE 1 END AS INT) AS tracks
-        |FROM documents""".stripMargin,
-
-    // q391: planted WebP dims, luminance absent by design
-    "q391_webp_meta" ->
-      """SELECT doc_id, CAST(16 + doc_id % 200 AS BIGINT) AS w,
-        |  CAST(12 + doc_id % 120 AS BIGINT) AS h,
-        |  CAST(NULL AS BIGINT) AS lum_u6
-        |FROM documents""".stripMargin,
-
-    // q392: planted AVIF/HEIC ispe dims, luminance absent by design
-    "q392_avif_heic_meta" ->
-      """SELECT doc_id, CAST(64 + doc_id % 300 AS BIGINT) AS w,
-        |  CAST(48 + doc_id % 200 AS BIGINT) AS h,
-        |  CAST(NULL AS BIGINT) AS lum_u6
-        |FROM documents""".stripMargin,
-
-    // q393: planted per-chapter word counts in spine order
-    "q393_epub_decode" ->
-      """SELECT d.doc_id, CAST(i.g AS BIGINT) AS g,
-        |  CAST(2 + (d.doc_id + i.g) % 7 AS BIGINT) AS n_words
-        |FROM documents d,
-        |  LATERAL unnest(generate_series(0, d.doc_id % 3)) AS i(g)""".stripMargin,
-
-    // q394: planted CBZ image dims + exact uniform luminance
-    "q394_cbz_images" ->
-      """SELECT d.doc_id,
-        |  CAST(6 + (d.doc_id + i.g) % 10 AS BIGINT) AS w,
-        |  CAST(5 + (d.doc_id + i.g) % 7 AS BIGINT) AS h,
-        |  CAST(FLOOR((0.299 * ((d.doc_id * 3 + i.g * 7) % 256) +
-        |    0.587 * ((d.doc_id * 5 + i.g * 11) % 256) +
-        |    0.114 * ((d.doc_id * 7 + i.g * 13) % 256)) * 1e6 + 0.5)
-        |    AS BIGINT) AS lum_u6
-        |FROM documents d,
-        |  LATERAL unnest(generate_series(0, d.doc_id % 3)) AS i(g)""".stripMargin,
-
-    // q398: refinement black count replayed pixel-law-for-pixel-law —
-    // base stripes (x%4<2) XOR the planted inverted rectangle
-    "q398_pdf_jbig2_refinement" ->
-      """WITH v AS (
-        |  SELECT doc_id,
-        |    8 + (doc_id % 5) * 3 AS w, 6 + (doc_id % 4) * 3 AS h,
-        |    doc_id % 3 AS x0, doc_id % 2 AS y0,
-        |    3 + doc_id % 4 AS rw, 2 + doc_id % 3 AS rh
-        |  FROM documents),
-        |px AS (
-        |  SELECT v.doc_id, v.w, v.h,
-        |    SUM(CASE WHEN (xs.x % 4 < 2) <>
-        |      (xs.x >= v.x0 AND xs.x < v.x0 + v.rw AND
-        |       ys.y >= v.y0 AND ys.y < v.y0 + v.rh)
-        |      THEN 1 ELSE 0 END) AS black
-        |  FROM v,
-        |    LATERAL unnest(generate_series(0, v.w - 1)) AS xs(x),
-        |    LATERAL unnest(generate_series(0, v.h - 1)) AS ys(y)
-        |  GROUP BY v.doc_id, v.w, v.h)
-        |SELECT doc_id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |  CAST(FLOOR(255.0 * (w * h - black) / (w * h) * 1e6 + 0.5)
-        |    AS BIGINT) AS lum_u6
-        |FROM px""".stripMargin,
-
-    // q402: one planted uniform PNG per doc across the three
-    // container classes — q394's color law at g=0
-    "q402_doc_embedded_images" ->
-      """SELECT doc_id,
-        |  CAST(6 + doc_id % 10 AS BIGINT) AS w,
-        |  CAST(5 + doc_id % 7 AS BIGINT) AS h,
-        |  CAST(FLOOR((0.299 * ((doc_id * 3) % 256) +
-        |    0.587 * ((doc_id * 5) % 256) +
-        |    0.114 * ((doc_id * 7) % 256)) * 1e6 + 0.5)
-        |    AS BIGINT) AS lum_u6
-        |FROM documents""".stripMargin,
-
-    // q401: two k×k solid glyphs through the custom-DT Huffman path
-    "q401_pdf_jbig2_custom_table" ->
-      """WITH v AS (
-        |  SELECT doc_id, 2 + doc_id % 3 AS k FROM documents)
-        |SELECT doc_id,
-        |  CAST(2 * k + 4 AS BIGINT) AS w, CAST(k + 9 AS BIGINT) AS h,
-        |  CAST(FLOOR(255.0 * ((2 * k + 4) * (k + 9) - 2 * k * k) /
-        |    ((2 * k + 4) * (k + 9)) * 1e6 + 0.5) AS BIGINT) AS lum_u6
-        |FROM v""".stripMargin,
-
-    // q409: planted AVI main-header values (duration-ms exact:
-    // frames × µs-per-frame/1000 with the rate a multiple of 1000)
-    "q409_avi_meta" ->
-      """SELECT doc_id,
-        |  CAST((100 + doc_id % 900) * (10 + doc_id % 24) AS BIGINT)
-        |    AS duration_ms,
-        |  CAST(320 + (doc_id % 16) * 8 AS INT) AS width,
-        |  CAST(180 + (doc_id % 9) * 20 AS INT) AS height,
-        |  CAST(1 + doc_id % 3 AS INT) AS tracks,
-        |  'avi' AS format
-        |FROM documents""".stripMargin,
-
-    // q400: planted Matroska/WebM header values (ms exact across the
-    // omitted-default/500k/250k TimestampScale cycle)
-    "q400_mkv_meta" ->
-      """SELECT doc_id,
-        |  CAST(2000 + doc_id % 9000 AS BIGINT) AS duration_ms,
-        |  CAST(320 + (doc_id % 16) * 8 AS INT) AS width,
-        |  CAST(180 + (doc_id % 9) * 20 AS INT) AS height,
-        |  CAST(1 + doc_id % 2 AS INT) AS tracks,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'matroska' ELSE 'webm' END AS format
-        |FROM documents""".stripMargin,
-
-    // q399: refined-symbol black counts — solid k² plus a hollow
-    // border (4k for the grown SBREFINE border, 4k−4 for the k×k
-    // SDREFAGG one)
-    "q399_pdf_jbig2_refined_symbols" ->
-      """WITH v AS (
-        |  SELECT doc_id, 2 + doc_id % 3 AS k FROM documents),
-        |b AS (
-        |  SELECT doc_id, 2 * k + 6 AS w, k + 3 AS h,
-        |    CASE WHEN doc_id % 2 = 0 THEN k * k + 4 * k
-        |         ELSE k * k + 4 * k - 4 END AS black
-        |  FROM v)
-        |SELECT doc_id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |  CAST(FLOOR(255.0 * (w * h - black) / (w * h) * 1e6 + 0.5)
-        |    AS BIGINT) AS lum_u6
-        |FROM b""".stripMargin,
-
-    // q395/q396/q397: planted per-page word counts (XPS Glyphs, FB2
-    // sections, MOBI pagebreak pages) — identical count law to q393
-    "q395_xps_decode" ->
-      """SELECT d.doc_id, CAST(i.g AS BIGINT) AS g,
-        |  CAST(2 + (d.doc_id + i.g) % 7 AS BIGINT) AS n_words
-        |FROM documents d,
-        |  LATERAL unnest(generate_series(0, d.doc_id % 3)) AS i(g)""".stripMargin,
-
-    "q396_fb2_decode" ->
-      """SELECT d.doc_id, CAST(i.g AS BIGINT) AS g,
-        |  CAST(2 + (d.doc_id + i.g) % 7 AS BIGINT) AS n_words
-        |FROM documents d,
-        |  LATERAL unnest(generate_series(0, d.doc_id % 3)) AS i(g)""".stripMargin,
-
-    "q397_mobi_decode" ->
-      """SELECT d.doc_id, CAST(i.g AS BIGINT) AS g,
-        |  CAST(2 + (d.doc_id + i.g) % 7 AS BIGINT) AS n_words
-        |FROM documents d,
-        |  LATERAL unnest(generate_series(0, d.doc_id % 3)) AS i(g)""".stripMargin,
-
-    // q407: the planted STORED (Y, Cb, Cr, K') samples replayed
-    // through the decoder's JFIF inverse (same IEEE association
-    // order), Adobe un-invert, and the q385 additive clamp
-    "q407_pdf_ycck_jpeg" ->
-      """WITH p AS (SELECT doc_id,
-        |    7 + doc_id % 9 AS w, 5 + doc_id % 7 AS h,
-        |    (doc_id * 3) % 256 AS ys, (doc_id * 7) % 256 - 128 AS cb,
-        |    (doc_id * 11) % 256 - 128 AS cr, (doc_id * 5) % 256 AS ks
-        |  FROM documents),
-        |t AS (SELECT doc_id, w, h, ks,
-        |    LEAST(255, GREATEST(0, FLOOR(ys + 1.402 * cr + 0.5))) AS r1,
-        |    LEAST(255, GREATEST(0,
-        |      FLOOR(ys - 0.344136 * cb - 0.714136 * cr + 0.5))) AS g1,
-        |    LEAST(255, GREATEST(0, FLOOR(ys + 1.772 * cb + 0.5))) AS b1
-        |  FROM p),
-        |cc AS (SELECT doc_id, w, h,
-        |    255 - r1 AS c, 255 - g1 AS m, 255 - b1 AS y, 255 - ks AS k
-        |  FROM t)
-        |SELECT doc_id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |  CAST(FLOOR((
-        |    0.299 * (255 - LEAST(255, c + k)) +
-        |    0.587 * (255 - LEAST(255, m + k)) +
-        |    0.114 * (255 - LEAST(255, y + k))) * 1e6 + 0.5) AS BIGINT)
-        |    AS lum_u6
-        |FROM cc""".stripMargin,
-
-    // q406: solid k² + (hollow border 4k−4 + solid k²) aggregate
-    "q406_pdf_jbig2_multi_agg" ->
-      """WITH v AS (SELECT doc_id, 2 + doc_id % 3 AS k FROM documents),
-        |b AS (
-        |  SELECT doc_id, 3 * k + 4 AS w, k + 2 AS h,
-        |    2 * k * k + 4 * k - 4 AS black
-        |  FROM v)
-        |SELECT doc_id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |  CAST(FLOOR(255.0 * (w * h - black) / (w * h) * 1e6 + 0.5)
-        |    AS BIGINT) AS lum_u6
-        |FROM b""".stripMargin,
-
-    // q405: the q399 even-leg black-count law (solid k² + hollow
-    // border 4k) under the Huffman-refinement wire form
-    "q405_pdf_jbig2_huffman_refinement" ->
-      """WITH v AS (SELECT doc_id, 2 + doc_id % 3 AS k FROM documents),
-        |b AS (
-        |  SELECT doc_id, 2 * k + 6 AS w, k + 3 AS h,
-        |    k * k + 4 * k AS black
-        |  FROM v)
-        |SELECT doc_id, CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |  CAST(FLOOR(255.0 * (w * h - black) / (w * h) * 1e6 + 0.5)
-        |    AS BIGINT) AS lum_u6
-        |FROM b""".stripMargin,
-
-    // q410: binary Netpbm — shared q402 dims law; per-leg luminance:
-    // P4 first-row-black bilevel, P5 uniform gray, P6 the q402 RGB law
-    "q410_pnm_decode" ->
-      """SELECT doc_id,
-        |  CAST(6 + doc_id % 10 AS BIGINT) AS w,
-        |  CAST(5 + doc_id % 7 AS BIGINT) AS h,
-        |  CAST(FLOOR((CASE doc_id % 3
-        |    WHEN 0 THEN (0.299 * 255.0 + 0.587 * 255.0 + 0.114 * 255.0)
-        |      * (4 + doc_id % 7) / (5 + doc_id % 7)
-        |    WHEN 1 THEN 0.299 * ((doc_id * 11) % 256)
-        |      + 0.587 * ((doc_id * 11) % 256)
-        |      + 0.114 * ((doc_id * 11) % 256)
-        |    ELSE 0.299 * ((doc_id * 3) % 256)
-        |      + 0.587 * ((doc_id * 5) % 256)
-        |      + 0.114 * ((doc_id * 7) % 256)
-        |    END) * 1e6 + 0.5) AS BIGINT) AS lum_u6
-        |FROM documents""".stripMargin,
-
-    // q411: PSD — planted dims, lum NULL-pinned (the q384 discipline)
-    "q411_psd_meta" ->
-      """SELECT doc_id,
-        |  CAST(6 + doc_id % 10 AS BIGINT) AS w,
-        |  CAST(5 + doc_id % 7 AS BIGINT) AS h,
-        |  CAST(NULL AS BIGINT) AS lum_u6
-        |FROM documents""".stripMargin,
-
-    // q408: bare-raster documents — the q402 dim/luminance law over
-    // the payload itself (four lossless containers, one image per doc)
-    "q408_image_as_document" ->
-      """SELECT doc_id,
-        |  CAST(6 + doc_id % 10 AS BIGINT) AS w,
-        |  CAST(5 + doc_id % 7 AS BIGINT) AS h,
-        |  CAST(FLOOR((0.299 * ((doc_id * 3) % 256) +
-        |    0.587 * ((doc_id * 5) % 256) +
-        |    0.114 * ((doc_id * 7) % 256)) * 1e6 + 0.5)
-        |    AS BIGINT) AS lum_u6
-        |FROM documents""".stripMargin,
-
-    // q403: one SVG page per doc with the planted word count;
-    // q404: the q395 page/word law under the 66-line TXT contract
-    "q403_svg_decode" ->
-      """SELECT doc_id, CAST(0 AS BIGINT) AS g,
-        |  CAST(2 + doc_id % 7 AS BIGINT) AS n_words
-        |FROM documents""".stripMargin,
-
-    "q404_txt_decode" ->
-      """SELECT d.doc_id, CAST(i.g AS BIGINT) AS g,
-        |  CAST(2 + (d.doc_id + i.g) % 7 AS BIGINT) AS n_words
-        |FROM documents d,
-        |  LATERAL unnest(generate_series(0, d.doc_id % 3)) AS i(g)""".stripMargin,
-
-    // q372: arrow shard round-trip — the oracle aggregates documents
-    // directly (score4 = doc_id exactly: doc_id/4 is dyadic in double)
-    "q372_arrow_shard_roundtrip" ->
-      """SELECT lang, COUNT(*) AS n,
-        |  CAST(SUM(n_chars) AS BIGINT) AS chars,
-        |  CAST(SUM(CASE WHEN doc_id % 7 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
-        |  CAST(SUM(CASE WHEN doc_id % 7 = 0 THEN 0 ELSE doc_id END) AS BIGINT) AS score4
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-  )
+    * form — see Parity.pround/portableSqlRounds. Keep authoring new
+    * oracles with plain `round(x, n)`; the rewrite keeps both engines
+    * exact. Rows-only queries (`oracle = None`) have no entry. */
+  lazy val oracleSql: Map[String, String] =
+    catalog.flatMap(q => q.oracle.map(sql => q.name -> Parity.portableSqlRounds(sql))).toMap
 }

@@ -179,7 +179,7 @@ object Graph {
     deg.join(n23, Seq("src"), "left")
       .na.fill(0L, Seq("n2", "n3"))
       .select(col("src").as("page"),
-        graft.SparkEntry.pround(
+        graft.catalog.Parity.pround(
           col("n1") + col("n2") / lit(2.0) + col("n3") / lit(3.0), 9)
           .as("harmonic"))
       .orderBy(desc("harmonic"), col("page")).limit(topN)

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-/** Round-12 additions: the Bootstrap typed aggregator. */
+/** The Bootstrap typed aggregator. */
 class BootstrapSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._

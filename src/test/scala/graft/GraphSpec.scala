@@ -3,8 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-/** Round-14 operator specs: the harmonic-centrality hub-cap tier. */
-class Round14Spec extends AnyFunSuite {
+/** Graph operators: the harmonic-centrality hub-cap tier. */
+class GraphSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 

@@ -201,7 +201,7 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs.get((1L, 3L)).exists(j => j > 0.5 && j < 1.0))
   }
 
-  test("embedding near-dups brute force + dropLosers") {
+  test("embedding near-dups brute force + dropTransitive") {
     val vecs = Seq(
       (1L, Seq(1f, 0f, 0f, 0f)),
       (2L, Seq(0.99f, 0.1f, 0f, 0f)),  // near dup of 1
@@ -211,7 +211,7 @@ class DedupSpec extends AnyFunSuite {
       minCosine = 0.9, bruteForce = true)
     val got = pairs.select("key_a", "key_b").as[(Long, Long)].collect().toSet
     assert(got == Set((1L, 2L)))
-    val kept = Dedup.dropLosers(vecs, col("vec_id"), pairs)
+    val kept = Dedup.dropTransitive(vecs, col("vec_id"), pairs)
       .select("vec_id").as[Long].collect().toSet
     assert(kept == Set(1L, 3L))
   }
@@ -768,5 +768,69 @@ class MisraGriesSpec extends AnyFunSuite {
         assert(s.size <= k - 1)
       }
     }
+  }
+}
+
+/** DTW axioms on the q309 driver DP. */
+class DtwSpec extends AnyFunSuite {
+  // the q309 DP, verbatim (integer costs)
+  private def dtw(a: Array[Long], b: Array[Long]): Long = {
+    val n = a.length; val m = b.length
+    val INF = Long.MaxValue / 4
+    var prev = Array.fill(m + 1)(INF); prev(0) = 0L
+    for (i <- 1 to n) {
+      val cur = Array.fill(m + 1)(INF)
+      for (j <- 1 to m) {
+        val cost = math.abs(a(i - 1) - b(j - 1))
+        cur(j) = cost + math.min(prev(j), math.min(cur(j - 1), prev(j - 1)))
+      }
+      prev = cur
+    }
+    prev(m)
+  }
+
+  test("DTW: identity, symmetry, hand-computed alignment, lag invariance") {
+    val a = Array(1L, 3L, 4L, 9L, 8L, 2L)
+    val b = Array(1L, 1L, 3L, 4L, 9L, 8L, 2L)  // a delayed by one step
+    assert(dtw(a, a) === 0L)
+    assert(dtw(a, b) === dtw(b, a))
+    // elastic alignment absorbs the pure lag: distance stays 0
+    assert(dtw(a, b) === 0L)
+    // hand case: [0,0] vs [1,1] — every cell costs 1, path length 2
+    assert(dtw(Array(0L, 0L), Array(1L, 1L)) === 2L)
+    // uniform +5 shift: warping can pair off-diagonal cells whose
+    // |a_i − a_j − 5| beats 5, so the cost is ≤ 5·pathlen, not =5n
+    val shifted = a.map(_ + 5L)
+    val d = dtw(a, shifted)
+    assert(d > 0L && d <= 5L * (2 * a.length - 1))
+    assert(d === 26L) // pinned regression value for this series
+  }
+}
+
+/** Power iteration (q312) recovering a planted principal direction. */
+class PcaSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  test("Pca.topComponent recovers a planted principal direction") {
+    // points along (0.6, 0.8) with a small orthogonal wiggle — the top
+    // component must align with the planted axis after 3 iterations
+    val pts = (-20 to 20).map { t =>
+      val wig = (t % 3 - 1) * 0.05
+      (t.toLong + 21L,
+        Seq((0.6 * t + 0.8 * wig).toFloat, (0.8 * t - 0.6 * wig).toFloat))
+    }
+    val df = pts.toDF("vec_id", "embedding")
+    val v = graft.operators.Pca.topComponent(df, "embedding", "vec_id", 3)
+      .orderBy(col("i")).collect()
+    assert(v.length === 2)
+    val (v0, v1) = (v(0).getAs[Double]("v"), v(1).getAs[Double]("v"))
+    assert(math.abs(v0 * v0 + v1 * v1 - 1.0) < 1e-6, s"not unit: $v0,$v1")
+    val cosToPlanted = math.abs(v0 * 0.6 + v1 * 0.8)
+    assert(cosToPlanted > 0.999, s"misaligned: $v0,$v1 cos=$cosToPlanted")
+    // eigenvalue ≈ full variance share: wiggle is tiny
+    val tv = graft.operators.Pca.varianceStats(df, "embedding").head
+    val lambda = v(0).getAs[Double]("nrm") / tv.getAs[Long]("n")
+    assert(lambda / tv.getAs[Double]("totvar") > 0.99)
   }
 }

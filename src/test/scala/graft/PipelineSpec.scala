@@ -261,4 +261,15 @@ class PipelineSpec extends AnyFunSuite {
     val expected = 0.299 * 0x12 + 0.587 * 0x34 + 0.114 * 0x56
     assert(math.abs(lum - expected) < 1.5, s"luminance $lum vs $expected")
   }
+
+  test("withDenseIdsAndCount: the free total equals the frame's row count") {
+    val df = (1 to 137).map(i => (i.toLong, s"v$i")).toDF("k", "v")
+    val (ranked, n) = graft.operators.DocPipeline
+      .withDenseIdsAndCount(df, col("k"), "rid")
+    assert(n == 137L)
+    assert(ranked.count() == 137L)
+    // ids stay dense 0..n-1
+    val ids = ranked.select(col("rid")).collect().map(_.getLong(0)).sorted
+    assert(ids.toSeq == (0L until 137L).toSeq)
+  }
 }

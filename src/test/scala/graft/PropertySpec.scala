@@ -343,7 +343,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("portableSqlRounds: rewrites every round() form, leaves identifiers alone") {
-    val f = SparkEntry.portableSqlRounds _
+    val f = catalog.Parity.portableSqlRounds _
     // simple two-arg
     assert(f("SELECT round(x, 9) FROM t") ===
       "SELECT FLOOR((x) * 1e9 + 0.5) / 1e9 FROM t")
