@@ -15,6 +15,7 @@ import Parity._
   * mixtures, quality filters, decontamination, splits, packing and the
   * curation funnels and reports. */
 object CurationQueries {
+
   /** Cheap-quality-score document frame (q221's oracle CTE, shared with
     * q265/q268): `source, lang, score` with the score formula inlined. */
   private[catalog] lazy val qualityDocCte: String =

@@ -14,6 +14,7 @@ import Parity._
   * CCITT, JPX, fonts, encryption, ebooks, containers, rasters) and the WARC
   * and Arrow shard paths. */
 object DecodeQueries {
+
   /** Shared Spark-side plumbing for the per-doc fixture-PDF decode
     * queries (r17 hoist — VERDICT r16 Next #3; the byte-level builders
     * live in [[PdfFixtures]]): fan the id-pruned documents out

@@ -13,6 +13,7 @@ import Parity._
   * MinHash/SimHash/shingle near-duplicates, record linkage and the dedup
   * audits. */
 object DedupQueries {
+
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("q30_dedup_exact", (s, dir) => {
       Dedup.exact(Tables.documents(s, dir), col("text"), col("doc_id"))

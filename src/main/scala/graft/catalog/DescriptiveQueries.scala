@@ -15,6 +15,7 @@ import Parity._
   * percentiles and histograms, heavy hitters, profiles, scaling and robust
   * location, and concentration measures. */
 object DescriptiveQueries {
+
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("q41_approx_distinct", (s, dir) => {
       // HLL++ sketch differs from DuckDB's HLL -> rows-only; accuracy vs

@@ -14,6 +14,7 @@ import Parity._
   * timing, attribution (including the Shapley skeleton), Markov paths and
   * growth accounting. */
 object EventQueries {
+
   /** Shapley skeleton for the 4 touch channels (q280): one row per
     * (channel, coalition-without-channel) = (channel, m0, m1 = m0∪bit,
     * weight |S|!·(n−1−|S|)!/n!). Generated once in Scala and embedded

@@ -11,6 +11,7 @@ import graft.sources.FakePdfDecoder
   * page explode and filters, quality and language tags, and the
   * document-pipeline channels. */
 object ExtractionQueries {
+
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("q20_strip_tags", (s, dir) => {
       Tables.documents(s, dir).select(col("doc_id"),

@@ -14,6 +14,7 @@ import Parity._
   * PageRank, triangles, clustering coefficient, k-core, assortativity, link
   * prediction, label propagation and centrality. */
 object GraphQueries {
+
   /** Per-session SORTED DISTINCT page sets of the 30-min-gap
     * sessionization — one row per (user_id, sid) with
     * `pgs = array_sort(collect_set(page))` — the blocking frame shared

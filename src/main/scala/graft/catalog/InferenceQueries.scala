@@ -15,6 +15,7 @@ import CurationQueries.qualityDocCte
 /** Inference queries: hypothesis tests, regression and effect estimates,
   * drift measures, survival, calibration and classifier evaluation. */
 object InferenceQueries {
+
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("q100_chisq", (s, dir) => {
       // chi-square test of independence (event_type × hour-of-day):

@@ -14,6 +14,7 @@ import Parity._
   * rollups, windows and the SQL surface, plus the layout and data-audit
   * queries that are plain relational plans. */
 object RelationalQueries {
+
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("q01_pruned_scan", (s, dir) => {
       Tables.lineitem(s, dir)

@@ -14,6 +14,7 @@ import Parity._
 /** Similarity, retrieval and clustering queries: kNN and ANN indexes, BM25
   * ranking and IR evaluation, MMR rerank, k-means and embedding audits. */
 object SimilarityQueries {
+
   /** Unrolled MMR greedy steps 2..k for the q242 oracle — the q177
     * materialized-unrolled-rounds discipline applied to diversified
     * rerank. Expects CTEs `pool(vec_id, rel)`, `pc(u, w, c)` (pairwise

@@ -1,6 +1,7 @@
 package graft
 package catalog
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,6 +15,7 @@ import Parity._
   * sessionization, resampling and gap filling, decay and trending, and every
   * Structured Streaming query. */
 object TemporalQueries {
+
   /** Gap-session oracle (DuckDB has no session_window: break-flag +
     * running-sum formulation) — shared by batch q19 and streaming q78,
     * which must produce identical sessions. */
@@ -35,6 +37,15 @@ object TemporalQueries {
        |       user_id, COUNT(*) AS n_events,
        |       CAST(SUM(CAST(value AS $D)) AS DOUBLE) AS total_value
        |FROM sess GROUP BY user_id, sid""".stripMargin
+
+  /** Runs `body` under the given session settings, then restores each
+    * setting's previous value. */
+  private def withConf[T](s: SparkSession, settings: (String, String)*)(body: => T): T = {
+    val prev = settings.map { case (k, _) => k -> s.conf.getOption(k) }
+    settings.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+  }
 
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("q15_asof_join", (s, dir) => {
@@ -132,7 +143,6 @@ object TemporalQueries {
       // scales with state volume, not with the session's core count.
       val staging = StreamingOps.defaultStagingDir(s, dir)
       StreamingOps.stageEventsForStreaming(s, dir, staging)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       // r20 (guide §5, trim the stateful tail): after the single data
       // micro-batch, AvailableNow runs one more NO-DATA batch purely to
       // advance the watermark and evict state — for an INNER stream-
@@ -142,10 +152,8 @@ object TemporalQueries {
       // state-eviction commits). Skip it; the state dies with the temp
       // checkpoint anyway. q131 (left_outer) MUST keep it — the no-data
       // batch is what emits the null-padded rows there.
-      val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4",
+          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
         val clicks = StreamingOps.eventsStream(s, staging)
           .filter(col("event_type") === "click")
         val purchases = StreamingOps.eventsStream(s, staging)
@@ -153,9 +161,6 @@ object TemporalQueries {
         val joined = StreamingOps.clickPurchaseJoin(clicks, purchases)
         StreamingOps.runToMemory(s, joined, "q65_stream_join",
           org.apache.spark.sql.streaming.OutputMode.Append())
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
       }
     }, Some(
       s"""$evCte,
@@ -176,13 +181,11 @@ object TemporalQueries {
       // State partitions sized to the data (see q65's rationale).
       val staging = StreamingOps.defaultStagingDir(s, dir)
       StreamingOps.stageEventsForStreaming(s, dir, staging)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val stream = StreamingOps.eventsStream(s, staging)
         val agg = StreamingOps.windowedAgg(stream, "10 minutes")
         StreamingOps.runToMemory(s, agg, "q39_stream_tumbling")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     }, Some(
       s"""$evCte
          |SELECT time_bucket(INTERVAL '10 minutes', ts) AS window_start, event_type,
@@ -196,13 +199,11 @@ object TemporalQueries {
       // replay. State partitions sized to the data (see q65).
       val staging = StreamingOps.defaultStagingDir(s, dir)
       StreamingOps.stageEventsForStreaming(s, dir, staging)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val stream = StreamingOps.eventsStream(s, staging)
         val agg = StreamingOps.sessionAgg(stream, "5 minutes")
         StreamingOps.runToMemory(s, agg, "q78_stream_session")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     }, Some(sessionOracle)),
 
     QuerySpec("q89_resample_ffill", (s, dir) => {
@@ -282,16 +283,14 @@ object TemporalQueries {
       // on first arrival (append mode).
       val staging = StreamingOps.defaultStagingDir(s, dir)
       StreamingOps.stageEventsForStreaming(s, dir, staging)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val doubled = StreamingOps.eventsStream(s, staging)
           .unionAll(StreamingOps.eventsStream(s, staging))
         val deduped = StreamingOps.dedupWithinWatermark(doubled)
           .select(col("event_id"), col("event_type"), col("value"))
         StreamingOps.runToMemory(s, deduped, "q94_stream_dedup",
           org.apache.spark.sql.streaming.OutputMode.Append())
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     }, Some(
       s"""$evCte
          |SELECT event_id, event_type, value FROM ev""".stripMargin)),
@@ -362,16 +361,14 @@ object TemporalQueries {
       // beyond the running agg. Oracle = the batch twin.
       val staging = StreamingOps.defaultStagingDir(s, dir)
       StreamingOps.stageEventsForStreaming(s, dir, staging)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val stream = StreamingOps.eventsStream(s, staging)
         val dims = Tables.customer(s, dir)
           .join(Tables.nation(s, dir), col("c_nationkey") === col("n_nationkey"))
           .select(col("c_custkey").as("user_id"), col("n_name"))
         val agg = StreamingOps.enrichedTotals(stream, dims)
         StreamingOps.runToMemory(s, agg, "q114_stream_enrich")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     }, Some(
       s"""$evCte
          |SELECT n_name, COUNT(*) AS n,
@@ -387,15 +384,13 @@ object TemporalQueries {
       // Oracle = the batch count twin.
       val staging = StreamingOps.defaultStagingDir(s, dir)
       StreamingOps.stageEventsForStreaming(s, dir, staging)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val counts = StreamingOps.eventsStream(s, staging)
           .select(get_json_object(col("props"), "$.k").cast("long").as("page"))
           .groupBy(col("page")).agg(count(lit(1)).as("n"))
           .orderBy(desc("n"), col("page")).limit(10)
         StreamingOps.runToMemory(s, counts, "q151_stream_topk")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     }, Some(
       s"""$evCte,
          |c AS (SELECT CAST(json_extract_string(props, '$$.k') AS BIGINT) AS page,
@@ -466,9 +461,7 @@ object TemporalQueries {
       // definition, in any streaming engine.
       val staging = StreamingOps.defaultStagingDir(s, dir)
       StreamingOps.stageEventsForStreaming(s, dir, staging)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val clicks = StreamingOps.eventsStream(s, staging)
           .filter(col("event_type") === "click")
         val purchases = StreamingOps.eventsStream(s, staging)
@@ -483,7 +476,7 @@ object TemporalQueries {
           .filter(col("click_ts") < col("closed_ts"))
           .select(col("click_id"), col("user_id"), col("click_ts"),
             col("purchase_id"), col("purchase_ts"), col("purchase_value"))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     }, Some(
       s"""$evCte,
          |c AS (SELECT event_id AS click_id, user_id, ts AS click_ts FROM ev
@@ -546,9 +539,7 @@ object TemporalQueries {
           / (col("hi") - col("lo")) * 10).cast("int")))
       val refBins = ref.crossJoin(broadcast(bounds)).select(binOf.as("b"))
         .groupBy(col("b")).agg(count(lit(1)).as("cr"))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val stream = StreamingOps.eventsStream(s, staging)
           .filter(col("ts") >= split)
           .crossJoin(broadcast(bounds))
@@ -580,7 +571,7 @@ object TemporalQueries {
             .cast("double") * 1e9 + 0.5) / 1e9).as("psi"))
           .select(col("day"), col("nc").as("n_cur"), col("psi"))
           .orderBy(col("day"))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     }, Some(
       s"""$evCte,
          |ref AS (SELECT value FROM ev WHERE ts < TIMESTAMP '2024-01-15 00:00:00'),
@@ -711,9 +702,7 @@ object TemporalQueries {
           sqrt(greatest(
             col("sc2") / col("nh") - (col("sc") / col("nh")) * (col("sc") / col("nh")),
             lit(0.0))).as("sd"))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val stream = StreamingOps.eventsStream(s, staging)
           .filter(col("ts") >= split)
           .select(window(col("ts"), "1 hour").as("w"))
@@ -725,7 +714,7 @@ object TemporalQueries {
           .select(col("hs"), col("n"),
             pround((col("n") - col("mu")) / col("sd"), 9).as("z"))
           .orderBy(desc("z"), col("hs")).limit(20)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     }, Some(
       s"""$evCte,
          |rh AS (SELECT date_trunc('hour', ts) AS h, COUNT(*) AS c
@@ -776,9 +765,7 @@ object TemporalQueries {
           cal, "event_type", "res", ks)
         .select(col("event_type"), col("value").as("qhat"))
         .join(mu, Seq("event_type"))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val stream = StreamingOps.eventsStream(s, staging)
           .filter(col("ts") >= split)
           .join(broadcast(band), Seq("event_type"))
@@ -791,7 +778,7 @@ object TemporalQueries {
             (floor(col("n_out").cast("double") / col("n") * 1e9 + 0.5) / 1e9)
               .as("out_rate"))
           .orderBy(col("day"), col("event_type"))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     }, Some(
       s"""$evCte,
          |pre AS (SELECT event_type, event_id, value FROM ev
@@ -900,9 +887,7 @@ object TemporalQueries {
       val k = 512
       val staging = StreamingOps.defaultStagingDir(s, dir)
       StreamingOps.stageEventsForStreaming(s, dir, staging)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val stream = StreamingOps.eventsStream(s, staging)
           .select(window(col("ts"), "1 day").as("w"),
             col("user_id").cast("string").as("u"))
@@ -921,7 +906,7 @@ object TemporalQueries {
           .select(col("day"), col("u").cast("long").as("user_id"), col("cnt"),
             col("n").as("n_day"))
           .orderBy(col("day"), desc("cnt"), col("user_id"))
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
     }, Some(
       """WITH ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts, user_id FROM events),
         |d AS (SELECT CAST(ts AS DATE) AS day, user_id, COUNT(*) AS cnt

@@ -15,6 +15,7 @@ import Parity._
   * statistics, readability and lexical diversity, normalization and
   * tokenizer audits. */
 object TextQueries {
+
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("q46_wordcount_topk", (s, dir) => {
       // the canonical explode-aggregate: split -> explode -> count -> top-k

@@ -14,6 +14,7 @@ import Parity._
   * changepoint tests, seasonal decomposition, control charts, forecasting
   * and sequence distance. */
 object TimeSeriesQueries {
+
   /** Lag-1..maxLag autocorrelation frame of the per-type daily count
     * series — q238's pipeline factored so PACF (q279) rides the SAME
     * arithmetic (see q238's scaladoc for the parity argument). Returns
