@@ -485,16 +485,6 @@ object Dedup {
       .drop("__k", "__q", "__comp", "__rk")
   }
 
-  /** Deterministic keep-first dedup over any candidate-pair set: a row is
-    * dropped if it appears as `key_b` (the larger key) of any surviving
-    * pair — i.e. keep the smallest key of each connected component's
-    * star. (Full transitive closure needs iterative connected components
-    * — [[connectedComponents]]; star-collapse is the cheap single-pass
-    * policy.) */
-  def dropLosers(df: DataFrame, key: Column, pairs: DataFrame): DataFrame =
-    df.join(pairs.select(col("key_b").as("__loser")).distinct(),
-      key === col("__loser"), "left_anti")
-
   /** Transitive duplicate groups: connected components over the candidate
     * pair graph by min-label propagation with pointer-doubling shortcuts.
     * Each round a node takes the minimum of (its label, its label's label,

@@ -74,15 +74,6 @@ object Skew {
       math.ceil(exactMax.toDouble / targetRowsPerSalt).toInt))
   }
 
-  /** [[saltedJoin]] with [[adaptiveSalts]]: one cheap sampled counts job
-    * picks the replication factor before the join is planned. */
-  def adaptiveSaltedJoin(skewed: DataFrame, dim: DataFrame, key: String,
-                         saltSrc: Column,
-                         targetRowsPerSalt: Long = 1000000L,
-                         maxSalts: Int = 64): DataFrame =
-    saltedJoin(skewed, dim, key, saltSrc,
-      adaptiveSalts(skewed, key, targetRowsPerSalt, maxSalts = maxSalts))
-
   /** Skew-safe count/sum aggregation: partial aggregate on (key, salt),
     * final on key. Decomposable aggregates only — the partial pass does
     * the heavy lifting in `salts`-way parallelism. */

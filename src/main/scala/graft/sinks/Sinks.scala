@@ -118,15 +118,6 @@ object Sinks {
           maxRecordsPerFile: Int = 0): Unit =
     sized(df, mode, maxRecordsPerFile).orc(out)
 
-  /** Hive-style partitioned parquet [EXT]: one directory per value of
-    * `partitionCols` so downstream readers with a partition-column
-    * filter scan ONLY the matching directories (PartitionFilters, gated
-    * in SourcesSinksSpec). The layout lever that turns "scan 100 TB"
-    * into "scan one domain/day". */
-  def partitionedParquet(df: DataFrame, out: String, partitionCols: Seq[String],
-                         mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).partitionBy(partitionCols: _*).parquet(out)
-
   /** dummy sink (ref `writer.py:313-323`): full compute, no output — the
     * benchmark-mode writer, mapped to Spark's noop source. */
   def dummy(df: DataFrame): Unit =
@@ -145,6 +136,7 @@ object Sinks {
     val sIdx = shardCol.map(fields.indexOf).getOrElse(-1)
     require(kIdx >= 0 && pIdx >= 0, s"files sink needs $keyCol and $payloadCol")
     require(shardCol.isEmpty || sIdx >= 0, s"files sink: missing shard column $shardCol")
+    val metaIdx = fields.indices.filterNot(i => i == pIdx || i == sIdx)
     val conf = hadoopConf(df)
     // base dir exists even for an empty DataFrame (downstream listers
     // expect the sink root; executor-side mkdirs only fires per row)
@@ -163,19 +155,23 @@ object Sinks {
           else "0"
         val shardDir = new Path(base, shard)
         if (madeDirs.add(shard)) fs.mkdirs(shardDir)
-        val payload = row.get(pIdx) match {
-          case b: Array[Byte] => b
-          case s: String      => s.getBytes(StandardCharsets.UTF_8)
-          case other          => String.valueOf(other).getBytes(StandardCharsets.UTF_8)
-        }
-        writeFully(fs, new Path(shardDir, s"$key.$ext"), payload)
-        val meta = fields.zipWithIndex.filterNot(i => i._2 == pIdx || i._2 == sIdx)
-          .map { case (f, i) => s""""$f": ${jsonVal(row.get(i))}""" }
-          .mkString("{", ", ", "}")
-        writeFully(fs, new Path(shardDir, s"$key.json"), meta.getBytes(StandardCharsets.UTF_8))
+        writeFully(fs, new Path(shardDir, s"$key.$ext"), payloadBytes(row.get(pIdx)))
+        writeFully(fs, new Path(shardDir, s"$key.json"), metaJson(fields, metaIdx, row))
       }
     }
   }
+
+  /** A payload value as the bytes of its sample file. */
+  private def payloadBytes(v: Any): Array[Byte] = v match {
+    case b: Array[Byte] => b
+    case s: String      => s.getBytes(StandardCharsets.UTF_8)
+    case other          => String.valueOf(other).getBytes(StandardCharsets.UTF_8)
+  }
+
+  /** A sample's `<key>.json`: the `metaIdx` columns of `row` as one object. */
+  private def metaJson(fields: Seq[String], metaIdx: Seq[Int], row: Row): Array[Byte] =
+    metaIdx.map(i => s""""${fields(i)}": ${jsonVal(row.get(i))}""")
+      .mkString("{", ", ", "}").getBytes(StandardCharsets.UTF_8)
 
   private def writeFully(fs: FileSystem, path: Path, bytes: Array[Byte]): Unit = {
     val o: OutputStream = fs.create(path, true)
@@ -208,15 +204,8 @@ object Sinks {
       new ShardFile {
         def write(row: Row): Unit = {
           val key = row.getString(kIdx)
-          val payload = row.get(pIdx) match {
-            case b: Array[Byte] => b
-            case s: String      => s.getBytes(StandardCharsets.UTF_8)
-            case other          => String.valueOf(other).getBytes(StandardCharsets.UTF_8)
-          }
-          writeEntry(tar, s"$key.$ext", payload)
-          val meta = metaIdx.map(i => s""""${fields(i)}": ${jsonVal(row.get(i))}""")
-            .mkString("{", ", ", "}")
-          writeEntry(tar, s"$key.json", meta.getBytes(StandardCharsets.UTF_8))
+          writeEntry(tar, s"$key.$ext", payloadBytes(row.get(pIdx)))
+          writeEntry(tar, s"$key.json", metaJson(fields, metaIdx, row))
         }
         def close(): Unit = tar.close()
       }

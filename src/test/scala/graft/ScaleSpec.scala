@@ -55,8 +55,8 @@ class SkewSpec extends AnyFunSuite {
     val dim = Seq((1L, "hot"), (2L, "cold"), (3L, "cold")).toDF("key", "label")
     val plain = skewed.join(dim, Seq("key")).groupBy("key", "label").count()
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    val adaptive = Skew.adaptiveSaltedJoin(skewed, dim, "key", col("row_id"),
-      targetRowsPerSalt = 1000L)
+    val adaptive = Skew.saltedJoin(skewed, dim, "key", col("row_id"),
+      Skew.adaptiveSalts(skewed, "key", targetRowsPerSalt = 1000L))
       .groupBy("key", "label").count()
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(adaptive == plain)

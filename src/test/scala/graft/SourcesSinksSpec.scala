@@ -321,7 +321,7 @@ class SinksSpec extends AnyFunSuite {
   test("partitioned parquet: a partition-column filter prunes directories at plan time") {
     import org.apache.spark.sql.execution.FormattedMode
     val out = tmpDir("part")
-    Sinks.partitionedParquet(sample, out, Seq("lang"))
+    sample.write.mode("overwrite").partitionBy("lang").parquet(out)
     assert(new File(s"$out/lang=en").isDirectory && new File(s"$out/lang=de").isDirectory)
     val read = spark.read.parquet(out).filter(col("lang") === "en")
     val p = read.queryExecution.explainString(FormattedMode)
