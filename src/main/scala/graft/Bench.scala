@@ -6,7 +6,10 @@ package graft
   * rounds), then the final per-query lines, the full summary line
   * (28 KB — untruncated copy in BENCH_full.json), and LAST a compact
   * summary line (~200 bytes: total, rounds, calibration, n) that survives
-  * the driver's ~4 KB stdout tail capture intact.
+  * a ~4 KB stdout tail capture intact; a full run also writes it to
+  * BENCH_summary.json. build.sbt forks `run` with its stdout passed
+  * through unprefixed and no `[success]` trailer, so that line is the
+  * last one on stdout.
   * Each query is forced through a noop sink —
   * `count()` would let Catalyst prune projections (a regex-heavy query
   * would "finish" without evaluating the regex), under-measuring real
@@ -100,7 +103,13 @@ object Bench {
     // after every round — an interrupted run still carries the complete
     // rounds finished so far — and keep the final write identical in
     // shape so compare_bench.py needs no change. A SPARK_GRAFT_ONLY run
-    // covers a subset, so it leaves the full-suite file alone.
+    // covers a subset, so it leaves the full-suite files alone. Both
+    // files land in the working directory: the project root under
+    // `sbt run`.
+    def writeArtifact(file: String, line: String): Unit =
+      if (SparkEntry.only.isEmpty) try java.nio.file.Files.write(
+        java.nio.file.Paths.get(file), (line + "\n").getBytes("UTF-8"))
+      catch { case _: Throwable => () }
     def writeFull(soloSec: scala.collection.Map[String, Double]): String = {
       val byId = names.map { case (n, _) => n -> best(n) }
         .sortBy { case (n, _) => (qid(n), n) }
@@ -117,10 +126,7 @@ object Bench {
       val line =
         s"""{"sf":"$sfDir","unit":"sec","cal_1t":${fmt(cal1)},"cal_nt":${fmt(calN)},""" +
           s""""rounds":$rounds,"telemetry":$ts,"queries":$qs,"metric":"total","value":${fmt(total)}}"""
-      if (SparkEntry.only.isEmpty) try java.nio.file.Files.write(
-        java.nio.file.Paths.get("/root/repo/BENCH_full.json"),
-        (line + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+      writeArtifact("BENCH_full.json", line)
       line
     }
     for (round <- 1 to 3) {
@@ -232,10 +238,12 @@ object Bench {
     println(line)
     val total = results.map(_._2).sum
     val rounds = roundTotals.map(fmt).mkString("[", ",", "]")
-    println(
+    val summary =
       s"""{"sf":"$sfDir","cpus":$cpus,"unit":"sec","cal_1t":${fmt(cal1)},""" +
         s""""cal_nt":${fmt(calN)},"rounds":$rounds,"n":${results.size},""" +
-        s""""metric":"total","value":${fmt(total)}}""")
+        s""""metric":"total","value":${fmt(total)}}"""
+    writeArtifact("BENCH_summary.json", summary)
+    println(summary)
     spark.stop()
   }
 }
