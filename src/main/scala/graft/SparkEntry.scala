@@ -7,7 +7,7 @@ import graft.catalog._
 import graft.operators.DocPipeline
 import graft.sources.FakePdfDecoder
 
-/** Driver contract (see SURVEY.md §7): one named query per implemented
+/** Harness contract (see SURVEY.md §7): one named query per implemented
   * operator, each with DuckDB oracle SQL where ANSI-expressible. The
   * queries live in `graft.catalog`, one [[catalog.QuerySpec]] per query
   * in a file per family; the engine-parity conventions every oracle
