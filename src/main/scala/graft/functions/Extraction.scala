@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's page-extraction semantics re-expressed as pure
@@ -30,12 +31,14 @@ object Extraction {
 
   /** Reference word-count: number of `[^][\s,<>]+` matches
     * (ref `extractor.py:15,28-31` — counts words across scripts, treating
-    * brackets/commas/angle-brackets as separators). `regexp_count`, not
-    * `size(regexp_extract_all(...))`: counting must never materialize an
-    * array of every matched word per row. */
+    * brackets/commas/angle-brackets as separators). `wordPattern` is that
+    * regex, kept as the documented reference; `wordCount` evaluates it as
+    * the native [[WordCount]], which counts in one pass over the UTF-8
+    * bytes and allocates nothing. Spark's `regexp_count` is not that: it
+    * is replaced at runtime by `size(regexp_extract_all(...))`, which
+    * builds a string per word only to take the array's size. */
   val wordPattern = "[^\\]\\[\\s,<>]+"
-  def wordCount(c: Column): Column =
-    regexp_count(c, lit(wordPattern))
+  def wordCount(c: Column): Column = column(WordCount(expression(c)))
 
   /** Strip every markup tag EXCEPT `<img ...>` tags (ref
     * `extractor.py:51-60` rewrites the DOM keeping canonical img tags; we
@@ -49,13 +52,16 @@ object Extraction {
   def imgTags(c: Column): Column =
     regexp_extract_all(c, lit("(?s)<img.*?>"), lit(0))
 
-  /** Parse one dimension attribute (`width`/`height`) out of an img tag;
-    * missing → 0 (ref `extractor.py:38-44`). `regexp_extract` yields ""
-    * on no-match and ANSI cast would throw — nullif first. */
+  /** Parse one dimension attribute (`width`/`height`) out of an img tag
+    * as a double; missing → 0 (ref `extractor.py:38-44`). `regexp_extract`
+    * yields "" on no-match and ANSI cast would throw — nullif first. A
+    * double, not an int: every digit string parses (the reference's int
+    * is unbounded), so `width="99999999999"` cannot fail a job; the ratio
+    * in [[imgKeep]] is taken in doubles anyway. */
   def imgDim(img: Column, attr: String): Column =
     coalesce(
-      nullif(regexp_extract(img, attr + "=\"(\\d+)\"", 1), lit("")).cast("int"),
-      lit(0))
+      nullif(regexp_extract(img, attr + "=\"(\\d+)\"", 1), lit("")).cast("double"),
+      lit(0.0))
 
   /** Remove one img tag occurrence, treating the tag as a literal (the
     * reference re-compiles the tag as a regex — a latent escaping bug,
@@ -106,13 +112,17 @@ object Extraction {
     * A missing or zero dimension has no ratio: the ratio test passes and
     * only the size gate applies, so a dimensionless `<img/>` never divides
     * by zero (the division sits in a CASE branch, evaluated only when the
-    * short side is positive). */
+    * short side is positive). `maxRatio = Double.MaxValue` is no ratio
+    * limit: the test is left out, so a dimension too long for a double
+    * (an infinite ratio) passes it too. */
   def imgKeep(img: Column, minSize: Int, maxRatio: Double): Column = {
     val w = imgDim(img, "width")
     val h = imgDim(img, "height")
     val short = least(w, h)
-    val ratioOk = when(short > 0, greatest(w, h).cast("double") / short.cast("double") <= maxRatio)
-      .otherwise(lit(true))
+    val ratioOk =
+      if (maxRatio < Double.MaxValue)
+        when(short > 0, greatest(w, h) / short <= maxRatio).otherwise(lit(true))
+      else lit(true)
     w >= minSize && h >= minSize && ratioOk
   }
 
@@ -150,6 +160,52 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.functions.NfcKernel.nfc($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** Shared static kernel for [[WordCount]]. */
+object WordCountKernel {
+  // The separators of `Extraction.wordPattern`: `[`, `]`, `,`, `<`, `>`
+  // and Java's (non-Unicode) `\s` — space, \t, \n, \u000B, \f, \r.
+  private val separator: Array[Boolean] = {
+    val t = new Array[Boolean](128)
+    "[],<> \t\n\u000B\f\r".foreach(ch => t(ch) = true)
+    t
+  }
+
+  /** Maximal runs of non-separator bytes. Every separator is ASCII, and
+    * no byte of a multi-byte UTF-8 sequence (nor a malformed byte, which
+    * decodes to U+FFFD) is below 0x80, so this equals the number of
+    * pattern matches over the decoded string. */
+  def count(s: UTF8String): Int = {
+    val base = s.getBaseObject
+    val end = s.getBaseOffset + s.numBytes
+    var i = s.getBaseOffset
+    var words = 0
+    var inWord = false
+    while (i < end) {
+      val b = Platform.getByte(base, i)
+      val sep = b >= 0 && separator(b)
+      if (!sep && !inWord) words += 1
+      inWord = !sep
+      i += 1
+    }
+    words
+  }
+}
+
+/** `Extraction.wordCount` with codegen; null in, null out. */
+case class WordCount(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = child.nullable
+
+  override def nullSafeEval(input: Any): Any =
+    WordCountKernel.count(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.WordCountKernel.count($c)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

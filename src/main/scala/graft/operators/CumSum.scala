@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
 /** Global running total over a total order WITHOUT a global window — the
   * naive `sum(w) over (order by ...)` serializes the whole table through
   * one partition, the same scale-killer as global `row_number` (SURVEY
-  * §7.5.1). Two-pass form, identical discipline to
+  * §7.5.1). Two-pass form, the layout discipline of
   * [[DocPipeline.withDenseIds]]:
   *
   *   1. range-repartition + sort on the order; freeze the layout with an

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{classic, Column, DataFrame}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -90,51 +91,59 @@ object DocPipeline {
       denseId % cfg.numSamplesPerShard,
       oomSample(cfg), cfg.oomShardCount))
 
-  /** Two-pass dense-id assignment — the scale path when the manifest has
-    * no dense id. Global order WITHOUT a global window:
-    * range-repartition + sort-within-partitions on `orderCol`, count rows
-    * per partition (one (pid, count) row per partition — the same tiny
-    * collect `RDD.zipWithIndex` does), broadcast the cumulative offsets
-    * back, and compute `offset + local_index` map-side. One range shuffle,
-    * every partition stays parallel; produces the same ids as
+  /** Dense-id assignment — the scale path when the manifest has no dense
+    * id. Global order WITHOUT a global window: range-repartition +
+    * sort-within-partitions on `orderCol`, count the rows of each
+    * partition, and compute `offset(partition) + local index` map-side
+    * from the cumulative counts. One range shuffle, every partition stays
+    * parallel, no aggregation and no join; produces the same ids as
     * `row_number() over (order by orderCol) - 1`. Like the reference's
-    * eager manifest read (`main.py:106-137`), this runs one small job at
-    * build time (the counts pass). */
+    * eager manifest read (`main.py:106-137`), it runs its jobs at build
+    * time: the range sample, the shuffle, and one job that both
+    * materializes the sorted partitions and counts them. */
   def withDenseIds(df: DataFrame, orderCol: Column, idCol: String): DataFrame =
     withDenseIdsAndCount(df, orderCol, idCol)._1
 
-  /** [[withDenseIds]] plus the TOTAL row count, for free: the counts
-    * pass already collects one (pid, count) row per partition, so the
-    * total is their sum — callers that would otherwise run a separate
-    * count job over the ranked frame (e.g. rank-bucket scoring, which
-    * needs n for `rid * k / n`) read it from here instead (r19). */
+  /** [[withDenseIds]] plus the TOTAL row count, for free: the counting
+    * job already yields every partition's count, so the total is their
+    * sum — callers that would otherwise run a separate count job over
+    * the ranked frame (e.g. rank-bucket scoring, which needs n for
+    * `rid * k / n`) read it from here instead (r19). */
   def withDenseIdsAndCount(df: DataFrame, orderCol: Column,
                            idCol: String): (DataFrame, Long) = {
     val spark = df.sparkSession
     val parts = math.max(1, spark.sessionState.conf.numShufflePartitions)
-    // localCheckpoint(eager): the counts pass and the final pass are two
-    // separate jobs; without materialization each would re-plan the range
-    // exchange and RE-SAMPLE its bounds (seeded by a fresh rdd.id), so
-    // rows could land in different partitions between the two jobs and
-    // the broadcast offsets would mint duplicate/non-dense ids. Freezing
-    // the shuffled+sorted blocks once makes both jobs read the same
-    // layout — and halves the work (the sort runs once, not twice).
-    val sorted = df.repartitionByRange(parts, orderCol.asc)
+    // localCheckpoint: the offsets must describe the very partitions the
+    // ids are computed on. Re-planning the range exchange would RE-SAMPLE
+    // its bounds (seeded by a fresh rdd.id), so rows could land in other
+    // partitions than the ones counted and the ids would collide or leave
+    // gaps. The checkpoint freezes one layout, and the sort runs once.
+    // It is lazy: the counting job below computes and persists every
+    // partition, so the checkpoint that follows it finds nothing missing
+    // and no separate materializing job runs.
+    val frozen = df.repartitionByRange(parts, orderCol.asc)
       .sortWithinPartitions(orderCol.asc)
       .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint(true)
-    val counts = sorted
-      .groupBy(shiftright(col("__mid"), 33).as("__pid"))
-      .agg(count(lit(1)).as("__cnt"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offsets = counts.map { case (pid, n) => val row = (pid, acc); acc += n; row }
-    val offsetsDf = spark.createDataFrame(offsets.toIndexedSeq).toDF("__pid", "__offset")
-    val withIds = sorted.withColumn("__pid", shiftright(col("__mid"), 33))
-      .join(broadcast(offsetsDf), Seq("__pid"))
-      .withColumn(idCol, col("__offset") + col("__mid").bitwiseAND(lit((1L << 33) - 1)))
-      .drop("__pid", "__offset", "__mid")
-    (withIds, acc)
+      .localCheckpoint(false)
+    // a job started on the SparkContext, so set the session's SQL confs
+    // on it as a Dataset action does
+    val counts = SQLExecution.withSQLConfPropagated(spark.asInstanceOf[classic.SparkSession]) {
+      spark.sparkContext.runJob(frozen.queryExecution.toRdd, rowCount _)
+    }
+    val offsets = counts.scanLeft(0L)(_ + _)
+    // `__mid` is (partition index << 33) + index within the partition
+    val pid = shiftright(col("__mid"), 33).cast("int")
+    val withIds = frozen
+      .withColumn(idCol, element_at(typedLit(offsets.init), pid + 1) +
+        col("__mid").bitwiseAND(lit((1L << 33) - 1)))
+      .drop("__mid")
+    (withIds, offsets.last)
+  }
+
+  private def rowCount(rows: Iterator[_]): Long = {
+    var n = 0L
+    while (rows.hasNext) { rows.next(); n += 1 }
+    n
   }
 
   /** [[withDenseIds]] + [[withKeys]]: deterministic zero-padded keys from
@@ -201,11 +210,15 @@ object DocPipeline {
       if (cfg.removeDigits && !cfg.saveFigures) Extraction.removeDigits(keptRaw)
       else keptRaw
 
+    // without a size or ratio threshold every tag passes [[Extraction.imgKeep]],
+    // so the per-image `filter` (an interpreted higher-order function) is skipped
+    val imageFiltering = cfg.minImageSize > 0 || cfg.maxAspectRatio < Double.MaxValue
     val base0 = exploded
-      .withColumn("imgs", Extraction.filterImgs(allImgs, cfg.minImageSize, cfg.maxAspectRatio))
+      .withColumn("imgs",
+        if (imageFiltering) Extraction.filterImgs(allImgs, cfg.minImageSize, cfg.maxAspectRatio)
+        else allImgs)
       .withColumn("text", afterDigits)
       .withColumn("total_words", Extraction.wordCount(Extraction.stripTags(col("page_xhtml"))))
-    val imageFiltering = cfg.minImageSize > 0 || cfg.maxAspectRatio < Double.MaxValue
     val base = if (cfg.saveFigures && imageFiltering) {
       // failing tags leave the text too; the aggregate only runs on rows
       // that actually lost an image (the If branch skips it otherwise)

@@ -212,10 +212,13 @@ object Sinks {
     }
   }
 
-  private def writeEntry(tar: org.apache.commons.compress.archivers.tar.TarArchiveOutputStream,
-                         name: String, bytes: Array[Byte]): Unit = {
+  /** One tar entry. Its mtime is fixed (the epoch), not the write time, so
+    * the same rows always give byte-identical tars. */
+  private[graft] def writeEntry(tar: org.apache.commons.compress.archivers.tar.TarArchiveOutputStream,
+                                name: String, bytes: Array[Byte]): Unit = {
     val e = new org.apache.commons.compress.archivers.tar.TarArchiveEntry(name)
     e.setSize(bytes.length.toLong)
+    e.setModTime(0L)
     tar.putArchiveEntry(e)
     tar.write(bytes)
     tar.closeArchiveEntry()

@@ -218,7 +218,7 @@ object WebDataset {
     spark.sparkContext
       .parallelize(affected.toIndexedSeq, math.max(1, affected.length))
       .foreach { tarPath =>
-        import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveOutputStream}
+        import org.apache.commons.compress.archivers.tar.TarArchiveOutputStream
         val p = new Path(tarPath)
         val pfs = p.getFileSystem(conf.value)
         val tmp = new Path(p.getParent, p.getName + ".del_tmp")
@@ -229,12 +229,8 @@ object WebDataset {
         try {
           var e = in.getNextEntry
           while (e != null) {
-            if (!e.isDirectory && !doomed(e.getName)) {
-              val bytes = in.readAllBytes()
-              val ne = new TarArchiveEntry(e.getName)
-              ne.setSize(bytes.length.toLong)
-              out.putArchiveEntry(ne); out.write(bytes); out.closeArchiveEntry()
-            }
+            if (!e.isDirectory && !doomed(e.getName))
+              graft.sinks.Sinks.writeEntry(out, e.getName, in.readAllBytes())
             e = in.getNextEntry
           }
         } finally { in.close(); out.close() }

@@ -48,6 +48,43 @@ class PipelineSpec extends AnyFunSuite {
       Seq((Seq.empty, "success"), (Seq.empty, "success")))
   }
 
+  test("an out-of-int-range img dimension is a success row, never a failed job") {
+    // the reference parses dimensions with Python's unbounded int; an ANSI
+    // int cast of these digits throws CAST_INVALID_INPUT
+    val huge = "<img width=\"99999999999\" height=\"40\"/>"
+    val longer = "<img width=\"" + "9" * 400 + "\" height=\"40\"/>"
+    val docs = Seq(("0000000", Seq(s"<div><p>poison chapter</p>$huge$longer</div>")))
+      .toDF("key", "pages").withColumn("decode_error", lit(null).cast("string"))
+    def page(cfg: PipelineConfig) = DocPipeline.explodePages(docs, cfg)
+      .select("imgs", "status").collect()
+      .map(r => (r.getSeq[String](0), r.getString(1))).toSeq
+    val cfg = PipelineConfig(saveFigures = true, numSamplesPerShard = 100)
+    assert(page(cfg) == Seq((Seq(huge, longer), "success")))
+    // with thresholds the dimensions are parsed: both pass the size gate,
+    // and both are far too stretched for a 3:1 ratio
+    assert(page(cfg.copy(minImageSize = 40)) == Seq((Seq(huge, longer), "success")))
+    assert(page(cfg.copy(minImageSize = 40, maxAspectRatio = 3.0)) == Seq((Seq.empty, "success")))
+    assert(docs.select(graft.functions.Extraction.imgDim(lit(huge), "width").cast("long"))
+      .head().getLong(0) == 99999999999L)
+  }
+
+  test("without an image threshold, imgs is every img tag and no filter runs") {
+    val sized = "<img width=\"200\" height=\"100\"/>"
+    val bare = "<img src=\"x.png\"/>"
+    val oversized = "<img width=\"99999999999\" height=\"1\"/>"
+    val docs = Seq(("0000000", Seq(s"<div><p>three images</p>$sized$bare$oversized</div>")))
+      .toDF("key", "pages").withColumn("decode_error", lit(null).cast("string"))
+    val cfg = PipelineConfig(numSamplesPerShard = 100)
+    val out = DocPipeline.explodePages(docs, cfg)
+    val expected = Seq(sized, bare, oversized)
+    assert(out.select("imgs").head().getSeq[String](0) == expected)
+    assert(docs.select(graft.functions.Extraction.imgTags(col("pages")(0))).head()
+      .getSeq[String](0) == expected)
+    val exprs = out.queryExecution.analyzed.flatMap(_.expressions)
+    assert(!exprs.exists(_.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ArrayFilter])),
+      "the default plan must not evaluate the per-image filter")
+  }
+
   test("pipeline end-to-end: explode, filters, status channels, keys") {
     val cfg = PipelineConfig(minWordsPerPage = 3, maxPages = Some(2),
       saveFigures = true, numSamplesPerShard = 100)
@@ -260,6 +297,52 @@ class PipelineSpec extends AnyFunSuite {
     val lum = Multimodal.JdkImageCodec.meanLuminance(resized)
     val expected = 0.299 * 0x12 + 0.587 * 0x34 + 0.114 * 0x56
     assert(math.abs(lum - expected) < 1.5, s"luminance $lum vs $expected")
+  }
+
+  private def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, prev)
+  }
+
+  test("withDenseIdsAndCount: ids are row_number() - 1 with more partitions than rows, and with no rows") {
+    val df = Seq(("m", 5), ("c", 1), ("x", 9), ("a", 3), ("q", 0)).toDF("k", "v")
+    withShufflePartitions(16) {
+      val (ranked, n) = DocPipeline.withDenseIdsAndCount(df, col("k"), "rid")
+      val got = ranked.select("k", "rid").as[(String, Long)].collect().toMap
+      val want = df.select(col("k"),
+        (row_number().over(org.apache.spark.sql.expressions.Window.orderBy("k")) - 1).cast("long"))
+        .as[(String, Long)].collect().toMap
+      assert(n == 5L && got == want)
+      val (empty, zero) = DocPipeline.withDenseIdsAndCount(df.filter(col("v") > 100), col("k"), "rid")
+      assert(zero == 0L && empty.count() == 0L && empty.columns.toSeq == Seq("k", "v", "rid"))
+    }
+  }
+
+  test("withDenseIdsAndCount runs three jobs: range sample, shuffle, one counting pass") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "dense-id-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val input = spark.range(0, 1000, 1, 5).select((col("id") * 7919 % 1000).as("k"))
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "dense ids")
+    val (ranked, n) = try DocPipeline.withDenseIdsAndCount(input, col("k"), "rid")
+      finally {
+        sc.clearJobGroup()
+        org.apache.spark.sql.GraftBridge.drainListeners(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(jobs.get == 3, s"jobs run while numbering: ${jobs.get}")
+    assert(n == 1000L)
+    val ids = ranked.select("k", "rid").as[(Long, Long)].collect()
+    assert(ids.forall { case (k, rid) => k == rid }, "k is a permutation of 0..999")
   }
 
   test("withDenseIdsAndCount: the free total equals the frame's row count") {

@@ -39,6 +39,42 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("native word count ≡ regexp_count(wordPattern), interpreted and codegen") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.WordCount
+    // every separator (\u000B included), whitespace that Java's `\s` does
+    // not cover, multi-byte and astral text; then raw bytes (malformed
+    // UTF-8 next to separators), the empty string and null
+    val pieces = Seq("[", "]", ",", "<", ">", " ", "\t", "\n", "\u000B", "\f", "\r",
+      "a", "Zz", ".", "é", "日本", "🙂", "\u00A0", "\u2003", "\u0085", "\u001C")
+    val text = Gen.listOf(Gen.oneOf(pieces)).map(_.mkString.getBytes(UTF_8))
+    val raw = Gen.listOf(Gen.frequency(
+      3 -> Gen.choose(Byte.MinValue, (-1).toByte),
+      2 -> Gen.oneOf("[],<> \t\n\u000B\f\r".getBytes(UTF_8).toSeq),
+      1 -> Gen.choose('a'.toByte, 'z'.toByte))).map(_.toArray)
+    val inputs: Seq[Array[Byte]] =
+      samples(text, 150) ++ samples(raw, 150) ++ Seq(Array.empty[Byte], null)
+    val reference = inputs.zipWithIndex.toDF("b", "i")
+      .select(col("i"), regexp_count(col("b").cast("string"), lit(Extraction.wordPattern)))
+      .collect().sortBy(_.getInt(0)).map(r => if (r.isNullAt(1)) None else Some(r.getInt(1)))
+    val codegen = GenerateUnsafeProjection.generate(Seq(WordCount(BoundReference(0, StringType, true))))
+    inputs.zip(reference).foreach { case (b, want) =>
+      val s = if (b == null) null else UTF8String.fromBytes(b)
+      val interpreted = Option(WordCount(Literal(s, StringType)).eval()).map(_.asInstanceOf[Int])
+      val row = codegen(InternalRow(s))
+      val generated = if (row.isNullAt(0)) None else Some(row.getInt(0))
+      val shown = Option(b).map(_.map(x => f"${x & 0xff}%02x").mkString(" "))
+      assert(interpreted === want, s"interpreted on $shown")
+      assert(generated === want, s"codegen on $shown")
+    }
+    assert(reference.count(_.exists(_ > 1)) > 100, "the inputs must hold many multi-word strings")
+  }
+
   test("strip-tags and digit-removal are idempotent; digits all removed") {
     val ts = samples(texts, 60).map(t => s"<div><p>$t 12.5</p></div>")
     val once = ts.toDF("s").select(

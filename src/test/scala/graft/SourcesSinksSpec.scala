@@ -108,6 +108,25 @@ class SinksSpec extends AnyFunSuite {
     assert(sidecar.count() == 2 && !sidecar.columns.contains("text"))
   }
 
+  test("webdataset tars are reproducible: two writes of one frame are byte-identical") {
+    import org.apache.commons.compress.archivers.tar.TarArchiveInputStream
+    def tarBytes(name: String): Array[Byte] = {
+      val out = tmpDir(name)
+      Sinks.webdataset(sample.repartition(1), out)
+      val tar = new File(out).listFiles().filter(_.getName.endsWith(".tar")).head
+      java.nio.file.Files.readAllBytes(tar.toPath)
+    }
+    val first = tarBytes("wds_repro_a")
+    val second = tarBytes("wds_repro_b")
+    assert(java.util.Arrays.equals(first, second))
+    // the entry mtime is fixed, so writes seconds apart agree as well
+    val tin = new TarArchiveInputStream(new java.io.ByteArrayInputStream(first))
+    val mtimes = Iterator.continually(tin.getNextEntry).takeWhile(_ != null)
+      .map(_.getModTime.getTime).toList
+    tin.close()
+    assert(mtimes.size == 4 && mtimes.forall(_ == 0L), s"entry mtimes: $mtimes")
+  }
+
   test("resume anti-join drops already-written keys (main.py:140-151 analog)") {
     val out = tmpDir("resume")
     sample.filter(col("key") === "0000").write.mode("overwrite").parquet(out)
@@ -194,6 +213,13 @@ class SinksSpec extends AnyFunSuite {
     // untouched shard is byte-identical (not rewritten)
     assert(java.util.Arrays.equals(bytesBefore,
       java.nio.file.Files.readAllBytes(untouched.toPath)))
+    // the rewritten shard keeps the fixed entry mtime
+    val rin = new org.apache.commons.compress.archivers.tar.TarArchiveInputStream(
+      new java.io.FileInputStream(s"$out/s0.tar"))
+    val kept = Iterator.continually(rin.getNextEntry).takeWhile(_ != null)
+      .map(e => (e.getName, e.getModTime.getTime)).toList
+    rin.close()
+    assert(kept == List("s0_0000.txt" -> 0L, "s0_0000.json" -> 0L), s"rewritten entries: $kept")
     val back = graft.sources.WebDataset.read(spark, out)
       .select("key").collect().map(_.getString(0)).toSet
     assert(back === Set("s0_0000", "s1_0000"))
